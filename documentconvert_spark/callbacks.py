@@ -95,10 +95,15 @@ def http_post_transport(url: str, body: bytes) -> Tuple[int, str]:
 
 
 def _url_host(url_col):
-    # try_parse_url: a malformed URL must become a NULL-host partition
-    # key, not an ANSI INVALID_URL crash of the whole dispatch job (the
-    # POST itself then fails row-locally and lands in the delivery log)
-    return F.try_parse_url(url_col, F.lit("HOST"))
+    """The ONE host identity of a callback URL: the partition key, the
+    max_per_host window and the per-POST pacing key all derive from it.
+    Lower-cased, because host names are case-insensitive — without it
+    case variants of one receiver would split across partitions and
+    escape both the cap and the pacing. try_parse_url: a malformed URL
+    must become a NULL-host partition key, not an ANSI INVALID_URL
+    crash of the whole dispatch job (the POST itself then fails
+    row-locally and lands in the delivery log)."""
+    return F.lower(F.try_parse_url(url_col, F.lit("HOST")))
 
 
 class CallbackLog(StateStore):
@@ -186,8 +191,10 @@ def _dispatch_partitioning(todo: DataFrame, host_shards: int = 1) -> DataFrame:
     semantics are unchanged: the log's latest-wins dedup and the
     anti-join resume never depended on partition placement, only
     per-host ORDERING is relaxed (which the salted mode explicitly
-    trades away — that is what the knob means)."""
-    host = _url_host("callback_url")
+    trades away — that is what the knob means). The host travels as a
+    `dispatch_host` column so deliver() paces on the very same key."""
+    todo = todo.withColumn("dispatch_host", _url_host("callback_url"))
+    host = F.col("dispatch_host")
     # sortWithinPartitions makes per-host delivery order (and the
     # same-host inter-POST pacing rule in deliver()) real: a bare
     # repartition leaves rows in shuffle-arrival order, interleaving
@@ -283,8 +290,6 @@ def dispatch_callbacks(
     def deliver(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        from urllib.parse import urlsplit
-
         prev_host: object = None
         for pdf in batches:
             out = {k: [] for k in (
@@ -300,18 +305,10 @@ def dispatch_callbacks(
                     # pacing them against each other would serialize
                     # them for no benefit (per-host rows ARE contiguous
                     # within a partition: _dispatch_partitioning sorts
-                    # within partitions by host, so same-host == prev row)
-                    try:
-                        # hostname, not netloc: the partition/sort key is
-                        # parse_url HOST (no port/userinfo), so a receiver
-                        # whose URLs vary in port must still pace as ONE
-                        # host — netloc would compare unequal and silently
-                        # skip every sleep for exactly that receiver
-                        this_host = urlsplit(row.callback_url).hostname
-                    except ValueError:
-                        this_host = row.callback_url
-                    if this_host is None:
-                        this_host = row.callback_url
+                    # within partitions by host, so same-host == prev row).
+                    # The key IS the partition key (no port/userinfo, case
+                    # folded); an unparseable URL paces on itself
+                    this_host = row.dispatch_host or row.callback_url
                     if prev_host is not None and this_host == prev_host:
                         sleep(per_post_delay_s)
                     prev_host = this_host

@@ -22,6 +22,8 @@ import io
 import struct
 import zipfile
 
+import numpy as np
+
 from documentconvert_spark.kernels.limits import zip_read_capped
 
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
@@ -377,8 +379,8 @@ _MAX_AVI_FRAMES = 4096
 
 
 def decode_avi_frames(data: bytes, max_pixels: int | None = None
-                      ) -> tuple[int, int, float, list[list[bytearray]]]:
-    """AVI bytes → (width, height, fps, frames of 8-bit gray rows).
+                      ) -> tuple[int, int, float, list[np.ndarray]]:
+    """AVI bytes → (width, height, fps, frames as (h, w) uint8 gray).
 
     The real-codec video path (closes the last decoder stub): walks the
     RIFF tree ('AVI RIFF File Reference'), reads the video stream's strh
@@ -393,6 +395,7 @@ def decode_avi_frames(data: bytes, max_pixels: int | None = None
     malformed — per-row containment upstream (C7), like every kernel."""
     from documentconvert_spark.kernels.minijpeg import (
         _MAX_PIXELS_DEFAULT, decode_jpeg_gray)
+    from documentconvert_spark.kernels.miniocr import luma601
 
     if max_pixels is None:
         max_pixels = _MAX_PIXELS_DEFAULT
@@ -401,7 +404,7 @@ def decode_avi_frames(data: bytes, max_pixels: int | None = None
     width = height = None
     fps = 0.0
     bitcount = compression = None
-    frames: list[list[bytearray]] = []
+    frames: list[np.ndarray] = []
     pixel_budget = max_pixels
     for cc, lo, hi in _riff_chunks(data, 12, len(data)):
         if cc == b"hdrl":
@@ -444,29 +447,24 @@ def decode_avi_frames(data: bytes, max_pixels: int | None = None
                     raise ValueError("avi: decoded pixels over budget")
                 payload = data[l2:h2]
                 if payload[:2] == b"\xff\xd8":  # MJPG
-                    fw, fh, rows = decode_jpeg_gray(bytes(payload),
+                    fw, fh, gray = decode_jpeg_gray(bytes(payload),
                                                     max_pixels=max_pixels)
                 elif compression == 0 and bitcount == 24:  # BI_RGB DIB
                     stride = (width * 3 + 3) & ~3
                     if len(payload) < stride * height:
                         raise ValueError("avi: DIB frame shorter than raster")
                     fw, fh = width, height
-                    rows = []
-                    for y in range(height - 1, -1, -1):  # bottom-up
-                        line = payload[y * stride:y * stride + width * 3]
-                        row = bytearray(width)
-                        for x in range(width):
-                            i = 3 * x
-                            row[x] = (line[i + 2] * 299 + line[i + 1] * 587
-                                      + line[i] * 114) // 1000
-                        rows.append(row)
+                    bgr = np.frombuffer(payload, dtype=np.uint8, count=stride * height)
+                    bgr = bgr.reshape(height, stride)[::-1, :width * 3]  # bottom-up
+                    bgr = bgr.reshape(height, width, 3)
+                    gray = luma601(bgr[:, :, 2], bgr[:, :, 1], bgr[:, :, 0])
                 else:
                     raise ValueError(
                         f"avi: no decoder for compression={compression!r} "
                         f"bitcount={bitcount!r}")
                 if (fw, fh) != (width, height):
                     raise ValueError("avi: frame size disagrees with avih")
-                frames.append(rows)
+                frames.append(gray)
     if not frames:
         raise ValueError("avi: no video frames")
     return width, height, fps, frames
@@ -476,8 +474,8 @@ _MP4_JPEG_CODECS = (b"jpeg", b"mjpa", b"mjpb")
 
 
 def decode_mp4_frames(data: bytes, max_pixels: int | None = None
-                      ) -> tuple[int, int, float, list[list[bytearray]]]:
-    """MP4/ISO-BMFF bytes → (width, height, fps, frames of 8-bit gray rows).
+                      ) -> tuple[int, int, float, list[np.ndarray]]:
+    """MP4/ISO-BMFF bytes → (width, height, fps, frames as (h, w) uint8 gray).
 
     The MJPEG-in-MP4 leg of the real-codec video path (AVI's sibling,
     same return shape): walks moov→trak→mdia→minf→stbl per ISO/IEC
@@ -599,7 +597,7 @@ def decode_mp4_frames(data: bytes, max_pixels: int | None = None
 
     # expand stsc runs → per-chunk sample counts, walk chunks carving
     # consecutive samples; stop once every stsz entry is placed
-    frames: list[list[bytearray]] = []
+    frames: list[np.ndarray] = []
     pixel_budget = max_pixels
     sample = 0
     run_idx = 0
@@ -618,11 +616,11 @@ def decode_mp4_frames(data: bytes, max_pixels: int | None = None
             pixel_budget -= width * height
             if pixel_budget < 0:
                 raise ValueError("mp4: decoded pixels over budget")
-            fw, fh, rows = decode_jpeg_gray(bytes(data[off:off + size]),
+            fw, fh, gray = decode_jpeg_gray(bytes(data[off:off + size]),
                                             max_pixels=max_pixels)
             if (fw, fh) != (width, height):
                 raise ValueError("mp4: frame size disagrees with stsd")
-            frames.append(rows)
+            frames.append(gray)
             off += size
             sample += 1
     if sample < len(sizes):

@@ -31,8 +31,11 @@ Bounds: pixel count capped before any allocation (`max_pixels`), raster
 bytes under the shared MAX_DECODED_BYTES, and the entropy loop is
 naturally bounded by the input length (every decoded symbol consumes at
 least one bit; pad injection past the scan's marker is tracked and
-raised as truncation). Per-row Python + one vectorized numpy IDCT over
-the stacked Y blocks; no Spark shuffle anywhere.
+raised as truncation). The Huffman decode is serial Python over a bit
+reader that unstuffs each entropy segment once and refills whole bytes
+per peek; dequantization, one IDCT over the stacked Y blocks and the
+block-to-raster scatter are numpy, and the result is one (h, w) uint8
+luma array. No Spark shuffle anywhere.
 """
 
 from __future__ import annotations
@@ -62,63 +65,95 @@ for _k in range(8):
 _UNZIG = np.argsort(np.array(ZIGZAG))  # raster index → zigzag position
 
 
-class _Bits:
-    """Entropy-segment bit reader: 0xFF00 unstuffing inline, markers are
-    never consumed (pad zeros are injected instead and counted — a pad
-    burst before the segment's MCUs are done means truncation)."""
+def _segment_end(d: bytes, p: int) -> int:
+    """Position of the first marker at or after p: an 0xFF not followed
+    by a stuffed 0x00 (or the end of the data)."""
+    while True:
+        i = d.find(b"\xff", p)
+        if i < 0:
+            return len(d)
+        if i + 1 >= len(d) or d[i + 1] != 0x00:
+            return i
+        p = i + 2
 
-    __slots__ = ("d", "p", "buf", "n", "pads")
+
+class _Bits:
+    """Entropy-segment bit reader: markers are never consumed (pad zeros
+    are injected instead and counted — a pad burst before the segment's
+    MCUs are done means truncation).
+
+    The segment up to the next marker is unstuffed once (0xFF00 → 0xFF)
+    and loaded eight bytes at a time, zeros past its end. `hz` is the
+    furthest bit any peek or get has looked at; a reader fetching whole
+    bytes only as reads need them would have fetched ceil(hz / 8), which
+    defines the pad count and the raw resume position `p` exactly."""
+
+    __slots__ = ("d", "start", "seg", "q", "buf", "n", "hz")
 
     def __init__(self, data: bytes, pos: int) -> None:
         self.d = data
-        self.p = pos
-        self.buf = 0
-        self.n = 0
-        self.pads = 0
+        self._begin(pos)
 
-    def _next_byte(self) -> int:
-        d, p = self.d, self.p
-        if p >= len(d):
-            self.pads += 1
-            return 0
-        b = d[p]
-        if b == 0xFF:
-            if p + 1 < len(d) and d[p + 1] == 0x00:
-                self.p = p + 2
-                return 0xFF
-            self.pads += 1  # marker (RST/EOI/next segment): do not consume
-            return 0
-        self.p = p + 1
-        return b
+    def _begin(self, pos: int) -> None:
+        self.start = pos
+        self.seg = self.d[pos:_segment_end(self.d, pos)].replace(b"\xff\x00", b"\xff")
+        self.q = 0  # bytes loaded into buf (past the segment: zeros)
+        self.buf = 0
+        self.n = 0  # unread bits in buf
+        self.hz = 0
+
+    def _load(self) -> None:
+        q = self.q
+        word = int.from_bytes(self.seg[q:q + 8].ljust(8, b"\0"), "big")
+        self.buf = ((self.buf & ((1 << self.n) - 1)) << 64) | word
+        self.q = q + 8
+        self.n += 64
+
+    @property
+    def pads(self) -> int:
+        """Zero bytes injected past the segment's marker."""
+        return max(0, ((self.hz + 7) >> 3) - len(self.seg))
+
+    @property
+    def p(self) -> int:
+        """Raw data position after the fetched bytes (each fetched 0xFF
+        was a two-byte stuffed pair in the raw stream)."""
+        f = min((self.hz + 7) >> 3, len(self.seg))
+        return self.start + f + self.seg.count(0xFF, 0, f)
 
     def peek(self, k: int) -> int:
-        while self.n < k:
-            self.buf = ((self.buf << 8) | self._next_byte()) & 0xFFFFFFFF
-            self.n += 8
-        return (self.buf >> (self.n - k)) & ((1 << k) - 1)
+        if self.n < k:
+            self._load()
+        n = self.n
+        reach = (self.q << 3) - n + k
+        if reach > self.hz:
+            self.hz = reach
+        return (self.buf >> (n - k)) & ((1 << k) - 1)
 
     def skip(self, k: int) -> None:
-        self.n -= k
+        self.n -= k  # always after a peek of at least k bits
 
     def get(self, k: int) -> int:
-        v = self.peek(k)
-        self.n -= k
-        return v
+        if self.n < k:
+            self._load()
+        n = self.n - k
+        self.n = n
+        reach = (self.q << 3) - n
+        if reach > self.hz:
+            self.hz = reach
+        return (self.buf >> n) & ((1 << k) - 1)
 
     def sync_restart(self, m: int) -> None:
         """Byte-align and consume the expected RSTm marker (T.81 E.1.5)."""
         if self.pads > 3:  # more pad than one 24-bit lookahead can inject
             raise ValueError("jpeg: truncated entropy segment")
-        self.buf = 0
-        self.n = 0
-        self.pads = 0
         d = self.d
         p = self.p
         while p + 1 < len(d) and d[p] == 0xFF and d[p + 1] == 0xFF:
             p += 1  # fill bytes
         if p + 1 >= len(d) or d[p] != 0xFF or d[p + 1] != 0xD0 + (m & 7):
             raise ValueError("jpeg: missing restart marker")
-        self.p = p + 2
+        self._begin(p + 2)
 
 
 def _build_huff(bits: list[int], vals: bytes):
@@ -391,8 +426,9 @@ def parse_jpeg_quant(data: bytes) -> dict[int, list[int]]:
 
 def decode_jpeg_gray(data: bytes,
                      max_pixels: int = _MAX_PIXELS_DEFAULT
-                     ) -> tuple[int, int, list[bytearray]]:
-    """Baseline JPEG bytes → (width, height, rows of 8-bit luma)."""
+                     ) -> tuple[int, int, np.ndarray]:
+    """Baseline/progressive JPEG bytes → (width, height, (h, w) uint8
+    luma raster)."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("jpeg: bad magic")
     qt: dict[int, list[int]] = {}
@@ -628,13 +664,20 @@ def decode_jpeg_gray(data: bytes,
     blocks = blocks[:, _UNZIG].reshape(ny_blocks, 8, 8)  # un-zigzag
     pix = _T.T[None, :, :] @ blocks @ _T[None, :, :]
     pix = np.clip(np.rint(pix + 128.0), 0, 255).astype(np.uint8)
-    bw = max(bx for bx, _ in positions) + 1
-    bh = max(by for _, by in positions) + 1
+    pos_xy = np.array(positions, dtype=np.int64).reshape(-1, 2)
+    bw = int(pos_xy[:, 0].max()) + 1
+    bh = int(pos_xy[:, 1].max()) + 1
     if bw * bh * 64 > MAX_DECODED_BYTES:
         raise ValueError("jpeg: raster over decode cap")
-    plane = np.zeros((bh * 8, bw * 8), dtype=np.uint8)
-    for i, (bx, by) in enumerate(positions):
-        plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = pix[i]
-    if plane.shape[0] < h or plane.shape[1] < w:
+    if bh * 8 < h or bw * 8 < w:
         raise ValueError("jpeg: luma scan does not cover the frame")
-    return w, h, [bytearray(plane[y, :w].tobytes()) for y in range(h)]
+    # scatter blocks into the block grid; a position stored twice (a
+    # second luma scan) keeps its LAST block, as sequential writes would
+    cell = pos_xy[:, 1] * bw + pos_xy[:, 0]
+    cell_rev = cell[::-1]
+    _, first_rev = np.unique(cell_rev, return_index=True)
+    keep = len(cell) - 1 - first_rev
+    grid = np.zeros((bh * bw, 8, 8), dtype=np.uint8)
+    grid[cell[keep]] = pix[keep]
+    plane = grid.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8)
+    return w, h, np.ascontiguousarray(plane[:h, :w])

@@ -16,15 +16,25 @@ types 0–4) → binarize → split text lines on blank scanlines → split
 glyphs on blank columns → normalize each glyph to its ink bounding box
 at the inferred integer scale → exact-match against the font table.
 
-Everything here is per-row Python inside the Arrow-batched extraction
-UDF — no Spark shuffle, bounded by the same interpreted-bytes caps as
-the other kernels.
+Array contract: every raster decoder (this module's PNG, and the
+JPEG/GIF/BMP/TIFF/WebP decoders behind kernels/raster.py) returns its
+pixels as one (height, width) uint8 numpy array of ITU-R 601 luma.
+Post-decode stages are array operations over that raster: binarize is
+one comparison, bands and glyph columns are row/column projections,
+the antialiasing gate counts mid-gray pixels per row, the s×s
+downsample is a reshape with all/any checks, and a glyph's match key is
+its boolean grid's shape plus bytes. The only per-byte Python left here
+is the PNG Average/Paeth unfilter, a serial recurrence with no exact
+array form. Runs inside the Arrow-batched extraction UDF — no Spark
+shuffle, bounded by the same decoded-bytes caps as the other kernels.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
+
+import numpy as np
 
 from documentconvert_spark.kernels.limits import MAX_DECODED_BYTES
 
@@ -95,35 +105,69 @@ def _crop(rows: tuple[str, ...]) -> tuple[str, ...]:
     return tuple(rows[i][cs[0]:cs[-1] + 1] for i in range(rs[0], rs[-1] + 1))
 
 
-_CROPPED: dict[tuple[str, ...], str] = {}
+def _glyph_key(cells: np.ndarray) -> tuple[int, int, bytes]:
+    """Hashable key of a boolean glyph grid: its shape plus its bytes."""
+    return (cells.shape[0], cells.shape[1], cells.tobytes())
+
+
+_CROPPED: dict[tuple[int, int, bytes], str] = {}
 for _ch, _rows in FONT_5X7.items():
-    _key = _crop(_rows)
+    _crop_rows = _crop(_rows)
+    _key = _glyph_key(np.array([[c == "X" for c in r] for r in _crop_rows]))
     assert _key not in _CROPPED, f"font: cropped-pattern collision {_ch!r}/{_CROPPED[_key]!r}"
     _CROPPED[_key] = _ch
     # glyph segmentation splits on blank columns: an internal all-blank
     # column inside one glyph's bbox would shred it into two
-    assert all("X" in col for col in zip(*_key)), f"font: internal blank column in {_ch!r}"
+    assert all("X" in col for col in zip(*_crop_rows)), f"font: internal blank column in {_ch!r}"
+
+
+def luma601(r: np.ndarray, g: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """ITU-R 601 integer luma, (299 r + 587 g + 114 b) // 1000, as uint8 —
+    the one RGB → gray fold every raster decoder shares."""
+    acc = r.astype(np.int32) * 299
+    acc += g.astype(np.int32) * 587
+    acc += b.astype(np.int32) * 114
+    return (acc // 1000).astype(np.uint8)
+
+
+def _palette_luma(pal: bytes) -> np.ndarray:
+    """RGB palette bytes → per-index luma; a trailing partial entry is
+    dropped (callers length-check against the declared count)."""
+    p = np.frombuffer(pal, dtype=np.uint8, count=len(pal) // 3 * 3).reshape(-1, 3)
+    return luma601(p[:, 0], p[:, 1], p[:, 2])
 
 
 # -- PNG decode (spec: W3C PNG, chunks + filters §6) --------------------------
 
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 _MAX_PIXELS = 4 << 20  # 4 MP: far above any text fixture, bounds the
-# per-pixel Python loops (charge-on-sight, before the IDAT inflate)
+# raster allocation (charge-on-sight, before the IDAT inflate)
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
+def _unfilter_serial(line: np.ndarray, prev: np.ndarray, bpp: int,
+                     paeth: bool) -> np.ndarray:
+    """Average / Paeth unfilter (PNG §9.2). Each byte depends on the
+    already-reconstructed byte bpp to its left through a floor or a
+    three-way choice, so there is no exact array form: this recurrence is
+    the one serial loop left in the PNG decoder."""
+    x = line.tolist()
+    p = prev.tolist()
+    for i in range(len(x)):
+        a = x[i - bpp] if i >= bpp else 0
+        if paeth:
+            b = p[i]
+            c = p[i - bpp] if i >= bpp else 0
+            est = a + b - c
+            pa, pb, pc = abs(est - a), abs(est - b), abs(est - c)
+            pred = a if pa <= pb and pa <= pc else b if pb <= pc else c
+        else:
+            pred = (a + p[i]) >> 1
+        x[i] = (x[i] + pred) & 0xFF
+    return np.array(x, dtype=np.uint8)
 
 
-def decode_png_gray(data: bytes, bilevel: bool = False) -> tuple[int, int, list[bytearray]]:
-    """PNG bytes → (width, height, rows of 8-bit gray).
+def decode_png_gray(data: bytes, bilevel: bool = False) -> tuple[int, int, np.ndarray]:
+    """PNG bytes → (width, height, (height, width) uint8 gray raster).
 
     Full PNG pixel matrix (W3C PNG spec): color types 0 (gray), 2 (RGB),
     3 (palette + PLTE), 4 (gray+alpha), 6 (RGBA); bit depths 1/2/4/8/16
@@ -137,9 +181,9 @@ def decode_png_gray(data: bytes, bilevel: bool = False) -> tuple[int, int, list[
     bounded run of majority-mid scanlines lands — a letterboxed photo).
     A photo (the overwhelming majority of real-world PNGs) fails within
     its first scanlines, so the extraction hot path pays a handful of
-    rows of Python per non-text PNG instead of a full per-pixel raster
-    decode; an ANTIALIASED text render — mid-gray confined to stroke
-    edges — passes through to the post-threshold exact grid matcher."""
+    rows per non-text PNG instead of a full raster decode; an
+    ANTIALIASED text render — mid-gray confined to stroke edges — passes
+    through to the post-threshold exact grid matcher."""
     if data[:8] != _PNG_MAGIC:
         raise ValueError("png: bad magic")
     pos = 8
@@ -171,12 +215,11 @@ def decode_png_gray(data: bytes, bilevel: bool = False) -> tuple[int, int, list[
     if w < 0 or not idat:
         raise ValueError("png: missing IHDR/IDAT")
     channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[ct]
-    pal: list[int] | None = None
+    pal: np.ndarray | None = None
     if ct == 3:
         if plte is None or len(plte) < 3:
             raise ValueError("png: palette image without PLTE")
-        pal = [(plte[i] * 299 + plte[i + 1] * 587 + plte[i + 2] * 114) // 1000
-               for i in range(0, len(plte) - 2, 3)]
+        pal = _palette_luma(plte)
     bits_pp = depth * channels
     bpp = max(1, bits_pp // 8)  # filter unit (spec §9: 1 byte when <8 bits)
     if (w * bits_pp // 8 + 2) * h > MAX_DECODED_BYTES:
@@ -212,57 +255,46 @@ def decode_png_gray(data: bytes, bilevel: bool = False) -> tuple[int, int, list[
 
     scale = 255 // ((1 << depth) - 1) if depth < 8 else 1
     gate = _BimodalGate()  # cumulative across rows (and Adam7 passes)
+    # sub-byte samples, MSB-first: per-byte shifts for one row-wide unpack
+    shifts = np.arange(8 - depth, -1, -depth, dtype=np.uint8) if depth < 8 else None
 
-    def to_gray(line: bytearray, npx: int) -> bytearray:
-        if depth < 8:  # sub-byte gray or palette indices, MSB-first
-            mask = (1 << depth) - 1
-            per = 8 // depth
-            vals = [(line[x // per] >> (8 - depth * (x % per + 1))) & mask
-                    for x in range(npx)]
+    def to_gray(line: np.ndarray, npx: int) -> np.ndarray:
+        if depth < 8:  # sub-byte gray or palette indices
+            vals = ((line[:, None] >> shifts) & ((1 << depth) - 1)).reshape(-1)[:npx]
             if ct == 3:
-                for v in vals:
-                    if v >= len(pal):
-                        raise ValueError("png: index out of palette")
-                return bytearray(pal[v] for v in vals)
-            return bytearray(v * scale for v in vals)
+                if int(vals.max()) >= len(pal):
+                    raise ValueError("png: index out of palette")
+                return pal[vals]
+            return vals * np.uint8(scale)
         step = bits_pp // 8
         if ct == 0:
             return line[:npx] if depth == 8 else line[0:npx * 2:2]
         if ct == 3:
-            for v in line[:npx]:
-                if v >= len(pal):
-                    raise ValueError("png: index out of palette")
-            return bytearray(pal[v] for v in line[:npx])
+            idx = line[:npx]
+            if int(idx.max()) >= len(pal):
+                raise ValueError("png: index out of palette")
+            return pal[idx]
         if ct == 4:  # gray + alpha: gray sample leads
             return line[0:npx * step:step]
         cstep = depth // 8  # RGB(A): luma over the three color samples
-        return bytearray(
-            (line[i] * 299 + line[i + cstep] * 587 + line[i + 2 * cstep] * 114) // 1000
-            for i in range(0, npx * step, step))
+        return luma601(line[0:npx * step:step], line[cstep::step][:npx],
+                       line[2 * cstep::step][:npx])
 
     def unfilter_rows(pw: int, ph: int):
         """Yield unfiltered gray rows of a (sub)image pw×ph."""
         stride = (pw * bits_pp + 7) // 8
-        prev = bytearray(stride)
+        prev = np.zeros(stride, dtype=np.uint8)
         for _y in range(ph):
             rowbytes = pull(stride + 1)
             ftype = rowbytes[0]
-            line = bytearray(rowbytes[1:])
-            if ftype == 1:  # Sub
-                for i in range(bpp, stride):
-                    line[i] = (line[i] + line[i - bpp]) & 0xFF
+            line = np.frombuffer(rowbytes, dtype=np.uint8, offset=1)
+            if ftype == 1:  # Sub: per-channel running sum, mod 256
+                line = np.cumsum(line.reshape(-1, bpp), axis=0,
+                                 dtype=np.uint8).reshape(-1)
             elif ftype == 2:  # Up
-                for i in range(stride):
-                    line[i] = (line[i] + prev[i]) & 0xFF
-            elif ftype == 3:  # Average
-                for i in range(stride):
-                    a = line[i - bpp] if i >= bpp else 0
-                    line[i] = (line[i] + ((a + prev[i]) >> 1)) & 0xFF
-            elif ftype == 4:  # Paeth
-                for i in range(stride):
-                    a = line[i - bpp] if i >= bpp else 0
-                    c = prev[i - bpp] if i >= bpp else 0
-                    line[i] = (line[i] + _paeth(a, prev[i], c)) & 0xFF
+                line = line + prev
+            elif ftype == 3 or ftype == 4:  # Average / Paeth
+                line = _unfilter_serial(line, prev, bpp, ftype == 4)
             elif ftype != 0:
                 raise ValueError("png: unknown filter type")
             prev = line
@@ -271,10 +303,12 @@ def decode_png_gray(data: bytes, bilevel: bool = False) -> tuple[int, int, list[
                 raise ValueError("png: not a bilevel text render")
             yield gray
 
+    raster = np.zeros((h, w), dtype=np.uint8)
     if not inter:
-        return w, h, list(unfilter_rows(w, h))
+        for y, gray in enumerate(unfilter_rows(w, h)):
+            raster[y] = gray
+        return w, h, raster
     # Adam7: seven passes, each an independently filtered sub-image
-    raster = [bytearray(w) for _ in range(h)]
     for x0, y0, dx, dy in ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8),
                            (2, 0, 4, 4), (0, 2, 2, 4), (1, 0, 2, 2),
                            (0, 1, 1, 2)):
@@ -283,34 +317,37 @@ def decode_png_gray(data: bytes, bilevel: bool = False) -> tuple[int, int, list[
         if pw <= 0 or ph <= 0:
             continue
         for py, gray in enumerate(unfilter_rows(pw, ph)):
-            # extended-slice assignment: len(row[x0::dx]) == pw exactly
-            raster[y0 + py * dy][x0::dx] = gray
+            # strided row slice: len(row[x0::dx]) == pw exactly
+            raster[y0 + py * dy, x0::dx] = gray
     return w, h, raster
 
 
 # -- glyph matching -----------------------------------------------------------
 
 _INK = 128  # gray < _INK is ink (black text on white)
+_MID = np.zeros(256, dtype=bool)  # 32 < gray < 224: neither ink nor paper
+_MID[33:224] = True
 
 
-def _count_mid(row) -> int:
-    return sum(1 for p in row if 32 < p < 224)
+def _count_mid(gray) -> int:
+    """Mid-gray pixels in a row or a whole raster."""
+    return int(np.count_nonzero(_MID[np.asarray(gray, dtype=np.uint8)]))
 
 
 class _BimodalGate:
     """Streaming antialiasing gate (r4): accumulate mid-gray vs total
     pixels scanline by scanline and abort as soon as mid-gray pixels
     exceed HALF of everything seen. A photo or gradient is majority-mid
-    from its very first row, so it still bails after ~one scanline of
-    Python (the old any-mid-pixel rule's perf contract); an antialiased
-    text render keeps mid-gray on stroke edges only (measured ≤0.39
-    cumulative at margin 8, worst case incl. all-dash lines), so it
-    decodes through to the post-threshold exact grid matcher. A
-    per-ROW majority rule would not work: a blurred 2-px stroke row is
-    100% mid-gray — only the cumulative fraction separates the classes.
-    Requires the render to lead with background margin (ours use ≥4 px);
-    a margin-0 crop may bail to figure-only, which is the documented
-    exact-or-nothing containment, not a wrong answer.
+    from its very first row, so it still bails after ~one scanline (the
+    old any-mid-pixel rule's perf contract); an antialiased text render
+    keeps mid-gray on stroke edges only (measured ≤0.39 cumulative at
+    margin 8, worst case incl. all-dash lines), so it decodes through to
+    the post-threshold exact grid matcher. A per-ROW majority rule would
+    not work: a blurred 2-px stroke row is 100% mid-gray — only the
+    cumulative fraction separates the classes. Requires the render to
+    lead with background margin (ours use ≥4 px); a margin-0 crop may
+    bail to figure-only, which is the documented exact-or-nothing
+    containment, not a wrong answer.
 
     The cumulative rule alone never trips for a photo whose leading
     margin (letterbox, blown-out sky) outweighs its mid content, which
@@ -329,48 +366,56 @@ class _BimodalGate:
         self.total = 0
         self.run = 0
 
-    def feed(self, row) -> bool:
-        """Accumulate one scanline; False = photo/gradient so far, abort."""
-        m = _count_mid(row)
-        self.mid += m
-        self.total += len(row)
-        # len >= 8 keeps sparse Adam7 pass rows from flapping the run
-        if len(row) >= 8 and m * 2 > len(row):
-            self.run += 1
-            if self.run >= self._MAX_MID_RUN:
+    def feed(self, rows) -> bool:
+        """Accumulate one scanline (1-D) or a block of scanlines (2-D,
+        in order); False = photo/gradient so far, abort. A block verdict
+        equals feeding its rows one by one and stopping at the first
+        False."""
+        a = np.asarray(rows, dtype=np.uint8)
+        if a.ndim == 1:
+            a = a[None, :]
+        width = a.shape[1]
+        for m in np.count_nonzero(_MID[a], axis=1).tolist():
+            self.mid += m
+            self.total += width
+            # width >= 8 keeps sparse Adam7 pass rows from flapping the run
+            if width >= 8 and m * 2 > width:
+                self.run += 1
+                if self.run >= self._MAX_MID_RUN:
+                    return False
+            else:
+                self.run = 0
+            if self.mid * 2 > self.total:
                 return False
-        else:
-            self.run = 0
-        return self.mid * 2 <= self.total
+        return True
 
 
-def _downsample(cells: list[list[bool]], s: int) -> tuple[str, ...] | None:
-    """Ink grid → pattern rows at 1/s, requiring every s×s block to be
+def _runs(mask: np.ndarray) -> list[tuple[int, int]]:
+    """Maximal runs of True in a 1-D mask → [(start, end), ...]."""
+    edges = np.diff(mask.astype(np.int8), prepend=np.int8(0), append=np.int8(0))
+    return list(zip(np.flatnonzero(edges == 1).tolist(),
+                    np.flatnonzero(edges == -1).tolist()))
+
+
+def _downsample(cells: np.ndarray, s: int) -> np.ndarray | None:
+    """Ink grid → pattern at 1/s, requiring every s×s block to be
     uniform — antialiased or off-grid input fails here by design."""
-    hh, ww = len(cells), len(cells[0])
+    hh, ww = cells.shape
     if hh % s or ww % s:
         return None
-    out = []
-    for by in range(0, hh, s):
-        row = []
-        for bx in range(0, ww, s):
-            block = [cells[by + dy][bx + dx] for dy in range(s) for dx in range(s)]
-            if all(block):
-                row.append("X")
-            elif not any(block):
-                row.append(".")
-            else:
-                return None
-        out.append("".join(row))
-    return tuple(out)
+    blocks = cells.reshape(hh // s, s, ww // s, s)
+    full = blocks.all(axis=(1, 3))
+    if not np.array_equal(full, blocks.any(axis=(1, 3))):
+        return None
+    return full
 
 
 def ocr_png_text(data: bytes) -> list[str]:
     """PNG bytes → decoded text lines, or [] when the image is not a
     clean grid rendering of the known font (the figure-only fallback).
     The bilevel decode streams through _BimodalGate and aborts once
-    mid-gray dominates, so a photo pays a few scanlines of Python while
-    an antialiased render reaches the post-threshold matcher."""
+    mid-gray dominates, so a photo pays a few scanlines while an
+    antialiased render reaches the post-threshold matcher."""
     try:
         w, h, gray = decode_png_gray(data, bilevel=True)
     except (ValueError, struct.error, zlib.error):
@@ -378,23 +423,21 @@ def ocr_png_text(data: bytes) -> list[str]:
     return ocr_gray_text(w, h, gray)
 
 
+def _majority_mid(luma: np.ndarray) -> bool:
+    """More than half of the palette entries are mid-gray."""
+    return int(np.count_nonzero(_MID[luma])) * 2 > len(luma)
+
+
 def _gif_palette_bilevel(data: bytes) -> bool:
     """Cheap pre-gate: a rendered-text GIF's global palette is MAJORITY
     near-black/near-white entries (antialiased renders add a minority of
     edge tones), so a photo (mostly mid-gray palette) bails after
-    reading the header — BEFORE paying the pure-Python LZW decode.
-    Conservative: no global palette → let the decoder decide."""
+    reading the header — BEFORE paying the LZW decode. Conservative: no
+    global palette → let the decoder decide."""
     if len(data) < 13 or not data[10] & 0x80:
         return True
     n = 2 << (data[10] & 0x07)
-    pal = data[13:13 + 3 * n]
-    mid = total = 0
-    for i in range(0, len(pal) - 2, 3):
-        luma = (pal[i] * 299 + pal[i + 1] * 587 + pal[i + 2] * 114) // 1000
-        total += 1
-        if 32 < luma < 224:
-            mid += 1
-    return mid * 2 <= total
+    return not _majority_mid(_palette_luma(data[13:13 + 3 * n]))
 
 
 def _tiff_colormap_bilevel(data: bytes) -> bool:
@@ -403,7 +446,7 @@ def _tiff_colormap_bilevel(data: bytes) -> bool:
     IFD alone — before any strip decompression. Conservative: not
     palette / unparseable → let the decoder decide (it has its own
     gates)."""
-    from documentconvert_spark.kernels.raster import _tiff_ifd0
+    from documentconvert_spark.kernels.raster import _tiff_colormap_luma, _tiff_ifd0
 
     try:
         end = "<" if data[:2] == b"II" else ">"
@@ -415,13 +458,7 @@ def _tiff_colormap_bilevel(data: bytes) -> bool:
     cmap = tags.get(320)
     if not cmap or len(cmap) != 3 * 256:
         return True
-    mid = 0
-    for i in range(256):
-        luma = ((cmap[i] >> 8) * 299 + (cmap[256 + i] >> 8) * 587
-                + (cmap[512 + i] >> 8) * 114) // 1000
-        if 32 < luma < 224:
-            mid += 1
-    return mid * 2 <= 256
+    return not _majority_mid(_tiff_colormap_luma(cmap))
 
 
 def ocr_raster_text(data: bytes) -> list[str]:
@@ -451,7 +488,7 @@ def ocr_raster_text(data: bytes) -> list[str]:
             _fmt, w, h, gray = decode_raster_gray(data)
     except (ValueError, struct.error, IndexError):
         return []  # malformed / non-bilevel keeps the figure-only shape (C7)
-    if sum(_count_mid(row) for row in gray) * 2 > w * h:
+    if _count_mid(gray) * 2 > w * h:
         return []  # majority-mid raster: a photo/gradient, not a text render
     return ocr_gray_text(w, h, gray)
 
@@ -473,82 +510,99 @@ def ocr_jpeg_text(data: bytes) -> list[str]:
         w, h, gray = decode_jpeg_gray(data)
     except (ValueError, struct.error):
         return []
-    if sum(_count_mid(row) for row in gray) * 2 > w * h:
+    if _count_mid(gray) * 2 > w * h:
         return []  # majority-mid raster: a near-lossless photo, not text
     return ocr_gray_text(w, h, gray)
 
 
-def _boxes_by_columns(ink, b0: int, b1: int, w: int):
+def _boxes_by_columns(ink: np.ndarray, b0: int, b1: int, w: int):
     """Glyph bounding boxes within a line band by blank-column
     projection (the original splitter): a box per maximal run of
     occupied columns, cropped to its ink rows. Fails (merges) when two
     glyphs overlap in x without a blank column between them — the
     proportional-kerning case _boxes_by_components exists for."""
-    col_has = [any(ink[y][x] for y in range(b0, b1)) for x in range(w)]
-    boxes = []
-    x = 0
-    while x < w:
-        if not col_has[x]:
-            x += 1
-            continue
-        x0 = x
-        while x < w and col_has[x]:
-            x += 1
-        ys = [yy for yy in range(b0, b1) if any(ink[yy][xx] for xx in range(x0, x))]
-        boxes.append((x0, x, ys[0], ys[-1] + 1, None))
-    return boxes
+    band = ink[b0:b1]
+    runs = _runs(band.any(axis=0))
+    if not runs:
+        return []
+    # per-run row occupancy in one pass: each reduceat segment spans one
+    # run plus the blank columns after it, which add no ink
+    occ = np.logical_or.reduceat(band, [x0 for x0, _ in runs], axis=1)
+    tops = occ.argmax(axis=0).tolist()
+    bottoms = (len(band) - occ[::-1].argmax(axis=0)).tolist()
+    return [(x0, x1, b0 + top, b0 + bot, None)
+            for (x0, x1), top, bot in zip(runs, tops, bottoms)]
 
 
-def _boxes_by_components(ink, b0: int, b1: int, w: int):
+def _label_components(band: np.ndarray) -> np.ndarray:
+    """8-connected component labels of a boolean band: every ink pixel
+    gets the row-major index of its component's first pixel (the one a
+    raster scan meets first); background gets band.size. Min-label
+    propagation over the 3×3 neighborhood plus pointer jumping (a label
+    is a pixel index, so a pixel may adopt its label's own label), run
+    to the fixed point."""
+    bh, bw = band.shape
+    n = bh * bw
+    lab = np.where(band, np.arange(n).reshape(bh, bw), n)
+    pad = np.full((bh + 2, bw + 2), n, dtype=lab.dtype)
+    while True:
+        pad[1:-1, 1:-1] = lab
+        m = lab.copy()
+        for dy in (0, 1, 2):
+            for dx in (0, 1, 2):
+                np.minimum(m, pad[dy:dy + bh, dx:dx + bw], out=m)
+        m[~band] = n
+        m = np.append(m.reshape(-1), n)[m]  # pointer jump
+        if np.array_equal(m, lab):
+            return lab
+        lab = m
+
+
+def _boxes_by_components(ink: np.ndarray, b0: int, b1: int, w: int):
     """Per-glyph bounding boxes from 8-connected components (the r4
-    verdict's proportional-font increment): components are found by an
-    iterative flood fill over the band, sorted by left edge, then
-    GROUPED into glyphs — a component joins the current glyph iff its
-    x-center falls inside the glyph's x-range, which assembles the
-    multi-part glyphs ('!', '?', ':', ';', '=', whose dots/bars stack
-    with aligned centers) while keeping a kerned neighbor (x-overlap
-    without touching pixels, e.g. a dash tucked under an L's overhang)
-    a SEPARATE glyph. Column projection cannot split that case — it
-    merges any x-overlap into one unmatchable pseudo-glyph and rejects
-    the image."""
-    seen = [[False] * w for _ in range(b0, b1)]
-    comps = []
-    for y in range(b0, b1):
-        for x in range(w):
-            if not ink[y][x] or seen[y - b0][x]:
-                continue
-            stack = [(y, x)]
-            seen[y - b0][x] = True
-            pix = {(y, x)}
-            x0 = x1 = x
-            y0 = y1 = y
-            while stack:
-                cy, cx = stack.pop()
-                x0, x1 = min(x0, cx), max(x1, cx)
-                y0, y1 = min(y0, cy), max(y1, cy)
-                for dy in (-1, 0, 1):
-                    for dx in (-1, 0, 1):
-                        ny, nx = cy + dy, cx + dx
-                        if (b0 <= ny < b1 and 0 <= nx < w
-                                and ink[ny][nx] and not seen[ny - b0][nx]):
-                            seen[ny - b0][nx] = True
-                            pix.add((ny, nx))
-                            stack.append((ny, nx))
-            comps.append((x0, x1, y0, y1, pix))
-    comps.sort(key=lambda c: c[:4])
-    boxes = []
-    for (x0, x1, y0, y1, pix) in comps:
+    verdict's proportional-font increment): components are labeled over
+    the band, sorted by left edge, then GROUPED into glyphs — a
+    component joins the current glyph iff its x-center falls inside the
+    glyph's x-range, which assembles the multi-part glyphs ('!', '?',
+    ':', ';', '=', whose dots/bars stack with aligned centers) while
+    keeping a kerned neighbor (x-overlap without touching pixels, e.g. a
+    dash tucked under an L's overhang) a SEPARATE glyph. Column
+    projection cannot split that case — it merges any x-overlap into one
+    unmatchable pseudo-glyph and rejects the image. Each box carries its
+    glyph's own pixel mask over the box."""
+    band = ink[b0:b1]
+    lab = _label_components(band)
+    ys, xs = np.nonzero(band)
+    ids, inv = np.unique(lab[ys, xs], return_inverse=True)
+    k = len(ids)
+    x0s = np.full(k, w)
+    np.minimum.at(x0s, inv, xs)
+    x1s = np.zeros(k, dtype=x0s.dtype)
+    np.maximum.at(x1s, inv, xs)
+    y0s = np.full(k, len(band))
+    np.minimum.at(y0s, inv, ys)
+    y1s = np.zeros(k, dtype=y0s.dtype)
+    np.maximum.at(y1s, inv, ys)
+    # (left, right, top, bottom) order; ties keep raster discovery order,
+    # which is the ascending label
+    comps = sorted(zip(x0s.tolist(), x1s.tolist(), (y0s + b0).tolist(),
+                       (y1s + b0).tolist(), ids.tolist()))
+    groups: list[list] = []
+    for (x0, x1, y0, y1, cid) in comps:
         cx2 = x0 + x1  # 2*center, integer-exact
-        if boxes and boxes[-1][0] * 2 <= cx2 <= (boxes[-1][1] - 1) * 2:
-            gx0, gx1, gy0, gy1, gpix = boxes[-1]
-            boxes[-1] = (min(gx0, x0), max(gx1, x1 + 1),
-                         min(gy0, y0), max(gy1, y1 + 1), gpix | pix)
+        if groups and groups[-1][0] * 2 <= cx2 <= (groups[-1][1] - 1) * 2:
+            g = groups[-1]
+            g[0], g[1] = min(g[0], x0), max(g[1], x1 + 1)
+            g[2], g[3] = min(g[2], y0), max(g[3], y1 + 1)
+            g[4].append(cid)
         else:
-            boxes.append((x0, x1 + 1, y0, y1 + 1, pix))
-    return boxes
+            groups.append([x0, x1 + 1, y0, y1 + 1, [cid]])
+    return [(x0, x1, y0, y1,
+             np.isin(lab[y0 - b0:y1 - b0, x0:x1], cids))
+            for x0, x1, y0, y1, cids in groups]
 
 
-def _match_boxes(ink, boxes, s: int) -> str | None:
+def _match_boxes(ink: np.ndarray, boxes, s: int) -> str | None:
     """Sorted glyph boxes → decoded text, or None when any glyph fails
     the exact grid match (which rejects the whole image — a partial
     decode would flow replacement-character soup into paragraph spans
@@ -559,26 +613,23 @@ def _match_boxes(ink, boxes, s: int) -> str | None:
     both conventions, so one ≥ 6s rule serves both."""
     text = ""
     prev_end: int | None = None
-    for (x0, x1, y0, y1, pix) in boxes:
+    for (x0, x1, y0, y1, mask) in boxes:
         if prev_end is not None and x0 - prev_end >= 6 * s:
             text += " "
         prev_end = x1
-        # pix = the glyph's own pixel set (component path): kerned
-        # bboxes can OVERLAP, and a plain rectangle crop would bleed the
+        # mask = the glyph's own pixels (component path): kerned bboxes
+        # can OVERLAP, and a plain rectangle crop would bleed the
         # neighbor's ink into this glyph and reject a clean render
-        cells = [
-            [ink[yy][xx] if pix is None else (yy, xx) in pix for xx in range(x0, x1)]
-            for yy in range(y0, y1)
-        ]
+        cells = ink[y0:y1, x0:x1] if mask is None else mask
         pat = _downsample(cells, s)
-        ch = _CROPPED.get(pat) if pat is not None else None
+        ch = _CROPPED.get(_glyph_key(pat)) if pat is not None else None
         if ch is None:
             return None
         text += ch
     return text
 
 
-def ocr_gray_text(w: int, h: int, gray: list[bytearray]) -> list[str]:
+def ocr_gray_text(w: int, h: int, gray: np.ndarray) -> list[str]:
     """Gray raster → decoded text lines via the exact grid matcher, or []
     when the raster is not a clean rendering of the known font. Two
     glyph segmenters, exact-or-nothing each: blank-column projection
@@ -586,19 +637,16 @@ def ocr_gray_text(w: int, h: int, gray: list[bytearray]) -> list[str]:
     and proportional render with blank inter-glyph columns), and on
     whole-image rejection one retry with connected-component boxes,
     which additionally decodes kerned proportional renders whose glyphs
-    overlap in x without touching."""
-    ink = [[p < _INK for p in row] for row in gray]
-    row_has = [any(r) for r in ink]
-    bands: list[tuple[int, int]] = []
-    y = 0
-    while y < h:
-        if row_has[y]:
-            y0 = y
-            while y < h and row_has[y]:
-                y += 1
-            bands.append((y0, y))
-        else:
-            y += 1
+    overlap in x without touching.
+
+    Known gap, kept on purpose: the retry fires only when some column
+    box is WIDER than GLYPH_W × min(all_quotients). Two narrow glyphs
+    (e.g. '.' and '1') kerned into one merged box no wider than that
+    threshold never reach the component pass, so such a render is
+    rejected to figure-only — never misread, because the merged box
+    itself matches no glyph."""
+    ink = np.asarray(gray) < _INK
+    bands = _runs(ink.any(axis=1))
     if not bands:
         return []
     big = max(b1 - b0 for b0, b1 in bands)
@@ -657,11 +705,11 @@ def ocr_gray_text(w: int, h: int, gray: list[bytearray]) -> list[str]:
         return lines
     # component retry ONLY on the x-overlap signature — some column box
     # wider than one glyph at the SMALLEST plausible scale
-    # (conservative: an extra flood-fill retry is cheap, a missed kerned
+    # (conservative: an extra labeling retry is cheap, a missed kerned
     # render is a lost decode), which is what kerned overlap produces
     # and what column projection cannot split. Ordinary rejects (an
-    # unmatched glyph-sized box: noise, unknown font) skip the flood
-    # fill, keeping the common reject path at its historical cost. The
+    # unmatched glyph-sized box: noise, unknown font) skip the labeling,
+    # keeping the common reject path at its historical cost. The
     # threshold is global: every band's candidate ladder contains
     # min(all_quotients) (s_global is always a quotient — the tallest
     # band is clean by the gate above).

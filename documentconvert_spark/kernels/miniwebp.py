@@ -6,10 +6,11 @@ header-sniffed dimensions. This module implements the public "WebP
 Lossless Bitstream Specification" end-to-end:
 
 * RIFF container walk (VP8L directly or nested under VP8X);
-* LSB-first bit reader; canonical prefix codes transmitted either as
-  "simple" (1–2 symbols) or via the DEFLATE-style code-length code
-  (19-symbol alphabet in the spec's permuted order, 16/17/18 repeats,
-  optional max-symbol shortcut);
+* LSB-first bit reader refilled a word at a time; canonical prefix
+  codes transmitted either as "simple" (1–2 symbols) or via the
+  DEFLATE-style code-length code (19-symbol alphabet in the spec's
+  permuted order, 16/17/18 repeats, optional max-symbol shortcut),
+  decoded through a lookup table over a multi-bit peek;
 * the entropy-coded image: optional color cache (multiplicative hash
   0x1e35a7bd), optional meta-prefix image selecting among huffman
   groups per 2^b tile, green/red/blue/alpha/distance codes, LZ77
@@ -18,6 +19,12 @@ Lossless Bitstream Specification" end-to-end:
   14 modes), COLOR (cross-color deltas, signed*signed >> 5),
   SUBTRACT_GREEN, and COLOR_INDEXING (delta-coded palette + sub-byte
   pixel bundling for palettes of ≤16 colors).
+
+The entropy decode is serial (LZ77 copies are list slices); every
+inverse transform and the luma fold run on uint32 numpy arrays. The
+predictor's left-neighbor modes are a serial recurrence, so they are
+resolved per pixel after the row's above-only modes are applied as one
+array step.
 
 Lossy VP8 frames have no from-scratch decoder (a full DCT codec) and
 raise ValueError — callers keep the figure-only containment path, same
@@ -32,7 +39,10 @@ from __future__ import annotations
 
 import struct
 
+import numpy as np
+
 from documentconvert_spark.kernels.limits import MAX_DECODED_BYTES
+from documentconvert_spark.kernels.miniocr import luma601
 
 _MAX_PIXELS_DEFAULT = 4 << 20
 
@@ -61,7 +71,9 @@ _DIST_MAP = (
 
 
 class _Bits:
-    """LSB-first bit reader over the VP8L payload."""
+    """LSB-first bit reader over the VP8L payload, refilled up to seven
+    bytes at a time. `buf` holds `n` unread bits (bits past the end of
+    the stream read as zero); consuming bits that are not there raises."""
 
     __slots__ = ("d", "pos", "buf", "n")
 
@@ -71,24 +83,36 @@ class _Bits:
         self.buf = 0
         self.n = 0
 
+    def _fill(self) -> None:
+        chunk = self.d[self.pos:self.pos + 7]
+        self.buf |= int.from_bytes(chunk, "little") << self.n
+        self.pos += len(chunk)
+        self.n += 8 * len(chunk)
+
     def get(self, k: int) -> int:
-        while self.n < k:
-            if self.pos >= len(self.d):
+        if self.n < k:
+            self._fill()
+            if self.n < k:
                 raise ValueError("webp: truncated bitstream")
-            self.buf |= self.d[self.pos] << self.n
-            self.pos += 1
-            self.n += 8
         v = self.buf & ((1 << k) - 1)
         self.buf >>= k
         self.n -= k
         return v
 
 
+_LUT_BITS = 10  # prefix-code lookup width; longer codes take the slow walk
+
+
 class _Code:
     """Canonical prefix code: DEFLATE-style assignment (codes ordered by
-    (length, symbol)), read MSB-of-code-first from the LSB-first stream."""
+    (length, symbol)), read MSB-of-code-first from the LSB-first stream.
+    Codes up to _LUT_BITS long resolve with one table lookup over the
+    next lut_bits buffered bits (entry = length << 16 | symbol, -1 = no
+    short code); longer or unassigned prefixes fall back to the
+    bit-by-bit walk."""
 
-    __slots__ = ("single", "counts", "firsts", "offsets", "symbols")
+    __slots__ = ("single", "counts", "firsts", "offsets", "symbols",
+                 "lut", "lut_bits")
 
     def __init__(self, lengths: list[int]) -> None:
         present = [(ln, sym) for sym, ln in enumerate(lengths) if ln]
@@ -122,10 +146,31 @@ class _Code:
         self.firsts = firsts
         self.offsets = offsets
         self.symbols = [sym for _, sym in present]
+        bits = min(maxlen, _LUT_BITS)
+        lut = [-1] * (1 << bits)
+        for ln in range(1, bits + 1):
+            for j in range(counts[ln]):
+                # the stream delivers the code MSB first into the lowest
+                # buffered bit, so the table index is the bit-reversed code
+                rev = int(format(firsts[ln] + j, f"0{ln}b")[::-1], 2)
+                lut[rev::1 << ln] = [(ln << 16) | self.symbols[offsets[ln] + j]] * (1 << (bits - ln))
+        self.lut = lut
+        self.lut_bits = bits
 
     def read(self, br: _Bits) -> int:
         if self.single is not None:
             return self.single
+        # one lookup over the buffered bits: the per-symbol hot path
+        if br.n < self.lut_bits:
+            br._fill()
+        e = self.lut[br.buf & ((1 << self.lut_bits) - 1)]
+        if e >= 0:
+            ln = e >> 16
+            if br.n < ln:
+                raise ValueError("webp: truncated bitstream")
+            br.buf >>= ln
+            br.n -= ln
+            return e & 0xFFFF
         code = 0
         counts = self.counts
         for ln in range(1, len(counts)):
@@ -241,8 +286,14 @@ def _decode_entropy_image(br: _Bits, w: int, h: int,
         ))
     npix = w * h
     out: list[int] = []
+    append = out.append
     gcode = codes[0]
     mw = -(-w // (1 << meta_bits)) if meta is not None else 0
+    # the color cache is folded in lazily: out[:synced] is already hashed
+    # in, and the pending pixels are hashed only when a cache symbol needs
+    # the cache (pixels read FROM the cache are never re-inserted)
+    synced = 0
+    shift = 32 - cache_bits
     while len(out) < npix:
         pos = len(out)
         if meta is not None:
@@ -256,10 +307,7 @@ def _decode_entropy_image(br: _Bits, w: int, h: int,
             r = gcode[1].read(br)
             b = gcode[2].read(br)
             a = gcode[3].read(br)
-            px = (a << 24) | (r << 16) | (g << 8) | b
-            out.append(px)
-            if cache is not None:
-                cache[((0x1E35A7BD * px) & 0xFFFFFFFF) >> (32 - cache_bits)] = px
+            append((a << 24) | (r << 16) | (g << 8) | b)
         elif g < 280:  # LZ77 backward reference
             length = _prefix_value(g - 256, br)
             dcode = _prefix_value(gcode[4].read(br), br)
@@ -270,29 +318,38 @@ def _decode_entropy_image(br: _Bits, w: int, h: int,
                 dist = dx + dy * w
                 if dist < 1:
                     dist = 1
-            if dist > len(out) or len(out) + length > npix:
+            if dist > pos or pos + length > npix:
                 raise ValueError("webp: LZ77 reference out of range")
-            src = len(out) - dist
-            for i in range(length):
-                px = out[src + i]
-                out.append(px)
-                if cache is not None:
-                    cache[((0x1E35A7BD * px) & 0xFFFFFFFF) >> (32 - cache_bits)] = px
+            if dist >= length:
+                out.extend(out[pos - dist:pos - dist + length])
+            else:  # overlapping copy: the last `dist` pixels repeat
+                out.extend((out[pos - dist:] * (length // dist + 1))[:length])
         else:  # color cache
             if cache is None:
                 raise ValueError("webp: cache symbol without cache")
             idx = g - 280
             if idx >= len(cache):
                 raise ValueError("webp: cache index out of range")
-            out.append(cache[idx])
+            for px in out[synced:]:
+                cache[((0x1E35A7BD * px) & 0xFFFFFFFF) >> shift] = px
+            append(cache[idx])
+            synced = len(out)
     return out
 
 
 # ---------------------------------------------------------------- transforms
+# The channelwise helpers below work on one ARGB int or elementwise on a
+# uint32 array alike (uint32 wraparound only drops the bit the masks drop).
 
-def _avg2(a: int, b: int) -> int:
+def _avg2(a, b):
     """Channelwise floor average of two ARGB pixels."""
     return (((a ^ b) & 0xFEFEFEFE) >> 1) + (a & b)
+
+
+def _pixel_add(a, b):
+    """Channelwise modular addition of two ARGB pixels."""
+    return ((((a & 0xFF00FF00) + (b & 0xFF00FF00)) & 0xFF00FF00)
+            | (((a & 0x00FF00FF) + (b & 0x00FF00FF)) & 0x00FF00FF))
 
 
 def _clip255(v: int) -> int:
@@ -333,105 +390,119 @@ def _cas_half(l: int, t: int, tl: int) -> int:  # noqa: E741
     return px
 
 
-def _apply_predictor_inverse(w: int, h: int, pix: list[int],
-                             bits: int, modes: list[int]) -> None:
+def _left_pred(m: int, l: int, t: int, tl: int, tr: int) -> int:  # noqa: E741
+    """Prediction of a mode that reads the left neighbor L."""
+    if m == 1:
+        return l
+    if m == 5:
+        return _avg2(_avg2(l, tr), t)
+    if m == 6:
+        return _avg2(l, tl)
+    if m == 7:
+        return _avg2(l, t)
+    if m == 10:
+        return _avg2(_avg2(l, tl), _avg2(t, tr))
+    if m == 11:
+        return _select(t, l, tl)
+    if m == 12:
+        return _cas_full(l, t, tl)
+    return _cas_half(l, t, tl)
+
+
+# predictor mode → slot: 0-5 index the modes that only read the row
+# above (0 black, 2 T, 3 TR, 4 TL, 8 avg(TL,T), 9 avg(T,TR)), 6 = a mode
+# that reads L, 7 = invalid
+_PRED_SLOT = np.full(256, 7, dtype=np.intp)
+_PRED_SLOT[[0, 2, 3, 4, 8, 9]] = np.arange(6)
+_PRED_SLOT[[1, 5, 6, 7, 10, 11, 12, 13]] = 6
+
+
+def _tile_image(elems: list[int], w: int, h: int, bits: int) -> np.ndarray:
+    """Per-tile transform image → its value at every pixel, (h, w)."""
     mw = -(-w // (1 << bits))
-    add = _pixel_add
-    for y in range(h):
-        row = y * w
-        for x in range(w):
-            i = row + x
-            if x == 0 and y == 0:
-                pred = 0xFF000000
-            elif y == 0:
-                pred = pix[i - 1]
-            elif x == 0:
-                pred = pix[i - w]
-            else:
-                m = (modes[(y >> bits) * mw + (x >> bits)] >> 8) & 0xFF
-                l = pix[i - 1]  # noqa: E741
-                t = pix[i - w]
-                tl = pix[i - w - 1]
-                # TR is defined on the CONTIGUOUS pixel buffer (spec §5):
-                # at the rightmost column, i-w+1 is the current row's
-                # already-decoded leftmost pixel — not T
-                tr = pix[i - w + 1]
-                if m == 0:
-                    pred = 0xFF000000
-                elif m == 1:
-                    pred = l
-                elif m == 2:
-                    pred = t
-                elif m == 3:
-                    pred = tr
-                elif m == 4:
-                    pred = tl
-                elif m == 5:
-                    pred = _avg2(_avg2(l, tr), t)
-                elif m == 6:
-                    pred = _avg2(l, tl)
-                elif m == 7:
-                    pred = _avg2(l, t)
-                elif m == 8:
-                    pred = _avg2(tl, t)
-                elif m == 9:
-                    pred = _avg2(t, tr)
-                elif m == 10:
-                    pred = _avg2(_avg2(l, tl), _avg2(t, tr))
-                elif m == 11:
-                    pred = _select(t, l, tl)
-                elif m == 12:
-                    pred = _cas_full(l, t, tl)
-                elif m == 13:
-                    pred = _cas_half(l, t, tl)
-                else:
-                    raise ValueError("webp: bad predictor mode")
-            pix[i] = add(pix[i], pred)
+    tiles = np.array(elems, dtype=np.uint32).reshape(-1, mw)
+    return tiles[(np.arange(h) >> bits)[:, None], (np.arange(w) >> bits)[None, :]]
 
 
-def _pixel_add(a: int, b: int) -> int:
-    """Channelwise modular addition of two ARGB pixels."""
-    return ((((a & 0xFF00FF00) + (b & 0xFF00FF00)) & 0xFF00FF00)
-            | (((a & 0x00FF00FF) + (b & 0x00FF00FF)) & 0x00FF00FF))
+def _channel_cumsum(px: np.ndarray) -> np.ndarray:
+    """Running channelwise _pixel_add along a 1-D ARGB array."""
+    out = np.zeros_like(px)
+    for sh in (0, 8, 16, 24):
+        chan = ((px >> sh) & 0xFF).astype(np.uint8)
+        out |= np.cumsum(chan, dtype=np.uint8).astype(np.uint32) << sh
+    return out
 
 
-def _ct_delta(t: int, c: int) -> int:
-    """Cross-color transform delta: signed(t) * signed(c) >> 5."""
-    ts = t - 256 if t > 127 else t
-    cs = c - 256 if c > 127 else c
-    return (ts * cs) >> 5
+def _apply_predictor_inverse(w: int, h: int, pix: np.ndarray,
+                             bits: int, modes: list[int]) -> np.ndarray:
+    """Inverse predictor, row by row. Within a row every pixel whose mode
+    reads only the row above is reconstructed in one array step; the
+    modes that read the left neighbor form a serial recurrence and are
+    resolved left to right afterwards (their L is final by then)."""
+    px = pix.reshape(h, w).copy()
+    # row 0: black for (0,0), then L all the way — a running sum
+    px[0, 0] = _pixel_add(int(px[0, 0]), 0xFF000000)
+    px[0] = _channel_cumsum(px[0])
+    mode_img = (_tile_image(modes, w, h, bits) >> 8) & 0xFF
+    slots = _PRED_SLOT[mode_img[:, 1:]]
+    cols = np.arange(w - 1)
+    black = np.full(w - 1, 0xFF000000, dtype=np.uint32)
+    for y in range(1, h):
+        up, row = px[y - 1], px[y]
+        row[0] = _pixel_add(int(row[0]), int(up[0]))
+        if w == 1:
+            continue
+        slot = slots[y]
+        if (slot == 7).any():
+            raise ValueError("webp: bad predictor mode")
+        t, tl = up[1:], up[:-1]
+        # TR is defined on the CONTIGUOUS pixel buffer (spec §5): at the
+        # rightmost column it is the current row's leftmost pixel
+        tr = np.append(up[2:], row[0])
+        preds = np.stack((black, t, tr, tl, _avg2(tl, t), _avg2(t, tr), t))
+        done = slot < 6
+        row[1:] = np.where(done, _pixel_add(row[1:], preds[slot.clip(0, 6), cols]),
+                           row[1:])
+        if not done.all():
+            cur = row.tolist()
+            above = up.tolist()
+            m_row = mode_img[y].tolist()
+            for x in (np.flatnonzero(~done) + 1).tolist():
+                cur[x] = _pixel_add(cur[x], _left_pred(
+                    m_row[x], cur[x - 1], above[x], above[x - 1],
+                    above[x + 1] if x + 1 < w else cur[0]))
+            row[:] = cur
+    return px.reshape(-1)
 
 
-def _apply_color_inverse(w: int, h: int, pix: list[int],
-                         bits: int, elems: list[int]) -> None:
-    mw = -(-w // (1 << bits))
-    for y in range(h):
-        row = y * w
-        for x in range(w):
-            e = elems[(y >> bits) * mw + (x >> bits)]
-            g2r = e & 0xFF          # blue channel of the element
-            g2b = (e >> 8) & 0xFF   # green channel
-            r2b = (e >> 16) & 0xFF  # red channel
-            px = pix[row + x]
-            g = (px >> 8) & 0xFF
-            r = ((px >> 16) & 0xFF) + _ct_delta(g2r, g)
-            r &= 0xFF
-            b = (px & 0xFF) + _ct_delta(g2b, g) + _ct_delta(r2b, r)
-            b &= 0xFF
-            pix[row + x] = (px & 0xFF00FF00) | (r << 16) | b
+def _apply_color_inverse(w: int, h: int, pix: np.ndarray,
+                         bits: int, elems: list[int]) -> np.ndarray:
+    """Inverse cross-color transform: red += delta(g2r, g), then
+    blue += delta(g2b, g) + delta(r2b, new red), with
+    delta(t, c) = signed(t) * signed(c) >> 5."""
+    def signed(v: np.ndarray) -> np.ndarray:
+        return (v & 0xFF).astype(np.int32) - (((v >> 7) & 1).astype(np.int32) << 8)
+
+    e = _tile_image(elems, w, h, bits)
+    px = pix.reshape(h, w)
+    g = signed(px >> 8)
+    r = (((px >> 16) & 0xFF).astype(np.int32) + ((signed(e) * g) >> 5)) & 0xFF
+    b = ((px & 0xFF).astype(np.int32) + ((signed(e >> 8) * g) >> 5)
+         + ((signed(e >> 16) * signed(r)) >> 5)) & 0xFF
+    return ((px & 0xFF00FF00) | (r.astype(np.uint32) << 16)
+            | b.astype(np.uint32)).reshape(-1)
 
 
-def _apply_subtract_green_inverse(pix: list[int]) -> None:
-    for i, px in enumerate(pix):
-        g = (px >> 8) & 0xFF
-        r = (((px >> 16) & 0xFF) + g) & 0xFF
-        b = ((px & 0xFF) + g) & 0xFF
-        pix[i] = (px & 0xFF00FF00) | (r << 16) | b
+def _apply_subtract_green_inverse(pix: np.ndarray) -> np.ndarray:
+    g = (pix >> 8) & 0xFF
+    return ((pix & 0xFF00FF00) | ((((pix >> 16) + g) & 0xFF) << 16)
+            | ((pix + g) & 0xFF))
 
 
 def decode_vp8l(payload: bytes,
-                max_pixels: int = _MAX_PIXELS_DEFAULT) -> tuple[int, int, list[int]]:
-    """VP8L chunk payload → (width, height, ARGB pixels, scan-line order)."""
+                max_pixels: int = _MAX_PIXELS_DEFAULT) -> tuple[int, int, np.ndarray]:
+    """VP8L chunk payload → (width, height, ARGB pixels as a 1-D uint32
+    array in scan-line order)."""
     br = _Bits(payload)
     if br.get(8) != 0x2F:
         raise ValueError("webp: bad VP8L signature")
@@ -461,12 +532,10 @@ def decode_vp8l(payload: bytes,
             transforms.append((2,))
         else:  # COLOR_INDEXING
             psize = br.get(8) + 1
-            praw = _decode_entropy_image(br, psize, 1, False)
-            palette = []
-            prev = 0
-            for p in praw:
-                prev = _pixel_add(p, prev)
-                palette.append(prev)
+            # delta-coded entries; indices past the palette read as 0
+            palette = np.zeros(256, dtype=np.uint32)
+            palette[:psize] = _channel_cumsum(np.array(
+                _decode_entropy_image(br, psize, 1, False), dtype=np.uint32))
             if psize <= 2:
                 wb = 3
             elif psize <= 4:
@@ -484,32 +553,25 @@ def decode_vp8l(payload: bytes,
         # width but applied post-unbundle — no real encoder emits this
         # combination; contain it instead of garbling
         raise ValueError("webp: transform combination unsupported")
-    pix = _decode_entropy_image(br, dec_w, h, True)
+    pix = np.array(_decode_entropy_image(br, dec_w, h, True), dtype=np.uint32)
     for tf in reversed(transforms):
         if tf[0] == 3:
             _, wb, palette = tf
-            if wb:
-                nper = 1 << wb
+            if wb:  # unbundle: 2^wb sub-byte indices per coded pixel
                 bpp = 8 >> wb
-                mask = (1 << bpp) - 1
-                full = [0] * (w * h)
-                for y in range(h):
-                    for x in range(w):
-                        packed = pix[y * dec_w + (x >> wb)]
-                        idx = ((packed >> 8) >> ((x & (nper - 1)) * bpp)) & mask
-                        full[y * w + x] = palette[idx] if idx < len(palette) else 0
-                pix = full
+                xs = np.arange(w)
+                packed = pix.reshape(h, dec_w)[:, xs >> wb] >> 8
+                shifts = ((xs & ((1 << wb) - 1)) * bpp).astype(np.uint32)
+                pix = palette[(packed >> shifts) & ((1 << bpp) - 1)].reshape(-1)
                 dec_w = w
             else:
-                for i, px in enumerate(pix):
-                    idx = (px >> 8) & 0xFF
-                    pix[i] = palette[idx] if idx < len(palette) else 0
+                pix = palette[(pix >> 8) & 0xFF]
         elif tf[0] == 2:
-            _apply_subtract_green_inverse(pix)
+            pix = _apply_subtract_green_inverse(pix)
         elif tf[0] == 1:
-            _apply_color_inverse(w, h, pix, tf[1], tf[2])
+            pix = _apply_color_inverse(w, h, pix, tf[1], tf[2])
         else:
-            _apply_predictor_inverse(w, h, pix, tf[1], tf[2])
+            pix = _apply_predictor_inverse(w, h, pix, tf[1], tf[2])
     if dec_w != w:
         raise ValueError("webp: bundled image without color indexing")
     return w, h, pix
@@ -517,9 +579,10 @@ def decode_vp8l(payload: bytes,
 
 def decode_webp_gray(data: bytes,
                      max_pixels: int = _MAX_PIXELS_DEFAULT
-                     ) -> tuple[int, int, list[bytearray]]:
-    """WebP container bytes → 8-bit luma rows (lossless VP8L only; lossy
-    VP8 has no from-scratch decoder and raises for figure-only fallback)."""
+                     ) -> tuple[int, int, np.ndarray]:
+    """WebP container bytes → (h, w) uint8 luma raster (lossless VP8L
+    only; lossy VP8 has no from-scratch decoder and raises for
+    figure-only fallback)."""
     if data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         raise ValueError("webp: bad container")
     pos = 12
@@ -537,13 +600,5 @@ def decode_webp_gray(data: bytes,
     if payload is None:
         raise ValueError("webp: no VP8L chunk")
     w, h, pix = decode_vp8l(payload, max_pixels=max_pixels)
-    rows = []
-    for y in range(h):
-        row = bytearray(w)
-        base = y * w
-        for x in range(w):
-            px = pix[base + x]
-            row[x] = (((px >> 16) & 0xFF) * 299 + ((px >> 8) & 0xFF) * 587
-                      + (px & 0xFF) * 114) // 1000
-        rows.append(row)
-    return w, h, rows
+    px = pix.reshape(h, w)
+    return w, h, luma601((px >> 16) & 0xFF, (px >> 8) & 0xFF, px & 0xFF)

@@ -1,4 +1,4 @@
-"""Raster decode router: real image bytes → 8-bit gray rows, no codec libs.
+"""Raster decode router: real image bytes → 8-bit gray raster, no codec libs.
 
 The reference's image route accepts jpg/png/bmp/gif/tiff/webp
 (`services/document_service.py:652-665`) and feeds them to GPU OCR; this
@@ -7,7 +7,16 @@ feature path (`ops/multimodal.py`), pixel-statistics queries over carved
 media, and the bitmap-glyph OCR. Every decoder here is from the public
 spec, bounded by the shared expansion caps, and returns the same shape:
 
-    (width, height, rows)  with rows = list[bytearray] of 8-bit luma
+    (width, height, gray)  with gray = (height, width) uint8 numpy array
+                           of ITU-R 601 luma, row-major
+
+Entropy stages (LZW, RLE command streams, Huffman) are serial by nature
+and stay scalar; everything after them — palette expansion, bit/nibble
+unpacking, BGR/RGB luma, TIFF horizontal-differencing undo, GIF
+deinterlace and frame composition, the dhash cell sums — is array
+arithmetic over whole rows or the whole raster. Consumers that reduce
+the raster accumulate in int64/float64 (numpy reductions widen uint8
+automatically); summing a uint8 row with a dtype-preserving op wraps.
 
 * PNG  — kernels/miniocr.decode_png_gray (W3C PNG: IDAT/filters)
 * JPEG — kernels/minijpeg.decode_jpeg_gray (ITU-T T.81 baseline, Y plane)
@@ -33,19 +42,29 @@ from __future__ import annotations
 
 import struct
 
+import numpy as np
+
 from documentconvert_spark.kernels.limits import MAX_DECODED_BYTES
 from documentconvert_spark.kernels.minijpeg import _MAX_PIXELS_DEFAULT, decode_jpeg_gray
-from documentconvert_spark.kernels.miniocr import _BimodalGate, decode_png_gray
+from documentconvert_spark.kernels.miniocr import (
+    _BimodalGate,
+    _palette_luma,
+    decode_png_gray,
+    luma601,
+)
 
 
-def _pal_to_gray(pal: bytes, stride: int) -> list[int]:
-    """RGB(X) palette bytes → per-index ITU-R 601 luma (trailing partial
-    entries dropped — callers length-check against the declared count)."""
-    out = []
-    for i in range(0, len(pal) - stride + 1, stride):
-        r, g, b = pal[i], pal[i + 1], pal[i + 2]
-        out.append((r * 299 + g * 587 + b * 114) // 1000)
-    return out
+def _interlace_order(h: int) -> np.ndarray:
+    """GIF interlace: stored row i is display row order[i] (4 passes)."""
+    return np.array(list(range(0, h, 8)) + list(range(4, h, 8))
+                    + list(range(2, h, 4)) + list(range(1, h, 2)))
+
+
+def _indexed(ix: np.ndarray, pal: np.ndarray, what: str) -> np.ndarray:
+    """Palette indices → luma, rejecting any index past the palette."""
+    if int(ix.max()) >= len(pal):
+        raise ValueError(f"{what}: pixel index out of palette")
+    return pal[ix]
 
 
 # ------------------------------------------------------------------ GIF
@@ -129,16 +148,16 @@ def _gif_lzw(blocks: bytes, min_code: int, max_out: int) -> bytearray:
 
 def decode_gif_gray(data: bytes,
                     max_pixels: int = _MAX_PIXELS_DEFAULT
-                    ) -> tuple[int, int, list[bytearray]]:
-    """First frame of a GIF → 8-bit gray rows."""
+                    ) -> tuple[int, int, np.ndarray]:
+    """First frame of a GIF → (h, w) uint8 gray raster."""
     if data[:6] not in (b"GIF87a", b"GIF89a") or len(data) < 13:
         raise ValueError("gif: bad magic")
     packed = data[10]
     pos = 13
-    gct: list[int] | None = None
+    gct: np.ndarray | None = None
     if packed & 0x80:
         n = 2 << (packed & 7)
-        gct = _pal_to_gray(data[pos:pos + 3 * n], 3)
+        gct = _palette_luma(data[pos:pos + 3 * n])
         if len(gct) < n:
             raise ValueError("gif: truncated global palette")
         pos += 3 * n
@@ -162,7 +181,7 @@ def decode_gif_gray(data: bytes,
         pal = gct
         if ipacked & 0x80:
             n = 2 << (ipacked & 7)
-            pal = _pal_to_gray(data[pos:pos + 3 * n], 3)
+            pal = _palette_luma(data[pos:pos + 3 * n])
             if len(pal) < n:
                 raise ValueError("gif: truncated local palette")
             pos += 3 * n
@@ -180,16 +199,11 @@ def decode_gif_gray(data: bytes,
         idx = _gif_lzw(b"".join(parts), min_code, w * h)
         if len(idx) < w * h:
             raise ValueError("gif: short pixel data")
-        npal = len(pal)
-        if max(idx[:w * h]) >= npal:
-            raise ValueError("gif: pixel index out of palette")
-        rows = [bytearray(pal[i] for i in idx[y * w:(y + 1) * w]) for y in range(h)]
+        rows = _indexed(np.frombuffer(idx, dtype=np.uint8, count=w * h)
+                        .reshape(h, w), pal, "gif")
         if ipacked & 0x40:  # interlaced: rows arrive in 4 passes
-            order = (list(range(0, h, 8)) + list(range(4, h, 8))
-                     + list(range(2, h, 4)) + list(range(1, h, 2)))
-            deint: list[bytearray] = [bytearray()] * h
-            for src_i, dst_y in enumerate(order):
-                deint[dst_y] = rows[src_i]
+            deint = np.empty_like(rows)
+            deint[_interlace_order(h)] = rows
             rows = deint
         return w, h, rows
     raise ValueError("gif: no image data")
@@ -197,7 +211,7 @@ def decode_gif_gray(data: bytes,
 
 def decode_gif_frames(data: bytes,
                       max_pixels: int = _MAX_PIXELS_DEFAULT,
-                      max_frames: int = 4096) -> tuple[int, int, list[list[bytearray]]]:
+                      max_frames: int = 4096) -> tuple[int, int, list[np.ndarray]]:
     """Animated GIF → full-canvas gray snapshots, one per frame, with the
     GIF89a composition model: sub-region images placed at (left, top),
     transparency holes keeping the underlying pixels, and the Graphic
@@ -212,16 +226,16 @@ def decode_gif_frames(data: bytes,
     if w <= 0 or h <= 0 or w * h > max_pixels:
         raise ValueError("gif: dimensions over cap")
     pos = 13
-    gct: list[int] | None = None
+    gct: np.ndarray | None = None
     if packed & 0x80:
         n = 2 << (packed & 7)
-        gct = _pal_to_gray(data[pos:pos + 3 * n], 3)
+        gct = _palette_luma(data[pos:pos + 3 * n])
         if len(gct) < n:
             raise ValueError("gif: truncated global palette")
         pos += 3 * n
-    bg = gct[bg_index] if gct and bg_index < len(gct) else 255
-    canvas = [bytearray([bg] * w) for _ in range(h)]
-    frames: list[list[bytearray]] = []
+    bg = int(gct[bg_index]) if gct is not None and bg_index < len(gct) else 255
+    canvas = np.full((h, w), bg, dtype=np.uint8)
+    frames: list[np.ndarray] = []
     disposal = 0
     transparent: int | None = None
     while pos < len(data):
@@ -255,7 +269,7 @@ def decode_gif_frames(data: bytes,
         pal = gct
         if ipacked & 0x80:
             n = 2 << (ipacked & 7)
-            pal = _pal_to_gray(data[pos:pos + 3 * n], 3)
+            pal = _palette_luma(data[pos:pos + 3 * n])
             if len(pal) < n:
                 raise ValueError("gif: truncated local palette")
             pos += 3 * n
@@ -274,36 +288,26 @@ def decode_gif_frames(data: bytes,
         idx = _gif_lzw(b"".join(parts), min_code, iw * ih)
         if len(idx) < iw * ih:
             raise ValueError("gif: short pixel data")
-        npal = len(pal)
-        if max(idx[:iw * ih]) >= npal:
-            raise ValueError("gif: pixel index out of palette")
+        sub = np.frombuffer(idx, dtype=np.uint8, count=iw * ih).reshape(ih, iw)
         if ipacked & 0x40:  # interlaced sub-image: reorder its rows
-            order = (list(range(0, ih, 8)) + list(range(4, ih, 8))
-                     + list(range(2, ih, 4)) + list(range(1, ih, 2)))
-            deint = bytearray(iw * ih)
-            for src_i, dst_y in enumerate(order):
-                deint[dst_y * iw:(dst_y + 1) * iw] = idx[src_i * iw:(src_i + 1) * iw]
-            idx = deint
+            deint = np.empty_like(sub)
+            deint[_interlace_order(ih)] = sub
+            sub = deint
+        vals = _indexed(sub, pal, "gif")
         if len(frames) >= max_frames:
             raise ValueError("gif: frame count over cap")
         if (len(frames) + 1) * w * h > MAX_DECODED_BYTES:
             raise ValueError("gif: animation over decode cap")
-        saved = ([bytearray(r) for r in canvas] if disposal == 3 else None)
-        for y in range(ih):
-            row = canvas[top + y]
-            base = y * iw
-            if transparent is None:  # opaque: whole-row slice at C speed
-                row[left:left + iw] = bytes(map(pal.__getitem__,
-                                                idx[base:base + iw]))
-            else:
-                for x in range(iw):
-                    v = idx[base + x]
-                    if v != transparent:
-                        row[left + x] = pal[v]
-        frames.append([bytearray(r) for r in canvas])
+        saved = canvas.copy() if disposal == 3 else None
+        region = canvas[top:top + ih, left:left + iw]
+        if transparent is None:
+            region[:] = vals
+        else:  # transparency holes keep the underlying pixels
+            drawn = sub != transparent
+            region[drawn] = vals[drawn]
+        frames.append(canvas.copy())
         if disposal == 2:  # restore region to background
-            for y in range(ih):
-                canvas[top + y][left:left + iw] = bytes([bg]) * iw
+            region[:] = bg
         elif disposal == 3 and saved is not None:
             canvas = saved
         disposal = 0
@@ -317,10 +321,10 @@ def decode_gif_frames(data: bytes,
 
 def decode_bmp_gray(data: bytes,
                     max_pixels: int = _MAX_PIXELS_DEFAULT
-                    ) -> tuple[int, int, list[bytearray]]:
-    """BMP → gray rows: BI_RGB (1/4/8-bit palette, 24/32-bit) and the
-    BI_RLE8/BI_RLE4 run-length modes (encoded runs, absolute literals,
-    end-of-line/bitmap escapes and position deltas)."""
+                    ) -> tuple[int, int, np.ndarray]:
+    """BMP → (h, w) uint8 gray raster: BI_RGB (1/4/8-bit palette,
+    24/32-bit) and the BI_RLE8/BI_RLE4 run-length modes (encoded runs,
+    absolute literals, end-of-line/bitmap escapes and position deltas)."""
     if data[:2] != b"BM" or len(data) < 54:
         raise ValueError("bmp: bad magic")
     (pix_off,) = struct.unpack_from("<I", data, 10)
@@ -348,7 +352,7 @@ def decode_bmp_gray(data: bytes,
         raise ValueError("bmp: bitfields only supported at 32bpp")
     if w <= 0 or h <= 0 or w * h > max_pixels or w * h > MAX_DECODED_BYTES:
         raise ValueError("bmp: dimensions over cap")
-    pal: list[int] | None = None
+    pal: np.ndarray | None = None
     if bpp <= 8:
         n = clr_used or (1 << bpp)
         if n > 1 << bpp:
@@ -357,11 +361,10 @@ def decode_bmp_gray(data: bytes,
         pal_bytes = data[pal_off:pal_off + 4 * n]
         if len(pal_bytes) < 4 * n:
             raise ValueError("bmp: truncated palette")
-        # palette entries are BGRX
-        pal = [(pal_bytes[i + 2] * 299 + pal_bytes[i + 1] * 587
-                + pal_bytes[i] * 114) // 1000 for i in range(0, 4 * n, 4)]
+        bgrx = np.frombuffer(pal_bytes, dtype=np.uint8).reshape(n, 4)
+        pal = luma601(bgrx[:, 2], bgrx[:, 1], bgrx[:, 0])
     if comp in (1, 2):  # RLE8 / RLE4 (Microsoft BMP spec §RLE)
-        idx = [bytearray(w) for _ in range(h)]  # skipped pixels = index 0
+        idx = np.zeros((h, w), dtype=np.uint8)  # skipped pixels = index 0
         x = y = 0  # y counts from the BOTTOM row (RLE is bottom-up)
         i = pix_off
         n = len(data)
@@ -370,12 +373,12 @@ def decode_bmp_gray(data: bytes,
         while i + 1 < n:
             c, v = data[i], data[i + 1]
             i += 2
-            if c:  # encoded run
-                for k in range(c):
-                    if x < w and y < h:
-                        idx[y][x] = v if comp == 1 else (
-                            (v >> 4) if k & 1 == 0 else (v & 15))
-                    x += 1
+            if c:  # encoded run: one index, or two alternating nibbles
+                if y < h and x < w:
+                    run = min(c, w - x)
+                    idx[y, x:x + run] = v if comp == 1 else np.resize(
+                        np.array((v >> 4, v & 15), dtype=np.uint8), run)
+                x += c
             elif v == 0:  # end of line
                 x, y = 0, y + 1
             elif v == 1:  # end of bitmap
@@ -389,60 +392,39 @@ def decode_bmp_gray(data: bytes,
                 i += 2
             else:  # absolute mode: v literal indices, word-aligned
                 nbytes = ((v + 1) & ~1) if comp == 1 else ((v + 3) // 4) * 2
-                chunk = data[i:i + nbytes]
+                chunk = np.frombuffer(data[i:i + nbytes], dtype=np.uint8)
                 if len(chunk) < nbytes:
                     raise ValueError("bmp: truncated RLE literals")
-                for k in range(v):
-                    if x < w and y < h:
-                        idx[y][x] = chunk[k] if comp == 1 else (
-                            (chunk[k >> 1] >> 4) if k & 1 == 0
-                            else (chunk[k >> 1] & 15))
-                    x += 1
+                if y < h and x < w:
+                    lits = chunk if comp == 1 else _nibbles(chunk)
+                    idx[y, x:x + v] = lits[:min(v, w - x)]
+                x += v
                 i += nbytes
         if not ended:
             raise ValueError("bmp: truncated pixel data")
-        rows = []
-        npal = len(pal)
-        for yy in range(h):
-            src = idx[h - 1 - yy]
-            if max(src) >= npal:
-                raise ValueError("bmp: pixel index out of palette")
-            rows.append(bytearray(pal[v] for v in src))
-        return w, h, rows
+        return w, h, _indexed(idx[::-1], pal, "bmp")
     stride = ((bpp * w + 31) // 32) * 4
     if pix_off + stride * h > len(data):
         raise ValueError("bmp: truncated pixel data")
-    rows: list[bytearray] = []
-    for yy in range(h):
-        src_y = yy if top_down else h - 1 - yy
-        off = pix_off + src_y * stride
-        line = data[off:off + stride]
-        row = bytearray(w)
-        if bpp == 24 or bpp == 32:
-            step = bpp // 8
-            for x in range(w):
-                i = x * step
-                row[x] = (line[i + 2] * 299 + line[i + 1] * 587 + line[i] * 114) // 1000
-        elif bpp == 8:
-            for x in range(w):
-                v = line[x]
-                if v >= len(pal):
-                    raise ValueError("bmp: pixel index out of palette")
-                row[x] = pal[v]
-        elif bpp == 4:
-            for x in range(w):
-                v = (line[x // 2] >> (0 if x & 1 else 4)) & 0xF
-                if v >= len(pal):
-                    raise ValueError("bmp: pixel index out of palette")
-                row[x] = pal[v]
-        else:  # 1-bit
-            for x in range(w):
-                v = (line[x // 8] >> (7 - (x & 7))) & 1
-                if v >= len(pal):
-                    raise ValueError("bmp: pixel index out of palette")
-                row[x] = pal[v]
-        rows.append(row)
-    return w, h, rows
+    lines = np.frombuffer(data, dtype=np.uint8, count=stride * h,
+                          offset=pix_off).reshape(h, stride)
+    if not top_down:
+        lines = lines[::-1]
+    if bpp == 24 or bpp == 32:
+        px = lines[:, :w * (bpp // 8)].reshape(h, w, bpp // 8)
+        return w, h, luma601(px[:, :, 2], px[:, :, 1], px[:, :, 0])
+    if bpp == 8:
+        ix = lines[:, :w]
+    elif bpp == 4:
+        ix = _nibbles(lines)[:, :w]
+    else:  # 1-bit, MSB-first
+        ix = np.unpackbits(lines, axis=1)[:, :w]
+    return w, h, _indexed(ix, pal, "bmp")
+
+
+def _nibbles(a: np.ndarray) -> np.ndarray:
+    """Packed 4-bit indices, high nibble first, along the last axis."""
+    return np.stack((a >> 4, a & 15), axis=-1).reshape(*a.shape[:-1], -1)
 
 
 # ------------------------------------------------------------------ TIFF
@@ -496,8 +478,8 @@ def _tiff_ifd0(data: bytes, end: str) -> dict[int, list[int]]:
 
 def decode_tiff_gray(data: bytes,
                      max_pixels: int = _MAX_PIXELS_DEFAULT,
-                     bilevel: bool = False) -> tuple[int, int, list[bytearray]]:
-    """Baseline TIFF 6.0 (first IFD) → 8-bit gray rows.
+                     bilevel: bool = False) -> tuple[int, int, np.ndarray]:
+    """Baseline TIFF 6.0 (first IFD) → (h, w) uint8 gray raster.
 
     Supported: both byte orders; PhotometricInterpretation 0/1 (gray,
     either polarity), 2 (RGB, chunky), 3 (palette); BitsPerSample 1 or
@@ -557,18 +539,17 @@ def decode_tiff_gray(data: bytes,
             raise ValueError("tiff: non-8-bit RGB unsupported")
     else:
         raise ValueError(f"tiff: photometric {photo} unsupported")
-    pal: list[int] | None = None
+    pal: np.ndarray | None = None
     if photo == 3:
         cmap = tags.get(320)
         if not cmap or len(cmap) != 3 * 256:
             raise ValueError("tiff: missing/short color map")
-        # ColorMap planes are 16-bit R,G,B — fold to 8-bit luma
-        pal = [((cmap[i] >> 8) * 299 + (cmap[256 + i] >> 8) * 587
-                + (cmap[512 + i] >> 8) * 114) // 1000 for i in range(256)]
+        pal = _tiff_colormap_luma(cmap)
     if len(offs) != len(counts):
         raise ValueError("tiff: strip offsets/counts mismatch")
     stride = (w * spp * bps + 7) // 8
-    rows: list[bytearray] = []
+    strips: list[np.ndarray] = []
+    done = 0
     gate = _BimodalGate()
     for si, (so, sc) in enumerate(zip(offs, counts)):
         if so + sc > len(data) or sc > MAX_DECODED_BYTES:
@@ -588,42 +569,44 @@ def decode_tiff_gray(data: bytes,
             raw = _packbits(raw, stride * nrows)
         if len(raw) < stride * nrows:
             raise ValueError("tiff: short strip")
-        for y in range(nrows):
-            line = bytearray(raw[y * stride:(y + 1) * stride])
-            if pred == 2:
-                for i in range(spp, w * spp):
-                    line[i] = (line[i] + line[i - spp]) & 0xFF
-            if bps == 1:
-                row = bytearray(
-                    255 * ((line[x >> 3] >> (7 - (x & 7))) & 1) for x in range(w))
-                if photo == 0:  # WhiteIsZero: bit set = black
-                    row = bytearray(255 - v for v in row)
-            elif photo == 2:
-                row = bytearray(
-                    (line[3 * x] * 299 + line[3 * x + 1] * 587
-                     + line[3 * x + 2] * 114) // 1000 for x in range(w))
-            elif photo == 3:
-                row = bytearray(pal[v] for v in line[:w])
-            else:
-                row = line[:w]
-                if photo == 0:
-                    row = bytearray(255 - v for v in row)
-            # photo/gradient aborts via the shared gate; mid-gray
-            # confined to antialiased stroke edges decodes through
-            if bilevel and not gate.feed(row):
-                raise ValueError("tiff: not a bilevel text render")
-            rows.append(row)
-    if len(rows) < h:
+        lines = np.frombuffer(raw, dtype=np.uint8, count=stride * nrows).reshape(nrows, stride)
+        if pred == 2:  # undo horizontal differencing: per-sample running sum
+            lines = np.cumsum(lines.reshape(nrows, w, spp), axis=1,
+                              dtype=np.uint8).reshape(nrows, stride)
+        if bps == 1:
+            block = np.unpackbits(lines, axis=1)[:, :w] * np.uint8(255)
+        elif photo == 2:
+            px = lines.reshape(nrows, w, 3)
+            block = luma601(px[:, :, 0], px[:, :, 1], px[:, :, 2])
+        elif photo == 3:
+            block = pal[lines[:, :w]]
+        else:
+            block = lines[:, :w]
+        if photo == 0:  # WhiteIsZero: 0 = white
+            block = 255 - block
+        # photo/gradient aborts via the shared gate; mid-gray confined
+        # to antialiased stroke edges decodes through
+        if bilevel and not gate.feed(block):
+            raise ValueError("tiff: not a bilevel text render")
+        strips.append(block)
+        done += nrows
+    if done < h:
         raise ValueError("tiff: missing strips")
-    return w, h, rows[:h]
+    return w, h, np.concatenate(strips)
+
+
+def _tiff_colormap_luma(cmap: list[int]) -> np.ndarray:
+    """ColorMap planes (16-bit R, G, B × 256) → 8-bit luma per index."""
+    c = np.array(cmap, dtype=np.uint32) >> 8
+    return luma601(c[:256], c[256:512], c[512:])
 
 
 # ------------------------------------------------------------------ router
 
 def decode_raster_gray(data: bytes,
                        max_pixels: int = _MAX_PIXELS_DEFAULT
-                       ) -> tuple[str, int, int, list[bytearray]]:
-    """Sniff + decode: (format, width, height, gray rows). ValueError on
+                       ) -> tuple[str, int, int, np.ndarray]:
+    """Sniff + decode: (format, width, height, (h, w) uint8 gray). ValueError on
     formats without a from-scratch decoder (lossy webp/wmf/emf/svg) or
     on malformed input — per-row containment upstream (C7)."""
     from documentconvert_spark.kernels.media import sniff_image_meta
@@ -649,31 +632,27 @@ def decode_raster_gray(data: bytes,
 
 # ------------------------------------------------------------------ dhash
 
-def dhash64(w: int, h: int, rows: list) -> int:
-    """Difference hash over gray rows: integer area-downsample to a 9×8
-    cell grid, one bit per horizontal gradient (cell brighter than its
-    right neighbor), returned as a SIGNED int64 (two's complement) so the
-    value survives parquet/Spark/DuckDB round-trips bit-exactly.
+def dhash64(w: int, h: int, gray) -> int:
+    """Difference hash over a gray raster: integer area-downsample to a
+    9×8 cell grid, one bit per horizontal gradient (cell brighter than
+    its right neighbor), returned as a SIGNED int64 (two's complement) so
+    the value survives parquet/Spark/DuckDB round-trips bit-exactly.
 
     Pure integer math end-to-end: a source grid and its lossless-codec
     round-trip (PNG/GIF/BMP/TIFF/VP8L) hash identically, which is what
     lets the image-dedup oracle recompute signatures from source grids
-    while Spark recomputes them from encoded bytes."""
+    (any (h, w) array-like of 0..255, e.g. a list of bytearrays) while
+    Spark recomputes them from encoded bytes. Cell sums accumulate in
+    int64, so no cell can wrap."""
     if w < 9 or h < 8:
         raise ValueError("dhash: image smaller than the 9x8 grid")
-    cells = []
-    for gy in range(8):
-        y0, y1 = gy * h // 8, (gy + 1) * h // 8
-        crow = []
-        for gx in range(9):
-            x0, x1 = gx * w // 9, (gx + 1) * w // 9
-            # slice-sum runs at C speed — this is the per-image hot path
-            # of the dedup signature pass
-            s = sum(sum(rows[yy][x0:x1]) for yy in range(y0, y1))
-            crow.append(s // ((y1 - y0) * (x1 - x0)))
-        cells.append(crow)
-    bits = 0
-    for gy in range(8):
-        for gx in range(8):
-            bits = (bits << 1) | (1 if cells[gy][gx] > cells[gy][gx + 1] else 0)
+    a = np.asarray(gray, dtype=np.uint8)[:h, :w]
+    ys = np.arange(9) * h // 8
+    xs = np.arange(10) * w // 9
+    # cell edges strictly increase (h >= 8, w >= 9): reduceat sums each
+    # [edge, next edge) span, the last one running to the raster end
+    sums = np.add.reduceat(np.add.reduceat(a, ys[:-1], axis=0, dtype=np.int64),
+                           xs[:-1], axis=1)
+    cells = sums // (np.diff(ys)[:, None] * np.diff(xs)[None, :])
+    bits = int.from_bytes(np.packbits(cells[:, :8] > cells[:, 1:]).tobytes(), "big")
     return bits - (1 << 64) if bits >= 1 << 63 else bits

@@ -378,8 +378,11 @@ def semdedup_prune_hierarchical(emb_df, k1: int, k2: int, tau: float = 0.4,
     pins (the whole corpus's vectors) — callers that materialize the
     prune set MUST unpersist it afterwards or it stays cached for the
     app lifetime (same protocol as functions.unigram_logprob_table).
-    persist=False skips the cache — for stateless callers (the contract
-    query) that cannot unpersist."""
+    Without the handle (the default) the cache still serves the leaf
+    training rounds and is released before returning, so the lazy prune
+    set recomputes the coarse assignment once instead of pinning the
+    corpus's vectors for the app lifetime. persist=False skips the cache
+    entirely — for stateless callers (the contract query)."""
     vecs, leaves = train_two_level_kmeans(
         emb_df, k1=k1, k2=k2, iters=iters, persist=persist
     )
@@ -397,4 +400,8 @@ def semdedup_prune_hierarchical(emb_df, k1: int, k2: int, tau: float = 0.4,
         )
     )
     out = _semdedup_pairs(assign, tau)
-    return (out, vecs) if return_cache_handle else out
+    if return_cache_handle:
+        return out, vecs
+    if persist:
+        vecs.unpersist()  # no caller handle: never leave it cached
+    return out

@@ -46,7 +46,10 @@ def _seed_docs() -> list[tuple[str, str, bytes]]:
     """(name, route, bytes) — every dispatch route gets real seeds."""
     seeds = []
     extra = os.path.join(REPO, "documentconvert_spark", "resources", "extra_docs")
-    dirs = [REF_TEST_DIR] + ([extra] if os.path.isdir(extra) else [])
+    dirs = [d for d in (REF_TEST_DIR, extra) if os.path.isdir(d)]
+    if REF_TEST_DIR not in dirs:
+        print(f"fuzz: {REF_TEST_DIR} not present; seeding from the in-repo "
+              f"fixtures only", file=sys.stderr)
     for d in dirs:
         for fn in sorted(os.listdir(d)):
             with open(os.path.join(d, fn), "rb") as f:
@@ -526,8 +529,10 @@ def _run_chunk(seed_name: str, lo: int, hi: int) -> None:
         # drives the pixel decoders directly (the image dispatch only
         # decodes pixels for OCR-gated png/jpeg; gif/bmp pixel paths are
         # reached through the media stats op) — same containment contract
-        _fmt, w, h, rows = decode_raster_gray(data)
-        return [Span("figure", f"{w}x{h}:{sum(rows[0]) if rows else 0}", "", 0)]
+        _fmt, w, h, gray = decode_raster_gray(data)
+        # ndarray.sum accumulates in a wide integer; a Python sum over
+        # uint8 scalars can wrap
+        return [Span("figure", f"{w}x{h}:{int(gray[0].sum())}", "", 0)]
 
     def video_route(data: bytes) -> list:
         from documentconvert_spark.kernels.media import decode_avi_frames

@@ -16,7 +16,6 @@ import urllib.parse
 
 sys.path.insert(0, "/root/repo")
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
@@ -125,12 +124,11 @@ def main() -> None:
             pixel_rows["media_ref"].append(ref)
             try:
                 dfmt, dw, dh, gray = decode_raster_gray(blob)
-                arr = np.frombuffer(b"".join(bytes(r) for r in gray), dtype=np.uint8)
                 pixel_rows["format"].append(dfmt)
                 pixel_rows["width"].append(dw)
                 pixel_rows["height"].append(dh)
-                pixel_rows["mean_luma"].append(round(float(arr.mean()), 3))
-                pixel_rows["dark_frac"].append(round(float((arr < 128).mean()), 3))
+                pixel_rows["mean_luma"].append(round(float(gray.mean()), 3))
+                pixel_rows["dark_frac"].append(round(float((gray < 128).mean()), 3))
                 pixel_rows["error"].append(None)
             except Exception as exc:  # noqa: BLE001 — containment parity
                 pixel_rows["format"].append("unknown")

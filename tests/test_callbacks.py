@@ -509,6 +509,54 @@ def test_host_shards_split_skewed_host_layout_and_semantics(spark, tmp_path, cal
     assert pending_callbacks(store, log, "http://cb.example/hook").count() == 0
 
 
+def test_host_case_variants_share_partition_cap_and_pacing(spark, tmp_path):
+    """Host names are case-insensitive: URLs for one receiver that differ
+    only in host case (and port) must land in one dispatch partition,
+    count against one max_per_host budget and pace as one host."""
+    from pyspark.sql import functions as F
+
+    from documentconvert_spark.callbacks import _dispatch_partitioning
+
+    urls = ["http://CB.Example/hook", "http://cb.example/hook",
+            "http://cb.EXAMPLE:8080/other"]
+    rows = spark.createDataFrame(
+        [(f"d{i}", "completed", 1, 1, u) for i, u in enumerate(urls)],
+        "doc_id string, status string, n_spans int, attempt int, callback_url string",
+    ).withColumn("error_class", F.lit(None).cast("string")).withColumn(
+        "src_run_id", F.lit("r1"))
+    laid = _dispatch_partitioning(rows, 1).withColumn("p", F.spark_partition_id()).collect()
+    assert {r.dispatch_host for r in laid} == {"cb.example"}
+    assert len({r.p for r in laid}) == 1
+
+    class _State:  # per-row callback_url column, as pending_callbacks allows
+        def latest(self):
+            return rows
+
+    sleeps = str(tmp_path / "sleeps")
+    os.makedirs(sleeps)
+
+    def recording_sleep(seconds):
+        import uuid as _uuid
+
+        with open(os.path.join(sleeps, "s_" + _uuid.uuid4().hex), "w") as f:
+            f.write(str(seconds))
+
+    calls = str(tmp_path / "calls")
+    os.makedirs(calls)
+    log = CallbackLog(spark, str(tmp_path / "cblog"))
+    dispatch_callbacks(_State(), log, transport=_recording_ok_transport(calls),
+                       sleep=recording_sleep, per_post_delay_s=0.5)
+    assert len(_read_calls(calls)) == 3
+    # three consecutive POSTs to one host: a pause before the 2nd and 3rd
+    assert sorted(open(os.path.join(sleeps, n)).read()
+                  for n in os.listdir(sleeps)) == ["0.5", "0.5"]
+    # and one max_per_host budget across the case variants
+    log2 = CallbackLog(spark, str(tmp_path / "cblog2"))
+    dispatch_callbacks(_State(), log2, transport=_recording_ok_transport(calls),
+                       sleep=lambda _: None, max_per_host=2)
+    assert {r.doc_id for r in log2.read().collect()} == {"d0", "d1"}
+
+
 def test_max_per_host_caps_per_run_and_spills_to_next(spark, tmp_path, call_dir):
     """max_per_host delivers the N lowest doc_ids per host per dispatch
     run; the remainder stays pending (the anti-join resume IS the

@@ -1,0 +1,90 @@
+"""Repo-only golden guard for the 33 in-repo real-format fixtures
+(resources/extra_docs): every fixture's spans must equal the committed
+expectation parquet byte for byte, and every image fixture's decoded gray
+raster is pinned by shape, MD5 and dhash64.
+
+Unlike tests/test_real_documents.py this module needs nothing outside the
+repository, so it always runs. The raster pins were recorded from the
+per-row decoders before the array-native rewrite; any drift in a decoder
+(PNG unfilter, JPEG IDCT, VP8L transforms, TIFF predictor, BMP/GIF
+palettes) shows up here even when the OCR text still happens to match.
+"""
+
+from __future__ import annotations
+
+import hashlib
+import os
+
+import numpy as np
+import pyarrow.parquet as pq
+
+from documentconvert_spark.kernels.detect import (
+    extract_image_any,
+    extract_office_any,
+    extract_pdf_any,
+)
+from documentconvert_spark.kernels.raster import decode_raster_gray, dhash64
+
+RES = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "documentconvert_spark", "resources",
+)
+EXTRA = os.path.join(RES, "extra_docs")
+IMAGE_EXTS = ("png", "jpg", "jpeg", "gif", "bmp", "tiff", "webp")
+
+# name → (width, height, md5 of the row-major uint8 raster, dhash64)
+RASTER_PINS = {
+    "fixture_gradient.bmp": (80, 50, "b871e4318211181593d4d01cfd1eee58", 297609347775602772),
+    "fixture_mosaic.tiff": (90, 60, "1dfa1811e1a0f0252cec45c5d1f3b004", 3906369333255087654),
+    "fixture_ocr_aa_label.png": (170, 46, "ae47186cca9c3d3f0ad9163d96362770", 10314469602932736),
+    "fixture_ocr_aa_plate.tiff": (206, 46, "a05f681b9bb75785c79bb4530bfb7aa8", 47350092886364672),
+    "fixture_ocr_aa_tag.webp": (247, 61, "c5dc9ebbedea57effcecc38be0aeeee5", 38751790452740268),
+    "fixture_ocr_badge.png": (337, 85, "a6684b9bb549058c524973f45fe0135d", 3470182721566649773),
+    "fixture_ocr_card.jpg": (278, 62, "92754aebcb5770406186184c19fc018e", 47472671556939776),
+    "fixture_ocr_crate.tiff": (206, 46, "babda9ef06c92b6d5272da75fcdd7372", 56449262861725696),
+    "fixture_ocr_kerned.png": (206, 30, "3af3ad90592ebf29f676deab46f0d09c", 148238959247360),
+    "fixture_ocr_mixed_scale.png": (301, 73, "5fd97e3713a9c65b4504cb34505a2fcb", -1322188963367573368),
+    "fixture_ocr_note.png": (230, 62, "2a20a60b3c82bf68cf84ac587672b90a", 58776209329509376),
+    "fixture_ocr_panel.bmp": (218, 46, "68835ed78359fe991f50ec514cf9e6de", 47477499596810752),
+    "fixture_ocr_prop.png": (246, 46, "7b7e875b980b3b154d1f343b54a21837", 46608168424462848),
+    "fixture_ocr_scan.jpg": (230, 46, "892b2f98f07d69e30f2fd0f4ef2aaa98", 29916108038377472),
+    "fixture_ocr_sign.gif": (158, 46, "ac6af50578f4df02516a1b905fe5ae7e", 24023614433824768),
+    "fixture_ocr_tag.webp": (206, 46, "5705bcaa9763243d478d311f020b7c38", 48528241331972608),
+    "fixture_swatch.webp": (72, 40, "3811bf52e082182d9cc97e12d6b2ab77", 1537040931237827669),
+    "fixture_tiles.gif": (96, 64, "52ce8487e882d6949e05a74821d3affc", 7915978101100357156),
+}
+
+
+def _kernel(name: str):
+    ext = name.rsplit(".", 1)[-1]
+    if ext == "pdf":
+        return extract_pdf_any
+    if ext in IMAGE_EXTS:
+        return extract_image_any
+    return extract_office_any
+
+
+def test_extra_docs_match_goldens_and_raster_pins():
+    names = sorted(os.listdir(EXTRA))
+    assert len(names) == 33
+    assert sorted(n for n in names if n.rsplit(".", 1)[-1] in IMAGE_EXTS) == sorted(RASTER_PINS)
+    tbl = pq.read_table(os.path.join(RES, "expected_real_spans.parquet")).to_pydict()
+    expected: dict[str, list[tuple]] = {}
+    for i, did in enumerate(tbl["doc_id"]):
+        expected.setdefault(did, []).append(
+            (tbl["offset"][i], tbl["kind"][i], tbl["media_ref"][i], tbl["text"][i]))
+    for name in names:
+        with open(os.path.join(EXTRA, name), "rb") as fh:
+            data = fh.read()
+        assert name in expected, f"no golden rows for {name}"
+        got = [(s.offset, s.kind, s.media_ref, s.text) for s in _kernel(name)(data)]
+        assert got == sorted(expected[name]), f"span mismatch for {name}"
+        if name not in RASTER_PINS:
+            continue
+        w, h, md5, dh = RASTER_PINS[name]
+        _fmt, dw, dhh, gray = decode_raster_gray(data)
+        assert (dw, dhh) == (w, h), name
+        assert isinstance(gray, np.ndarray) and gray.dtype == np.uint8, name
+        assert gray.shape == (h, w), name
+        assert hashlib.md5(np.ascontiguousarray(gray).tobytes()).hexdigest() == md5, name
+        assert dhash64(w, h, gray) == dh, name

@@ -45,7 +45,7 @@ def test_progressive_equals_baseline(w, h, seed, restart, ycbcr420):
     base = decode_jpeg_gray(encode_gray_jpeg(w, h, grid))
     prog = decode_jpeg_gray(encode_gray_jpeg_progressive(
         w, h, grid, restart=restart, ycbcr420=ycbcr420))
-    assert base == prog
+    assert base[:2] == prog[:2] and (base[2] == prog[2]).all()
 
 
 def test_progressive_flat_image_is_eob_runs_only():

@@ -69,7 +69,7 @@ def test_all_scanline_filters_decode():
 
     out = bytearray()
     prev = bytearray(w)
-    for y, row in enumerate(rows):
+    for y, row in enumerate(rows.tolist()):
         ft = (y % 4) + 1
         out.append(ft)
         for i, v in enumerate(row):
@@ -403,11 +403,42 @@ def test_kerned_overlap_needs_component_boxes():
     # pin that the COLUMN pass alone cannot decode this render — the
     # component fallback is load-bearing, not decorative
     w, h, gray = decode_png_gray(png, bilevel=True)
-    ink = [[p < 128 for p in row] for row in gray]
-    ys = [y for y in range(h) if any(ink[y])]
+    ink = gray < 128
+    ys = [y for y in range(h) if ink[y].any()]
     b0, b1 = ys[0], ys[-1] + 1
     s = (b1 - b0) // 7
     assert _match_boxes(ink, _boxes_by_columns(ink, b0, b1, w), s) is None
+
+
+def test_narrow_kerned_overlap_below_retry_threshold_rejected_not_misread():
+    """Documented gap of ocr_gray_text: the component retry fires only
+    when some column box is wider than GLYPH_W × min(all_quotients). A
+    '.' with a dash kerned under it merges into one column box exactly
+    5s wide, so the retry never runs and the render is rejected to
+    figure-only — even though component boxes alone would read it. The
+    gap costs a decode, never produces wrong text."""
+    from documentconvert_spark.corpus import render_text_png_prop
+    from documentconvert_spark.kernels.miniocr import (
+        GLYPH_H,
+        GLYPH_W,
+        _boxes_by_columns,
+        _boxes_by_components,
+        _match_boxes,
+        decode_png_gray,
+        ocr_png_text,
+    )
+
+    png = render_text_png_prop(["AB.-CD"], scale=2, kern={(0, 3): -3})
+    w, h, gray = decode_png_gray(png)
+    ink = gray < 128
+    ys = [y for y in range(h) if ink[y].any()]
+    b0, b1 = ys[0], ys[-1] + 1
+    s = (b1 - b0) // GLYPH_H
+    boxes = _boxes_by_columns(ink, b0, b1, w)
+    assert len(boxes) == 5  # '.' and '-' share one column box ...
+    assert max(x1 - x0 for x0, x1, *_ in boxes) <= GLYPH_W * s  # ... not "wide"
+    assert _match_boxes(ink, _boxes_by_components(ink, b0, b1, w), s) == "AB.-CD"
+    assert ocr_png_text(png) == []
 
 
 def test_kerned_touching_ink_rejected_not_misread():

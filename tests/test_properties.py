@@ -203,7 +203,7 @@ def test_vp8l_roundtrip_property(w, h, shape, rnd):
     import struct as _st
     (ln,) = _st.unpack_from("<I", data, 16)
     dw, dh, pix = decode_vp8l(data[20:20 + ln])
-    assert (dw, dh, pix) == (w, h, argb)
+    assert (dw, dh, pix.tolist()) == (w, h, argb)
     # and the gray route agrees with a direct luma fold
     _, _, rows = decode_webp_gray(data)
     for y in range(h):

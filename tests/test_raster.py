@@ -649,6 +649,39 @@ def test_dhash64_determinism_and_bounds():
         dhash64(8, 4, [bytearray(8)] * 4)
 
 
+def test_dhash64_matches_scalar_reference():
+    """The array dhash (int64 reduceat cell sums) equals the per-cell
+    Python-int loop it replaced, on random rasters whose sizes do not
+    divide evenly into the 9×8 grid — including all-255 rasters, where
+    a cell sum overflows any 16-bit accumulator."""
+    import numpy as np
+
+    from documentconvert_spark.kernels.raster import dhash64
+
+    def reference(w, h, rows):
+        cells = []
+        for gy in range(8):
+            y0, y1 = gy * h // 8, (gy + 1) * h // 8
+            crow = []
+            for gx in range(9):
+                x0, x1 = gx * w // 9, (gx + 1) * w // 9
+                s = sum(int(v) for yy in range(y0, y1) for v in rows[yy][x0:x1])
+                crow.append(s // ((y1 - y0) * (x1 - x0)))
+            cells.append(crow)
+        bits = 0
+        for gy in range(8):
+            for gx in range(8):
+                bits = (bits << 1) | (1 if cells[gy][gx] > cells[gy][gx + 1] else 0)
+        return bits - (1 << 64) if bits >= 1 << 63 else bits
+
+    rng = np.random.default_rng(5)
+    for w, h in ((9, 8), (10, 9), (37, 23), (64, 48), (301, 73)):
+        gray = rng.integers(0, 256, size=(h, w), dtype=np.uint8)
+        assert dhash64(w, h, gray) == reference(w, h, gray.tolist())
+    full = np.full((300, 300), 255, dtype=np.uint8)
+    assert dhash64(300, 300, full) == reference(300, 300, full.tolist()) == 0
+
+
 def test_pixel_golden_matches_source_derived_stats():
     """expected_real_pixels.parquet is decoder-generated; this pins it to
     stats derived purely from the SOURCE rasters the fixture generator

@@ -656,6 +656,34 @@ def test_mp4_mdhd_version1_timescale_offset():
     assert (w, h, len(frames), fps) == (16, 16, 2, 0.0)
 
 
+def test_bimodal_gate_block_feed_equals_row_feed():
+    """TIFF feeds the gate one decoded strip at a time: a block verdict
+    must equal feeding its rows one by one and stopping at the first
+    False, with the same running state afterwards."""
+    import numpy as np
+
+    from documentconvert_spark.kernels.miniocr import _BimodalGate
+
+    rng = np.random.default_rng(3)
+    for trial in range(200):
+        h, w = int(rng.integers(1, 60)), int(rng.integers(1, 40))
+        mid_rows = rng.random(h) < rng.random()
+        raster = np.where(mid_rows[:, None],
+                          rng.integers(33, 224, size=(h, w)),
+                          rng.choice([0, 255], size=(h, w))).astype(np.uint8)
+        rows = _BimodalGate()
+        row_verdict = True
+        for r in raster:
+            if not rows.feed(r):
+                row_verdict = False
+                break
+        block = _BimodalGate()
+        cut = int(rng.integers(0, h + 1))
+        block_verdict = block.feed(raster[:cut]) and block.feed(raster[cut:])
+        assert block_verdict == row_verdict, trial
+        assert (block.mid, block.total, block.run) == (rows.mid, rows.total, rows.run)
+
+
 def test_bimodal_gate_run_rule_bounds_letterboxed_photos():
     from documentconvert_spark.kernels.miniocr import _BimodalGate
 

@@ -35,7 +35,7 @@ def _roundtrip(w, h, argb, **kw):
     (ln,) = struct.unpack_from("<I", data, 16)
     dw, dh, pix = decode_vp8l(data[20:20 + ln])
     assert (dw, dh) == (w, h)
-    return pix
+    return pix.tolist()
 
 
 @pytest.mark.parametrize("w,h", [(1, 1), (8, 5), (31, 17), (64, 64)])
