@@ -45,55 +45,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # Ordering matters: the driver's correctness gate checks the FIRST 50
 # entries. _WINDOW pins those 50 by name (tests assert the invariant), so
-# a registry edit can't silently de-verify anything. Rotation history:
-#   r1: relational/tpch family (40 green, CORRECTNESS_r01.json)
-#   r2: extraction + corpus + events + 5 dtype-fixed relational (50/50 green)
-#   r3: swap OUT ev_retention/ev_funnel/token_stats/lang_id/text_quality
-#       (keep their green r2 rows), swap IN the 3 never-driver-verified
-#       queries (ann_ivf_buckets, multimodal_features,
-#       filter_url_blocklist) and the new real_ocr_text +
-#       real_pixel_stats; late-r3 second rotation: swap OUT
-#       tpch_q12s/a3_batch_tallies/a_pivot/f_array_ops/dq_checks (green
-#       in r2) for the five media queries added after the window froze
-#       (real_video_frames, real_audio_stats, dedup_video_frames,
-#       dedup_audio_fingerprint, real_video_keyframes) — after r3 every
-#       contract query has a green driver row.
-#   r4: swap OUT multimodal_meta/multimodal_frames (green in r3), swap IN
-#       the two queries added after the r3 window froze
-#       (dedup_image_phash, real_gif_frames) — closing the last two
-#       never-driver-verified rows. tests/test_contract.py now asserts
-#       every registry query is either green in a committed
-#       CORRECTNESS_r*.json or present in the current window, so a future
-#       post-window addition fails CI instead of silently accruing debt.
-#       Mid-r4 additions rotated in the same way: ann_ivf_trained +
-#       ann_ivf_trained_recall replace scrub_pii/quality_repetition
-#       (green in r3); real_mp4_frames replaces ev_map_ops (green in
-#       r2). real_video_frames STAYS in-window because the MP4 routing
-#       changed its vid-005 containment string — the driver must re-check
-#       the new golden, not coast on the r3 row. tfidf_topk +
-#       quality_unigram_logprob replace ev_interval_join/ev_props_json
-#       (green in r2). Late-r4 batch: the six new corpus ops
-#       (cap_per_source, filter_length_outliers, emb_pq_codes,
-#       emb_pq_adc_topk, emb_pq_refine_topk, emb_pq_recall) replace
-#       ev_sessionize/ev_asof_join/ev_window_rollup/dedup_exact/
-#       dedup_simhash/token_bpeish (all green in r3). Final r4 batch: the
-#       four curation ops added in-session (decontaminate_bloom,
-#       mix_source_weights, semdedup_prune, dedup_boilerplate_spans)
-#       replace spans_input_stats/w1_redensify/j3_media_join/
-#       extract_kind_counts (all green in r3, code untouched since);
-#       then dedup_exact_substrings + dsir_importance replace
-#       dedup_span_paragraphs/dedup_minhash_capped (green in r3,
-#       untouched); then perplexity_buckets + quality_gopher_gate
-#       replace pipeline_e2e/sample_stratified (green in r3, code
-#       untouched since); then curation_funnel (the composed
-#       dedup→gopher→ppl pipeline) replaces decontaminate_overlap
-#       (green in r3, untouched).
-#   r5: semdedup_hier_prune (the two-level-quantizer production path,
-#       full unrolled DuckDB oracle) replaces filter_url_blocklist
-#       (green in r4, code untouched since). The real_* family and
-#       semdedup_prune STAY in-window because round 5 changed their
-#       code/goldens (proportional-OCR fixtures, shared semdedup op) —
-#       the driver must re-check them, not coast on the r4 rows.
+# a registry edit can't silently de-verify anything.
 _WINDOW: tuple[str, ...] = (
     "real_av_meta", "real_image_meta", "dedup_exact_substrings",
     "real_docs_span_seq", "real_docs_summary", "real_ocr_text",

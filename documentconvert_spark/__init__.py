@@ -11,5 +11,3 @@ pure-Python kernels vectorized over Arrow batches.
 """
 
 __version__ = "0.1.0"
-
-SPAN_KINDS = ("heading", "paragraph", "code", "table", "figure", "formula")

@@ -350,22 +350,3 @@ def dispatch_callbacks(
 
     results = todo.mapInPandas(deliver, schema=CALLBACK_LOG)
     return log.append(results)
-
-
-def with_callback_status(state: StateStore, log: CallbackLog) -> DataFrame:
-    """Latest state row per doc joined with its latest delivery result —
-    the reference's task ``to_dict`` view (`models.py:120-123`)."""
-    w = Window.partitionBy("doc_id").orderBy(F.desc_nulls_last("callback_time"))
-    latest_log = (
-        log.read()
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(
-            "doc_id",
-            "callback_url",
-            "callback_status_code",
-            "callback_message",
-            "callback_time",
-        )
-    )
-    return state.latest().join(latest_log, "doc_id", "left")

@@ -390,11 +390,6 @@ def corpus_rows(docs: list[RawDoc]) -> list[tuple]:
     ]
 
 
-def expected_rows(docs: list[RawDoc]) -> list[tuple]:
-    """Rows matching the documents_spans schema (FIXTURES.md Table 2)."""
-    return [(d.doc_id, [s.as_dict() for s in d.expected]) for d in docs]
-
-
 # -- rendered-text PNG (the OCR fixture generator) ----------------------------
 # Generator side of the miniocr golden split: renders lines of the shared
 # public-style 5×7 font into a real PNG with its own encoder (IHDR/IDAT,

@@ -17,18 +17,12 @@ TOKS = "split(lower(trim(text)), '\\\\s+')"
 SQL_TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
 
 # first-8-token prefix fingerprint (near-dup collapse at head)
-PREFIX_FP = f"md5(concat_ws(' ', slice({TOKS}, 1, 8)))"
 SQL_PREFIX_FP = f"md5(array_to_string({SQL_TOKS}[1:8], ' '))"
 
 # quality score in [0,1]: token-count saturation × (1 - punct density).
 # nullif guards the length-0 edge: ANSI mode (Spark 4 default) turns a
 # bare /0 into a job-aborting error; an empty doc must score NULL (and
 # fall out of any quality >= t filter), not kill the job.
-QUALITY = (
-    f"round(least(1.0, size({TOKS}) / 100.0) * "
-    "(1.0 - (length(text) - length(regexp_replace(text, '[.,;:!?]', ''))) "
-    "/ nullif(length(text), 0)), 6)"
-)
 SQL_QUALITY = (
     f"ROUND(LEAST(1.0, len({SQL_TOKS}) / 100.0) * "
     "(1.0 - (length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))) "
@@ -46,9 +40,10 @@ def with_curation_columns(docs):
     """Stage the token array ONCE (the split is the expensive expression;
     an explicit intermediate beats relying on codegen subexpression
     elimination, ~20% at sf0.1) and derive fingerprint / n_tokens /
-    quality from the staged columns. Same math as QUALITY / PREFIX_FP —
-    this is the Spark-side single source both the contract query
-    (q_pipeline_e2e) and the production job (run_curate) call."""
+    quality from the staged columns. Same math as the DuckDB oracle's
+    SQL_QUALITY / SQL_PREFIX_FP — this is the Spark-side single source
+    both the contract query (q_pipeline_e2e) and the production job
+    (run_curate) call."""
     from pyspark.sql import functions as F
 
     staged = docs.select(
@@ -309,33 +304,6 @@ def source_mix_rates(docs, budget_mille: int = 500):
         )
         .select("source", "src_tokens", "sample_mille")
     )
-
-
-# P5: result-file filter (reference gradio_app.py:180-219) — pick the main
-# conversion artifact among an output listing: expected extension, none of
-# the temp/intermediate markers, bounded name length, no 32+ hex run
-# (hash-named intermediates). Pure column expression, pushdown-friendly.
-_P5_EXCLUDES = (
-    "temp", "tmp", "cache", "intermediate", "partial", "processing",
-    "backup", "log", ".bak", "debug", "test", "sample", "example", "draft",
-    "copy", "duplicate", "version", "v1", "v2", "old", "new", "original",
-    "converted_", "output_", "result_", "final_", "processed_",
-)
-
-
-def is_main_result_file(name_col, expected_exts: tuple[str, ...] = (".md", ".json")):
-    """Boolean Column: is this output file the MAIN conversion result?"""
-    from pyspark.sql import functions as F
-
-    low = F.lower(name_col)
-    ok = F.lit(False)
-    for ext in expected_exts:
-        ok = ok | low.endswith(ext)
-    for pat in _P5_EXCLUDES:
-        ok = ok & ~low.contains(pat)
-    ok = ok & (F.length(name_col) <= 100)
-    ok = ok & ~low.rlike("[a-f0-9]{32,}")
-    return ok
 
 
 # --- CCNet-style perplexity bucketing ---------------------------------

@@ -1,1 +1,1 @@
-"""Extended operator packs: multimodal media handling, streaming, etc."""
+"""Extended operator packs: multimodal media, dedup, ANN and skew helpers."""

@@ -1,64 +1,20 @@
-"""Skew-aware aggregation helpers (SURVEY.md §4 custom physical work).
+"""Skew-aware helpers (SURVEY.md §4 custom physical work).
 
-Hot grouping keys make one reducer partition dominate a shuffle. The
-standard counter is salting: split each key into `n_salt` subkeys, do a
-partial aggregate on (key, salt), then a cheap final aggregate on key.
-Spark's hash aggregate already does map-side partial aggregation, which
-covers *count/sum* skew — salting matters when the per-key state is big
-(e.g. collect_list) or when AQE skew handling is unavailable (non-join
-shuffles). The helper keeps the pattern explicit and testable.
-
-DISTINCT counts are the exception: use ``salted_distinct_count`` (salts
-by the distinct VALUE, keeping per-salt slices disjoint). Summing
-per-salt ``countDistinct`` partials from ``salted_agg`` double-counts —
-the row-content salt spreads equal distinct values across salts.
+Hot keys make one reducer partition dominate a shuffle. The standard
+counter is salting: split each key into `n_salt` subkeys, do the work on
+(key, salt), then a cheap final step on key. Spark's hash aggregate
+already does map-side partial aggregation, which covers *count/sum* skew,
+so the helpers here cover the two cases it does not: a join whose hot
+key pins one reducer (``salted_join``), and DISTINCT counts
+(``salted_distinct_count``, which salts by the distinct VALUE so per-salt
+slices stay disjoint — a row-content salt would spread equal distinct
+values across salts and double-count them when merged).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_agg(
-    df: DataFrame,
-    key: str,
-    aggs: dict[str, tuple[Column, Column]],
-    n_salt: int = 16,
-    salt_cols: list[str] | None = None,
-) -> DataFrame:
-    """Two-stage salted aggregation.
-
-    aggs: output_name -> (partial_agg_expr, final_merge_expr) where the
-    partial runs per (key, salt) and the final merges per key, e.g.
-      {"n": (F.count("*"), F.sum("n")),
-       "total": (F.sum("value"), F.sum("total"))}
-
-    The (partial, merge) pair must be decomposable — count/sum/min/max,
-    or sum-of-partial-sums style. countDistinct is NOT: identical
-    distinct values land under different salts and their partial counts
-    double-count when merged — use salted_distinct_count instead.
-
-    salt_cols limits which columns feed the salt hash: pass cheap
-    high-cardinality columns (ids, timestamps) when rows carry MB-scale
-    payloads, and note that rows identical across salt_cols share a salt
-    (fully identical duplicate rows cannot be split by ANY deterministic
-    content salt — dedup them first, or live with that subset unsplit).
-    """
-    # salt from the ROW CONTENT, never from monotonically_increasing_id():
-    # a stage retry / speculative task re-assigns mono ids, which would
-    # re-salt rows differently than already-fetched shuffle output and
-    # silently corrupt results on the very clusters this helper targets
-    cols = salt_cols or df.columns
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_salt))
-    partial = (
-        df.withColumn("_salt", salt)
-        .groupBy(key, "_salt")
-        .agg(*[expr.alias(name) for name, (expr, _) in aggs.items()])
-    )
-    return partial.groupBy(key).agg(
-        *[merge.alias(name) for name, (_, merge) in aggs.items()]
-    )
 
 
 def salted_join(
@@ -85,9 +41,12 @@ def salted_join(
         # right/full would emit each unmatched dim row once PER REPLICA —
         # silent n_salt-fold inflation; refuse rather than corrupt
         raise ValueError(f"salted_join supports inner/left joins only, got {how!r}")
-    # deterministic content-derived salt (see salted_agg for salt_cols and
-    # the identical-rows caveat): survives stage retries and speculative
-    # execution, unlike monotonically_increasing_id
+    # salt from the ROW CONTENT, never from monotonically_increasing_id():
+    # a stage retry / speculative task re-assigns mono ids, which would
+    # re-salt rows differently than already-fetched shuffle output. Pass
+    # cheap high-cardinality salt_cols (ids, timestamps) when rows carry
+    # MB-scale payloads; rows identical across salt_cols share a salt, so
+    # fully identical duplicate rows cannot be split by any content salt
     cols = salt_cols or skewed.columns
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_salt)).cast("int")
     salted_fact = skewed.withColumn("_salt", salt)

@@ -431,30 +431,3 @@ def read_committed_output(
         "left_semi",
     )
     return good.filter(F.col("error").isNull()) if completed_only else good
-
-
-def partition_metrics(state: StateStore) -> DataFrame:
-    """Per-partition tallies (SURVEY.md A3) straight off the state table."""
-    return (
-        state.read()
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.when(F.col("status") == "completed", 1).otherwise(0)).alias("n_completed"),
-            F.sum(F.when(F.col("status") == "failed", 1).otherwise(0)).alias("n_failed"),
-            F.sum("n_spans").alias("total_spans"),
-            F.avg("processing_s").alias("avg_processing_s"),
-        )
-    )
-
-
-def status_summary(state: StateStore) -> DataFrame:
-    """Per-status counts + success rate + avg time (SURVEY.md A1;
-    reference database_manager.py:270-312)."""
-    latest = state.latest()
-    agg = latest.groupBy("status").agg(
-        F.count("*").alias("n"),
-        F.avg("processing_s").alias("avg_processing_s"),
-    )
-    total = latest.count()
-    return agg.withColumn("rate", F.col("n") / F.lit(total if total else 1))

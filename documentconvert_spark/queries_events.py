@@ -1,10 +1,9 @@
 """Driver-contract queries, part 4: event-stream relational ops over the
 shared `events` testdata table — sessionization (gap-based), as-of join
 (latest prior click per purchase), funnel analysis, and tumbling-window
-rollups. These are the batch twins of the streaming layer (streaming.py):
-the same semantics a Structured Streaming job computes incrementally are
-expressed here as window functions / aggregations so they can be
-oracle-verified against DuckDB exactly.
+rollups, expressed as window functions / aggregations so they can be
+oracle-verified against DuckDB exactly. They run as batch queries: the
+reference has no event time to stream on (SURVEY.md §2.10).
 
 Scale notes: every op here shuffles once on `user_id` (or on the window
 bucket) and is otherwise map-side; the window functions stream within a
@@ -184,9 +183,9 @@ FROM fv LEFT JOIN fc ON fv.user_id = fc.user_id LEFT JOIN fp ON fv.user_id = fp.
 
 
 # ------------------------------------------------------------ tumbling-window rollup
-# 1-day tumbling windows via F.window (the same operator a streaming job
-# uses with a watermark); session tz is UTC so buckets align with DuckDB's
-# date_trunc('day'). Shuffles on (bucket, event_type) — bounded cardinality.
+# 1-day tumbling windows via F.window; session tz is UTC so buckets align
+# with DuckDB's date_trunc('day'). Shuffles on (bucket, event_type) —
+# bounded cardinality.
 
 def q_ev_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)

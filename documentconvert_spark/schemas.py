@@ -70,15 +70,3 @@ EXTRACTION_STATE = T.StructType(
         T.StructField("src_run_id", T.StringType(), True),
     ]
 )
-
-# spans_out — the output table (SURVEY.md §1.2)
-SPANS_OUT = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("spans", SPANS_TYPE, True),
-        T.StructField("markdown", T.StringType(), True),
-        T.StructField("n_spans", T.IntegerType(), True),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("error_class", T.StringType(), True),
-    ]
-)

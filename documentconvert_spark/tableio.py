@@ -27,10 +27,6 @@ def read_table(spark, path: str) -> DataFrame:
     return spark.read.format(table_format()).load(path)
 
 
-def append_table(df: DataFrame, path: str) -> None:
-    df.write.mode("append").format(table_format()).save(path)
-
-
 def overwrite_table(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").format(table_format()).save(path)
 

@@ -1,16 +1,16 @@
 """Arrow-vectorized UDF layer (SURVEY.md §2.11).
 
-Exactly four pandas UDFs carry all heavy logic; everything else is native
+Exactly two pandas UDFs carry all heavy logic; everything else is native
 column expressions. No per-row Python UDFs anywhere (BASELINE.json
 input_hint mandate):
 
-  1. extract_dispatch(doc_type, content) -> struct<spans,error,error_class,processing_s>
+  1. extract_dispatch(doc_id, doc_type, content)
+     -> struct<spans,markdown,n_spans,error,error_class,processing_s>
      — the conversion core (reference dispatch `document_service.py:83-126`;
-     converters §2.9 C1/C3/C4). Dispatches *inside* the Arrow batch, so
-     mixed-type batches still make one JVM↔Python round trip.
-  2. spans_to_markdown_udf(spans) -> string — the MakeMode.MM_MD fold.
-  3. fix_encoding_udf(s) -> string — URL-decode + mojibake repair chain.
-  4. (profiling variant of 1 used by bench; same kernel calls)
+     converters §2.9 C1/C3/C4) fused with the MakeMode.MM_MD fold and the
+     error report. Dispatches *inside* the Arrow batch, so mixed-type
+     batches still make one JVM↔Python round trip.
+  2. fix_encoding_udf(s) -> string — URL-decode + mojibake repair chain.
 
 Per-row error containment (reference C7, `document_service.py:119-126`):
 a malformed document yields an error row, never a failed Spark task.
@@ -21,7 +21,6 @@ from __future__ import annotations
 import time
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -85,42 +84,9 @@ def _extract_batch(doc_id: pd.Series, doc_type: pd.Series, content: pd.Series) -
 extract_dispatch = pandas_udf(_extract_batch, returnType=EXTRACT_RESULT)
 
 
-def _fold_batch(spans: pd.Series) -> pd.Series:
-    out = []
-    for sp in spans:
-        if sp is None:
-            out.append(None)
-        else:
-            out.append(_fold(list(sp)))
-    return pd.Series(out, dtype="object")
-
-
-spans_to_markdown_udf = pandas_udf(_fold_batch, returnType=T.StringType())
-
-
-def _error_md_batch(doc_id: pd.Series, error_class: pd.Series, error: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            None if e is None else _error_md(d, c or "unknown_error", e)
-            for d, c, e in zip(doc_id, error_class, error)
-        ],
-        dtype="object",
-    )
-
-
-error_markdown_udf = pandas_udf(_error_md_batch, returnType=T.StringType())
-
-
 def _fix_encoding_batch(s: pd.Series) -> pd.Series:
     return s.map(lambda v: None if v is None else ensure_utf8(v))
 
 
 fix_encoding_udf = pandas_udf(_fix_encoding_batch, returnType=T.StringType())
 
-
-def markdown_column(spans_col, doc_id_col, error_class_col, error_col):
-    """markdown = fold(spans) on success, error report on failure
-    (reference writes an error .md too, document_service.py:347-375)."""
-    return F.when(
-        error_col.isNull(), spans_to_markdown_udf(spans_col)
-    ).otherwise(error_markdown_udf(doc_id_col, error_class_col, error_col))

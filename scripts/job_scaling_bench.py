@@ -72,18 +72,15 @@ FILES = sorted(glob.glob(os.path.join({corpus!r}, "part-*.parquet")))
 def work(args):
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from documentconvert_spark.kernels.detect import (
-        extract_image_any, extract_office_any, extract_pdf_any)
     from documentconvert_spark.kernels.markdown import spans_to_markdown
-    kernels = {{"pdf": extract_pdf_any, "markup": extract_office_any,
-               "image": extract_image_any}}
+    from documentconvert_spark.udfs import _KERNELS
     path, out_dir = args
     t = pq.read_table(path, columns=["doc_id", "doc_type", "content"])
     ids, mds, counts = [], [], []
     for did, dt, raw in zip(t["doc_id"].to_pylist(), t["doc_type"].to_pylist(),
                             t["content"].to_pylist()):
         try:
-            spans = kernels[dt](raw)
+            spans = _KERNELS[dt](raw)
             mds.append(spans_to_markdown(spans))
             counts.append(len(spans))
         except Exception:

@@ -98,15 +98,15 @@ sys.path.insert(0, {repo!r})
 FILES = sorted(glob.glob(os.path.join({ref_dir!r}, "*")))
 
 def work(args):
-    from documentconvert_spark.kernels.detect import extract_office_any, extract_pdf_any
+    from documentconvert_spark.ingest import _SUFFIX_TO_TYPE
+    from documentconvert_spark.udfs import _KERNELS
     lo, hi = args
     n = 0
     for k in range(lo, hi):
         p = FILES[k % len(FILES)]
         with open(p, "rb") as fh:
             data = fh.read()
-        fn = extract_pdf_any if p.endswith(".pdf") else extract_office_any
-        n += len(fn(data))
+        n += len(_KERNELS[_SUFFIX_TO_TYPE[p.rsplit(".", 1)[-1].lower()]](data))
     return n
 
 if __name__ == '__main__':

@@ -19,14 +19,11 @@ sys.path.insert(0, "/root/repo")
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from documentconvert_spark.ingest import _SUFFIX_TO_TYPE
 from documentconvert_spark.kernels.raster import decode_raster_gray
-from documentconvert_spark.kernels.detect import (
-    extract_image_any,
-    extract_office_any,
-    extract_pdf_any,
-)
 from documentconvert_spark.kernels.markdown import spans_to_markdown
 from documentconvert_spark.kernels.media import extract_media_files, sniff_image_meta
+from documentconvert_spark.udfs import _KERNELS
 
 REF = "/root/reference/test"
 RES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..",
@@ -88,13 +85,7 @@ def main() -> None:
         doc_id = urllib.parse.unquote(name)
         with open(path, "rb") as fh:
             data = fh.read()
-        if name.endswith(".pdf"):
-            kern = extract_pdf_any
-        elif name.rsplit(".", 1)[-1] in ("png", "jpg", "jpeg", "bmp", "tiff", "gif", "webp"):
-            kern = extract_image_any
-        else:
-            kern = extract_office_any
-        spans = kern(data)
+        spans = _KERNELS[_SUFFIX_TO_TYPE[name.rsplit(".", 1)[-1].lower()]](data)
         doc_rows["doc_id"].append(doc_id)
         doc_rows["status"].append("completed")
         doc_rows["n_spans"].append(len(spans))

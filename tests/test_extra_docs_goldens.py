@@ -18,19 +18,15 @@ import os
 import numpy as np
 import pyarrow.parquet as pq
 
-from documentconvert_spark.kernels.detect import (
-    extract_image_any,
-    extract_office_any,
-    extract_pdf_any,
-)
+from documentconvert_spark.ingest import _SUFFIX_TO_TYPE
 from documentconvert_spark.kernels.raster import decode_raster_gray, dhash64
+from documentconvert_spark.udfs import _KERNELS
 
 RES = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "documentconvert_spark", "resources",
 )
 EXTRA = os.path.join(RES, "extra_docs")
-IMAGE_EXTS = ("png", "jpg", "jpeg", "gif", "bmp", "tiff", "webp")
 
 # name → (width, height, md5 of the row-major uint8 raster, dhash64)
 RASTER_PINS = {
@@ -55,19 +51,14 @@ RASTER_PINS = {
 }
 
 
-def _kernel(name: str):
-    ext = name.rsplit(".", 1)[-1]
-    if ext == "pdf":
-        return extract_pdf_any
-    if ext in IMAGE_EXTS:
-        return extract_image_any
-    return extract_office_any
+def _doc_type(name: str) -> str:
+    return _SUFFIX_TO_TYPE[name.rsplit(".", 1)[-1].lower()]
 
 
 def test_extra_docs_match_goldens_and_raster_pins():
     names = sorted(os.listdir(EXTRA))
     assert len(names) == 33
-    assert sorted(n for n in names if n.rsplit(".", 1)[-1] in IMAGE_EXTS) == sorted(RASTER_PINS)
+    assert sorted(n for n in names if _doc_type(n) == "image") == sorted(RASTER_PINS)
     tbl = pq.read_table(os.path.join(RES, "expected_real_spans.parquet")).to_pydict()
     expected: dict[str, list[tuple]] = {}
     for i, did in enumerate(tbl["doc_id"]):
@@ -77,7 +68,7 @@ def test_extra_docs_match_goldens_and_raster_pins():
         with open(os.path.join(EXTRA, name), "rb") as fh:
             data = fh.read()
         assert name in expected, f"no golden rows for {name}"
-        got = [(s.offset, s.kind, s.media_ref, s.text) for s in _kernel(name)(data)]
+        got = [(s.offset, s.kind, s.media_ref, s.text) for s in _KERNELS[_doc_type(name)](data)]
         assert got == sorted(expected[name]), f"span mismatch for {name}"
         if name not in RASTER_PINS:
             continue

@@ -1,4 +1,4 @@
-"""State compaction, priority-bounded work selection, salted aggregation."""
+"""State compaction, priority-bounded work selection, salted distinct count."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import os
 from pyspark.sql import functions as F
 
 from documentconvert_spark.corpus import corpus_rows, generate_corpus
-from documentconvert_spark.ops.skew import salted_agg, salted_distinct_count
+from documentconvert_spark.ops.skew import salted_distinct_count
 from documentconvert_spark.pipeline import run_extraction_job
 from documentconvert_spark.schemas import DOCUMENTS_RAW
 from documentconvert_spark.state import StateStore
@@ -67,49 +67,11 @@ def test_priority_bounded_selection(spark, tmp_path):
     assert spans.select("doc_id").distinct().count() == spans.count()
 
 
-def test_salted_agg_matches_plain(spark):
-    events = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
-    salted = salted_agg(
-        events,
-        "event_type",
-        {"n": (F.count("*"), F.sum("n")), "total": (F.sum("value"), F.round(F.sum("total"), 6))},
-        n_salt=8,
-    )
-    plain = events.groupBy("event_type").agg(
-        F.count("*").alias("n"), F.round(F.sum("value"), 6).alias("total")
-    )
-    assert {tuple(r) for r in salted.collect()} == {tuple(r) for r in plain.collect()}
-
-
 def test_salted_distinct_exact(spark):
     events = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
     salted = salted_distinct_count(events, "event_type", "user_id", n_salt=8)
     plain = events.groupBy("event_type").agg(F.countDistinct("user_id").alias("n_distinct"))
     assert {tuple(r) for r in salted.collect()} == {tuple(r) for r in plain.collect()}
-
-
-def test_p5_result_file_filter(spark):
-    """P5 (reference gradio_app.py:180-219): the main-artifact pick among
-    an output listing — expected ext, temp/intermediate markers excluded,
-    length cap, hash-run exclusion."""
-    from pyspark.sql import functions as F
-
-    from documentconvert_spark.functions import is_main_result_file
-
-    names = [
-        ("report.md", True),
-        ("report.json", True),
-        ("report.temp.md", False),         # temp marker
-        ("output_report.md", False),       # intermediate prefix
-        ("report.txt", False),             # wrong extension
-        ("d41d8cd98f00b204e9800998ecf8427e.md", False),  # 32-hex run
-        ("x" * 120 + ".md", False),        # name too long
-        ("REPORT.MD", True),               # case-insensitive
-    ]
-    df = spark.createDataFrame([(n,) for n, _e in names], "name string")
-    got = {r.name: r.keep for r in df.select(
-        "name", is_main_result_file(F.col("name")).alias("keep")).collect()}
-    assert got == {n: e for n, e in names}
 
 
 def test_run_curate_cli_end_to_end(tmp_path):

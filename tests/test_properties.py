@@ -97,60 +97,6 @@ def test_mojibake_roundtrip_utf8_latin1(s):
     assert repair_mojibake(s.encode("utf-8").decode("latin-1")) == s
 
 
-# ---------------------------------------------------------------------------
-# Sessionization algebra: folding events in ANY batch split / arrival order
-# then interval-merging must equal the one-shot fold of all events sorted —
-# the invariant the streaming stateful operator's correctness rests on.
-
-import pandas as pd
-
-from documentconvert_spark.streaming import _merge_sessions, _rows_to_sessions
-
-_GAP_NS = 60 * 1_000_000_000  # 60 s gap for compact test data
-
-
-def _pdf(events):
-    return pd.DataFrame(
-        {
-            "event_id": [e[0] for e in events],
-            "ts": pd.to_datetime([e[1] for e in events], unit="s"),
-            "event_type": [e[2] for e in events],
-        }
-    )
-
-
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=10_000),  # event_id
-            st.integers(min_value=0, max_value=3_000),  # ts seconds
-            st.sampled_from(["click", "purchase", "view"]),
-        ),
-        min_size=0,
-        max_size=40,
-    ),
-    st.randoms(),
-)
-@settings(max_examples=150, deadline=None)
-def test_session_fold_split_invariance(events, rng):
-    # one-shot reference
-    ref = _rows_to_sessions(_pdf(events), _GAP_NS, 0)
-
-    # random shuffle, random split into 1-4 batches, fold + merge
-    shuffled = list(events)
-    rng.shuffle(shuffled)
-    cuts = sorted(rng.sample(range(len(shuffled) + 1), k=min(3, len(shuffled)))) if shuffled else []
-    batches, prev = [], 0
-    for c in cuts + [len(shuffled)]:
-        batches.append(shuffled[prev:c])
-        prev = c
-    acc: list[tuple] = []
-    for b in batches:
-        acc = _merge_sessions(acc + _rows_to_sessions(_pdf(b), _GAP_NS, 0), _GAP_NS)
-
-    assert acc == ref, f"split fold diverged:\n{acc}\nvs\n{ref}"
-
-
 @given(
     st.integers(min_value=1, max_value=40),   # width
     st.integers(min_value=1, max_value=24),   # height

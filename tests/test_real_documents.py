@@ -16,10 +16,12 @@ import os
 import pyarrow.parquet as pq
 import pytest
 
+from documentconvert_spark.ingest import _SUFFIX_TO_TYPE
 from documentconvert_spark.kernels.detect import extract_office_any, extract_pdf_any
 from documentconvert_spark.kernels.minidoc import extract_doc
 from documentconvert_spark.kernels.miniooxml import extract_docx, extract_pptx, extract_xlsx
 from documentconvert_spark.kernels.realpdf import extract_realpdf
+from documentconvert_spark.udfs import _KERNELS
 
 REF = "/root/reference/test"
 RES = os.path.join(
@@ -187,14 +189,7 @@ def test_real_goldens_match_committed_parquet():
     assert not any("sideways margin" in t for t in rot)
     for name, exp in expected.items():
         data = _read(name)
-        if name.endswith(".pdf"):
-            kern = extract_pdf_any
-        elif name.rsplit(".", 1)[-1] in ("png", "jpg", "jpeg", "gif", "bmp", "tiff", "webp"):
-            from documentconvert_spark.kernels.detect import extract_image_any
-
-            kern = extract_image_any
-        else:
-            kern = extract_office_any
+        kern = _KERNELS[_SUFFIX_TO_TYPE[name.rsplit(".", 1)[-1].lower()]]
         got = [(s.offset, s.kind, s.media_ref, s.text) for s in kern(data)]
         assert got == sorted(exp), f"span mismatch for {name}"
 
@@ -291,44 +286,3 @@ def test_spark_real_media_table(spark):
     assert {r.format for r in rows} == {"png", "svg", "jpeg", "wmf"}
     assert sum(1 for r in rows if r.doc_id.endswith(".doc")) == 61
 
-
-# ------------------------------------------------------------ streaming real docs
-
-def test_stream_extracts_real_corpus_incrementally(spark, tmp_path):
-    """Structured Streaming over the REAL corpus: land 4 files, drain,
-    land 3 more, drain on the same checkpoint — second wave processes only
-    the new arrivals and doc_ids stay exactly-once (reference poll-worker
-    semantics, enhanced_task_processor.py:255-284, on real formats)."""
-    from documentconvert_spark.ingest import binary_dir_as_raw
-    from documentconvert_spark.streaming import drain
-
-    landing = str(tmp_path / "landing")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    raw = binary_dir_as_raw(spark, REF).cache()
-    wave1 = raw.filter(~F_col_endswith_doc())
-    wave2 = raw.filter(F_col_endswith_doc())
-    n1, n2 = wave1.count(), wave2.count()
-    assert n1 == 4 and n2 == 3
-
-    wave1.write.mode("append").parquet(landing)
-    out1 = drain(spark, landing, out_dir, ckpt)
-    assert out1.count() == 4
-    assert out1.filter("error is not null").count() == 0
-
-    wave2.write.mode("append").parquet(landing)
-    out2 = drain(spark, landing, out_dir, ckpt)
-    assert out2.count() == 7
-    assert out2.select("doc_id").distinct().count() == 7  # exactly-once
-    got = {r.doc_id: r.n_spans for r in out2.select("doc_id", "n_spans").collect()}
-    import pyarrow.parquet as _pq
-    exp = _pq.read_table(os.path.join(RES, "expected_real_docs.parquet")).to_pydict()
-    exp_counts = dict(zip(exp["doc_id"], exp["n_spans"]))
-    assert got == {k: v for k, v in exp_counts.items() if k in got} and len(got) == 7
-    raw.unpersist()
-
-
-def F_col_endswith_doc():
-    from pyspark.sql import functions as F
-    return F.col("doc_id").endswith(".doc")

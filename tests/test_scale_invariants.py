@@ -7,9 +7,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from documentconvert_spark.benchcorpus import build_bench_corpus
+from documentconvert_spark.kernels.markdown import spans_to_markdown
 from documentconvert_spark.kernels.spans import KINDS
 from documentconvert_spark.pipeline import extract_spans, size_aware_split
-from documentconvert_spark.udfs import spans_to_markdown_udf
 
 N = 3000
 
@@ -39,11 +39,14 @@ def test_scale_invariants(spark, tmp_path):
         | ((F.col("s.kind") == "figure") & (F.col("s.text") != ""))
     ).count() == 0
 
-    # markdown column == independent fold of the spans (round-trip)
-    mismatches = ok.withColumn("md2", spans_to_markdown_udf(F.col("spans"))).filter(
-        F.col("markdown") != F.col("md2")
-    ).count()
-    assert mismatches == 0
+    # markdown column == an independent local fold of the spans, with rows
+    # streamed one partition at a time
+    mismatches = [
+        r.doc_id
+        for r in ok.select("doc_id", "spans", "markdown").toLocalIterator()
+        if r.markdown != spans_to_markdown([s.asDict() for s in r.spans])
+    ]
+    assert mismatches == []
 
     # n_spans consistency and error exclusivity
     assert ok.filter(F.col("n_spans") != F.size("spans")).count() == 0
