@@ -1,15 +1,20 @@
 """Benchmark harness (driver-run per round; also usable locally).
 
-Runs the headline workloads at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line:
+Runs two extraction legs and the representative relational / dedup / ANN
+queries at $SPARK_GRAFT_SF_DIR (default: the sf0.1 test-data directory)
+on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ..., "docs_per_sec": ...}
+  {"metric": "...", "value": <sec>, "unit": "sec",
+   "total_with_monitors": <sec>, "queries": {name: sec, ...}, "sf": ...,
+   "docs_per_sec": ..., "real_docs_per_sec": ...}
 
-Headline = the extraction pipeline's docs/sec (the BASELINE.json metric)
-over a distributed-generated synthetic corpus sized to the SF, plus the
-representative relational / dedup / ANN queries at the SF dir.
+The extraction legs time the inputs of two extractbench workloads:
+``synthetic_fresh`` (40k KB-scale synthetic docs) and ``realformat_fresh``
+(the 33 in-repo real-format fixtures x80). Both are built from the
+repository alone into extractbench's cache under _work/extractbench, so the
+two harnesses time the same bytes. Their size is fixed, not scaled by SF.
+SPARK_GRAFT_QUERIES_ONLY=1 skips them, and the JSON names them under
+``skipped``.
 """
 
 from __future__ import annotations
@@ -23,7 +28,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
-from documentconvert_spark.benchcorpus import build_bench_corpus
 from documentconvert_spark.pipeline import corpus_stats, extract_spans, size_aware_split
 from documentconvert_spark.queries_corpus import (
     q_ann_cosine_topk,
@@ -42,6 +46,7 @@ from documentconvert_spark.queries_relational import (
     q_tpch_q18,
 )
 from documentconvert_spark.session import build_session
+from extractbench.workloads import WORKLOADS
 
 WORK = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_work")
 
@@ -64,139 +69,79 @@ def force(df) -> int:
     return row.n
 
 
-REF_TEST_DIR = "/root/reference/test"
+# extraction leg (its `queries` key) -> the extractbench workload it times
+EXTRACT_LEGS = {"extract_pipeline": "synthetic_fresh", "real_docs_extract": "realformat_fresh"}
+INPUT_SEED = 1
 
 
-def run_extraction_benches(spark, n_docs: int, sf: float, parallelism: int) -> dict:
-    """Both extraction legs — synthetic corpus and the reference's real
-    sample documents replicated to SF scale — timed as THREE interleaved
-    reps per leg (E R E R E R, best per leg, all reps recorded).
+def leg_input(spark, workload: str):
+    """The input of an extractbench workload, generated into the shared
+    _work/extractbench cache unless it is already there."""
+    wl = WORKLOADS[workload](INPUT_SEED, os.path.join(WORK, "extractbench"))
+    wl.prepare()
+    return spark.read.parquet(wl.input_path)
 
-    Interleaving is the same protocol job_scaling_bench.py uses: on this
-    shared sandbox a host-load spike lasting one window would otherwise
-    land entirely on whichever leg ran during it (r3's driver record
-    booked a 42% phantom regression on the real-docs leg from exactly
-    that), while interleaved reps give each leg three shots spread across
-    the whole measurement window."""
-    import glob
 
-    corpus_path = os.path.join(WORK, f"bench_corpus_{n_docs}")
-    docs = build_bench_corpus(spark, n_docs, corpus_path, big_every=500, partitions=max(parallelism * 2, 8))
-    # corpus profiling (quantile cut) is one-time work per corpus, like a
-    # production job profiling its input — keep it out of the timed passes
-    stats = corpus_stats(docs)
+def run_extraction_benches(spark, parallelism: int) -> dict:
+    """Both extraction legs, timed as THREE interleaved reps per leg
+    (E R E R E R) after one warm-up pass each; returns
+    {leg: (doc count, [rep seconds])}.
 
-    def extract_pass() -> tuple[float, int]:
+    Interleaving: on a shared host a load spike lasting one window would
+    otherwise land entirely on whichever leg ran during it (r3's recorded
+    run booked a 42% phantom regression on the real-docs leg from exactly
+    that), while interleaved reps give each leg three shots spread
+    across the whole measurement window."""
+    legs = {}
+    for leg, workload in EXTRACT_LEGS.items():
+        docs = leg_input(spark, workload)
+        # corpus profiling (quantile cut) is one-time work per corpus, like
+        # a production job profiling its input: keep it out of the timed
+        # passes
+        legs[leg] = (docs, corpus_stats(docs))
+
+    def extract_pass(docs, stats) -> float:
         t0 = time.monotonic()
         light, heavy = size_aware_split(docs, target_partitions=parallelism * 2, stats=stats)
-        out = extract_spans(light).unionByName(extract_spans(heavy))
-        n = force(out)
-        return time.monotonic() - t0, n
-
-    files = sorted(glob.glob(os.path.join(REF_TEST_DIR, "*")))
-    real_pass = None
-    n_real_total = 0
-    real_docs = None
-    if files:
-        rows = []
-        for p in files:
-            with open(p, "rb") as fh:
-                content = fh.read()
-            name = os.path.basename(p)
-            suffix = name.rsplit(".", 1)[-1].lower()
-            rows.append((name, "pdf" if suffix == "pdf" else "markup", content, len(content)))
-        # sized so a timed pass runs seconds, not ~1 s: at 700 docs (the old
-        # 100×sf) the ~1 s of fixed plan/scheduling overhead was ~half the
-        # measurement and the reported docs/s swung ±40% between runs
-        n_copies = max(int(6000 * sf), 10)
-        base = spark.createDataFrame(
-            rows, "doc_id string, doc_type string, content binary, byte_len long"
-        )
-        # shuffle ONLY the tiny id column, broadcast the 7-row base: the raw
-        # binaries never cross a shuffle (repartition-after-crossJoin moves
-        # n_copies × corpus bytes and OOMs at scale — the exact anti-pattern
-        # the 100 TB design forbids)
-        real_docs = (
-            spark.range(n_copies)
-            .repartition(parallelism * 2)
-            .crossJoin(F.broadcast(base))
-            .select(
-                F.concat_ws("#", "doc_id", F.col("id").cast("string")).alias("doc_id"),
-                "doc_type", "content", "byte_len",
-                F.lit("ref").alias("source_bucket"),
-                F.concat(F.lit("ref/"), "doc_id").alias("source_path"),
-            )
-            .cache()
-        )
-        n_real_total = real_docs.count()  # materialize outside timing
-
-        def real_pass() -> tuple[float, int]:
-            t0 = time.monotonic()
-            n = force(extract_spans(real_docs))
-            return time.monotonic() - t0, n
+        n = force(extract_spans(light).unionByName(extract_spans(heavy)))
+        assert n == stats.n, (n, stats.n)
+        return time.monotonic() - t0
 
     # warm-up once per leg: Python-worker imports + page cache; a
-    # production job amortizes this over hours — steady state is the
+    # production job amortizes this over hours, so steady state is the
     # honest metric
-    extract_pass()
-    if real_pass:
-        real_pass()
-
-    extract_reps: list[float] = []
-    real_reps: list[float] = []
-    n_extracted = 0
+    for docs, stats in legs.values():
+        extract_pass(docs, stats)
+    reps = {leg: [] for leg in legs}
     for _ in range(3):
-        dt, n_extracted = extract_pass()
-        extract_reps.append(round(dt, 3))
-        if real_pass:
-            dt, n = real_pass()
-            assert n == n_real_total
-            real_reps.append(round(dt, 3))
-
-    if real_docs is not None:
-        real_docs.unpersist()
-    out = {
-        "extract_s": min(extract_reps),
-        "extract_reps": extract_reps,
-        "n_extracted": n_extracted,
-        "real_s": min(real_reps) if real_reps else 0.0,
-        "real_reps": real_reps,
-        "n_real": n_real_total,
-    }
-    return out
+        for leg, (docs, stats) in legs.items():
+            reps[leg].append(round(extract_pass(docs, stats), 3))
+    return {leg: (stats.n, reps[leg]) for leg, (_, stats) in legs.items()}
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = _sf_of(sf_dir)
-    n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", str(max(int(200_000 * sf), 2_000))))
-    # SPARK_GRAFT_QUERIES_ONLY=1 skips the two extraction legs: the
-    # real-docs leg caches n_copies × corpus binary in the ONE local JVM
-    # (at sf10 that is ~150 GB — a memory model no single executor has;
-    # the N-vs-4N sections in BENCH.md measure the extraction axis), so
-    # very large SF linearity runs cover the relational/dedup/ANN suite
+    # SPARK_GRAFT_QUERIES_ONLY=1 skips the two extraction legs: their
+    # inputs do not scale with SF, so very large SF linearity runs cover
+    # the relational/dedup/ANN suite only
     queries_only = os.environ.get("SPARK_GRAFT_QUERIES_ONLY") == "1"
-    # heap sized to the SF — but ONLY when the real-docs leg runs: its
-    # replicated corpus caches ~15 GB of binary rows at sf1 and OOMs the
-    # default 8g heap. For the query suite the huge heap is actively
-    # HARMFUL (measured: tpch_q3 at sf10 runs 9 s warm on 8g, 60 s on
-    # 64g — GC geometry), so it must not leak into queries-only runs.
-    if sf >= 1 and not queries_only:
-        os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "64g")
 
     spark = build_session(app_name="bench", master=f"local[{cpus}]", shuffle_partitions=max(cpus, 16))
 
     queries = {}
-    legs = {"n_extracted": 0, "n_real": 0, "extract_s": 0.0, "real_s": 0.0,
-            "extract_reps": [], "real_reps": []}
+    legs = {}
+    skipped = {}
 
     t0 = time.monotonic()
-    if not queries_only:
-        legs = run_extraction_benches(spark, n_docs, sf, cpus)
-        queries["extract_pipeline"] = round(legs["extract_s"], 3)
-        if legs["n_real"]:
-            queries["real_docs_extract"] = round(legs["real_s"], 3)
+    if queries_only:
+        skipped = {leg: "SPARK_GRAFT_QUERIES_ONLY=1 (query-suite SF linearity run)"
+                   for leg in EXTRACT_LEGS}
+    else:
+        legs = run_extraction_benches(spark, cpus)
+        for leg, (_, reps) in legs.items():
+            queries[leg] = min(reps)
 
     def prod_minhash_lsh(spark, sf_dir):
         """Production banded-LSH path (ops/dedup.py): one xxhash64 per
@@ -258,11 +203,14 @@ def main() -> None:
     # once, warm. wall_sec additionally carries corpus synthesis, JVM
     # start and the warm-up passes — dominated by shared-sandbox host
     # noise, not by any plan
+    value = round(sum(queries.values()), 3)
     result = {
         "metric": "headline_suite_sec",
-        "value": round(sum(queries.values()), 3),
+        "value": value,
         "unit": "sec",
         "value_def": "sum of per-query best-of-2 times",
+        # stays comparable across SFs when a query moves to `monitors`
+        "total_with_monitors": round(value + sum(monitors.values()), 3),
         "wall_sec": round(total, 3),
         "queries": queries,
         "sf": sf,
@@ -274,14 +222,17 @@ def main() -> None:
             "exact brute-force baselines (bandwidth-bound); measured but "
             "excluded from value at sf>=1"
         )
-    if legs["n_extracted"]:
-        result["extract_docs"] = legs["n_extracted"]
-        result["docs_per_sec"] = round(legs["n_extracted"] / legs["extract_s"], 1)
-        result["extract_reps"] = legs["extract_reps"]
-    if legs["n_real"]:
-        result["real_docs"] = legs["n_real"]
-        result["real_docs_per_sec"] = round(legs["n_real"] / legs["real_s"], 1)
-        result["real_docs_reps"] = legs["real_reps"]
+    if skipped:
+        result["skipped"] = skipped
+    for leg, (docs_key, rate_key, reps_key) in (
+        ("extract_pipeline", ("extract_docs", "docs_per_sec", "extract_reps")),
+        ("real_docs_extract", ("real_docs", "real_docs_per_sec", "real_docs_reps")),
+    ):
+        if leg in legs:
+            n, reps = legs[leg]
+            result[docs_key] = n
+            result[rate_key] = round(n / min(reps), 1)
+            result[reps_key] = reps
     # the 10x/100x points: /root/testdata tops out at sf0.1 and fresh
     # sf1/sf10 runs add tens of minutes of wall per driver round, so those
     # suites run out-of-band (scripts/gen_sf.py + SPARK_GRAFT_SF_DIR) and

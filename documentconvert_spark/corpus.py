@@ -367,9 +367,8 @@ _SCALE_CLASSES = [c for c in CLASSES if c not in ("F-BIG",)]
 
 def make_doc_by_index(i: int, seed: int = 42, big_every: int = 500) -> RawDoc:
     """Index-addressable generation (pure function of (i, seed, big_every))
-    so executors can generate corpus shards independently — the same
-    function drives both the driver-side list and the distributed bench
-    corpus."""
+    so corpus shards can be generated independently: it drives both the
+    driver-side list and extractbench's per-core input children."""
     if big_every and i % big_every == big_every - 1:
         return make_doc("F-BIG", i, seed)
     return make_doc(_SCALE_CLASSES[i % len(_SCALE_CLASSES)], i, seed)

@@ -1,18 +1,13 @@
-"""Custom Python DataSource (Spark 4 DataSource API): the synthetic
-document corpus as a first-class, partition-parallel *source* —
-`spark.read.format("synthdocs").option("n", ...).load()` — instead of a
-write-then-read staging step.
+"""Custom Python DataSource (Spark 4 DataSource API) for URL inputs:
+`spark.read.format("urldocs").option("urls", manifest).load()` fetches each
+document on the executor that owns its slice of the manifest.
 
-Reference analogue: the input side of the task processor fabricates work
-items from S3 listings (enhanced_task_processor.py:409-508); here the
-corpus generator IS the table. Each InputPartition carries an index
-range, executors generate their slice independently (deterministic per
-doc index — same rows for any partitioning), and Arrow RecordBatches go
-straight into the scan, so generation scales with the cluster instead of
-bottlenecking on a driver loop or a pre-written staging directory.
-
-Also useful at 100 TB: benchmark/soak corpora of any size appear as
-tables without occupying storage.
+Reference analogue: the reference's HTTP-URL input path is an
+unimplemented TODO (`enhanced_task_processor.py:450-454`: URL tasks raise
+"not supported yet"). Here the fetcher is injectable (a module:function
+option), so air-gapped environments and unit tests substitute a
+deterministic local fetcher, and a failed fetch becomes an error row,
+never a failed task (the engine's C7 error-row discipline).
 """
 
 from __future__ import annotations
@@ -21,77 +16,6 @@ from dataclasses import dataclass
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
-
-from documentconvert_spark.schemas import DOCUMENTS_RAW
-
-_DEFAULT_ROWS_PER_PARTITION = 5_000
-
-
-@dataclass
-class _Slice(InputPartition):
-    start: int
-    end: int
-    seed: int
-    big_every: int
-
-
-class SynthDocsReader(DataSourceReader):
-    def __init__(self, schema: StructType, options: dict) -> None:
-        self.n = int(options.get("n", 1000))
-        self.seed = int(options.get("seed", 42))
-        self.big_every = int(options.get("big_every", 0))
-        self.rows_per_partition = int(
-            options.get("rows_per_partition", _DEFAULT_ROWS_PER_PARTITION)
-        )
-
-    def partitions(self):
-        step = max(self.rows_per_partition, 1)
-        return [
-            _Slice(lo, min(lo + step, self.n), self.seed, self.big_every)
-            for lo in range(0, self.n, step)
-        ]
-
-    def read(self, partition: _Slice):
-        # import inside read(): runs on executors
-        from documentconvert_spark.corpus import make_doc_by_index
-
-        for i in range(partition.start, partition.end):
-            d = make_doc_by_index(i, partition.seed, partition.big_every)
-            yield (
-                d.doc_id,
-                d.doc_type,
-                d.content,
-                len(d.content),
-                "synth",
-                f"synth://{partition.seed}/{d.doc_id}",
-            )
-
-
-class SynthDocsDataSource(DataSource):
-    """Register once per session:
-    `spark.dataSource.register(SynthDocsDataSource)`; then
-    `spark.read.format("synthdocs").option("n", 10_000).load()`."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "synthdocs"
-
-    def schema(self) -> StructType:
-        return DOCUMENTS_RAW
-
-    def reader(self, schema: StructType) -> DataSourceReader:
-        return SynthDocsReader(schema, self.options)
-
-
-# ---------------------------------------------------------------- URL source
-# S6: the reference's HTTP-URL input path is an unimplemented TODO
-# (`enhanced_task_processor.py:450-454` — URL tasks raise "not supported
-# yet"). The engine closes it Spark-side: a partition-parallel DataSource
-# that fetches each URL on the executor that owns its slice, with the
-# fetcher injectable (module:function option) so air-gapped environments —
-# including this sandbox and unit tests — substitute a deterministic local
-# fetcher. Failures are CONTAINED per row (content null + error column),
-# never a failed task, matching the engine's C7 error-row discipline.
 
 URL_DOCS_SCHEMA_DDL = (
     "doc_id string, doc_type string, content binary, byte_len long, "

@@ -1,52 +1,8 @@
-"""Custom Python DataSource: synthdocs generator as a partition-parallel
-table, deterministic across partitionings, flowing into extraction."""
+"""Custom Python DataSource: the URL source fetches per executor slice,
+contains failures per row, and flows into extraction."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-from documentconvert_spark.pipeline import extract_spans
-from documentconvert_spark.sources import SynthDocsDataSource
-
-
-@pytest.fixture(scope="module", autouse=True)
-def _register(spark):
-    spark.dataSource.register(SynthDocsDataSource)
-
-
-def test_synthdocs_source_reads_and_partitions(spark):
-    df = (
-        spark.read.format("synthdocs")
-        .option("n", 250)
-        .option("rows_per_partition", 64)
-        .load()
-    )
-    assert df.count() == 250
-    assert df.rdd.getNumPartitions() == 4  # ceil(250/64)
-    assert df.select("doc_id").distinct().count() == 250
-    assert dict(df.dtypes)["content"] == "binary"
-
-
-def test_synthdocs_deterministic_across_partitionings(spark):
-    a = spark.read.format("synthdocs").option("n", 120).option("rows_per_partition", 7).load()
-    b = spark.read.format("synthdocs").option("n", 120).option("rows_per_partition", 120).load()
-    ha = a.select(F.md5("content").alias("h")).orderBy("h").collect()
-    hb = b.select(F.md5("content").alias("h")).orderBy("h").collect()
-    assert ha == hb  # same rows regardless of slicing
-
-
-def test_synthdocs_flows_into_extraction(spark):
-    docs = spark.read.format("synthdocs").option("n", 80).option("big_every", 0).load()
-    out = extract_spans(docs)
-    row = out.agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(F.col("error").isNull(), 1).otherwise(0)).alias("ok"),
-    ).collect()[0]
-    assert row.n == 80 and row.ok > 0
-
-
-# ---------------------------------------------------------------- url source
 
 def test_urldocs_source_fetches_and_contains_failures(spark):
     from documentconvert_spark.sources import UrlDocsDataSource

@@ -8,6 +8,7 @@ repository, so it always runs. The raster pins were recorded from the
 per-row decoders before the array-native rewrite; any drift in a decoder
 (PNG unfilter, JPEG IDCT, VP8L transforms, TIFF predictor, BMP/GIF
 palettes) shows up here even when the OCR text still happens to match.
+It also pins that bench.py's real-format leg reads these fixtures alone.
 """
 
 from __future__ import annotations
@@ -79,3 +80,23 @@ def test_extra_docs_match_goldens_and_raster_pins():
         assert gray.shape == (h, w), name
         assert hashlib.md5(np.ascontiguousarray(gray).tobytes()).hexdigest() == md5, name
         assert dhash64(w, h, gray) == dh, name
+
+
+def test_bench_real_format_leg_reads_the_fixtures(spark, tmp_path, monkeypatch):
+    """bench.py's real-format leg times extractbench's realformat_fresh
+    input, built from these fixtures alone: every fixture ×80 under its
+    base doc_id, cached under bench.WORK."""
+    import bench
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(bench, "WORK", str(tmp_path))
+    docs = bench.leg_input(spark, bench.EXTRACT_LEGS["real_docs_extract"])
+    assert docs.inputFiles() and all(str(tmp_path) in f for f in docs.inputFiles())
+    per_base = {
+        r.base: r["count"]
+        for r in docs.groupBy(F.regexp_extract("doc_id", r"^(.*)#\d+$", 1).alias("base"))
+        .count().collect()
+    }
+    assert sum(per_base.values()) == 33 * 80
+    assert sorted(per_base) == sorted(os.listdir(EXTRA))
+    assert set(per_base.values()) == {80}

@@ -30,7 +30,6 @@ ALLOWLIST = {
     "ops.dedup.verify_pairs_jaccard": "the exact oracle the LSH test compares against",
     "corpus.fixture_corpus": "the golden-test corpus every Spark-side test module builds on",
     "kernels.spans.KINDS": "the span-kind domain of the IR; tests check kernel output against it",
-    "sources.SynthDocsDataSource": "Python DataSource plug-in: callers register it on their session",
     "sources.UrlDocsDataSource": "Python DataSource plug-in: callers register it on their session",
 }
 

@@ -6,16 +6,23 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from documentconvert_spark.benchcorpus import build_bench_corpus
+from documentconvert_spark.corpus import corpus_rows, generate_corpus
 from documentconvert_spark.kernels.markdown import spans_to_markdown
 from documentconvert_spark.kernels.spans import KINDS
 from documentconvert_spark.pipeline import extract_spans, size_aware_split
+from documentconvert_spark.schemas import DOCUMENTS_RAW
 
 N = 3000
 
 
 def test_scale_invariants(spark, tmp_path):
-    docs = build_bench_corpus(spark, N, str(tmp_path / "corpus"), big_every=97, partitions=16)
+    path = str(tmp_path / "corpus")
+    rows = corpus_rows(generate_corpus(N, big_every=97))
+    # written as 16 input partitions, so size_aware_split sees a
+    # multi-partition frame as a real scan would give it
+    spark.createDataFrame(rows, schema=DOCUMENTS_RAW).repartition(16).write.parquet(path)
+    docs = spark.read.parquet(path)
+    assert docs.rdd.getNumPartitions() >= 8
     light, heavy = size_aware_split(docs, target_partitions=8)
     out = extract_spans(light).unionByName(extract_spans(heavy)).cache()
 
