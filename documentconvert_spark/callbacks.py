@@ -113,8 +113,7 @@ class CallbackLog(StateStore):
     table and its delivery log. The log's latest-row rule is its own
     (newest delivery per (doc, url) by callback_time — there is no
     attempt/completed_at here), which also drives the inherited
-    compact(); the state-specific derived views (as_of, completed_ids,
-    terminal_failed_ids, attempts) do not apply to this row type.
+    compact().
 
     Reads are STRICT (no ignoreCorruptFiles): a silently skipped corrupt
     log file would erase delivered=true rows and re-POST already-

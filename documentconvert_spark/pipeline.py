@@ -3,7 +3,7 @@
 The reference's whole REST→queue→download→convert→upload→update lifecycle
 collapses to one declarative DAG:
 
-    docs ──left_anti(state.completed ∪ state.terminal_failed)──▶ todo
+    docs ──left_join(state aggregated per doc: done, max attempt)──▶ todo
     todo ──size-aware split (heavy tail isolated)──▶ extract UDF
          ──▶ spans + markdown + error columns
          ──▶ spans_out parquet  +  state append (per-doc row, per-partition metrics)
@@ -18,8 +18,8 @@ Scale design (north_rule mandates, SURVEY.md §4):
   approxQuantile over byte_len only, so the pre-pass is cheap at any scale.
 - **Minimal shuffle.** The repartitions are the only shuffles in the hot
   path; extraction, markdown fold, and state-row derivation are narrow.
-  Work-selection anti-joins run against the state table; completed/terminal
-  id sets are doc_id-only projections and AQE picks broadcast vs SMJ.
+  Work selection is one doc_id-keyed aggregate over the state table and
+  one left join against a doc_id-only projection; AQE picks broadcast vs SMJ.
 - **Arrow batches.** maxRecordsPerBatch capped in session.py bounds
   Python-side memory per batch of large documents.
 - **Containment.** A malformed document becomes an error row (C7), so one
@@ -35,7 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from documentconvert_spark.state import StateStore
+from documentconvert_spark.state import MAX_ATTEMPTS, StateStore
 from documentconvert_spark.udfs import extract_dispatch, fix_encoding_udf
 
 HEAVY_QUANTILE = 0.99
@@ -216,7 +216,6 @@ def lineage_column() -> F.Column:
 class JobResult:
     run_id: str | None
     docs_in: int
-    todo: int
     processed: int
     completed: int
     failed: int
@@ -227,27 +226,33 @@ class JobResult:
 
 def select_work_ids(docs: DataFrame, state: StateStore) -> DataFrame:
     """Slim work selection: one (doc_id, attempt) row per UNIQUE doc_id
-    still to do. Runs on a doc_id-only projection (see the shuffle-cost
-    note in run_extraction_job). The distinct() is load-bearing twice
-    over: (a) duplicate doc_ids in the input (repeated crawl output)
-    would otherwise multiply through run_extraction_job's inner join
-    back — K copies of one doc become K×K extraction rows; (b) a HOT
-    duplicate key is collapsed by the distinct's partial aggregation
-    map-side, BEFORE any shuffle, so the anti-join chain never sees the
-    skew at all (and the joins reuse the distinct's doc_id exchange —
-    no extra shuffle). Pinned by tests/test_skew_join.py; general
-    skewed-join salting for joins that can't pre-collapse lives in
-    ops/skew.salted_join."""
+    still to do, from ONE aggregate over the state table and ONE left
+    join. Per doc, `done` says some run completed it and `prev_attempt`
+    is its highest attempt. Runs only ever write completed or failed
+    rows, so a doc that is not done has only failed rows, its latest row
+    is failed at max(attempt), and "retries exhausted" is exactly
+    prev_attempt >= MAX_ATTEMPTS — no latest-row window needed. Runs on
+    a doc_id-only projection (see the shuffle-cost note in
+    run_extraction_job). The distinct() is load-bearing twice over:
+    (a) duplicate doc_ids in the input (repeated crawl output) would
+    otherwise multiply through run_extraction_job's inner join back — K
+    copies of one doc become K×K extraction rows; (b) a HOT duplicate
+    key is collapsed by the distinct's partial aggregation map-side,
+    BEFORE any shuffle, so the join never sees the skew at all (and
+    reuses the distinct's doc_id exchange — no extra shuffle). Pinned by
+    tests/test_skew_join.py; general skewed-join salting for joins that
+    can't pre-collapse lives in ops/skew.salted_join."""
+    per_doc = state.read().groupBy("doc_id").agg(
+        F.max(F.col("status") == "completed").alias("done"),
+        F.max("attempt").alias("prev_attempt"),
+    )
+    prev = F.coalesce(F.col("prev_attempt"), F.lit(0))
     return (
         docs.select("doc_id")
         .distinct()
-        .join(state.completed_ids(), "doc_id", "left_anti")
-        .join(state.terminal_failed_ids(), "doc_id", "left_anti")
-        .join(state.attempts(), "doc_id", "left")
-        .withColumn(
-            "attempt", (F.coalesce(F.col("prev_attempt"), F.lit(0)) + 1).cast("int")
-        )
-        .drop("prev_attempt")
+        .join(per_doc, "doc_id", "left")
+        .where(~F.coalesce(F.col("done"), F.lit(False)) & (prev < MAX_ATTEMPTS))
+        .select("doc_id", (prev + 1).cast("int").alias("attempt"))
     )
 
 
@@ -260,8 +265,8 @@ def run_extraction_job(
     priority_expr: F.Column | None = None,
     max_docs: int | None = None,
 ) -> JobResult:
-    """One resumable pass: anti-join work selection → size-aware extract →
-    write output + append state. Rerunning after any interruption converges
+    """One resumable pass: work selection against the state → size-aware
+    extract → write output + append state. Rerunning after any interruption converges
     to all-done with no duplicate processing (idempotent per doc_id);
     failed docs are retried until MAX_ATTEMPTS then parked as the DLQ slice.
     """
@@ -270,14 +275,14 @@ def run_extraction_job(
 
     # ONE profiling pass over the raw frame (UDF- and join-free plan, pruned
     # to byte_len) yields the input count AND the split's partitioning
-    # stats. Thresholds from the full corpus rather than the post-anti-join
+    # stats. Thresholds from the full corpus rather than the post-selection
     # remainder is deliberate: the cut stays stable across resume runs.
     stats = corpus_stats(docs)
     docs_in = stats.n
 
     docs = prepare_documents(docs)
     # Work selection runs on a SLIM doc_id projection, never on the fat
-    # frame: an anti-join planned as sort-merge shuffles its whole left
+    # frame: a join planned as sort-merge shuffles its whole left
     # side, and letting `content` ride that shuffle is the single most
     # expensive mistake this job can make (measured: +70% on the write
     # phase — AQE's runtime SMJ→BHJ rescue still pays the map-side
@@ -392,7 +397,6 @@ def run_extraction_job(
     return JobResult(
         run_id=run_id,
         docs_in=docs_in,
-        todo=processed,
         processed=processed,
         completed=completed_n,
         failed=processed - completed_n,
@@ -414,7 +418,7 @@ def read_committed_output(
     the next run. Filtering to state-committed run_ids (derived from state
     DATA, so compaction-safe; _SUCCESS-gated, so half-appended state never
     counts) plus completed rows gives each successfully-converted doc
-    EXACTLY ONCE: completed docs are anti-joined away and never reprocessed.
+    EXACTLY ONCE: completed docs are never selected again.
     ``completed_only=False`` additionally returns failure artifacts — one
     row per ATTEMPT by design (the reference also writes an error .md per
     attempt); dedupe by (doc_id, attempt) if single rows are needed.

@@ -137,55 +137,18 @@ class StateStore:
             F.col("src_run_id").cast("string").alias("run_id")
         ).where(F.col("run_id").isNotNull()).distinct()
 
-    # ---- derived views -------------------------------------------------
+    # ---- derived view --------------------------------------------------
 
     def latest(self) -> DataFrame:
         """Latest state row per doc_id (by attempt, then completed_at)."""
-        return self.as_of(None)
-
-    def as_of(self, ts) -> DataFrame:
-        """The latest-per-doc view as it stood at timestamp `ts` (None =
-        now, i.e. latest()) — Iceberg snapshot-as-of analogue, keyed on
-        the completed_at DATA column rather than snapshot ids because
-        compact() rewrites run directories (directory names are not
-        durable history). Matching Iceberg semantics exactly: compact()
-        IS expire_snapshots — after it runs, rows superseded before the
-        compaction are gone and as_of() of an earlier time returns the
-        compacted survivors, not the expired history."""
-        rows = self.read()
-        if ts is not None:
-            rows = rows.filter(F.col("completed_at") <= F.lit(ts))
         w = Window.partitionBy("doc_id").orderBy(
             F.desc("attempt"), F.desc_nulls_last("completed_at")
         )
         return (
-            rows.withColumn("_rn", F.row_number().over(w))
+            self.read().withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-
-    def completed_ids(self) -> DataFrame:
-        """Completed doc_ids, duplicates allowed (a crash between output
-        write and state append can legitimately double-append). Every
-        consumer is the probe side of a left_anti join, where duplicates
-        are semantically free, so a distinct here would only add agg
-        work. Hot-key skew on the resume path is handled one level up:
-        select_work_ids distincts its slim LEFT projection, whose partial
-        aggregation collapses duplicates map-side before any shuffle
-        (tests/test_skew_join.py pins that plan shape)."""
-        return self.read().filter(F.col("status") == "completed").select("doc_id")
-
-    def terminal_failed_ids(self) -> DataFrame:
-        """Docs that exhausted retries — the DLQ slice (SURVEY.md §2.10)."""
-        return (
-            self.latest()
-            .filter((F.col("status") == "failed") & (F.col("attempt") >= MAX_ATTEMPTS))
-            .select("doc_id")
-        )
-
-    def attempts(self) -> DataFrame:
-        """doc_id → attempts so far (for the retry counter)."""
-        return self.read().groupBy("doc_id").agg(F.max("attempt").alias("prev_attempt"))
 
     def compact(self) -> str:
         """Collapse all runs into one snapshot holding only the latest row

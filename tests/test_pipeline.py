@@ -319,49 +319,50 @@ def test_state_retention_at_thousand_runs(spark, tmp_path):
     assert snap(st.latest()) == lat_before
 
 
-def test_state_as_of_time_travel_and_expiry_semantics(spark, tmp_path):
-    """as_of(ts) reconstructs the latest-per-doc view at ts from retained
-    rows; compact() behaves like Iceberg expire_snapshots — history
-    superseded before the compaction is gone afterward."""
+def test_select_work_ids_one_state_pass(spark, tmp_path):
+    """Work selection is one aggregate over the state and one left join:
+    completed docs (however many failed rows sit beside them) and docs
+    failed MAX_ATTEMPTS times drop out, the rest come back once each at
+    max(attempt) + 1. The executed plan scans the state once, joins once
+    and has no latest-row window."""
     import datetime
+    import re
 
+    from documentconvert_spark.pipeline import select_work_ids
     from documentconvert_spark.schemas import EXTRACTION_STATE
 
+    t = datetime.datetime(2026, 1, 1, 10, 0, 0)
+
+    def row(doc_id, status, attempt, completed_at=t):
+        return (doc_id, 0, status, attempt, t, completed_at, 0.01, 1, None,
+                None, f"runs/x/{doc_id}", None)
+
     store = StateStore(spark, str(tmp_path / "state"))
-    t1 = datetime.datetime(2026, 1, 1, 10, 0, 0)
-    t2 = datetime.datetime(2026, 1, 1, 11, 0, 0)
+    store.append(spark.createDataFrame([
+        row("crash", "completed", 1),
+        row("tie", "completed", 2, completed_at=None),
+        row("tie", "failed", 2),
+        *[row("terminal", "failed", a) for a in range(1, MAX_ATTEMPTS + 1)],
+        row("retry", "failed", 1),
+    ], schema=EXTRACTION_STATE), run_id="r1")
+    store.append(spark.createDataFrame([
+        # the crash double-append: a later failed row beside a completion
+        row("crash", "failed", MAX_ATTEMPTS),
+        row("retry", "failed", 2),
+    ], schema=EXTRACTION_STATE), run_id="r2")
 
-    def row(doc_id, status, attempt, ts):
-        return (doc_id, 0, status, attempt, ts, ts, 0.01, 1, None, None,
-                f"runs/x/{doc_id}", None)
+    docs = spark.createDataFrame(
+        [(d,) for d in ("crash", "tie", "terminal", "retry", "retry",
+                        "fresh", "fresh")],
+        "doc_id string",
+    )
+    todo = select_work_ids(docs, store)
+    assert sorted((r.doc_id, r.attempt) for r in todo.collect()) == [
+        ("fresh", 1), ("retry", 3),
+    ]
 
-    store.append(
-        spark.createDataFrame(
-            [row("d1", "failed", 1, t1), row("d2", "completed", 1, t1)],
-            schema=EXTRACTION_STATE,
-        ),
-        run_id="r1",
-    )
-    store.append(
-        spark.createDataFrame(
-            [row("d1", "completed", 2, t2)], schema=EXTRACTION_STATE
-        ),
-        run_id="r2",
-    )
-    # at t1 + epsilon: d1 is still the failed attempt-1 row
-    mid = datetime.datetime(2026, 1, 1, 10, 30, 0)
-    at_mid = {r.doc_id: r for r in store.as_of(mid).collect()}
-    assert at_mid["d1"].status == "failed" and at_mid["d1"].attempt == 1
-    assert at_mid["d2"].status == "completed"
-    # at t2: d1's retry supersedes
-    at_t2 = {r.doc_id: r for r in store.as_of(t2).collect()}
-    assert at_t2["d1"].status == "completed" and at_t2["d1"].attempt == 2
-    # expire: compaction keeps only the latest rows; the t1 view of d1
-    # is no longer reconstructible (Iceberg expire_snapshots semantics),
-    # while the current view is unchanged
-    store.compact()
-    post = {r.doc_id: r for r in store.as_of(mid).collect()}
-    assert "d1" not in post  # its attempt-1 history was expired
-    assert post["d2"].status == "completed"
-    now = {r.doc_id: r for r in store.latest().collect()}
-    assert now["d1"].status == "completed" and now["d1"].attempt == 2
+    plan = todo._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"FileScan", final)) == 1, final
+    assert len(re.findall(r"\w+Join\b", final)) == 1, final
+    assert "Window" not in final, final

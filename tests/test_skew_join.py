@@ -58,7 +58,7 @@ def test_resume_work_selection_skew_split_under_hot_doc_id(spark, tmp_path):
     """The resume path's work selection under key skew: when half the
     input rows share one hot doc_id (repeated crawl output), the slim
     projection's distinct() must collapse the hot key MAP-SIDE (partial
-    aggregation before the exchange), so the anti-join chain never sees
+    aggregation before the exchange), so the selection's join never sees
     a skewed shuffle partition at all — stronger than splitting the
     skew after the fact. Evidence: (a) one row per unique doc_id comes
     back even when the hot id is itself still-todo (the K^2-join guard:
@@ -84,11 +84,11 @@ def test_resume_work_selection_skew_split_under_hot_doc_id(spark, tmp_path):
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.2",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1KB",
         "spark.sql.adaptive.coalescePartitions.enabled": "false",
-        # the selection chains three joins on doc_id; splitting the first
-        # join's hot partition breaks the hash distribution the next join
-        # wants, so plain AQE declines — this knob tells it the straggler
-        # costs more than the extra exchange (true at corpus scale: the
-        # hot partition is a multi-GB task, the re-shuffle is slim ids)
+        # splitting a join's hot partition breaks the doc_id hash
+        # distribution the rest of the plan may want, so plain AQE can
+        # decline — this knob tells it the straggler costs more than an
+        # extra exchange (true at corpus scale: the hot partition is a
+        # multi-GB task, the re-shuffle is slim ids)
         "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
     }
     saved = {k: spark.conf.get(k, None) for k in overrides}
