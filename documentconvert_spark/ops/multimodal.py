@@ -7,18 +7,22 @@ instead keeps media as a side table of binary columns
     media(doc_id, media_ref, media_type, content binary)
 
 and runs decode / feature-extract / resize / frame-sample as Arrow-batched
-``mapInPandas`` operators. Two decode tiers:
+``mapInArrow`` operators. Every op that runs Python per row goes through
+one containment loop, ``_per_doc``: a row that raises becomes the op's
+error row, or drops out when the op has none — never a failed task
+(reference C7). Two decode tiers:
 
 * MINIMEDIA — a deterministic mini-format whose header fields are
   closed-form functions of md5(media_ref), making every operator here
   exactly oracle-checkable in SQL;
-* the REAL codec path (`_codec_decode` / `real_raster_stats`) — the
-  sandbox ships no PIL/librosa/ffmpeg, so images decode through the
-  from-scratch raster layer (kernels/raster.py: baseline JPEG per ITU-T
-  T.81 incl. progressive, PNG, GIF-LZW, BMP, baseline TIFF, VP8L
-  lossless WebP), audio through the from-scratch RIFF/WAVE
-  PCM decoder, and video through the RIFF/AVI frame decoder
-  (kernels/media.decode_avi_frames: MJPG + uncompressed DIB frames).
+* the REAL codec path (`decode_raster_gray` / `_decode_audio` /
+  `_decode_video`) — the sandbox ships no PIL/librosa/ffmpeg, so images
+  decode through the from-scratch raster layer (kernels/raster.py:
+  baseline JPEG per ITU-T T.81 incl. progressive, PNG, GIF-LZW, BMP,
+  baseline TIFF, VP8L lossless WebP), audio through the from-scratch
+  RIFF/WAVE PCM and FLAC decoders, and video through the RIFF/AVI frame
+  decoder (kernels/media.decode_avi_frames: MJPG + uncompressed DIB
+  frames), the MJPEG-in-MP4 carver and the animated-GIF compositor.
 
 The Spark-side plumbing — schemas, batch shapes, partition invariance,
 explode semantics — is identical for both tiers and tested.
@@ -36,12 +40,25 @@ Portable derivations (same arithmetic in Spark SQL and DuckDB):
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from documentconvert_spark.kernels.media import (
+    decode_avi_frames,
+    decode_mp4_frames,
+    decode_wav_samples,
+    extract_media_files,
+    sniff_av_meta,
+    sniff_image_meta,
+)
+from documentconvert_spark.kernels.miniflac import decode_flac_samples
+from documentconvert_spark.kernels.raster import decode_gif_frames, decode_raster_gray, dhash64
 
 MAGIC = b"MINIMEDIA-1.0"
 MEDIA_TYPES = ("image", "audio", "video")
@@ -79,6 +96,34 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
+def _per_doc(df: DataFrame, cols: tuple[str, ...], schema: T.StructType,
+             row_fn: Callable[..., list[tuple]],
+             error_row: Callable[..., tuple] | None = None) -> DataFrame:
+    """The containment loop every per-row op here shares: narrow
+    ``mapInArrow`` over ``df.select(*cols)``. Each input row's values go
+    to ``row_fn``, which returns a list of output tuples in ``schema``
+    order (zero or more: filters and row-expanding ops use the same
+    loop). If it raises, the row becomes ``error_row(*values, exc)``, or
+    drops out when there is no ``error_row`` — a poison row never fails
+    the task (reference C7)."""
+    arrow_schema = to_arrow_schema(schema)
+    names = arrow_schema.names
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            out = []
+            for values in zip(*(c.to_pylist() for c in b.columns)):
+                try:
+                    out.extend(row_fn(*values))
+                except Exception as exc:  # noqa: BLE001 — containment (C7)
+                    if error_row is not None:
+                        out.append(error_row(*values, exc))
+            yield pa.RecordBatch.from_pylist([dict(zip(names, r)) for r in out],
+                                             schema=arrow_schema)
+
+    return df.select(*cols).mapInArrow(run, schema)
+
+
 def _h(media_ref: str) -> int:
     return int(hashlib.md5(media_ref.encode("utf-8")).hexdigest()[:8], 16)
 
@@ -113,142 +158,76 @@ def make_media_bytes(media_ref: str) -> tuple[str, bytes]:
     return f["media_type"], "\n".join(header).encode("utf-8") + b"\n" + payload
 
 
-def _codec_decode(media_type: str, content: bytes):
-    """Real-codec decode path, from-scratch (no PIL/librosa/ffmpeg):
+def _decode_audio(data: bytes):
+    """Audio bytes → (sample_rate, channels, mono int16 samples): real
+    FLAC streams (kernels/miniflac.decode_flac_samples) by their magic,
+    anything else as RIFF/WAVE integer PCM (kernels/media.
+    decode_wav_samples). Both lossless and from scratch; ValueError on
+    bytes neither decodes — per-row containment upstream."""
+    if data[:4] == b"fLaC":
+        return decode_flac_samples(data)
+    return decode_wav_samples(data)
 
-    * image → ("image", (width, height, gray_rows)) via the raster layer
-      (PNG/JPEG/GIF/BMP/TIFF/lossless-WebP decoders, kernels/raster.py)
-    * audio → ("audio", (sample_rate, channels, mono_int16)) for RIFF/WAVE
-      integer PCM (kernels/media.decode_wav_samples) and real FLAC
-      streams (kernels/miniflac.decode_flac_samples)
-    * video → ("video", (width, height, fps, frames)) for RIFF/AVI with
-      MJPG (baseline JPEG) or uncompressed BI_RGB DIB frames
-      (kernels/media.decode_avi_frames) and for MJPEG-in-MP4 via the
-      ISO-BMFF sample-table carver (decode_mp4_frames); modern
-      inter-frame codecs (H.264/VP9) have no from-scratch decoder and
-      raise ValueError.
 
-    ValueError for formats without a decoder (lossy webp/mp3/...) —
-    per-row containment upstream, same contract as every kernel.
-    """
-    if media_type == "image":
-        from documentconvert_spark.kernels.raster import decode_raster_gray
-
-        _fmt, w, h, rows = decode_raster_gray(content)
-        return "image", (w, h, rows)
-    if media_type == "audio":
-        if content[:4] == b"fLaC":
-            from documentconvert_spark.kernels.miniflac import decode_flac_samples
-
-            return "audio", decode_flac_samples(content)
-        from documentconvert_spark.kernels.media import decode_wav_samples
-
-        return "audio", decode_wav_samples(content)
-    if media_type == "video":
-        if content[4:8] == b"ftyp":
-            from documentconvert_spark.kernels.media import decode_mp4_frames
-
-            return "video", decode_mp4_frames(content)
-        from documentconvert_spark.kernels.media import decode_avi_frames
-
-        return "video", decode_avi_frames(content)
-    raise ValueError(
-        "no from-scratch decoder for media type %r in this sandbox" % media_type)
+def _decode_video(data: bytes):
+    """Video bytes → (width, height, gray frames), routed by magic:
+    animated GIF (kernels/raster.decode_gif_frames), MJPEG-in-MP4 via the
+    ISO-BMFF sample-table carver (kernels/media.decode_mp4_frames), else
+    RIFF/AVI with MJPG or uncompressed DIB frames (decode_avi_frames).
+    Inter-frame codecs (H.264/VP9) have no from-scratch decoder and raise
+    ValueError — per-row containment upstream."""
+    if data[:6] in (b"GIF87a", b"GIF89a"):
+        return decode_gif_frames(data)
+    decode = decode_mp4_frames if data[4:8] == b"ftyp" else decode_avi_frames
+    w, h, _fps, frames = decode(data)
+    return w, h, frames
 
 
 def build_media_table(docs_with_spans: DataFrame) -> DataFrame:
     """Figure spans → media side table (J3's dimension side). Narrow:
-    explode + a batched builder UDF; no shuffle."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            types, blobs = [], []
-            for ref in b["media_ref"]:
-                mt, blob = make_media_bytes(ref)
-                types.append(mt)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {
-                    "doc_id": b["doc_id"],
-                    "media_ref": b["media_ref"],
-                    "media_type": types,
-                    "content": blobs,
-                }
-            )
-
+    explode + the batched builder loop; no shuffle. A figure whose
+    media_ref cannot build a MINIMEDIA object (null or empty) drops
+    out."""
     refs = (
         docs_with_spans.select("doc_id", F.explode("spans").alias("s"))
         .filter(F.col("s.kind") == "figure")
         .select("doc_id", F.col("s.media_ref").alias("media_ref"))
     )
-    return refs.mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return _per_doc(refs, ("doc_id", "media_ref"), MEDIA_SCHEMA,
+                    lambda did, ref: [(did, ref, *make_media_bytes(ref))])
 
 
 def decode_media_meta(media: DataFrame) -> DataFrame:
     """Parse typed metadata out of the binary column (Arrow-batched; the
-    decode reads actual bytes — per-row error containment like C7)."""
+    decode reads actual bytes). A malformed or null object becomes an
+    error row: media_type 'unknown', payload_len 0 and the full message
+    (C7)."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {k: [] for k in ("doc_id", "media_ref", "media_type", "width",
-                                    "height", "duration_ms", "fps", "payload_len", "error")}
-            for did, ref, blob in zip(b["doc_id"], b["media_ref"], b["content"]):
-                rows["doc_id"].append(did)
-                rows["media_ref"].append(ref)
-                try:
-                    raw = bytes(blob)
-                    if not raw.startswith(MAGIC):
-                        raise ValueError("malformed media: bad magic")
-                    lines = raw.split(b"\n", 4)  # 4 header lines, then payload
-                    mt = lines[1].decode()
-                    nums = lines[3].decode().split(",")
-                    w, hgt, dur, fps, plen = [int(x) if x else None for x in nums]
-                    if len(lines[4]) != plen:
-                        raise ValueError("malformed media: payload length mismatch")
-                    rows["media_type"].append(mt)
-                    rows["width"].append(w)
-                    rows["height"].append(hgt)
-                    rows["duration_ms"].append(dur)
-                    rows["fps"].append(fps)
-                    rows["payload_len"].append(plen)
-                    rows["error"].append(None)
-                except Exception as exc:  # noqa: BLE001
-                    rows["media_type"].append("unknown")
-                    for k in ("width", "height", "duration_ms", "fps"):
-                        rows[k].append(None)
-                    rows["payload_len"].append(0)
-                    rows["error"].append(str(exc))
-            df = pd.DataFrame(rows)
-            for c in ("width", "height", "duration_ms", "fps", "payload_len"):
-                df[c] = df[c].astype("Int32")
-            yield df
+    def row(did, ref, raw):
+        if not raw.startswith(MAGIC):
+            raise ValueError("malformed media: bad magic")
+        lines = raw.split(b"\n", 4)  # 4 header lines, then payload
+        w, hgt, dur, fps, plen = [int(x) if x else None
+                                  for x in lines[3].decode().split(",")]
+        if len(lines[4]) != plen:
+            raise ValueError("malformed media: payload length mismatch")
+        return [(did, ref, lines[1].decode(), w, hgt, dur, fps, plen, None)]
 
-    return media.mapInPandas(dec, schema=META_SCHEMA)
+    return _per_doc(
+        media, ("doc_id", "media_ref", "content"), META_SCHEMA, row,
+        lambda did, ref, raw, exc: (did, ref, "unknown", None, None, None, None, 0, str(exc)))
 
 
 def sample_frames(meta: DataFrame, stride: int = FRAME_STRIDE) -> DataFrame:
-    """Video frame sampling: one output row per sampled frame (row-expanding
-    mapInPandas — the UDTF shape). frame_md5 stands in for the decoded
-    frame tensor."""
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            refs, idxs, md5s = [], [], []
-            for ref, dur, fps in zip(b["media_ref"], b["duration_ms"], b["fps"]):
-                if pd.isna(dur) or pd.isna(fps):
-                    continue
-                n_frames = int(dur) * int(fps) // 1000
-                for i in range(0, n_frames, stride):
-                    refs.append(ref)
-                    idxs.append(i)
-                    md5s.append(hashlib.md5(f"{ref}:{i}".encode()).hexdigest())
-            yield pd.DataFrame({
-                "media_ref": refs,
-                "frame_idx": pd.array(idxs, dtype="Int32"),
-                "frame_md5": md5s,
-            })
-
-    return meta.filter(F.col("media_type") == "video").mapInPandas(sample, schema=FRAME_SCHEMA)
+    """Video frame sampling: one output row per sampled frame (the
+    row-expanding UDTF shape). frame_md5 stands in for the decoded frame
+    tensor. A video row without duration or fps has no frames to sample
+    and drops out."""
+    return _per_doc(
+        meta.filter(F.col("media_type") == "video"),
+        ("media_ref", "duration_ms", "fps"), FRAME_SCHEMA,
+        lambda ref, dur, fps: [(ref, i, hashlib.md5(f"{ref}:{i}".encode()).hexdigest())
+                               for i in range(0, dur * fps // 1000, stride)])
 
 
 def media_features(media: DataFrame, dim: int = 8) -> DataFrame:
@@ -278,40 +257,46 @@ REAL_MEDIA_SCHEMA = T.StructType(
 )
 
 
+def sniff_media_meta(raw: DataFrame) -> DataFrame:
+    """Header-level inventory of raw media bytes, no decode: container
+    metadata for A/V (kernels/media.sniff_av_meta — MP4 boxes, RIFF
+    chunks, FLAC STREAMINFO, ...), and for bytes that are no A/V
+    container the image header sniff (sniff_image_meta). Both sniffs are
+    total, so corrupt or null bytes come out as format 'unknown', never
+    as an error. → (doc_id, format, width, height, duration_ms,
+    byte_len); narrow, no shuffle."""
+    schema = T.StructType([
+        T.StructField("doc_id", T.StringType(), False),
+        T.StructField("format", T.StringType(), False),
+        T.StructField("width", T.IntegerType(), True),
+        T.StructField("height", T.IntegerType(), True),
+        T.StructField("duration_ms", T.IntegerType(), True),
+        T.StructField("byte_len", T.IntegerType(), False),
+    ])
+
+    def row(did, data):
+        data = data or b""
+        fmt, w, h, dur = sniff_av_meta(data)
+        if fmt == "unknown":  # not an A/V container: try image
+            fmt, w, h = sniff_image_meta(data)
+        return [(did, fmt, w, h, dur, len(data))]
+
+    return _per_doc(raw, ("doc_id", "content"), schema, row)
+
+
 def extract_real_media(docs_raw: DataFrame) -> DataFrame:
     """REAL embedded media: walk each document container (OOXML/ODF zip
     parts, PDF Image XObjects) and emit the actual media bytes plus
     header-sniffed format/dimensions (kernels/media.py — PNG IHDR, JPEG
-    SOFn, no codec libs). Row-expanding mapInPandas, narrow (no shuffle);
-    media_refs match the figure spans the extractors emit, so
-    spans ⋈ media joins work on real corpora exactly as on synthetic
-    (J3, reference document_service.py:259-304)."""
-    from documentconvert_spark.kernels.media import extract_media_files, sniff_image_meta
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {k: [] for k in ("doc_id", "media_ref", "format", "width",
-                                    "height", "byte_len", "content")}
-            for did, blob in zip(b["doc_id"], b["content"]):
-                try:
-                    media = extract_media_files(bytes(blob) if blob is not None else b"")
-                except Exception:  # noqa: BLE001 — containment (C7)
-                    continue
-                for ref, data in media:
-                    fmt, w, h = sniff_image_meta(data)
-                    rows["doc_id"].append(did)
-                    rows["media_ref"].append(ref)
-                    rows["format"].append(fmt)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["byte_len"].append(len(data))
-                    rows["content"].append(data)
-            df = pd.DataFrame(rows)
-            for c in ("width", "height", "byte_len"):
-                df[c] = df[c].astype("Int32") if len(df) else pd.array([], dtype="Int32")
-            yield df
-
-    return docs_raw.select("doc_id", "content").mapInPandas(gen, schema=REAL_MEDIA_SCHEMA)
+    SOFn, no codec libs). Row-expanding and narrow (no shuffle); a
+    container that fails to walk drops out (C7). media_refs match the
+    figure spans the extractors emit, so spans ⋈ media joins work on real
+    corpora exactly as on synthetic (J3, reference
+    document_service.py:259-304)."""
+    return _per_doc(
+        docs_raw, ("doc_id", "content"), REAL_MEDIA_SCHEMA,
+        lambda did, blob: [(did, ref, *sniff_image_meta(data), len(data), data)
+                           for ref, data in extract_media_files(blob or b"")])
 
 
 RASTER_STATS_SCHEMA = T.StructType(
@@ -333,42 +318,21 @@ def real_raster_stats(real_media: DataFrame) -> DataFrame:
     BMP/TIFF/WebP decoders — kernels/raster.py) and emit per-object luma statistics:
     the real-codec analogue of `media_features`, over actual bytes instead
     of MINIMEDIA headers. Formats without a pixel decoder become error
-    rows, mirroring the reference's conversion-failure containment (C7).
-    Arrow-batched mapInPandas, narrow — decode cost parallelizes across
-    the scan; nothing here shuffles."""
-    from documentconvert_spark.kernels.raster import decode_raster_gray
+    rows (format 'unknown'), mirroring the reference's conversion-failure
+    containment (C7). Arrow-batched, narrow — decode cost parallelizes
+    across the scan; nothing here shuffles."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {k: [] for k in ("doc_id", "media_ref", "format", "width",
-                                    "height", "mean_luma", "dark_frac", "error")}
-            for did, ref, blob in zip(b["doc_id"], b["media_ref"], b["content"]):
-                rows["doc_id"].append(did)
-                rows["media_ref"].append(ref)
-                try:
-                    fmt, w, h, gray = decode_raster_gray(bytes(blob))
-                    rows["format"].append(fmt)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    # float64 sums of ≤4 Mi bytes are exact integers, so
-                    # the mean does not depend on summation order
-                    rows["mean_luma"].append(round(float(gray.mean()), 3))
-                    rows["dark_frac"].append(round(float((gray < 128).mean()), 3))
-                    rows["error"].append(None)
-                except Exception as exc:  # noqa: BLE001 — containment (C7)
-                    rows["format"].append("unknown")
-                    rows["width"].append(None)
-                    rows["height"].append(None)
-                    rows["mean_luma"].append(None)
-                    rows["dark_frac"].append(None)
-                    rows["error"].append(str(exc)[:200])
-            df = pd.DataFrame(rows)
-            for c in ("width", "height"):
-                df[c] = df[c].astype("Int32") if len(df) else pd.array([], dtype="Int32")
-            yield df
+    def row(did, ref, blob):
+        fmt, w, h, gray = decode_raster_gray(blob)
+        # float64 sums of ≤4 Mi bytes are exact integers, so the mean
+        # does not depend on summation order
+        return [(did, ref, fmt, w, h, round(float(gray.mean()), 3),
+                 round(float((gray < 128).mean()), 3), None)]
 
-    return real_media.select("doc_id", "media_ref", "content").mapInPandas(
-        stats, schema=RASTER_STATS_SCHEMA)
+    return _per_doc(
+        real_media, ("doc_id", "media_ref", "content"), RASTER_STATS_SCHEMA, row,
+        lambda did, ref, blob, exc: (did, ref, "unknown", None, None, None, None,
+                                     str(exc)[:200]))
 
 
 VIDEO_FRAMES_SCHEMA = T.StructType(
@@ -384,10 +348,9 @@ VIDEO_FRAMES_SCHEMA = T.StructType(
 
 
 def real_video_frame_stats(videos: DataFrame) -> DataFrame:
-    """Decode REAL video bytes to FRAMES (from-scratch RIFF/AVI walker +
-    MJPG/DIB frame decoders — kernels/media.decode_avi_frames — the
-    ISO-BMFF MJPEG-in-MP4 sample-table carver, decode_mp4_frames, or the
-    animated-GIF compositor, kernels/raster.decode_gif_frames, routed by
+    """Decode REAL video bytes to FRAMES (`_decode_video`: from-scratch
+    RIFF/AVI walker + MJPG/DIB frame decoders, the ISO-BMFF MJPEG-in-MP4
+    sample-table carver, or the animated-GIF compositor, routed by
     magic) and emit one row per frame with its dark-pixel count.
     `n_dark` at threshold 128 is exactly oracle-checkable on bilevel
     sources even through the lossy MJPG path (the all-ones-quant encoder
@@ -395,93 +358,43 @@ def real_video_frame_stats(videos: DataFrame) -> DataFrame:
     the threshold); GIF is lossless, so its counts are exact on any
     source. Undecodable bytes (inter-frame codecs, corrupt containers)
     become a single error row at frame_idx=-1 — containment (C7), not
-    silence. Arrow-batched mapInPandas, narrow: decode parallelizes
-    across the scan; nothing here shuffles, and frame pixels are charged
-    against a per-document budget inside the kernel."""
-    import numpy as np
+    silence. Arrow-batched, narrow: decode parallelizes across the scan;
+    nothing here shuffles, and frame pixels are charged against a
+    per-document budget inside the kernel."""
 
-    from documentconvert_spark.kernels.media import (
-        decode_avi_frames, decode_mp4_frames)
-    from documentconvert_spark.kernels.raster import decode_gif_frames
+    def row(did, blob):
+        w, h, frames = _decode_video(blob)
+        return [(did, i, w, h, int(np.count_nonzero(fr < 128)), None)
+                for i, fr in enumerate(frames)]
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "width", "height",
-                                    "n_dark", "error")}
-            for did, blob in zip(b["doc_id"], b["content"]):
-                try:
-                    data = bytes(blob)
-                    if data[:6] in (b"GIF87a", b"GIF89a"):
-                        w, h, frames = decode_gif_frames(data)
-                    elif data[4:8] == b"ftyp":
-                        w, h, _fps, frames = decode_mp4_frames(data)
-                    else:
-                        w, h, _fps, frames = decode_avi_frames(data)
-                    for i, fr in enumerate(frames):
-                        rows["doc_id"].append(did)
-                        rows["frame_idx"].append(i)
-                        rows["width"].append(w)
-                        rows["height"].append(h)
-                        rows["n_dark"].append(int(np.count_nonzero(fr < 128)))
-                        rows["error"].append(None)
-                except Exception as exc:  # noqa: BLE001 — containment (C7)
-                    rows["doc_id"].append(did)
-                    rows["frame_idx"].append(-1)
-                    rows["width"].append(None)
-                    rows["height"].append(None)
-                    rows["n_dark"].append(None)
-                    rows["error"].append(str(exc)[:200])
-            df = pd.DataFrame(rows)
-            df["frame_idx"] = df["frame_idx"].astype("int32") if len(df) else pd.array([], dtype="int32")
-            for c in ("width", "height", "n_dark"):
-                df[c] = df[c].astype("Int32") if len(df) else pd.array([], dtype="Int32")
-            yield df
-
-    return videos.select("doc_id", "content").mapInPandas(
-        stats, schema=VIDEO_FRAMES_SCHEMA)
+    return _per_doc(
+        videos, ("doc_id", "content"), VIDEO_FRAMES_SCHEMA, row,
+        lambda did, blob, exc: (did, -1, None, None, None, str(exc)[:200]))
 
 
 def audio_fingerprint_table(audios: DataFrame, chunk: int = 250) -> DataFrame:
     """Real WAV/FLAC bytes → (doc_id, chunk_idx, fp): decode to mono and
     fingerprint fixed-size chunks with 64-bit FNV-1a (int64-safe).
-    Undecodable blobs drop out (containment — a bad blob must never fail
-    the stage). Narrow mapInPandas: decode where the bytes are scanned;
+    Undecodable or null blobs drop out (containment — a bad blob must
+    never fail the stage). Narrow: decode where the bytes are scanned;
     only the ~16-byte fingerprints flow on."""
-    from documentconvert_spark.kernels.media import decode_wav_samples
-    from documentconvert_spark.kernels.miniflac import decode_flac_samples
-
     schema = T.StructType([
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("chunk_idx", T.IntegerType(), False),
         T.StructField("fp", T.LongType(), False),
     ])
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {"doc_id": [], "chunk_idx": [], "fp": []}
-            for did, blob in zip(b["doc_id"], b["content"]):
-                data = bytes(blob)
-                decode = (decode_flac_samples if data[:4] == b"fLaC"
-                          else decode_wav_samples)
-                try:
-                    _sr, _ch, mono = decode(data)
-                except Exception:  # noqa: BLE001 — containment (C7)
-                    continue
-                i = 0
-                for lo in range(0, len(mono) - chunk + 1, chunk):
-                    h = 0xCBF29CE484222325
-                    for v in mono[lo:lo + chunk]:
-                        h = ((h ^ (v & 0xFFFF)) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-                    rows["doc_id"].append(did)
-                    rows["chunk_idx"].append(i)
-                    rows["fp"].append(h & 0x7FFFFFFFFFFFFFFF)
-                    i += 1
-            df = pd.DataFrame(rows)
-            df["chunk_idx"] = df["chunk_idx"].astype("int32") if len(df) else pd.array([], dtype="int32")
-            df["fp"] = df["fp"].astype("int64") if len(df) else pd.array([], dtype="int64")
-            yield df
+    def row(did, blob):
+        _sr, _ch, mono = _decode_audio(blob)
+        out = []
+        for i, lo in enumerate(range(0, len(mono) - chunk + 1, chunk)):
+            h = 0xCBF29CE484222325
+            for v in mono[lo:lo + chunk]:
+                h = ((h ^ (v & 0xFFFF)) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
+            out.append((did, i, h & 0x7FFFFFFFFFFFFFFF))
+        return out
 
-    return audios.select("doc_id", "content").mapInPandas(gen, schema=schema)
+    return _per_doc(audios, ("doc_id", "content"), schema, row)
 
 
 def multiset_jaccard_pairs(sig: DataFrame, key_col: str, order_col: str,
@@ -527,31 +440,19 @@ def image_dhash_table(images: DataFrame) -> DataFrame:
     """Real image bytes (any decodable format) → (doc_id, dhash): decode
     through the raster layer and difference-hash the gray raster
     (kernels/raster.dhash64 — 9×8 integer area-downsample, one bit per
-    horizontal gradient, signed int64). Undecodable blobs drop out
-    (containment). Narrow mapInPandas: pixels never leave the scan;
-    only the 8-byte hash flows into any downstream join."""
-    from documentconvert_spark.kernels.raster import decode_raster_gray, dhash64
-
+    horizontal gradient, signed int64). Undecodable or null blobs drop
+    out (containment). Narrow: pixels never leave the scan; only the
+    8-byte hash flows into any downstream join."""
     schema = T.StructType([
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("dhash", T.LongType(), False),
     ])
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {"doc_id": [], "dhash": []}
-            for did, blob in zip(b["doc_id"], b["content"]):
-                try:
-                    _fmt, w, h, gray = decode_raster_gray(bytes(blob))
-                    rows["doc_id"].append(did)
-                    rows["dhash"].append(dhash64(w, h, gray))
-                except Exception:  # noqa: BLE001 — containment (C7)
-                    continue
-            df = pd.DataFrame(rows)
-            df["dhash"] = df["dhash"].astype("int64") if len(df) else pd.array([], dtype="int64")
-            yield df
+    def row(did, blob):
+        _fmt, w, h, gray = decode_raster_gray(blob)
+        return [(did, dhash64(w, h, gray))]
 
-    return images.select("doc_id", "content").mapInPandas(gen, schema=schema)
+    return _per_doc(images, ("doc_id", "content"), schema, row)
 
 
 def dhash_hamming_pairs(sig: DataFrame, max_dist: int = 6) -> DataFrame:
@@ -599,52 +500,24 @@ AUDIO_STATS_SCHEMA = T.StructType(
 
 
 def real_audio_stats(audios: DataFrame) -> DataFrame:
-    """Decode REAL audio bytes to SAMPLES — RIFF/WAVE integer PCM
-    (kernels/media.decode_wav_samples) or FLAC streams
-    (kernels/miniflac.decode_flac_samples), both from scratch, channels
-    floor-averaged to mono int16 — and emit per-document sample
+    """Decode REAL audio bytes to SAMPLES (`_decode_audio`: RIFF/WAVE
+    integer PCM or FLAC streams, both from scratch, channels
+    floor-averaged to mono int16) and emit per-document sample
     statistics. Both codecs are lossless, so `sum_abs` and `peak` are
     EXACT integers an oracle can derive from the source samples without
     touching the decoders — the audio analogue of real_pixel_stats /
-    real_video_frames. Unsupported or corrupt bytes become error rows
-    (containment, C7). Arrow-batched mapInPandas, narrow: no shuffle,
-    decoded size capped inside the kernels."""
-    import numpy as np
+    real_video_frames. Unsupported, corrupt or null bytes become error
+    rows (containment, C7). Arrow-batched, narrow: no shuffle, decoded
+    size capped inside the kernels."""
 
-    from documentconvert_spark.kernels.media import decode_wav_samples
-    from documentconvert_spark.kernels.miniflac import decode_flac_samples
+    def row(did, blob):
+        sr, ch, mono = _decode_audio(blob)
+        # data chunks run up to 256 MiB: vectorize, and take |x| in
+        # int64 (|int16 -32768| overflows int16)
+        a = np.abs(np.frombuffer(mono, dtype=np.int16).astype(np.int64))
+        return [(did, sr, ch, len(mono), int(a.sum()),
+                 int(a.max()) if len(a) else 0, None)]
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {k: [] for k in ("doc_id", "sample_rate", "channels",
-                                    "n_samples", "sum_abs", "peak", "error")}
-            for did, blob in zip(b["doc_id"], b["content"]):
-                rows["doc_id"].append(did)
-                try:
-                    raw = bytes(blob)
-                    decode = (decode_flac_samples if raw[:4] == b"fLaC"
-                              else decode_wav_samples)
-                    sr, ch, mono = decode(raw)
-                    # data chunks run up to 256 MiB: vectorize, and take
-                    # |x| in int64 (|int16 -32768| overflows int16)
-                    a = np.abs(np.frombuffer(mono, dtype=np.int16)
-                               .astype(np.int64))
-                    rows["sample_rate"].append(sr)
-                    rows["channels"].append(ch)
-                    rows["n_samples"].append(len(mono))
-                    rows["sum_abs"].append(int(a.sum()) if len(a) else 0)
-                    rows["peak"].append(int(a.max()) if len(a) else 0)
-                    rows["error"].append(None)
-                except Exception as exc:  # noqa: BLE001 — containment (C7)
-                    for c in ("sample_rate", "channels", "n_samples",
-                              "sum_abs", "peak"):
-                        rows[c].append(None)
-                    rows["error"].append(str(exc)[:200])
-            df = pd.DataFrame(rows)
-            for c in ("sample_rate", "channels", "n_samples", "peak"):
-                df[c] = df[c].astype("Int32") if len(df) else pd.array([], dtype="Int32")
-            df["sum_abs"] = df["sum_abs"].astype("Int64") if len(df) else pd.array([], dtype="Int64")
-            yield df
-
-    return audios.select("doc_id", "content").mapInPandas(
-        stats, schema=AUDIO_STATS_SCHEMA)
+    return _per_doc(
+        audios, ("doc_id", "content"), AUDIO_STATS_SCHEMA, row,
+        lambda did, blob, exc: (did, None, None, None, None, None, str(exc)[:200]))

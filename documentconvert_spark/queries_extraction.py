@@ -40,46 +40,31 @@ def _contract_corpus():
     return generate_corpus(N_CONTRACT_DOCS, seed=_SEED, big_every=_BIG_EVERY)
 
 
+def _golden(path: str, fields: list[tuple], rows_fn) -> None:
+    """Write one golden parquet from its generator unless it exists:
+    ``rows_fn()`` yields tuples in ``fields`` order and runs only when
+    the file is missing, so a committed golden never regenerates."""
+    if os.path.exists(path):
+        return
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    schema = pa.schema(fields)
+    pq.write_table(pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows_fn()], schema=schema), path)
+
+
 def _ensure_expected_parquet() -> None:
     """Materialize the generator's expectations (idempotent, deterministic)."""
-    if os.path.exists(EXPECTED_SPANS_PARQUET) and os.path.exists(EXPECTED_DOCS_PARQUET):
-        return
-    os.makedirs(_RES_DIR, exist_ok=True)
-    docs = _contract_corpus()
-    span_rows = {"doc_id": [], "offset": [], "kind": [], "media_ref": [], "text": [], "level": []}
-    doc_rows = {"doc_id": [], "status": [], "n_spans": [], "markdown": []}
-    for d in docs:
-        if d.expect_error:
-            doc_rows["doc_id"].append(d.doc_id)
-            doc_rows["status"].append("failed")
-            doc_rows["n_spans"].append(None)
-            doc_rows["markdown"].append(None)
-            continue
-        doc_rows["doc_id"].append(d.doc_id)
-        doc_rows["status"].append("completed")
-        doc_rows["n_spans"].append(len(d.expected))
-        doc_rows["markdown"].append(spans_to_markdown(d.expected))
-        for s in d.expected:
-            span_rows["doc_id"].append(d.doc_id)
-            span_rows["offset"].append(s.offset)
-            span_rows["kind"].append(s.kind)
-            span_rows["media_ref"].append(s.media_ref)
-            span_rows["text"].append(s.text)
-            span_rows["level"].append(s.level)
-    pq.write_table(
-        pa.table(span_rows, schema=pa.schema([
-            ("doc_id", pa.string()), ("offset", pa.int32()), ("kind", pa.string()),
-            ("media_ref", pa.string()), ("text", pa.string()), ("level", pa.int32()),
-        ])),
-        EXPECTED_SPANS_PARQUET,
-    )
-    pq.write_table(
-        pa.table(doc_rows, schema=pa.schema([
-            ("doc_id", pa.string()), ("status", pa.string()),
-            ("n_spans", pa.int32()), ("markdown", pa.string()),
-        ])),
-        EXPECTED_DOCS_PARQUET,
-    )
+    _golden(EXPECTED_SPANS_PARQUET, [
+        ("doc_id", pa.string()), ("offset", pa.int32()), ("kind", pa.string()),
+        ("media_ref", pa.string()), ("text", pa.string()), ("level", pa.int32()),
+    ], lambda: [(d.doc_id, s.offset, s.kind, s.media_ref, s.text, s.level)
+                for d in _contract_corpus() if not d.expect_error for s in d.expected])
+    _golden(EXPECTED_DOCS_PARQUET, [
+        ("doc_id", pa.string()), ("status", pa.string()),
+        ("n_spans", pa.int32()), ("markdown", pa.string()),
+    ], lambda: [(d.doc_id, "failed", None, None) if d.expect_error
+                else (d.doc_id, "completed", len(d.expected), spans_to_markdown(d.expected))
+                for d in _contract_corpus()])
 
 
 def _raw_df(spark: SparkSession) -> DataFrame:
@@ -658,33 +643,23 @@ def _real_image_fixtures() -> list[tuple]:
 
 
 def _ensure_real_images_parquet() -> None:
-    if os.path.exists(EXPECTED_REAL_IMAGES_PARQUET):
-        return
     import hashlib
 
     from documentconvert_spark.kernels.media import image_file_ref
 
-    os.makedirs(_RES_DIR, exist_ok=True)
-    rows = {k: [] for k in ("doc_id", "status", "media_ref", "format",
-                            "width", "height", "byte_len", "content_md5")}
-    for doc_id, content, fmt, w, h in _real_image_fixtures():
-        ok = fmt is not None
-        rows["doc_id"].append(doc_id)
-        rows["status"].append("completed" if ok else "failed")
-        rows["media_ref"].append(image_file_ref(content, fmt) if ok else None)
-        rows["format"].append(fmt)
-        rows["width"].append(w)
-        rows["height"].append(h)
-        rows["byte_len"].append(len(content) if ok else None)
-        rows["content_md5"].append(hashlib.md5(content).hexdigest() if ok else None)
-    pq.write_table(
-        pa.table(rows, schema=pa.schema([
-            ("doc_id", pa.string()), ("status", pa.string()), ("media_ref", pa.string()),
-            ("format", pa.string()), ("width", pa.int32()), ("height", pa.int32()),
-            ("byte_len", pa.int32()), ("content_md5", pa.string()),
-        ])),
-        EXPECTED_REAL_IMAGES_PARQUET,
-    )
+    def rows():
+        for doc_id, content, fmt, w, h in _real_image_fixtures():
+            if fmt is None:
+                yield doc_id, "failed", None, None, w, h, None, None
+            else:
+                yield (doc_id, "completed", image_file_ref(content, fmt), fmt, w, h,
+                       len(content), hashlib.md5(content).hexdigest())
+
+    _golden(EXPECTED_REAL_IMAGES_PARQUET, [
+        ("doc_id", pa.string()), ("status", pa.string()), ("media_ref", pa.string()),
+        ("format", pa.string()), ("width", pa.int32()), ("height", pa.int32()),
+        ("byte_len", pa.int32()), ("content_md5", pa.string()),
+    ], rows)
 
 
 def q_real_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -858,67 +833,22 @@ def _real_av_fixtures() -> list[tuple]:
 
 
 def _ensure_real_av_parquet() -> None:
-    if os.path.exists(EXPECTED_REAL_AV_PARQUET):
-        return
-    os.makedirs(_RES_DIR, exist_ok=True)
-    rows = {k: [] for k in ("doc_id", "format", "width", "height", "duration_ms", "byte_len")}
-    for doc_id, content, fmt, w, h, dur in _real_av_fixtures():
-        rows["doc_id"].append(doc_id)
-        rows["format"].append(fmt)
-        rows["width"].append(w)
-        rows["height"].append(h)
-        rows["duration_ms"].append(dur)
-        rows["byte_len"].append(len(content))
-    pq.write_table(
-        pa.table(rows, schema=pa.schema([
-            ("doc_id", pa.string()), ("format", pa.string()), ("width", pa.int32()),
-            ("height", pa.int32()), ("duration_ms", pa.int32()), ("byte_len", pa.int32()),
-        ])),
-        EXPECTED_REAL_AV_PARQUET,
-    )
+    _golden(EXPECTED_REAL_AV_PARQUET, [
+        ("doc_id", pa.string()), ("format", pa.string()), ("width", pa.int32()),
+        ("height", pa.int32()), ("duration_ms", pa.int32()), ("byte_len", pa.int32()),
+    ], lambda: [(doc_id, fmt, w, h, dur, len(content))
+                for doc_id, content, fmt, w, h, dur in _real_av_fixtures()])
 
 
 def q_real_av_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw A/V bytes → container metadata via an Arrow-batched mapInPandas
-    sniff (narrow, no shuffle). Corrupt bytes sniff 'unknown', never error."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from documentconvert_spark.kernels.media import sniff_av_meta
+    """Raw A/V bytes → container metadata through the shared header sniff
+    (ops.multimodal.sniff_media_meta; narrow, no shuffle). Corrupt bytes
+    sniff 'unknown', never error."""
+    from documentconvert_spark.ops.multimodal import sniff_media_meta
 
     _ensure_real_av_parquet()
     rows = [(d, c) for d, c, *_rest in _real_av_fixtures()]
-    raw = spark.createDataFrame(rows, "doc_id string, content binary")
-
-    schema = T.StructType([
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("format", T.StringType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.IntegerType(), True),
-        T.StructField("byte_len", T.IntegerType(), False),
-    ])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in ("doc_id", "format", "width", "height", "duration_ms", "byte_len")}
-            for did, blob in zip(b["doc_id"], b["content"]):
-                data = bytes(blob) if blob is not None else b""
-                fmt, w, h, dur = sniff_av_meta(data)
-                out["doc_id"].append(did)
-                out["format"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["duration_ms"].append(dur)
-                out["byte_len"].append(len(data))
-            df = pd.DataFrame(out)
-            for c in ("width", "height", "duration_ms", "byte_len"):
-                df[c] = pd.array(df[c], dtype="Int32")
-            yield df
-
-    return raw.mapInPandas(gen, schema=schema)
+    return sniff_media_meta(spark.createDataFrame(rows, "doc_id string, content binary"))
 
 
 SQL_REAL_AV_META = f"""
@@ -937,6 +867,13 @@ FROM read_parquet('{EXPECTED_REAL_AV_PARQUET}')
 # exact containment error strings.
 
 EXPECTED_REAL_VIDEO_PARQUET = os.path.join(_RES_DIR, "expected_real_video.parquet")
+
+# per-frame golden columns, shared by the AVI/MP4/GIF frame goldens and
+# the video dedup signatures (the error-carrying ones append "error")
+_FRAME_FIELDS = [
+    ("doc_id", pa.string()), ("frame_idx", pa.int32()),
+    ("width", pa.int32()), ("height", pa.int32()), ("n_dark", pa.int32()),
+]
 
 
 def _real_video_fixtures() -> tuple[list[tuple[str, bytes]], list[tuple]]:
@@ -988,26 +925,8 @@ def _real_video_fixtures() -> tuple[list[tuple[str, bytes]], list[tuple]]:
 
 
 def _ensure_real_video_parquet() -> None:
-    if os.path.exists(EXPECTED_REAL_VIDEO_PARQUET):
-        return
-    os.makedirs(_RES_DIR, exist_ok=True)
-    _raw, exp = _real_video_fixtures()
-    cols = {k: [] for k in ("doc_id", "frame_idx", "width", "height", "n_dark", "error")}
-    for did, idx, w, h, nd, err in exp:
-        cols["doc_id"].append(did)
-        cols["frame_idx"].append(idx)
-        cols["width"].append(w)
-        cols["height"].append(h)
-        cols["n_dark"].append(nd)
-        cols["error"].append(err)
-    pq.write_table(
-        pa.table(cols, schema=pa.schema([
-            ("doc_id", pa.string()), ("frame_idx", pa.int32()),
-            ("width", pa.int32()), ("height", pa.int32()),
-            ("n_dark", pa.int32()), ("error", pa.string()),
-        ])),
-        EXPECTED_REAL_VIDEO_PARQUET,
-    )
+    _golden(EXPECTED_REAL_VIDEO_PARQUET, _FRAME_FIELDS + [("error", pa.string())],
+            lambda: _real_video_fixtures()[1])
 
 
 def q_real_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1135,24 +1054,12 @@ def _real_audio_fixtures() -> tuple[list[tuple[str, bytes]], list[tuple]]:
 
 
 def _ensure_real_audio_parquet() -> None:
-    if os.path.exists(EXPECTED_REAL_AUDIO_PARQUET):
-        return
-    os.makedirs(_RES_DIR, exist_ok=True)
-    _raw, exp = _real_audio_fixtures()
-    cols = {k: [] for k in ("doc_id", "sample_rate", "channels", "n_samples",
-                            "sum_abs", "peak", "error")}
-    for row in exp:
-        for k, v in zip(cols, row):
-            cols[k].append(v)
-    pq.write_table(
-        pa.table(cols, schema=pa.schema([
-            ("doc_id", pa.string()), ("sample_rate", pa.int32()),
-            ("channels", pa.int32()), ("n_samples", pa.int32()),
-            ("sum_abs", pa.int64()), ("peak", pa.int32()),
-            ("error", pa.string()),
-        ])),
-        EXPECTED_REAL_AUDIO_PARQUET,
-    )
+    _golden(EXPECTED_REAL_AUDIO_PARQUET, [
+        ("doc_id", pa.string()), ("sample_rate", pa.int32()),
+        ("channels", pa.int32()), ("n_samples", pa.int32()),
+        ("sum_abs", pa.int64()), ("peak", pa.int32()),
+        ("error", pa.string()),
+    ], lambda: _real_audio_fixtures()[1])
 
 
 def q_real_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1177,7 +1084,7 @@ FROM read_parquet('{EXPECTED_REAL_AUDIO_PARQUET}')
 # ------------------------------------------------------------ video frame dedup
 # Near-duplicate VIDEO detection by frame signatures — the multimodal
 # member of the dedup family. Scale shape: frames are decoded where the
-# bytes are scanned (narrow mapInPandas), and only the ~20-byte per-frame
+# bytes are scanned (narrow mapInArrow), and only the ~20-byte per-frame
 # signatures shuffle into the pairwise self-join; the video content never
 # leaves its scan partition. The oracle computes the same integer-only
 # Jaccard in SQL over a golden signature table derived from the SOURCE
@@ -1243,22 +1150,7 @@ def _video_corpus() -> tuple[list[tuple[str, bytes]], list[tuple]]:
 
 
 def _ensure_video_sigs_parquet() -> None:
-    if os.path.exists(EXPECTED_VIDEO_SIGS_PARQUET):
-        return
-    os.makedirs(_RES_DIR, exist_ok=True)
-    _raw, sigs = _video_corpus()
-    cols = {k: [] for k in ("doc_id", "frame_idx", "width", "height", "n_dark")}
-    for row in sigs:
-        for k, v in zip(cols, row):
-            cols[k].append(v)
-    pq.write_table(
-        pa.table(cols, schema=pa.schema([
-            ("doc_id", pa.string()), ("frame_idx", pa.int32()),
-            ("width", pa.int32()), ("height", pa.int32()),
-            ("n_dark", pa.int32()),
-        ])),
-        EXPECTED_VIDEO_SIGS_PARQUET,
-    )
+    _golden(EXPECTED_VIDEO_SIGS_PARQUET, _FRAME_FIELDS, lambda: _video_corpus()[1])
 
 
 def q_dedup_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1443,22 +1335,9 @@ def _audio_corpus() -> tuple[list[tuple[str, bytes]], list[tuple]]:
 
 
 def _ensure_audio_fps_parquet() -> None:
-    if os.path.exists(EXPECTED_AUDIO_FPS_PARQUET):
-        return
-    os.makedirs(_RES_DIR, exist_ok=True)
-    _raw, fps = _audio_corpus()
-    cols = {"doc_id": [], "chunk_idx": [], "fp": []}
-    for did, idx, fp in fps:
-        cols["doc_id"].append(did)
-        cols["chunk_idx"].append(idx)
-        cols["fp"].append(fp)
-    pq.write_table(
-        pa.table(cols, schema=pa.schema([
-            ("doc_id", pa.string()), ("chunk_idx", pa.int32()),
-            ("fp", pa.int64()),
-        ])),
-        EXPECTED_AUDIO_FPS_PARQUET,
-    )
+    _golden(EXPECTED_AUDIO_FPS_PARQUET, [
+        ("doc_id", pa.string()), ("chunk_idx", pa.int32()), ("fp", pa.int64()),
+    ], lambda: _audio_corpus()[1])
 
 
 def q_dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1503,7 +1382,7 @@ WHERE m.matches * {_ADUP_DEN} >= (ca.n + cb.n - m.matches) * {_ADUP_NUM}
 # Near-duplicate IMAGE detection by perceptual difference-hash — the
 # image member of the modality-dedup family (text, embeddings, video
 # frames, audio chunks). Scale shape: pixels decode where the bytes are
-# scanned (narrow mapInPandas), only 8-byte hashes shuffle into the
+# scanned (narrow mapInArrow), only 8-byte hashes shuffle into the
 # banded candidate join. The oracle recomputes the same integer dhash
 # in the generator from SOURCE gray grids and pairs them in SQL, so the
 # driver check validates decode (PNG + BMP cross-codec) AND the banded
@@ -1568,19 +1447,8 @@ def _image_dedup_corpus() -> tuple[list[tuple[str, bytes]], list[tuple]]:
 
 
 def _ensure_image_dhash_parquet(sigs: list[tuple]) -> None:
-    if os.path.exists(EXPECTED_IMAGE_DHASH_PARQUET):
-        return
-    os.makedirs(_RES_DIR, exist_ok=True)
-    cols = {"doc_id": [], "dhash": []}
-    for did, dh in sigs:
-        cols["doc_id"].append(did)
-        cols["dhash"].append(dh)
-    pq.write_table(
-        pa.table(cols, schema=pa.schema([
-            ("doc_id", pa.string()), ("dhash", pa.int64()),
-        ])),
-        EXPECTED_IMAGE_DHASH_PARQUET,
-    )
+    _golden(EXPECTED_IMAGE_DHASH_PARQUET,
+            [("doc_id", pa.string()), ("dhash", pa.int64())], lambda: sigs)
 
 
 def q_dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1667,21 +1535,7 @@ def _gif_anim_corpus() -> tuple[list[tuple[str, bytes]], list[tuple]]:
 
 
 def _ensure_gif_frames_parquet(sigs: list[tuple]) -> None:
-    if os.path.exists(EXPECTED_GIF_FRAMES_PARQUET):
-        return
-    os.makedirs(_RES_DIR, exist_ok=True)
-    cols = {k: [] for k in ("doc_id", "frame_idx", "width", "height", "n_dark")}
-    for row in sigs:
-        for k, v in zip(cols, row):
-            cols[k].append(v)
-    pq.write_table(
-        pa.table(cols, schema=pa.schema([
-            ("doc_id", pa.string()), ("frame_idx", pa.int32()),
-            ("width", pa.int32()), ("height", pa.int32()),
-            ("n_dark", pa.int32()),
-        ])),
-        EXPECTED_GIF_FRAMES_PARQUET,
-    )
+    _golden(EXPECTED_GIF_FRAMES_PARQUET, _FRAME_FIELDS, lambda: sigs)
 
 
 def q_real_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1767,26 +1621,8 @@ def _real_mp4_fixtures() -> tuple[list[tuple[str, bytes]], list[tuple]]:
 
 
 def _ensure_mp4_frames_parquet() -> None:
-    if os.path.exists(EXPECTED_MP4_FRAMES_PARQUET):
-        return
-    os.makedirs(_RES_DIR, exist_ok=True)
-    _raw, exp = _real_mp4_fixtures()
-    cols = {k: [] for k in ("doc_id", "frame_idx", "width", "height", "n_dark", "error")}
-    for did, idx, w, h, nd, err in exp:
-        cols["doc_id"].append(did)
-        cols["frame_idx"].append(idx)
-        cols["width"].append(w)
-        cols["height"].append(h)
-        cols["n_dark"].append(nd)
-        cols["error"].append(err)
-    pq.write_table(
-        pa.table(cols, schema=pa.schema([
-            ("doc_id", pa.string()), ("frame_idx", pa.int32()),
-            ("width", pa.int32()), ("height", pa.int32()),
-            ("n_dark", pa.int32()), ("error", pa.string()),
-        ])),
-        EXPECTED_MP4_FRAMES_PARQUET,
-    )
+    _golden(EXPECTED_MP4_FRAMES_PARQUET, _FRAME_FIELDS + [("error", pa.string())],
+            lambda: _real_mp4_fixtures()[1])
 
 
 def q_real_mp4_frames(spark: SparkSession, sf_dir: str) -> DataFrame:

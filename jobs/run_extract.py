@@ -72,18 +72,7 @@ def main() -> None:
         "<state>_callbacks with the declared status-code/message/time "
         "fields; already-delivered docs are skipped on rerun",
     )
-    ap.add_argument(
-        "--warmup-docs",
-        type=int,
-        default=0,
-        help="process this many docs against a throwaway state first, so "
-        "JIT/codegen compile and Python-worker imports don't land in the "
-        "first measured round (benchmarking aid; output is discarded)",
-    )
     args = ap.parse_args()
-
-    import shutil
-    import tempfile
 
     from documentconvert_spark.pipeline import run_extraction_job
     from documentconvert_spark.session import build_session
@@ -92,19 +81,6 @@ def main() -> None:
     spark = build_session(app_name="documentconvert-extract", master=args.master)
     docs = spark.read.parquet(args.input)
     state = StateStore(spark, args.state)
-
-    if args.warmup_docs > 0:
-        scratch = tempfile.mkdtemp(prefix="extract_warmup_")
-        try:
-            run_extraction_job(
-                spark,
-                docs.limit(args.warmup_docs),
-                f"{scratch}/out",
-                StateStore(spark, f"{scratch}/state"),
-                target_partitions=args.partitions,
-            )
-        finally:
-            shutil.rmtree(scratch, ignore_errors=True)
 
     backoff = 1.0
     for rnd in range(1, args.rounds + 1):

@@ -47,13 +47,8 @@ def main() -> None:
     ap.add_argument("--master", default=None, help="override master (local testing)")
     args = ap.parse_args()
 
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    from documentconvert_spark.kernels.media import sniff_av_meta, sniff_image_meta
     from documentconvert_spark.ops.multimodal import (
         audio_fingerprint_table,
         dhash_hamming_pairs,
@@ -61,6 +56,7 @@ def main() -> None:
         multiset_jaccard_pairs,
         real_audio_stats,
         real_video_frame_stats,
+        sniff_media_meta,
     )
     from documentconvert_spark.session import build_session
     from documentconvert_spark.tableio import read_table
@@ -70,34 +66,7 @@ def main() -> None:
     n_in = media.count()
 
     # 1) sniff inventory — header-level only, no decode
-    sniff_schema = T.StructType([
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("format", T.StringType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.IntegerType(), True),
-    ])
-
-    def sniff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {k: [] for k in ("doc_id", "format", "width", "height", "duration_ms")}
-            for did, blob in zip(b["doc_id"], b["content"]):
-                data = bytes(blob) if blob is not None else b""
-                fmt, w, h, dur = sniff_av_meta(data)
-                if fmt == "unknown":  # not an A/V container: try image
-                    fmt, w, h = sniff_image_meta(data)
-                    dur = None
-                rows["doc_id"].append(did)
-                rows["format"].append(fmt)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["duration_ms"].append(dur)
-            df = pd.DataFrame(rows)
-            for c in ("width", "height", "duration_ms"):
-                df[c] = pd.array(df[c], dtype="Int32")
-            yield df
-
-    inv = media.mapInPandas(sniff, schema=sniff_schema).cache()
+    inv = sniff_media_meta(media).drop("byte_len").cache()
     inv.coalesce(args.files).write.mode("overwrite").parquet(args.output + "/inventory")
     by_fmt = {r["format"]: r["n"] for r in
               inv.groupBy("format").agg(F.count("*").alias("n")).collect()}

@@ -2,8 +2,9 @@
 
 Generates a deterministic in-memory corpus of real AVI (MJPG + DIB),
 FLAC and WAV documents, then times the three decode operators end-to-end
-(decode happens inside Arrow-batched mapInPandas, so wall time measures
-the from-scratch kernels under Spark's scan parallelism):
+(decode happens inside the ops' shared Arrow-batched mapInArrow loop, so
+wall time measures the from-scratch kernels under Spark's scan
+parallelism):
 
     real_video_frame_stats   AVI → per-frame dark stats
     real_audio_stats         WAV/FLAC → exact sample stats

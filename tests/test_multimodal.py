@@ -2,13 +2,17 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from documentconvert_spark.corpus import corpus_rows, fixture_corpus
+from documentconvert_spark.kernels.raster import decode_raster_gray
 from documentconvert_spark.ops.multimodal import (
     FRAME_STRIDE,
-    _codec_decode,
+    _decode_audio,
+    _decode_video,
     _fields,
     build_media_table,
     decode_media_meta,
@@ -35,11 +39,11 @@ def test_codec_decode_contract():
     # or unsupported-codec bytes raise ValueError (contained per-row
     # upstream), never NotImplementedError.
     with pytest.raises(ValueError):
-        _codec_decode("image", b"\xff\xd8")
+        decode_raster_gray(b"\xff\xd8")
     with pytest.raises(ValueError):
-        _codec_decode("audio", b"RIFF")
-    with pytest.raises(ValueError):  # MP4 = inter-frame codec, no decoder
-        _codec_decode("video", b"\x00\x00\x00\x18ftypisom")
+        _decode_audio(b"RIFF")
+    with pytest.raises(ValueError):  # MP4 without a moov box: nothing to decode
+        _decode_video(b"\x00\x00\x00\x18ftypisom")
 
 
 @pytest.fixture(scope="module")
@@ -288,3 +292,87 @@ def test_ogg_granule_comes_from_page_walk_not_payload_rfind():
     fmt, _w, _h, dur = sniff_av_meta(page1 + page2)
     assert fmt == "ogg"
     assert dur == 2000  # 16000 granules at 8 kHz, not 125,000,000 ms
+
+
+# ------------------------------------------------------------ containment
+
+_BYTES_DDL = "doc_id string, content binary"
+_GARBAGE = bytearray(b"garbage bytes")
+_BAD_BYTES = [("d-null", None), ("d-garbage", _GARBAGE)]
+
+# op → (input DDL, a null row and a garbage row, output key, what each
+# bad row becomes per the op's docstring)
+_CONTAINMENT = {
+    "build_media_table": (
+        "doc_id string, spans array<struct<kind:string,media_ref:string>>",
+        [("d-null", [("figure", None)]), ("d-garbage", [("figure", "")])],
+        "doc_id", "drop"),
+    "decode_media_meta": (
+        "doc_id string, media_ref string, media_type string, content binary",
+        [("d-null", "r-0", "image", None), ("d-garbage", "r-1", "image", _GARBAGE)],
+        "doc_id", "error"),
+    "sample_frames": (
+        "media_ref string, media_type string, duration_ms int, fps int",
+        [("d-null", "video", None, None), ("d-garbage", "video", -5, 30)],
+        "media_ref", "drop"),
+    "extract_real_media": (_BYTES_DDL, _BAD_BYTES, "doc_id", "drop"),
+    "real_raster_stats": (
+        "doc_id string, media_ref string, content binary",
+        [("d-null", "r-0", None), ("d-garbage", "r-1", _GARBAGE)],
+        "doc_id", "error"),
+    "real_video_frame_stats": (_BYTES_DDL, _BAD_BYTES, "doc_id", "error"),
+    "audio_fingerprint_table": (_BYTES_DDL, _BAD_BYTES, "doc_id", "drop"),
+    "image_dhash_table": (_BYTES_DDL, _BAD_BYTES, "doc_id", "drop"),
+    "real_audio_stats": (_BYTES_DDL, _BAD_BYTES, "doc_id", "error"),
+}
+
+
+@pytest.mark.parametrize("op_name", sorted(_CONTAINMENT))
+def test_every_media_op_contains_null_and_garbage_rows(spark, op_name):
+    """A null-content row and a garbage row never fail the task: each
+    becomes exactly one error row or drops out, as the op documents."""
+    from documentconvert_spark.ops import multimodal
+
+    ddl, rows, key, policy = _CONTAINMENT[op_name]
+    out = getattr(multimodal, op_name)(spark.createDataFrame(rows, ddl)).collect()
+    got = {}
+    for r in out:
+        got.setdefault(r[key], []).append(r)
+    for bad in (row[0] for row in rows):
+        if policy == "drop":
+            assert bad not in got
+        else:
+            assert len(got[bad]) == 1 and got[bad][0].error is not None
+
+
+# ------------------------------------------------------------ goldens
+
+def test_committed_goldens_match_their_generators(tmp_path, monkeypatch):
+    """Each committed golden parquet equals what its generator writes
+    today: regenerate all eleven into tmp_path and compare tables."""
+    import pyarrow.parquet as pq
+
+    from documentconvert_spark import queries_extraction as qe
+
+    writers = {
+        "EXPECTED_SPANS_PARQUET": qe._ensure_expected_parquet,
+        "EXPECTED_DOCS_PARQUET": qe._ensure_expected_parquet,
+        "EXPECTED_REAL_IMAGES_PARQUET": qe._ensure_real_images_parquet,
+        "EXPECTED_REAL_AV_PARQUET": qe._ensure_real_av_parquet,
+        "EXPECTED_REAL_VIDEO_PARQUET": qe._ensure_real_video_parquet,
+        "EXPECTED_REAL_AUDIO_PARQUET": qe._ensure_real_audio_parquet,
+        "EXPECTED_VIDEO_SIGS_PARQUET": qe._ensure_video_sigs_parquet,
+        "EXPECTED_AUDIO_FPS_PARQUET": qe._ensure_audio_fps_parquet,
+        "EXPECTED_IMAGE_DHASH_PARQUET":
+            lambda: qe._ensure_image_dhash_parquet(qe._image_dedup_corpus()[1]),
+        "EXPECTED_GIF_FRAMES_PARQUET":
+            lambda: qe._ensure_gif_frames_parquet(qe._gif_anim_corpus()[1]),
+        "EXPECTED_MP4_FRAMES_PARQUET": qe._ensure_mp4_frames_parquet,
+    }
+    committed = {name: getattr(qe, name) for name in writers}
+    for name, path in committed.items():
+        monkeypatch.setattr(qe, name, str(tmp_path / os.path.basename(path)))
+    for ensure in writers.values():
+        ensure()
+    for name, path in committed.items():
+        assert pq.read_table(getattr(qe, name)).equals(pq.read_table(path)), name

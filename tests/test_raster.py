@@ -520,24 +520,24 @@ def test_router_covers_four_formats_and_rejects_rest():
 
 
 def test_codec_decode_image_and_audio_paths():
-    from documentconvert_spark.ops.multimodal import _codec_decode
+    from documentconvert_spark.ops.multimodal import _decode_audio, _decode_video
 
-    kind, (w, h, rows) = _codec_decode("image", render_text_jpeg(["HI"]))
-    assert kind == "image" and w > 0 and len(rows) == h
+    _fmt, w, h, rows = decode_raster_gray(render_text_jpeg(["HI"]))
+    assert w > 0 and len(rows) == h
     body = struct.pack("<4h", 1, 2, 3, 4)
     fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
     wav = (b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
            + b"data" + struct.pack("<I", len(body)) + body)
-    kind, (sr, ch, mono) = _codec_decode("audio", wav)
-    assert kind == "audio" and sr == 8000 and list(mono) == [1, 2, 3, 4]
+    sr, ch, mono = _decode_audio(wav)
+    assert sr == 8000 and list(mono) == [1, 2, 3, 4]
     from documentconvert_spark.corpus import render_avi
 
     grids = [[bytearray([255] * 16) for _ in range(8)] for _ in range(2)]
-    kind, (w, h, fps, frames) = _codec_decode("video", render_avi(16, 8, grids, fps=4))
-    assert kind == "video" and (w, h, fps, len(frames)) == (16, 8, 4.0, 2)
+    w, h, frames = _decode_video(render_avi(16, 8, grids, fps=4))
+    assert (w, h, len(frames)) == (16, 8, 2)
     with pytest.raises(ValueError):
-        _codec_decode("video", b"anything")
+        _decode_video(b"anything")
 
 
 def test_real_raster_stats_spark(spark):
