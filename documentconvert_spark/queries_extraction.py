@@ -321,32 +321,31 @@ FROM r GROUP BY doc_id
 """
 
 
-# ----------------------------------------------------- real reference documents
-# The reference's own sample corpus (`/root/reference/test/`: 3 binary .doc,
-# 1 .docx, 1 .pptx, 1 .xlsx, 1 real PDF — SURVEY.md §5.1) extracted by the
-# from-scratch real-format kernels (realpdf / miniooxml / minidoc via
-# kernels/detect.py sniffing). The committed expectation parquet pins the
-# exact span sequences; the Spark side recomputes from raw bytes through
-# the binaryFile source + Arrow UDFs. This is the engine-side analogue of
-# the reference's manual sample-document verification
-# (.trae/documents/文档转换功能测试报告.md:36-420), made exact.
+# ------------------------------------------------------ real-format documents
+# The committed real-format fixtures (`resources/extra_docs/`, written by
+# scripts/gen_extra_fixtures.py: PDF text/fonts/columns/furniture/rotation/
+# encryption, DOCX/ODF/PPT/XLS/RTF/HTML, and OCR-bearing PNG/JPEG/GIF/BMP/
+# TIFF/WebP images) extracted by the from-scratch real-format kernels
+# (realpdf / miniooxml / minidoc / raster via kernels/detect.py sniffing).
+# The committed expectation parquets pin the exact span sequences; the Spark
+# side recomputes from raw bytes through the binaryFile source + Arrow UDFs.
+# The goldens also hold rows for the reference's 7-file sample corpus
+# (SURVEY.md §5.1); those are checked by tests/test_real_documents.py where
+# that corpus is mounted, so the oracles below keep only the fixture rows.
+# This is the engine-side analogue of the reference's manual sample-document
+# verification (.trae/documents/文档转换功能测试报告.md:36-420), made exact.
 
-_REF_TEST_DIR = "/root/reference/test"
-# crafted fixtures (scripts/gen_extra_fixtures.py) pinning multi-column /
-# furniture / rotated-text / code-block / spreadsheet-format behaviors
-# under the same driver-checked golden oracle as the reference samples
 _EXTRA_DOCS_DIR = os.path.join(_RES_DIR, "extra_docs")
 EXPECTED_REAL_SPANS_PARQUET = os.path.join(_RES_DIR, "expected_real_spans.parquet")
 EXPECTED_REAL_DOCS_PARQUET = os.path.join(_RES_DIR, "expected_real_docs.parquet")
+# SQL list of the fixture names: restricts each golden to the docs Spark reads
+_EXTRA_DOC_IDS = ", ".join(f"'{name}'" for name in sorted(os.listdir(_EXTRA_DOCS_DIR)))
 
 
 def _real_docs_raw(spark: SparkSession) -> DataFrame:
     from documentconvert_spark.ingest import binary_dir_as_raw
 
-    raw = binary_dir_as_raw(spark, _REF_TEST_DIR)
-    if os.path.isdir(_EXTRA_DOCS_DIR):
-        raw = raw.unionByName(binary_dir_as_raw(spark, _EXTRA_DOCS_DIR))
-    return raw
+    return binary_dir_as_raw(spark, _EXTRA_DOCS_DIR)
 
 
 def _real_docs_extracted(spark: SparkSession) -> DataFrame:
@@ -368,6 +367,7 @@ def q_real_docs_span_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_REAL_DOCS_SPAN_SEQ = f"""
 SELECT doc_id, "offset", kind, media_ref, level, md5(text) AS text_md5
 FROM read_parquet('{EXPECTED_REAL_SPANS_PARQUET}')
+WHERE doc_id IN ({_EXTRA_DOC_IDS})
 """
 
 
@@ -375,9 +375,10 @@ EXPECTED_REAL_MEDIA_PARQUET = os.path.join(_RES_DIR, "expected_real_media.parque
 
 
 def q_real_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL embedded media pulled from the reference sample containers
-    (zip parts / PDF Image XObjects) with header-sniffed format and
-    dimensions — the media side table on actual bytes (K6/J3)."""
+    """REAL embedded media pulled from the committed real-format fixtures
+    (`resources/extra_docs/`: zip parts / PDF Image XObjects / standalone
+    images) with header-sniffed format and dimensions — the media side
+    table on actual bytes (K6/J3)."""
     from documentconvert_spark.ops.multimodal import extract_real_media
 
     m = extract_real_media(_real_docs_raw(spark))
@@ -390,6 +391,7 @@ def q_real_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_REAL_MEDIA_META = f"""
 SELECT doc_id, media_ref, format, width, height, byte_len, content_md5
 FROM read_parquet('{EXPECTED_REAL_MEDIA_PARQUET}')
+WHERE doc_id IN ({_EXTRA_DOC_IDS})
 """
 
 
@@ -411,6 +413,7 @@ def q_real_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_REAL_PIXEL_STATS = f"""
 SELECT doc_id, media_ref, format, width, height, mean_luma, dark_frac, error
 FROM read_parquet('{EXPECTED_REAL_PIXELS_PARQUET}')
+WHERE doc_id IN ({_EXTRA_DOC_IDS})
 """
 
 
@@ -427,6 +430,7 @@ def q_real_docs_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_REAL_DOCS_SUMMARY = f"""
 SELECT doc_id, status, n_spans, markdown_md5
 FROM read_parquet('{EXPECTED_REAL_DOCS_PARQUET}')
+WHERE doc_id IN ({_EXTRA_DOC_IDS})
 """
 
 
@@ -461,6 +465,7 @@ FROM read_parquet('{EXPECTED_REAL_SPANS_PARQUET}')
 WHERE (doc_id LIKE '%.png' OR doc_id LIKE '%.jpg'
        OR doc_id LIKE '%.gif' OR doc_id LIKE '%.bmp'
        OR doc_id LIKE '%.tiff' OR doc_id LIKE '%.webp') AND kind = 'paragraph'
+  AND doc_id IN ({_EXTRA_DOC_IDS})
 """
 
 

@@ -8,6 +8,7 @@ public specs; the CFB fixtures double as a cross-check of the CFB reader
 from __future__ import annotations
 
 import io
+import os
 import struct
 import zipfile
 
@@ -17,6 +18,7 @@ from documentconvert_spark.kernels.detect import extract_office_any
 from documentconvert_spark.kernels.minibiff import extract_ppt, extract_xls
 from documentconvert_spark.kernels.miniodf import extract_odf
 from documentconvert_spark.kernels.minirtf import extract_rtf
+from tests.test_raster import REF_TEST
 
 # ------------------------------------------------------------------ ODF
 
@@ -559,26 +561,62 @@ def test_docx_nonnumeric_outline_level_contained():
     assert [(s.kind, s.level) for s in spans] == [("heading", 1), ("paragraph", 0)]
 
 
-def test_doc_anchor_in_first_table_cell(tmp_path):
+# ------------------------------------------------------------------ .doc
+
+_REF_MATH_DOC = os.path.join(REF_TEST, "2024年浙江省中考数学试卷.doc")
+_CARD_JPG = os.path.join(os.path.dirname(__file__), os.pardir, "documentconvert_spark",
+                         "resources", "extra_docs", "fixture_ocr_card.jpg")
+
+
+def _make_doc(text: str, pictures: list[bytes]) -> bytes:
+    """Word 97 piece-table .doc per [MS-DOC]: a FIB (magic 0xA5EC,
+    fWhichTblStm set, ccpText, fcClx/lcbClx) plus one compressed-cp1252
+    text piece in the WordDocument stream, the Clx in 1Table, and one
+    OfficeArtBlipJPEG record (16-byte UID, 1-byte tag) per picture in Data."""
+    text_fc = 0x400
+    raw = text.encode("cp1252")
+    word = bytearray(text_fc + len(raw))
+    struct.pack_into("<H", word, 0x0000, 0xA5EC)
+    struct.pack_into("<H", word, 0x000A, 0x0200)           # fWhichTblStm: 1Table
+    struct.pack_into("<I", word, 0x004C, len(text))        # ccpText
+    word[text_fc:] = raw
+    pcd = struct.pack("<HIH", 0, (text_fc * 2) | 0x40000000, 0)  # compressed piece
+    plc_pcd = struct.pack("<II", 0, len(text)) + pcd
+    clx = b"\x02" + struct.pack("<I", len(plc_pcd)) + plc_pcd
+    struct.pack_into("<II", word, 0x01A2, 0, len(clx))     # fcClx, lcbClx
+    data = b"".join(
+        struct.pack("<HHI", 0x46A0, 0xF01D, 17 + len(pic)) + b"\x11" * 16 + b"\xff" + pic
+        for pic in pictures)
+    return write_cfb([("WordDocument", bytes(word)), ("1Table", clx), ("Data", data)])
+
+
+def test_doc_anchor_in_first_table_cell():
     """A picture anchor BEFORE the first cell mark must not split the
     table or leak cell text into a paragraph span — table-ness is decided
     per paragraph, not at the first 0x07."""
-    from tests.test_schema_evolution import __name__ as _  # noqa: F401
-    # Build via the same minimal .doc writer the legacy suite uses if one
-    # exists; otherwise drive the char walk directly through extract_doc's
-    # text pipeline by synthesizing pieces. Simpler: call the paragraph
-    # walker indirectly using a crafted piece-table .doc is heavy — instead
-    # assert on the real math exam, whose tables and figures must coexist:
     from collections import Counter
 
-    from documentconvert_spark.kernels.detect import extract_office_any
-
-    spans = extract_office_any(open("/root/reference/test/2024年浙江省中考数学试卷.doc", "rb").read())
+    with open(_CARD_JPG, "rb") as fh:
+        jpeg = fh.read()
+    # one 2x2 table whose first cell holds the picture anchor (0x01) after
+    # its text "Q1 " and before the first cell mark (0x07)
+    text = ("Exam paper\r"
+            "Q1 \x01stem\x07B1\x07\x07A2\x07B2\x07\x07\r"
+            "After the table\r")
+    spans = extract_office_any(_make_doc(text, [jpeg]))
     kinds = Counter(s.kind for s in spans)
-    # all 31 pictures interleave as figures and the 3 tables survive
-    # un-split (an anchor in a first cell must not fragment the grid)
-    assert kinds["figure"] == 31 and kinds["table"] == 3
+    assert kinds["figure"] == 1 and kinds["table"] == 1
     assert any("\t" in s.text for s in spans if s.kind == "table")
+    assert not any("Q1" in s.text for s in spans if s.kind != "table")
+
+    if os.path.isfile(_REF_MATH_DOC):
+        with open(_REF_MATH_DOC, "rb") as fh:
+            spans = extract_office_any(fh.read())
+        kinds = Counter(s.kind for s in spans)
+        # all 31 pictures interleave as figures and the 3 tables survive
+        # un-split (an anchor in a first cell must not fragment the grid)
+        assert kinds["figure"] == 31 and kinds["table"] == 3
+        assert any("\t" in s.text for s in spans if s.kind == "table")
 
 
 def test_xlsx_date_cells_render_as_dates():

@@ -5,10 +5,14 @@ ops/multimodal.real_raster_stats).
 Validation strategy mirrors the OCR pair: generator-side encoders
 (corpus.render_text_jpeg, test-local GIF/BMP writers) are independent
 implementations of the same public specs the decoders parse, so a
-round-trip equality is two implementations agreeing — plus the carved
-REAL JPEGs/PNGs from the reference's own sample documents as
-encoder-independent inputs (real camera/export encoders: 4:2:0
-subsampling, restart markers, multi-scan layouts)."""
+round-trip equality is two implementations agreeing — plus carved JPEGs
+and PNGs that no encoder of this repository wrote, as encoder-independent
+inputs: `tests/data/jdk_imageio_media.docx` holds the JDK's javax.imageio
+output (scripts/GenImageioMedia.java: 4:2:0/4:2:2/4:4:4/gray, restart
+markers, progressive multi-scan; 1/4/8/16-bit, palette, RGBA and Adam7
+PNGs). The reference's 7 sample documents are carved as well wherever
+that corpus (REF_TEST) is mounted; beyond that they are checked only by
+tests/test_real_documents.py and tests/test_parser_robustness.py."""
 
 from __future__ import annotations
 
@@ -35,6 +39,7 @@ from documentconvert_spark.kernels.raster import (
 )
 
 REF_TEST = "/root/reference/test"
+TEST_DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 
 
 # ------------------------------------------------------------------ helpers
@@ -106,7 +111,8 @@ def luma(r, g, b):
 
 def carved_real_images():
     out = []
-    for p in sorted(glob.glob(os.path.join(REF_TEST, "*"))):
+    paths = sorted(glob.glob(os.path.join(REF_TEST, "*"))) + sorted(glob.glob(os.path.join(TEST_DATA, "*")))
+    for p in paths:
         try:
             media = extract_media_files(open(p, "rb").read())
         except Exception:
@@ -144,11 +150,11 @@ def test_jpeg_ocr_rejects_photo_quant_without_decoding():
 
 
 def test_real_carved_jpegs_decode_to_sniffed_dims():
-    """Encoder-independent inputs: every baseline JPEG carved from the
-    reference's sample documents (4:2:0, 4:4:4 and gray layouts from
-    real-world encoders) must decode with dims matching the SOF sniff."""
+    """Encoder-independent inputs: every JPEG carved from the real-encoder
+    containers (4:2:0, 4:2:2, 4:4:4, gray, restart-interval and progressive
+    layouts) must decode with dims matching the SOF sniff."""
     jpegs = [t for t in carved_real_images() if t[1] == "jpeg"]
-    assert len(jpegs) >= 5  # the sample corpus ships several
+    assert len(jpegs) >= 5  # the containers ship several
     for name, _fmt, w, h, blob in jpegs:
         dw, dh, rows = decode_jpeg_gray(blob)
         assert (dw, dh) == (w, h), name
