@@ -11,12 +11,19 @@ oracle for exact (kind, text, media_ref, offset) equality per doc_id.
 
 Fixture classes implemented (FIXTURES.md): F-HEAD, F-TABLE, F-FIG, F-CODE,
 F-FORMULA, F-MARKUP, F-XLSX, F-CJK, F-ENC, F-EMPTY, F-POISON, F-BIG.
+
+It is also the one home of the real-format writers (PNG, JPEG, GIF, BMP,
+TIFF, VP8L WebP, AVI, MP4, FLAC, classic-xref PDF, OOXML/ODF zip, OLE CFB
+with BIFF8/PPT records): independent spec implementations whose bytes the
+kernels must read back. scripts/gen_extra_fixtures.py, the fuzz seeds,
+the benches and the tests all compose them.
 """
 
 from __future__ import annotations
 
 import random
 import struct
+import zlib
 from dataclasses import dataclass, field
 
 from documentconvert_spark.kernels.minipdf import GAP_FACTOR
@@ -447,57 +454,60 @@ def antialias_grid(grid: list) -> list[bytearray]:
     return out
 
 
+def _png_chunk(typ: bytes, body: bytes) -> bytes:
+    return (struct.pack(">I", len(body)) + typ + body
+            + struct.pack(">I", zlib.crc32(typ + body) & 0xFFFFFFFF))
+
+
+def encode_png(w: int, h: int, raster: bytes, depth: int = 8, color_type: int = 0,
+               plte: bytes | None = None, interlace: int = 0, level: int = 9) -> bytes:
+    """Already-filtered scanlines (each prefixed by its filter-type byte,
+    Adam7 pass order when ``interlace``) → PNG. The one PNG writer: the
+    goldens compress at level 9, other callers pick their own level."""
+    ihdr = struct.pack(">IIBBBBB", w, h, depth, color_type, 0, 0, interlace)
+    return (b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
+            + (_png_chunk(b"PLTE", plte) if plte is not None else b"")
+            + _png_chunk(b"IDAT", zlib.compress(raster, level)) + _png_chunk(b"IEND", b""))
+
+
 def encode_gray_png(w: int, h: int, rows: list) -> bytes:
-    """8-bit grayscale raster → non-interlaced PNG (filter 0). The one
-    gray-PNG writer — fixtures, benches and the image-dedup corpus all
-    share it so the encoders can never diverge from the oracle side."""
-    import struct as _struct
-    import zlib as _zlib
-
-    def chunk(typ: bytes, body: bytes) -> bytes:
-        return (_struct.pack(">I", len(body)) + typ + body
-                + _struct.pack(">I", _zlib.crc32(typ + body) & 0xFFFFFFFF))
-
-    raster = b"".join(b"\x00" + bytes(row) for row in rows)
-    return (b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", _struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0))
-            + chunk(b"IDAT", _zlib.compress(raster, 9)) + chunk(b"IEND", b""))
+    """8-bit grayscale raster → non-interlaced PNG (filter 0). Fixtures,
+    benches and the image-dedup corpus all share it so the encoders can
+    never diverge from the oracle side."""
+    return encode_png(w, h, b"".join(b"\x00" + bytes(row) for row in rows))
 
 
-def encode_gray_bmp(w: int, h: int, rows: list) -> bytes:
-    """8-bit grayscale raster → 24-bit bottom-up BI_RGB BMP."""
-    import struct as _struct
-
+def encode_bmp24(w: int, h: int, pix: list) -> bytes:
+    """Rows of (r, g, b) pixels → 24-bit bottom-up BI_RGB BMP."""
     stride = ((24 * w + 31) // 32) * 4
     body = bytearray()
     for y in range(h - 1, -1, -1):
-        line = bytearray()
-        for v in rows[y]:
-            line += bytes((v, v, v))
+        line = b"".join(bytes((b, g, r)) for r, g, b in pix[y])
         body += line + b"\x00" * (stride - len(line))
-    return (b"BM" + _struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
-            + _struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body),
-                           0, 0, 0, 0) + bytes(body))
+    return (b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
+            + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body),
+                          0, 0, 0, 0) + bytes(body))
+
+
+def encode_gray_bmp(w: int, h: int, rows: list) -> bytes:
+    """8-bit grayscale raster → 24-bit BMP (gray replicated to BGR)."""
+    return encode_bmp24(w, h, [[(v, v, v) for v in row] for row in rows])
 
 
 def render_text_png(lines: list[str], scale: int = 2, margin: int = 8,
                     color: bool = False) -> bytes:
-    import struct as _struct
-    import zlib as _zlib
-
     w, h, grid = _render_text_grid(lines, scale, margin)
     if not color:
         return encode_gray_png(w, h, grid)
     raster = b"".join(b"\x00" + bytes(v for px in row for v in (px, px, px))
                       for row in grid)
-    ihdr = _struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    return encode_png(w, h, raster, color_type=2)
 
-    def chunk(typ: bytes, body: bytes) -> bytes:
-        return (_struct.pack(">I", len(body)) + typ + body
-                + _struct.pack(">I", _zlib.crc32(typ + body) & 0xFFFFFFFF))
 
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", _zlib.compress(raster, 9)) + chunk(b"IEND", b""))
+def render_text_bmp(lines: list[str], scale: int = 2, margin: int = 8) -> bytes:
+    """Rendered-text 24-bit BMP for the raster OCR route — bmp is in the
+    reference's OCR whitelist (document_service.py:652)."""
+    return encode_gray_bmp(*_render_text_grid(lines, scale, margin))
 
 
 def _render_text_grid_prop(
@@ -999,6 +1009,33 @@ def _gif_lzw_encode(idx: list, min_code: int) -> bytes:
     return bytes(out)
 
 
+def gif_encode(w: int, h: int, idx: list, pal: list, min_code: int,
+               interlace: bool = False) -> bytes:
+    """Index raster + palette → a single-frame GIF89a. With ``interlace``
+    the rows of ``idx`` must already be in the four-pass order."""
+    bs = _gif_lzw_encode(idx, min_code)
+    gct_bits = max(1, (len(pal) - 1).bit_length())
+    out = bytearray(b"GIF89a")
+    out += struct.pack("<HHBBB", w, h, 0x80 | (gct_bits - 1), 0, 0)
+    for r, g, b in pal + [(0, 0, 0)] * ((1 << gct_bits) - len(pal)):
+        out += bytes((r, g, b))
+    out += b"\x2C" + struct.pack("<HHHH", 0, 0, w, h) + bytes([0x40 if interlace else 0])
+    out += bytes([min_code])
+    for i in range(0, len(bs), 255):
+        chunk = bs[i:i + 255]
+        out += bytes([len(chunk)]) + bytes(chunk)
+    out += b"\x00\x3B"
+    return bytes(out)
+
+
+def render_text_gif(lines: list[str], scale: int = 2, margin: int = 8) -> bytes:
+    """Rendered-text GIF for the raster OCR route (lossless, so the
+    exact glyph matcher applies with no quant-table gate)."""
+    w, h, grid = _render_text_grid(lines, scale, margin)
+    idx = [0 if px < 128 else 1 for row in grid for px in row]
+    return gif_encode(w, h, idx, [(0, 0, 0), (255, 255, 255)], 2)
+
+
 def encode_gif_anim(w: int, h: int, frames: list, pal_rgb: list,
                     min_code: int, bg_index: int = 0) -> bytes:
     """Animated GIF89a from frame specs. Each frame is a dict:
@@ -1338,3 +1375,925 @@ def encode_flac(sr: int, chans: list[list[int]], blocksize: int = 256,
         out += frame + crc16(frame).to_bytes(2, "big")
         fno += 1
     return bytes(out)
+
+
+# -- TIFF (generator side of kernels/raster.decode_tiff_gray) --------------
+
+def packbits_encode(raw: bytes) -> bytes:
+    """Apple PackBits (TIFF 6.0 §9) writer: repeat runs ≥3, literal runs
+    otherwise, both capped at 128 per op."""
+    out = bytearray()
+    i, n = 0, len(raw)
+    lit = i
+
+    def flush(lo: int, hi: int) -> None:
+        j = lo
+        while j < hi:
+            k = min(hi, j + 128)
+            out.append(k - j - 1)
+            out.extend(raw[j:k])  # += would rebind `out` local to flush
+            j = k
+
+    while i < n:
+        run = 1
+        while i + run < n and raw[i + run] == raw[i] and run < 128:
+            run += 1
+        if run >= 3:
+            flush(lit, i)
+            out.append(257 - run)
+            out.append(raw[i])
+            i += run
+            lit = i
+        else:
+            i += run
+    flush(lit, i)
+    return bytes(out)
+
+
+def tiff_encode(end: str, w: int, h: int, photo: int, strips: list[bytes],
+                 rps: int, comp: int = 1, bps: int = 8, spp: int = 1,
+                 pred: int = 1, colormap: list[int] | None = None) -> bytes:
+    """Assemble a baseline TIFF: header, strip data, out-of-line tag
+    payloads, IFD0 (tags ascending per spec). `strips` are the
+    already-compressed per-strip byte payloads."""
+    body = bytearray()
+    offs: list[int] = []
+    counts: list[int] = []
+    for s in strips:
+        offs.append(8 + len(body))
+        counts.append(len(s))
+        body += s
+    tags: list[tuple[int, int, list[int]]] = [
+        (256, 4, [w]), (257, 4, [h]), (258, 3, [bps] * spp), (259, 3, [comp]),
+        (262, 3, [photo]), (273, 4, offs), (277, 3, [spp]), (278, 4, [rps]),
+        (279, 4, counts),
+    ]
+    if pred != 1:
+        tags.append((317, 3, [pred]))
+    if colormap is not None:
+        tags.append((320, 3, colormap))
+    tags.sort()
+    extra = bytearray()
+    extra_base = 8 + len(body)
+    ifd = bytearray(struct.pack(end + "H", len(tags)))
+    for tag, typ, vals in tags:
+        fchar = {3: "H", 4: "I"}[typ]
+        payload = struct.pack(end + fchar * len(vals), *vals)
+        if len(payload) <= 4:
+            ifd += struct.pack(end + "HHI", tag, typ, len(vals)) + payload.ljust(4, b"\0")
+        else:
+            ifd += struct.pack(end + "HHII", tag, typ, len(vals), extra_base + len(extra))
+            extra += payload
+    ifd += struct.pack(end + "I", 0)  # no next IFD
+    hdr = (b"II*\x00" if end == "<" else b"MM\x00*") + struct.pack(
+        end + "I", extra_base + len(extra))
+    return hdr + bytes(body) + bytes(extra) + bytes(ifd)
+
+
+def _lzw_encode(data: bytes, early: int = 1) -> bytes:
+    """TIFF/PDF LZW writer: MSB-first 9-12-bit codes with clear/EOD;
+    ``early`` is the PDF /EarlyChange code-width shift."""
+    codes: list[tuple[int, int]] = []
+    d = {bytes([i]): i for i in range(256)}
+    next_code, width = 258, 9
+    codes.append((256, width))
+    w = b""
+    for ch in data:
+        wc = w + bytes([ch])
+        if wc in d:
+            w = wc
+            continue
+        codes.append((d[w], width))
+        if next_code < 4096:
+            d[wc] = next_code
+            next_code += 1
+            if next_code + early - 1 >= (1 << width) and width < 12:
+                width += 1
+        w = bytes([ch])
+    if w:
+        codes.append((d[w], width))
+    codes.append((257, width))
+    buf = bits = 0
+    out = bytearray()
+    for code, wd in codes:
+        buf = (buf << wd) | code
+        bits += wd
+        while bits >= 8:
+            bits -= 8
+            out.append((buf >> bits) & 0xFF)
+    if bits:
+        out.append((buf << (8 - bits)) & 0xFF)
+    return bytes(out)
+
+
+def render_text_tiff(lines: list[str], scale: int = 2, margin: int = 8,
+                     antialias: bool = False) -> bytes:
+    """Rendered-text TIFF for the raster OCR route: big-endian,
+    WhiteIsZero grayscale, LZW-compressed 16-row strips under the
+    horizontal-differencing Predictor — one fixture drives the whole
+    baseline decode path (tiff is in the reference's OCR whitelist,
+    document_service.py:652)."""
+    w, h, grid = _render_text_grid(lines, scale, margin)
+    if antialias:
+        grid = antialias_grid(grid)
+    rps = 16
+    strips = []
+    for y0 in range(0, h, rps):
+        raw = bytearray()
+        for row in grid[y0:y0 + rps]:
+            stored = bytes(255 - px for px in row)  # WhiteIsZero polarity
+            raw += bytes(((stored[i] - (stored[i - 1] if i else 0)) & 0xFF)
+                         for i in range(w))
+        strips.append(_lzw_encode(bytes(raw)))
+    return tiff_encode(">", w, h, 0, strips, rps, comp=5, pred=2)
+
+
+# -- WebP VP8L writers (generator side of the lossless-webp split) -----------
+# Independent implementation of the public "WebP Lossless Bitstream
+# Specification" encode side: LSB-first bit packing, canonical prefix
+# codes (simple and code-length-coded with 16/17/18 repeats), LZ77
+# same-pixel runs, color cache, and the subtract-green / fixed-mode
+# predictor / cross-color / palette transforms. kernels/miniwebp.py must
+# decode every shape back pixel-exact.
+
+class _WpBits:
+    def __init__(self) -> None:
+        self.out = bytearray()
+        self.acc = 0
+        self.n = 0
+
+    def put(self, v: int, k: int) -> None:  # LSB-first
+        self.acc |= (v & ((1 << k) - 1)) << self.n
+        self.n += k
+        while self.n >= 8:
+            self.out.append(self.acc & 0xFF)
+            self.acc >>= 8
+            self.n -= 8
+
+    def code(self, c: int, ln: int) -> None:  # prefix code: MSB first
+        for i in range(ln - 1, -1, -1):
+            self.put((c >> i) & 1, 1)
+
+    def done(self) -> bytes:
+        if self.n:
+            self.out.append(self.acc & 0xFF)
+            self.acc = 0
+            self.n = 0
+        return bytes(self.out)
+
+
+def _wp_lengths(freqs: dict[int, int], max_depth: int = 15) -> dict[int, int]:
+    """Huffman code lengths from frequencies (≥3 distinct symbols),
+    depth-limited: when the optimal tree exceeds max_depth the
+    frequencies are flattened (halved toward 1) and rebuilt — the
+    standard trick; slightly suboptimal codes, always valid."""
+    import heapq
+
+    cur = {s: f for s, f in freqs.items() if f}
+    if len(cur) > 1 << max_depth:
+        raise ValueError("vp8l writer: alphabet too large for depth cap")
+    while True:
+        heap = [(f, s, (s,)) for s, f in sorted(cur.items())]
+        heapq.heapify(heap)
+        depths = dict.fromkeys(cur, 0)
+        while len(heap) > 1:
+            f1, t1, g1 = heapq.heappop(heap)
+            f2, t2, g2 = heapq.heappop(heap)
+            for s in g1 + g2:
+                depths[s] += 1
+            heapq.heappush(heap, (f1 + f2, min(t1, t2), g1 + g2))
+        if max(depths.values(), default=0) <= max_depth:
+            return depths
+        cur = {s: (f + 1) // 2 for s, f in cur.items()}
+
+
+def _wp_canonical(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
+    """(length, symbol)-ordered canonical code assignment."""
+    codes = {}
+    code = 0
+    prev_len = 0
+    for s, ln in sorted(lengths.items(), key=lambda kv: (kv[1], kv[0])):
+        code <<= ln - prev_len
+        codes[s] = (code, ln)
+        code += 1
+        prev_len = ln
+    return codes
+
+
+def _wp_write_code(bits: _WpBits, lengths: dict[int, int],
+                   alphabet: int) -> dict[int, tuple[int, int]]:
+    """Emit one prefix-code header; return symbol → (code, len)."""
+    present = sorted(lengths)
+    if len(present) <= 2 and all(present[i] < 256 for i in range(len(present))):
+        bits.put(1, 1)  # simple
+        bits.put(len(present) - 1, 1)
+        s0 = present[0]
+        if s0 < 2:
+            bits.put(0, 1)
+            bits.put(s0, 1)
+        else:
+            bits.put(1, 1)
+            bits.put(s0, 8)
+        if len(present) == 2:
+            bits.put(present[1], 8)
+            return {present[0]: (0, 1), present[1]: (1, 1)}
+        return {s0: (0, 0)}
+    bits.put(0, 1)  # normal
+    # code-length sequence over the full alphabet, RLE-compressed with
+    # 17 (3-10 zeros) / 18 (11-138 zeros) — exercises the repeat paths
+    seq: list[tuple[int, int]] = []  # (cl_symbol, extra_payload_bits<<8|nbits)
+    i = 0
+    while i < alphabet:
+        ln = lengths.get(i, 0)
+        if ln == 0:
+            j = i
+            while j < alphabet and lengths.get(j, 0) == 0:
+                j += 1
+            run = j - i
+            while run >= 11:
+                n = min(run, 138)
+                seq.append((18, ((n - 11) << 8) | 7))
+                run -= n
+            while run >= 3:
+                n = min(run, 10)
+                seq.append((17, ((n - 3) << 8) | 3))
+                run -= n
+            for _ in range(run):
+                seq.append((0, 0))
+            i = j
+        else:
+            seq.append((ln, 0))
+            i += 1
+    clc_freq: dict[int, int] = {}
+    for s, _ in seq:
+        clc_freq[s] = clc_freq.get(s, 0) + 1
+    if len(clc_freq) == 1:
+        clc_len = {next(iter(clc_freq)): 1}
+    elif len(clc_freq) == 2:
+        clc_len = dict.fromkeys(clc_freq, 1)
+    else:
+        clc_len = _wp_lengths(clc_freq, max_depth=7)  # 3-bit CL lengths
+    # degenerate 1-symbol codes read as 0 bits (see return below)
+    clc_codes = ({next(iter(clc_len)): (0, 0)} if len(clc_len) == 1
+                 else _wp_canonical(clc_len))
+    bits.put(19 - 4, 4)  # transmit all 19 code-length-code lengths
+    for s in _WP_CLC_ORDER:
+        bits.put(clc_len.get(s, 0), 3)
+    bits.put(0, 1)  # no max-symbol shortcut
+    for s, extra in seq:
+        c, ln = clc_codes[s]
+        bits.code(c, ln)
+        if extra:
+            bits.put(extra >> 8, extra & 0xFF)
+    if len(lengths) == 1:
+        # degenerate normal code: decoders read 0 bits per symbol
+        return {next(iter(lengths)): (0, 0)}
+    return _wp_canonical(lengths)
+
+
+_WP_CLC_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
+
+
+def _wp_prefix(v: int) -> tuple[int, int, int]:
+    """LZ77 length/distance value → (prefix symbol, n extra bits, extra)."""
+    if v <= 4:
+        return v - 1, 0, 0
+    for s in range(4, 40):
+        extra = (s - 2) >> 1
+        off = (2 + (s & 1)) << extra
+        if off + 1 <= v <= off + (1 << extra):
+            return s, extra, v - off - 1
+    raise ValueError("vp8l writer: value out of prefix range")
+
+
+def _wp_entropy_image(bits: _WpBits, w: int, h: int, pix: list[int],
+                      cache_bits: int = 0, lz77: bool = False,
+                      level0: bool = False) -> None:
+    """Emit one entropy-coded image (no transforms here)."""
+    bits.put(1 if cache_bits else 0, 1)
+    if cache_bits:
+        bits.put(cache_bits, 4)
+    if level0:
+        bits.put(0, 1)  # no meta-prefix image
+    cache = [None] * (1 << cache_bits) if cache_bits else None
+    tokens: list[tuple] = []
+    i = 0
+    n = len(pix)
+    while i < n:
+        px = pix[i]
+        if lz77 and i and pix[i - 1] == px:
+            run = 1
+            while i + run < n and pix[i + run] == px and run < 4000:
+                run += 1
+            if run >= 4:
+                tokens.append(("copy", run, 1))
+                if cache is not None:
+                    cache[((0x1E35A7BD * px) & 0xFFFFFFFF) >> (32 - cache_bits)] = px
+                i += run
+                continue
+        if cache is not None:
+            slot = ((0x1E35A7BD * px) & 0xFFFFFFFF) >> (32 - cache_bits)
+            if cache[slot] == px:
+                tokens.append(("cache", slot))
+                i += 1
+                continue
+            cache[slot] = px
+        tokens.append(("lit", px))
+        i += 1
+    gf: dict[int, int] = {}
+    rf: dict[int, int] = {}
+    bf: dict[int, int] = {}
+    af: dict[int, int] = {}
+    df: dict[int, int] = {}
+    for t in tokens:
+        if t[0] == "lit":
+            px = t[1]
+            gf[(px >> 8) & 0xFF] = gf.get((px >> 8) & 0xFF, 0) + 1
+            rf[(px >> 16) & 0xFF] = rf.get((px >> 16) & 0xFF, 0) + 1
+            bf[px & 0xFF] = bf.get(px & 0xFF, 0) + 1
+            af[px >> 24] = af.get(px >> 24, 0) + 1
+        elif t[0] == "copy":
+            ls, _, _ = _wp_prefix(t[1])
+            gf[256 + ls] = gf.get(256 + ls, 0) + 1
+            ds, _, _ = _wp_prefix(t[2] + 120)  # plain scan-line distance
+            df[ds] = df.get(ds, 0) + 1
+        else:
+            gf[280 + t[1]] = gf.get(280 + t[1], 0) + 1
+    for f in (rf, bf, af, df):
+        if not f:
+            f[0] = 1  # unused codes still need one symbol
+
+    def lens(freqs: dict[int, int]) -> dict[int, int]:
+        if len(freqs) == 1:
+            return {next(iter(freqs)): 1}
+        if len(freqs) == 2:
+            return dict.fromkeys(freqs, 1)
+        return _wp_lengths(freqs)
+
+    green_alpha = 256 + 24 + ((1 << cache_bits) if cache_bits else 0)
+    gc = _wp_write_code(bits, lens(gf), green_alpha)
+    rc = _wp_write_code(bits, lens(rf), 256)
+    bc = _wp_write_code(bits, lens(bf), 256)
+    ac = _wp_write_code(bits, lens(af), 256)
+    dc = _wp_write_code(bits, lens(df), 40)
+    for t in tokens:
+        if t[0] == "lit":
+            px = t[1]
+            bits.code(*gc[(px >> 8) & 0xFF])
+            bits.code(*rc[(px >> 16) & 0xFF])
+            bits.code(*bc[px & 0xFF])
+            bits.code(*ac[px >> 24])
+        elif t[0] == "copy":
+            ls, ln_bits, ln_extra = _wp_prefix(t[1])
+            bits.code(*gc[256 + ls])
+            bits.put(ln_extra, ln_bits)
+            ds, d_bits, d_extra = _wp_prefix(t[2] + 120)
+            bits.code(*dc[ds])
+            bits.put(d_extra, d_bits)
+        else:
+            bits.code(*gc[280 + t[1]])
+
+
+def _wp_sub_px(a: int, b: int) -> int:
+    """Channelwise modular subtraction a - b (forward transforms)."""
+    out = 0
+    for sh in (24, 16, 8, 0):
+        out |= ((((a >> sh) & 0xFF) - ((b >> sh) & 0xFF)) & 0xFF) << sh
+    return out
+
+
+def encode_vp8l(w: int, h: int, argb: list[int], *, cache_bits: int = 0,
+                lz77: bool = False, subtract_green: bool = False,
+                predictor_mode: int | None = None,
+                color_deltas: tuple[int, int, int] | None = None,
+                palette: list[int] | None = None) -> bytes:
+    """ARGB pixels → complete lossless .webp file (RIFF + VP8L)."""
+    bits = _WpBits()
+    bits.put(0x2F, 8)
+    bits.put(w - 1, 14)
+    bits.put(h - 1, 14)
+    bits.put(1 if any(px >> 24 != 0xFF for px in argb) else 0, 1)
+    bits.put(0, 3)  # version
+    pix = list(argb)
+    dec_w = w
+    if palette is not None:
+        # indices replace pixels; palette is delta-coded as a nested image
+        lookup = {px: i for i, px in enumerate(palette)}
+        idxs = [lookup[px] for px in pix]
+        bits.put(1, 1)
+        bits.put(3, 2)
+        bits.put(len(palette) - 1, 8)
+        deltas = [palette[0]] + [_wp_sub_px(palette[i], palette[i - 1])
+                                 for i in range(1, len(palette))]
+        _wp_entropy_image(bits, len(palette), 1, deltas)
+        psize = len(palette)
+        wb = 3 if psize <= 2 else 2 if psize <= 4 else 1 if psize <= 16 else 0
+        if wb:
+            nper = 1 << wb
+            bpp = 8 >> wb
+            dec_w = -(-w // nper)
+            packed = []
+            for y in range(h):
+                for bx in range(dec_w):
+                    v = 0
+                    for k in range(nper):
+                        x = bx * nper + k
+                        if x < w:
+                            v |= idxs[y * w + x] << (k * bpp)
+                    packed.append(0xFF000000 | (v << 8))
+            pix = packed
+        else:
+            pix = [0xFF000000 | (ix << 8) for ix in idxs]
+    if subtract_green:
+        bits.put(1, 1)
+        bits.put(2, 2)
+        pix = [(px & 0xFF00FF00)
+               | (((((px >> 16) & 0xFF) - ((px >> 8) & 0xFF)) & 0xFF) << 16)
+               | ((((px & 0xFF) - ((px >> 8) & 0xFF)) & 0xFF))
+               for px in pix]
+    if color_deltas is not None:
+        g2r, g2b, r2b = color_deltas
+
+        def delta(t: int, c: int) -> int:
+            ts = t - 256 if t > 127 else t
+            cs = c - 256 if c > 127 else c
+            return (ts * cs) >> 5
+
+        bits.put(1, 1)
+        bits.put(1, 2)
+        size_bits = 2
+        bits.put(size_bits - 2, 3)
+        mw, mh = -(-dec_w // 4), -(-h // 4)
+        elem = 0xFF000000 | (r2b << 16) | (g2b << 8) | g2r
+        _wp_entropy_image(bits, mw, mh, [elem] * (mw * mh))
+        out = []
+        for px in pix:  # forward: subtract the deltas the inverse adds
+            g = (px >> 8) & 0xFF
+            r_orig = (px >> 16) & 0xFF
+            b = (px & 0xFF) - delta(g2b, g) - delta(r2b, r_orig)
+            r = (r_orig - delta(g2r, g)) & 0xFF
+            out.append((px & 0xFF00FF00) | (r << 16) | (b & 0xFF))
+        pix = out
+    if predictor_mode is not None:
+        from documentconvert_spark.kernels.miniwebp import (
+            _avg2, _cas_full, _cas_half, _select)
+
+        bits.put(1, 1)
+        bits.put(0, 2)
+        size_bits = 2
+        bits.put(size_bits - 2, 3)
+        mw, mh = -(-dec_w // 4), -(-h // 4)
+        _wp_entropy_image(bits, mw, mh,
+                          [0xFF000000 | (predictor_mode << 8)] * (mw * mh))
+        m = predictor_mode
+        out = []
+        for y in range(h):
+            for x in range(dec_w):
+                i = y * dec_w + x
+                if x == 0 and y == 0:
+                    pred = 0xFF000000
+                elif y == 0:
+                    pred = pix[i - 1]
+                elif x == 0:
+                    pred = pix[i - dec_w]
+                else:
+                    lf, tp = pix[i - 1], pix[i - dec_w]
+                    tl = pix[i - dec_w - 1]
+                    # contiguous-buffer TR rule (spec §5): rightmost
+                    # column uses the current row's leftmost pixel
+                    tr = pix[i - dec_w + 1]
+                    pred = [0xFF000000, lf, tp, tr, tl,
+                            _avg2(_avg2(lf, tr), tp), _avg2(lf, tl),
+                            _avg2(lf, tp), _avg2(tl, tp), _avg2(tp, tr),
+                            _avg2(_avg2(lf, tl), _avg2(tp, tr)),
+                            _select(tp, lf, tl), _cas_full(lf, tp, tl),
+                            _cas_half(lf, tp, tl)][m]
+                out.append(_wp_sub_px(pix[i], pred))
+        pix = out
+    bits.put(0, 1)  # end of transforms
+    _wp_entropy_image(bits, dec_w, h, pix, cache_bits=cache_bits,
+                      lz77=lz77, level0=True)
+    payload = bits.done()
+    if len(payload) & 1:
+        chunk = struct.pack("<I", len(payload)) + payload + b"\x00"
+    else:
+        chunk = struct.pack("<I", len(payload)) + payload
+    body = b"WEBP" + b"VP8L" + chunk
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+def render_text_webp(lines: list[str], scale: int = 2, margin: int = 8,
+                     antialias: bool = False) -> bytes:
+    """Rendered-text lossless WebP for the raster OCR route — exercises
+    LZ77 runs, the color cache and subtract-green in one fixture."""
+    w, h, grid = _render_text_grid(lines, scale, margin)
+    if antialias:
+        grid = antialias_grid(grid)
+    argb = [0xFF000000 | (p << 16) | (p << 8) | p for row in grid for p in row]
+    return encode_vp8l(w, h, argb, cache_bits=4, lz77=True, subtract_green=True)
+
+
+# -- classic-xref PDF writers (generator side of kernels/realpdf) -----------
+# Objects are {number: body after "N 0 obj"}; classic_pdf lays them out
+# in number order with a classic xref table. The builders below cover the
+# filter, encryption and font paths the crafted fixtures, the fuzz seeds
+# and the unit tests share.
+
+PDF_FONT = b"<</Type /Font /Subtype /Type1 /BaseFont /Helvetica>>"
+
+
+def classic_pdf(objects: dict[int, bytes], version: bytes = b"1.4",
+                trailer: bytes = b"") -> bytes:
+    """Assemble a classic-xref PDF; ``trailer`` is appended inside the
+    trailer dictionary after /Root."""
+    out = bytearray(b"%%PDF-%s\n" % version)
+    offsets = {}
+    for num in sorted(objects):
+        offsets[num] = len(out)
+        out += b"%d 0 obj\n" % num + objects[num] + b"\nendobj\n"
+    xref_at = len(out)
+    maxn = max(objects) + 1
+    out += b"xref\n0 %d\n" % maxn
+    out += b"0000000000 65535 f \n"
+    for n in range(1, maxn):
+        out += b"%010d 00000 n \n" % offsets.get(n, 0)
+    out += b"trailer\n<</Size %d /Root 1 0 R%s>>\nstartxref\n%d\n%%%%EOF\n" % (
+        maxn, trailer, xref_at)
+    return bytes(out)
+
+
+def page_tree(kids: list[int]) -> dict[int, bytes]:
+    kid_refs = b" ".join(b"%d 0 R" % k for k in kids)
+    return {
+        1: b"<</Type /Catalog /Pages 2 0 R>>",
+        2: b"<</Type /Pages /Kids [%s] /Count %d>>" % (kid_refs, len(kids)),
+    }
+
+
+def stream_obj(d: bytes, body: bytes) -> bytes:
+    return b"<<%s /Length %d>>\nstream\n%s\nendstream" % (d, len(body), body)
+
+
+def lzw_pdf(content: bytes = b"BT /F1 10 Tf 72 700 Td (lzw content line) Tj ET") -> bytes:
+    """Single page whose content stream is LZW-encoded."""
+    objs = page_tree([3])
+    objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
+    enc = _lzw_encode(content)
+    objs[4] = b"<</Filter /LZWDecode /Length %d>>\nstream\n%s\nendstream" % (len(enc), enc)
+    objs[5] = PDF_FONT
+    return classic_pdf(objs)
+
+
+def encrypt_pdf(r: int = 3) -> bytes:
+    """Build an RC4-encrypted single-page PDF (standard security handler,
+    empty user+owner passwords) per ISO 32000 §7.6.3 Algorithms 2/3/5."""
+    import hashlib
+
+    from documentconvert_spark.kernels.realpdf import _ENC_PAD, _rc4
+
+    length = 16 if r == 3 else 5
+    v = 2 if r == 3 else 1
+    p = -44  # typical print/copy-restricted permission bits
+    doc_id = b"\x01\x02" * 8
+
+    # Algorithm 3: /O from the (empty) owner password
+    h = hashlib.md5(_ENC_PAD).digest()
+    if r == 3:
+        for _ in range(50):
+            h = hashlib.md5(h[:length]).digest()
+    okey = h[:length]
+    o = _rc4(okey, _ENC_PAD)
+    if r == 3:
+        for i in range(1, 20):
+            o = _rc4(bytes(b ^ i for b in okey), o)
+
+    # Algorithm 2: file key from the (empty) user password
+    h = hashlib.md5(
+        _ENC_PAD + o[:32] + (p & 0xFFFFFFFF).to_bytes(4, "little") + doc_id).digest()
+    if r == 3:
+        for _ in range(50):
+            h = hashlib.md5(h[:length]).digest()
+    key = h[:length]
+
+    # Algorithms 4/5: /U
+    if r == 2:
+        u = _rc4(key, _ENC_PAD)
+    else:
+        u = _rc4(key, hashlib.md5(_ENC_PAD + doc_id).digest())
+        for i in range(1, 20):
+            u = _rc4(bytes(b ^ i for b in key), u)
+        u += b"\x00" * 16
+
+    def obj_key(num: int) -> bytes:
+        return hashlib.md5(
+            key + num.to_bytes(3, "little") + (0).to_bytes(2, "little")
+        ).digest()[: min(length + 5, 16)]
+
+    objs6 = (b"<</Filter /Standard /V %d /R %d /Length %d /P %d "
+             b"/O <%s> /U <%s>>>" % (v, r, length * 8, p, o.hex().encode(), u.hex().encode()))
+    return _build_encrypted(objs6, _rc4(obj_key(4), _ENC_CONTENT), doc_id=doc_id)
+
+
+def _build_encrypted(objs6: bytes, enc_content: bytes, trailer_extra: bytes = b"",
+                     doc_id: bytes = b"\x01\x02" * 8) -> bytes:
+    objs = page_tree([3])
+    objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
+    objs[4] = b"<</Length %d>>\nstream\n%s\nendstream" % (len(enc_content), enc_content)
+    objs[5] = PDF_FONT
+    objs[6] = objs6
+    ids = doc_id.hex().encode()
+    return classic_pdf(objs, version=b"1.6", trailer=b" /Encrypt 6 0 R /ID [<%s> <%s>]%s"
+                       % (ids, ids, trailer_extra))
+
+
+_ENC_CONTENT = b"BT /F1 10 Tf 72 700 Td (decrypted text line) Tj ET"
+
+
+def aesv2_pdf() -> bytes:
+    """V4/R4 crypt-filter document with /AESV2: R3-style key derivation
+    plus the sAlT per-object key and IV-prefixed CBC streams."""
+    import hashlib
+
+    from documentconvert_spark.kernels.realpdf import (
+        _ENC_PAD, _aes_cbc_encrypt, _rc4)
+
+    doc_id = b"\x01\x02" * 8
+    p = -3392
+    # empty owner password /O (Algorithm 3, R>=3)
+    h = hashlib.md5(_ENC_PAD).digest()
+    for _ in range(50):
+        h = hashlib.md5(h[:16]).digest()
+    okey = h[:16]
+    o = _rc4(okey, _ENC_PAD)
+    for i in range(1, 20):
+        o = _rc4(bytes(b ^ i for b in okey), o)
+    # file key (Algorithm 2)
+    h = hashlib.md5(
+        _ENC_PAD + o[:32] + (p & 0xFFFFFFFF).to_bytes(4, "little") + doc_id).digest()
+    for _ in range(50):
+        h = hashlib.md5(h[:16]).digest()
+    key = h[:16]
+    # /U (Algorithm 5)
+    u = _rc4(key, hashlib.md5(_ENC_PAD + doc_id).digest())
+    for i in range(1, 20):
+        u = _rc4(bytes(b ^ i for b in key), u)
+    u += b"\x00" * 16
+    # per-object AES key for object 4 gen 0
+    ok4 = hashlib.md5(
+        key + (4).to_bytes(3, "little") + (0).to_bytes(2, "little") + b"sAlT"
+    ).digest()[:16]
+    iv = bytes(range(16))
+    pad = 16 - len(_ENC_CONTENT) % 16
+    enc = iv + _aes_cbc_encrypt(ok4, iv, _ENC_CONTENT + bytes([pad]) * pad)
+    objs6 = (b"<</Filter /Standard /V 4 /R 4 /Length 128 /P %d /O <%s> /U <%s> "
+             b"/CF <</StdCF <</CFM /AESV2 /AuthEvent /DocOpen /Length 16>>>> "
+             b"/StmF /StdCF /StrF /StdCF>>"
+             % (p, o.hex().encode(), u.hex().encode()))
+    return _build_encrypted(objs6, enc, doc_id=doc_id)
+
+
+def aes256_pdf() -> bytes:
+    """V5/R6 (AES-256): Algorithm 2.B hash validates the empty user
+    password against /U, /UE unwraps the file key, streams are
+    IV-prefixed AES-256-CBC."""
+    from documentconvert_spark.kernels.realpdf import (
+        _aes_cbc_encrypt, _r6_hash)
+
+    file_key = bytes(range(32))
+    vsalt, ksalt = b"VALSALT!", b"KEYSALT!"
+    u = _r6_hash(b"", vsalt) + vsalt + ksalt
+    ue = _aes_cbc_encrypt(_r6_hash(b"", ksalt), bytes(16), file_key)
+    iv = bytes(range(16))
+    pad = 16 - len(_ENC_CONTENT) % 16
+    enc = iv + _aes_cbc_encrypt(file_key, iv, _ENC_CONTENT + bytes([pad]) * pad)
+    objs6 = (b"<</Filter /Standard /V 5 /R 6 /Length 256 /P -4 "
+             b"/O <%s> /U <%s> /OE <%s> /UE <%s> /Perms <000000000000000000000000> "
+             b"/CF <</StdCF <</CFM /AESV3 /Length 32>>>> /StmF /StdCF /StrF /StdCF>>"
+             % (b"00" * 48, u.hex().encode(), b"00" * 32, ue.hex().encode()))
+    return _build_encrypted(objs6, enc)
+
+
+def ttf_with_cmap4(mapping: dict[int, int]) -> bytes:
+    """Minimal TrueType blob holding only a (3,1) format-4 cmap: one
+    segment per mapped code point plus the 0xFFFF terminator."""
+    segs = sorted(mapping.items())
+    segcount = len(segs) + 1
+    end_codes = [c for c, _ in segs] + [0xFFFF]
+    start_codes = list(end_codes)
+    deltas = [(g - c) & 0xFFFF for c, g in segs] + [1]
+    ros = [0] * segcount
+
+    def u16s(vals):
+        return b"".join(struct.pack(">H", v) for v in vals)
+
+    body = u16s(end_codes) + b"\x00\x00" + u16s(start_codes) + u16s(deltas) + u16s(ros)
+    sub = struct.pack(">HHHHHHH", 4, 14 + len(body), 0, segcount * 2, 0, 0, 0) + body
+    cmap = struct.pack(">HH", 0, 1) + struct.pack(">HHI", 3, 1, 12) + sub
+    return (struct.pack(">IHHHH", 0x00010000, 1, 0, 0, 0)
+            + b"cmap" + struct.pack(">III", 0, 28, len(cmap)) + cmap)
+
+
+def cidfont_pdf() -> bytes:
+    """Identity-H CIDFontType2, NO ToUnicode, embedded TrueType program —
+    the text is only recoverable by inverting the font's own cmap."""
+    ttf = ttf_with_cmap4({0x48: 5, 0x45: 3, 0x4C: 7, 0x4F: 9})  # H E L O
+    content = b"BT /F1 12 Tf 72 700 Td <00050003000700070009> Tj ET"  # gids HELLO
+    objs = page_tree([3])
+    objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
+               b"/Resources <</Font <</F1 5 0 R>>>>>>")
+    objs[4] = stream_obj(b"", content)
+    objs[5] = (b"<</Type /Font /Subtype /Type0 /BaseFont /EmbedX "
+               b"/Encoding /Identity-H /DescendantFonts [6 0 R]>>")
+    objs[6] = (b"<</Type /Font /Subtype /CIDFontType2 /BaseFont /EmbedX "
+               b"/CIDToGIDMap /Identity /FontDescriptor 7 0 R>>")
+    objs[7] = b"<</Type /FontDescriptor /FontName /EmbedX /FontFile2 8 0 R>>"
+    objs[8] = stream_obj(b"/Length1 %d" % len(ttf), ttf)
+    return classic_pdf(objs)
+
+
+# -- zip containers (OOXML / ODF) ------------------------------------------
+
+def det_zip(members: list[tuple[str, str | bytes]]) -> bytes:
+    """Stored zip with fixed member timestamps: the same members always
+    give the same bytes."""
+    import io
+    import zipfile
+
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as z:
+        for name, data in members:
+            zi = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
+            z.writestr(zi, data)
+    return buf.getvalue()
+
+
+def odf_zip(content_xml: str, mimetype: str) -> bytes:
+    return det_zip([("mimetype", mimetype), ("content.xml", content_xml)])
+
+
+def xlsx_zip(sheet_xml: str, styles_xml: str | None = None,
+             sheet_name: str = "S", shared_strings_xml: str | None = None) -> bytes:
+    """One-sheet OOXML workbook around a worksheet part, plus the styles
+    and shared-strings parts when given."""
+    wb = f"""<?xml version="1.0"?>
+<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+ xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
+ <sheets><sheet name="{sheet_name}" sheetId="1" r:id="rId1"/></sheets></workbook>"""
+    rels = """<?xml version="1.0"?>
+<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
+ <Relationship Id="rId1" Target="worksheets/sheet1.xml"/></Relationships>"""
+    members = [("xl/workbook.xml", wb), ("xl/_rels/workbook.xml.rels", rels),
+               ("xl/worksheets/sheet1.xml", sheet_xml)]
+    if styles_xml is not None:
+        members.append(("xl/styles.xml", styles_xml))
+    if shared_strings_xml is not None:
+        members.append(("xl/sharedStrings.xml", shared_strings_xml))
+    return det_zip(members)
+
+
+# -- OLE compound file, BIFF8 .xls and binary .ppt -------------------------
+
+_CFB_FREE = 0xFFFFFFFF
+_CFB_ENDCHAIN = 0xFFFFFFFE
+_CFB_FATSECT = 0xFFFFFFFD
+
+
+def _cfb_dir_entry(name: str, otype: int, start: int, size: int) -> bytes:
+    raw_name = name.encode("utf-16-le") + b"\x00\x00"
+    e = bytearray(128)
+    e[: len(raw_name)] = raw_name
+    struct.pack_into("<H", e, 64, len(raw_name))
+    e[66] = otype
+    e[67] = 1  # black
+    struct.pack_into("<I", e, 68, _CFB_FREE)   # left sibling
+    struct.pack_into("<I", e, 72, _CFB_FREE)   # right sibling
+    struct.pack_into("<I", e, 76, 1 if otype == 5 else _CFB_FREE)  # child
+    struct.pack_into("<I", e, 116, start)
+    struct.pack_into("<Q", e, 120, size)
+    return bytes(e)
+
+
+def write_cfb(streams: list[tuple[str, bytes]]) -> bytes:
+    """Minimal [MS-CFB] writer: 512-byte sectors, all streams
+    on the regular FAT (padded past the mini cutoff), single FAT sector."""
+    ssz = 512
+    padded = []
+    for name, data in streams:
+        size = max(len(data), 4096)
+        pad = (-size) % ssz
+        padded.append((name, data + b"\x00" * (size + pad - len(data)), size + pad))
+
+    sectors: list[bytes] = []
+    starts = []
+    for _name, data, _size in padded:
+        starts.append(len(sectors))
+        for off in range(0, len(data), ssz):
+            sectors.append(data[off : off + ssz])
+    dir_sect = len(sectors)
+    entries = [_cfb_dir_entry("Root Entry", 5, _CFB_ENDCHAIN, 0)]
+    for (name, _d, size), start in zip(padded, starts):
+        entries.append(_cfb_dir_entry(name, 2, start, size))
+    dir_data = b"".join(entries)
+    dir_data += b"\x00" * ((-len(dir_data)) % ssz)
+    for off in range(0, len(dir_data), ssz):
+        sectors.append(dir_data[off : off + ssz])
+    n_dir_sects = len(sectors) - dir_sect
+    fat_sect = len(sectors)
+
+    fat = [_CFB_FREE] * (ssz // 4)
+    for (name, data, _size), start in zip(padded, starts):
+        n = len(data) // ssz
+        for k in range(n):
+            fat[start + k] = start + k + 1 if k < n - 1 else _CFB_ENDCHAIN
+    for k in range(n_dir_sects):
+        fat[dir_sect + k] = dir_sect + k + 1 if k < n_dir_sects - 1 else _CFB_ENDCHAIN
+    fat[fat_sect] = _CFB_FATSECT
+    sectors.append(struct.pack(f"<{ssz // 4}I", *fat))
+
+    hdr = bytearray(512)
+    hdr[:8] = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
+    struct.pack_into("<H", hdr, 24, 0x003E)   # minor version
+    struct.pack_into("<H", hdr, 26, 0x0003)   # major version 3
+    struct.pack_into("<H", hdr, 28, 0xFFFE)   # little-endian
+    struct.pack_into("<H", hdr, 30, 9)        # sector shift
+    struct.pack_into("<H", hdr, 32, 6)        # mini sector shift
+    struct.pack_into("<I", hdr, 44, 1)        # n_fat
+    struct.pack_into("<I", hdr, 48, dir_sect)
+    struct.pack_into("<I", hdr, 56, 4096)     # mini cutoff
+    struct.pack_into("<I", hdr, 60, _CFB_ENDCHAIN)  # minifat start
+    struct.pack_into("<I", hdr, 64, 0)
+    struct.pack_into("<I", hdr, 68, _CFB_ENDCHAIN)  # difat start
+    struct.pack_into("<I", hdr, 72, 0)
+    difat = [fat_sect] + [_CFB_FREE] * 108
+    struct.pack_into("<109I", hdr, 76, *difat)
+    return bytes(hdr) + b"".join(sectors)
+
+
+def biff_rec(op: int, payload: bytes) -> bytes:
+    return struct.pack("<HH", op, len(payload)) + payload
+
+
+def xl_str8(s: str) -> bytes:
+    """ShortXLUnicodeString, compressed."""
+    b = s.encode("latin-1")
+    return struct.pack("<BB", len(b), 0) + b
+
+
+def make_xls() -> bytes:
+    # globals: BOF, BOUNDSHEET (offset patched), SST, EOF
+    sst_strings = ["name", "alpha", "beta", "宽字符"]
+    sst_payload = struct.pack("<II", 4, 4)
+    for s in sst_strings:
+        try:
+            raw = s.encode("latin-1")
+            sst_payload += struct.pack("<HB", len(s), 0) + raw
+        except UnicodeEncodeError:
+            raw = s.encode("utf-16-le")
+            sst_payload += struct.pack("<HB", len(s), 1) + raw
+    bof = biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0005, 0, 0, 0, 0))
+    boundsheet_placeholder = struct.pack("<IBB", 0, 0, 0) + xl_str8("Data")
+    globals_part = (
+        bof
+        + biff_rec(0x0085, boundsheet_placeholder)
+        + biff_rec(0x00FC, sst_payload)
+        + biff_rec(0x000A, b"")
+    )
+    sheet_off = len(globals_part)
+    # sheet substream: BOF, LABELSST row0 (header), NUMBER + RK row1, EOF
+    sheet = (
+        biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0010, 0, 0, 0, 0))
+        + biff_rec(0x00FD, struct.pack("<HHHI", 0, 0, 0, 0))  # A1 = "name"
+        + biff_rec(0x00FD, struct.pack("<HHHI", 0, 1, 0, 3))  # B1 = "宽字符"
+        + biff_rec(0x00FD, struct.pack("<HHHI", 1, 0, 0, 1))  # A2 = "alpha"
+        + biff_rec(0x0203, struct.pack("<HHHd", 1, 1, 0, 12.0))  # B2 = 12
+        + biff_rec(0x00FD, struct.pack("<HHHI", 2, 0, 0, 2))  # A3 = "beta"
+        + biff_rec(0x027E, struct.pack("<HHHI", 2, 1, 0, (25 << 2) | 0x02))  # B3 = RK int 25
+        + biff_rec(0x000A, b"")
+    )
+    # patch BOUNDSHEET lbPlyPos
+    fixed_boundsheet = struct.pack("<I", sheet_off) + boundsheet_placeholder[4:]
+    globals_part = (
+        bof + biff_rec(0x0085, fixed_boundsheet) + biff_rec(0x00FC, sst_payload)
+        + biff_rec(0x000A, b"")
+    )
+    return write_cfb([("Workbook", globals_part + sheet)])
+
+
+def ppt_rec(ver_inst: int, rtype: int, payload: bytes) -> bytes:
+    return struct.pack("<HHI", ver_inst, rtype, len(payload)) + payload
+
+
+def make_ppt() -> bytes:
+    title = "Roadmap 2026".encode("utf-16-le")
+    body = "第一点\r第二点".encode("utf-16-le")
+    bytes_txt = b"ascii only run"
+    slide = ppt_rec(
+        0x000F, 0x03EE,  # Slide container
+        ppt_rec(0x0000, 0x0F9F, struct.pack("<I", 0))      # TextHeaderAtom: title
+        + ppt_rec(0x0000, 0x0FA0, title)                    # TextCharsAtom
+        + ppt_rec(0x0000, 0x0F9F, struct.pack("<I", 1))    # TextHeaderAtom: body
+        + ppt_rec(0x0000, 0x0FA0, body)
+        + ppt_rec(0x0000, 0x0FA8, bytes_txt),               # TextBytesAtom
+    )
+    doc = ppt_rec(0x000F, 0x03E8, slide)
+    return write_cfb([("PowerPoint Document", doc), ("Current User", b"\x00" * 16)])

@@ -355,14 +355,6 @@ def _read_xl_string_short(buf: bytes, pos: int) -> tuple[str, int]:
 
 # -- .ppt --------------------------------------------------------------------
 
-_PPT_CONTAINERS = {
-    0x03E8,  # Document
-    0x03EE,  # Slide
-    0x03F3,  # Notes
-    0x0FF0,  # SlideListWithText
-    0x0FC9,  # DrawingContainer-ish (PPDrawing)
-    0xF000, 0xF001, 0xF002, 0xF003, 0xF004,  # OfficeArt containers
-}
 _TEXTHEADER = 0x0F9F
 _TEXTCHARS = 0x0FA0
 _TEXTBYTES = 0x0FA8

@@ -51,7 +51,6 @@ from documentconvert_spark.kernels.spans import (
 )
 
 _WS = frozenset(b"\x00\t\n\x0c\r ")
-_DELIM = frozenset(b"()<>[]{}/%")
 
 
 class _Name(str):
@@ -548,58 +547,6 @@ def _aes_dec_expand(key: bytes):
                         | (_M11[a0] ^ _M13[a1] ^ _M9[a2] ^ _M14[a3]))
             dk.append(word)
     return dk, rounds
-
-
-def _aes_enc_block(w, rounds: int, block: bytes) -> bytes:
-    t0, t1, t2, t3 = _TE0, _TE1, _TE2, _TE3
-    sb = _AES_SBOX
-    s0 = int.from_bytes(block[0:4], "big") ^ w[0]
-    s1 = int.from_bytes(block[4:8], "big") ^ w[1]
-    s2 = int.from_bytes(block[8:12], "big") ^ w[2]
-    s3 = int.from_bytes(block[12:16], "big") ^ w[3]
-    k = 4
-    for _ in range(rounds - 1):
-        u0 = t0[s0 >> 24] ^ t1[(s1 >> 16) & 0xFF] ^ t2[(s2 >> 8) & 0xFF] ^ t3[s3 & 0xFF] ^ w[k]
-        u1 = t0[s1 >> 24] ^ t1[(s2 >> 16) & 0xFF] ^ t2[(s3 >> 8) & 0xFF] ^ t3[s0 & 0xFF] ^ w[k + 1]
-        u2 = t0[s2 >> 24] ^ t1[(s3 >> 16) & 0xFF] ^ t2[(s0 >> 8) & 0xFF] ^ t3[s1 & 0xFF] ^ w[k + 2]
-        u3 = t0[s3 >> 24] ^ t1[(s0 >> 16) & 0xFF] ^ t2[(s1 >> 8) & 0xFF] ^ t3[s2 & 0xFF] ^ w[k + 3]
-        s0, s1, s2, s3 = u0, u1, u2, u3
-        k += 4
-    u0 = ((sb[s0 >> 24] << 24) | (sb[(s1 >> 16) & 0xFF] << 16)
-          | (sb[(s2 >> 8) & 0xFF] << 8) | sb[s3 & 0xFF]) ^ w[k]
-    u1 = ((sb[s1 >> 24] << 24) | (sb[(s2 >> 16) & 0xFF] << 16)
-          | (sb[(s3 >> 8) & 0xFF] << 8) | sb[s0 & 0xFF]) ^ w[k + 1]
-    u2 = ((sb[s2 >> 24] << 24) | (sb[(s3 >> 16) & 0xFF] << 16)
-          | (sb[(s0 >> 8) & 0xFF] << 8) | sb[s1 & 0xFF]) ^ w[k + 2]
-    u3 = ((sb[s3 >> 24] << 24) | (sb[(s0 >> 16) & 0xFF] << 16)
-          | (sb[(s1 >> 8) & 0xFF] << 8) | sb[s2 & 0xFF]) ^ w[k + 3]
-    return b"".join(u.to_bytes(4, "big") for u in (u0, u1, u2, u3))
-
-
-def _aes_dec_block(dk, rounds: int, block: bytes) -> bytes:
-    d0, d1, d2, d3 = _TD0, _TD1, _TD2, _TD3
-    isb = _AES_INV_SBOX
-    s0 = int.from_bytes(block[0:4], "big") ^ dk[0]
-    s1 = int.from_bytes(block[4:8], "big") ^ dk[1]
-    s2 = int.from_bytes(block[8:12], "big") ^ dk[2]
-    s3 = int.from_bytes(block[12:16], "big") ^ dk[3]
-    k = 4
-    for _ in range(rounds - 1):
-        u0 = d0[s0 >> 24] ^ d1[(s3 >> 16) & 0xFF] ^ d2[(s2 >> 8) & 0xFF] ^ d3[s1 & 0xFF] ^ dk[k]
-        u1 = d0[s1 >> 24] ^ d1[(s0 >> 16) & 0xFF] ^ d2[(s3 >> 8) & 0xFF] ^ d3[s2 & 0xFF] ^ dk[k + 1]
-        u2 = d0[s2 >> 24] ^ d1[(s1 >> 16) & 0xFF] ^ d2[(s0 >> 8) & 0xFF] ^ d3[s3 & 0xFF] ^ dk[k + 2]
-        u3 = d0[s3 >> 24] ^ d1[(s2 >> 16) & 0xFF] ^ d2[(s1 >> 8) & 0xFF] ^ d3[s0 & 0xFF] ^ dk[k + 3]
-        s0, s1, s2, s3 = u0, u1, u2, u3
-        k += 4
-    u0 = ((isb[s0 >> 24] << 24) | (isb[(s3 >> 16) & 0xFF] << 16)
-          | (isb[(s2 >> 8) & 0xFF] << 8) | isb[s1 & 0xFF]) ^ dk[k]
-    u1 = ((isb[s1 >> 24] << 24) | (isb[(s0 >> 16) & 0xFF] << 16)
-          | (isb[(s3 >> 8) & 0xFF] << 8) | isb[s2 & 0xFF]) ^ dk[k + 1]
-    u2 = ((isb[s2 >> 24] << 24) | (isb[(s1 >> 16) & 0xFF] << 16)
-          | (isb[(s0 >> 8) & 0xFF] << 8) | isb[s3 & 0xFF]) ^ dk[k + 2]
-    u3 = ((isb[s3 >> 24] << 24) | (isb[(s2 >> 16) & 0xFF] << 16)
-          | (isb[(s1 >> 8) & 0xFF] << 8) | isb[s0 & 0xFF]) ^ dk[k + 3]
-    return b"".join(u.to_bytes(4, "big") for u in (u0, u1, u2, u3))
 
 
 def _aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
@@ -1528,10 +1475,6 @@ def _mat_mul(a, b):
 _ID = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
 
 
-class _Run(tuple):
-    """(page, y, x, size, seq, kind, payload, mono)"""
-
-
 # one compiled step per token: eats whitespace/comments, then captures
 # exactly one of number | /name | operator-word | single delimiter byte.
 # The delimiter catch-all excludes whitespace so a pure-ws tail fails to
@@ -1960,7 +1903,6 @@ def _detect_tables(lines: list[dict]) -> dict[int, int]:
 
 _DIGIT_RUN_RE = re.compile(r"\d+")
 _FURNITURE_BAND_PT = 18.0  # page-edge band: pt from the top/bottom-most line
-_FURNITURE_FRAC = 0.6      # fraction of pages a line must recur on (min 2)
 _FURNITURE_MAX_CHARS = 120
 _FURNITURE_MIN_PAGE_LINES = 4  # sparse pages neither contribute nor strip
 # digit-normalized shapes that are furniture WITHOUT any letters: bare

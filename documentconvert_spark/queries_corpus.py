@@ -472,10 +472,6 @@ GROUP BY e.q_id
 # summation orders (~1e-15 relative noise) can never flip a downstream
 # nearest-centroid argmax; ties break on c_id ASC in both engines.
 
-_VDOT = "aggregate(zip_with(ve, ce, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-_ARR_NORM = "sqrt(aggregate(transform({a}, x -> x * x), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))"
-
-
 # production core shared with jobs/run_index.py — the job persists the
 # SAME quantizer/assignment semantics the oracle certifies here
 from documentconvert_spark.ops.ann import ivf_assign as _ops_ivf_assign  # noqa: E402
@@ -1616,7 +1612,6 @@ FROM bounds JOIN kept USING (lang)
 
 _PQ_M, _PQ_K, _PQ_DSUB = 8, 16, 8  # 8 subspaces × 8 dims = 64; 16 cents each
 _PQ_SHORTLIST = 100
-_L2SQ = "aggregate(zip_with(sv, ce, (x, y) -> (x - y) * (x - y)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
 
 
 def _pq_train(spark: SparkSession, sf_dir: str, iters: int = 2):

@@ -77,13 +77,13 @@ def _corpus(n: int):
 def _image_corpus(n: int):
     """n images cycling through every decodable format (format mix ≈ a
     real web corpus: the same gradient-scene content class per doc)."""
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__))))
-    from gen_extra_fixtures import _gif_encode, _tiff_encode, encode_vp8l
-
     from documentconvert_spark.corpus import (
         encode_gray_bmp,
         encode_gray_jpeg_progressive,
         encode_gray_png,
+        encode_vp8l,
+        gif_encode,
+        tiff_encode,
     )
 
     rng = random.Random("bench-media-img:1")
@@ -99,14 +99,14 @@ def _image_corpus(n: int):
         elif fmt == "bmp":
             data = encode_gray_bmp(w, h, rows)
         elif fmt == "tiff":
-            data = _tiff_encode("<", w, h, 1, [bytes(b"".join(bytes(r) for r in rows))], h)
+            data = tiff_encode("<", w, h, 1, [bytes(b"".join(bytes(r) for r in rows))], h)
         elif fmt == "webp":
             argb = [0xFF000000 | (v << 16) | (v << 8) | v for r in rows for v in r]
             data = encode_vp8l(w, h, argb, cache_bits=4, lz77=True)
         elif fmt == "gif":
             pal = [(v * 17, v * 17, v * 17) for v in range(16)]
             idx = [v >> 4 for r in rows for v in r]
-            data = _gif_encode(w, h, idx, pal, 4)
+            data = gif_encode(w, h, idx, pal, 4)
         else:  # progressive JPEG
             data = encode_gray_jpeg_progressive(w, h, rows, ycbcr420=(i % 2 == 0))
         out.append((f"i-{i:05d}", data))

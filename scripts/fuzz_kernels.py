@@ -32,6 +32,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 REF_TEST_DIR = "/root/reference/test"
+EXTRA_DIR = os.path.join(REPO, "documentconvert_spark", "resources", "extra_docs")
 OUT_DIR = os.path.join(REPO, "_work", "fuzz")
 PER_MUTANT_TIMEOUT_S = 5.0
 CHUNK_TIMEOUT_S = 600  # parent-side backstop for uninterruptible C loops
@@ -45,8 +46,7 @@ _BIG_INTS = (0x7FFFFFFF, 0xFFFFFFFF, 0x7FFFFFFFFFFFFFFF, 2_000_000_000)
 def _seed_docs() -> list[tuple[str, str, bytes]]:
     """(name, route, bytes) — every dispatch route gets real seeds."""
     seeds = []
-    extra = os.path.join(REPO, "documentconvert_spark", "resources", "extra_docs")
-    dirs = [d for d in (REF_TEST_DIR, extra) if os.path.isdir(d)]
+    dirs = [d for d in (REF_TEST_DIR, EXTRA_DIR) if os.path.isdir(d)]
     if REF_TEST_DIR not in dirs:
         print(f"fuzz: {REF_TEST_DIR} not present; seeding from the in-repo "
               f"fixtures only", file=sys.stderr)
@@ -76,24 +76,27 @@ def _render_prop_kern_seed() -> bytes:
     return render_text_png_prop(["KERN L- SEED"], scale=2, kern={(0, 6): -3})
 
 
-def _mixed_scale_seed() -> bytes:
-    # explicit insert: scripts/ is only implicitly on sys.path when this
-    # file runs as a script, not when imported as a module
-    scripts_dir = os.path.join(REPO, "scripts")
-    if scripts_dir not in sys.path:
-        sys.path.insert(0, scripts_dir)
-    from gen_extra_fixtures import mixed_scale_png
-
-    return mixed_scale_png()
-
-
 def _format_seeds() -> list[tuple[str, str, bytes]]:
     """Formats the reference corpus and synthetic docs don't cover:
     RTF (with an embedded \\pict), ODF (zip container), BIFF .xls/.ppt
-    (OLE CFB, built by the test suite's minimal writer), real PNG/JPEG."""
-    import io
+    (OLE CFB), real PNG/JPEG. Shapes that a committed fixture already
+    seeds byte for byte on the same route are not repeated here."""
     import struct
-    import zipfile
+
+    from documentconvert_spark.corpus import (
+        aes256_pdf,
+        aesv2_pdf,
+        cidfont_pdf,
+        encrypt_pdf,
+        lzw_pdf,
+        make_ppt,
+        make_xls,
+        odf_zip,
+        render_text_jpeg,
+        render_text_png,
+        render_text_tiff,
+        render_text_webp,
+    )
 
     rtf = (rb"{\rtf1\ansi\ansicpg1252\deff0{\fonttbl{\f0 T;}}"
            rb"\pard\outlinelevel0\b\fs36 Heading One\b0\fs24\par"
@@ -110,22 +113,14 @@ def _format_seeds() -> list[tuple[str, str, bytes]]:
         "<text:p>First odf paragraph body.</text:p>"
         "</office:text></office:body></office:document-content>"
     )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("mimetype", "application/vnd.oasis.opendocument.text")
-        z.writestr("content.xml", content_xml)
-    odt = buf.getvalue()
+    odt = odf_zip(content_xml, "application/vnd.oasis.opendocument.text")
 
     png = (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
            + struct.pack(">IIBBBBB", 64, 48, 8, 2, 0, 0, 0) + b"\x00" * 4
            + struct.pack(">I", 0) + b"IEND\xaeB`\x82")
 
-    from tests.test_legacy_formats import _make_ppt, _make_xls  # REPO is on sys.path
-    from tests.test_realpdf_features import (  # encrypted/filtered PDF builders
-        _aes256_pdf, _aesv2_pdf, _cidfont_pdf, _encrypt_pdf, _lzw_pdf)
-
-    from documentconvert_spark.corpus import render_text_jpeg, render_text_png
-
+    tiff_text = render_text_tiff(["TIFF FUZZ 7", "ROW 2"], scale=2)
+    webp_text = render_text_webp(["WEBP FUZZ 9", "VP8L"], scale=2)
     return [
         ("fmt_rtf", "office", rtf),
         ("fmt_odt", "office", odt),
@@ -141,9 +136,6 @@ def _format_seeds() -> list[tuple[str, str, bytes]]:
         # projection never reaches
         ("fmt_png_ocr_kern", "image",
          _render_prop_kern_seed()),
-        # mixed font sizes (r5): mutants land on the per-band scale
-        # inference and the band/downsample interaction across scales
-        ("fmt_png_ocr_mixed", "image", _mixed_scale_seed()),
         # full PNG pixel matrix: interlaced 4-bit palette through both routes
         ("fmt_png_pal", "image", _png_pal_seed()),
         ("raw_png_pal", "raster", _png_pal_seed()),
@@ -152,19 +144,19 @@ def _format_seeds() -> list[tuple[str, str, bytes]]:
         # GCE parsing, sub-region bounds, transparency/disposal logic and
         # the per-animation budget caps
         ("gifanim", "gifanim", _gif_anim_seed()),
-        ("fmt_xls", "office", _make_xls()),
-        ("fmt_ppt", "office", _make_ppt()),
+        ("fmt_xls", "office", make_xls()),
+        ("fmt_ppt", "office", make_ppt()),
         # the round-3 attack surface: RC4 (R2/R3), AESV2, AES-256/R6
         # decryption and the LZW filter — mutants hit key derivation,
         # /Encrypt dict parsing, CBC unpadding and LZW table growth
-        ("fmt_pdf_rc4r2", "pdf", _encrypt_pdf(2)),
-        ("fmt_pdf_rc4r3", "pdf", _encrypt_pdf(3)),
-        ("fmt_pdf_aesv2", "pdf", _aesv2_pdf()),
-        ("fmt_pdf_aes256", "pdf", _aes256_pdf()),
-        ("fmt_pdf_lzw", "pdf", _lzw_pdf()),
+        # (RC4/R3 is fixture_encrypted.pdf)
+        ("fmt_pdf_rc4r2", "pdf", encrypt_pdf(2)),
+        ("fmt_pdf_aesv2", "pdf", aesv2_pdf()),
+        ("fmt_pdf_aes256", "pdf", aes256_pdf()),
+        ("fmt_pdf_lzw", "pdf", lzw_pdf()),
         # Identity-H + embedded TTF, no ToUnicode: mutants land on the
         # TrueType cmap inversion (table directory, format 4 segments)
-        ("fmt_pdf_cidfont", "pdf", _cidfont_pdf()),
+        ("fmt_pdf_cidfont", "pdf", cidfont_pdf()),
         # raster decoders (kernels/minijpeg.py, kernels/raster.py):
         # mutants hit marker parsing, DHT canonical-code build, the
         # entropy decode loops, GIF LZW dictionary growth and BMP
@@ -175,30 +167,27 @@ def _format_seeds() -> list[tuple[str, str, bytes]]:
         # successive-approximation bit logic and EOB-run bookkeeping
         ("fmt_jpeg_prog", "image", _jpeg_prog_seed()),
         ("raw_jpeg_prog", "raster", _jpeg_prog_seed()),
-        ("fmt_gif", "image", _gif_seed()),
-        ("fmt_bmp", "image", _bmp_seed()),
-        # same seeds through decode_raster_gray itself: the gif/bmp pixel
+        # fixtures through decode_raster_gray itself: the gif/bmp pixel
         # decoders (LZW dictionary, palette/stride math) and the jpeg
-        # entropy loop see every mutant, not just the sniffing layer
+        # entropy loop see every mutant, not just the sniffing layer (the
+        # image route already seeds the same fixture files)
         ("raw_jpeg", "raster", render_text_jpeg(["RASTER FUZZ"], scale=2)),
-        ("raw_gif", "raster", _gif_seed()),
-        ("raw_bmp", "raster", _bmp_seed()),
+        ("raw_gif", "raster", _fixture("fixture_tiles.gif")),
+        ("raw_bmp", "raster", _fixture("fixture_gradient.bmp")),
         # TIFF (kernels/raster.decode_tiff_gray): mutants hit the IFD
         # walker (value-or-offset rule), strip offsets/counts, PackBits,
         # the shared LZW decoder and the predictor/photometric math —
         # both the rendered-text LZW shape and the palette/PackBits shape
-        ("fmt_tiff_ocr", "image", _tiff_text_seed()),
-        ("fmt_tiff_pal", "image", _tiff_pal_seed()),
-        ("raw_tiff_ocr", "raster", _tiff_text_seed()),
-        ("raw_tiff_pal", "raster", _tiff_pal_seed()),
+        ("fmt_tiff_ocr", "image", tiff_text),
+        ("raw_tiff_ocr", "raster", tiff_text),
+        ("raw_tiff_pal", "raster", _fixture("fixture_mosaic.tiff")),
         # WebP VP8L (kernels/miniwebp.py): mutants hit the prefix-code
         # reader (simple + code-length-coded), LZ77 distance mapping,
         # color cache and the inverse transforms (text seed: LZ77 + cache
         # + subtract-green; swatch seed: delta-coded palette + bundling)
-        ("fmt_webp_ocr", "image", _webp_text_seed()),
-        ("fmt_webp_pal", "image", _webp_pal_seed()),
-        ("raw_webp_ocr", "raster", _webp_text_seed()),
-        ("raw_webp_pal", "raster", _webp_pal_seed()),
+        ("fmt_webp_ocr", "image", webp_text),
+        ("raw_webp_ocr", "raster", webp_text),
+        ("raw_webp_pal", "raster", _fixture("fixture_swatch.webp")),
         # AVI video (kernels/media.decode_avi_frames): mutants hit the
         # RIFF chunk walker, avih/strh/strf parsing, the DIB stride math
         # and the per-frame budget/caps; the MJPG variant additionally
@@ -224,20 +213,6 @@ def _format_seeds() -> list[tuple[str, str, bytes]]:
     ]
 
 
-def _gif_seed() -> bytes:
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from gen_extra_fixtures import _gif_fixture
-
-    return _gif_fixture()
-
-
-def _bmp_seed() -> bytes:
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from gen_extra_fixtures import _bmp_fixture
-
-    return _bmp_fixture()
-
-
 def _jpeg_prog_seed() -> bytes:
     from documentconvert_spark.corpus import (
         _render_text_grid,
@@ -246,20 +221,6 @@ def _jpeg_prog_seed() -> bytes:
 
     w, h, grid = _render_text_grid(["PROG FUZZ 3", "EOB RUN"], 2, 8)
     return encode_gray_jpeg_progressive(w, h, grid, restart=4, ycbcr420=True)
-
-
-def _tiff_text_seed() -> bytes:
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from gen_extra_fixtures import render_text_tiff
-
-    return render_text_tiff(["TIFF FUZZ 7", "ROW 2"], scale=2)
-
-
-def _tiff_pal_seed() -> bytes:
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from gen_extra_fixtures import _tiff_fixture
-
-    return _tiff_fixture()
 
 
 def _gif_anim_seed() -> bytes:
@@ -298,12 +259,15 @@ def _bmp_rle_seed() -> bytes:
             + palbytes + bytes(body))
 
 
+def _fixture(name: str) -> bytes:
+    with open(os.path.join(EXTRA_DIR, name), "rb") as fh:
+        return fh.read()
+
+
 def _png_pal_seed() -> bytes:
     """Adam7-interlaced 4-bit palette PNG: mutants hit the sub-byte
     unpacking, PLTE bounds checks and the seven-pass reassembly."""
-    from tests.test_miniocr import _chunk  # REPO is on sys.path
-    import struct as _st
-    import zlib as _zl
+    from documentconvert_spark.corpus import encode_png
 
     w, h = 21, 13
     plte = bytes(v for i in range(16) for v in (i * 17, (i * 5) % 256, 255 - i * 17))
@@ -319,25 +283,8 @@ def _png_pal_seed() -> bytes:
                 v = ((x0 + px * dx) + (y0 + py * dy)) % 16
                 line[px // 2] |= v << (4 if px % 2 == 0 else 0)
             raster += b"\x00" + bytes(line)
-    return (b"\x89PNG\r\n\x1a\n"
-            + _chunk(b"IHDR", _st.pack(">IIBBBBB", w, h, 4, 3, 0, 0, 1))
-            + _chunk(b"PLTE", plte)
-            + _chunk(b"IDAT", _zl.compress(bytes(raster)))
-            + _chunk(b"IEND", b""))
-
-
-def _webp_text_seed() -> bytes:
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from gen_extra_fixtures import render_text_webp
-
-    return render_text_webp(["WEBP FUZZ 9", "VP8L"], scale=2)
-
-
-def _webp_pal_seed() -> bytes:
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from gen_extra_fixtures import _webp_fixture
-
-    return _webp_fixture()
+    return encode_png(w, h, bytes(raster), depth=4, color_type=3, plte=plte,
+                      interlace=1, level=-1)
 
 
 def _avi_seed(codec: str) -> bytes:
@@ -424,27 +371,28 @@ def _mutate_zip_member(data: bytes, rng: random.Random) -> bytes:
     import io
     import zipfile
 
+    from documentconvert_spark.corpus import det_zip
+
     src = zipfile.ZipFile(io.BytesIO(data))
     names = src.namelist()
     if not names:
         return data
     victim = names[rng.randrange(len(names))]
-    out = io.BytesIO()
-    with zipfile.ZipFile(out, "w") as dst:
-        for n in names:
-            raw = src.read(n)
-            if n == victim:
-                if rng.randrange(2):
-                    raw = _amplify_digits(raw, rng)
-                else:  # tile a small chunk many times: cumulative amplification
-                    if raw:
-                        a = rng.randrange(len(raw))
-                        chunk = raw[a : a + rng.randint(1, 256)]
-                        reps = rng.randint(2, (1 << 19) // max(len(chunk), 1))
-                        b = rng.randrange(len(raw) + 1)
-                        raw = raw[:b] + chunk * reps + raw[b:]
-            dst.writestr(n, raw)
-    return out.getvalue()
+    members = []
+    for n in names:
+        raw = src.read(n)
+        if n == victim:
+            if rng.randrange(2):
+                raw = _amplify_digits(raw, rng)
+            else:  # tile a small chunk many times: cumulative amplification
+                if raw:
+                    a = rng.randrange(len(raw))
+                    chunk = raw[a : a + rng.randint(1, 256)]
+                    reps = rng.randint(2, (1 << 19) // max(len(chunk), 1))
+                    b = rng.randrange(len(raw) + 1)
+                    raw = raw[:b] + chunk * reps + raw[b:]
+        members.append((n, raw))
+    return det_zip(members)
 
 
 def _mutate(data: bytes, rng: random.Random) -> bytes:

@@ -10,49 +10,60 @@ driver-checked golden oracle (`real_docs_span_seq` et al.) instead of
 only unit tests. Deterministic: fixed bytes, fixed zip timestamps.
 Re-run + `scripts/regen_real_goldens.py` after intentional kernel
 changes.
+
+This file holds fixture CONTENT only: every byte format is written by
+the writers in `documentconvert_spark.corpus`. `build()` returns the 33
+fixtures by name; tests/test_extra_docs_goldens.py checks that it
+reproduces the committed files byte for byte.
+
+Usage: python scripts/gen_extra_fixtures.py
 """
 
 from __future__ import annotations
 
-import io
 import os
 import struct
 import sys
-import zipfile
 
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "documentconvert_spark", "resources", "extra_docs")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-_FONT = b"<</Type /Font /Subtype /Type1 /BaseFont /Helvetica>>"
+from documentconvert_spark.corpus import (  # noqa: E402
+    PDF_FONT,
+    _render_text_grid,
+    _render_text_grid_prop,
+    antialias_grid,
+    biff_rec,
+    classic_pdf,
+    det_zip,
+    encode_bmp24,
+    encode_gray_jpeg_progressive,
+    encode_gray_png,
+    encode_vp8l,
+    encrypt_pdf,
+    gif_encode,
+    odf_zip,
+    packbits_encode,
+    page_tree,
+    ppt_rec,
+    render_text_bmp,
+    render_text_gif,
+    render_text_jpeg,
+    render_text_png,
+    render_text_png_prop,
+    render_text_tiff,
+    render_text_webp,
+    stream_obj,
+    tiff_encode,
+    ttf_with_cmap4,
+    write_cfb,
+    xl_str8,
+    xlsx_zip,
+)
+
+OUT = os.path.join(REPO, "documentconvert_spark", "resources", "extra_docs")
+
 _COURIER = b"<</Type /Font /Subtype /Type1 /BaseFont /Courier>>"
-
-
-def _classic_pdf(objects: dict[int, bytes]) -> bytes:
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = {}
-    for num in sorted(objects):
-        offsets[num] = len(out)
-        out += b"%d 0 obj\n" % num + objects[num] + b"\nendobj\n"
-    xref_at = len(out)
-    maxn = max(objects) + 1
-    out += b"xref\n0 %d\n" % maxn
-    out += b"0000000000 65535 f \n"
-    for n in range(1, maxn):
-        out += b"%010d 00000 n \n" % offsets.get(n, 0)
-    out += b"trailer\n<</Size %d /Root 1 0 R>>\nstartxref\n%d\n%%%%EOF\n" % (maxn, xref_at)
-    return bytes(out)
-
-
-def _page_tree(kids: list[int]) -> dict[int, bytes]:
-    kid_refs = b" ".join(b"%d 0 R" % k for k in kids)
-    return {
-        1: b"<</Type /Catalog /Pages 2 0 R>>",
-        2: b"<</Type /Pages /Kids [%s] /Count %d>>" % (kid_refs, len(kids)),
-    }
-
-
-def _stream_obj(d: bytes, body: bytes) -> bytes:
-    return b"<<%s /Length %d>>\nstream\n%s\nendstream" % (d, len(body), body)
 
 
 def two_column_pdf() -> bytes:
@@ -69,17 +80,17 @@ def two_column_pdf() -> bytes:
             b"BT /F1 10 Tf 320 %d Td (rightcol%02d body text filling the col) Tj ET"
             % (y, i))
         y -= 14
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", b"\n".join(parts))
-    objs[5] = _FONT
-    return _classic_pdf(objs)
+    objs[4] = stream_obj(b"", b"\n".join(parts))
+    objs[5] = PDF_FONT
+    return classic_pdf(objs)
 
 
 def furniture_code_pdf() -> bytes:
     """3 pages: running header + 'Page N of 3' footer (furniture), a
     numbered list, and a Courier code block."""
-    objs = _page_tree([3, 6, 8])
+    objs = page_tree([3, 6, 8])
     pages = [(3, 4), (6, 7), (8, 9)]
     for i, (pg, ct) in enumerate(pages):
         parts = [b"BT /F1 9 Tf 72 780 Td (Fixture Report Header 2025) Tj ET"]
@@ -103,10 +114,10 @@ def furniture_code_pdf() -> bytes:
         parts.append(b"BT /F1 9 Tf 280 60 Td (Page %d of 3) Tj ET" % (i + 1))
         objs[pg] = (b"<</Type /Page /Parent 2 0 R /Contents %d 0 R "
                     b"/Resources <</Font <</F1 11 0 R /F2 12 0 R>>>>>>" % ct)
-        objs[ct] = _stream_obj(b"", b"\n".join(parts))
-    objs[11] = _FONT
+        objs[ct] = stream_obj(b"", b"\n".join(parts))
+    objs[11] = PDF_FONT
     objs[12] = _COURIER
-    return _classic_pdf(objs)
+    return classic_pdf(objs)
 
 
 def rotated_pdf() -> bytes:
@@ -115,35 +126,26 @@ def rotated_pdf() -> bytes:
     a minority upside-down (180°) stamp on a normal page — kept as
     content (x-axis-aligned baseline), while sideways margin text on
     the same page stays dropped."""
-    objs = _page_tree([3, 6, 10])
+    objs = page_tree([3, 6, 10])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Rotate 90 /Contents 4 0 R "
                b"/Resources <</Font <</F1 9 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", (
+    objs[4] = stream_obj(b"", (
         b"BT /F1 12 Tf 0 1 -1 0 100 100 Tm (upright scan line one) Tj ET "
         b"BT /F1 12 Tf 0 1 -1 0 114 100 Tm (upright scan line two) Tj ET"))
     objs[6] = b"<</Type /Page /Parent 2 0 R /Contents 7 0 R /Resources <</Font <</F1 9 0 R>>>>>>"
-    objs[7] = _stream_obj(b"", (
+    objs[7] = stream_obj(b"", (
         b"BT /F1 10 Tf 72 700 Td (normal body above watermark) Tj ET "
         b"BT /F1 48 Tf 0.707 0.707 -0.707 0.707 200 300 Tm (FIXTURE) Tj ET "
         b"BT /F1 10 Tf 72 650 Td (normal body below watermark) Tj ET"))
-    objs[9] = _FONT
+    objs[9] = PDF_FONT
     objs[10] = b"<</Type /Page /Parent 2 0 R /Contents 11 0 R /Resources <</Font <</F1 9 0 R>>>>>>"
-    objs[11] = _stream_obj(b"", (
+    objs[11] = stream_obj(b"", (
         b"BT /F1 10 Tf 72 700 Td (stamped page body first line) Tj ET "
         b"BT /F1 10 Tf 72 680 Td (stamped page body second line) Tj ET "
         b"BT /F1 10 Tf 72 660 Td (stamped page body third line) Tj ET "
         b"BT /F1 10 Tf -1 0 0 -1 300 240 Tm (received upside down stamp) Tj ET "
         b"BT /F1 8 Tf 0 1 -1 0 20 400 Tm (sideways margin note) Tj ET"))
-    return _classic_pdf(objs)
-
-
-def encrypted_pdf() -> bytes:
-    """An RC4/R3-encrypted single-page PDF (ISO 32000 §7.6) — pins the
-    decryption path under the golden oracle, not just unit tests. Built
-    by the same module-level builder the unit tests and fuzz seeds use."""
-    from tests.test_realpdf_features import _encrypt_pdf
-
-    return _encrypt_pdf(3)
+    return classic_pdf(objs)
 
 
 def fonts_pdf() -> bytes:
@@ -151,29 +153,27 @@ def fonts_pdf() -> bytes:
     Identity-H CIDFontType2 whose text is only recoverable by inverting
     the embedded TrueType cmap; page 2 uses WinAnsi / MacRoman base
     encodings with high-byte accented text."""
-    from tests.test_realpdf_features import _ttf_with_cmap4
-
-    ttf = _ttf_with_cmap4({0x43: 5, 0x49: 6, 0x44: 7})  # C I D
-    objs = _page_tree([3, 10])
+    ttf = ttf_with_cmap4({0x43: 5, 0x49: 6, 0x44: 7})  # C I D
+    objs = page_tree([3, 10])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
                b"/Resources <</Font <</F1 5 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", b"BT /F1 12 Tf 72 700 Td <000500060007> Tj ET")
+    objs[4] = stream_obj(b"", b"BT /F1 12 Tf 72 700 Td <000500060007> Tj ET")
     objs[5] = (b"<</Type /Font /Subtype /Type0 /BaseFont /EmbedG "
                b"/Encoding /Identity-H /DescendantFonts [6 0 R]>>")
     objs[6] = (b"<</Type /Font /Subtype /CIDFontType2 /BaseFont /EmbedG "
                b"/CIDToGIDMap /Identity /FontDescriptor 7 0 R>>")
     objs[7] = b"<</Type /FontDescriptor /FontName /EmbedG /FontFile2 8 0 R>>"
-    objs[8] = _stream_obj(b"/Length1 %d" % len(ttf), ttf)
+    objs[8] = stream_obj(b"/Length1 %d" % len(ttf), ttf)
     objs[10] = (b"<</Type /Page /Parent 2 0 R /Contents 11 0 R "
                 b"/Resources <</Font <</F2 12 0 R /F3 13 0 R>>>>>>")
-    objs[11] = _stream_obj(b"", (
+    objs[11] = stream_obj(b"", (
         b"BT /F2 11 Tf 72 700 Td (caf\xe9 cr\xe8me br\xfbl\xe9e) Tj ET "
         b"BT /F3 11 Tf 72 680 Td (na\x95ve r\x8esum\x8e) Tj ET"))
     objs[12] = (b"<</Type /Font /Subtype /Type1 /BaseFont /Helv "
                 b"/Encoding /WinAnsiEncoding>>")
     objs[13] = (b"<</Type /Font /Subtype /Type1 /BaseFont /Helv "
                 b"/Encoding /MacRomanEncoding>>")
-    return _classic_pdf(objs)
+    return classic_pdf(objs)
 
 
 def formula_pdf() -> bytes:
@@ -196,25 +196,16 @@ def formula_pdf() -> bytes:
         b"BT /F4 12 Tf 180 600 Td (a + b = g) Tj ET "
         b"BT /F1 10 Tf 72 570 Td (which completes the argument) Tj ET"
     )
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
                b"/Resources <</Font <</F1 5 0 R /F2 6 0 R /F3 7 0 R /F4 9 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", content)
-    objs[5] = _FONT
+    objs[4] = stream_obj(b"", content)
+    objs[5] = PDF_FONT
     objs[6] = b"<</Type /Font /Subtype /Type1 /BaseFont /ABCDEF+CMMI10>>"
     objs[7] = b"<</Type /Font /Subtype /TrueType /BaseFont /EMBEDX /ToUnicode 8 0 R>>"
-    objs[8] = _stream_obj(b"", cmap)
+    objs[8] = stream_obj(b"", cmap)
     objs[9] = b"<</Type /Font /Subtype /Type1 /BaseFont /Symbol>>"
-    return _classic_pdf(objs)
-
-
-def _det_zip(members: list[tuple[str, str]]) -> bytes:
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as z:
-        for name, data in members:
-            zi = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
-            z.writestr(zi, data)
-    return buf.getvalue()
+    return classic_pdf(objs)
 
 
 def dates_xlsx() -> bytes:
@@ -234,19 +225,7 @@ def dates_xlsx() -> bytes:
 <styleSheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
  <cellXfs count="3"><xf numFmtId="0"/><xf numFmtId="14"/><xf numFmtId="9"/></cellXfs>
 </styleSheet>"""
-    wb = """<?xml version="1.0"?>
-<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
- xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
- <sheets><sheet name="Fixture" sheetId="1" r:id="rId1"/></sheets></workbook>"""
-    rels = """<?xml version="1.0"?>
-<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
- <Relationship Id="rId1" Target="worksheets/sheet1.xml"/></Relationships>"""
-    return _det_zip([
-        ("xl/workbook.xml", wb),
-        ("xl/_rels/workbook.xml.rels", rels),
-        ("xl/worksheets/sheet1.xml", sheet),
-        ("xl/styles.xml", styles),
-    ])
+    return xlsx_zip(sheet, styles, sheet_name="Fixture")
 
 
 def code_docx() -> bytes:
@@ -262,13 +241,12 @@ def code_docx() -> bytes:
   <w:p><w:r><w:t>prose after the listings</w:t></w:r></w:p>
  </w:body>
 </w:document>"""
-    return _det_zip([("word/document.xml", doc_xml)])
+    return det_zip([("word/document.xml", doc_xml)])
 
 
 # -- legacy whitelist formats (odt/ods/odp, rtf, BIFF .xls, binary .ppt) -----
-# built with the test suite's independent minimal writers so the whole
-# office whitelist sits under the driver-checked golden oracle, not only
-# under unit tests
+# the whole office whitelist sits under the contract-checked golden oracle,
+# not only under unit tests
 
 def legacy_rtf() -> bytes:
     return (rb"{\rtf1\ansi\ansicpg1252\deff0"
@@ -279,10 +257,6 @@ def legacy_rtf() -> bytes:
             rb"\trowd\intbl cellC\cell cellD\cell\row\pard"
             rb"{\pict\pngblip\picw100\pich100 a1b2c3d4e5f6}"
             rb"Closing paragraph.\par}")
-
-
-def _odf_zip(content_xml: str, mimetype: str) -> bytes:
-    return _det_zip([("mimetype", mimetype), ("content.xml", content_xml)])
 
 
 _ODT_CONTENT = """<?xml version="1.0" encoding="UTF-8"?>
@@ -345,56 +319,52 @@ _ODP_CONTENT = """<?xml version="1.0" encoding="UTF-8"?>
 
 
 def biff_xls() -> bytes:
-    from test_legacy_formats import _biff_rec, _xl_str8, write_cfb
-
     sst_payload = (struct.pack("<II", 2, 2)
                    + struct.pack("<HB", 4, 0) + b"name"
                    + struct.pack("<HB", 4, 0) + b"when")
-    bof = _biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0005, 0, 0, 0, 0))
-    xf = lambda ifmt: _biff_rec(0x00E0, struct.pack("<HH", 0, ifmt) + b"\x00" * 12)
-    boundsheet_placeholder = struct.pack("<IBB", 0, 0, 0) + _xl_str8("Grid")
+    bof = biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0005, 0, 0, 0, 0))
+    xf = lambda ifmt: biff_rec(0x00E0, struct.pack("<HH", 0, ifmt) + b"\x00" * 12)
+    boundsheet_placeholder = struct.pack("<IBB", 0, 0, 0) + xl_str8("Grid")
 
     def glb(off: int) -> bytes:
         return (bof + xf(0) + xf(14)
-                + _biff_rec(0x0085, struct.pack("<I", off) + boundsheet_placeholder[4:])
-                + _biff_rec(0x00FC, sst_payload) + _biff_rec(0x000A, b""))
+                + biff_rec(0x0085, struct.pack("<I", off) + boundsheet_placeholder[4:])
+                + biff_rec(0x00FC, sst_payload) + biff_rec(0x000A, b""))
 
     sheet = (
-        _biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0010, 0, 0, 0, 0))
-        + _biff_rec(0x00FD, struct.pack("<HHHI", 0, 0, 0, 0))           # "name"
-        + _biff_rec(0x00FD, struct.pack("<HHHI", 0, 1, 0, 1))           # "when"
-        + _biff_rec(0x0203, struct.pack("<HHHd", 1, 0, 0, 12.0))
-        + _biff_rec(0x0203, struct.pack("<HHHd", 1, 1, 1, 45123.0))     # date
-        + _biff_rec(0x027E, struct.pack("<HHHI", 2, 0, 0, (25 << 2) | 0x02))
-        + _biff_rec(0x0205, struct.pack("<HHH", 2, 1, 0) + bytes([1, 0]))  # TRUE
-        + _biff_rec(0x000A, b"")
+        biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0010, 0, 0, 0, 0))
+        + biff_rec(0x00FD, struct.pack("<HHHI", 0, 0, 0, 0))           # "name"
+        + biff_rec(0x00FD, struct.pack("<HHHI", 0, 1, 0, 1))           # "when"
+        + biff_rec(0x0203, struct.pack("<HHHd", 1, 0, 0, 12.0))
+        + biff_rec(0x0203, struct.pack("<HHHd", 1, 1, 1, 45123.0))     # date
+        + biff_rec(0x027E, struct.pack("<HHHI", 2, 0, 0, (25 << 2) | 0x02))
+        + biff_rec(0x0205, struct.pack("<HHH", 2, 1, 0) + bytes([1, 0]))  # TRUE
+        + biff_rec(0x000A, b"")
     )
     return write_cfb([("Workbook", glb(len(glb(0))) + sheet)])
 
 
 def binary_ppt() -> bytes:
-    from test_legacy_formats import _ppt_rec, write_cfb
-
     title = "PPT Fixture Deck".encode("utf-16-le")
     body = "第一点\r第二点".encode("utf-16-le")
-    slide = _ppt_rec(
+    slide = ppt_rec(
         0x000F, 0x03EE,
-        _ppt_rec(0x0000, 0x0F9F, struct.pack("<I", 0))
-        + _ppt_rec(0x0000, 0x0FA0, title)
-        + _ppt_rec(0x0000, 0x0F9F, struct.pack("<I", 1))
-        + _ppt_rec(0x0000, 0x0FA0, body)
-        + _ppt_rec(0x0000, 0x0FA8, b"ascii only run"),
+        ppt_rec(0x0000, 0x0F9F, struct.pack("<I", 0))
+        + ppt_rec(0x0000, 0x0FA0, title)
+        + ppt_rec(0x0000, 0x0F9F, struct.pack("<I", 1))
+        + ppt_rec(0x0000, 0x0FA0, body)
+        + ppt_rec(0x0000, 0x0FA8, b"ascii only run"),
     )
     # second slide: its title pins the deck-title convention (first
     # title = level 1, later slide titles = level 2) in the goldens
-    slide2 = _ppt_rec(
+    slide2 = ppt_rec(
         0x000F, 0x03EE,
-        _ppt_rec(0x0000, 0x0F9F, struct.pack("<I", 0))
-        + _ppt_rec(0x0000, 0x0FA8, b"Second Slide Topic")
-        + _ppt_rec(0x0000, 0x0F9F, struct.pack("<I", 1))
-        + _ppt_rec(0x0000, 0x0FA8, b"supporting detail line"),
+        ppt_rec(0x0000, 0x0F9F, struct.pack("<I", 0))
+        + ppt_rec(0x0000, 0x0FA8, b"Second Slide Topic")
+        + ppt_rec(0x0000, 0x0F9F, struct.pack("<I", 1))
+        + ppt_rec(0x0000, 0x0FA8, b"supporting detail line"),
     )
-    doc = _ppt_rec(0x000F, 0x03E8, slide + slide2)
+    doc = ppt_rec(0x000F, 0x03E8, slide + slide2)
     return write_cfb([("PowerPoint Document", doc), ("Current User", b"\x00" * 16)])
 
 
@@ -425,8 +395,6 @@ def ocr_pngs() -> dict[str, bytes]:
     """Rendered-text PNGs for the miniocr glyph matcher (C4 OCR parity):
     grayscale at two scales plus an RGB variant; decoded text lands as
     paragraph spans after the figure span in the golden corpus."""
-    from documentconvert_spark.corpus import render_text_png
-
     return {
         "fixture_ocr_note.png": render_text_png(
             ["SCANNED NOTE 1", "TOTAL DUE: 42.50", "PAY BY 2024-06-30!"],
@@ -447,8 +415,6 @@ def _vstack_grids(parts, margin=8, gap=6):
     model of a page mixing font sizes (headline over body), which the
     matcher's per-band candidate-scale ladder (miniocr.ocr_gray_text,
     band_candidates/match_band) decodes."""
-    from documentconvert_spark.corpus import _render_text_grid
-
     rendered = [_render_text_grid(lines, scale, 0) for lines, scale in parts]
     w = max(r[0] for r in rendered) + 2 * margin
     rows = [bytearray([255]) * w for _ in range(margin)]
@@ -465,8 +431,6 @@ def _vstack_grids(parts, margin=8, gap=6):
 
 
 def mixed_scale_png() -> bytes:
-    from documentconvert_spark.corpus import encode_gray_png
-
     w, h, rows = _vstack_grids([
         (MIXED_HEAD_LINES, MIXED_HEAD_SCALE),
         (MIXED_BODY_LINES, MIXED_BODY_SCALE),
@@ -489,8 +453,6 @@ def ocr_prop_pngs() -> dict[str, bytes]:
     cell) and a kerned variant whose glyph boxes overlap without
     touching — exercising miniocr's per-glyph connected-component
     boxes, still under the exact-or-nothing rule."""
-    from documentconvert_spark.corpus import render_text_png_prop
-
     return {
         "fixture_ocr_prop.png": render_text_png_prop(PROP_PNG_LINES, scale=2),
         "fixture_ocr_kerned.png": render_text_png_prop(
@@ -507,13 +469,6 @@ def ocr_jpegs() -> dict[str, bytes]:
     kernels/minijpeg.py must decode it and the glyph matcher must read
     the exact text back (reference OCRs jpg input too,
     services/document_service.py:652-665)."""
-    from documentconvert_spark.corpus import render_text_jpeg
-
-    from documentconvert_spark.corpus import (
-        _render_text_grid,
-        encode_gray_jpeg_progressive,
-    )
-
     sw, sh, sg = _render_text_grid(["DELIVERY SCAN 0731", "GATE B ROW 6"], 2, 8)
     return {
         "fixture_ocr_card.jpg": render_text_jpeg(
@@ -527,28 +482,6 @@ def ocr_jpegs() -> dict[str, bytes]:
     }
 
 
-def _gif_encode(w: int, h: int, idx: list, pal: list, min_code: int) -> bytes:
-    """Index raster + palette → a complete GIF89a. The LZW stream comes
-    from the one shared writer (corpus._gif_lzw_encode) — a local copy
-    used to lack the table-full reset and would silently corrupt streams
-    past 4085 dictionary entries."""
-    from documentconvert_spark.corpus import _gif_lzw_encode
-
-    bs = _gif_lzw_encode(idx, min_code)
-    gct_bits = max(1, (len(pal) - 1).bit_length())
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | (gct_bits - 1), 0, 0)
-    for r, g, b in pal + [(0, 0, 0)] * ((1 << gct_bits) - len(pal)):
-        out += bytes((r, g, b))
-    out += b"\x2C" + struct.pack("<HHHH", 0, 0, w, h) + b"\x00"
-    out += bytes([min_code])
-    for i in range(0, len(bs), 255):
-        chunk = bs[i:i + 255]
-        out += bytes([len(chunk)]) + bytes(chunk)
-    out += b"\x00\x3B"
-    return bytes(out)
-
-
 def _gif_fixture() -> bytes:
     """Deterministic 8-color GIF (real LZW stream) — exercises the GIF
     raster decoder end-to-end through the carved-media pixel pass."""
@@ -556,150 +489,14 @@ def _gif_fixture() -> bytes:
     pal = [(0, 0, 0), (255, 255, 255), (200, 30, 30), (30, 200, 30),
            (30, 30, 200), (220, 220, 40), (40, 220, 220), (180, 60, 180)]
     idx = [((x // 8) + (y // 8)) % 8 for y in range(h) for x in range(w)]
-    return _gif_encode(w, h, idx, pal, 3)
-
-
-def render_text_gif(lines: list[str], scale: int = 2, margin: int = 8) -> bytes:
-    """Rendered-text GIF for the raster OCR route (lossless, so the
-    exact glyph matcher applies with no quant-table gate)."""
-    from documentconvert_spark.corpus import _render_text_grid
-
-    w, h, grid = _render_text_grid(lines, scale, margin)
-    idx = [0 if px < 128 else 1 for row in grid for px in row]
-    return _gif_encode(w, h, idx, [(0, 0, 0), (255, 255, 255)], 2)
-
-
-def render_text_bmp(lines: list[str], scale: int = 2, margin: int = 8) -> bytes:
-    """Rendered-text 24-bit bottom-up BMP for the raster OCR route —
-    bmp is in the reference's OCR whitelist (document_service.py:652)."""
-    from documentconvert_spark.corpus import _render_text_grid
-
-    w, h, grid = _render_text_grid(lines, scale, margin)
-    stride = ((24 * w + 31) // 32) * 4
-    body = bytearray()
-    for y in range(h - 1, -1, -1):
-        line = bytearray()
-        for px in grid[y]:
-            line += bytes((px, px, px))
-        line += b"\x00" * (stride - len(line))
-        body += line
-    return (b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
-            + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 0, 0, 0, 0)
-            + bytes(body))
+    return gif_encode(w, h, idx, pal, 3)
 
 
 def _bmp_fixture() -> bytes:
     """Deterministic 24-bit bottom-up BMP gradient."""
     w, h = 80, 50
-    stride = ((24 * w + 31) // 32) * 4
-    body = bytearray()
-    for y in range(h - 1, -1, -1):
-        line = bytearray()
-        for x in range(w):
-            line += bytes(((x * 3) % 256, (y * 5) % 256, (x * y) % 256))  # B,G,R
-        line += b"\x00" * (stride - len(line))
-        body += line
-    return (b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
-            + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 0, 0, 0, 0)
-            + bytes(body))
-
-
-def _packbits_encode(raw: bytes) -> bytes:
-    """Apple PackBits (TIFF 6.0 §9) writer: repeat runs ≥3, literal runs
-    otherwise, both capped at 128 per op."""
-    out = bytearray()
-    i, n = 0, len(raw)
-    lit = i
-
-    def flush(lo: int, hi: int) -> None:
-        j = lo
-        while j < hi:
-            k = min(hi, j + 128)
-            out.append(k - j - 1)
-            out.extend(raw[j:k])  # += would rebind `out` local to flush
-            j = k
-
-    while i < n:
-        run = 1
-        while i + run < n and raw[i + run] == raw[i] and run < 128:
-            run += 1
-        if run >= 3:
-            flush(lit, i)
-            out.append(257 - run)
-            out.append(raw[i])
-            i += run
-            lit = i
-        else:
-            i += run
-    flush(lit, i)
-    return bytes(out)
-
-
-def _tiff_encode(end: str, w: int, h: int, photo: int, strips: list[bytes],
-                 rps: int, comp: int = 1, bps: int = 8, spp: int = 1,
-                 pred: int = 1, colormap: list[int] | None = None) -> bytes:
-    """Assemble a baseline TIFF: header, strip data, out-of-line tag
-    payloads, IFD0 (tags ascending per spec). `strips` are the
-    already-compressed per-strip byte payloads."""
-    body = bytearray()
-    offs: list[int] = []
-    counts: list[int] = []
-    for s in strips:
-        offs.append(8 + len(body))
-        counts.append(len(s))
-        body += s
-    tags: list[tuple[int, int, list[int]]] = [
-        (256, 4, [w]), (257, 4, [h]), (258, 3, [bps] * spp), (259, 3, [comp]),
-        (262, 3, [photo]), (273, 4, offs), (277, 3, [spp]), (278, 4, [rps]),
-        (279, 4, counts),
-    ]
-    if pred != 1:
-        tags.append((317, 3, [pred]))
-    if colormap is not None:
-        tags.append((320, 3, colormap))
-    tags.sort()
-    extra = bytearray()
-    extra_base = 8 + len(body)
-    ifd = bytearray(struct.pack(end + "H", len(tags)))
-    for tag, typ, vals in tags:
-        fchar = {3: "H", 4: "I"}[typ]
-        payload = struct.pack(end + fchar * len(vals), *vals)
-        if len(payload) <= 4:
-            ifd += struct.pack(end + "HHI", tag, typ, len(vals)) + payload.ljust(4, b"\0")
-        else:
-            ifd += struct.pack(end + "HHII", tag, typ, len(vals), extra_base + len(extra))
-            extra += payload
-    ifd += struct.pack(end + "I", 0)  # no next IFD
-    hdr = (b"II*\x00" if end == "<" else b"MM\x00*") + struct.pack(
-        end + "I", extra_base + len(extra))
-    return hdr + bytes(body) + bytes(extra) + bytes(ifd)
-
-
-def render_text_tiff(lines: list[str], scale: int = 2, margin: int = 8,
-                     antialias: bool = False) -> bytes:
-    """Rendered-text TIFF for the raster OCR route: big-endian,
-    WhiteIsZero grayscale, LZW-compressed 16-row strips under the
-    horizontal-differencing Predictor — one fixture drives the whole
-    baseline decode path (tiff is in the reference's OCR whitelist,
-    document_service.py:652)."""
-    from tests.test_realpdf_features import _lzw_encode
-
-    from documentconvert_spark.corpus import _render_text_grid
-
-    w, h, grid = _render_text_grid(lines, scale, margin)
-    if antialias:
-        from documentconvert_spark.corpus import antialias_grid
-        grid = antialias_grid(grid)
-    rps = 16
-    strips = []
-    for y0 in range(0, h, rps):
-        raw = bytearray()
-        for row in grid[y0:y0 + rps]:
-            stored = bytes(255 - px for px in row)  # WhiteIsZero polarity
-            raw += bytes(((stored[i] - (stored[i - 1] if i else 0)) & 0xFF)
-                         for i in range(w))
-        strips.append(_lzw_encode(bytes(raw)))
-    return _tiff_encode(">", w, h, 0, strips, rps, comp=5, pred=2)
+    return encode_bmp24(w, h, [[((x * y) % 256, (y * 5) % 256, (x * 3) % 256)
+                                for x in range(w)] for y in range(h)])
 
 
 def _tiff_fixture() -> bytes:
@@ -713,395 +510,8 @@ def _tiff_fixture() -> bytes:
     for y0 in range(0, h, rps):
         raw = bytes(((x // 6) * 16 + (y // 6)) % 256
                     for y in range(y0, min(y0 + rps, h)) for x in range(w))
-        strips.append(_packbits_encode(raw))
-    return _tiff_encode("<", w, h, 3, strips, rps, comp=32773, colormap=cmap)
-
-
-# -- WebP VP8L writers (generator side of the lossless-webp split) -----------
-# Independent implementation of the public "WebP Lossless Bitstream
-# Specification" encode side: LSB-first bit packing, canonical prefix
-# codes (simple and code-length-coded with 16/17/18 repeats), LZ77
-# same-pixel runs, color cache, and the subtract-green / fixed-mode
-# predictor / cross-color / palette transforms. kernels/miniwebp.py must
-# decode every shape back pixel-exact.
-
-class _WpBits:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, v: int, k: int) -> None:  # LSB-first
-        self.acc |= (v & ((1 << k) - 1)) << self.n
-        self.n += k
-        while self.n >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.n -= 8
-
-    def code(self, c: int, ln: int) -> None:  # prefix code: MSB first
-        for i in range(ln - 1, -1, -1):
-            self.put((c >> i) & 1, 1)
-
-    def done(self) -> bytes:
-        if self.n:
-            self.out.append(self.acc & 0xFF)
-            self.acc = 0
-            self.n = 0
-        return bytes(self.out)
-
-
-def _wp_lengths(freqs: dict[int, int], max_depth: int = 15) -> dict[int, int]:
-    """Huffman code lengths from frequencies (≥3 distinct symbols),
-    depth-limited: when the optimal tree exceeds max_depth the
-    frequencies are flattened (halved toward 1) and rebuilt — the
-    standard trick; slightly suboptimal codes, always valid."""
-    import heapq
-
-    cur = {s: f for s, f in freqs.items() if f}
-    if len(cur) > 1 << max_depth:
-        raise ValueError("vp8l writer: alphabet too large for depth cap")
-    while True:
-        heap = [(f, s, (s,)) for s, f in sorted(cur.items())]
-        heapq.heapify(heap)
-        depths = dict.fromkeys(cur, 0)
-        while len(heap) > 1:
-            f1, t1, g1 = heapq.heappop(heap)
-            f2, t2, g2 = heapq.heappop(heap)
-            for s in g1 + g2:
-                depths[s] += 1
-            heapq.heappush(heap, (f1 + f2, min(t1, t2), g1 + g2))
-        if max(depths.values(), default=0) <= max_depth:
-            return depths
-        cur = {s: (f + 1) // 2 for s, f in cur.items()}
-
-
-def _wp_canonical(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
-    """(length, symbol)-ordered canonical code assignment."""
-    codes = {}
-    code = 0
-    prev_len = 0
-    for s, ln in sorted(lengths.items(), key=lambda kv: (kv[1], kv[0])):
-        code <<= ln - prev_len
-        codes[s] = (code, ln)
-        code += 1
-        prev_len = ln
-    return codes
-
-
-def _wp_write_code(bits: _WpBits, lengths: dict[int, int],
-                   alphabet: int) -> dict[int, tuple[int, int]]:
-    """Emit one prefix-code header; return symbol → (code, len)."""
-    present = sorted(lengths)
-    if len(present) <= 2 and all(present[i] < 256 for i in range(len(present))):
-        bits.put(1, 1)  # simple
-        bits.put(len(present) - 1, 1)
-        s0 = present[0]
-        if s0 < 2:
-            bits.put(0, 1)
-            bits.put(s0, 1)
-        else:
-            bits.put(1, 1)
-            bits.put(s0, 8)
-        if len(present) == 2:
-            bits.put(present[1], 8)
-            return {present[0]: (0, 1), present[1]: (1, 1)}
-        return {s0: (0, 0)}
-    bits.put(0, 1)  # normal
-    # code-length sequence over the full alphabet, RLE-compressed with
-    # 17 (3-10 zeros) / 18 (11-138 zeros) — exercises the repeat paths
-    seq: list[tuple[int, int]] = []  # (cl_symbol, extra_payload_bits<<8|nbits)
-    i = 0
-    while i < alphabet:
-        ln = lengths.get(i, 0)
-        if ln == 0:
-            j = i
-            while j < alphabet and lengths.get(j, 0) == 0:
-                j += 1
-            run = j - i
-            while run >= 11:
-                n = min(run, 138)
-                seq.append((18, ((n - 11) << 8) | 7))
-                run -= n
-            while run >= 3:
-                n = min(run, 10)
-                seq.append((17, ((n - 3) << 8) | 3))
-                run -= n
-            for _ in range(run):
-                seq.append((0, 0))
-            i = j
-        else:
-            seq.append((ln, 0))
-            i += 1
-    clc_freq: dict[int, int] = {}
-    for s, _ in seq:
-        clc_freq[s] = clc_freq.get(s, 0) + 1
-    if len(clc_freq) == 1:
-        clc_len = {next(iter(clc_freq)): 1}
-    elif len(clc_freq) == 2:
-        clc_len = dict.fromkeys(clc_freq, 1)
-    else:
-        clc_len = _wp_lengths(clc_freq, max_depth=7)  # 3-bit CL lengths
-    # degenerate 1-symbol codes read as 0 bits (see return below)
-    clc_codes = ({next(iter(clc_len)): (0, 0)} if len(clc_len) == 1
-                 else _wp_canonical(clc_len))
-    bits.put(19 - 4, 4)  # transmit all 19 code-length-code lengths
-    for s in _WP_CLC_ORDER:
-        bits.put(clc_len.get(s, 0), 3)
-    bits.put(0, 1)  # no max-symbol shortcut
-    for s, extra in seq:
-        c, ln = clc_codes[s]
-        bits.code(c, ln)
-        if extra:
-            bits.put(extra >> 8, extra & 0xFF)
-    if len(lengths) == 1:
-        # degenerate normal code: decoders read 0 bits per symbol
-        return {next(iter(lengths)): (0, 0)}
-    return _wp_canonical(lengths)
-
-
-_WP_CLC_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
-
-
-def _wp_prefix(v: int) -> tuple[int, int, int]:
-    """LZ77 length/distance value → (prefix symbol, n extra bits, extra)."""
-    if v <= 4:
-        return v - 1, 0, 0
-    for s in range(4, 40):
-        extra = (s - 2) >> 1
-        off = (2 + (s & 1)) << extra
-        if off + 1 <= v <= off + (1 << extra):
-            return s, extra, v - off - 1
-    raise ValueError("vp8l writer: value out of prefix range")
-
-
-def _wp_entropy_image(bits: _WpBits, w: int, h: int, pix: list[int],
-                      cache_bits: int = 0, lz77: bool = False,
-                      level0: bool = False) -> None:
-    """Emit one entropy-coded image (no transforms here)."""
-    bits.put(1 if cache_bits else 0, 1)
-    if cache_bits:
-        bits.put(cache_bits, 4)
-    if level0:
-        bits.put(0, 1)  # no meta-prefix image
-    cache = [None] * (1 << cache_bits) if cache_bits else None
-    tokens: list[tuple] = []
-    i = 0
-    n = len(pix)
-    while i < n:
-        px = pix[i]
-        if lz77 and i and pix[i - 1] == px:
-            run = 1
-            while i + run < n and pix[i + run] == px and run < 4000:
-                run += 1
-            if run >= 4:
-                tokens.append(("copy", run, 1))
-                if cache is not None:
-                    cache[((0x1E35A7BD * px) & 0xFFFFFFFF) >> (32 - cache_bits)] = px
-                i += run
-                continue
-        if cache is not None:
-            slot = ((0x1E35A7BD * px) & 0xFFFFFFFF) >> (32 - cache_bits)
-            if cache[slot] == px:
-                tokens.append(("cache", slot))
-                i += 1
-                continue
-            cache[slot] = px
-        tokens.append(("lit", px))
-        i += 1
-    gf: dict[int, int] = {}
-    rf: dict[int, int] = {}
-    bf: dict[int, int] = {}
-    af: dict[int, int] = {}
-    df: dict[int, int] = {}
-    for t in tokens:
-        if t[0] == "lit":
-            px = t[1]
-            gf[(px >> 8) & 0xFF] = gf.get((px >> 8) & 0xFF, 0) + 1
-            rf[(px >> 16) & 0xFF] = rf.get((px >> 16) & 0xFF, 0) + 1
-            bf[px & 0xFF] = bf.get(px & 0xFF, 0) + 1
-            af[px >> 24] = af.get(px >> 24, 0) + 1
-        elif t[0] == "copy":
-            ls, _, _ = _wp_prefix(t[1])
-            gf[256 + ls] = gf.get(256 + ls, 0) + 1
-            ds, _, _ = _wp_prefix(t[2] + 120)  # plain scan-line distance
-            df[ds] = df.get(ds, 0) + 1
-        else:
-            gf[280 + t[1]] = gf.get(280 + t[1], 0) + 1
-    for f in (rf, bf, af, df):
-        if not f:
-            f[0] = 1  # unused codes still need one symbol
-
-    def lens(freqs: dict[int, int]) -> dict[int, int]:
-        if len(freqs) == 1:
-            return {next(iter(freqs)): 1}
-        if len(freqs) == 2:
-            return dict.fromkeys(freqs, 1)
-        return _wp_lengths(freqs)
-
-    green_alpha = 256 + 24 + ((1 << cache_bits) if cache_bits else 0)
-    gc = _wp_write_code(bits, lens(gf), green_alpha)
-    rc = _wp_write_code(bits, lens(rf), 256)
-    bc = _wp_write_code(bits, lens(bf), 256)
-    ac = _wp_write_code(bits, lens(af), 256)
-    dc = _wp_write_code(bits, lens(df), 40)
-    for t in tokens:
-        if t[0] == "lit":
-            px = t[1]
-            bits.code(*gc[(px >> 8) & 0xFF])
-            bits.code(*rc[(px >> 16) & 0xFF])
-            bits.code(*bc[px & 0xFF])
-            bits.code(*ac[px >> 24])
-        elif t[0] == "copy":
-            ls, ln_bits, ln_extra = _wp_prefix(t[1])
-            bits.code(*gc[256 + ls])
-            bits.put(ln_extra, ln_bits)
-            ds, d_bits, d_extra = _wp_prefix(t[2] + 120)
-            bits.code(*dc[ds])
-            bits.put(d_extra, d_bits)
-        else:
-            bits.code(*gc[280 + t[1]])
-
-
-def _wp_sub_px(a: int, b: int) -> int:
-    """Channelwise modular subtraction a - b (forward transforms)."""
-    out = 0
-    for sh in (24, 16, 8, 0):
-        out |= ((((a >> sh) & 0xFF) - ((b >> sh) & 0xFF)) & 0xFF) << sh
-    return out
-
-
-def encode_vp8l(w: int, h: int, argb: list[int], *, cache_bits: int = 0,
-                lz77: bool = False, subtract_green: bool = False,
-                predictor_mode: int | None = None,
-                color_deltas: tuple[int, int, int] | None = None,
-                palette: list[int] | None = None) -> bytes:
-    """ARGB pixels → complete lossless .webp file (RIFF + VP8L)."""
-    bits = _WpBits()
-    bits.put(0x2F, 8)
-    bits.put(w - 1, 14)
-    bits.put(h - 1, 14)
-    bits.put(1 if any(px >> 24 != 0xFF for px in argb) else 0, 1)
-    bits.put(0, 3)  # version
-    pix = list(argb)
-    dec_w = w
-    if palette is not None:
-        # indices replace pixels; palette is delta-coded as a nested image
-        lookup = {px: i for i, px in enumerate(palette)}
-        idxs = [lookup[px] for px in pix]
-        bits.put(1, 1)
-        bits.put(3, 2)
-        bits.put(len(palette) - 1, 8)
-        deltas = [palette[0]] + [_wp_sub_px(palette[i], palette[i - 1])
-                                 for i in range(1, len(palette))]
-        _wp_entropy_image(bits, len(palette), 1, deltas)
-        psize = len(palette)
-        wb = 3 if psize <= 2 else 2 if psize <= 4 else 1 if psize <= 16 else 0
-        if wb:
-            nper = 1 << wb
-            bpp = 8 >> wb
-            dec_w = -(-w // nper)
-            packed = []
-            for y in range(h):
-                for bx in range(dec_w):
-                    v = 0
-                    for k in range(nper):
-                        x = bx * nper + k
-                        if x < w:
-                            v |= idxs[y * w + x] << (k * bpp)
-                    packed.append(0xFF000000 | (v << 8))
-            pix = packed
-        else:
-            pix = [0xFF000000 | (ix << 8) for ix in idxs]
-    if subtract_green:
-        bits.put(1, 1)
-        bits.put(2, 2)
-        pix = [(px & 0xFF00FF00)
-               | (((((px >> 16) & 0xFF) - ((px >> 8) & 0xFF)) & 0xFF) << 16)
-               | ((((px & 0xFF) - ((px >> 8) & 0xFF)) & 0xFF))
-               for px in pix]
-    if color_deltas is not None:
-        g2r, g2b, r2b = color_deltas
-
-        def delta(t: int, c: int) -> int:
-            ts = t - 256 if t > 127 else t
-            cs = c - 256 if c > 127 else c
-            return (ts * cs) >> 5
-
-        bits.put(1, 1)
-        bits.put(1, 2)
-        size_bits = 2
-        bits.put(size_bits - 2, 3)
-        mw, mh = -(-dec_w // 4), -(-h // 4)
-        elem = 0xFF000000 | (r2b << 16) | (g2b << 8) | g2r
-        _wp_entropy_image(bits, mw, mh, [elem] * (mw * mh))
-        out = []
-        for px in pix:  # forward: subtract the deltas the inverse adds
-            g = (px >> 8) & 0xFF
-            r_orig = (px >> 16) & 0xFF
-            b = (px & 0xFF) - delta(g2b, g) - delta(r2b, r_orig)
-            r = (r_orig - delta(g2r, g)) & 0xFF
-            out.append((px & 0xFF00FF00) | (r << 16) | (b & 0xFF))
-        pix = out
-    if predictor_mode is not None:
-        from documentconvert_spark.kernels.miniwebp import (
-            _avg2, _cas_full, _cas_half, _select)
-
-        bits.put(1, 1)
-        bits.put(0, 2)
-        size_bits = 2
-        bits.put(size_bits - 2, 3)
-        mw, mh = -(-dec_w // 4), -(-h // 4)
-        _wp_entropy_image(bits, mw, mh,
-                          [0xFF000000 | (predictor_mode << 8)] * (mw * mh))
-        m = predictor_mode
-        out = []
-        for y in range(h):
-            for x in range(dec_w):
-                i = y * dec_w + x
-                if x == 0 and y == 0:
-                    pred = 0xFF000000
-                elif y == 0:
-                    pred = pix[i - 1]
-                elif x == 0:
-                    pred = pix[i - dec_w]
-                else:
-                    lf, tp = pix[i - 1], pix[i - dec_w]
-                    tl = pix[i - dec_w - 1]
-                    # contiguous-buffer TR rule (spec §5): rightmost
-                    # column uses the current row's leftmost pixel
-                    tr = pix[i - dec_w + 1]
-                    pred = [0xFF000000, lf, tp, tr, tl,
-                            _avg2(_avg2(lf, tr), tp), _avg2(lf, tl),
-                            _avg2(lf, tp), _avg2(tl, tp), _avg2(tp, tr),
-                            _avg2(_avg2(lf, tl), _avg2(tp, tr)),
-                            _select(tp, lf, tl), _cas_full(lf, tp, tl),
-                            _cas_half(lf, tp, tl)][m]
-                out.append(_wp_sub_px(pix[i], pred))
-        pix = out
-    bits.put(0, 1)  # end of transforms
-    _wp_entropy_image(bits, dec_w, h, pix, cache_bits=cache_bits,
-                      lz77=lz77, level0=True)
-    payload = bits.done()
-    if len(payload) & 1:
-        chunk = struct.pack("<I", len(payload)) + payload + b"\x00"
-    else:
-        chunk = struct.pack("<I", len(payload)) + payload
-    body = b"WEBP" + b"VP8L" + chunk
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def render_text_webp(lines: list[str], scale: int = 2, margin: int = 8,
-                     antialias: bool = False) -> bytes:
-    """Rendered-text lossless WebP for the raster OCR route — exercises
-    LZ77 runs, the color cache and subtract-green in one fixture."""
-    from documentconvert_spark.corpus import _render_text_grid, antialias_grid
-
-    w, h, grid = _render_text_grid(lines, scale, margin)
-    if antialias:
-        grid = antialias_grid(grid)
-    argb = [0xFF000000 | (p << 16) | (p << 8) | p for row in grid for p in row]
-    return encode_vp8l(w, h, argb, cache_bits=4, lz77=True, subtract_green=True)
+        strips.append(packbits_encode(raw))
+    return tiff_encode("<", w, h, 3, strips, rps, comp=32773, colormap=cmap)
 
 
 def _webp_fixture() -> bytes:
@@ -1125,12 +535,6 @@ def aa_fixtures() -> dict[str, bytes]:
     a lossless trio (PNG gray, TIFF WhiteIsZero+LZW+Predictor, VP8L
     WebP). Thresholding at 128 recovers the source grid exactly, so the
     decoded text is pinned in the golden like every strict render."""
-    from documentconvert_spark.corpus import (
-        _render_text_grid,
-        antialias_grid,
-        encode_gray_png,
-    )
-
     w, h, grid = _render_text_grid(AA_PNG_LINES, 2, 8)
     png = encode_gray_png(w, h, antialias_grid(grid))
     return {
@@ -1160,8 +564,6 @@ def source_pixel_stats() -> dict[str, tuple[float, float, bool]]:
     bake itself into expected_real_pixels.parquet (r3 advice). `exact` is
     False only for the two JPEGs (DCT round-trip is near- but not
     bit-lossless; the check there is a ±1.5 luma tolerance)."""
-    from documentconvert_spark.corpus import _render_text_grid
-
     out: dict[str, tuple[float, float, bool]] = {}
 
     def grid_lumas(lines, scale):
@@ -1173,8 +575,6 @@ def source_pixel_stats() -> dict[str, tuple[float, float, bool]]:
         ["SCANNED NOTE 1", "TOTAL DUE: 42.50", "PAY BY 2024-06-30!"], 2)), True)
     out["fixture_ocr_badge.png"] = (*_stats(grid_lumas(
         ["BUILD PASSING", "COVERAGE = 97?", "(SEE LOG / RUN 12)"], 3)), True)
-
-    from documentconvert_spark.corpus import _render_text_grid_prop
 
     def prop_lumas(lines, scale, kern=None):
         _w, _h, grid = _render_text_grid_prop(lines, scale, 8, kern=kern)
@@ -1207,8 +607,6 @@ def source_pixel_stats() -> dict[str, tuple[float, float, bool]]:
 
     # antialiased renders: the SOURCE raster is the blurred grid itself
     # (the blur is generator-side, so these stats stay decoder-independent)
-    from documentconvert_spark.corpus import antialias_grid
-
     def aa_lumas(lines, scale):
         _w, _h, grid = _render_text_grid(lines, scale, 8)
         return [px for row in antialias_grid(grid) for px in row]
@@ -1237,24 +635,22 @@ def source_pixel_stats() -> dict[str, tuple[float, float, bool]]:
     return out
 
 
-def main() -> None:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, repo)
-    sys.path.insert(0, os.path.join(repo, "tests"))
-    os.makedirs(OUT, exist_ok=True)
-    fixtures = {
+def build() -> dict[str, bytes]:
+    """Every fixture by file name, in the order main() writes them."""
+    return {
         "fixture_two_column.pdf": two_column_pdf(),
         "fixture_furniture_code.pdf": furniture_code_pdf(),
         "fixture_rotated.pdf": rotated_pdf(),
         "fixture_formula.pdf": formula_pdf(),
-        "fixture_encrypted.pdf": encrypted_pdf(),
+        # RC4/R3 encryption (ISO 32000 §7.6) under the golden oracle
+        "fixture_encrypted.pdf": encrypt_pdf(3),
         "fixture_fonts.pdf": fonts_pdf(),
         "fixture_dates.xlsx": dates_xlsx(),
         "fixture_code.docx": code_docx(),
         "fixture_legacy.rtf": legacy_rtf(),
-        "fixture_report.odt": _odf_zip(_ODT_CONTENT, "application/vnd.oasis.opendocument.text"),
-        "fixture_ledger.ods": _odf_zip(_ODS_CONTENT, "application/vnd.oasis.opendocument.spreadsheet"),
-        "fixture_deck.odp": _odf_zip(_ODP_CONTENT, "application/vnd.oasis.opendocument.presentation"),
+        "fixture_report.odt": odf_zip(_ODT_CONTENT, "application/vnd.oasis.opendocument.text"),
+        "fixture_ledger.ods": odf_zip(_ODS_CONTENT, "application/vnd.oasis.opendocument.spreadsheet"),
+        "fixture_deck.odp": odf_zip(_ODP_CONTENT, "application/vnd.oasis.opendocument.presentation"),
         "fixture_grid.xls": biff_xls(),
         "fixture_deck.ppt": binary_ppt(),
         "fixture_page.html": boilerplate_html(),
@@ -1278,7 +674,11 @@ def main() -> None:
         # post-threshold grid match must decode the same text
         **aa_fixtures(),
     }
-    for name, data in fixtures.items():
+
+
+def main() -> None:
+    os.makedirs(OUT, exist_ok=True)
+    for name, data in build().items():
         with open(os.path.join(OUT, name), "wb") as fh:
             fh.write(data)
         print(f"{name}: {len(data)} bytes")

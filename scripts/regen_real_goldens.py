@@ -14,7 +14,7 @@ import os
 import sys
 import urllib.parse
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -40,7 +40,6 @@ def _crosscheck_pixel_stats(pixel_rows: dict) -> None:
     purely from that source (gen_extra_fixtures.source_pixel_stats):
     exact for lossless formats, ±1.5 luma for the DCT JPEGs. A decoder
     bug now fails the regen instead of silently re-baselining."""
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from gen_extra_fixtures import source_pixel_stats
 
     expected = source_pixel_stats()

@@ -1,8 +1,12 @@
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from documentconvert_spark.session import build_session
+
+EXTRA_DOCS = Path(__file__).resolve().parent.parent / "documentconvert_spark" / "resources" / "extra_docs"
 
 
 @pytest.fixture(scope="session")
@@ -15,3 +19,9 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def extra_doc():
+    """Bytes of a committed resources/extra_docs fixture, by file name."""
+    return lambda name: (EXTRA_DOCS / name).read_bytes()

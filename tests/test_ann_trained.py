@@ -14,6 +14,8 @@ from documentconvert_spark.queries_corpus import (
 )
 
 SF = "/root/testdata/sf0.01"
+# dot product of a vector's `ve` and a centroid's `ce` embeddings
+_VDOT = "aggregate(zip_with(ve, ce, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
 
 
 def test_trained_cells_beat_pivot_cells_on_recall(spark):
@@ -49,7 +51,6 @@ def test_kmeans_iteration_reduces_quantization_error(spark):
     rounding — tolerance covers it)."""
 
     def avg_sim(iters: int) -> float:
-        from documentconvert_spark.queries_corpus import _VDOT
         from pyspark.sql import Window
 
         emb, cents = _kmeans_train(spark, SF, k=8, iters=iters)

@@ -8,7 +8,9 @@ repository, so it always runs. The raster pins were recorded from the
 per-row decoders before the array-native rewrite; any drift in a decoder
 (PNG unfilter, JPEG IDCT, VP8L transforms, TIFF predictor, BMP/GIF
 palettes) shows up here even when the OCR text still happens to match.
-It also pins that bench.py's real-format leg reads these fixtures alone.
+It also pins that bench.py's real-format leg reads these fixtures alone,
+and that scripts/gen_extra_fixtures.py regenerates every fixture byte
+for byte.
 """
 
 from __future__ import annotations
@@ -80,6 +82,19 @@ def test_extra_docs_match_goldens_and_raster_pins():
         assert gray.shape == (h, w), name
         assert hashlib.md5(np.ascontiguousarray(gray).tobytes()).hexdigest() == md5, name
         assert dhash64(w, h, gray) == dh, name
+
+
+def test_generator_reproduces_the_committed_fixtures():
+    """The fixtures are generator output: build() must return exactly the
+    committed files, byte for byte. This guards every format writer in
+    corpus that the generator composes."""
+    from scripts.gen_extra_fixtures import build
+
+    built = build()
+    assert sorted(built) == sorted(os.listdir(EXTRA))
+    for name, data in built.items():
+        with open(os.path.join(EXTRA, name), "rb") as fh:
+            assert fh.read() == data, f"{name} no longer regenerates byte for byte"
 
 
 def test_bench_real_format_leg_reads_the_fixtures(spark, tmp_path, monkeypatch):

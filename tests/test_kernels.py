@@ -8,7 +8,14 @@ from __future__ import annotations
 
 import pytest
 
-from documentconvert_spark.corpus import CLASSES, fixture_corpus, generate_corpus, make_doc
+from documentconvert_spark.corpus import (
+    CLASSES,
+    aes256_pdf,
+    det_zip,
+    fixture_corpus,
+    generate_corpus,
+    make_doc,
+)
 from documentconvert_spark.kernels import (
     classify_error,
     ensure_utf8,
@@ -183,8 +190,6 @@ def test_heading_levels_rtf_outlinelevel():
 
 
 def test_heading_levels_docx_styles():
-    import io
-    import zipfile
 
     from documentconvert_spark.kernels.miniooxml import extract_docx
 
@@ -197,10 +202,7 @@ def test_heading_levels_docx_styles():
   <w:p><w:pPr><w:outlineLvl w:val="2"/></w:pPr><w:r><w:t>Deep</w:t></w:r></w:p>
  </w:body>
 </w:document>"""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("word/document.xml", doc_xml)
-    spans = extract_docx(buf.getvalue())
+    spans = extract_docx(det_zip([("word/document.xml", doc_xml)]))
     got = [(s.text, s.level) for s in spans if s.kind == "heading"]
     assert got == [("Title", 1), ("Section", 2), ("Deep", 3)]
 
@@ -335,9 +337,6 @@ def test_docx_code_blocks():
     """Code-ish paragraph styles and mono-font runs classify as code;
     consecutive code paragraphs merge into one line-structured block
     (the docx counterpart of the PDF fixed-pitch classification)."""
-    import io
-    import zipfile
-
     from documentconvert_spark.kernels.miniooxml import extract_docx
 
     doc_xml = """<?xml version="1.0"?>
@@ -350,10 +349,7 @@ def test_docx_code_blocks():
   <w:p><w:r><w:rPr><w:rFonts w:ascii="Courier New"/></w:rPr><w:t>x = 1</w:t></w:r><w:r><w:t> and then a much longer proportional tail that outweighs it</w:t></w:r></w:p>
  </w:body>
 </w:document>"""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("word/document.xml", doc_xml)
-    spans = extract_docx(buf.getvalue())
+    spans = extract_docx(det_zip([("word/document.xml", doc_xml)]))
     got = [(s.kind, s.text) for s in spans]
     assert got[0] == ("paragraph", "prose before the snippet")
     # (normalize_text collapses leading indentation — the IR-wide
@@ -367,9 +363,6 @@ def test_docx_code_blocks():
 def test_docx_code_listings_separated_by_blank_paragraph():
     """Two code listings with a blank paragraph between them stay two
     spans — the blank line is a block boundary in the source."""
-    import io
-    import zipfile
-
     from documentconvert_spark.kernels.miniooxml import extract_docx
 
     doc_xml = """<?xml version="1.0"?>
@@ -380,19 +373,13 @@ def test_docx_code_listings_separated_by_blank_paragraph():
   <w:p><w:r><w:rPr><w:rFonts w:ascii="Consolas"/></w:rPr><w:t>second()</w:t></w:r></w:p>
  </w:body>
 </w:document>"""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("word/document.xml", doc_xml)
-    spans = extract_docx(buf.getvalue())
+    spans = extract_docx(det_zip([("word/document.xml", doc_xml)]))
     assert [(s.kind, s.text) for s in spans] == [("code", "first()"), ("code", "second()")]
 
 
 def test_docx_nested_table_text_not_dropped():
     """Word nests layout tables inside cells; the nested table's text
     must flatten into the host cell, not vanish."""
-    import io
-    import zipfile
-
     from documentconvert_spark.kernels.miniooxml import extract_docx
 
     doc_xml = """<?xml version="1.0"?>
@@ -404,10 +391,7 @@ def test_docx_nested_table_text_not_dropped():
   </w:tc><w:tc><w:p><w:r><w:t>second</w:t></w:r></w:p></w:tc></w:tr></w:tbl>
  </w:body>
 </w:document>"""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("word/document.xml", doc_xml)
-    spans = extract_docx(buf.getvalue())
+    spans = extract_docx(det_zip([("word/document.xml", doc_xml)]))
     assert spans[0].kind == "table"
     assert spans[0].text == "outer cell nested text\tsecond"
 
@@ -415,9 +399,6 @@ def test_docx_nested_table_text_not_dropped():
 def test_docx_sdt_content_controls_unwrapped():
     """Word wraps TOCs and form regions in w:sdt content controls; their
     paragraphs and tables must extract, not silently vanish."""
-    import io
-    import zipfile
-
     from documentconvert_spark.kernels.miniooxml import extract_docx
 
     doc_xml = """<?xml version="1.0"?>
@@ -431,10 +412,7 @@ def test_docx_sdt_content_controls_unwrapped():
   <w:p><w:r><w:t>after the control</w:t></w:r></w:p>
  </w:body>
 </w:document>"""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("word/document.xml", doc_xml)
-    spans = extract_docx(buf.getvalue())
+    spans = extract_docx(det_zip([("word/document.xml", doc_xml)]))
     texts = [s.text for s in spans]
     assert texts == ["before the control", "TOC Heading",
                      "controlled paragraph text", "after the control"], texts
@@ -487,9 +465,6 @@ def test_minidom_inline_with_block_content_not_flattened():
 def test_docx_sdt_rows_and_textbox_paragraphs():
     """sdt-wrapped table rows extract; a text box inside a cell
     paragraph is emitted once, not twice."""
-    import io
-    import zipfile
-
     from documentconvert_spark.kernels.miniooxml import extract_docx
 
     doc_xml = """<?xml version="1.0"?>
@@ -506,25 +481,20 @@ def test_docx_sdt_rows_and_textbox_paragraphs():
   </w:tbl>
  </w:body>
 </w:document>"""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("word/document.xml", doc_xml)
-    spans = extract_docx(buf.getvalue())
+    spans = extract_docx(det_zip([("word/document.xml", doc_xml)]))
     assert spans[0].kind == "table"
     assert spans[0].text.splitlines() == ["plain row", "controlled row", "hostBOXTEXT"]
 
 
 def test_aes_fips197_appendix_c_vectors():
-    """The T-table AES must match FIPS-197 Appendix C exactly for both
-    PDF key sizes (AESV2=128, AESV3=256), encrypt AND decrypt."""
-    from documentconvert_spark.kernels.realpdf import (
-        _aes_dec_block,
-        _aes_dec_expand,
-        _aes_enc_block,
-        _aes_expand,
-    )
+    """The T-table CBC loops every AESV2/AESV3 stream and the R6 KDF run
+    must match FIPS-197 Appendix C exactly for both PDF key sizes
+    (AESV2=128, AESV3=256), encrypt AND decrypt: one block under a zero
+    IV is the raw cipher."""
+    from documentconvert_spark.kernels.realpdf import _aes_cbc_decrypt_raw, _aes_cbc_encrypt
 
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
+    zero_iv = bytes(16)
     for key_hex, ct_hex in [
         ("000102030405060708090a0b0c0d0e0f",
          "69c4e0d86a7b0430d8cdb78070b4c55a"),
@@ -533,26 +503,23 @@ def test_aes_fips197_appendix_c_vectors():
          "8ea2b7ca516745bfeafc49904b496089"),
     ]:
         key = bytes.fromhex(key_hex)
-        w, rounds = _aes_expand(key)
-        assert _aes_enc_block(w, rounds, pt).hex() == ct_hex
-        dk, rounds = _aes_dec_expand(key)
-        assert _aes_dec_block(dk, rounds, bytes.fromhex(ct_hex)) == pt
+        assert _aes_cbc_encrypt(key, zero_iv, pt).hex() == ct_hex
+        assert _aes_cbc_decrypt_raw(key, zero_iv, bytes.fromhex(ct_hex)) == pt
 
 
 def test_aes_ttables_match_independent_naive_implementation():
-    """Property check: the T-table cipher must equal a from-first-
+    """Property check: the T-table CBC loops must equal a from-first-
     principles per-byte FIPS-197 implementation (kept HERE, in test
     code, deliberately written in the state-matrix formulation rather
-    than the word formulation) on random keys and blocks — guards any
-    future refactor of the tables or schedules."""
+    than the word formulation) chained by hand, on random keys, IVs and
+    multi-block messages — guards any future refactor of the tables,
+    schedules or the inlined chaining."""
     import random
 
     from documentconvert_spark.kernels.realpdf import (
         _AES_SBOX,
-        _aes_dec_block,
-        _aes_dec_expand,
-        _aes_enc_block,
-        _aes_expand,
+        _aes_cbc_decrypt_raw,
+        _aes_cbc_encrypt,
     )
 
     def gmul(a, b):
@@ -598,28 +565,33 @@ def test_aes_ttables_match_independent_naive_implementation():
                     s[r][c] ^= w[4 * rnd + c][r]
         return bytes(s[r][c] for c in range(4) for r in range(4))
 
+    def naive_cbc(key, iv, data):
+        out, prev = b"", iv
+        for i in range(0, len(data), 16):
+            prev = naive_encrypt(key, bytes(a ^ b for a, b in zip(data[i:i + 16], prev)))
+            out += prev
+        return out
+
     rng = random.Random(197)
     for klen in (16, 32):
-        for _ in range(25):
+        for i in range(25):
+            nblocks = 1 + i % 5
             key = bytes(rng.randrange(256) for _ in range(klen))
-            blk = bytes(rng.randrange(256) for _ in range(16))
-            w, rounds = _aes_expand(key)
-            ct = _aes_enc_block(w, rounds, blk)
-            assert ct == naive_encrypt(key, blk)
-            dk, rounds = _aes_dec_expand(key)
-            assert _aes_dec_block(dk, rounds, ct) == blk
+            iv = bytes(rng.randrange(256) for _ in range(16))
+            msg = bytes(rng.randrange(256) for _ in range(16 * nblocks))
+            ct = _aes_cbc_encrypt(key, iv, msg)
+            assert ct == naive_cbc(key, iv, msg)
+            assert _aes_cbc_decrypt_raw(key, iv, ct) == msg
 
 
 def test_r6_kdf_lru_avoids_rederivation():
     """Re-opening the same AES-256 document must hit the KDF cache —
     retry rounds and resume re-extraction pay the ~18k-block derivation
     once per distinct (password, salt, udata)."""
-    from test_realpdf_features import _aes256_pdf
-
     from documentconvert_spark.kernels.detect import extract_pdf_any
     from documentconvert_spark.kernels.realpdf import _r6_hash
 
-    doc = _aes256_pdf()
+    doc = aes256_pdf()
     _r6_hash.cache_clear()
     extract_pdf_any(doc)
     misses_first = _r6_hash.cache_info().misses

@@ -2,18 +2,30 @@
 the rest of the reference's office whitelist
 (document_service.py:49-56). Fixtures are synthesized in-test from the
 public specs; the CFB fixtures double as a cross-check of the CFB reader
-(write with an independent minimal writer, read back with the engine's).
+(write with corpus.write_cfb, an independent minimal writer, read back
+with the engine's).
 """
 
 from __future__ import annotations
 
-import io
 import os
 import struct
-import zipfile
 
 import pytest
 
+from documentconvert_spark.corpus import (
+    biff_rec,
+    classic_pdf,
+    det_zip,
+    make_ppt,
+    make_xls,
+    odf_zip,
+    page_tree,
+    stream_obj,
+    write_cfb,
+    xl_str8,
+    xlsx_zip,
+)
 from documentconvert_spark.kernels.detect import extract_office_any
 from documentconvert_spark.kernels.minibiff import extract_ppt, extract_xls
 from documentconvert_spark.kernels.miniodf import extract_odf
@@ -84,16 +96,8 @@ _ODP_CONTENT = """<?xml version="1.0" encoding="UTF-8"?>
 </office:document-content>"""
 
 
-def _odf_zip(content_xml: str, mimetype: str) -> bytes:
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("mimetype", mimetype)
-        z.writestr("content.xml", content_xml)
-    return buf.getvalue()
-
-
 def test_odt():
-    spans = extract_odf(_odf_zip(_ODT_CONTENT, "application/vnd.oasis.opendocument.text"))
+    spans = extract_odf(odf_zip(_ODT_CONTENT, "application/vnd.oasis.opendocument.text"))
     kinds = [s.kind for s in spans]
     assert kinds == ["heading", "paragraph", "figure", "paragraph", "table"]
     assert spans[0].text == "Annual Report"
@@ -103,14 +107,14 @@ def test_odt():
 
 
 def test_ods():
-    spans = extract_odf(_odf_zip(_ODS_CONTENT, "application/vnd.oasis.opendocument.spreadsheet"))
+    spans = extract_odf(odf_zip(_ODS_CONTENT, "application/vnd.oasis.opendocument.spreadsheet"))
     assert [s.kind for s in spans] == ["heading", "table"]
     assert spans[0].text == "Budget"
     assert spans[1].text == "item\tx\tx\n100\t2026-01-02\tok"
 
 
 def test_odp():
-    spans = extract_odf(_odf_zip(_ODP_CONTENT, "application/vnd.oasis.opendocument.presentation"))
+    spans = extract_odf(odf_zip(_ODP_CONTENT, "application/vnd.oasis.opendocument.presentation"))
     assert [s.kind for s in spans] == ["heading", "paragraph", "figure"]
     assert spans[0].text == "Deck Title"
     assert "bullet one" in spans[1].text and "bullet two" in spans[1].text
@@ -151,179 +155,31 @@ def test_rtf_rejects_non_rtf():
         extract_rtf(b"plain text, no rtf header")
 
 
-# ---------------------------------------------------- minimal CFB writer
-
-_FREE = 0xFFFFFFFF
-_ENDCHAIN = 0xFFFFFFFE
-_FATSECT = 0xFFFFFFFD
-
-
-def _dir_entry(name: str, otype: int, start: int, size: int) -> bytes:
-    raw_name = name.encode("utf-16-le") + b"\x00\x00"
-    e = bytearray(128)
-    e[: len(raw_name)] = raw_name
-    struct.pack_into("<H", e, 64, len(raw_name))
-    e[66] = otype
-    e[67] = 1  # black
-    struct.pack_into("<I", e, 68, _FREE)   # left sibling
-    struct.pack_into("<I", e, 72, _FREE)   # right sibling
-    struct.pack_into("<I", e, 76, 1 if otype == 5 else _FREE)  # child
-    struct.pack_into("<I", e, 116, start)
-    struct.pack_into("<Q", e, 120, size)
-    return bytes(e)
-
-
-def write_cfb(streams: list[tuple[str, bytes]]) -> bytes:
-    """Independent minimal [MS-CFB] writer: 512-byte sectors, all streams
-    on the regular FAT (padded past the mini cutoff), single FAT sector."""
-    ssz = 512
-    padded = []
-    for name, data in streams:
-        size = max(len(data), 4096)
-        pad = (-size) % ssz
-        padded.append((name, data + b"\x00" * (size + pad - len(data)), size + pad))
-
-    sectors: list[bytes] = []
-    starts = []
-    for _name, data, _size in padded:
-        starts.append(len(sectors))
-        for off in range(0, len(data), ssz):
-            sectors.append(data[off : off + ssz])
-    dir_sect = len(sectors)
-    entries = [_dir_entry("Root Entry", 5, _ENDCHAIN, 0)]
-    for (name, _d, size), start in zip(padded, starts):
-        entries.append(_dir_entry(name, 2, start, size))
-    dir_data = b"".join(entries)
-    dir_data += b"\x00" * ((-len(dir_data)) % ssz)
-    for off in range(0, len(dir_data), ssz):
-        sectors.append(dir_data[off : off + ssz])
-    n_dir_sects = len(sectors) - dir_sect
-    fat_sect = len(sectors)
-
-    fat = [_FREE] * (ssz // 4)
-    for (name, data, _size), start in zip(padded, starts):
-        n = len(data) // ssz
-        for k in range(n):
-            fat[start + k] = start + k + 1 if k < n - 1 else _ENDCHAIN
-    for k in range(n_dir_sects):
-        fat[dir_sect + k] = dir_sect + k + 1 if k < n_dir_sects - 1 else _ENDCHAIN
-    fat[fat_sect] = _FATSECT
-    sectors.append(struct.pack(f"<{ssz // 4}I", *fat))
-
-    hdr = bytearray(512)
-    hdr[:8] = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
-    struct.pack_into("<H", hdr, 24, 0x003E)   # minor version
-    struct.pack_into("<H", hdr, 26, 0x0003)   # major version 3
-    struct.pack_into("<H", hdr, 28, 0xFFFE)   # little-endian
-    struct.pack_into("<H", hdr, 30, 9)        # sector shift
-    struct.pack_into("<H", hdr, 32, 6)        # mini sector shift
-    struct.pack_into("<I", hdr, 44, 1)        # n_fat
-    struct.pack_into("<I", hdr, 48, dir_sect)
-    struct.pack_into("<I", hdr, 56, 4096)     # mini cutoff
-    struct.pack_into("<I", hdr, 60, _ENDCHAIN)  # minifat start
-    struct.pack_into("<I", hdr, 64, 0)
-    struct.pack_into("<I", hdr, 68, _ENDCHAIN)  # difat start
-    struct.pack_into("<I", hdr, 72, 0)
-    difat = [fat_sect] + [_FREE] * 108
-    struct.pack_into("<109I", hdr, 76, *difat)
-    return bytes(hdr) + b"".join(sectors)
-
-
 # ------------------------------------------------------------------ .xls
 
-def _biff_rec(op: int, payload: bytes) -> bytes:
-    return struct.pack("<HH", op, len(payload)) + payload
-
-
-def _xl_str8(s: str) -> bytes:
-    """ShortXLUnicodeString, compressed."""
-    b = s.encode("latin-1")
-    return struct.pack("<BB", len(b), 0) + b
-
-
-def _make_xls() -> bytes:
-    # globals: BOF, BOUNDSHEET (offset patched), SST, EOF
-    sst_strings = ["name", "alpha", "beta", "宽字符"]
-    sst_payload = struct.pack("<II", 4, 4)
-    for s in sst_strings:
-        try:
-            raw = s.encode("latin-1")
-            sst_payload += struct.pack("<HB", len(s), 0) + raw
-        except UnicodeEncodeError:
-            raw = s.encode("utf-16-le")
-            sst_payload += struct.pack("<HB", len(s), 1) + raw
-    bof = _biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0005, 0, 0, 0, 0))
-    boundsheet_placeholder = struct.pack("<IBB", 0, 0, 0) + _xl_str8("Data")
-    globals_part = (
-        bof
-        + _biff_rec(0x0085, boundsheet_placeholder)
-        + _biff_rec(0x00FC, sst_payload)
-        + _biff_rec(0x000A, b"")
-    )
-    sheet_off = len(globals_part)
-    # sheet substream: BOF, LABELSST row0 (header), NUMBER + RK row1, EOF
-    sheet = (
-        _biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0010, 0, 0, 0, 0))
-        + _biff_rec(0x00FD, struct.pack("<HHHI", 0, 0, 0, 0))  # A1 = "name"
-        + _biff_rec(0x00FD, struct.pack("<HHHI", 0, 1, 0, 3))  # B1 = "宽字符"
-        + _biff_rec(0x00FD, struct.pack("<HHHI", 1, 0, 0, 1))  # A2 = "alpha"
-        + _biff_rec(0x0203, struct.pack("<HHHd", 1, 1, 0, 12.0))  # B2 = 12
-        + _biff_rec(0x00FD, struct.pack("<HHHI", 2, 0, 0, 2))  # A3 = "beta"
-        + _biff_rec(0x027E, struct.pack("<HHHI", 2, 1, 0, (25 << 2) | 0x02))  # B3 = RK int 25
-        + _biff_rec(0x000A, b"")
-    )
-    # patch BOUNDSHEET lbPlyPos
-    fixed_boundsheet = struct.pack("<I", sheet_off) + boundsheet_placeholder[4:]
-    globals_part = (
-        bof + _biff_rec(0x0085, fixed_boundsheet) + _biff_rec(0x00FC, sst_payload)
-        + _biff_rec(0x000A, b"")
-    )
-    return write_cfb([("Workbook", globals_part + sheet)])
-
-
 def test_xls_biff8():
-    spans = extract_xls(_make_xls())
+    spans = extract_xls(make_xls())
     assert [s.kind for s in spans] == ["heading", "table"]
     assert spans[0].text == "Data"
     assert spans[1].text == "name\t宽字符\nalpha\t12\nbeta\t25"
 
 
 def test_xls_routed_by_ole_directory():
-    spans = extract_office_any(_make_xls())
+    spans = extract_office_any(make_xls())
     assert spans[0].text == "Data"
 
 
 # ------------------------------------------------------------------ .ppt
 
-def _ppt_rec(ver_inst: int, rtype: int, payload: bytes) -> bytes:
-    return struct.pack("<HHI", ver_inst, rtype, len(payload)) + payload
-
-
-def _make_ppt() -> bytes:
-    title = "Roadmap 2026".encode("utf-16-le")
-    body = "第一点\r第二点".encode("utf-16-le")
-    bytes_txt = b"ascii only run"
-    slide = _ppt_rec(
-        0x000F, 0x03EE,  # Slide container
-        _ppt_rec(0x0000, 0x0F9F, struct.pack("<I", 0))      # TextHeaderAtom: title
-        + _ppt_rec(0x0000, 0x0FA0, title)                    # TextCharsAtom
-        + _ppt_rec(0x0000, 0x0F9F, struct.pack("<I", 1))    # TextHeaderAtom: body
-        + _ppt_rec(0x0000, 0x0FA0, body)
-        + _ppt_rec(0x0000, 0x0FA8, bytes_txt),               # TextBytesAtom
-    )
-    doc = _ppt_rec(0x000F, 0x03E8, slide)
-    return write_cfb([("PowerPoint Document", doc), ("Current User", b"\x00" * 16)])
-
-
 def test_ppt_text_atoms():
-    spans = extract_ppt(_make_ppt())
+    spans = extract_ppt(make_ppt())
     assert spans[0].kind == "heading" and spans[0].text == "Roadmap 2026"
     texts = [s.text for s in spans]
     assert "第一点" in texts and "第二点" in texts and "ascii only run" in texts
 
 
 def test_ppt_routed_by_ole_directory():
-    spans = extract_office_any(_make_ppt())
+    spans = extract_office_any(make_ppt())
     assert spans[0].text == "Roadmap 2026"
 
 
@@ -344,10 +200,7 @@ def test_docx_omml_formula_spans():
    <w:r><w:t> holds everywhere.</w:t></w:r></w:p>
  </w:body>
 </w:document>"""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("word/document.xml", doc_xml)
-    spans = extract_docx(buf.getvalue())
+    spans = extract_docx(det_zip([("word/document.xml", doc_xml)]))
     kinds = [s.kind for s in spans]
     assert kinds == ["paragraph", "formula"]
     assert spans[0].text == "The energy relation holds everywhere."
@@ -358,41 +211,41 @@ def test_docx_omml_formula_spans():
 
 def test_xls_negative_rk_values():
     """RK integers are signed 30-bit: -1 must not decode as 2^30-1."""
-    bof = _biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0005, 0, 0, 0, 0))
-    bs = struct.pack("<IBB", 0, 0, 0) + _xl_str8("Neg")
-    glob_tmp = bof + _biff_rec(0x0085, bs) + _biff_rec(0x000A, b"")
+    bof = biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0005, 0, 0, 0, 0))
+    bs = struct.pack("<IBB", 0, 0, 0) + xl_str8("Neg")
+    glob_tmp = bof + biff_rec(0x0085, bs) + biff_rec(0x000A, b"")
     neg1 = (((-1) & 0x3FFFFFFF) << 2) | 0x02            # int -1
     negc = (((-5) & 0x3FFFFFFF) << 2) | 0x03            # int -5 with cent flag = -0.05
     sheet = (
-        _biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0010, 0, 0, 0, 0))
-        + _biff_rec(0x027E, struct.pack("<HHHI", 0, 0, 0, neg1 & 0xFFFFFFFF))
-        + _biff_rec(0x027E, struct.pack("<HHHI", 0, 1, 0, negc & 0xFFFFFFFF))
-        + _biff_rec(0x000A, b"")
+        biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0010, 0, 0, 0, 0))
+        + biff_rec(0x027E, struct.pack("<HHHI", 0, 0, 0, neg1 & 0xFFFFFFFF))
+        + biff_rec(0x027E, struct.pack("<HHHI", 0, 1, 0, negc & 0xFFFFFFFF))
+        + biff_rec(0x000A, b"")
     )
     bs2 = struct.pack("<I", len(glob_tmp)) + bs[4:]
-    glob = bof + _biff_rec(0x0085, bs2) + _biff_rec(0x000A, b"")
+    glob = bof + biff_rec(0x0085, bs2) + biff_rec(0x000A, b"")
     spans = extract_xls(write_cfb([("Workbook", glob + sheet)]))
     assert spans[1].text == "-1\t-0.05"
 
 
 def test_xls_sst_rich_text_runs_skipped():
     """fRichSt run payloads after the chars must not desync later strings."""
-    bof = _biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0005, 0, 0, 0, 0))
-    bs = struct.pack("<IBB", 0, 0, 0) + _xl_str8("Rich")
-    glob_tmp = bof + _biff_rec(0x0085, bs) + _biff_rec(0x000A, b"")
+    bof = biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0005, 0, 0, 0, 0))
+    bs = struct.pack("<IBB", 0, 0, 0) + xl_str8("Rich")
+    glob_tmp = bof + biff_rec(0x0085, bs) + biff_rec(0x000A, b"")
     # string 0: rich (2 runs), string 1: plain — the second must survive
     sst = struct.pack("<II", 2, 2)
     sst += struct.pack("<HBH", 4, 0x08, 2) + b"rich" + b"\x00" * 8  # 2 runs x 4B
     sst += struct.pack("<HB", 5, 0) + b"plain"
-    glob_tmp = bof + _biff_rec(0x0085, bs) + _biff_rec(0x00FC, sst) + _biff_rec(0x000A, b"")
+    glob_tmp = bof + biff_rec(0x0085, bs) + biff_rec(0x00FC, sst) + biff_rec(0x000A, b"")
     sheet = (
-        _biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0010, 0, 0, 0, 0))
-        + _biff_rec(0x00FD, struct.pack("<HHHI", 0, 0, 0, 0))
-        + _biff_rec(0x00FD, struct.pack("<HHHI", 0, 1, 0, 1))
-        + _biff_rec(0x000A, b"")
+        biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0010, 0, 0, 0, 0))
+        + biff_rec(0x00FD, struct.pack("<HHHI", 0, 0, 0, 0))
+        + biff_rec(0x00FD, struct.pack("<HHHI", 0, 1, 0, 1))
+        + biff_rec(0x000A, b"")
     )
     bs2 = struct.pack("<I", len(glob_tmp)) + bs[4:]
-    glob = bof + _biff_rec(0x0085, bs2) + _biff_rec(0x00FC, sst) + _biff_rec(0x000A, b"")
+    glob = bof + biff_rec(0x0085, bs2) + biff_rec(0x00FC, sst) + biff_rec(0x000A, b"")
     spans = extract_xls(write_cfb([("Workbook", glob + sheet)]))
     assert spans[1].text == "rich\tplain"
 
@@ -407,19 +260,7 @@ def test_xlsx_cells_without_r_attribute():
   <c t="inlineStr"><is><t>b</t></is></c>
   <c t="inlineStr"><is><t>c</t></is></c></row></sheetData>
 </worksheet>"""
-    wb = """<?xml version="1.0"?>
-<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
- xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
- <sheets><sheet name="S" sheetId="1" r:id="rId1"/></sheets></workbook>"""
-    rels = """<?xml version="1.0"?>
-<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
- <Relationship Id="rId1" Target="worksheets/sheet1.xml"/></Relationships>"""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("xl/workbook.xml", wb)
-        z.writestr("xl/_rels/workbook.xml.rels", rels)
-        z.writestr("xl/worksheets/sheet1.xml", sheet)
-    spans = extract_xlsx(buf.getvalue())
+    spans = extract_xlsx(xlsx_zip(sheet))
     assert spans[1].text == "a\tb\tc"
 
 
@@ -438,19 +279,15 @@ def test_rtf_pard_resets_intbl():
 def test_realpdf_tounicode_default_width_one():
     """A 1-byte simple font whose ToUnicode omits codespacerange must not
     be decoded as 2-byte (which blanks all its text)."""
-    import os
-    import sys
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from test_realpdf_features import _classic_pdf, _page_tree, _stream_obj
     cmap = (b"/CIDInit /ProcSet findresource begin\n"
             b"1 begincmap\n2 beginbfchar\n<41> <0058>\n<42> <0059>\nendbfchar\nendcmap")
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", b"BT /F1 10 Tf 72 700 Td (AB) Tj ET")
+    objs[4] = stream_obj(b"", b"BT /F1 10 Tf 72 700 Td (AB) Tj ET")
     objs[5] = b"<</Type /Font /Subtype /TrueType /BaseFont /X /ToUnicode 6 0 R>>"
-    objs[6] = _stream_obj(b"", cmap)
+    objs[6] = stream_obj(b"", cmap)
     from documentconvert_spark.kernels.realpdf import extract_realpdf
-    spans = extract_realpdf(_classic_pdf(objs))
+    spans = extract_realpdf(classic_pdf(objs))
     assert spans and spans[0].text == "XY"
 
 
@@ -542,9 +379,6 @@ def test_rtf_unknown_codepage_contained():
 
 
 def test_docx_nonnumeric_outline_level_contained():
-    import io
-    import zipfile
-
     from documentconvert_spark.kernels.miniooxml import extract_docx
 
     doc_xml = """<?xml version="1.0"?>
@@ -554,10 +388,7 @@ def test_docx_nonnumeric_outline_level_contained():
   <w:p><w:r><w:t>normal paragraph text</w:t></w:r></w:p>
  </w:body>
 </w:document>"""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("word/document.xml", doc_xml)
-    spans = extract_docx(buf.getvalue())
+    spans = extract_docx(det_zip([("word/document.xml", doc_xml)]))
     assert [(s.kind, s.level) for s in spans] == [("heading", 1), ("paragraph", 0)]
 
 
@@ -641,20 +472,7 @@ def test_xlsx_date_cells_render_as_dates():
   <xf numFmtId="0"/><xf numFmtId="14"/><xf numFmtId="22"/>
   <xf numFmtId="21"/><xf numFmtId="164"/>
  </cellXfs></styleSheet>"""
-    wb = """<?xml version="1.0"?>
-<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
- xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
- <sheets><sheet name="S" sheetId="1" r:id="rId1"/></sheets></workbook>"""
-    rels = """<?xml version="1.0"?>
-<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
- <Relationship Id="rId1" Target="worksheets/sheet1.xml"/></Relationships>"""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("xl/workbook.xml", wb)
-        z.writestr("xl/_rels/workbook.xml.rels", rels)
-        z.writestr("xl/worksheets/sheet1.xml", sheet)
-        z.writestr("xl/styles.xml", styles)
-    spans = extract_xlsx(buf.getvalue())
+    spans = extract_xlsx(xlsx_zip(sheet, styles))
     cells = spans[1].text.split("\t")
     assert cells == ["2023-07-16", "2023-07-16 12:00:00", "18:00:00",
                      "45123", "2023-07-16"], cells
@@ -664,29 +482,29 @@ def test_xls_biff_date_cells_render_as_dates():
     """BIFF NUMBER/RK cells whose XF points at a date ifmt render as
     dates (FORMAT custom code + builtin ifmt both work)."""
     sst_payload = struct.pack("<II", 1, 1) + struct.pack("<HB", 4, 0) + b"when"
-    bof = _biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0005, 0, 0, 0, 0))
+    bof = biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0005, 0, 0, 0, 0))
     # XF 0: general; XF 1: builtin date 14; XF 2: custom FORMAT 164
     fmt164 = struct.pack("<H", 164) + struct.pack("<HB", 8, 0) + b"yyyy\\-mm"
-    xf = lambda ifmt: _biff_rec(0x00E0, struct.pack("<HH", 0, ifmt) + b"\x00" * 12)
-    boundsheet_placeholder = struct.pack("<IBB", 0, 0, 0) + _xl_str8("D")
+    xf = lambda ifmt: biff_rec(0x00E0, struct.pack("<HH", 0, ifmt) + b"\x00" * 12)
+    boundsheet_placeholder = struct.pack("<IBB", 0, 0, 0) + xl_str8("D")
     def build(globals_mid: bytes) -> tuple[bytes, int]:
-        part = bof + globals_mid + _biff_rec(0x000A, b"")
+        part = bof + globals_mid + biff_rec(0x000A, b"")
         return part, len(part)
-    mid = (_biff_rec(0x041E, fmt164) + xf(0) + xf(14) + xf(164)
-           + _biff_rec(0x0085, boundsheet_placeholder)
-           + _biff_rec(0x00FC, sst_payload))
+    mid = (biff_rec(0x041E, fmt164) + xf(0) + xf(14) + xf(164)
+           + biff_rec(0x0085, boundsheet_placeholder)
+           + biff_rec(0x00FC, sst_payload))
     globals_part, sheet_off = build(mid)
     sheet = (
-        _biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0010, 0, 0, 0, 0))
-        + _biff_rec(0x00FD, struct.pack("<HHHI", 0, 0, 0, 0))          # A1 "when"
-        + _biff_rec(0x0203, struct.pack("<HHHd", 1, 0, 1, 45123.0))    # A2 date
-        + _biff_rec(0x027E, struct.pack("<HHHI", 2, 0, 2, (45124 << 2) | 0x02))  # A3 RK date
-        + _biff_rec(0x0203, struct.pack("<HHHd", 3, 0, 0, 45123.0))    # A4 plain
-        + _biff_rec(0x000A, b"")
+        biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0010, 0, 0, 0, 0))
+        + biff_rec(0x00FD, struct.pack("<HHHI", 0, 0, 0, 0))          # A1 "when"
+        + biff_rec(0x0203, struct.pack("<HHHd", 1, 0, 1, 45123.0))    # A2 date
+        + biff_rec(0x027E, struct.pack("<HHHI", 2, 0, 2, (45124 << 2) | 0x02))  # A3 RK date
+        + biff_rec(0x0203, struct.pack("<HHHd", 3, 0, 0, 45123.0))    # A4 plain
+        + biff_rec(0x000A, b"")
     )
-    mid_fixed = (_biff_rec(0x041E, fmt164) + xf(0) + xf(14) + xf(164)
-                 + _biff_rec(0x0085, struct.pack("<I", sheet_off) + boundsheet_placeholder[4:])
-                 + _biff_rec(0x00FC, sst_payload))
+    mid_fixed = (biff_rec(0x041E, fmt164) + xf(0) + xf(14) + xf(164)
+                 + biff_rec(0x0085, struct.pack("<I", sheet_off) + boundsheet_placeholder[4:])
+                 + biff_rec(0x00FC, sst_payload))
     globals_part, _ = build(mid_fixed)
     spans = extract_xls(write_cfb([("Workbook", globals_part + sheet)]))
     rows = spans[1].text.splitlines()
@@ -710,32 +528,19 @@ def test_xlsx_percent_bool_and_formula_cells():
     styles = """<?xml version="1.0"?>
 <styleSheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
  <cellXfs count="2"><xf numFmtId="0"/><xf numFmtId="9"/></cellXfs></styleSheet>"""
-    wb = """<?xml version="1.0"?>
-<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
- xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
- <sheets><sheet name="S" sheetId="1" r:id="rId1"/></sheets></workbook>"""
-    rels = """<?xml version="1.0"?>
-<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
- <Relationship Id="rId1" Target="worksheets/sheet1.xml"/></Relationships>"""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("xl/workbook.xml", wb)
-        z.writestr("xl/_rels/workbook.xml.rels", rels)
-        z.writestr("xl/worksheets/sheet1.xml", sheet)
-        z.writestr("xl/styles.xml", styles)
-    spans = extract_xlsx(buf.getvalue())
+    spans = extract_xlsx(xlsx_zip(sheet, styles))
     assert spans[1].text.split("\t") == ["12.5%", "TRUE", "FALSE", "3"]
 
 
 def test_xls_formula_and_boolerr_cells():
     sst_payload = struct.pack("<II", 1, 1) + struct.pack("<HB", 3, 0) + b"hdr"
-    bof = _biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0005, 0, 0, 0, 0))
-    xf = lambda ifmt: _biff_rec(0x00E0, struct.pack("<HH", 0, ifmt) + b"\x00" * 12)
-    boundsheet_placeholder = struct.pack("<IBB", 0, 0, 0) + _xl_str8("D")
+    bof = biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0005, 0, 0, 0, 0))
+    xf = lambda ifmt: biff_rec(0x00E0, struct.pack("<HH", 0, ifmt) + b"\x00" * 12)
+    boundsheet_placeholder = struct.pack("<IBB", 0, 0, 0) + xl_str8("D")
     def glb(off: int) -> bytes:
         return (bof + xf(0) + xf(9)
-                + _biff_rec(0x0085, struct.pack("<I", off) + boundsheet_placeholder[4:])
-                + _biff_rec(0x00FC, sst_payload) + _biff_rec(0x000A, b""))
+                + biff_rec(0x0085, struct.pack("<I", off) + boundsheet_placeholder[4:])
+                + biff_rec(0x00FC, sst_payload) + biff_rec(0x000A, b""))
     sheet_off = len(glb(0))
     # FORMULA cached numeric (percent xf), FORMULA bool, FORMULA string +
     # STRING record, BOOLERR bool, BOOLERR error (dropped)
@@ -746,13 +551,13 @@ def test_xls_formula_and_boolerr_cells():
     b_true = struct.pack("<HHH", 1, 0, 0) + bytes([1, 0])
     b_err = struct.pack("<HHH", 1, 1, 0) + bytes([0x17, 1])
     sheet = (
-        _biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0010, 0, 0, 0, 0))
-        + _biff_rec(0x0006, f_num)
-        + _biff_rec(0x0006, f_bool)
-        + _biff_rec(0x0006, f_str) + _biff_rec(0x0207, s_rec)
-        + _biff_rec(0x0205, b_true)
-        + _biff_rec(0x0205, b_err)
-        + _biff_rec(0x000A, b"")
+        biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0010, 0, 0, 0, 0))
+        + biff_rec(0x0006, f_num)
+        + biff_rec(0x0006, f_bool)
+        + biff_rec(0x0006, f_str) + biff_rec(0x0207, s_rec)
+        + biff_rec(0x0205, b_true)
+        + biff_rec(0x0205, b_err)
+        + biff_rec(0x000A, b"")
     )
     spans = extract_xls(write_cfb([("Workbook", glb(sheet_off) + sheet)]))
     rows = spans[1].text.splitlines()
@@ -774,21 +579,21 @@ def test_xls_shrfmla_between_formula_and_string():
     """[MS-XLS] allows ShrFmla/Array/Table between a FORMULA and its
     STRING result — the cached string must still land in its cell."""
     sst_payload = struct.pack("<II", 0, 0)
-    bof = _biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0005, 0, 0, 0, 0))
-    boundsheet_placeholder = struct.pack("<IBB", 0, 0, 0) + _xl_str8("D")
+    bof = biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0005, 0, 0, 0, 0))
+    boundsheet_placeholder = struct.pack("<IBB", 0, 0, 0) + xl_str8("D")
     def glb(off: int) -> bytes:
         return (bof
-                + _biff_rec(0x0085, struct.pack("<I", off) + boundsheet_placeholder[4:])
-                + _biff_rec(0x00FC, sst_payload) + _biff_rec(0x000A, b""))
+                + biff_rec(0x0085, struct.pack("<I", off) + boundsheet_placeholder[4:])
+                + biff_rec(0x00FC, sst_payload) + biff_rec(0x000A, b""))
     sheet_off = len(glb(0))
     f_str = struct.pack("<HHH", 0, 0, 0) + bytes([0, 0, 0, 0, 0, 0, 0xFF, 0xFF]) + b"\x00" * 6
     s_rec = struct.pack("<HB", 5, 0) + b"hello"
     sheet = (
-        _biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0010, 0, 0, 0, 0))
-        + _biff_rec(0x0006, f_str)
-        + _biff_rec(0x04BC, b"\x00" * 8)   # ShrFmla in between
-        + _biff_rec(0x0207, s_rec)
-        + _biff_rec(0x000A, b"")
+        biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0010, 0, 0, 0, 0))
+        + biff_rec(0x0006, f_str)
+        + biff_rec(0x04BC, b"\x00" * 8)   # ShrFmla in between
+        + biff_rec(0x0207, s_rec)
+        + biff_rec(0x000A, b"")
     )
     spans = extract_xls(write_cfb([("Workbook", glb(sheet_off) + sheet)]))
     assert spans[1].text == "hello"
@@ -808,20 +613,7 @@ def test_xlsx_dxfs_numfmt_does_not_pollute():
  <cellXfs count="2"><xf numFmtId="0"/><xf numFmtId="164"/></cellXfs>
  <dxfs count="1"><dxf><numFmt numFmtId="164" formatCode="0.00"/></dxf></dxfs>
 </styleSheet>"""
-    wb = """<?xml version="1.0"?>
-<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
- xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
- <sheets><sheet name="S" sheetId="1" r:id="rId1"/></sheets></workbook>"""
-    rels = """<?xml version="1.0"?>
-<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
- <Relationship Id="rId1" Target="worksheets/sheet1.xml"/></Relationships>"""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("xl/workbook.xml", wb)
-        z.writestr("xl/_rels/workbook.xml.rels", rels)
-        z.writestr("xl/worksheets/sheet1.xml", sheet)
-        z.writestr("xl/styles.xml", styles)
-    spans = extract_xlsx(buf.getvalue())
+    spans = extract_xlsx(xlsx_zip(sheet, styles))
     assert spans[1].text == "2023-07-16"
 
 
@@ -850,20 +642,7 @@ def test_xlsx_nonfinite_numbers_do_not_error_workbook():
 <styleSheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
  <cellXfs count="3"><xf numFmtId="0"/><xf numFmtId="14"/><xf numFmtId="9"/>
  </cellXfs></styleSheet>"""
-    wb = """<?xml version="1.0"?>
-<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
- xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
- <sheets><sheet name="S" sheetId="1" r:id="rId1"/></sheets></workbook>"""
-    rels = """<?xml version="1.0"?>
-<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
- <Relationship Id="rId1" Target="worksheets/sheet1.xml"/></Relationships>"""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("xl/workbook.xml", wb)
-        z.writestr("xl/_rels/workbook.xml.rels", rels)
-        z.writestr("xl/worksheets/sheet1.xml", sheet)
-        z.writestr("xl/styles.xml", styles)
-    spans = extract_xlsx(buf.getvalue())  # must not raise
+    spans = extract_xlsx(xlsx_zip(sheet, styles))  # must not raise
     cells = spans[1].text.split("\t")
     assert cells[0] == "1e999" and cells[2] == "-1e999", cells
 
@@ -886,7 +665,7 @@ def test_odf_list_text_inside_cell_kept():
   </table:table>
  </office:spreadsheet></office:body>
 </office:document-content>"""
-    spans = extract_odf(_odf_zip(content, "application/vnd.oasis.opendocument.spreadsheet"))
+    spans = extract_odf(odf_zip(content, "application/vnd.oasis.opendocument.spreadsheet"))
     assert spans[1].text == "listed value\tplain"
 
 
@@ -904,7 +683,7 @@ def test_odf_annotations_excluded_and_odp_bullets_kept():
     <text:p>visible value</text:p>
   </table:table-cell></table:table-row>
  </table:table></office:spreadsheet></office:body></office:document-content>"""
-    spans = extract_odf(_odf_zip(ods, "application/vnd.oasis.opendocument.spreadsheet"))
+    spans = extract_odf(odf_zip(ods, "application/vnd.oasis.opendocument.spreadsheet"))
     assert spans[1].text == "visible value"
 
     odp = """<?xml version="1.0" encoding="UTF-8"?>
@@ -919,7 +698,7 @@ def test_odf_annotations_excluded_and_odp_bullets_kept():
     <text:list-item><text:p>bullet beta</text:p></text:list-item></text:list>
   </draw:text-box></draw:frame>
  </draw:page></office:presentation></office:body></office:document-content>"""
-    spans = extract_odf(_odf_zip(odp, "application/vnd.oasis.opendocument.presentation"))
+    spans = extract_odf(odf_zip(odp, "application/vnd.oasis.opendocument.presentation"))
     texts = "\n".join(s.text for s in spans)
     assert "bullet alpha" in texts and "bullet beta" in texts
 
@@ -954,16 +733,16 @@ def test_pptx_deck_title_levels():
             '<Relationship Id="rId2" Type="http://a/slide" Target="slides/slide2.xml"/>'
             '<Relationship Id="rId3" Type="http://a/slide" Target="slides/slide3.xml"/>'
             '</Relationships>')
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("ppt/presentation.xml", pres)
-        z.writestr("ppt/_rels/presentation.xml.rels", rels)
-        z.writestr("ppt/slides/slide1.xml",
-                   slide(sp("ctrTitle", "Deck Title") + sp("subTitle", "the subtitle")))
-        z.writestr("ppt/slides/slide2.xml",
-                   slide(sp("title", "Topic One") + sp("body", "content a")))
-        z.writestr("ppt/slides/slide3.xml", slide(sp("title", "Topic Two")))
-    spans = extract_pptx(buf.getvalue())
+    data = det_zip([
+        ("ppt/presentation.xml", pres),
+        ("ppt/_rels/presentation.xml.rels", rels),
+        ("ppt/slides/slide1.xml",
+         slide(sp("ctrTitle", "Deck Title") + sp("subTitle", "the subtitle"))),
+        ("ppt/slides/slide2.xml",
+         slide(sp("title", "Topic One") + sp("body", "content a"))),
+        ("ppt/slides/slide3.xml", slide(sp("title", "Topic Two"))),
+    ])
+    spans = extract_pptx(data)
     got = [(s.kind, s.level, s.text) for s in spans]
     assert got == [
         ("heading", 1, "Deck Title"),
@@ -974,21 +753,14 @@ def test_pptx_deck_title_levels():
     ], got
 
 
-def test_ppt_and_odp_deck_title_levels():
+def test_ppt_and_odp_deck_title_levels(extra_doc):
     """Binary .ppt and ODP follow the same deck-title convention, and ODP
     text:h outline levels inside boxes are honored."""
-    import os
-    import sys
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from scripts.gen_extra_fixtures import _ODP_CONTENT as FIXTURE_ODP
-    from scripts.gen_extra_fixtures import binary_ppt
-
-    odp = extract_office_any(_odf_zip(
-        FIXTURE_ODP, "application/vnd.oasis.opendocument.presentation"))
+    odp = extract_office_any(extra_doc("fixture_deck.odp"))
     heads = [(s.level, s.text) for s in odp if s.kind == "heading"]
     assert heads == [(1, "ODP Fixture Deck"), (2, "Second Slide Topic"),
                      (3, "Sub Point Heading")], heads
 
-    ppt = extract_office_any(binary_ppt())
+    ppt = extract_office_any(extra_doc("fixture_deck.ppt"))
     heads = [(s.level, s.text) for s in ppt if s.kind == "heading"]
     assert heads == [(1, "PPT Fixture Deck"), (2, "Second Slide Topic")], heads

@@ -16,6 +16,7 @@ import zlib
 
 import pytest
 
+from documentconvert_spark.corpus import PDF_FONT, classic_pdf, page_tree
 from documentconvert_spark.kernels import limits
 from documentconvert_spark.kernels.limits import inflate_capped, zip_read_capped
 from documentconvert_spark.kernels.realpdf import (
@@ -23,7 +24,6 @@ from documentconvert_spark.kernels.realpdf import (
     _rle_decode,
     extract_realpdf,
 )
-from tests.test_realpdf_features import _FONT, _classic_pdf, _page_tree
 
 
 def test_inflate_roundtrip_under_cap():
@@ -101,14 +101,14 @@ def test_asciihex_odd_digit_implies_trailing_zero():
     hexed = content.hex().encode()
     assert hexed.endswith(b"0")
     odd = hexed[:-1] + b">"  # drop the implied 0 -> odd digit count
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
     objs[4] = b"<</Filter /ASCIIHexDecode /Length %d>>\nstream\n%s\nendstream" % (
         len(odd),
         odd,
     )
-    objs[5] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[5] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     assert spans and spans[0].text == "odd hex tail"
 
 
@@ -143,19 +143,19 @@ def test_pdf_double_flate_bomb_contained():
     zeros, ~2 KiB on the wire) must error out promptly at the real cap."""
     inner = zlib.compress(bytes(1 << 29), 9)
     wire = zlib.compress(inner, 9)
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
     objs[4] = b"<</Filter [/FlateDecode /FlateDecode] /Length %d>>\nstream\n%s\nendstream" % (
         len(wire),
         wire,
     )
-    objs[5] = _FONT
+    objs[5] = PDF_FONT
     t0 = time.thread_time()
     # the per-page decode guard contains the ValueError into a skipped
     # page, so a bomb-only PDF extracts to zero spans — what matters is
     # that it never inflates the 512 MiB and returns promptly
     try:
-        spans = extract_realpdf(_classic_pdf(objs))
+        spans = extract_realpdf(classic_pdf(objs))
         assert spans == []
     except Exception:
         pass

@@ -4,30 +4,14 @@ parity). Generator (corpus.render_text_png, own encoder) vs parser
 
 from __future__ import annotations
 
-import struct
-import zlib
-
 import pytest
 
-from documentconvert_spark.corpus import render_text_png
+from documentconvert_spark.corpus import encode_png, render_text_png
 from documentconvert_spark.kernels.miniocr import (
     FONT_5X7,
     decode_png_gray,
     ocr_png_text,
 )
-
-
-def _chunk(typ: bytes, body: bytes) -> bytes:
-    return (struct.pack(">I", len(body)) + typ + body
-            + struct.pack(">I", zlib.crc32(typ + body) & 0xFFFFFFFF))
-
-
-def _gray_png(w: int, h: int, raster: bytes) -> bytes:
-    """8-bit grayscale non-interlaced PNG around an already-filtered
-    raster (each scanline prefixed by its filter-type byte)."""
-    return (b"\x89PNG\r\n\x1a\n"
-            + _chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0))
-            + _chunk(b"IDAT", zlib.compress(raster)) + _chunk(b"IEND", b""))
 
 
 def _filter0(rows: list) -> bytes:
@@ -79,7 +63,7 @@ def test_all_scanline_filters_decode():
             out.append((v - pred) & 0xFF)
         prev = row
 
-    assert ocr_png_text(_gray_png(w, h, bytes(out))) == ["FILTER TEST 42"]
+    assert ocr_png_text(encode_png(w, h, bytes(out))) == ["FILTER TEST 42"]
 
 
 def test_photo_like_noise_returns_no_text():
@@ -91,7 +75,7 @@ def test_photo_like_noise_returns_no_text():
     w = h = 64
     raster = b"".join(
         b"\x00" + bytes(rng.randrange(256) for _ in range(w)) for _ in range(h))
-    assert ocr_png_text(_gray_png(w, h, raster)) == []
+    assert ocr_png_text(encode_png(w, h, raster)) == []
 
 
 def test_single_unknown_glyph_rejects_whole_image():
@@ -106,7 +90,7 @@ def test_single_unknown_glyph_rejects_whole_image():
     for dy in range(2):
         for dx in range(2):
             rows[8 + dy][8 + dx] = 0
-    assert ocr_png_text(_gray_png(w, h, _filter0(rows))) == []
+    assert ocr_png_text(encode_png(w, h, _filter0(rows))) == []
 
 
 def test_photo_input_aborts_on_first_rows():
@@ -119,12 +103,12 @@ def test_photo_input_aborts_on_first_rows():
     src = render_text_png(["FAST PATH"], scale=2)
     w, h, rows = decode_png_gray(src)
     rows[0][0] = 128  # one soft pixel in the margin: now tolerated
-    aa = _gray_png(w, h, _filter0(rows))
+    aa = encode_png(w, h, _filter0(rows))
     assert ocr_png_text(aa) == ["FAST PATH"]
     # a photo-like raster (every pixel mid-gray) aborts the bilevel
     # stream on its first row
     photo = [bytearray([128] * w) for _ in range(h)]
-    ph = _gray_png(w, h, _filter0(photo))
+    ph = encode_png(w, h, _filter0(photo))
     with pytest.raises(ValueError, match="bilevel"):
         decode_png_gray(ph, bilevel=True)
     assert ocr_png_text(ph) == []
@@ -142,7 +126,7 @@ def test_streamed_inflate_is_linear_in_raster():
 
     w = h = 1600  # 2.5 MP, under the 4 MP cap
     rows = [bytes([255] * w) for _ in range(h)]
-    png = _gray_png(w, h, _filter0(rows))
+    png = encode_png(w, h, _filter0(rows))
     t0 = time.monotonic()
     got_w, got_h, _ = decode_png_gray(png, bilevel=True)
     dt = time.monotonic() - t0
@@ -163,7 +147,7 @@ def test_truncated_and_garbage_inputs_contained():
         decode_png_gray(b"JFIF")
     # truncated IDAT (inflates to less than the raster) is contained too
     w, h, rows = decode_png_gray(good)
-    short = _gray_png(w, h, _filter0(rows)[: (w + 1) * (h // 2)])
+    short = encode_png(w, h, _filter0(rows)[: (w + 1) * (h // 2)])
     with pytest.raises(ValueError, match="truncated"):
         decode_png_gray(short)
 
@@ -171,21 +155,12 @@ def test_truncated_and_garbage_inputs_contained():
 def test_dimension_cap_charged_before_inflate():
     """A crafted IHDR claiming giant dimensions raises before any
     allocation proportional to the claim (charge-on-sight)."""
-    bomb = (b"\x89PNG\r\n\x1a\n"
-            + _chunk(b"IHDR", struct.pack(">IIBBBBB", 1 << 20, 1 << 20, 8, 0, 0, 0, 0))
-            + _chunk(b"IDAT", zlib.compress(b"\x00" * 100)) + _chunk(b"IEND", b""))
+    bomb = encode_png(1 << 20, 1 << 20, b"\x00" * 100)
     with pytest.raises(ValueError):
         decode_png_gray(bomb)
 
 
 # ------------------------------------------------- full PNG pixel matrix
-
-def _png(w, h, depth, ct, raster, plte=None, interlace=0):
-    ihdr = _chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, depth, ct, 0, 0, interlace))
-    p = _chunk(b"PLTE", plte) if plte is not None else b""
-    return (b"\x89PNG\r\n\x1a\n" + ihdr + p
-            + _chunk(b"IDAT", zlib.compress(raster)) + _chunk(b"IEND", b""))
-
 
 def _pack_bits(vals, depth, w):
     """Pack sub-byte samples MSB-first per scanline (w samples/row)."""
@@ -210,19 +185,19 @@ def test_palette_png_all_depths():
         raster = (_pack_bits(idx, depth, w) if depth < 8
                   else b"".join(b"\x00" + bytes(idx[y * w:(y + 1) * w])
                                 for y in range(h)))
-        dw, dh, rows = decode_png_gray(_png(w, h, depth, 3, raster, plte=plte))
+        dw, dh, rows = decode_png_gray(encode_png(w, h, raster, depth, 3, plte=plte))
         assert (dw, dh) == (w, h)
         assert all(rows[y][x] == lumas[idx[y * w + x]]
                    for y in range(h) for x in range(w))
     # 1-bit palette: two entries
     idx1 = [(x ^ y) & 1 for y in range(h) for x in range(w)]
     dw, dh, rows = decode_png_gray(
-        _png(w, h, 1, 3, _pack_bits(idx1, 1, w), plte=plte[:6]))
+        encode_png(w, h, _pack_bits(idx1, 1, w), 1, 3, plte=plte[:6]))
     assert all(rows[y][x] == (255 if idx1[y * w + x] else 0)
                for y in range(h) for x in range(w))
     # out-of-palette index is contained
     with pytest.raises(ValueError, match="palette"):
-        decode_png_gray(_png(w, h, 8, 3, _filter0([[9] * w] * h), plte=plte))
+        decode_png_gray(encode_png(w, h, _filter0([[9] * w] * h), 8, 3, plte=plte))
 
 
 def test_gray_subbyte_and_16bit():
@@ -230,7 +205,7 @@ def test_gray_subbyte_and_16bit():
     # 1/2/4-bit gray scale to full range
     for depth, maxv in ((1, 1), (2, 3), (4, 15)):
         vals = [(x + y) % (maxv + 1) for y in range(h) for x in range(w)]
-        dw, dh, rows = decode_png_gray(_png(w, h, depth, 0, _pack_bits(vals, depth, w)))
+        dw, dh, rows = decode_png_gray(encode_png(w, h, _pack_bits(vals, depth, w), depth, 0))
         scale = 255 // maxv
         assert all(rows[y][x] == vals[y * w + x] * scale
                    for y in range(h) for x in range(w))
@@ -241,7 +216,7 @@ def test_gray_subbyte_and_16bit():
     raster = b"".join(
         b"\x00" + b"".join(bytes((hi[y * w + x], 0x7F)) for x in range(w))
         for y in range(h))
-    _, _, rows = decode_png_gray(_png(w, h, 16, 0, raster))
+    _, _, rows = decode_png_gray(encode_png(w, h, raster, 16, 0))
     assert all(rows[y][x] == hi[y * w + x] for y in range(h) for x in range(w))
 
 
@@ -251,7 +226,7 @@ def test_gray_alpha_and_rgba16():
     raster = b"".join(
         b"\x00" + b"".join(bytes((g[y * w + x], 0x80)) for x in range(w))
         for y in range(h))
-    _, _, rows = decode_png_gray(_png(w, h, 8, 4, raster))
+    _, _, rows = decode_png_gray(encode_png(w, h, raster, 8, 4))
     assert all(rows[y][x] == g[y * w + x] for y in range(h) for x in range(w))
     # RGBA 16-bit: luma over the three high bytes, alpha ignored
     px = [(40, 80, 120, 200)] * (w * h)
@@ -259,7 +234,7 @@ def test_gray_alpha_and_rgba16():
         b"\x00" + b"".join(
             b"".join(bytes((c, 0x11)) for c in px[y * w + x]) for x in range(w))
         for y in range(h))
-    _, _, rows16 = decode_png_gray(_png(w, h, 16, 6, raster16))
+    _, _, rows16 = decode_png_gray(encode_png(w, h, raster16, 16, 6))
     want = (40 * 299 + 80 * 587 + 120 * 114) // 1000
     assert all(p == want for r in rows16 for p in r)
 
@@ -280,7 +255,7 @@ def test_adam7_interlaced_round_trip():
         for py in range(ph):
             raster += b"\x00" + bytes(ref[y0 + py * dy][x0 + px * dx]
                                       for px in range(pw))
-    dw, dh, rows = decode_png_gray(_png(w, h, 8, 0, bytes(raster), interlace=1))
+    dw, dh, rows = decode_png_gray(encode_png(w, h, bytes(raster), 8, 0, interlace=1))
     assert (dw, dh) == (w, h)
     assert [list(r) for r in rows] == ref
 
@@ -289,7 +264,7 @@ def test_invalid_ihdr_combinations_contained():
     raster = _filter0([[0] * 4] * 4)
     for depth, ct in ((16, 3), (2, 2), (4, 6), (3, 0), (8, 5)):
         with pytest.raises(ValueError, match="IHDR"):
-            decode_png_gray(_png(4, 4, depth, ct, raster))
+            decode_png_gray(encode_png(4, 4, raster, depth, ct))
 
 
 # -- antialiased renders (r4 generality increment) ----------------------------
@@ -495,19 +470,11 @@ def test_mixed_font_scale_per_band_inference():
     global scale the body bands' downsample failed and the whole image
     rejected. Exact-or-nothing survives: a band that matches at NO
     candidate scale rejects the image."""
-    import os
-    import sys
-
-    from documentconvert_spark.corpus import encode_gray_png, render_text_png
+    from documentconvert_spark.corpus import encode_gray_png
     from documentconvert_spark.kernels.miniocr import ocr_png_text
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    scripts_dir = os.path.join(repo, "scripts")
-    if scripts_dir not in sys.path:
-        sys.path.insert(0, scripts_dir)
     # the REAL fixture compositor — this test also pins the generator of
     # the committed fixture_ocr_mixed_scale.png golden
-    from gen_extra_fixtures import _vstack_grids, mixed_scale_png
+    from scripts.gen_extra_fixtures import _vstack_grids, mixed_scale_png
 
     def vstack(parts):
         w, h, rows = _vstack_grids(parts)

@@ -307,12 +307,7 @@ def test_run_media_cli_end_to_end(tmp_path):
         for y in range(2, 4 + f):
             g[y][:] = bytes(20)
     mono = [((i * 7) % 4001) - 2000 for i in range(2000)]
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from gen_extra_fixtures import encode_vp8l
-
-    from documentconvert_spark.corpus import encode_gray_png
-
-    from documentconvert_spark.corpus import encode_gif_anim
+    from documentconvert_spark.corpus import encode_gif_anim, encode_gray_png, encode_vp8l
 
     img = [bytearray(min(255, 30 + 3 * x + y) for x in range(48)) for y in range(24)]
     img_argb = [0xFF000000 | (v << 16) | (v << 8) | v for r in img for v in r]

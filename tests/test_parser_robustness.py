@@ -16,11 +16,14 @@ import time
 
 import pytest
 
+from documentconvert_spark.corpus import classic_pdf, det_zip, xlsx_zip
 from documentconvert_spark.kernels.detect import extract_office_any, extract_pdf_any
 
 REF = "/root/reference/test"
 
-pytestmark = pytest.mark.skipif(
+# only the two sweeps over the reference documents need the mount; every
+# other case builds its input in-test
+_needs_ref = pytest.mark.skipif(
     not os.path.isdir(REF), reason="reference sample corpus not mounted"
 )
 
@@ -42,6 +45,7 @@ def _assert_contained(kern, data: bytes, label: str) -> None:
     assert dt < _PER_CALL_BUDGET_S, f"{label}: parser took {dt:.1f}s on corrupted input"
 
 
+@_needs_ref
 @pytest.mark.parametrize("name", sorted(os.listdir(REF)) if os.path.isdir(REF) else [])
 def test_truncations_contained(name):
     with open(os.path.join(REF, name), "rb") as fh:
@@ -55,6 +59,7 @@ def test_truncations_contained(name):
         _assert_contained(kern, data[:cut], f"{name}@trunc{cut}")
 
 
+@_needs_ref
 @pytest.mark.parametrize("name", sorted(os.listdir(REF)) if os.path.isdir(REF) else [])
 def test_byte_flips_contained(name):
     with open(os.path.join(REF, name), "rb") as fh:
@@ -224,53 +229,23 @@ def test_cfb_difat_cycle_bounded():
 def test_xlsx_column_ref_clamped():
     """A cell ref r="ZZZZZZZZZZ1" decodes to column ~1.4e14; the row
     padding used to build a range() that long."""
-    import io
-    import zipfile
-
     from documentconvert_spark.kernels.miniooxml import extract_xlsx
 
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("[Content_Types].xml", "<Types/>")
-        z.writestr(
-            "xl/workbook.xml",
-            '<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" '
-            'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">'
-            '<sheets><sheet name="S1" sheetId="1" r:id="rId1"/></sheets></workbook>')
-        z.writestr(
-            "xl/_rels/workbook.xml.rels",
-            '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
-            '<Relationship Id="rId1" Type="t" Target="worksheets/sheet1.xml"/></Relationships>')
-        z.writestr(
-            "xl/worksheets/sheet1.xml",
-            '<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">'
-            '<sheetData><row r="1"><c r="ZZZZZZZZZZ1" t="inlineStr"><is><t>x</t></is></c></row>'
-            '</sheetData></worksheet>')
+    data = _xlsx_with_sheet(
+        '<row r="1"><c r="ZZZZZZZZZZ1" t="inlineStr"><is><t>x</t></is></c></row>')
     t0 = time.monotonic()
-    spans = extract_xlsx(buf.getvalue())
+    spans = extract_xlsx(data)
     assert time.monotonic() - t0 < 2.0
     assert any(s.kind == "table" for s in spans)
 
 
 def test_odf_space_run_clamped():
     """<text:s text:c="999999999999"/> used to allocate that many spaces."""
-    import io
-    import zipfile
-
     from documentconvert_spark.kernels.miniodf import extract_odf
 
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("mimetype", "application/vnd.oasis.opendocument.text")
-        z.writestr(
-            "content.xml",
-            '<office:document-content '
-            'xmlns:office="urn:oasis:names:tc:opendocument:xmlns:office:1.0" '
-            'xmlns:text="urn:oasis:names:tc:opendocument:xmlns:text:1.0">'
-            '<office:body><office:text><text:p>a<text:s text:c="999999999999"/>b'
-            '</text:p></office:text></office:body></office:document-content>')
+    data = _odf_with_content('<text:p>a<text:s text:c="999999999999"/>b</text:p>')
     t0 = time.monotonic()
-    spans = extract_odf(buf.getvalue())
+    spans = extract_odf(data)
     assert time.monotonic() - t0 < 2.0
     assert spans and all(len(s.text) < 10000 for s in spans)
 
@@ -368,27 +343,10 @@ def test_cfb_difat_fanout_bounded():
     assert len(cfb.fat) <= max_sectors + 128
 
 
-def _xlsx_with_sheet(sheet_xml: str) -> bytes:
-    import io
-    import zipfile
-
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("[Content_Types].xml", "<Types/>")
-        z.writestr(
-            "xl/workbook.xml",
-            '<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" '
-            'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">'
-            '<sheets><sheet name="S1" sheetId="1" r:id="rId1"/></sheets></workbook>')
-        z.writestr(
-            "xl/_rels/workbook.xml.rels",
-            '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
-            '<Relationship Id="rId1" Type="t" Target="worksheets/sheet1.xml"/></Relationships>')
-        z.writestr(
-            "xl/worksheets/sheet1.xml",
-            '<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">'
-            f'<sheetData>{sheet_xml}</sheetData></worksheet>')
-    return buf.getvalue()
+def _xlsx_with_sheet(sheet_data: str) -> bytes:
+    return xlsx_zip(
+        '<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">'
+        f'<sheetData>{sheet_data}</sheetData></worksheet>')
 
 
 def test_xlsx_padding_expansion_capped(monkeypatch):
@@ -424,21 +382,16 @@ def test_xlsx_out_of_range_ref_not_aliased():
 
 
 def _odf_with_content(body_xml: str) -> bytes:
-    import io
-    import zipfile
-
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("mimetype", "application/vnd.oasis.opendocument.text")
-        z.writestr(
-            "content.xml",
-            '<office:document-content '
-            'xmlns:office="urn:oasis:names:tc:opendocument:xmlns:office:1.0" '
-            'xmlns:text="urn:oasis:names:tc:opendocument:xmlns:text:1.0" '
-            'xmlns:table="urn:oasis:names:tc:opendocument:xmlns:table:1.0">'
-            f'<office:body><office:text>{body_xml}</office:text>'
-            '</office:body></office:document-content>')
-    return buf.getvalue()
+    return det_zip([
+        ("mimetype", "application/vnd.oasis.opendocument.text"),
+        ("content.xml",
+         '<office:document-content '
+         'xmlns:office="urn:oasis:names:tc:opendocument:xmlns:office:1.0" '
+         'xmlns:text="urn:oasis:names:tc:opendocument:xmlns:text:1.0" '
+         'xmlns:table="urn:oasis:names:tc:opendocument:xmlns:table:1.0">'
+         f'<office:body><office:text>{body_xml}</office:text>'
+         '</office:body></office:document-content>'),
+    ])
 
 
 def test_odf_cumulative_space_runs_capped(monkeypatch):
@@ -496,9 +449,7 @@ def test_xlsx_budget_charged_before_row_join(monkeypatch):
     row's "\\t".join has materialized: N cells all referencing one big
     shared string (legal under the per-member zip cap) would otherwise
     allocate N x len(string) before the first check."""
-    import io
     import tracemalloc
-    import zipfile
 
     import pytest as _pytest
 
@@ -507,30 +458,16 @@ def test_xlsx_budget_charged_before_row_join(monkeypatch):
 
     monkeypatch.setattr(limits, "MAX_DECODED_BYTES", 60_000)
     big = "S" * 50_000
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        z.writestr("[Content_Types].xml", "<Types/>")
-        z.writestr(
-            "xl/workbook.xml",
-            '<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" '
-            'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">'
-            '<sheets><sheet name="S1" sheetId="1" r:id="rId1"/></sheets></workbook>')
-        z.writestr(
-            "xl/_rels/workbook.xml.rels",
-            '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
-            '<Relationship Id="rId1" Type="t" Target="worksheets/sheet1.xml"/></Relationships>')
-        z.writestr(
-            "xl/sharedStrings.xml",
+    data = xlsx_zip(
+        '<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">'
+        '<sheetData><row>' + '<c t="s"><v>0</v></c>' * 200 + '</row>'
+        '</sheetData></worksheet>',
+        shared_strings_xml=(
             '<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">'
-            f'<si><t>{big}</t></si></sst>')
-        z.writestr(
-            "xl/worksheets/sheet1.xml",
-            '<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">'
-            '<sheetData><row>' + '<c t="s"><v>0</v></c>' * 200 + '</row>'
-            '</sheetData></worksheet>')
+            f'<si><t>{big}</t></si></sst>'))
     tracemalloc.start()
     with _pytest.raises(ValueError):
-        extract_xlsx(buf.getvalue())
+        extract_xlsx(data)
     _cur, peak = tracemalloc.get_traced_memory()
     tracemalloc.stop()
     # 200 cells x 50 KB = 10 MB if the join ran first; budget-first keeps
@@ -568,22 +505,22 @@ def _xls_with_cells(cells, sst_strings):
     """Minimal BIFF8 .xls: one sheet, LABELSST cells -> shared strings."""
     import struct
 
-    from tests.test_legacy_formats import _biff_rec, _xl_str8, write_cfb
+    from documentconvert_spark.corpus import biff_rec, write_cfb, xl_str8
 
     sst_payload = struct.pack("<II", len(sst_strings), len(sst_strings))
     for s in sst_strings:
         sst_payload += struct.pack("<HB", len(s), 0) + s.encode("latin-1")
-    bof = _biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0005, 0, 0, 0, 0))
-    boundsheet = struct.pack("<IBB", 0, 0, 0) + _xl_str8("Data")
-    globals_part = (bof + _biff_rec(0x0085, boundsheet)
-                    + _biff_rec(0x00FC, sst_payload) + _biff_rec(0x000A, b""))
-    sheet = _biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0010, 0, 0, 0, 0))
+    bof = biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0005, 0, 0, 0, 0))
+    boundsheet = struct.pack("<IBB", 0, 0, 0) + xl_str8("Data")
+    globals_part = (bof + biff_rec(0x0085, boundsheet)
+                    + biff_rec(0x00FC, sst_payload) + biff_rec(0x000A, b""))
+    sheet = biff_rec(0x0809, struct.pack("<HHHHII", 0x0600, 0x0010, 0, 0, 0, 0))
     for r, c, isst in cells:
-        sheet += _biff_rec(0x00FD, struct.pack("<HHHI", r, c, 0, isst))
-    sheet += _biff_rec(0x000A, b"")
+        sheet += biff_rec(0x00FD, struct.pack("<HHHI", r, c, 0, isst))
+    sheet += biff_rec(0x000A, b"")
     fixed = struct.pack("<I", len(globals_part)) + boundsheet[4:]
-    globals_part = (bof + _biff_rec(0x0085, fixed)
-                    + _biff_rec(0x00FC, sst_payload) + _biff_rec(0x000A, b""))
+    globals_part = (bof + biff_rec(0x0085, fixed)
+                    + biff_rec(0x00FC, sst_payload) + biff_rec(0x000A, b""))
     return write_cfb([("Workbook", globals_part + sheet)])
 
 
@@ -636,7 +573,7 @@ def test_doc_overlapping_pieces_budget(monkeypatch):
 
     from documentconvert_spark.kernels import limits
     from documentconvert_spark.kernels.minidoc import extract_doc
-    from tests.test_legacy_formats import write_cfb
+    from documentconvert_spark.corpus import write_cfb
 
     monkeypatch.setattr(limits, "MAX_DECODED_BYTES", 60_000)
     word = bytearray(40_000)
@@ -670,7 +607,6 @@ def test_pdf_form_breadth_amplification_bounded(monkeypatch):
     no error row), and FAST: the time bound is the security property."""
     from documentconvert_spark.kernels import limits
     from documentconvert_spark.kernels.realpdf import extract_realpdf
-    from tests.test_realpdf_features import _classic_pdf
 
     monkeypatch.setattr(limits, "MAX_DECODED_BYTES", 100_000)
 
@@ -693,7 +629,7 @@ def test_pdf_form_breadth_amplification_bounded(monkeypatch):
         7: form(None, leaf_body),
     }
     t0 = time.monotonic()
-    spans = extract_realpdf(_classic_pdf(objects))  # must not raise
+    spans = extract_realpdf(classic_pdf(objects))  # must not raise
     assert time.monotonic() - t0 < 3.0
     # nothing but no-op graphics state was interpreted before exhaustion
     assert spans == []

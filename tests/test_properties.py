@@ -133,12 +133,7 @@ def test_avi_roundtrip_property(w, h, n, fps, rnd):
 def test_vp8l_roundtrip_property(w, h, shape, rnd):
     """encode_vp8l ↔ decode_vp8l over ARBITRARY ARGB rasters and encoder
     shapes: lossless, so every shape must round-trip pixel-exact."""
-    import os as _os
-    import sys as _sys
-
-    _sys.path.insert(0, _os.path.join(_os.path.dirname(__file__), "..", "scripts"))
-    from gen_extra_fixtures import encode_vp8l
-
+    from documentconvert_spark.corpus import encode_vp8l
     from documentconvert_spark.kernels.miniwebp import decode_webp_gray, decode_vp8l
 
     argb = [(rnd.randrange(256) << 24) | rnd.getrandbits(24) for _ in range(w * h)]
@@ -168,15 +163,9 @@ def test_vp8l_roundtrip_property(w, h, shape, rnd):
 )
 @settings(max_examples=60, deadline=None)
 def test_tiff_roundtrip_property(w, h, shape, rnd):
-    """_tiff_encode ↔ decode_tiff_gray over ARBITRARY gray rasters,
+    """tiff_encode ↔ decode_tiff_gray over ARBITRARY gray rasters,
     every compression mode and both byte orders, multi-strip."""
-    import os as _os
-    import sys as _sys
-
-    _sys.path.insert(0, _os.path.join(_os.path.dirname(__file__), "..", "scripts"))
-    from gen_extra_fixtures import _packbits_encode, _tiff_encode
-    from tests.test_realpdf_features import _lzw_encode
-
+    from documentconvert_spark.corpus import _lzw_encode, packbits_encode, tiff_encode
     from documentconvert_spark.kernels.raster import decode_tiff_gray
 
     comp, end = shape
@@ -188,9 +177,9 @@ def test_tiff_roundtrip_property(w, h, shape, rnd):
         if comp == 5:
             raw = _lzw_encode(raw)
         elif comp == 32773:
-            raw = _packbits_encode(raw)
+            raw = packbits_encode(raw)
         strips.append(raw)
-    dw, dh, out = decode_tiff_gray(_tiff_encode(end, w, h, 1, strips, rps, comp=comp))
+    dw, dh, out = decode_tiff_gray(tiff_encode(end, w, h, 1, strips, rps, comp=comp))
     assert (dw, dh) == (w, h)
     assert all(bytes(out[y]) == rows[y] for y in range(h))
 
@@ -206,17 +195,10 @@ def test_tiff_roundtrip_property(w, h, shape, rnd):
 def test_png_matrix_roundtrip_property(w, h, shape, rnd):
     """Hand-packed PNG rasters across the pixel matrix (depth, color
     type, interlace) must decode back to the exact expected luma."""
-    import struct as _st
-    import zlib as _zl
-
+    from documentconvert_spark.corpus import encode_png
     from documentconvert_spark.kernels.miniocr import decode_png_gray
 
     depth, ct, inter = shape
-
-    def chunk(t, body):
-        return (_st.pack(">I", len(body)) + t + body
-                + _st.pack(">I", _zl.crc32(t + body) & 0xFFFFFFFF))
-
     channels = {0: 1, 2: 3, 3: 1, 4: 2}[ct]
     maxv = (1 << depth) - 1 if depth < 8 else 255
     vals = [rnd.randrange(maxv + 1) for _ in range(w * h)]
@@ -272,11 +254,8 @@ def test_png_matrix_roundtrip_property(w, h, shape, rnd):
             sub = [(x0 + px * dx, y0 + py * dy) for px in range(pw)]
             line, _ = pack_rows(sub)
             raster += line
-    data = (b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", _st.pack(">IIBBBBB", w, h, depth, ct, 0, 0, inter))
-            + (chunk(b"PLTE", plte) if plte else b"")
-            + chunk(b"IDAT", _zl.compress(bytes(raster)))
-            + chunk(b"IEND", b""))
+    data = encode_png(w, h, bytes(raster), depth=depth, color_type=ct, plte=plte,
+                      interlace=inter)
     dw, dh, rows = decode_png_gray(data)
     assert (dw, dh) == (w, h)
     assert all(rows[y][x] == want[y * w + x] for y in range(h) for x in range(w))

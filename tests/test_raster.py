@@ -3,7 +3,7 @@ real-codec pixel-stats path (kernels/minijpeg.py, kernels/raster.py,
 ops/multimodal.real_raster_stats).
 
 Validation strategy mirrors the OCR pair: generator-side encoders
-(corpus.render_text_jpeg, test-local GIF/BMP writers) are independent
+(corpus.render_text_jpeg, corpus.gif_encode/encode_bmp24) are independent
 implementations of the same public specs the decoders parse, so a
 round-trip equality is two implementations agreeing — plus carved JPEGs
 and PNGs that no encoder of this repository wrote, as encoder-independent
@@ -20,11 +20,18 @@ import glob
 import os
 import random
 import struct
-import sys
 
 import pytest
 
-from documentconvert_spark.corpus import _render_text_grid, render_text_jpeg
+from documentconvert_spark.corpus import (
+    _lzw_encode,
+    _render_text_grid,
+    encode_bmp24,
+    gif_encode,
+    render_text_jpeg,
+    render_text_tiff,
+    tiff_encode,
+)
 from documentconvert_spark.kernels.media import (
     decode_wav_samples,
     extract_media_files,
@@ -43,67 +50,6 @@ TEST_DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 
 
 # ------------------------------------------------------------------ helpers
-# Test-local encoders: independent spec implementations for round-trips.
-
-def gif_encode(w, h, idx, pal_rgb, interlace=False, min_code=None):
-    if min_code is None:
-        min_code = max(2, (max(idx).bit_length() if idx else 2))
-    clear, end = 1 << min_code, (1 << min_code) + 1
-    d = {bytes([i]): i for i in range(1 << min_code)}
-    nxt, width = end + 1, min_code + 1
-    emitted = [(clear, width)]
-    prev = b""
-    for px in idx:
-        cur = prev + bytes([px])
-        if cur in d:
-            prev = cur
-            continue
-        emitted.append((d[prev], width))
-        d[cur] = nxt
-        if nxt == (1 << width) and width < 12:
-            width += 1
-        nxt += 1
-        if nxt >= 4096:  # dictionary full: reset (exercises decoder clear)
-            emitted.append((clear, width))
-            d = {bytes([i]): i for i in range(1 << min_code)}
-            nxt, width = end + 1, min_code + 1
-        prev = bytes([px])
-    if prev:
-        emitted.append((d[prev], width))
-    emitted.append((end, width))
-    acc = nbits = 0
-    bs = bytearray()
-    for code, wd in emitted:
-        acc |= code << nbits
-        nbits += wd
-        while nbits >= 8:
-            bs.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-    if nbits:
-        bs.append(acc & 0xFF)
-    ncol = 1 << min_code
-    hdr = b"GIF89a" + struct.pack("<HHBBB", w, h, 0x80 | (min_code - 1), 0, 0)
-    gct = b"".join(bytes(c) for c in (pal_rgb + [(0, 0, 0)] * ncol)[:ncol])
-    img = b"\x2C" + struct.pack("<HHHH", 0, 0, w, h) + bytes([0x40 if interlace else 0])
-    data = bytes([min_code])
-    for i in range(0, len(bs), 255):
-        chunk = bs[i:i + 255]
-        data += bytes([len(chunk)]) + bytes(chunk)
-    data += b"\x00"
-    return hdr + gct + img + data + b"\x3B"
-
-
-def bmp24_encode(w, h, pix):
-    stride = ((24 * w + 31) // 32) * 4
-    body = b""
-    for y in range(h - 1, -1, -1):
-        line = b"".join(bytes((b, g, r)) for r, g, b in pix[y])
-        body += line + b"\x00" * (stride - len(line))
-    return (b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
-            + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 0, 0, 0, 0)
-            + body)
-
 
 def luma(r, g, b):
     return (r * 299 + g * 587 + b * 114) // 1000
@@ -258,7 +204,7 @@ def test_bmp24_round_trip():
     w, h = 31, 17
     pix = [[(rng.randrange(256), rng.randrange(256), rng.randrange(256))
             for _ in range(w)] for _ in range(h)]
-    bw, bh, rows = decode_bmp_gray(bmp24_encode(w, h, pix))
+    bw, bh, rows = decode_bmp_gray(encode_bmp24(w, h, pix))
     assert (bw, bh) == (w, h)
     assert all(rows[y][x] == luma(*pix[y][x]) for y in range(h) for x in range(w))
 
@@ -301,7 +247,7 @@ def test_bmp_palette_and_1bit():
 
 def test_bmp_truncated_raises():
     pix = [[(1, 2, 3)] * 4] * 4
-    data = bmp24_encode(4, 4, pix)
+    data = encode_bmp24(4, 4, pix)
     with pytest.raises(ValueError):
         decode_bmp_gray(data[:30])
     with pytest.raises(ValueError, match="truncated pixel"):
@@ -309,23 +255,15 @@ def test_bmp_truncated_raises():
 
 
 # ------------------------------------------------------------------ TIFF
-# Round-trips pair the generator-side encoders (scripts/gen_extra_fixtures:
-# independent TIFF 6.0 writers — LZW/PackBits/strip assembly) against the
-# from-scratch decoder, same two-implementations strategy as GIF/BMP.
-
-def _fixture_mods():
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
-    import gen_extra_fixtures as g
-
-    return g
-
+# Round-trips pair the generator-side encoders (corpus: independent TIFF
+# 6.0 writers — LZW/PackBits/strip assembly) against the from-scratch
+# decoder, same two-implementations strategy as GIF/BMP.
 
 def test_tiff_text_lzw_predictor_round_trip():
     from documentconvert_spark.kernels.raster import decode_tiff_gray
 
-    g = _fixture_mods()
     lines = ["CRATE 88 FRAGILE", "THIS SIDE UP"]
-    data = g.render_text_tiff(lines, scale=2)
+    data = render_text_tiff(lines, scale=2)
     gw, gh, grid = _render_text_grid(lines, 2, 8)
     w, h, rows = decode_tiff_gray(data)
     assert (w, h) == (gw, gh)
@@ -334,11 +272,10 @@ def test_tiff_text_lzw_predictor_round_trip():
     assert fmt == "tiff"
 
 
-def test_tiff_palette_packbits_partial_strip():
+def test_tiff_palette_packbits_partial_strip(extra_doc):
     from documentconvert_spark.kernels.raster import decode_tiff_gray
 
-    g = _fixture_mods()
-    data = g._tiff_fixture()  # 90×60, rps=13 → last strip holds 8 rows
+    data = extra_doc("fixture_mosaic.tiff")  # 90×60, rps=13 → last strip holds 8 rows
     w, h, rows = decode_tiff_gray(data)
     assert (w, h) == (90, 60)
     # recompute expected luma through the 16-bit color map fold
@@ -354,7 +291,6 @@ def test_tiff_palette_packbits_partial_strip():
 def test_tiff_bilevel_polarities_and_rgb():
     from documentconvert_spark.kernels.raster import decode_tiff_gray
 
-    g = _fixture_mods()
     w, h = 21, 6
     bits = bytearray()
     for y in range(h):
@@ -364,9 +300,9 @@ def test_tiff_bilevel_polarities_and_rgb():
                 line[x >> 3] |= 1 << (7 - (x & 7))
         bits += line
     # photometric 0 (WhiteIsZero): set bit = black
-    _, _, r0 = decode_tiff_gray(g._tiff_encode("<", w, h, 0, [bytes(bits)], h, bps=1))
+    _, _, r0 = decode_tiff_gray(tiff_encode("<", w, h, 0, [bytes(bits)], h, bps=1))
     # photometric 1 (BlackIsZero): set bit = white
-    _, _, r1 = decode_tiff_gray(g._tiff_encode(">", w, h, 1, [bytes(bits)], h, bps=1))
+    _, _, r1 = decode_tiff_gray(tiff_encode(">", w, h, 1, [bytes(bits)], h, bps=1))
     for y in range(h):
         for x in range(w):
             lit = (x + y) % 4 == 0
@@ -374,7 +310,7 @@ def test_tiff_bilevel_polarities_and_rgb():
             assert r1[y][x] == (255 if lit else 0)
     # chunky RGB, big-endian, uncompressed
     rgb = bytes(v for y in range(4) for x in range(5) for v in (x * 40, y * 50, 77))
-    _, _, rr = decode_tiff_gray(g._tiff_encode(">", 5, 4, 2, [rgb], 4, spp=3))
+    _, _, rr = decode_tiff_gray(tiff_encode(">", 5, 4, 2, [rgb], 4, spp=3))
     assert all(rr[y][x] == (x * 40 * 299 + y * 50 * 587 + 77 * 114) // 1000
                for y in range(4) for x in range(5))
 
@@ -392,21 +328,20 @@ def test_tiff_packbits_noop_byte():
 def test_tiff_malformed_contained():
     from documentconvert_spark.kernels.raster import decode_tiff_gray
 
-    g = _fixture_mods()
-    good = g.render_text_tiff(["OK 1"], scale=2)
+    good = render_text_tiff(["OK 1"], scale=2)
     with pytest.raises(ValueError, match="magic"):
         decode_tiff_gray(b"II+\x00" + good[4:])
     with pytest.raises(ValueError, match="truncated IFD"):
         decode_tiff_gray(good[:4] + struct.pack(">I", len(good) + 9999) + good[8:])
     raw = bytes(range(16)) * 2
     with pytest.raises(ValueError, match="compression"):
-        decode_tiff_gray(g._tiff_encode("<", 8, 4, 1, [raw], 4, comp=6))
+        decode_tiff_gray(tiff_encode("<", 8, 4, 1, [raw], 4, comp=6))
     with pytest.raises(ValueError, match="short strip"):
-        decode_tiff_gray(g._tiff_encode("<", 8, 5, 1, [raw], 5))
+        decode_tiff_gray(tiff_encode("<", 8, 5, 1, [raw], 5))
     with pytest.raises(ValueError, match="dimensions over cap"):
-        decode_tiff_gray(g._tiff_encode("<", 1 << 16, 1 << 16, 1, [raw], 4))
+        decode_tiff_gray(tiff_encode("<", 1 << 16, 1 << 16, 1, [raw], 4))
     # strip offset past EOF: counts say more bytes than the file holds
-    bad = bytearray(g._tiff_encode("<", 8, 4, 1, [raw], 4))
+    bad = bytearray(tiff_encode("<", 8, 4, 1, [raw], 4))
     bad_tag = bad.find(struct.pack("<HH", 279, 4))
     struct.pack_into("<I", bad, bad_tag + 8, 1 << 24)
     with pytest.raises(ValueError, match="strip out of file"):
@@ -417,18 +352,16 @@ def test_tiff_lzw_strip_cap_and_aliased_strips():
     # strip offsets are file-controlled and may alias one high-expansion
     # LZW blob across many strips; the per-strip cap must stop each
     # decode at the strip's exact raster size (review finding)
-    from tests.test_realpdf_features import _lzw_encode
 
     from documentconvert_spark.kernels.raster import decode_tiff_gray
 
-    g = _fixture_mods()
     blob = _lzw_encode(bytes(100_000))  # expands far past any strip
-    data = g._tiff_encode("<", 8, 4, 1, [blob] * 4, 1, comp=5)
+    data = tiff_encode("<", 8, 4, 1, [blob] * 4, 1, comp=5)
     with pytest.raises(ValueError, match="over cap"):
         decode_tiff_gray(data)
 
 
-def test_tiff_ocr_pre_gates():
+def test_tiff_ocr_pre_gates(extra_doc):
     # palette photo TIFF bails on the ColorMap alone (no strip decode);
     # gray photo TIFF aborts at the first mid-gray strip
     from documentconvert_spark.kernels.miniocr import (
@@ -437,33 +370,31 @@ def test_tiff_ocr_pre_gates():
     )
     from documentconvert_spark.kernels.raster import decode_tiff_gray
 
-    g = _fixture_mods()
-    mosaic = g._tiff_fixture()
+    mosaic = extra_doc("fixture_mosaic.tiff")
     assert not _tiff_colormap_bilevel(mosaic)
     assert ocr_raster_text(mosaic) == []
     # gray gradient in 1-row strips: bilevel decode must abort early
     w, h = 64, 64
     strips = [bytes((x * 4) % 256 for x in range(w)) for _ in range(h)]
-    gray_photo = g._tiff_encode("<", w, h, 1, strips, 1)
+    gray_photo = tiff_encode("<", w, h, 1, strips, 1)
     with pytest.raises(ValueError, match="not a bilevel"):
         decode_tiff_gray(gray_photo, bilevel=True)
     assert ocr_raster_text(gray_photo) == []
     # and a clean text render still OCRs through the gated path
-    assert ocr_raster_text(g.render_text_tiff(["GATE OK 1"], scale=2)) == ["GATE OK 1"]
+    assert ocr_raster_text(render_text_tiff(["GATE OK 1"], scale=2)) == ["GATE OK 1"]
 
 
-def test_tiff_ocr_through_image_dispatch():
+def test_tiff_ocr_through_image_dispatch(extra_doc):
     from documentconvert_spark.kernels.detect import extract_image_any
     from documentconvert_spark.kernels.miniocr import ocr_raster_text
 
-    g = _fixture_mods()
-    data = g.render_text_tiff(["DOCK 9 BAY 4"], scale=3)
+    data = render_text_tiff(["DOCK 9 BAY 4"], scale=3)
     assert ocr_raster_text(data) == ["DOCK 9 BAY 4"]
     spans = extract_image_any(data)
     assert [s.kind for s in spans] == ["figure", "paragraph"]
     assert spans[1].text == "DOCK 9 BAY 4"
     # the photo-like palette TIFF decodes but stays figure-only
-    assert [s.kind for s in extract_image_any(g._tiff_fixture())] == ["figure"]
+    assert [s.kind for s in extract_image_any(extra_doc("fixture_mosaic.tiff"))] == ["figure"]
 
 
 # ------------------------------------------------------------------ WAV
@@ -513,7 +444,7 @@ def test_router_covers_four_formats_and_rejects_rest():
     pal = [(0, 0, 0), (255, 255, 255)]
     fmt, _, _, _ = decode_raster_gray(gif_encode(6, 4, [0, 1] * 12, pal, min_code=2))
     assert fmt == "gif"
-    fmt, _, _, _ = decode_raster_gray(bmp24_encode(4, 4, [[(9, 9, 9)] * 4] * 4))
+    fmt, _, _, _ = decode_raster_gray(encode_bmp24(4, 4, [[(9, 9, 9)] * 4] * 4))
     assert fmt == "bmp"
     fmt, _, _, _ = decode_raster_gray(render_text_jpeg(["HI"]))
     assert fmt == "jpeg"
@@ -694,14 +625,11 @@ def test_pixel_golden_matches_source_derived_stats():
     renders (gen_extra_fixtures.source_pixel_stats), breaking the
     self-referential oracle loop the r3 advice flagged: a decoder bug can
     no longer hide by re-baselining the golden."""
-    import os
-    import sys
-
     import pyarrow.parquet as pq
 
+    from scripts.gen_extra_fixtures import source_pixel_stats
+
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from gen_extra_fixtures import source_pixel_stats
 
     t = pq.read_table(os.path.join(
         repo, "documentconvert_spark", "resources", "expected_real_pixels.parquet"

@@ -10,7 +10,9 @@ names, attribute accesses, imports, and identifiers inside non-docstring
 string literals (the benchmark scripts run code snippets held in
 strings). Code that only tests reach gets wired into a job or query, or
 deleted together with its tests; the allowlist below names the few kept
-on purpose.
+on purpose. Private module-level names (leading underscore) follow the
+same rule with no allowlist: a helper only a test uses moves into that
+test.
 """
 
 from __future__ import annotations
@@ -68,7 +70,7 @@ def _references(stmt: ast.AST, docstrings: set[int]) -> set[str]:
     return out
 
 
-def _defined(stmt: ast.stmt) -> list[str]:
+def _defined(stmt: ast.stmt, private: bool) -> list[str]:
     if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
         names = [stmt.name]
     elif isinstance(stmt, ast.Assign):
@@ -77,7 +79,8 @@ def _defined(stmt: ast.stmt) -> list[str]:
         names = [stmt.target.id]
     else:
         names = []
-    return [n for n in names if not n.startswith("_")]
+    return [n for n in names
+            if n.startswith("_") == private and not (n.startswith("__") and n.endswith("__"))]
 
 
 def _qualname(path: Path, name: str) -> str:
@@ -87,7 +90,7 @@ def _qualname(path: Path, name: str) -> str:
     return ".".join([*parts, name])
 
 
-def test_every_public_package_symbol_is_reached_from_non_test_code():
+def _unreached(private: bool) -> list[str]:
     refs: dict[tuple[Path, int], set[str]] = {}
     defs: list[tuple[Path, int, str]] = []
     for path in _non_test_sources():
@@ -97,15 +100,23 @@ def test_every_public_package_symbol_is_reached_from_non_test_code():
         for i, stmt in enumerate(tree.body):
             refs[(path, i)] = _references(stmt, docstrings)
             if in_package:
-                defs += [(path, i, name) for name in _defined(stmt)]
-
-    unreached = sorted(
+                defs += [(path, i, name) for name in _defined(stmt, private)]
+    return sorted(
         _qualname(path, name)
         for path, i, name in defs
         if not any(name in r for key, r in refs.items() if key != (path, i))
     )
+
+
+def test_every_public_package_symbol_is_reached_from_non_test_code():
+    unreached = _unreached(private=False)
     assert unreached == sorted(ALLOWLIST), (
         "unreached (wire in or delete): "
         f"{sorted(set(unreached) - set(ALLOWLIST))}; "
         f"stale allowlist entries: {sorted(set(ALLOWLIST) - set(unreached))}"
     )
+
+
+def test_every_private_package_name_is_referenced_from_non_test_code():
+    unreferenced = _unreached(private=True)
+    assert unreferenced == [], f"unreferenced private names (delete or move into their test): {unreferenced}"

@@ -12,39 +12,22 @@ import zlib
 
 import pytest
 
+from documentconvert_spark.corpus import (
+    PDF_FONT,
+    _ENC_CONTENT,
+    _build_encrypted,
+    _lzw_encode,
+    aes256_pdf,
+    aesv2_pdf,
+    cidfont_pdf,
+    classic_pdf,
+    encrypt_pdf,
+    lzw_pdf,
+    page_tree,
+    stream_obj,
+    ttf_with_cmap4,
+)
 from documentconvert_spark.kernels.realpdf import extract_realpdf
-
-
-def _classic_pdf(objects: dict[int, bytes]) -> bytes:
-    """Assemble a classic-xref PDF from {num: object body (after 'N 0 obj')}."""
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = {}
-    for num in sorted(objects):
-        offsets[num] = len(out)
-        out += b"%d 0 obj\n" % num + objects[num] + b"\nendobj\n"
-    xref_at = len(out)
-    maxn = max(objects) + 1
-    out += b"xref\n0 %d\n" % maxn
-    out += b"0000000000 65535 f \n"
-    for n in range(1, maxn):
-        out += b"%010d 00000 n \n" % offsets.get(n, 0)
-    out += b"trailer\n<</Size %d /Root 1 0 R>>\nstartxref\n%d\n%%%%EOF\n" % (maxn, xref_at)
-    return bytes(out)
-
-
-def _page_tree(kids: list[int]) -> dict[int, bytes]:
-    kid_refs = b" ".join(b"%d 0 R" % k for k in kids)
-    return {
-        1: b"<</Type /Catalog /Pages 2 0 R>>",
-        2: b"<</Type /Pages /Kids [%s] /Count %d>>" % (kid_refs, len(kids)),
-    }
-
-
-def _stream_obj(d: bytes, body: bytes) -> bytes:
-    return b"<<%s /Length %d>>\nstream\n%s\nendstream" % (d, len(body), body)
-
-
-_FONT = b"<</Type /Font /Subtype /Type1 /BaseFont /Helvetica>>"
 
 
 def test_literal_strings_and_tj_arrays():
@@ -52,24 +35,24 @@ def test_literal_strings_and_tj_arrays():
         b"BT /F1 12 Tf 72 720 Td (Hello \\(escaped\\) \\110i) Tj "
         b"0 -14 Td [(Ker)-120(ned)] TJ ET"
     )
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>> /MediaBox [0 0 612 792]>>"
-    objs[4] = _stream_obj(b"", content)
-    objs[5] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[4] = stream_obj(b"", content)
+    objs[5] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     text = "\n".join(s.text for s in spans)
     assert "Hello (escaped) Hi" in text  # \110 octal = 'H'
     assert "Kerned" in text              # TJ parts concatenated
 
 
 def test_multipage_reading_order_and_heading():
-    objs = _page_tree([3, 6])
+    objs = page_tree([3, 6])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 9 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", b"BT /F1 24 Tf 72 700 Td (Title Line) Tj ET BT /F1 10 Tf 72 650 Td (page one body text) Tj ET")
+    objs[4] = stream_obj(b"", b"BT /F1 24 Tf 72 700 Td (Title Line) Tj ET BT /F1 10 Tf 72 650 Td (page one body text) Tj ET")
     objs[6] = b"<</Type /Page /Parent 2 0 R /Contents 7 0 R /Resources <</Font <</F1 9 0 R>>>>>>"
-    objs[7] = _stream_obj(b"", b"BT /F1 10 Tf 72 700 Td (page two body text) Tj ET")
-    objs[9] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[7] = stream_obj(b"", b"BT /F1 10 Tf 72 700 Td (page two body text) Tj ET")
+    objs[9] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     assert spans[0].kind == "heading" and spans[0].text == "Title Line"
     texts = [s.text for s in spans]
     assert texts.index("page one body text") < texts.index("page two body text")
@@ -77,27 +60,27 @@ def test_multipage_reading_order_and_heading():
 
 def test_differences_encoding():
     # code 65 remapped to 'bullet', 66 to uni4E2D
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", b"BT /F1 10 Tf 72 700 Td (AB) Tj ET")
+    objs[4] = stream_obj(b"", b"BT /F1 10 Tf 72 700 Td (AB) Tj ET")
     objs[5] = (b"<</Type /Font /Subtype /Type1 /BaseFont /Custom "
                b"/Encoding <</Differences [65 /bullet /uni4E2D]>>>>")
-    spans = extract_realpdf(_classic_pdf(objs))
+    spans = extract_realpdf(classic_pdf(objs))
     assert spans[0].text == "•中"
 
 
 def test_form_xobject_recursion_and_image_figure():
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
                b"/Resources <</Font <</F1 8 0 R>> /XObject <</Fm1 5 0 R /Im1 6 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", b"BT /F1 10 Tf 72 700 Td (before form) Tj ET /Fm1 Do q 10 0 0 10 72 300 cm /Im1 Do Q")
+    objs[4] = stream_obj(b"", b"BT /F1 10 Tf 72 700 Td (before form) Tj ET /Fm1 Do q 10 0 0 10 72 300 cm /Im1 Do Q")
     inner = b"BT /F1 10 Tf 72 500 Td (inside form xobject) Tj ET"
-    objs[5] = _stream_obj(
+    objs[5] = stream_obj(
         b"/Type /XObject /Subtype /Form /Resources <</Font <</F1 8 0 R>>>>", inner
     )
-    objs[6] = _stream_obj(b"/Type /XObject /Subtype /Image /Width 4 /Height 4", b"\x00" * 16)
-    objs[8] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[6] = stream_obj(b"/Type /XObject /Subtype /Image /Width 4 /Height 4", b"\x00" * 16)
+    objs[8] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     text = " ".join(s.text for s in spans)
     assert "before form" in text and "inside form xobject" in text
     figs = [s for s in spans if s.kind == "figure"]
@@ -109,16 +92,16 @@ def test_form_xobject_recursion_and_image_figure():
 def test_flate_and_asciihex_filters():
     content = b"BT /F1 10 Tf 72 700 Td (compressed content line) Tj ET"
     flate = zlib.compress(content)
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
     objs[4] = b"<</Filter /FlateDecode /Length %d>>\nstream\n%s\nendstream" % (len(flate), flate)
-    objs[5] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[5] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     assert spans and spans[0].text == "compressed content line"
 
     hexed = content.hex().encode() + b">"
     objs[4] = b"<</Filter /ASCIIHexDecode /Length %d>>\nstream\n%s\nendstream" % (len(hexed), hexed)
-    spans = extract_realpdf(_classic_pdf(objs))
+    spans = extract_realpdf(classic_pdf(objs))
     assert spans and spans[0].text == "compressed content line"
 
 
@@ -185,10 +168,10 @@ def test_xref_stream_and_objstm():
 
 
 def test_scan_fallback_on_broken_xref():
-    pdf = _classic_pdf({**_page_tree([3]),
+    pdf = classic_pdf({**page_tree([3]),
                         3: b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>",
-                        4: _stream_obj(b"", b"BT /F1 10 Tf 72 700 Td (survives xref corruption) Tj ET"),
-                        5: _FONT})
+                        4: stream_obj(b"", b"BT /F1 10 Tf 72 700 Td (survives xref corruption) Tj ET"),
+                        5: PDF_FONT})
     # corrupt the startxref offset
     broken = pdf.replace(b"startxref\n", b"startxref\n9999999 ", 1)
     spans = extract_realpdf(broken)
@@ -214,11 +197,11 @@ def test_table_region_detection():
     # normal paragraph below (single column)
     rows.append(b"BT /F1 10 Tf 72 600 Td (after the table a normal paragraph) Tj ET")
     content = b"\n".join(rows)
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", content)
-    objs[5] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[4] = stream_obj(b"", content)
+    objs[5] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     kinds = [s.kind for s in spans]
     assert kinds == ["table", "paragraph"], kinds
     assert spans[0].text == "name\tqty\tprice\nbolt\t12\t0.30\nnut\t7\t0.10"
@@ -231,11 +214,11 @@ def test_two_column_header_not_a_table():
         b" BT /F1 10 Tf 400 770 Td (report title) Tj ET"
         b" BT /F1 10 Tf 72 700 Td (body paragraph text here) Tj ET"
     )
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", content)
-    objs[5] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[4] = stream_obj(b"", content)
+    objs[5] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     assert all(s.kind != "table" for s in spans)
     assert any("2026/01/01 report title" in s.text for s in spans)
 
@@ -352,52 +335,6 @@ def test_lone_sign_bytes_skipped_not_operators():
     assert not any(v in ("-", "..", "-x") for k, v in toks if k == "op")
 
 
-def _lzw_encode(data: bytes, early: int = 1) -> bytes:
-    """Minimal TIFF/PDF LZW encoder (test-local) for round-trip checks."""
-    codes: list[tuple[int, int]] = []
-    d = {bytes([i]): i for i in range(256)}
-    next_code, width = 258, 9
-    codes.append((256, width))
-    w = b""
-    for ch in data:
-        wc = w + bytes([ch])
-        if wc in d:
-            w = wc
-            continue
-        codes.append((d[w], width))
-        if next_code < 4096:
-            d[wc] = next_code
-            next_code += 1
-            if next_code + early - 1 >= (1 << width) and width < 12:
-                width += 1
-        w = bytes([ch])
-    if w:
-        codes.append((d[w], width))
-    codes.append((257, width))
-    buf = bits = 0
-    out = bytearray()
-    for code, wd in codes:
-        buf = (buf << wd) | code
-        bits += wd
-        while bits >= 8:
-            bits -= 8
-            out.append((buf >> bits) & 0xFF)
-    if bits:
-        out.append((buf << (8 - bits)) & 0xFF)
-    return bytes(out)
-
-
-def _lzw_pdf(content: bytes = b"BT /F1 10 Tf 72 700 Td (lzw content line) Tj ET") -> bytes:
-    """Single page whose content stream is LZW-encoded. Module-level
-    builder so the fuzzer can seed from it."""
-    objs = _page_tree([3])
-    objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    enc = _lzw_encode(content)
-    objs[4] = b"<</Filter /LZWDecode /Length %d>>\nstream\n%s\nendstream" % (len(enc), enc)
-    objs[5] = _FONT
-    return _classic_pdf(objs)
-
-
 def test_lzw_and_runlength_filters():
     """LZWDecode against the ISO 32000 §7.4.4.2 worked example, an
     encoder round-trip long enough to cross the 9→10-bit width switch,
@@ -415,18 +352,18 @@ def test_lzw_and_runlength_filters():
 
     # end-to-end: a page whose content stream is LZW-encoded
     content = b"BT /F1 10 Tf 72 700 Td (lzw content line) Tj ET"
-    spans = extract_realpdf(_lzw_pdf(content))
+    spans = extract_realpdf(lzw_pdf(content))
     assert spans and spans[0].text == "lzw content line"
 
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[5] = _FONT
+    objs[5] = PDF_FONT
     rle = b"".join(
         bytes([len(chunk) - 1]) + chunk
         for chunk in (content[i:i + 100] for i in range(0, len(content), 100))
     ) + b"\x80"
     objs[4] = b"<</Filter /RunLengthDecode /Length %d>>\nstream\n%s\nendstream" % (len(rle), rle)
-    spans = extract_realpdf(_classic_pdf(objs))
+    spans = extract_realpdf(classic_pdf(objs))
     assert spans and spans[0].text == "lzw content line"
 
 
@@ -438,174 +375,31 @@ def test_lzw_corrupt_stream_raises():
         _lzw_decode(bytes([0x80, 0x5F, 0xFF, 0xFF]))
 
 
-def _encrypt_pdf(r: int = 3) -> bytes:
-    """Build an RC4-encrypted single-page PDF (standard security handler,
-    empty user+owner passwords) per ISO 32000 §7.6.3 Algorithms 2/3/5."""
-    import hashlib
-
-    from documentconvert_spark.kernels.realpdf import _ENC_PAD, _rc4
-
-    length = 16 if r == 3 else 5
-    v = 2 if r == 3 else 1
-    p = -44  # typical print/copy-restricted permission bits
-    doc_id = b"\x01\x02" * 8
-
-    # Algorithm 3: /O from the (empty) owner password
-    h = hashlib.md5(_ENC_PAD).digest()
-    if r == 3:
-        for _ in range(50):
-            h = hashlib.md5(h[:length]).digest()
-    okey = h[:length]
-    o = _rc4(okey, _ENC_PAD)
-    if r == 3:
-        for i in range(1, 20):
-            o = _rc4(bytes(b ^ i for b in okey), o)
-
-    # Algorithm 2: file key from the (empty) user password
-    h = hashlib.md5(
-        _ENC_PAD + o[:32] + (p & 0xFFFFFFFF).to_bytes(4, "little") + doc_id).digest()
-    if r == 3:
-        for _ in range(50):
-            h = hashlib.md5(h[:length]).digest()
-    key = h[:length]
-
-    # Algorithms 4/5: /U
-    if r == 2:
-        u = _rc4(key, _ENC_PAD)
-    else:
-        u = _rc4(key, hashlib.md5(_ENC_PAD + doc_id).digest())
-        for i in range(1, 20):
-            u = _rc4(bytes(b ^ i for b in key), u)
-        u += b"\x00" * 16
-
-    def obj_key(num: int) -> bytes:
-        return hashlib.md5(
-            key + num.to_bytes(3, "little") + (0).to_bytes(2, "little")
-        ).digest()[: min(length + 5, 16)]
-
-    content = b"BT /F1 10 Tf 72 700 Td (decrypted text line) Tj ET"
-    objs6 = (b"<</Filter /Standard /V %d /R %d /Length %d /P %d "
-             b"/O <%s> /U <%s>>>" % (v, r, length * 8, p, o.hex().encode(), u.hex().encode()))
-    return _build_encrypted(objs6, _rc4(obj_key(4), content), doc_id=doc_id)
-
-
 @pytest.mark.parametrize("r", [2, 3])
 def test_rc4_encrypted_pdf(r):
     """RC4-encrypted PDFs (40-bit R2 and 128-bit R3, empty user password)
     decrypt and extract; §7.6.3 key derivation validated against /U."""
-    spans = extract_realpdf(_encrypt_pdf(r))
+    spans = extract_realpdf(encrypt_pdf(r))
     assert spans and spans[0].text == "decrypted text line"
 
 
 def test_password_protected_pdf_rejected():
     """A non-empty user password (garbage /U) must raise — wrong-key RC4
     output must never be parsed as content."""
-    data = _encrypt_pdf(3)
+    data = encrypt_pdf(3)
     u_at = data.find(b"/U <") + 4
     garbled = data[:u_at] + b"00" * 2 + data[u_at + 4:]
     with pytest.raises(ValueError, match="password"):
         extract_realpdf(garbled)
 
 
-def _build_encrypted(objs6: bytes, enc_content: bytes, trailer_extra: bytes = b"",
-                     doc_id: bytes = b"\x01\x02" * 8) -> bytes:
-    objs = _page_tree([3])
-    objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = b"<</Length %d>>\nstream\n%s\nendstream" % (len(enc_content), enc_content)
-    objs[5] = _FONT
-    objs[6] = objs6
-    out = bytearray(b"%PDF-1.6\n")
-    offsets = {}
-    for num in sorted(objs):
-        offsets[num] = len(out)
-        out += b"%d 0 obj\n" % num + objs[num] + b"\nendobj\n"
-    xref_at = len(out)
-    maxn = max(objs) + 1
-    out += b"xref\n0 %d\n" % maxn + b"0000000000 65535 f \n"
-    for n in range(1, maxn):
-        out += b"%010d 00000 n \n" % offsets.get(n, 0)
-    out += (b"trailer\n<</Size %d /Root 1 0 R /Encrypt 6 0 R /ID [<%s> <%s>]%s>>\n"
-            b"startxref\n%d\n%%%%EOF\n"
-            % (maxn, doc_id.hex().encode(), doc_id.hex().encode(), trailer_extra, xref_at))
-    return bytes(out)
-
-
-_CONTENT = b"BT /F1 10 Tf 72 700 Td (decrypted text line) Tj ET"
-
-
-def _aesv2_pdf() -> bytes:
-    """V4/R4 crypt-filter document with /AESV2: R3-style key derivation
-    plus the sAlT per-object key and IV-prefixed CBC streams. Module-level
-    builder so the fuzzer can seed from it."""
-    import hashlib
-
-    from documentconvert_spark.kernels.realpdf import (
-        _ENC_PAD, _aes_cbc_encrypt, _rc4)
-
-    doc_id = b"\x01\x02" * 8
-    p = -3392
-    # empty owner password /O (Algorithm 3, R>=3)
-    h = hashlib.md5(_ENC_PAD).digest()
-    for _ in range(50):
-        h = hashlib.md5(h[:16]).digest()
-    okey = h[:16]
-    o = _rc4(okey, _ENC_PAD)
-    for i in range(1, 20):
-        o = _rc4(bytes(b ^ i for b in okey), o)
-    # file key (Algorithm 2)
-    h = hashlib.md5(
-        _ENC_PAD + o[:32] + (p & 0xFFFFFFFF).to_bytes(4, "little") + doc_id).digest()
-    for _ in range(50):
-        h = hashlib.md5(h[:16]).digest()
-    key = h[:16]
-    # /U (Algorithm 5)
-    u = _rc4(key, hashlib.md5(_ENC_PAD + doc_id).digest())
-    for i in range(1, 20):
-        u = _rc4(bytes(b ^ i for b in key), u)
-    u += b"\x00" * 16
-    # per-object AES key for object 4 gen 0
-    ok4 = hashlib.md5(
-        key + (4).to_bytes(3, "little") + (0).to_bytes(2, "little") + b"sAlT"
-    ).digest()[:16]
-    iv = bytes(range(16))
-    pad = 16 - len(_CONTENT) % 16
-    enc = iv + _aes_cbc_encrypt(ok4, iv, _CONTENT + bytes([pad]) * pad)
-    objs6 = (b"<</Filter /Standard /V 4 /R 4 /Length 128 /P %d /O <%s> /U <%s> "
-             b"/CF <</StdCF <</CFM /AESV2 /AuthEvent /DocOpen /Length 16>>>> "
-             b"/StmF /StdCF /StrF /StdCF>>"
-             % (p, o.hex().encode(), u.hex().encode()))
-    return _build_encrypted(objs6, enc, doc_id=doc_id)
-
-
 def test_aesv2_encrypted_pdf():
-    spans = extract_realpdf(_aesv2_pdf())
+    spans = extract_realpdf(aesv2_pdf())
     assert spans and spans[0].text == "decrypted text line"
 
 
-def _aes256_pdf() -> bytes:
-    """V5/R6 (AES-256): Algorithm 2.B hash validates the empty user
-    password against /U, /UE unwraps the file key, streams are
-    IV-prefixed AES-256-CBC. Module-level builder so the fuzzer can seed
-    from it."""
-    from documentconvert_spark.kernels.realpdf import (
-        _aes_cbc_encrypt, _r6_hash)
-
-    file_key = bytes(range(32))
-    vsalt, ksalt = b"VALSALT!", b"KEYSALT!"
-    u = _r6_hash(b"", vsalt) + vsalt + ksalt
-    ue = _aes_cbc_encrypt(_r6_hash(b"", ksalt), bytes(16), file_key)
-    iv = bytes(range(16))
-    pad = 16 - len(_CONTENT) % 16
-    enc = iv + _aes_cbc_encrypt(file_key, iv, _CONTENT + bytes([pad]) * pad)
-    objs6 = (b"<</Filter /Standard /V 5 /R 6 /Length 256 /P -4 "
-             b"/O <%s> /U <%s> /OE <%s> /UE <%s> /Perms <000000000000000000000000> "
-             b"/CF <</StdCF <</CFM /AESV3 /Length 32>>>> /StmF /StdCF /StrF /StdCF>>"
-             % (b"00" * 48, u.hex().encode(), b"00" * 32, ue.hex().encode()))
-    return _build_encrypted(objs6, enc)
-
-
 def test_aes256_r6_encrypted_pdf():
-    spans = extract_realpdf(_aes256_pdf())
+    spans = extract_realpdf(aes256_pdf())
     assert spans and spans[0].text == "decrypted text line"
 
 
@@ -650,8 +444,8 @@ def test_aesv2_key_length_from_cf_dict_only():
         key + (4).to_bytes(3, "little") + (0).to_bytes(2, "little") + b"sAlT"
     ).digest()[:16]
     iv = bytes(range(16))
-    pad = 16 - len(_CONTENT) % 16
-    enc = iv + _aes_cbc_encrypt(ok4, iv, _CONTENT + bytes([pad]) * pad)
+    pad = 16 - len(_ENC_CONTENT) % 16
+    enc = iv + _aes_cbc_encrypt(ok4, iv, _ENC_CONTENT + bytes([pad]) * pad)
     # NO top-level /Length, CF /Length in BYTES (both spec-legal)
     objs6 = (b"<</Filter /Standard /V 4 /R 4 /P %d /O <%s> /U <%s> "
              b"/CF <</StdCF <</CFM /AESV2 /Length 16>>>> /StmF /StdCF>>"
@@ -664,11 +458,11 @@ def test_unencrypted_pdf_mentioning_encrypt_in_text():
     """Page text containing the literal bytes '/Encrypt 1 0 R' must not
     trip the encryption fallback on a document with a healthy trailer."""
     content = b"BT /F1 10 Tf 72 700 Td (mentions /Encrypt 1 0 R in text) Tj ET"
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", content)
-    objs[5] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[4] = stream_obj(b"", content)
+    objs[5] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     assert spans and "mentions" in spans[0].text
 
 
@@ -696,11 +490,11 @@ def _two_col_page(rows: int = 10, with_mid_head: bool = False) -> bytes:
             % (y, i)
         )
         y -= 14
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", b"\n".join(parts))
-    objs[5] = _FONT
-    return _classic_pdf(objs)
+    objs[4] = stream_obj(b"", b"\n".join(parts))
+    objs[5] = PDF_FONT
+    return classic_pdf(objs)
 
 
 def test_two_column_reading_order():
@@ -739,11 +533,11 @@ def test_two_column_table_of_short_cells_stays_table():
         rows.append(b"BT /F1 10 Tf 72 %d Td (k%d) Tj ET" % (y, i))
         rows.append(b"BT /F1 10 Tf 320 %d Td (v%d) Tj ET" % (y, i))
         y -= 14
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", b"\n".join(rows))
-    objs[5] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[4] = stream_obj(b"", b"\n".join(rows))
+    objs[5] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     tables = [s for s in spans if s.kind == "table"]
     assert len(tables) == 1
     assert tables[0].text.splitlines()[0] == "k0\tv0"
@@ -767,13 +561,13 @@ def test_two_column_figure_stays_in_its_column():
         y -= 14
     # image placed in the right column between rows 4 and 5
     parts.append(b"q 40 0 0 30 340 %d cm /Im1 Do Q" % (720 - 4 * 14 - 7))
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
                b"/Resources <</Font <</F1 5 0 R>> /XObject <</Im1 6 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", b"\n".join(parts))
-    objs[5] = _FONT
-    objs[6] = _stream_obj(b"/Type /XObject /Subtype /Image /Width 4 /Height 4", b"\x00" * 16)
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[4] = stream_obj(b"", b"\n".join(parts))
+    objs[5] = PDF_FONT
+    objs[6] = stream_obj(b"/Type /XObject /Subtype /Image /Width 4 /Height 4", b"\x00" * 16)
+    spans = extract_realpdf(classic_pdf(objs))
     kinds_text = [(s.kind, s.text) for s in spans]
     fig_at = next(i for i, s in enumerate(spans) if s.kind == "figure")
     before = "\n".join(s.text for s in spans[:fig_at])
@@ -787,7 +581,7 @@ def test_two_column_figure_stays_in_its_column():
 
 
 def _three_page_doc(header: bool = True) -> bytes:
-    objs = _page_tree([3, 6, 8])
+    objs = page_tree([3, 6, 8])
     bodies = []
     for i, (pg, ct) in enumerate(((3, 4), (6, 7), (8, 9))):
         parts = []
@@ -800,10 +594,10 @@ def _three_page_doc(header: bool = True) -> bytes:
         parts.append(b"BT /F1 9 Tf 280 60 Td (Page %d of 3) Tj ET" % (i + 1))
         objs[pg] = (b"<</Type /Page /Parent 2 0 R /Contents %d 0 R "
                     b"/Resources <</Font <</F1 11 0 R>>>>>>" % ct)
-        objs[ct] = _stream_obj(b"", b"\n".join(parts))
+        objs[ct] = stream_obj(b"", b"\n".join(parts))
         bodies.append(parts)
-    objs[11] = _FONT
-    return _classic_pdf(objs)
+    objs[11] = PDF_FONT
+    return classic_pdf(objs)
 
 
 def test_repeating_headers_and_page_numbers_dropped():
@@ -824,23 +618,23 @@ def test_single_page_edges_kept():
         b"BT /F1 9 Tf 72 780 Td (2025-01-01 draft) Tj ET\n"
         b"BT /F1 10 Tf 72 700 Td (body content line) Tj ET"
     )
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", content)
-    objs[5] = _FONT
-    text = "\n".join(s.text for s in extract_realpdf(_classic_pdf(objs)))
+    objs[4] = stream_obj(b"", content)
+    objs[5] = PDF_FONT
+    text = "\n".join(s.text for s in extract_realpdf(classic_pdf(objs)))
     assert "2025-01-01 draft" in text and "body content line" in text
 
 
 def test_distinct_top_lines_kept():
     """Different top-of-page lines (chapter titles) are not furniture."""
-    objs = _page_tree([3, 6])
+    objs = page_tree([3, 6])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 9 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", b"BT /F1 14 Tf 72 780 Td (Chapter One Intro) Tj ET BT /F1 10 Tf 72 700 Td (alpha body) Tj ET")
+    objs[4] = stream_obj(b"", b"BT /F1 14 Tf 72 780 Td (Chapter One Intro) Tj ET BT /F1 10 Tf 72 700 Td (alpha body) Tj ET")
     objs[6] = b"<</Type /Page /Parent 2 0 R /Contents 7 0 R /Resources <</Font <</F1 9 0 R>>>>>>"
-    objs[7] = _stream_obj(b"", b"BT /F1 14 Tf 72 780 Td (Chapter Two Methods) Tj ET BT /F1 10 Tf 72 700 Td (beta body) Tj ET")
-    objs[9] = _FONT
-    text = "\n".join(s.text for s in extract_realpdf(_classic_pdf(objs)))
+    objs[7] = stream_obj(b"", b"BT /F1 14 Tf 72 780 Td (Chapter Two Methods) Tj ET BT /F1 10 Tf 72 700 Td (beta body) Tj ET")
+    objs[9] = PDF_FONT
+    text = "\n".join(s.text for s in extract_realpdf(classic_pdf(objs)))
     assert "Chapter One Intro" in text and "Chapter Two Methods" in text
 
 
@@ -854,11 +648,11 @@ def test_list_items_stay_separate_blocks():
         b"BT /F1 10 Tf 86 658 Td (a continuation line) Tj ET",
         b"BT /F1 10 Tf 72 644 Td (3. third item text) Tj ET",
     ]
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", b"\n".join(rows))
-    objs[5] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[4] = stream_obj(b"", b"\n".join(rows))
+    objs[5] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     texts = [s.text for s in spans]
     assert "1. first item text" in texts
     assert "2. second item which wraps onto a continuation line" in texts
@@ -871,13 +665,13 @@ def test_numeric_rows_and_short_pages_not_furniture():
     NOT be emptied — numeric-only lines need a page-number shape, sparse
     pages don't participate, and a survivor guard cancels keys that
     would gut a page."""
-    objs = _page_tree([3, 6])
+    objs = page_tree([3, 6])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 9 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", b"BT /F1 10 Tf 72 700 Td (body prose for page 1 here) Tj ET BT /F1 10 Tf 72 100 Td (100  155) Tj ET")
+    objs[4] = stream_obj(b"", b"BT /F1 10 Tf 72 700 Td (body prose for page 1 here) Tj ET BT /F1 10 Tf 72 100 Td (100  155) Tj ET")
     objs[6] = b"<</Type /Page /Parent 2 0 R /Contents 7 0 R /Resources <</Font <</F1 9 0 R>>>>>>"
-    objs[7] = _stream_obj(b"", b"BT /F1 10 Tf 72 700 Td (body prose for page 2 here) Tj ET BT /F1 10 Tf 72 100 Td (200  255) Tj ET")
-    objs[9] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[7] = stream_obj(b"", b"BT /F1 10 Tf 72 700 Td (body prose for page 2 here) Tj ET BT /F1 10 Tf 72 100 Td (200  255) Tj ET")
+    objs[9] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     text = "\n".join(s.text for s in spans)
     assert "body prose for page 1 here" in text
     assert "body prose for page 2 here" in text
@@ -887,17 +681,17 @@ def test_numeric_rows_and_short_pages_not_furniture():
 def test_bare_page_numbers_dropped():
     """A lone page number at the bottom edge matches the page-number
     shape whitelist and is stripped even though it has no letters."""
-    objs = _page_tree([3, 6])
+    objs = page_tree([3, 6])
     body = (b"BT /F1 10 Tf 72 700 Td (%s alpha content line) Tj ET "
             b"BT /F1 10 Tf 72 686 Td (%s beta content line) Tj ET "
             b"BT /F1 10 Tf 72 672 Td (%s gamma content line) Tj ET "
             b"BT /F1 10 Tf 300 60 Td (%s) Tj ET")
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 9 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", body % (b"first", b"first", b"first", b"1"))
+    objs[4] = stream_obj(b"", body % (b"first", b"first", b"first", b"1"))
     objs[6] = b"<</Type /Page /Parent 2 0 R /Contents 7 0 R /Resources <</Font <</F1 9 0 R>>>>>>"
-    objs[7] = _stream_obj(b"", body % (b"second", b"second", b"second", b"2"))
-    objs[9] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[7] = stream_obj(b"", body % (b"second", b"second", b"second", b"2"))
+    objs[9] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     texts = [s.text for s in spans]
     assert "1" not in texts and "2" not in texts
     assert any("first alpha" in t for t in texts)
@@ -912,11 +706,11 @@ def test_decimal_and_initial_lines_do_not_split_blocks():
         b"BT /F1 10 Tf 72 672 Td (per the analysis of) Tj ET",
         b"BT /F1 10 Tf 72 658 Td (A. Smith and colleagues) Tj ET",
     ]
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", b"\n".join(rows))
-    objs[5] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[4] = stream_obj(b"", b"\n".join(rows))
+    objs[5] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     paras = [s for s in spans if s.kind == "paragraph"]
     assert len(paras) == 1, [s.text for s in spans]
     assert "about 1.5 million" in paras[0].text
@@ -936,11 +730,11 @@ def test_three_column_reading_order():
                 % (cx, y, name, i)
             )
         y -= 10
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", b"\n".join(parts))
-    objs[5] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[4] = stream_obj(b"", b"\n".join(parts))
+    objs[5] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     text = "\n".join(s.text for s in spans)
     assert text.index("aaacol11") < text.index("bbbcol0"), text[:300]
     assert text.index("bbbcol11") < text.index("ccccol0")
@@ -953,11 +747,11 @@ def test_hyphenated_line_wrap_joins():
         b"BT /F1 10 Tf 72 686 Td (tion in one place using IL-) Tj ET",
         b"BT /F1 10 Tf 72 672 Td (6 compatible formats) Tj ET",
     ]
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", b"\n".join(rows))
-    objs[5] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[4] = stream_obj(b"", b"\n".join(rows))
+    objs[5] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     text = spans[0].text
     assert "information in one place" in text, text
     assert "IL- 6" in text, text
@@ -976,11 +770,11 @@ def test_rotated_watermark_dropped_italic_kept():
         # 90-degree sideways margin text
         b"BT /F1 8 Tf 0 1 -1 0 20 400 Tm (printed by docgen) Tj ET"
     )
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", content)
-    objs[5] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[4] = stream_obj(b"", content)
+    objs[5] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     text = "\n".join(s.text for s in spans)
     assert "normal body line" in text
     assert "sheared italic line" in text
@@ -997,13 +791,13 @@ def test_monospace_block_becomes_code_span():
         b"BT /F2 10 Tf 90 666 Td (return a + b) Tj ET",
         b"BT /F1 10 Tf 72 640 Td (which returns the sum of both) Tj ET",
     ]
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
                b"/Resources <</Font <</F1 5 0 R /F2 6 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", b"\n".join(rows))
-    objs[5] = _FONT
+    objs[4] = stream_obj(b"", b"\n".join(rows))
+    objs[5] = PDF_FONT
     objs[6] = b"<</Type /Font /Subtype /Type1 /BaseFont /Courier>>"
-    spans = extract_realpdf(_classic_pdf(objs))
+    spans = extract_realpdf(classic_pdf(objs))
     kinds = [s.kind for s in spans]
     assert kinds == ["paragraph", "code", "paragraph"], [(s.kind, s.text) for s in spans]
     code = spans[1].text
@@ -1017,14 +811,14 @@ def test_fixedpitch_flag_marks_code():
         b"BT /F2 10 Tf 72 680 Td (x = compute\\(\\)) Tj ET",
         b"BT /F2 10 Tf 72 666 Td (print\\(x\\)) Tj ET",
     ]
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
                b"/Resources <</Font <</F2 6 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", b"\n".join(rows))
+    objs[4] = stream_obj(b"", b"\n".join(rows))
     objs[6] = (b"<</Type /Font /Subtype /Type1 /BaseFont /CustomCo "
                b"/FontDescriptor 7 0 R>>")
     objs[7] = b"<</Type /FontDescriptor /FontName /CustomCo /Flags 1>>"
-    spans = extract_realpdf(_classic_pdf(objs))
+    spans = extract_realpdf(classic_pdf(objs))
     assert [s.kind for s in spans] == ["code"], [(s.kind, s.text) for s in spans]
 
 
@@ -1036,12 +830,12 @@ def test_page_rotate_compensated_text_kept():
         b"BT /F1 12 Tf 0 1 -1 0 100 100 Tm (rotated but upright text) Tj ET "
         b"BT /F1 12 Tf 0 1 -1 0 114 100 Tm (second line of the scan) Tj ET"
     )
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Rotate 90 /Contents 4 0 R "
                b"/Resources <</Font <</F1 5 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", content)
-    objs[5] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[4] = stream_obj(b"", content)
+    objs[5] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     text = "\n".join(s.text for s in spans)
     assert "rotated but upright text" in text, spans
     assert "second line of the scan" in text
@@ -1072,11 +866,11 @@ def test_uniformly_rotated_page_content_kept():
         for i, t in enumerate(lines))
     # one horizontal run: minority, but horizontal always stays
     content += b" BT /F1 6 Tf 300 400 Td (stamp) Tj ET"
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", content)
-    objs[5] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[4] = stream_obj(b"", content)
+    objs[5] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     text = "\n".join(s.text for s in spans)
     for t in lines:
         assert t.decode() in text, text
@@ -1096,11 +890,11 @@ def test_minority_rotated_runs_still_decoration():
         b"BT /F1 8 Tf 0 1 -1 0 20 400 Tm (sideways stamp) Tj ET "
         b"BT /F1 8 Tf 0 -1 1 0 590 400 Tm (other margin) Tj ET"
     )
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", content)
-    objs[5] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[4] = stream_obj(b"", content)
+    objs[5] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     text = "\n".join(s.text for s in spans)
     assert "body one" in text and "body three" in text
     assert "sideways stamp" not in text and "other margin" not in text
@@ -1119,13 +913,13 @@ def test_interpreter_budget_truncates_instead_of_erroring(monkeypatch):
                            % (700 - 20 * i, tag, i) for i in range(3))
         return filler
 
-    objs = _page_tree([3, 6])
+    objs = page_tree([3, 6])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", page_content(b"pageone"))
-    objs[5] = _FONT
+    objs[4] = stream_obj(b"", page_content(b"pageone"))
+    objs[5] = PDF_FONT
     objs[6] = b"<</Type /Page /Parent 2 0 R /Contents 7 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[7] = _stream_obj(b"", page_content(b"pagetwo"))
-    pdf = _classic_pdf(objs)
+    objs[7] = stream_obj(b"", page_content(b"pagetwo"))
+    pdf = classic_pdf(objs)
 
     # sanity: both pages extract under the real cap
     full = "\n".join(s.text for s in extract_realpdf(pdf))
@@ -1154,13 +948,13 @@ def test_budget_exhaustion_inside_form_truncates(monkeypatch):
     form_body = b" ".join(
         b"BT /F1 8 Tf 100 %d Td (form filler line %d) Tj ET" % (600 - 12 * i, i)
         for i in range(20))
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
                b"/Resources <</Font <</F1 5 0 R>> /XObject <</Fx 6 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", page_body)
-    objs[5] = _FONT
-    objs[6] = _stream_obj(b"/Type /XObject /Subtype /Form", form_body)
-    pdf = _classic_pdf(objs)
+    objs[4] = stream_obj(b"", page_body)
+    objs[5] = PDF_FONT
+    objs[6] = stream_obj(b"/Type /XObject /Subtype /Form", form_body)
+    pdf = classic_pdf(objs)
 
     # sanity under the real cap: both page and form text extract
     full = "\n".join(s.text for s in extract_realpdf(pdf))
@@ -1190,11 +984,11 @@ def test_minority_upside_down_text_kept():
         b"BT /F1 10 Tf -1 0 0 -1 240 200 Tm (42.00) Tj ET "
         b"BT /F1 10 Tf -1 0 0 -1 300 214 Tm (SECOND STAMP LINE) Tj ET"
     )
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", content)
-    objs[5] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[4] = stream_obj(b"", content)
+    objs[5] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     text = "\n".join(s.text for s in spans)
     assert "body one" in text and "body three" in text
     # segment order intact, and the line printed at lower raw y reads
@@ -1214,11 +1008,11 @@ def test_minority_180_on_rescued_page_stays_dropped():
         b"BT /F1 10 Tf 0 1 -1 0 %d 72 Tm (%s) Tj ET" % (-(700 - 20 * i), t)
         for i, t in enumerate(lines))
     content += b" BT /F1 8 Tf -1 0 0 -1 300 400 Tm (not upside down here) Tj ET"
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = b"<</Type /Page /Parent 2 0 R /Contents 4 0 R /Resources <</Font <</F1 5 0 R>>>>>>"
-    objs[4] = _stream_obj(b"", content)
-    objs[5] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[4] = stream_obj(b"", content)
+    objs[5] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     text = "\n".join(s.text for s in spans)
     assert "not upside down here" not in text, text
     idx = [text.index(t.decode()) for t in lines]
@@ -1235,10 +1029,10 @@ def test_winansi_and_macroman_high_bytes_decode():
         b"BT /F2 12 Tf 72 680 Td (caf\x8e mac) Tj ET "     # 0x8E = é in mac_roman
         b"BT /F3 12 Tf 72 660 Td (x\xe9y) Tj ET"           # Differences overrides 0xE9
     )
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
                b"/Resources <</Font <</F1 5 0 R /F2 6 0 R /F3 7 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", content)
+    objs[4] = stream_obj(b"", content)
     objs[5] = (b"<</Type /Font /Subtype /Type1 /BaseFont /Helv "
                b"/Encoding /WinAnsiEncoding>>")
     objs[6] = (b"<</Type /Font /Subtype /Type1 /BaseFont /Helv "
@@ -1246,7 +1040,7 @@ def test_winansi_and_macroman_high_bytes_decode():
     objs[7] = (b"<</Type /Font /Subtype /Type1 /BaseFont /Helv "
                b"/Encoding <</BaseEncoding /WinAnsiEncoding "
                b"/Differences [233 /zero]>>>>")
-    spans = extract_realpdf(_classic_pdf(objs))
+    spans = extract_realpdf(classic_pdf(objs))
     text = "\n".join(s.text for s in spans)
     assert "café win" in text, spans
     assert "café mac" in text, spans
@@ -1262,55 +1056,16 @@ def test_predefined_unicode_cmap_decodes_without_tounicode():
         b"BT /F1 12 Tf 72 700 Td <4F60597D4E16754C> Tj ET "  # UTF-16BE CJK
         b"BT /F1 12 Tf 72 680 Td <00480049> Tj ET"           # 'HI'
     )
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
                b"/Resources <</Font <</F1 5 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", content)
+    objs[4] = stream_obj(b"", content)
     objs[5] = (b"<</Type /Font /Subtype /Type0 /BaseFont /SomeGB "
                b"/Encoding /UniGB-UCS2-H>>")
-    spans = extract_realpdf(_classic_pdf(objs))
+    spans = extract_realpdf(classic_pdf(objs))
     text = "\n".join(s.text for s in spans)
     assert "你好世界" in text, spans
     assert "HI" in text
-
-
-def _ttf_with_cmap4(mapping: dict[int, int]) -> bytes:
-    """Minimal TrueType blob holding only a (3,1) format-4 cmap: one
-    segment per mapped code point plus the 0xFFFF terminator."""
-    segs = sorted(mapping.items())
-    segcount = len(segs) + 1
-    end_codes = [c for c, _ in segs] + [0xFFFF]
-    start_codes = list(end_codes)
-    deltas = [(g - c) & 0xFFFF for c, g in segs] + [1]
-    ros = [0] * segcount
-
-    def u16s(vals):
-        return b"".join(struct.pack(">H", v) for v in vals)
-
-    body = u16s(end_codes) + b"\x00\x00" + u16s(start_codes) + u16s(deltas) + u16s(ros)
-    sub = struct.pack(">HHHHHHH", 4, 14 + len(body), 0, segcount * 2, 0, 0, 0) + body
-    cmap = struct.pack(">HH", 0, 1) + struct.pack(">HHI", 3, 1, 12) + sub
-    return (struct.pack(">IHHHH", 0x00010000, 1, 0, 0, 0)
-            + b"cmap" + struct.pack(">III", 0, 28, len(cmap)) + cmap)
-
-
-def _cidfont_pdf() -> bytes:
-    """Identity-H CIDFontType2, NO ToUnicode, embedded TrueType program —
-    the text is only recoverable by inverting the font's own cmap.
-    Shared with the fuzzer (mutants land on the TTF table parsing)."""
-    ttf = _ttf_with_cmap4({0x48: 5, 0x45: 3, 0x4C: 7, 0x4F: 9})  # H E L O
-    content = b"BT /F1 12 Tf 72 700 Td <00050003000700070009> Tj ET"  # gids HELLO
-    objs = _page_tree([3])
-    objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
-               b"/Resources <</Font <</F1 5 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", content)
-    objs[5] = (b"<</Type /Font /Subtype /Type0 /BaseFont /EmbedX "
-               b"/Encoding /Identity-H /DescendantFonts [6 0 R]>>")
-    objs[6] = (b"<</Type /Font /Subtype /CIDFontType2 /BaseFont /EmbedX "
-               b"/CIDToGIDMap /Identity /FontDescriptor 7 0 R>>")
-    objs[7] = b"<</Type /FontDescriptor /FontName /EmbedX /FontFile2 8 0 R>>"
-    objs[8] = _stream_obj(b"/Length1 %d" % len(ttf), ttf)
-    return _classic_pdf(objs)
 
 
 def test_identity_h_without_tounicode_recovers_via_embedded_cmap():
@@ -1318,7 +1073,7 @@ def test_identity_h_without_tounicode_recovers_via_embedded_cmap():
     program: the font's own 'cmap' (unicode→gid), run backwards, is the
     only code→text evidence — the viewer-extractor recovery. Previously
     such runs decoded to '' and vanished."""
-    spans = extract_realpdf(_cidfont_pdf())
+    spans = extract_realpdf(cidfont_pdf())
     text = "\n".join(s.text for s in spans)
     assert "HELLO" in text, spans
 
@@ -1328,23 +1083,23 @@ def test_embedded_cmap_stream_encoding_routes_code_to_cid():
     code→CID mapping) with no ToUnicode: the code routes through the
     CMap's cidrange/cidchar sections, then CID→glyph→unicode via the
     embedded TrueType inversion."""
-    ttf = _ttf_with_cmap4({0x41: 0x10, 0x42: 0x11, 0x5A: 0x20})  # A B Z
+    ttf = ttf_with_cmap4({0x41: 0x10, 0x42: 0x11, 0x5A: 0x20})  # A B Z
     cmap_body = (b"/CIDInit /ProcSet findresource begin\n"
                  b"1 begincidrange\n<0001> <0002> 16\nendcidrange\n"
                  b"1 begincidchar\n<0009> 32\nendcidchar\nendcmap")
     content = b"BT /F1 12 Tf 72 700 Td <000100020009> Tj ET"  # -> A B Z
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
                b"/Resources <</Font <</F1 5 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", content)
+    objs[4] = stream_obj(b"", content)
     objs[5] = (b"<</Type /Font /Subtype /Type0 /BaseFont /EmbedZ "
                b"/Encoding 9 0 R /DescendantFonts [6 0 R]>>")
     objs[6] = (b"<</Type /Font /Subtype /CIDFontType2 /BaseFont /EmbedZ "
                b"/CIDToGIDMap /Identity /FontDescriptor 7 0 R>>")
     objs[7] = b"<</Type /FontDescriptor /FontName /EmbedZ /FontFile2 8 0 R>>"
-    objs[8] = _stream_obj(b"/Length1 %d" % len(ttf), ttf)
-    objs[9] = _stream_obj(b"/CMapName /Custom-H", cmap_body)
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[8] = stream_obj(b"/Length1 %d" % len(ttf), ttf)
+    objs[9] = stream_obj(b"/CMapName /Custom-H", cmap_body)
+    spans = extract_realpdf(classic_pdf(objs))
     text = "\n".join(s.text for s in spans)
     assert "ABZ" in text, spans
 
@@ -1354,19 +1109,19 @@ def test_type0_missing_encoding_still_recovers():
     by broken generators; viewers assume Identity-H) must still recover
     through the embedded-TTF inversion — the no-Identity-guess gate is
     about named non-Unicode CMaps, not about a missing name."""
-    ttf = _ttf_with_cmap4({0x4F: 5, 0x4B: 6})  # O K
+    ttf = ttf_with_cmap4({0x4F: 5, 0x4B: 6})  # O K
     content = b"BT /F1 12 Tf 72 700 Td <00050006> Tj ET"
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
                b"/Resources <</Font <</F1 5 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", content)
+    objs[4] = stream_obj(b"", content)
     objs[5] = (b"<</Type /Font /Subtype /Type0 /BaseFont /NoEnc "
                b"/DescendantFonts [6 0 R]>>")
     objs[6] = (b"<</Type /Font /Subtype /CIDFontType2 /BaseFont /NoEnc "
                b"/CIDToGIDMap /Identity /FontDescriptor 7 0 R>>")
     objs[7] = b"<</Type /FontDescriptor /FontName /NoEnc /FontFile2 8 0 R>>"
-    objs[8] = _stream_obj(b"/Length1 %d" % len(ttf), ttf)
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[8] = stream_obj(b"/Length1 %d" % len(ttf), ttf)
+    spans = extract_realpdf(classic_pdf(objs))
     assert "OK" in "\n".join(s.text for s in spans), spans
 
 
@@ -1379,25 +1134,25 @@ def test_shared_fontfile_inversion_cached_per_document():
 
     from documentconvert_spark.kernels import realpdf as rp
 
-    ttf = _ttf_with_cmap4({0x41 + i: 5 + i for i in range(4)})
+    ttf = ttf_with_cmap4({0x41 + i: 5 + i for i in range(4)})
     n_fonts = 12
     fonts = b" ".join(
         b"/F%d %d 0 R" % (i, 10 + i) for i in range(n_fonts))
     content = b" ".join(
         b"BT /F%d 10 Tf 72 %d Td <0005> Tj ET" % (i, 720 - 10 * i)
         for i in range(n_fonts))
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
                b"/Resources <</Font <<" + fonts + b">>>>>>")
-    objs[4] = _stream_obj(b"", content)
+    objs[4] = stream_obj(b"", content)
     objs[6] = (b"<</Type /Font /Subtype /CIDFontType2 /BaseFont /Shared "
                b"/CIDToGIDMap /Identity /FontDescriptor 7 0 R>>")
     objs[7] = b"<</Type /FontDescriptor /FontName /Shared /FontFile2 8 0 R>>"
-    objs[8] = _stream_obj(b"/Length1 %d" % len(ttf), ttf)
+    objs[8] = stream_obj(b"/Length1 %d" % len(ttf), ttf)
     for i in range(n_fonts):
         objs[10 + i] = (b"<</Type /Font /Subtype /Type0 /BaseFont /Shared%d "
                         b"/Encoding /Identity-H /DescendantFonts [6 0 R]>>" % i)
-    pdf_bytes = _classic_pdf(objs)
+    pdf_bytes = classic_pdf(objs)
     with mock.patch.object(rp, "_invert_ttf_cmap", wraps=rp._invert_ttf_cmap) as spy:
         spans = extract_realpdf(pdf_bytes)
     assert spy.call_count == 1, spy.call_count
@@ -1409,21 +1164,21 @@ def test_non_identity_predefined_cmap_stays_dropped_not_garbage():
     nontrivial code→CID table this engine doesn't ship) must NOT be
     treated as Identity — that would extract WRONG text, worse for a
     hash-verified pipeline than the empty-decode drop."""
-    ttf = _ttf_with_cmap4({0x41: 1, 0x42: 2})
+    ttf = ttf_with_cmap4({0x41: 1, 0x42: 2})
     content = (b"BT /F1 12 Tf 72 700 Td <00010002> Tj ET "
                b"BT /F2 12 Tf 72 680 Td (plain ascii line) Tj ET")
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
                b"/Resources <</Font <</F1 5 0 R /F2 9 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", content)
+    objs[4] = stream_obj(b"", content)
     objs[5] = (b"<</Type /Font /Subtype /Type0 /BaseFont /SomeGBK "
                b"/Encoding /GBK-EUC-H /DescendantFonts [6 0 R]>>")
     objs[6] = (b"<</Type /Font /Subtype /CIDFontType2 /BaseFont /SomeGBK "
                b"/CIDToGIDMap /Identity /FontDescriptor 7 0 R>>")
     objs[7] = b"<</Type /FontDescriptor /FontName /SomeGBK /FontFile2 8 0 R>>"
-    objs[8] = _stream_obj(b"/Length1 %d" % len(ttf), ttf)
-    objs[9] = _FONT
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[8] = stream_obj(b"/Length1 %d" % len(ttf), ttf)
+    objs[9] = PDF_FONT
+    spans = extract_realpdf(classic_pdf(objs))
     text = "\n".join(s.text for s in spans)
     assert "plain ascii line" in text
     assert "A" not in text and "B" not in text, text  # no Identity guess
@@ -1432,13 +1187,13 @@ def test_non_identity_predefined_cmap_stays_dropped_not_garbage():
 def test_ucs2_hw_variant_cmap_name_matches():
     """UniJIS-UCS2-HW-H (half-width variant) codes are still UCS-2."""
     content = b"BT /F1 12 Tf 72 700 Td <00480057> Tj ET"  # 'HW'
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
                b"/Resources <</Font <</F1 5 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", content)
+    objs[4] = stream_obj(b"", content)
     objs[5] = (b"<</Type /Font /Subtype /Type0 /BaseFont /SomeJIS "
                b"/Encoding /UniJIS-UCS2-HW-H>>")
-    spans = extract_realpdf(_classic_pdf(objs))
+    spans = extract_realpdf(classic_pdf(objs))
     assert "HW" in "\n".join(s.text for s in spans)
 
 
@@ -1495,22 +1250,22 @@ def test_cid_cmap_stream_iteration_budget():
 def test_identity_h_cid_to_gid_stream_routes_the_inversion():
     """Same recovery with a CIDToGIDMap STREAM: code (=CID) goes through
     the map to a glyph id before the inverted-cmap lookup."""
-    ttf = _ttf_with_cmap4({0x4F: 5, 0x4B: 9})  # O->gid5, K->gid9
+    ttf = ttf_with_cmap4({0x4F: 5, 0x4B: 9})  # O->gid5, K->gid9
     # cid 1 -> gid 5 ('O'), cid 2 -> gid 9 ('K')
     c2g = b"\x00\x00\x00\x05\x00\x09"
     content = b"BT /F1 12 Tf 72 700 Td <00010002> Tj ET"
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
                b"/Resources <</Font <</F1 5 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", content)
+    objs[4] = stream_obj(b"", content)
     objs[5] = (b"<</Type /Font /Subtype /Type0 /BaseFont /EmbedY "
                b"/Encoding /Identity-H /DescendantFonts [6 0 R]>>")
     objs[6] = (b"<</Type /Font /Subtype /CIDFontType2 /BaseFont /EmbedY "
                b"/CIDToGIDMap 9 0 R /FontDescriptor 7 0 R>>")
     objs[7] = b"<</Type /FontDescriptor /FontName /EmbedY /FontFile2 8 0 R>>"
-    objs[8] = _stream_obj(b"/Length1 %d" % len(ttf), ttf)
-    objs[9] = _stream_obj(b"", c2g)
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[8] = stream_obj(b"/Length1 %d" % len(ttf), ttf)
+    objs[9] = stream_obj(b"", c2g)
+    spans = extract_realpdf(classic_pdf(objs))
     text = "\n".join(s.text for s in spans)
     assert "OK" in text, spans
 
@@ -1525,13 +1280,13 @@ def test_math_font_lines_become_formula_spans():
         b"BT /F2 14 Tf 200 670 Td (E = mc2 + p2c2) Tj ET "
         b"BT /F1 10 Tf 72 640 Td (which holds for a free particle) Tj ET"
     )
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
                b"/Resources <</Font <</F1 5 0 R /F2 6 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", content)
-    objs[5] = _FONT
+    objs[4] = stream_obj(b"", content)
+    objs[5] = PDF_FONT
     objs[6] = b"<</Type /Font /Subtype /Type1 /BaseFont /ABCDEF+CMMI10>>"
-    spans = extract_realpdf(_classic_pdf(objs))
+    spans = extract_realpdf(classic_pdf(objs))
     assert [s.kind for s in spans] == ["paragraph", "formula", "paragraph"], \
         [(s.kind, s.text) for s in spans]
     assert spans[1].text == "E = mc2 + p2c2"
@@ -1554,14 +1309,14 @@ def test_math_glyph_density_formula_without_math_font_name():
         b"BT /F2 10 Tf 200 670 Td (ABCDE) Tj ET "
         b"BT /F1 10 Tf 72 640 Td (prose line after the equation) Tj ET"
     )
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
                b"/Resources <</Font <</F1 5 0 R /F2 6 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", content)
-    objs[5] = _FONT
+    objs[4] = stream_obj(b"", content)
+    objs[5] = PDF_FONT
     objs[6] = b"<</Type /Font /Subtype /TrueType /BaseFont /EMBEDX /ToUnicode 7 0 R>>"
-    objs[7] = _stream_obj(b"", cmap)
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[7] = stream_obj(b"", cmap)
+    spans = extract_realpdf(classic_pdf(objs))
     assert [s.kind for s in spans] == ["paragraph", "formula", "paragraph"], \
         [(s.kind, s.text) for s in spans]
     assert spans[1].text == "∑∫≤xy"
@@ -1574,11 +1329,11 @@ def test_sparse_math_glyphs_in_prose_stay_paragraph():
             b"1 begincodespacerange\n<00> <ff>\nendcodespacerange\n"
             b"1 beginbfchar\n<2a> <00d7>\nendbfchar\nendcmap")
     content = b"BT /F2 10 Tf 72 700 Td (speedup of 4* on eight cores) Tj ET"
-    objs = _page_tree([3])
+    objs = page_tree([3])
     objs[3] = (b"<</Type /Page /Parent 2 0 R /Contents 4 0 R "
                b"/Resources <</Font <</F2 6 0 R>>>>>>")
-    objs[4] = _stream_obj(b"", content)
+    objs[4] = stream_obj(b"", content)
     objs[6] = b"<</Type /Font /Subtype /TrueType /BaseFont /EMBEDX /ToUnicode 7 0 R>>"
-    objs[7] = _stream_obj(b"", cmap)
-    spans = extract_realpdf(_classic_pdf(objs))
+    objs[7] = stream_obj(b"", cmap)
+    spans = extract_realpdf(classic_pdf(objs))
     assert [s.kind for s in spans] == ["paragraph"], [(s.kind, s.text) for s in spans]

@@ -342,20 +342,15 @@ def test_real_video_keyframes_rule(spark):
     assert all((d, 0) in got for d, *_ in sigs)  # frame 0 always kept
 
 
-def test_ocr_raster_text_gif_bmp():
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
-    from gen_extra_fixtures import _gif_fixture, render_text_bmp, render_text_gif
-
+def test_ocr_raster_text_gif_bmp(extra_doc):
+    from documentconvert_spark.corpus import render_text_bmp, render_text_gif
     from documentconvert_spark.kernels.detect import extract_image_any
     from documentconvert_spark.kernels.miniocr import ocr_raster_text
 
     assert ocr_raster_text(render_text_gif(["GO LEFT 12"])) == ["GO LEFT 12"]
     assert ocr_raster_text(render_text_bmp(["STOP 99"])) == ["STOP 99"]
     # a multicolor raster bails to figure-only (mid-gray guard)
-    assert ocr_raster_text(_gif_fixture()) == []
+    assert ocr_raster_text(extra_doc("fixture_tiles.gif")) == []
     spans = extract_image_any(render_text_bmp(["STOP 99"]))
     assert [s.kind for s in spans] == ["figure", "paragraph"]
     assert spans[1].text == "STOP 99"

@@ -1,7 +1,7 @@
 """WebP lossless (VP8L) decode — kernels/miniwebp.py.
 
 Validation strategy mirrors the other raster pairs: the generator-side
-encoder (scripts/gen_extra_fixtures.encode_vp8l) is an independent
+encoder (corpus.encode_vp8l) is an independent
 implementation of the public WebP Lossless Bitstream Specification —
 prefix-code headers (simple and code-length-coded with 17/18 zero
 repeats), LZ77 same-pixel runs, the color cache, and forward versions
@@ -11,27 +11,23 @@ against a second implementation of the same spec, shape by shape.
 
 from __future__ import annotations
 
-import os
 import random
 import struct
-import sys
 
 import pytest
 
+from documentconvert_spark.corpus import (
+    _WpBits,
+    _wp_prefix,
+    _wp_write_code,
+    encode_vp8l,
+    render_text_webp,
+)
 from documentconvert_spark.kernels.miniwebp import decode_vp8l, decode_webp_gray
-
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
-
-
-def _enc():
-    import gen_extra_fixtures as g
-
-    return g
 
 
 def _roundtrip(w, h, argb, **kw):
-    g = _enc()
-    data = g.encode_vp8l(w, h, argb, **kw)
+    data = encode_vp8l(w, h, argb, **kw)
     (ln,) = struct.unpack_from("<I", data, 16)
     dw, dh, pix = decode_vp8l(data[20:20 + ln])
     assert (dw, dh) == (w, h)
@@ -99,37 +95,34 @@ def test_neighbor_distance_map():
     assert len(set(_DIST_MAP)) == 120
 
 
-def test_ocr_end_to_end_and_dispatch():
+def test_ocr_end_to_end_and_dispatch(extra_doc):
     from documentconvert_spark.kernels.detect import extract_image_any
     from documentconvert_spark.kernels.miniocr import ocr_raster_text
 
-    g = _enc()
-    data = g.render_text_webp(["DOCK GATE 12"], scale=3)
+    data = render_text_webp(["DOCK GATE 12"], scale=3)
     assert ocr_raster_text(data) == ["DOCK GATE 12"]
     spans = extract_image_any(data)
     assert [s.kind for s in spans] == ["figure", "paragraph"]
     assert spans[1].text == "DOCK GATE 12"
     # the photo-like palette swatch decodes but stays figure-only
-    assert [s.kind for s in extract_image_any(g._webp_fixture())] == ["figure"]
+    assert [s.kind for s in extract_image_any(extra_doc("fixture_swatch.webp"))] == ["figure"]
 
 
 def test_gray_route_through_raster_router():
     from documentconvert_spark.kernels.raster import decode_raster_gray
 
-    g = _enc()
     w, h = 16, 8
     argb = [0xFF000000 | (v << 16) | (v << 8) | v
             for v in (x * 16 % 256 for _ in range(h) for x in range(w))]
-    fmt, dw, dh, rows = decode_raster_gray(g.encode_vp8l(w, h, argb))
+    fmt, dw, dh, rows = decode_raster_gray(encode_vp8l(w, h, argb))
     assert (fmt, dw, dh) == ("webp", w, h)
     assert all(rows[y][x] == (argb[y * w + x] >> 8) & 0xFF
                for y in range(h) for x in range(w))
 
 
 def test_malformed_contained():
-    g = _enc()
     argb = [0xFF000000 | (i * 11 % 0xFFFFFF) for i in range(64)]
-    data = g.encode_vp8l(8, 8, argb, cache_bits=3, lz77=True)
+    data = encode_vp8l(8, 8, argb, cache_bits=3, lz77=True)
     # truncations anywhere must raise, never hang or garble
     for cut in (12, 21, 25, len(data) - 3):
         with pytest.raises(ValueError):
@@ -157,8 +150,7 @@ def test_top_right_rule_at_rightmost_column():
     # spec §5: TR is taken from the CONTIGUOUS buffer, so at x == w-1 it
     # is the current row's already-decoded leftmost pixel — NOT T. Built
     # by hand (not via the encoder) so the rule is pinned independently.
-    g = _enc()
-    bits = g._WpBits()
+    bits = _WpBits()
     bits.put(0x2F, 8)
     bits.put(1, 14)  # w=2
     bits.put(1, 14)  # h=2
@@ -171,16 +163,16 @@ def test_top_right_rule_at_rightmost_column():
     bits.put(0, 1)  # no cache
     for lens, alph in [({3: 1}, 280), ({0: 1}, 256), ({0: 1}, 256),
                        ({0xFF: 1}, 256), ({0: 1}, 40)]:
-        g._wp_write_code(bits, lens, alph)
+        _wp_write_code(bits, lens, alph)
     # main image: literal residuals, greens distinct per pixel
     bits.put(0, 1)  # end of transforms
     bits.put(0, 1)  # no cache
     bits.put(0, 1)  # no meta
-    gc = g._wp_write_code(bits, {10: 2, 20: 2, 30: 2, 40: 2}, 280)
-    rc = g._wp_write_code(bits, {0: 1}, 256)
-    bc = g._wp_write_code(bits, {0: 1}, 256)
-    ac = g._wp_write_code(bits, {0: 1}, 256)
-    g._wp_write_code(bits, {0: 1}, 40)
+    gc = _wp_write_code(bits, {10: 2, 20: 2, 30: 2, 40: 2}, 280)
+    rc = _wp_write_code(bits, {0: 1}, 256)
+    bc = _wp_write_code(bits, {0: 1}, 256)
+    ac = _wp_write_code(bits, {0: 1}, 256)
+    _wp_write_code(bits, {0: 1}, 40)
     for green in (10, 20, 30, 40):
         bits.code(*gc[green])
         bits.code(*rc[0])
@@ -202,8 +194,7 @@ def test_simple_code_two_symbols_canonical_order():
     # the spec builds simple 2-symbol codes canonically from the code
     # lengths: bit 0 belongs to the SMALLER symbol even when the larger
     # one is transmitted first
-    g = _enc()
-    bits = g._WpBits()
+    bits = _WpBits()
     bits.put(0x2F, 8)
     bits.put(1, 14)  # w=2
     bits.put(0, 14)  # h=1
@@ -220,7 +211,7 @@ def test_simple_code_two_symbols_canonical_order():
     bits.put(10, 8)
     for lens, alph in [({0: 1}, 256), ({0: 1}, 256), ({0xFF: 1}, 256),
                        ({0: 1}, 40)]:
-        g._wp_write_code(bits, lens, alph)
+        _wp_write_code(bits, lens, alph)
     bits.put(0, 1)  # green bit 0 -> smaller symbol (10)
     bits.put(1, 1)  # green bit 1 -> larger symbol (200)
     _w, _h, pix = decode_vp8l(bits.done())
@@ -229,8 +220,7 @@ def test_simple_code_two_symbols_canonical_order():
 
 def test_lz77_reference_before_start_contained():
     # handcraft: literal then a copy with distance 2 (only 1 pixel out)
-    g = _enc()
-    bits = g._WpBits()
+    bits = _WpBits()
     bits.put(0x2F, 8)
     bits.put(3, 14)  # w=4
     bits.put(0, 14)  # h=1
@@ -242,12 +232,12 @@ def test_lz77_reference_before_start_contained():
     # green code: simple, 2 symbols: 0 (literal green 0) and 257 -> but
     # 257 >= 256 needs the normal path; use code-length coding via the
     # generator writer
-    dsym, dnbits, dextra = g._wp_prefix(130)  # dist code 130 -> dist 10
-    gc = g._wp_write_code(bits, {0: 1, 257: 1}, 280)
-    rc = g._wp_write_code(bits, {0: 1}, 256)
-    bc = g._wp_write_code(bits, {0: 1}, 256)
-    ac = g._wp_write_code(bits, {0xFF: 1}, 256)
-    dc = g._wp_write_code(bits, {dsym: 1}, 40)
+    dsym, dnbits, dextra = _wp_prefix(130)  # dist code 130 -> dist 10
+    gc = _wp_write_code(bits, {0: 1, 257: 1}, 280)
+    rc = _wp_write_code(bits, {0: 1}, 256)
+    bc = _wp_write_code(bits, {0: 1}, 256)
+    ac = _wp_write_code(bits, {0xFF: 1}, 256)
+    dc = _wp_write_code(bits, {dsym: 1}, 40)
     bits.code(*gc[0])      # one literal pixel
     bits.code(*rc[0])
     bits.code(*bc[0])
