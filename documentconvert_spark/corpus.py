@@ -434,7 +434,7 @@ def antialias_grid(grid: list) -> list[bytearray]:
     text render. For the ≥2-px-thick strokes _render_text_grid emits at
     scale ≥2, thresholding the result at 128 recovers the source grid
     exactly, which is precisely the contract the OCR matcher's
-    post-threshold exact-grid check (miniocr._BimodalGate + _downsample)
+    post-threshold exact-grid check (raster._BimodalGate + miniocr._downsample)
     verifies end-to-end."""
     h, w = len(grid), len(grid[0])
     out = []

@@ -5,39 +5,3 @@ These are the from-scratch analogues of the reference's conversion core
 SURVEY.md §2.9). Each kernel maps one document's raw bytes to an ordered
 span sequence; the Spark layer batches them through Arrow pandas UDFs.
 """
-
-from documentconvert_spark.kernels.spans import Span
-from documentconvert_spark.kernels.minipdf import extract_minipdf
-from documentconvert_spark.kernels.minidom import extract_minidom
-from documentconvert_spark.kernels.miniimg import extract_miniimg
-from documentconvert_spark.kernels.realpdf import extract_realpdf
-from documentconvert_spark.kernels.miniooxml import extract_ooxml
-from documentconvert_spark.kernels.minidoc import extract_doc
-from documentconvert_spark.kernels.miniodf import extract_odf
-from documentconvert_spark.kernels.minirtf import extract_rtf
-from documentconvert_spark.kernels.minibiff import extract_xls, extract_ppt
-from documentconvert_spark.kernels.detect import extract_pdf_any, extract_office_any
-from documentconvert_spark.kernels.markdown import spans_to_markdown, error_markdown
-from documentconvert_spark.kernels.encoding import ensure_utf8, repair_mojibake
-from documentconvert_spark.kernels.errors import classify_error
-
-__all__ = [
-    "Span",
-    "extract_minipdf",
-    "extract_minidom",
-    "extract_miniimg",
-    "extract_realpdf",
-    "extract_ooxml",
-    "extract_doc",
-    "extract_odf",
-    "extract_rtf",
-    "extract_xls",
-    "extract_ppt",
-    "extract_pdf_any",
-    "extract_office_any",
-    "spans_to_markdown",
-    "error_markdown",
-    "ensure_utf8",
-    "repair_mojibake",
-    "classify_error",
-]

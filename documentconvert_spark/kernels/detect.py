@@ -61,15 +61,14 @@ def extract_image_any(content: bytes) -> list[Span]:
     header-sniffed dimensions recorded in the media side table, and — for
     PNG/JPEG/GIF/BMP/TIFF/lossless-WebP whose text is a clean grid
     rendering of the known 5×7 bitmap font — the decoded text as
-    paragraph spans after the figure (kernels/miniocr.py, the
-    sandbox-honest analogue of the reference's GPU OCR; JPEG is gated on
-    a near-lossless quant table so photos pay a header parse, never an
-    entropy decode; photo GIFs bail on the palette alone before any LZW
-    decode; photo palette TIFFs on the ColorMap alone; BMP/WebP pay one
-    luma pass). Photos/off-font images keep the figure-only shape."""
-    from documentconvert_spark.kernels.media import image_file_ref, sniff_image_meta
+    paragraph spans after the figure (kernels/miniocr.ocr_image_text, the
+    sandbox-honest analogue of the reference's GPU OCR, given the format
+    sniffed here so nothing is sniffed twice). Photos/off-font images
+    keep the figure-only shape."""
     from documentconvert_spark.kernels.miniimg import MAGIC as MINIIMG_MAGIC
     from documentconvert_spark.kernels.miniimg import extract_miniimg
+    from documentconvert_spark.kernels.miniocr import ocr_image_text
+    from documentconvert_spark.kernels.raster import image_file_ref, sniff_image_meta
     from documentconvert_spark.kernels.spans import finalize
 
     if content and content.startswith(MINIIMG_MAGIC):
@@ -77,14 +76,8 @@ def extract_image_any(content: bytes) -> list[Span]:
     fmt, _w, _h = sniff_image_meta(content or b"")
     if fmt != "unknown":
         spans = [Span("figure", "", image_file_ref(content, fmt), -1)]
-        if fmt in ("png", "jpeg", "gif", "bmp", "tiff", "webp"):
-            from documentconvert_spark.kernels.miniocr import (
-                ocr_jpeg_text, ocr_png_text, ocr_raster_text)
-
-            ocr = {"png": ocr_png_text, "jpeg": ocr_jpeg_text}.get(
-                fmt, ocr_raster_text)
-            spans.extend(Span("paragraph", ln, "", -1)
-                         for ln in ocr(content) if ln.strip())
+        spans.extend(Span("paragraph", ln, "", -1)
+                     for ln in ocr_image_text(content, fmt) if ln.strip())
         return finalize(spans)
     # keep miniimg's error message contract for malformed image documents
     return extract_miniimg(content)

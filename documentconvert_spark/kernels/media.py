@@ -1,167 +1,41 @@
-"""Real embedded-media extraction + header-level metadata sniffing.
+"""Real embedded-media extraction + audio/video sniffing and decoding.
 
 The reference physically extracts figure crops to `output/images/` and the
 markdown references them (`services/document_service.py:259-304`). The
 engine's analogue at corpus scale: pull the actual embedded media BYTES
 out of each document container into the media side table
-(doc_id, media_ref, content binary), and decode header-level metadata
-(format, width, height) from the bytes themselves — PNG IHDR and JPEG
-SOFn frames parsed directly, no codec libraries.
+(doc_id, media_ref, content binary). Image headers, media keys and
+pixels belong to the image layer (kernels/raster.py); this module adds
+the container-level audio/video metadata and the AVI/MP4 frame and WAV
+sample decoders, no codec libraries.
 
 Containers covered: OOXML (word/media/, ppt/media/, xl/media/), ODF
 (Pictures/), PDF (Image XObject streams, media_ref matching the figure
 spans realpdf emits), RTF (pict payloads via the minirtf tokenizer),
-legacy OLE (.doc/.xls/.ppt OfficeArt BLIP records, [MS-ODRAW]), and raw
-image files as whole documents.
+legacy OLE (.doc/.xls/.ppt OfficeArt BLIP records, [MS-ODRAW], carved by
+kernels/minidoc.carve_officeart_blips), and raw image files as whole
+documents.
 """
 
 from __future__ import annotations
 
-import hashlib
 import io
 import struct
 import zipfile
 
 import numpy as np
 
+from documentconvert_spark.kernels import limits
 from documentconvert_spark.kernels.limits import zip_read_capped
+from documentconvert_spark.kernels.minijpeg import decode_jpeg_gray
+from documentconvert_spark.kernels.raster import (
+    image_file_ref,
+    image_media_ref,
+    luma601,
+    sniff_image_meta,
+)
 
-_PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-_GIF_MAGICS = (b"GIF87a", b"GIF89a")
 _ZIP_MEDIA_DIRS = ("word/media/", "ppt/media/", "xl/media/", "Pictures/")
-
-
-def image_media_ref(raw_stream: bytes) -> str:
-    """Stable figure key for a PDF Image XObject. Single definition shared
-    by realpdf's figure spans and the media side table — span ⋈ media join
-    integrity (J3) depends on both sides computing the identical key."""
-    return hashlib.sha1(raw_stream[:4096]).hexdigest()[:12] + ".jpg"
-
-
-_IMG_EXT = {"jpeg": "jpg", "png": "png", "gif": "gif", "bmp": "bmp",
-            "tiff": "tiff", "svg": "svg", "webp": "webp"}
-
-
-def image_file_ref(content: bytes, fmt: str) -> str:
-    """Stable media_ref for a standalone image DOCUMENT (the reference
-    accepts raw jpg/png/bmp/tiff/webp inputs and OCRs them,
-    services/document_service.py:826-907). Same hashing shape as
-    image_media_ref so every media key in the engine is content-derived."""
-    ext = _IMG_EXT.get(fmt, "img")
-    return hashlib.sha1(content[:4096]).hexdigest()[:12] + f".{ext}"
-
-
-def _tiff_dims(data: bytes) -> tuple[int | None, int | None]:
-    """TIFF 6.0: walk IFD0 for ImageWidth (256) / ImageLength (257),
-    SHORT or LONG values inline in the entry. Malformed → (None, None)."""
-    try:
-        end = "<" if data[:2] == b"II" else ">"
-        (ifd,) = struct.unpack_from(end + "I", data, 4)
-        (count,) = struct.unpack_from(end + "H", data, ifd)
-        w = h = None
-        for k in range(min(count, 256)):
-            e = ifd + 2 + 12 * k
-            tag, typ, n_vals = struct.unpack_from(end + "HHI", data, e)
-            if tag not in (256, 257):
-                continue
-            # value-or-offset rule: with count != 1 the 4-byte field holds
-            # a file OFFSET, not the dimension — reading it inline would
-            # report a bogus (clamped but wrong) width/height
-            if n_vals != 1:
-                continue
-            if typ == 3:  # SHORT
-                (v,) = struct.unpack_from(end + "H", data, e + 8)
-            elif typ == 4:  # LONG
-                (v,) = struct.unpack_from(end + "I", data, e + 8)
-            else:
-                continue
-            if not 0 < v < 2**31:  # file-controlled: keep int32 casts safe
-                continue
-            if tag == 256:
-                w = v
-            else:
-                h = v
-        return w, h
-    except (struct.error, IndexError):
-        return None, None
-
-
-def sniff_image_meta(data: bytes) -> tuple[str, int | None, int | None]:
-    """(format, width, height) from the file header alone. Dimensions
-    are file-controlled: values outside (0, 2**31) become None at this
-    boundary — same int32-safety contract as sniff_av_meta, so a crafted
-    header can never blow a downstream Arrow cast."""
-    fmt, w, h = _sniff_image_meta_raw(data)
-    w = w if (w is not None and 0 < w < 2**31) else None
-    h = h if (h is not None and 0 < h < 2**31) else None
-    return fmt, w, h
-
-
-def _sniff_image_meta_raw(data: bytes) -> tuple[str, int | None, int | None]:
-    if data[:8] == _PNG_MAGIC and len(data) >= 24 and data[12:16] == b"IHDR":
-        w, h = struct.unpack_from(">II", data, 16)
-        return "png", w, h
-    if data[:2] == b"\xff\xd8":  # JPEG: scan segments for SOFn
-        i = 2
-        n = len(data)
-        while i + 4 <= n and data[i] == 0xFF:
-            marker = data[i + 1]
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                i += 2
-                continue
-            (seg_len,) = struct.unpack_from(">H", data, i + 2)
-            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                if i + 9 <= n:
-                    h, w = struct.unpack_from(">HH", data, i + 5)
-                    return "jpeg", w, h
-                break
-            i += 2 + seg_len
-        return "jpeg", None, None
-    if data[:6] in _GIF_MAGICS and len(data) >= 10:
-        w, h = struct.unpack_from("<HH", data, 6)
-        return "gif", w, h
-    if data[:2] == b"BM" and len(data) >= 26:
-        w, h = struct.unpack_from("<ii", data, 18)
-        return "bmp", abs(w), abs(h)
-    if data[:5] == b"<?xml" or data[:1024].lstrip()[:4] == b"<svg":
-        return "svg", None, None
-    if data[:4] == b"II*\x00" or data[:4] == b"MM\x00*":
-        return ("tiff",) + _tiff_dims(data)
-    if data[:4] == b"\xd7\xcd\xc6\x9a":
-        # placeable WMF (Aldus header): bounding box in twips + twips/inch
-        # → pixel dims at 96 dpi; a bare WMF below has no size record
-        if len(data) >= 18:
-            left, top, right, bottom, inch = struct.unpack_from("<4hH", data, 6)
-            if inch > 0:
-                w = abs(right - left) * 96 // inch
-                h = abs(bottom - top) * 96 // inch
-                if 0 < w < 2**31 and 0 < h < 2**31:
-                    return "wmf", w, h
-        return "wmf", None, None
-    if data[:4] in (b"\x01\x00\x09\x00", b"\x02\x00\x09\x00"):
-        return "wmf", None, None
-    if len(data) >= 44 and data[:4] == b"\x01\x00\x00\x00" and data[40:44] == b" EMF":
-        # MS-EMF header: rclBounds (device px, inclusive) at offset 8
-        l_, t_, r_, b_ = struct.unpack_from("<4i", data, 8)
-        w, h = r_ - l_ + 1, b_ - t_ + 1
-        if 0 < w < 2**31 and 0 < h < 2**31:
-            return "emf", w, h
-        return "emf", None, None
-    if data[:4] == b"RIFF" and data[8:12] == b"WEBP" and len(data) >= 30:
-        chunk = data[12:16]
-        if chunk == b"VP8 " and len(data) >= 30:  # lossy: frame header dims
-            w = struct.unpack_from("<H", data, 26)[0] & 0x3FFF
-            h = struct.unpack_from("<H", data, 28)[0] & 0x3FFF
-            return "webp", w, h
-        if chunk == b"VP8L" and len(data) >= 25:  # lossless bitstream dims
-            (bits,) = struct.unpack_from("<I", data, 21)
-            return "webp", (bits & 0x3FFF) + 1, ((bits >> 14) & 0x3FFF) + 1
-        if chunk == b"VP8X" and len(data) >= 30:  # extended: canvas size
-            w = int.from_bytes(data[24:27], "little") + 1
-            h = int.from_bytes(data[27:30], "little") + 1
-            return "webp", w, h
-        return "webp", None, None
-    return "unknown", None, None
 
 
 def _zip_media(content: bytes) -> list[tuple[str, bytes]]:
@@ -378,8 +252,7 @@ def _avi_meta(data: bytes):
 _MAX_AVI_FRAMES = 4096
 
 
-def decode_avi_frames(data: bytes, max_pixels: int | None = None
-                      ) -> tuple[int, int, float, list[np.ndarray]]:
+def decode_avi_frames(data: bytes) -> tuple[int, int, float, list[np.ndarray]]:
     """AVI bytes → (width, height, fps, frames as (h, w) uint8 gray).
 
     The real-codec video path (closes the last decoder stub): walks the
@@ -393,19 +266,13 @@ def decode_avi_frames(data: bytes, max_pixels: int | None = None
     at the first over-budget frame, not after allocating it), and the
     frame count is capped at _MAX_AVI_FRAMES. ValueError on anything
     malformed — per-row containment upstream (C7), like every kernel."""
-    from documentconvert_spark.kernels.minijpeg import (
-        _MAX_PIXELS_DEFAULT, decode_jpeg_gray)
-    from documentconvert_spark.kernels.miniocr import luma601
-
-    if max_pixels is None:
-        max_pixels = _MAX_PIXELS_DEFAULT
     if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         raise ValueError("avi: not a RIFF/AVI file")
     width = height = None
     fps = 0.0
     bitcount = compression = None
     frames: list[np.ndarray] = []
-    pixel_budget = max_pixels
+    pixel_budget = limits.MAX_PIXELS
     for cc, lo, hi in _riff_chunks(data, 12, len(data)):
         if cc == b"hdrl":
             for c2, l2, h2 in _riff_chunks(data, lo, hi):
@@ -447,8 +314,7 @@ def decode_avi_frames(data: bytes, max_pixels: int | None = None
                     raise ValueError("avi: decoded pixels over budget")
                 payload = data[l2:h2]
                 if payload[:2] == b"\xff\xd8":  # MJPG
-                    fw, fh, gray = decode_jpeg_gray(bytes(payload),
-                                                    max_pixels=max_pixels)
+                    fw, fh, gray = decode_jpeg_gray(bytes(payload))
                 elif compression == 0 and bitcount == 24:  # BI_RGB DIB
                     stride = (width * 3 + 3) & ~3
                     if len(payload) < stride * height:
@@ -473,8 +339,7 @@ def decode_avi_frames(data: bytes, max_pixels: int | None = None
 _MP4_JPEG_CODECS = (b"jpeg", b"mjpa", b"mjpb")
 
 
-def decode_mp4_frames(data: bytes, max_pixels: int | None = None
-                      ) -> tuple[int, int, float, list[np.ndarray]]:
+def decode_mp4_frames(data: bytes) -> tuple[int, int, float, list[np.ndarray]]:
     """MP4/ISO-BMFF bytes → (width, height, fps, frames as (h, w) uint8 gray).
 
     The MJPEG-in-MP4 leg of the real-codec video path (AVI's sibling,
@@ -489,11 +354,6 @@ def decode_mp4_frames(data: bytes, max_pixels: int | None = None
     frame count is capped at _MAX_AVI_FRAMES, exactly like the AVI
     walker. Inter-frame codecs (avc1/vp09/hev1 …) have no from-scratch
     decoder: ValueError containment (C7), never a wrong decode."""
-    from documentconvert_spark.kernels.minijpeg import (
-        _MAX_PIXELS_DEFAULT, decode_jpeg_gray)
-
-    if max_pixels is None:
-        max_pixels = _MAX_PIXELS_DEFAULT
     if len(data) < 12 or data[4:8] != b"ftyp":
         raise ValueError("mp4: not an ISO-BMFF file")
 
@@ -598,7 +458,7 @@ def decode_mp4_frames(data: bytes, max_pixels: int | None = None
     # expand stsc runs → per-chunk sample counts, walk chunks carving
     # consecutive samples; stop once every stsz entry is placed
     frames: list[np.ndarray] = []
-    pixel_budget = max_pixels
+    pixel_budget = limits.MAX_PIXELS
     sample = 0
     run_idx = 0
     for chunk_no in range(1, len(chunk_offs) + 1):
@@ -616,8 +476,7 @@ def decode_mp4_frames(data: bytes, max_pixels: int | None = None
             pixel_budget -= width * height
             if pixel_budget < 0:
                 raise ValueError("mp4: decoded pixels over budget")
-            fw, fh, gray = decode_jpeg_gray(bytes(data[off:off + size]),
-                                            max_pixels=max_pixels)
+            fw, fh, gray = decode_jpeg_gray(bytes(data[off:off + size]))
             if (fw, fh) != (width, height):
                 raise ValueError("mp4: frame size disagrees with stsd")
             frames.append(gray)
@@ -877,102 +736,8 @@ def sniff_av_meta(data: bytes) -> tuple[str, int | None, int | None, int | None]
     return fmt, clamp(w), clamp(h), clamp(dur)
 
 
-# ------------------------------------------------------------ OfficeArt BLIPs
-# Legacy OLE documents (.doc/.xls/.ppt) embed pictures as OfficeArt BLIP
-# records ([MS-ODRAW]): 8-byte record header (verInstance, fbt, len), one
-# or two 16-byte UIDs, then the raw PNG/JPEG/DIB bytes (bitmap blips carry
-# one extra tag byte). The reference renders these through LibreOffice;
-# the engine carves the actual bytes into the media side table.
-
-_BLIP_FBT = {0xF01A: "emf", 0xF01B: "wmf", 0xF01C: "pict", 0xF01D: "jpeg",
-             0xF01E: "png", 0xF01F: "dib", 0xF029: "jpeg", 0xF02A: "tiff"}
-_IMG_MAGICS = (b"\x89PNG\r\n\x1a\n", b"\xff\xd8\xff", b"GIF8", b"BM",
-               b"II*\x00", b"MM\x00*")
-
-
-def _blip_payload(kind: str, body: bytes) -> bytes | None:
-    """Locate the picture bytes after the UID block. Rather than trusting
-    the instance field to say one-vs-two UIDs, probe both layouts for a
-    real image magic (bitmap blips add a 1-byte tag; metafiles a 34-byte
-    header whose compression byte says whether the payload is deflated)."""
-    if kind in ("png", "jpeg", "dib", "tiff"):
-        for off in (17, 33):
-            cand = body[off:]
-            if any(cand.startswith(m) for m in _IMG_MAGICS):
-                # blip record length may include shape-property trailer
-                # bytes after the image; cut at the format's own end marker
-                if cand.startswith(b"\x89PNG"):
-                    end = cand.find(b"IEND")
-                    if end != -1:
-                        cand = cand[:end + 8]
-                elif cand.startswith(b"\xff\xd8"):
-                    end = cand.rfind(b"\xff\xd9")
-                    if end != -1:
-                        cand = cand[:end + 2]
-                return cand
-        # DIB blips carry a headerless BITMAPINFOHEADER (biSize=40 first)
-        if kind == "dib":
-            for off in (17, 33):
-                if body[off:off + 4] == b"\x28\x00\x00\x00":
-                    return body[off:]
-        return None
-    # metafiles (emf/wmf/pict): UID(s) + 34-byte header; compression byte
-    # at header offset 32 (0 = deflate, 0xFE = stored)
-    import zlib as _zlib
-
-    from documentconvert_spark.kernels.limits import inflate_capped
-
-    for off in (16, 32):
-        hdr = body[off:off + 34]
-        if len(hdr) < 34:
-            continue
-        comp = hdr[32]
-        raw = body[off + 34:]
-        if comp == 0:
-            try:
-                raw = inflate_capped(raw, "blip metafile")
-            except (_zlib.error, ValueError):
-                continue
-        elif comp != 0xFE:
-            continue
-        if (kind == "emf" and raw[40:44] == b" EMF") or (
-            kind == "wmf" and (raw[:4] == b"\xd7\xcd\xc6\x9a"
-                               or raw[:4] in (b"\x01\x00\x09\x00", b"\x02\x00\x09\x00"))
-        ) or kind == "pict":
-            return raw
-    return None
-
-
-def carve_officeart_blips(stream: bytes) -> list[tuple[str, bytes]]:
-    """[(media_ref, bytes)] for every OfficeArt BLIP in an OLE stream, in
-    stream order, keyed content-derived like every other media ref in the
-    engine. Repeated images appear once per record — callers that need a
-    unique media table dedup by ref; callers that zip against picture
-    anchors (minidoc) need the duplicates to keep counts aligned."""
-    import struct as _st
-
-    out = []
-    i, n = 0, len(stream)
-    while i + 8 <= n:
-        verinst, fbt, ln = _st.unpack_from("<HHI", stream, i)
-        if fbt in _BLIP_FBT and 0 < ln <= n - i - 8:
-            kind = _BLIP_FBT[fbt]
-            pic = _blip_payload(kind, stream[i + 8:i + 8 + ln])
-            if pic is not None:
-                fmt, _w, _h = sniff_image_meta(pic)
-                ref = image_file_ref(pic, fmt if fmt != "unknown" else kind)
-                out.append((ref, pic))
-            # matched a plausible blip record header: skip the whole record
-            # either way (rescanning inside it byte-by-byte is quadratic
-            # and can carve spurious nested matches)
-            i += 8 + ln
-            continue
-        i += 1
-    return out
-
-
 def _ole_media(content: bytes) -> list[tuple[str, bytes]]:
-    from documentconvert_spark.kernels.minidoc import _Cfb
+    from documentconvert_spark.kernels.minidoc import _Cfb, carve_officeart_blips
 
     cfb = _Cfb(content)
     out = []

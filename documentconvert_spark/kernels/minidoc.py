@@ -1,4 +1,4 @@
-"""Legacy binary Word (.doc) extractor — from scratch, stdlib only.
+"""Legacy binary Word (.doc) extractor and OLE container reader — from scratch.
 
 The reference routes .doc files through headless LibreOffice → PDF → MinerU
 (`services/document_service.py:128-185`; .doc is in its office whitelist at
@@ -15,6 +15,9 @@ The reference routes .doc files through headless LibreOffice → PDF → MinerU
      field/control characters stripped; consecutive cell-marked chunks
      become table-grid spans, the rest paragraphs (first non-empty
      paragraph is treated as the document heading, like a title page).
+  5. OfficeArt BLIP records ([MS-ODRAW]) carved from the Data stream
+     give inline pictures their figure spans; the media side table
+     carves .doc/.xls/.ppt pictures with the same carver.
 
 Best-effort by design: a .doc that defeats the parser raises ValueError and
 is contained as an error row (C7), exactly like the reference's conversion
@@ -24,8 +27,10 @@ failure path (document_service.py:334-383).
 from __future__ import annotations
 
 import struct
+import zlib
 
-from documentconvert_spark.kernels.limits import check_decoded_size
+from documentconvert_spark.kernels.limits import check_decoded_size, inflate_capped
+from documentconvert_spark.kernels.raster import image_file_ref, sniff_image_meta
 from documentconvert_spark.kernels.spans import Span, finalize, normalize_text
 
 OLE_MAGIC = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
@@ -196,6 +201,95 @@ def _decode_piece(raw: bytes, compressed: bool) -> str:
     return raw.decode("utf-16-le", errors="replace")
 
 
+# ------------------------------------------------------------ OfficeArt BLIPs
+# Legacy OLE documents (.doc/.xls/.ppt) embed pictures as OfficeArt BLIP
+# records ([MS-ODRAW]): 8-byte record header (verInstance, fbt, len), one
+# or two 16-byte UIDs, then the raw PNG/JPEG/DIB bytes (bitmap blips carry
+# one extra tag byte). The reference renders these through LibreOffice;
+# the engine carves the actual bytes into the media side table (and
+# extract_doc keys its inline-picture figure spans by them).
+
+_BLIP_FBT = {0xF01A: "emf", 0xF01B: "wmf", 0xF01C: "pict", 0xF01D: "jpeg",
+             0xF01E: "png", 0xF01F: "dib", 0xF029: "jpeg", 0xF02A: "tiff"}
+_IMG_MAGICS = (b"\x89PNG\r\n\x1a\n", b"\xff\xd8\xff", b"GIF8", b"BM",
+               b"II*\x00", b"MM\x00*")
+
+
+def _blip_payload(kind: str, body: bytes) -> bytes | None:
+    """Locate the picture bytes after the UID block. Rather than trusting
+    the instance field to say one-vs-two UIDs, probe both layouts for a
+    real image magic (bitmap blips add a 1-byte tag; metafiles a 34-byte
+    header whose compression byte says whether the payload is deflated)."""
+    if kind in ("png", "jpeg", "dib", "tiff"):
+        for off in (17, 33):
+            cand = body[off:]
+            if any(cand.startswith(m) for m in _IMG_MAGICS):
+                # blip record length may include shape-property trailer
+                # bytes after the image; cut at the format's own end marker
+                if cand.startswith(b"\x89PNG"):
+                    end = cand.find(b"IEND")
+                    if end != -1:
+                        cand = cand[:end + 8]
+                elif cand.startswith(b"\xff\xd8"):
+                    end = cand.rfind(b"\xff\xd9")
+                    if end != -1:
+                        cand = cand[:end + 2]
+                return cand
+        # DIB blips carry a headerless BITMAPINFOHEADER (biSize=40 first)
+        if kind == "dib":
+            for off in (17, 33):
+                if body[off:off + 4] == b"\x28\x00\x00\x00":
+                    return body[off:]
+        return None
+    # metafiles (emf/wmf/pict): UID(s) + 34-byte header; compression byte
+    # at header offset 32 (0 = deflate, 0xFE = stored)
+    for off in (16, 32):
+        hdr = body[off:off + 34]
+        if len(hdr) < 34:
+            continue
+        comp = hdr[32]
+        raw = body[off + 34:]
+        if comp == 0:
+            try:
+                raw = inflate_capped(raw, "blip metafile")
+            except (zlib.error, ValueError):
+                continue
+        elif comp != 0xFE:
+            continue
+        if (kind == "emf" and raw[40:44] == b" EMF") or (
+            kind == "wmf" and (raw[:4] == b"\xd7\xcd\xc6\x9a"
+                               or raw[:4] in (b"\x01\x00\x09\x00", b"\x02\x00\x09\x00"))
+        ) or kind == "pict":
+            return raw
+    return None
+
+
+def carve_officeart_blips(stream: bytes) -> list[tuple[str, bytes]]:
+    """[(media_ref, bytes)] for every OfficeArt BLIP in an OLE stream, in
+    stream order, keyed content-derived like every other media ref in the
+    engine. Repeated images appear once per record — callers that need a
+    unique media table dedup by ref; callers that zip against picture
+    anchors (extract_doc) need the duplicates to keep counts aligned."""
+    out = []
+    i, n = 0, len(stream)
+    while i + 8 <= n:
+        verinst, fbt, ln = struct.unpack_from("<HHI", stream, i)
+        if fbt in _BLIP_FBT and 0 < ln <= n - i - 8:
+            kind = _BLIP_FBT[fbt]
+            pic = _blip_payload(kind, stream[i + 8:i + 8 + ln])
+            if pic is not None:
+                fmt, _w, _h = sniff_image_meta(pic)
+                ref = image_file_ref(pic, fmt if fmt != "unknown" else kind)
+                out.append((ref, pic))
+            # matched a plausible blip record header: skip the whole record
+            # either way (rescanning inside it byte-by-byte is quadratic
+            # and can carve spurious nested matches)
+            i += 8 + ln
+            continue
+        i += 1
+    return out
+
+
 def extract_doc(content: bytes, cfb: _Cfb | None = None) -> list[Span]:
     cfb = cfb or _Cfb(content)
     word = cfb.stream("WordDocument")
@@ -236,8 +330,6 @@ def extract_doc(content: bytes, cfb: _Cfb | None = None) -> list[Span]:
     # rather than risking misplaced refs.
     fig_refs: list[str] | None = None
     try:
-        from documentconvert_spark.kernels.media import carve_officeart_blips
-
         blips = carve_officeart_blips(cfb.stream("Data"))
         # EVERY 0x01 anchor owns one Data-stream blip in document order:
         # bare anchors are inline pictures, in-field anchors (EMBED

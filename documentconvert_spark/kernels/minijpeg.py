@@ -27,8 +27,8 @@ Scope — exactly the baseline class the corpus contains:
 * Arithmetic coding, hierarchical, 12-bit, and CMYK raise ValueError —
   callers fall back to the header-sniffed figure-only path.
 
-Bounds: pixel count capped before any allocation (`max_pixels`), raster
-bytes under the shared MAX_DECODED_BYTES, and the entropy loop is
+Bounds: pixel count capped before any allocation (`limits.MAX_PIXELS`),
+raster bytes under the shared MAX_DECODED_BYTES, and the entropy loop is
 naturally bounded by the input length (every decoded symbol consumes at
 least one bit; pad injection past the scan's marker is tracked and
 raised as truncation). The Huffman decode is serial Python over a bit
@@ -44,9 +44,9 @@ import struct
 
 import numpy as np
 
+from documentconvert_spark.kernels import limits
 from documentconvert_spark.kernels.limits import MAX_DECODED_BYTES
 
-_MAX_PIXELS_DEFAULT = 4 << 20  # matches miniocr's PNG cap
 
 # zigzag scan order (T.81 Figure A.6): index = zigzag position → raster index
 ZIGZAG = (
@@ -424,9 +424,7 @@ def parse_jpeg_quant(data: bytes) -> dict[int, list[int]]:
     return tables
 
 
-def decode_jpeg_gray(data: bytes,
-                     max_pixels: int = _MAX_PIXELS_DEFAULT
-                     ) -> tuple[int, int, np.ndarray]:
+def decode_jpeg_gray(data: bytes) -> tuple[int, int, np.ndarray]:
     """Baseline/progressive JPEG bytes → (width, height, (h, w) uint8
     luma raster)."""
     if data[:2] != b"\xff\xd8":
@@ -500,7 +498,7 @@ def decode_jpeg_gray(data: bytes,
                 raise ValueError("jpeg: unsupported precision")
             if nc not in (1, 3):
                 raise ValueError("jpeg: unsupported component count")
-            if w <= 0 or h <= 0 or w * h > max_pixels:
+            if w <= 0 or h <= 0 or w * h > limits.MAX_PIXELS:
                 raise ValueError("jpeg: dimensions over cap")
             if w * h > MAX_DECODED_BYTES:
                 raise ValueError("jpeg: raster over decode cap")

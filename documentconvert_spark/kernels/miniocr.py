@@ -4,29 +4,29 @@ The reference OCRs real images through the MinerU CLI (GPU models,
 `services/document_service.py:826-907`, 300 s timeout) — an engine the
 sandbox does not ship. What *is* achievable from scratch, and what this
 module implements, is the observable behavior on a bounded input class:
-a PNG whose text is rendered in a known public-style 5×7 bitmap font
+a lossless image (PNG, GIF, BMP, TIFF, lossless WebP, or a near-lossless
+JPEG) whose text is rendered in a known public-style 5×7 bitmap font
 (the classic HD44780/GLCD glyph grid) decodes back to its exact text,
 so `image_to_markdown` produces text spans end-to-end instead of a bare
 figure. Real-world photos and antialiased screenshots deliberately fail
 the grid checks and fall back to figure-only extraction.
 
-Pipeline: from-scratch PNG decode (IHDR/IDAT, zlib inflate through the
-shared expansion cap, scanline unfilter per the PNG spec §6 filter
-types 0–4) → binarize → split text lines on blank scanlines → split
-glyphs on blank columns → normalize each glyph to its ink bounding box
-at the inferred integer scale → exact-match against the font table.
+Pipeline: `ocr_image_text` takes the image bytes and the format the
+dispatcher sniffed, runs the per-format header pre-gate, decodes through
+the image layer's format → decoder table (kernels/raster.py, which owns
+every decoder and every magic-byte test) and rejects a majority-mid
+raster; `ocr_gray_text` then binarizes → splits text lines on blank
+scanlines → splits glyphs on blank columns → normalizes each glyph to
+its ink bounding box at the inferred integer scale → exact-matches it
+against the font table.
 
-Array contract: every raster decoder (this module's PNG, and the
-JPEG/GIF/BMP/TIFF/WebP decoders behind kernels/raster.py) returns its
-pixels as one (height, width) uint8 numpy array of ITU-R 601 luma.
-Post-decode stages are array operations over that raster: binarize is
-one comparison, bands and glyph columns are row/column projections,
-the antialiasing gate counts mid-gray pixels per row, the s×s
-downsample is a reshape with all/any checks, and a glyph's match key is
-its boolean grid's shape plus bytes. The only per-byte Python left here
-is the PNG Average/Paeth unfilter, a serial recurrence with no exact
-array form. Runs inside the Arrow-batched extraction UDF — no Spark
-shuffle, bounded by the same decoded-bytes caps as the other kernels.
+Array contract: every raster decoder returns its pixels as one
+(height, width) uint8 numpy array of ITU-R 601 luma. The stages here are
+array operations over that raster: binarize is one comparison, bands
+and glyph columns are row/column projections, the s×s downsample is a
+reshape with all/any checks, and a glyph's match key is its boolean
+grid's shape plus bytes. Runs inside the Arrow-batched extraction UDF —
+no Spark shuffle, bounded by the decoders' caps.
 """
 
 from __future__ import annotations
@@ -36,7 +36,8 @@ import zlib
 
 import numpy as np
 
-from documentconvert_spark.kernels.limits import MAX_DECODED_BYTES
+from documentconvert_spark.kernels.minijpeg import parse_jpeg_quant
+from documentconvert_spark.kernels.raster import DECODERS, _count_mid, _header_palette
 
 # -- font --------------------------------------------------------------------
 # 5×7 glyph grid in the style of the classic HD44780 character generator
@@ -121,273 +122,9 @@ for _ch, _rows in FONT_5X7.items():
     assert all("X" in col for col in zip(*_crop_rows)), f"font: internal blank column in {_ch!r}"
 
 
-def luma601(r: np.ndarray, g: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """ITU-R 601 integer luma, (299 r + 587 g + 114 b) // 1000, as uint8 —
-    the one RGB → gray fold every raster decoder shares."""
-    acc = r.astype(np.int32) * 299
-    acc += g.astype(np.int32) * 587
-    acc += b.astype(np.int32) * 114
-    return (acc // 1000).astype(np.uint8)
-
-
-def _palette_luma(pal: bytes) -> np.ndarray:
-    """RGB palette bytes → per-index luma; a trailing partial entry is
-    dropped (callers length-check against the declared count)."""
-    p = np.frombuffer(pal, dtype=np.uint8, count=len(pal) // 3 * 3).reshape(-1, 3)
-    return luma601(p[:, 0], p[:, 1], p[:, 2])
-
-
-# -- PNG decode (spec: W3C PNG, chunks + filters §6) --------------------------
-
-_PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-_MAX_PIXELS = 4 << 20  # 4 MP: far above any text fixture, bounds the
-# raster allocation (charge-on-sight, before the IDAT inflate)
-
-
-def _unfilter_serial(line: np.ndarray, prev: np.ndarray, bpp: int,
-                     paeth: bool) -> np.ndarray:
-    """Average / Paeth unfilter (PNG §9.2). Each byte depends on the
-    already-reconstructed byte bpp to its left through a floor or a
-    three-way choice, so there is no exact array form: this recurrence is
-    the one serial loop left in the PNG decoder."""
-    x = line.tolist()
-    p = prev.tolist()
-    for i in range(len(x)):
-        a = x[i - bpp] if i >= bpp else 0
-        if paeth:
-            b = p[i]
-            c = p[i - bpp] if i >= bpp else 0
-            est = a + b - c
-            pa, pb, pc = abs(est - a), abs(est - b), abs(est - c)
-            pred = a if pa <= pb and pa <= pc else b if pb <= pc else c
-        else:
-            pred = (a + p[i]) >> 1
-        x[i] = (x[i] + pred) & 0xFF
-    return np.array(x, dtype=np.uint8)
-
-
-def decode_png_gray(data: bytes, bilevel: bool = False) -> tuple[int, int, np.ndarray]:
-    """PNG bytes → (width, height, (height, width) uint8 gray raster).
-
-    Full PNG pixel matrix (W3C PNG spec): color types 0 (gray), 2 (RGB),
-    3 (palette + PLTE), 4 (gray+alpha), 6 (RGBA); bit depths 1/2/4/8/16
-    where the spec allows them; all five scanline filters; sequential
-    and Adam7-interlaced layouts. Alpha is ignored (luma output); 16-bit
-    samples fold to their high byte.
-
-    With bilevel=True the decode is an OCR pre-filter: inflation is
-    streamed row by row through the cumulative-majority _BimodalGate
-    and ABORTS once mid-gray pixels outweigh everything seen (or a
-    bounded run of majority-mid scanlines lands — a letterboxed photo).
-    A photo (the overwhelming majority of real-world PNGs) fails within
-    its first scanlines, so the extraction hot path pays a handful of
-    rows per non-text PNG instead of a full raster decode; an
-    ANTIALIASED text render — mid-gray confined to stroke edges — passes
-    through to the post-threshold exact grid matcher."""
-    if data[:8] != _PNG_MAGIC:
-        raise ValueError("png: bad magic")
-    pos = 8
-    w = h = ct = -1
-    depth = inter = 0
-    plte: bytes | None = None
-    idat: list[bytes] = []
-    while pos + 8 <= len(data):
-        (ln,), typ = struct.unpack(">I", data[pos:pos + 4]), data[pos + 4:pos + 8]
-        body = data[pos + 8:pos + 8 + ln]
-        if len(body) < ln:
-            raise ValueError("png: truncated chunk")
-        if typ == b"IHDR":
-            w, h, depth, ct, comp, filt, inter = struct.unpack(">IIBBBBB", body[:13])
-            if (depth not in (1, 2, 4, 8, 16) or ct not in (0, 2, 3, 4, 6)
-                    or comp or filt or inter not in (0, 1)
-                    or (depth < 8 and ct not in (0, 3))
-                    or (depth == 16 and ct == 3)):
-                raise ValueError("png: unsupported IHDR shape")
-            if w <= 0 or h <= 0 or w * h > _MAX_PIXELS:
-                raise ValueError("png: dimensions over cap")
-        elif typ == b"PLTE":
-            plte = bytes(body)
-        elif typ == b"IDAT":
-            idat.append(body)
-        elif typ == b"IEND":
-            break
-        pos += 12 + ln  # length + type + crc
-    if w < 0 or not idat:
-        raise ValueError("png: missing IHDR/IDAT")
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[ct]
-    pal: np.ndarray | None = None
-    if ct == 3:
-        if plte is None or len(plte) < 3:
-            raise ValueError("png: palette image without PLTE")
-        pal = _palette_luma(plte)
-    bits_pp = depth * channels
-    bpp = max(1, bits_pp // 8)  # filter unit (spec §9: 1 byte when <8 bits)
-    if (w * bits_pp // 8 + 2) * h > MAX_DECODED_BYTES:
-        raise ValueError("png: raster over decode cap")
-    d = zlib.decompressobj()
-    src = memoryview(b"".join(idat))
-    src_pos = 0
-    buf = bytearray()
-    _SLICE = 65536
-
-    def pull(n: int) -> bytes:
-        # stream exactly n inflated bytes (max_length caps each step), so
-        # a bilevel abort never pays for the rest of the raster. Input is
-        # fed in bounded slices: zlib copies unconsumed_tail back out on
-        # every re-feed, so handing it the WHOLE remaining IDAT once and
-        # re-feeding the tail per row is O(rows × IDAT) — measured 13× on
-        # a 4 MP bilevel image; slices keep the tail ≤ 64 KB.
-        nonlocal src_pos
-        while len(buf) < n:
-            if d.unconsumed_tail:
-                chunk = d.decompress(d.unconsumed_tail, n - len(buf))
-            elif src_pos < len(src):
-                chunk = d.decompress(src[src_pos:src_pos + _SLICE], n - len(buf))
-                src_pos += _SLICE
-            else:
-                raise ValueError("png: truncated raster")
-            if not chunk and not d.unconsumed_tail and src_pos >= len(src):
-                raise ValueError("png: truncated raster")
-            buf.extend(chunk)
-        out = bytes(buf[:n])
-        del buf[:n]
-        return out
-
-    scale = 255 // ((1 << depth) - 1) if depth < 8 else 1
-    gate = _BimodalGate()  # cumulative across rows (and Adam7 passes)
-    # sub-byte samples, MSB-first: per-byte shifts for one row-wide unpack
-    shifts = np.arange(8 - depth, -1, -depth, dtype=np.uint8) if depth < 8 else None
-
-    def to_gray(line: np.ndarray, npx: int) -> np.ndarray:
-        if depth < 8:  # sub-byte gray or palette indices
-            vals = ((line[:, None] >> shifts) & ((1 << depth) - 1)).reshape(-1)[:npx]
-            if ct == 3:
-                if int(vals.max()) >= len(pal):
-                    raise ValueError("png: index out of palette")
-                return pal[vals]
-            return vals * np.uint8(scale)
-        step = bits_pp // 8
-        if ct == 0:
-            return line[:npx] if depth == 8 else line[0:npx * 2:2]
-        if ct == 3:
-            idx = line[:npx]
-            if int(idx.max()) >= len(pal):
-                raise ValueError("png: index out of palette")
-            return pal[idx]
-        if ct == 4:  # gray + alpha: gray sample leads
-            return line[0:npx * step:step]
-        cstep = depth // 8  # RGB(A): luma over the three color samples
-        return luma601(line[0:npx * step:step], line[cstep::step][:npx],
-                       line[2 * cstep::step][:npx])
-
-    def unfilter_rows(pw: int, ph: int):
-        """Yield unfiltered gray rows of a (sub)image pw×ph."""
-        stride = (pw * bits_pp + 7) // 8
-        prev = np.zeros(stride, dtype=np.uint8)
-        for _y in range(ph):
-            rowbytes = pull(stride + 1)
-            ftype = rowbytes[0]
-            line = np.frombuffer(rowbytes, dtype=np.uint8, offset=1)
-            if ftype == 1:  # Sub: per-channel running sum, mod 256
-                line = np.cumsum(line.reshape(-1, bpp), axis=0,
-                                 dtype=np.uint8).reshape(-1)
-            elif ftype == 2:  # Up
-                line = line + prev
-            elif ftype == 3 or ftype == 4:  # Average / Paeth
-                line = _unfilter_serial(line, prev, bpp, ftype == 4)
-            elif ftype != 0:
-                raise ValueError("png: unknown filter type")
-            prev = line
-            gray = to_gray(line, pw)
-            if bilevel and not gate.feed(gray):
-                raise ValueError("png: not a bilevel text render")
-            yield gray
-
-    raster = np.zeros((h, w), dtype=np.uint8)
-    if not inter:
-        for y, gray in enumerate(unfilter_rows(w, h)):
-            raster[y] = gray
-        return w, h, raster
-    # Adam7: seven passes, each an independently filtered sub-image
-    for x0, y0, dx, dy in ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8),
-                           (2, 0, 4, 4), (0, 2, 2, 4), (1, 0, 2, 2),
-                           (0, 1, 1, 2)):
-        pw = (w - x0 + dx - 1) // dx
-        ph = (h - y0 + dy - 1) // dy
-        if pw <= 0 or ph <= 0:
-            continue
-        for py, gray in enumerate(unfilter_rows(pw, ph)):
-            # strided row slice: len(row[x0::dx]) == pw exactly
-            raster[y0 + py * dy, x0::dx] = gray
-    return w, h, raster
-
-
 # -- glyph matching -----------------------------------------------------------
 
 _INK = 128  # gray < _INK is ink (black text on white)
-_MID = np.zeros(256, dtype=bool)  # 32 < gray < 224: neither ink nor paper
-_MID[33:224] = True
-
-
-def _count_mid(gray) -> int:
-    """Mid-gray pixels in a row or a whole raster."""
-    return int(np.count_nonzero(_MID[np.asarray(gray, dtype=np.uint8)]))
-
-
-class _BimodalGate:
-    """Streaming antialiasing gate (r4): accumulate mid-gray vs total
-    pixels scanline by scanline and abort as soon as mid-gray pixels
-    exceed HALF of everything seen. A photo or gradient is majority-mid
-    from its very first row, so it still bails after ~one scanline (the
-    old any-mid-pixel rule's perf contract); an antialiased text render
-    keeps mid-gray on stroke edges only (measured ≤0.39 cumulative at
-    margin 8, worst case incl. all-dash lines), so it decodes through to
-    the post-threshold exact grid matcher. A per-ROW majority rule would
-    not work: a blurred 2-px stroke row is 100% mid-gray — only the
-    cumulative fraction separates the classes. Requires the render to
-    lead with background margin (ours use ≥4 px); a margin-0 crop may
-    bail to figure-only, which is the documented exact-or-nothing
-    containment, not a wrong answer.
-
-    The cumulative rule alone never trips for a photo whose leading
-    margin (letterbox, blown-out sky) outweighs its mid content, which
-    would silently downgrade the ~one-scanline perf contract to a full
-    decode. A RUN rule bounds that: _MAX_MID_RUN consecutive
-    majority-mid scanlines abort regardless of the cumulative fraction.
-    Text renders can't hit it — a majority-mid band is at most a blurred
-    glyph line (~glyph height + blur, ≤12 rows at render scale) before a
-    background gap resets the run — while any photo band trips it within
-    a fixed number of rows after the margin ends."""
-
-    _MAX_MID_RUN = 24
-
-    def __init__(self) -> None:
-        self.mid = 0
-        self.total = 0
-        self.run = 0
-
-    def feed(self, rows) -> bool:
-        """Accumulate one scanline (1-D) or a block of scanlines (2-D,
-        in order); False = photo/gradient so far, abort. A block verdict
-        equals feeding its rows one by one and stopping at the first
-        False."""
-        a = np.asarray(rows, dtype=np.uint8)
-        if a.ndim == 1:
-            a = a[None, :]
-        width = a.shape[1]
-        for m in np.count_nonzero(_MID[a], axis=1).tolist():
-            self.mid += m
-            self.total += width
-            # width >= 8 keeps sparse Adam7 pass rows from flapping the run
-            if width >= 8 and m * 2 > width:
-                self.run += 1
-                if self.run >= self._MAX_MID_RUN:
-                    return False
-            else:
-                self.run = 0
-            if self.mid * 2 > self.total:
-                return False
-        return True
 
 
 def _runs(mask: np.ndarray) -> list[tuple[int, int]]:
@@ -410,108 +147,46 @@ def _downsample(cells: np.ndarray, s: int) -> np.ndarray | None:
     return full
 
 
-def ocr_png_text(data: bytes) -> list[str]:
-    """PNG bytes → decoded text lines, or [] when the image is not a
-    clean grid rendering of the known font (the figure-only fallback).
-    The bilevel decode streams through _BimodalGate and aborts once
-    mid-gray dominates, so a photo pays a few scanlines while an
-    antialiased render reaches the post-threshold matcher."""
-    try:
-        w, h, gray = decode_png_gray(data, bilevel=True)
-    except (ValueError, struct.error, zlib.error):
-        return []
-    return ocr_gray_text(w, h, gray)
+def _header_admits_text(data: bytes, fmt: str) -> bool:
+    """Per-format pre-gate on the header alone, before any entropy
+    decode. A lossy JPEG can carry an exact glyph grid only in the
+    near-lossless regime, so every luma quant value must be ≤ 2
+    (reconstruction error then ≤ ~2 gray levels, which the 32/224
+    bilevel bands absorb): a photo pays a header parse, never an entropy
+    decode. A rendered-text GIF's global palette or palette TIFF's
+    ColorMap is MAJORITY near-black/near-white (antialiased renders add
+    a minority of edge tones), so a photo bails before the LZW or strip
+    decode. Formats or images without such a header table pass."""
+    if fmt == "jpeg":
+        return all(v <= 2 for t in parse_jpeg_quant(data).values() for v in t)
+    pal = _header_palette(data, fmt)
+    return pal is None or _count_mid(pal) * 2 <= len(pal)
 
 
-def _majority_mid(luma: np.ndarray) -> bool:
-    """More than half of the palette entries are mid-gray."""
-    return int(np.count_nonzero(_MID[luma])) * 2 > len(luma)
+def ocr_image_text(data: bytes, fmt: str) -> list[str]:
+    """Image bytes of a sniffed format → decoded text lines, or [] when
+    the image is not a clean grid rendering of the known font (the
+    figure-only fallback) — reference ``image_to_markdown`` accepts
+    png/jpg/bmp/tiff/webp (`services/document_service.py:652-665`).
 
-
-def _gif_palette_bilevel(data: bytes) -> bool:
-    """Cheap pre-gate: a rendered-text GIF's global palette is MAJORITY
-    near-black/near-white entries (antialiased renders add a minority of
-    edge tones), so a photo (mostly mid-gray palette) bails after
-    reading the header — BEFORE paying the LZW decode. Conservative: no
-    global palette → let the decoder decide."""
-    if len(data) < 13 or not data[10] & 0x80:
-        return True
-    n = 2 << (data[10] & 0x07)
-    return not _majority_mid(_palette_luma(data[13:13 + 3 * n]))
-
-
-def _tiff_colormap_bilevel(data: bytes) -> bool:
-    """Cheap pre-gate for palette TIFFs: a rendered-text image's ColorMap
-    is MAJORITY near-black/near-white entries, so a photo bails on the
-    IFD alone — before any strip decompression. Conservative: not
-    palette / unparseable → let the decoder decide (it has its own
-    gates)."""
-    from documentconvert_spark.kernels.raster import _tiff_colormap_luma, _tiff_ifd0
-
-    try:
-        end = "<" if data[:2] == b"II" else ">"
-        tags = _tiff_ifd0(data, end)
-    except (ValueError, struct.error, IndexError):
-        return True
-    if tags.get(262, [1])[0] != 3:
-        return True
-    cmap = tags.get(320)
-    if not cmap or len(cmap) != 3 * 256:
-        return True
-    return not _majority_mid(_tiff_colormap_luma(cmap))
-
-
-def ocr_raster_text(data: bytes) -> list[str]:
-    """GIF/BMP/TIFF/WebP bytes → decoded text lines, or [] (figure-only
-    fallback). All are lossless (lossy WebP raises inside the decoder),
-    so the exact grid matcher applies post-threshold; majority mid-gray
-    (a photo, a gradient) bails out via the shared _BimodalGate rule —
-    reference ``image_to_markdown`` accepts bmp/tiff/webp alongside
-    png/jpg (`services/document_service.py:652-665`). Photo GIFs bail on
-    the palette alone (no LZW decode); palette TIFFs on the ColorMap
-    alone, and gray/RGB TIFFs abort once mid-gray dominates the strips
-    seen; BMP and lossless WebP pay their single-pass luma read with the
-    same cumulative abort."""
-    from documentconvert_spark.kernels.raster import (
-        decode_raster_gray,
-        decode_tiff_gray,
-    )
-
-    if data[:6] in (b"GIF87a", b"GIF89a") and not _gif_palette_bilevel(data):
+    Four steps: the header pre-gate (_header_admits_text); the decode
+    through the image layer's table, PNG and TIFF with bilevel=True so
+    the decode streams through the shared _BimodalGate and aborts once
+    mid-gray dominates (a photo pays a few scanlines or one strip); one
+    majority-mid check on the decoded raster (a photo or gradient, not a
+    text render); then the grid matcher. Formats without a decoder (SVG,
+    WMF, EMF) and malformed or lossy input give []."""
+    decode = DECODERS.get(fmt)
+    if decode is None:
         return []
     try:
-        if data[:4] in (b"II*\x00", b"MM\x00*"):
-            if not _tiff_colormap_bilevel(data):
-                return []
-            w, h, gray = decode_tiff_gray(data, bilevel=True)
-        else:
-            _fmt, w, h, gray = decode_raster_gray(data)
-    except (ValueError, struct.error, IndexError):
+        if not _header_admits_text(data, fmt):
+            return []
+        w, h, gray = decode(data, bilevel=True) if fmt in ("png", "tiff") else decode(data)
+    except (ValueError, struct.error, zlib.error, IndexError):
         return []  # malformed / non-bilevel keeps the figure-only shape (C7)
     if _count_mid(gray) * 2 > w * h:
-        return []  # majority-mid raster: a photo/gradient, not a text render
-    return ocr_gray_text(w, h, gray)
-
-
-def ocr_jpeg_text(data: bytes) -> list[str]:
-    """JPEG bytes → decoded text lines, or [].
-
-    Lossy formats can only carry exact-match glyph grids in the
-    near-lossless regime, so the gate is the quant table itself: every
-    luma quant value must be ≤ 2 (reconstruction error then ≤ ~2 gray
-    levels, which the 32/224 bilevel bands absorb). A photo's quant
-    table never passes, so the hot path pays a header parse — never an
-    entropy decode — per real-world JPEG."""
-    from documentconvert_spark.kernels.minijpeg import decode_jpeg_gray, parse_jpeg_quant
-
-    try:
-        if any(v > 2 for t in parse_jpeg_quant(data).values() for v in t):
-            return []
-        w, h, gray = decode_jpeg_gray(data)
-    except (ValueError, struct.error):
         return []
-    if _count_mid(gray) * 2 > w * h:
-        return []  # majority-mid raster: a near-lossless photo, not text
     return ocr_gray_text(w, h, gray)
 
 

@@ -1,11 +1,11 @@
-"""WebP lossless (VP8L) decoder — from scratch, no codec libs.
+"""WebP lossless (VP8L) bitstream decoder — from scratch, no codec libs.
 
 The reference's image route accepts real ``webp`` files
-(`services/document_service.py:652-665`); until now they stopped at
-header-sniffed dimensions. This module implements the public "WebP
-Lossless Bitstream Specification" end-to-end:
+(`services/document_service.py:652-665`). This module decodes one VP8L
+chunk payload to ARGB pixels per the public "WebP Lossless Bitstream
+Specification"; the RIFF container walk and the luma fold live in
+kernels/raster.decode_webp_gray, the image layer's WebP entry point:
 
-* RIFF container walk (VP8L directly or nested under VP8X);
 * LSB-first bit reader refilled a word at a time; canonical prefix
   codes transmitted either as "simple" (1–2 symbols) or via the
   DEFLATE-style code-length code (19-symbol alphabet in the spec's
@@ -21,30 +21,28 @@ Lossless Bitstream Specification" end-to-end:
   pixel bundling for palettes of ≤16 colors).
 
 The entropy decode is serial (LZ77 copies are list slices); every
-inverse transform and the luma fold run on uint32 numpy arrays. The
+inverse transform runs on uint32 numpy arrays. The
 predictor's left-neighbor modes are a serial recurrence, so they are
 resolved per pixel after the row's above-only modes are applied as one
 array step.
 
-Lossy VP8 frames have no from-scratch decoder (a full DCT codec) and
-raise ValueError — callers keep the figure-only containment path, same
-as every other undecodable format (C7).
+Lossy VP8 frames have no from-scratch decoder (a full DCT codec): the
+container walk raises ValueError for them and callers keep the
+figure-only containment path, same as every other undecodable format
+(C7).
 
-Bounds: pixel count capped before allocation, LZ77 copies bounded by
-produced pixels, recursion fixed at one level (entropy/transform
-images), and every read is length-checked by the bit reader.
+Bounds: pixel count capped before allocation (`limits.MAX_PIXELS`),
+LZ77 copies bounded by produced pixels, recursion fixed at one level
+(entropy/transform images), and every read is length-checked by the bit
+reader.
 """
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
+from documentconvert_spark.kernels import limits
 from documentconvert_spark.kernels.limits import MAX_DECODED_BYTES
-from documentconvert_spark.kernels.miniocr import luma601
-
-_MAX_PIXELS_DEFAULT = 4 << 20
 
 # code-length-code transmission order (spec §6.2.2 / RFC 1951 analogue)
 _CLC_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
@@ -499,8 +497,7 @@ def _apply_subtract_green_inverse(pix: np.ndarray) -> np.ndarray:
             | ((pix + g) & 0xFF))
 
 
-def decode_vp8l(payload: bytes,
-                max_pixels: int = _MAX_PIXELS_DEFAULT) -> tuple[int, int, np.ndarray]:
+def decode_vp8l(payload: bytes) -> tuple[int, int, np.ndarray]:
     """VP8L chunk payload → (width, height, ARGB pixels as a 1-D uint32
     array in scan-line order)."""
     br = _Bits(payload)
@@ -511,7 +508,7 @@ def decode_vp8l(payload: bytes,
     br.get(1)  # alpha hint
     if br.get(3) != 0:
         raise ValueError("webp: unsupported VP8L version")
-    if w * h > max_pixels or w * h * 4 > MAX_DECODED_BYTES:
+    if w * h > limits.MAX_PIXELS or w * h * 4 > MAX_DECODED_BYTES:
         raise ValueError("webp: dimensions over cap")
     # transforms (each at most once), inverses applied in reverse order
     transforms: list[tuple] = []
@@ -575,30 +572,3 @@ def decode_vp8l(payload: bytes,
     if dec_w != w:
         raise ValueError("webp: bundled image without color indexing")
     return w, h, pix
-
-
-def decode_webp_gray(data: bytes,
-                     max_pixels: int = _MAX_PIXELS_DEFAULT
-                     ) -> tuple[int, int, np.ndarray]:
-    """WebP container bytes → (h, w) uint8 luma raster (lossless VP8L
-    only; lossy VP8 has no from-scratch decoder and raises for
-    figure-only fallback)."""
-    if data[:4] != b"RIFF" or data[8:12] != b"WEBP":
-        raise ValueError("webp: bad container")
-    pos = 12
-    payload = None
-    while pos + 8 <= len(data):
-        tag = data[pos:pos + 4]
-        (ln,) = struct.unpack_from("<I", data, pos + 4)
-        body = data[pos + 8:pos + 8 + ln]
-        if tag == b"VP8L":
-            payload = body
-            break
-        if tag == b"VP8 ":
-            raise ValueError("webp: lossy VP8 unsupported")
-        pos += 8 + ln + (ln & 1)  # chunks are even-padded
-    if payload is None:
-        raise ValueError("webp: no VP8L chunk")
-    w, h, pix = decode_vp8l(payload, max_pixels=max_pixels)
-    px = pix.reshape(h, w)
-    return w, h, luma601((px >> 16) & 0xFF, (px >> 8) & 0xFF, px & 0xFF)

@@ -1,4 +1,4 @@
-"""Real-PDF text+layout extractor — from scratch, stdlib only.
+"""Real-PDF text+layout extractor — from scratch, no PDF or codec library.
 
 The reference converts real PDFs through MinerU 2.0's GPU pipeline
 (`services/document_service.py:187-392`: bytes → ``pipeline_doc_analyze`` →
@@ -39,8 +39,11 @@ import math
 import re
 import zlib
 
+import numpy as np
+
 from documentconvert_spark.kernels import limits
-from documentconvert_spark.kernels.limits import inflate_capped
+from documentconvert_spark.kernels.limits import _lzw_decode, inflate_capped
+from documentconvert_spark.kernels.raster import _unfilter, image_media_ref
 from documentconvert_spark.kernels.spans import (
     MATH_FONT_RE,
     MONO_FONT_RE,
@@ -329,85 +332,29 @@ def _rle_decode(raw: bytes) -> bytes:
     return bytes(out)
 
 
-def _lzw_decode(raw: bytes, early_change: int = 1,
-                cap: int | None = None) -> bytes:
-    """LZWDecode (ISO 32000 §7.4.4, TIFF-style): 9→12-bit variable-width
-    codes over 8-bit data; 256 clears the table, 257 is EOD, and the code
-    width grows one entry early under /EarlyChange 1 (the default).
-    `cap` tightens the decoded-size bound below the global budget —
-    callers that know the exact output size (TIFF strips) pass it so a
-    high-expansion blob can't burn CPU up to the 256 MiB ceiling."""
-    out = bytearray()
-    table: list[bytes] = [bytes([b]) for b in range(256)] + [b"", b""]
-    prev: bytes | None = None
-    width = 9
-    buf = bits = 0
-    if cap is None:
-        cap = limits.MAX_DECODED_BYTES  # read once per call (hot loop)
-    for byte in raw:
-        buf = (buf << 8) | byte
-        bits += 8
-        while bits >= width:
-            bits -= width
-            code = (buf >> bits) & ((1 << width) - 1)
-            if code == 256:
-                del table[258:]
-                width = 9
-                prev = None
-                continue
-            if code == 257:
-                return bytes(out)
-            size = len(table)
-            if code < size:
-                entry = table[code]
-                if prev is not None and size < 4096:
-                    table.append(prev + entry[:1])
-            elif code == size and prev is not None:
-                entry = prev + prev[:1]
-                table.append(entry)
-            else:
-                raise ValueError("pdf: corrupt LZW stream")
-            out += entry
-            if len(out) > cap:
-                raise ValueError("pdf lzw: decoded size over cap")
-            prev = entry
-            if len(table) + early_change >= (1 << width) and width < 12:
-                width += 1
-    return bytes(out)
-
-
 def _png_unpredict(raw: bytes, colors: int, columns: int) -> bytes:
-    """Reverse PNG row predictors (used by xref streams, /Predictor >= 10)."""
+    """Reverse PNG row predictors (used by xref streams, /Predictor >= 10)
+    through the PNG decoder's row unfilter. `colors` is the byte step of
+    the left neighbor; a filter byte above 4 leaves its row as stored, and
+    a short last row unfilters as the prefix of a full one."""
     row_len = colors * columns
     # /Columns is file-controlled: a crafted value is a multi-GB
     # allocation, not a parse error — a real file's row never exceeds
     # the data that encodes it
     if row_len > len(raw):
         raise ValueError("pdf: predictor row wider than stream data")
+    if not row_len:
+        return b""
+    if colors < 0 or columns < 0:
+        raise ValueError("pdf: negative predictor parameters")
     out = bytearray()
-    prev = bytearray(row_len)
-    i = 0
-    while i < len(raw):
-        ft = raw[i]
-        row = bytearray(raw[i + 1 : i + 1 + row_len])
-        i += 1 + row_len
-        for j in range(row_len):
-            a = row[j - colors] if j >= colors else 0
-            b = prev[j]
-            if ft == 1:
-                row[j] = (row[j] + a) & 0xFF
-            elif ft == 2:
-                row[j] = (row[j] + b) & 0xFF
-            elif ft == 3:
-                row[j] = (row[j] + ((a + b) >> 1)) & 0xFF
-            elif ft == 4:
-                c = prev[j - colors] if j >= colors else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                row[j] = (row[j] + pr) & 0xFF
-        out += row
-        prev = row
+    prev = np.zeros(row_len, dtype=np.uint8)
+    for i in range(0, len(raw), row_len + 1):
+        stored = raw[i + 1:i + 1 + row_len]
+        row = np.zeros(row_len, dtype=np.uint8)
+        row[:len(stored)] = np.frombuffer(stored, dtype=np.uint8)
+        prev = _unfilter(raw[i], row, prev, colors) if raw[i] <= 4 else row
+        out += prev[:len(stored)].tobytes()
     return bytes(out)
 
 
@@ -1731,7 +1678,6 @@ def _interpret(pdf: _Pdf, body: bytes, resources: dict, page_no: int,
                         except Exception:
                             pass
                     elif sub == "Image":
-                        from documentconvert_spark.kernels.media import image_media_ref
                         dev = _mat_mul(_ID, ctm)
                         runs.append((page_no, dev[5], dev[4], 0.0, seq, "img",
                                      image_media_ref(xo[1]), False, False))

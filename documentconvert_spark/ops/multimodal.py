@@ -55,10 +55,14 @@ from documentconvert_spark.kernels.media import (
     decode_wav_samples,
     extract_media_files,
     sniff_av_meta,
-    sniff_image_meta,
 )
 from documentconvert_spark.kernels.miniflac import decode_flac_samples
-from documentconvert_spark.kernels.raster import decode_gif_frames, decode_raster_gray, dhash64
+from documentconvert_spark.kernels.raster import (
+    decode_gif_frames,
+    decode_raster_gray,
+    dhash64,
+    sniff_image_meta,
+)
 
 MAGIC = b"MINIMEDIA-1.0"
 MEDIA_TYPES = ("image", "audio", "video")

@@ -650,7 +650,7 @@ def _real_image_fixtures() -> list[tuple]:
 def _ensure_real_images_parquet() -> None:
     import hashlib
 
-    from documentconvert_spark.kernels.media import image_file_ref
+    from documentconvert_spark.kernels.raster import image_file_ref
 
     def rows():
         for doc_id, content, fmt, w, h in _real_image_fixtures():

@@ -13,10 +13,12 @@ address-space rlimit, and an output-size check.
 
 Usage:
   python scripts/fuzz_kernels.py [n_mutants_per_seed]      # parent: fan out
-  python scripts/fuzz_kernels.py --chunk SEED LO HI        # worker (internal)
+  python scripts/fuzz_kernels.py --chunk SEED ROUTE LO HI  # worker (internal)
 
-Exit code 0 = no hangs / no oversized outputs. Findings are written to
-_work/fuzz/<seed>_<idx>.bin for replay.
+The parent builds every seed once and writes its bytes to
+_work/fuzz/seeds/<seed>.bin; each worker reads only its own seed from
+there. Exit code 0 = no hangs / no oversized outputs. Findings are
+written to _work/fuzz/<seed>_<idx>.bin for replay.
 """
 
 from __future__ import annotations
@@ -34,6 +36,7 @@ sys.path.insert(0, REPO)
 REF_TEST_DIR = "/root/reference/test"
 EXTRA_DIR = os.path.join(REPO, "documentconvert_spark", "resources", "extra_docs")
 OUT_DIR = os.path.join(REPO, "_work", "fuzz")
+SEED_DIR = os.path.join(OUT_DIR, "seeds")
 PER_MUTANT_TIMEOUT_S = 5.0
 CHUNK_TIMEOUT_S = 600  # parent-side backstop for uninterruptible C loops
 AS_LIMIT_BYTES = 4 << 30
@@ -458,7 +461,7 @@ def _alarm(_sig, _frm):
     raise _Timeout
 
 
-def _run_chunk(seed_name: str, lo: int, hi: int) -> None:
+def _run_chunk(name: str, route: str, lo: int, hi: int) -> None:
     import resource
 
     resource.setrlimit(resource.RLIMIT_AS, (AS_LIMIT_BYTES, AS_LIMIT_BYTES))
@@ -474,9 +477,10 @@ def _run_chunk(seed_name: str, lo: int, hi: int) -> None:
     from documentconvert_spark.kernels.spans import Span
 
     def raster_route(data: bytes) -> list:
-        # drives the pixel decoders directly (the image dispatch only
-        # decodes pixels for OCR-gated png/jpeg; gif/bmp pixel paths are
-        # reached through the media stats op) — same containment contract
+        # drives the pixel decoders directly: the image dispatch decodes
+        # PNG/JPEG/GIF/BMP/TIFF/WebP pixels only behind the OCR header
+        # pre-gates and the bilevel abort, so most mutants of a photo
+        # never reach a full decode there — same containment contract
         _fmt, w, h, gray = decode_raster_gray(data)
         # ndarray.sum accumulates in a wide integer; a Python sum over
         # uint8 scalars can wrap
@@ -521,7 +525,8 @@ def _run_chunk(seed_name: str, lo: int, hi: int) -> None:
               "image": extract_image_any, "raster": raster_route,
               "video": video_route, "mp4": mp4_route, "sniff": sniff_route,
               "flac": flac_route, "gifanim": gifanim_route}
-    name, route, data = next(s for s in _seed_docs() if s[0] == seed_name)
+    with open(os.path.join(SEED_DIR, f"{name}.bin"), "rb") as fh:
+        data = fh.read()
     fn = routes[route]
     stats = {"ok": 0, "contained": 0, "timeout": 0, "memory": 0, "oversized": 0,
              "sniff_raise": 0}
@@ -562,13 +567,17 @@ def _run_chunk(seed_name: str, lo: int, hi: int) -> None:
 
 def main() -> None:
     if len(sys.argv) >= 2 and sys.argv[1] == "--chunk":
-        _run_chunk(sys.argv[2], int(sys.argv[3]), int(sys.argv[4]))
+        _run_chunk(sys.argv[2], sys.argv[3], int(sys.argv[4]), int(sys.argv[5]))
         return
     n = int(sys.argv[1]) if len(sys.argv) > 1 else N_DEFAULT
     seeds = _seed_docs()
+    os.makedirs(SEED_DIR, exist_ok=True)
+    for name, _route, data in seeds:
+        with open(os.path.join(SEED_DIR, f"{name}.bin"), "wb") as fh:
+            fh.write(data)
     chunk = 50
-    jobs = [(name, lo, min(lo + chunk, n))
-            for name, _route, _data in seeds for lo in range(0, n, chunk)]
+    jobs = [(name, route, lo, min(lo + chunk, n))
+            for name, route, _data in seeds for lo in range(0, n, chunk)]
     # a few chunks at a time; each is its own process so a hard (C-level)
     # hang is killed by the parent timeout and reported with its range
     totals = {"ok": 0, "contained": 0, "timeout": 0, "memory": 0, "oversized": 0,
@@ -601,9 +610,10 @@ def main() -> None:
 
     while pending or running:
         while pending and len(running) < max(os.cpu_count() - 2, 1):
-            name, lo, hi = pending.pop()
+            name, route, lo, hi = pending.pop()
             p = subprocess.Popen(
-                [sys.executable, os.path.abspath(__file__), "--chunk", name, str(lo), str(hi)],
+                [sys.executable, os.path.abspath(__file__), "--chunk", name, route,
+                 str(lo), str(hi)],
                 stdout=subprocess.PIPE, text=True, cwd=REPO)
             running.append((p, name, lo, hi))
         if running and all(p.poll() is None for p, *_ in running):

@@ -20,9 +20,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from documentconvert_spark.ingest import _SUFFIX_TO_TYPE
-from documentconvert_spark.kernels.raster import decode_raster_gray
 from documentconvert_spark.kernels.markdown import spans_to_markdown
-from documentconvert_spark.kernels.media import extract_media_files, sniff_image_meta
+from documentconvert_spark.kernels.media import extract_media_files
+from documentconvert_spark.kernels.raster import decode_raster_gray, sniff_image_meta
 from documentconvert_spark.udfs import _KERNELS
 
 REF = "/root/reference/test"

@@ -59,12 +59,12 @@ def test_progressive_flat_image_is_eob_runs_only():
 
 def test_progressive_ocr_end_to_end():
     from documentconvert_spark.kernels.detect import extract_image_any
-    from documentconvert_spark.kernels.miniocr import ocr_jpeg_text
+    from documentconvert_spark.kernels.miniocr import ocr_image_text
 
     gw, gh, tg = _render_text_grid(["PROGRESSIVE 99", "SCAN TEST"], 2, 8)
     pj = encode_gray_jpeg_progressive(gw, gh, tg, ycbcr420=True)
     # the quant gate reads DQT (all ones) and passes without entropy work
-    assert ocr_jpeg_text(pj) == ["PROGRESSIVE 99", "SCAN TEST"]
+    assert ocr_image_text(pj, "jpeg") == ["PROGRESSIVE 99", "SCAN TEST"]
     spans = extract_image_any(pj)
     assert [s.kind for s in spans] == ["figure", "paragraph", "paragraph"]
     assert spans[1].text == "PROGRESSIVE 99"
@@ -102,7 +102,7 @@ def test_progressive_malformed_contained():
 def test_progressive_dc_overflow_contained():
     # Al=15 + max-category diffs accumulate a DC far past int32: must be
     # a ValueError, not an OverflowError escaping the (ValueError,
-    # struct.error) containment in ocr_jpeg_text (review finding, PoC'd)
+    # struct.error) containment in ocr_image_text (review finding, PoC'd)
     def seg(marker, body):
         return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
 

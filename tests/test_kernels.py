@@ -16,16 +16,12 @@ from documentconvert_spark.corpus import (
     generate_corpus,
     make_doc,
 )
-from documentconvert_spark.kernels import (
-    classify_error,
-    ensure_utf8,
-    error_markdown,
-    extract_minidom,
-    extract_miniimg,
-    extract_minipdf,
-    repair_mojibake,
-    spans_to_markdown,
-)
+from documentconvert_spark.kernels.encoding import ensure_utf8, repair_mojibake
+from documentconvert_spark.kernels.errors import classify_error
+from documentconvert_spark.kernels.markdown import error_markdown, spans_to_markdown
+from documentconvert_spark.kernels.minidom import extract_minidom
+from documentconvert_spark.kernels.miniimg import extract_miniimg
+from documentconvert_spark.kernels.minipdf import extract_minipdf
 from documentconvert_spark.kernels.spans import KINDS
 
 FN = {"pdf": extract_minipdf, "markup": extract_minidom, "image": extract_miniimg}

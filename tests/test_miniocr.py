@@ -1,17 +1,15 @@
-"""miniocr: from-scratch PNG decode + 5×7 bitmap-glyph matching (C4 text
-parity). Generator (corpus.render_text_png, own encoder) vs parser
-(kernels/miniocr.py) split — same oracle style as the synthetic corpus."""
+"""OCR over the image layer: from-scratch PNG decode (kernels/raster.py)
++ 5×7 bitmap-glyph matching (kernels/miniocr.py) (C4 text parity).
+Generator (corpus.render_text_png, own encoder) vs parser split — same
+oracle style as the synthetic corpus."""
 
 from __future__ import annotations
 
 import pytest
 
 from documentconvert_spark.corpus import encode_png, render_text_png
-from documentconvert_spark.kernels.miniocr import (
-    FONT_5X7,
-    decode_png_gray,
-    ocr_png_text,
-)
+from documentconvert_spark.kernels.miniocr import FONT_5X7, ocr_image_text
+from documentconvert_spark.kernels.raster import decode_png_gray
 
 
 def _filter0(rows: list) -> bytes:
@@ -22,21 +20,21 @@ def _filter0(rows: list) -> bytes:
 def test_round_trip_all_glyphs(scale):
     alphabet = "".join(sorted(FONT_5X7))
     lines = [alphabet[i:i + 12] for i in range(0, len(alphabet), 12)]
-    assert ocr_png_text(render_text_png(lines, scale=scale)) == lines
+    assert ocr_image_text(render_text_png(lines, scale=scale), "png") == lines
 
 
 def test_round_trip_sentences_with_spaces():
     lines = ["HELLO SPARK WORLD", "LINE 2: DEDUP + ANN!", "THE END."]
-    assert ocr_png_text(render_text_png(lines, scale=2)) == lines
+    assert ocr_image_text(render_text_png(lines, scale=2), "png") == lines
 
 
 def test_rgb_png_round_trip():
     lines = ["RGB VARIANT 123"]
-    assert ocr_png_text(render_text_png(lines, scale=2, color=True)) == lines
+    assert ocr_image_text(render_text_png(lines, scale=2, color=True), "png") == lines
 
 
 def test_lowercase_renders_as_uppercase():
-    assert ocr_png_text(render_text_png(["hello"], scale=2)) == ["HELLO"]
+    assert ocr_image_text(render_text_png(["hello"], scale=2), "png") == ["HELLO"]
 
 
 def test_all_scanline_filters_decode():
@@ -63,7 +61,7 @@ def test_all_scanline_filters_decode():
             out.append((v - pred) & 0xFF)
         prev = row
 
-    assert ocr_png_text(encode_png(w, h, bytes(out))) == ["FILTER TEST 42"]
+    assert ocr_image_text(encode_png(w, h, bytes(out)), "png") == ["FILTER TEST 42"]
 
 
 def test_photo_like_noise_returns_no_text():
@@ -75,7 +73,7 @@ def test_photo_like_noise_returns_no_text():
     w = h = 64
     raster = b"".join(
         b"\x00" + bytes(rng.randrange(256) for _ in range(w)) for _ in range(h))
-    assert ocr_png_text(encode_png(w, h, raster)) == []
+    assert ocr_image_text(encode_png(w, h, raster), "png") == []
 
 
 def test_single_unknown_glyph_rejects_whole_image():
@@ -90,7 +88,7 @@ def test_single_unknown_glyph_rejects_whole_image():
     for dy in range(2):
         for dx in range(2):
             rows[8 + dy][8 + dx] = 0
-    assert ocr_png_text(encode_png(w, h, _filter0(rows))) == []
+    assert ocr_image_text(encode_png(w, h, _filter0(rows)), "png") == []
 
 
 def test_photo_input_aborts_on_first_rows():
@@ -104,14 +102,14 @@ def test_photo_input_aborts_on_first_rows():
     w, h, rows = decode_png_gray(src)
     rows[0][0] = 128  # one soft pixel in the margin: now tolerated
     aa = encode_png(w, h, _filter0(rows))
-    assert ocr_png_text(aa) == ["FAST PATH"]
+    assert ocr_image_text(aa, "png") == ["FAST PATH"]
     # a photo-like raster (every pixel mid-gray) aborts the bilevel
     # stream on its first row
     photo = [bytearray([128] * w) for _ in range(h)]
     ph = encode_png(w, h, _filter0(photo))
     with pytest.raises(ValueError, match="bilevel"):
         decode_png_gray(ph, bilevel=True)
-    assert ocr_png_text(ph) == []
+    assert ocr_image_text(ph, "png") == []
     # the permissive decode still reads it fully
     assert decode_png_gray(ph)[0] == w
 
@@ -135,14 +133,14 @@ def test_streamed_inflate_is_linear_in_raster():
 
 
 def test_blank_png_returns_no_text():
-    assert ocr_png_text(render_text_png([""], scale=2)) == []
+    assert ocr_image_text(render_text_png([""], scale=2), "png") == []
 
 
 def test_truncated_and_garbage_inputs_contained():
     good = render_text_png(["OK"], scale=2)
-    assert ocr_png_text(good[:20]) == []
-    assert ocr_png_text(b"\x89PNG\r\n\x1a\nnotachunk") == []
-    assert ocr_png_text(b"") == []
+    assert ocr_image_text(good[:20], "png") == []
+    assert ocr_image_text(b"\x89PNG\r\n\x1a\nnotachunk", "png") == []
+    assert ocr_image_text(b"", "png") == []
     with pytest.raises(ValueError):
         decode_png_gray(b"JFIF")
     # truncated IDAT (inflates to less than the raster) is contained too
@@ -280,28 +278,28 @@ def test_antialiased_render_decodes_to_exact_text():
         encode_gray_bmp,
         encode_gray_png,
     )
-    from documentconvert_spark.kernels.miniocr import ocr_png_text, ocr_raster_text
+    from documentconvert_spark.kernels.miniocr import ocr_image_text
 
     for scale in (2, 3):
         lines = ["AA ROUND TRIP 9", "EDGE CASE = OK!"]
         w, h, grid = _render_text_grid(lines, scale, 8)
         aa = antialias_grid(grid)
         assert any(32 < p < 224 for row in aa for p in row)  # genuinely soft
-        assert ocr_png_text(encode_gray_png(w, h, aa)) == lines
-        assert ocr_raster_text(encode_gray_bmp(w, h, aa)) == lines
+        assert ocr_image_text(encode_gray_png(w, h, aa), "png") == lines
+        assert ocr_image_text(encode_gray_bmp(w, h, aa), "bmp") == lines
 
 
 def test_antialiased_tiff_and_webp_fixtures_decode():
     import os
 
-    from documentconvert_spark.kernels.miniocr import ocr_raster_text
+    from documentconvert_spark.kernels.miniocr import ocr_image_text
 
     res = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                        "documentconvert_spark", "resources", "extra_docs")
     with open(os.path.join(res, "fixture_ocr_aa_plate.tiff"), "rb") as f:
-        assert ocr_raster_text(f.read()) == ["RACK 12 BAY 3", "HANDLE WITH CARE"]
+        assert ocr_image_text(f.read(), "tiff") == ["RACK 12 BAY 3", "HANDLE WITH CARE"]
     with open(os.path.join(res, "fixture_ocr_aa_tag.webp"), "rb") as f:
-        assert ocr_raster_text(f.read()) == ["SMOOTH TAG 77", "BLUR SCALE 3"]
+        assert ocr_image_text(f.read(), "webp") == ["SMOOTH TAG 77", "BLUR SCALE 3"]
 
 
 def test_photo_like_rasters_still_bail_fast():
@@ -309,14 +307,14 @@ def test_photo_like_rasters_still_bail_fast():
     gradient is cumulative-majority-mid from its first rows, and the PNG
     streaming decode aborts without inflating the full raster."""
     from documentconvert_spark.corpus import encode_gray_bmp, encode_gray_png
-    from documentconvert_spark.kernels.miniocr import ocr_png_text, ocr_raster_text
+    from documentconvert_spark.kernels.miniocr import ocr_image_text
 
     grad = [bytearray((x + y) % 256 for x in range(120)) for y in range(80)]
-    assert ocr_png_text(encode_gray_png(120, 80, grad)) == []
-    assert ocr_raster_text(encode_gray_bmp(120, 80, grad)) == []
+    assert ocr_image_text(encode_gray_png(120, 80, grad), "png") == []
+    assert ocr_image_text(encode_gray_bmp(120, 80, grad), "bmp") == []
     # mid-heavy noise (checker of 100/150) — rejected, not misread
     noise = [bytearray(100 if (x + y) % 2 else 150 for x in range(64)) for y in range(64)]
-    assert ocr_png_text(encode_gray_png(64, 64, noise)) == []
+    assert ocr_image_text(encode_gray_png(64, 64, noise), "png") == []
 
 
 def test_distorted_antialias_rejected_not_misread():
@@ -328,7 +326,7 @@ def test_distorted_antialias_rejected_not_misread():
         antialias_grid,
         encode_gray_png,
     )
-    from documentconvert_spark.kernels.miniocr import ocr_png_text
+    from documentconvert_spark.kernels.miniocr import ocr_image_text
 
     lines = ["DAMAGE TEST 5"]
     w, h, grid = _render_text_grid(lines, 2, 8)
@@ -338,8 +336,8 @@ def test_distorted_antialias_rejected_not_misread():
     y0 = ys[len(ys) // 2]
     x0 = next(x for x in range(w) if aa[y0][x] < 128)
     aa[y0][x0] = 255
-    assert ocr_png_text(encode_gray_png(w, h, aa)) in ([], None) or \
-        ocr_png_text(encode_gray_png(w, h, aa)) != lines
+    assert ocr_image_text(encode_gray_png(w, h, aa), "png") in ([], None) or \
+        ocr_image_text(encode_gray_png(w, h, aa), "png") != lines
 
 
 def test_proportional_render_roundtrip():
@@ -349,11 +347,11 @@ def test_proportional_render_roundtrip():
     are >= 7s; proportional renders advance spaces 6 cols so word gaps
     are >= 7s too)."""
     from documentconvert_spark.corpus import render_text_png_prop
-    from documentconvert_spark.kernels.miniocr import ocr_png_text
+    from documentconvert_spark.kernels.miniocr import ocr_image_text
 
     lines = ["PROPORTIONAL 123", "IIII MMMM: MIX!"]
     for scale in (1, 2, 3):
-        assert ocr_png_text(render_text_png_prop(lines, scale=scale)) == lines
+        assert ocr_image_text(render_text_png_prop(lines, scale=scale), "png") == lines
 
 
 def test_kerned_overlap_needs_component_boxes():
@@ -367,14 +365,13 @@ def test_kerned_overlap_needs_component_boxes():
     from documentconvert_spark.kernels.miniocr import (
         _boxes_by_columns,
         _match_boxes,
-        decode_png_gray,
-        ocr_png_text,
+        ocr_image_text,
     )
 
     lines = ["KERNED L- L- GO"]
     kern = {(0, 8): -3, (0, 11): -3}
     png = render_text_png_prop(lines, scale=2, kern=kern)
-    assert ocr_png_text(png) == lines
+    assert ocr_image_text(png, "png") == lines
     # pin that the COLUMN pass alone cannot decode this render — the
     # component fallback is load-bearing, not decorative
     w, h, gray = decode_png_gray(png, bilevel=True)
@@ -399,8 +396,7 @@ def test_narrow_kerned_overlap_below_retry_threshold_rejected_not_misread():
         _boxes_by_columns,
         _boxes_by_components,
         _match_boxes,
-        decode_png_gray,
-        ocr_png_text,
+        ocr_image_text,
     )
 
     png = render_text_png_prop(["AB.-CD"], scale=2, kern={(0, 3): -3})
@@ -413,7 +409,7 @@ def test_narrow_kerned_overlap_below_retry_threshold_rejected_not_misread():
     assert len(boxes) == 5  # '.' and '-' share one column box ...
     assert max(x1 - x0 for x0, x1, *_ in boxes) <= GLYPH_W * s  # ... not "wide"
     assert _match_boxes(ink, _boxes_by_components(ink, b0, b1, w), s) == "AB.-CD"
-    assert ocr_png_text(png) == []
+    assert ocr_image_text(png, "png") == []
 
 
 def test_kerned_touching_ink_rejected_not_misread():
@@ -422,12 +418,12 @@ def test_kerned_touching_ink_rejected_not_misread():
     no glyph) — the image must reject to figure-only, never emit
     garbled text."""
     from documentconvert_spark.corpus import render_text_png_prop
-    from documentconvert_spark.kernels.miniocr import ocr_png_text
+    from documentconvert_spark.kernels.miniocr import ocr_image_text
 
     # L is 5 cols wide; shift -6 overlays the dash onto the L's bottom
     # rows region, guaranteeing pixel contact at any scale
     png = render_text_png_prop(["AB L- CD"], scale=2, kern={(0, 4): -6})
-    assert ocr_png_text(png) == []
+    assert ocr_image_text(png, "png") == []
 
 
 def test_multipart_glyphs_assemble_under_component_boxes():
@@ -436,12 +432,12 @@ def test_multipart_glyphs_assemble_under_component_boxes():
     dot and body separately. Forced through the CC path by kerning one
     harmless overlap into the line."""
     from documentconvert_spark.corpus import render_text_png_prop
-    from documentconvert_spark.kernels.miniocr import ocr_png_text
+    from documentconvert_spark.kernels.miniocr import ocr_image_text
 
     lines = ["WAIT! WHY? SEE: L- OK"]
     kern = {(0, 17): -3}  # the dash after L, index: W0A1I2T3!4 ...
     png = render_text_png_prop(lines, scale=2, kern=kern)
-    assert ocr_png_text(png) == lines
+    assert ocr_image_text(png, "png") == lines
 
 
 def test_prop_render_negative_kern_edges():
@@ -452,14 +448,14 @@ def test_prop_render_negative_kern_edges():
     import pytest
 
     from documentconvert_spark.corpus import render_text_png_prop
-    from documentconvert_spark.kernels.miniocr import ocr_png_text
+    from documentconvert_spark.kernels.miniocr import ocr_image_text
 
     with pytest.raises(ValueError):
         render_text_png_prop(["-X"], scale=2, kern={(0, 0): -5})
     # reviewer repro: '.' kerned under the last W's overhang previously
     # crashed with IndexError (grid sized from the final cursor only)
     png = render_text_png_prop(["WW."], scale=2, kern={(0, 2): -4})
-    assert ocr_png_text(png) in (["WW."], [])  # renders; exactness may reject
+    assert ocr_image_text(png, "png") in (["WW."], [])  # renders; exactness may reject
 
 
 def test_mixed_font_scale_per_band_inference():
@@ -471,7 +467,7 @@ def test_mixed_font_scale_per_band_inference():
     rejected. Exact-or-nothing survives: a band that matches at NO
     candidate scale rejects the image."""
     from documentconvert_spark.corpus import encode_gray_png
-    from documentconvert_spark.kernels.miniocr import ocr_png_text
+    from documentconvert_spark.kernels.miniocr import ocr_image_text
     # the REAL fixture compositor — this test also pins the generator of
     # the committed fixture_ocr_mixed_scale.png golden
     from scripts.gen_extra_fixtures import _vstack_grids, mixed_scale_png
@@ -481,21 +477,21 @@ def test_mixed_font_scale_per_band_inference():
         return encode_gray_png(w, h, rows)
 
     png = vstack([(["BIG TITLE 9"], 3), (["SMALL BODY.", "LINE TWO!"], 2)])
-    assert ocr_png_text(png) == ["BIG TITLE 9", "SMALL BODY.", "LINE TWO!"]
+    assert ocr_image_text(png, "png") == ["BIG TITLE 9", "SMALL BODY.", "LINE TWO!"]
     # punctuation-only line at the body scale inherits the global scale
     png2 = vstack([(["WIDE HEAD"], 2), (["..."], 2)])
-    assert ocr_png_text(png2) == ["WIDE HEAD", "..."]
+    assert ocr_image_text(png2, "png") == ["WIDE HEAD", "..."]
     # the two review-reproduced regressions of the first per-band cut:
     # a sub-glyph punctuation band whose own quotient is wrong (scale-7
     # render: '-' is exactly GLYPH_H px tall), and a punctuation-only
     # body line under a DIFFERENT-scale headline (true scale appears
     # only as another band's quotient) — the candidate ladder covers both
-    assert ocr_png_text(render_text_png(["HELLO", "---"], scale=7)) == \
+    assert ocr_image_text(render_text_png(["HELLO", "---"], scale=7), "png") == \
         ["HELLO", "---"]
     png3 = vstack([(["BIG TITLE"], 3), (["BODY LINE.", "..."], 2)])
-    assert ocr_png_text(png3) == ["BIG TITLE", "BODY LINE.", "..."]
+    assert ocr_image_text(png3, "png") == ["BIG TITLE", "BODY LINE.", "..."]
     # the committed golden's generator round-trips
-    assert ocr_png_text(mixed_scale_png()) == [
+    assert ocr_image_text(mixed_scale_png(), "png") == [
         "QUARTERLY REPORT", "REVENUE UP 12.5", "COSTS FLAT: GOOD!"]
     # exact-or-nothing under the ladder: a band that matches at NO
     # candidate scale (a solid 10x10 blob stacked under clean text —
@@ -509,4 +505,4 @@ def test_mixed_font_scale_per_band_inference():
             blob[y][x] = 0
     bad = encode_gray_png(blob_w, ht + 6 + 10, rows_t + [bytearray([255]) * blob_w
                           for _ in range(6)] + blob)
-    assert ocr_png_text(bad) == []
+    assert ocr_image_text(bad, "png") == []

@@ -118,11 +118,8 @@ def test_real_image_document_route():
     import struct
 
     from documentconvert_spark.kernels.detect import extract_image_any
-    from documentconvert_spark.kernels.media import (
-        extract_media_files,
-        image_file_ref,
-        sniff_image_meta,
-    )
+    from documentconvert_spark.kernels.media import extract_media_files
+    from documentconvert_spark.kernels.raster import image_file_ref, sniff_image_meta
 
     png = (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
            + struct.pack(">II", 640, 480) + b"\x08\x02\x00\x00\x00" + b"\x00" * 40)
@@ -147,7 +144,7 @@ def test_real_image_document_route():
 def test_webp_sniffing():
     import struct
 
-    from documentconvert_spark.kernels.media import sniff_image_meta
+    from documentconvert_spark.kernels.raster import sniff_image_meta
 
     # VP8L lossless: 14-bit w-1 / h-1 packed little-endian after signature
     bits = (99)  # w = 100
@@ -164,7 +161,7 @@ def test_webp_sniffing():
 def test_wmf_emf_dims_sniffing():
     import struct
 
-    from documentconvert_spark.kernels.media import sniff_image_meta
+    from documentconvert_spark.kernels.raster import sniff_image_meta
 
     # placeable WMF: bounding box in twips at 1440 twips/inch → 96 dpi px
     placeable = (b"\xd7\xcd\xc6\x9a" + b"\x00\x00"
@@ -195,7 +192,7 @@ def test_image_sniff_dims_are_int32_clamped():
     # Arrow Int32 cast in the media job's sniff batch (review finding)
     import struct
 
-    from documentconvert_spark.kernels.media import sniff_image_meta
+    from documentconvert_spark.kernels.raster import sniff_image_meta
 
     huge_png = (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
                 + struct.pack(">II", 0xFFFFFFFF, 10)
@@ -256,7 +253,7 @@ def test_tiff_entry_with_count_gt_one_is_value_offset_not_dimension():
     inline would misreport the dimension (r3 advice, media.py)."""
     import struct
 
-    from documentconvert_spark.kernels.media import sniff_image_meta
+    from documentconvert_spark.kernels.raster import sniff_image_meta
 
     def entry(tag, typ, count, val):
         return struct.pack("<HHII", tag, typ, count, val)

@@ -8,7 +8,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from documentconvert_spark.corpus import CLASSES, make_doc
-from documentconvert_spark.kernels import extract_minidom, extract_minipdf
+from documentconvert_spark.kernels.minidom import extract_minidom
+from documentconvert_spark.kernels.minipdf import extract_minipdf
 from documentconvert_spark.kernels.encoding import ensure_utf8, repair_mojibake
 from documentconvert_spark.kernels.markdown import spans_to_markdown
 from documentconvert_spark.kernels.spans import KINDS, Span, normalize_text
@@ -134,7 +135,8 @@ def test_vp8l_roundtrip_property(w, h, shape, rnd):
     """encode_vp8l ↔ decode_vp8l over ARBITRARY ARGB rasters and encoder
     shapes: lossless, so every shape must round-trip pixel-exact."""
     from documentconvert_spark.corpus import encode_vp8l
-    from documentconvert_spark.kernels.miniwebp import decode_webp_gray, decode_vp8l
+    from documentconvert_spark.kernels.miniwebp import decode_vp8l
+    from documentconvert_spark.kernels.raster import decode_webp_gray
 
     argb = [(rnd.randrange(256) << 24) | rnd.getrandbits(24) for _ in range(w * h)]
     kw = {"plain": {}, "lz77": {"lz77": True}, "cache": {"cache_bits": 4},
@@ -196,7 +198,7 @@ def test_png_matrix_roundtrip_property(w, h, shape, rnd):
     """Hand-packed PNG rasters across the pixel matrix (depth, color
     type, interlace) must decode back to the exact expected luma."""
     from documentconvert_spark.corpus import encode_png
-    from documentconvert_spark.kernels.miniocr import decode_png_gray
+    from documentconvert_spark.kernels.raster import decode_png_gray
 
     depth, ct, inter = shape
     channels = {0: 1, 2: 3, 3: 1, 4: 2}[ct]

@@ -32,17 +32,16 @@ from documentconvert_spark.corpus import (
     render_text_tiff,
     tiff_encode,
 )
-from documentconvert_spark.kernels.media import (
-    decode_wav_samples,
-    extract_media_files,
-    sniff_image_meta,
-)
+from documentconvert_spark.kernels import limits
+from documentconvert_spark.kernels.media import decode_wav_samples, extract_media_files
 from documentconvert_spark.kernels.minijpeg import decode_jpeg_gray, parse_jpeg_quant
-from documentconvert_spark.kernels.miniocr import ocr_jpeg_text
+from documentconvert_spark.kernels.miniocr import ocr_image_text
 from documentconvert_spark.kernels.raster import (
     decode_bmp_gray,
     decode_gif_gray,
+    decode_png_gray,
     decode_raster_gray,
+    sniff_image_meta,
 )
 
 REF_TEST = "/root/reference/test"
@@ -84,7 +83,7 @@ def test_jpeg_text_render_round_trip(scale):
 
 def test_jpeg_ocr_reads_exact_text():
     lines = ["MEMBER CARD 0042", "LEVEL = GOLD!"]
-    assert ocr_jpeg_text(render_text_jpeg(lines, scale=2)) == lines
+    assert ocr_image_text(render_text_jpeg(lines, scale=2), "jpeg") == lines
 
 
 def test_jpeg_ocr_rejects_photo_quant_without_decoding():
@@ -92,7 +91,7 @@ def test_jpeg_ocr_rejects_photo_quant_without_decoding():
     # find the DQT segment and raise one quant value past the gate
     i = data.index(b"\xff\xdb") + 5
     data[i + 10] = 16
-    assert ocr_jpeg_text(bytes(data)) == []
+    assert ocr_image_text(bytes(data), "jpeg") == []
 
 
 def test_real_carved_jpegs_decode_to_sniffed_dims():
@@ -114,8 +113,6 @@ def test_real_carved_pngs_decode():
     pngs = [t for t in carved_real_images() if t[1] == "png"]
     assert len(pngs) >= 10
     for name, _fmt, w, h, blob in pngs[:8]:  # cap: pure-Python unfilter cost
-        from documentconvert_spark.kernels.miniocr import decode_png_gray
-
         dw, dh, rows = decode_png_gray(blob)
         assert (dw, dh) == (w, h), name
 
@@ -190,11 +187,12 @@ def test_gif_truncated_raises():
         decode_gif_gray(gif_encode(9, 7, [i % 2 for i in range(40)], pal, min_code=2))
 
 
-def test_gif_decoded_size_capped():
+def test_gif_decoded_size_capped(monkeypatch):
     pal = [(0, 0, 0), (255, 255, 255)]
     data = gif_encode(100, 80, [0] * 8000, pal, min_code=2)
+    monkeypatch.setattr(limits, "MAX_PIXELS", 1000)
     with pytest.raises(ValueError, match="cap"):
-        decode_gif_gray(data, max_pixels=1000)
+        decode_gif_gray(data)
 
 
 # ------------------------------------------------------------------ BMP
@@ -364,32 +362,28 @@ def test_tiff_lzw_strip_cap_and_aliased_strips():
 def test_tiff_ocr_pre_gates(extra_doc):
     # palette photo TIFF bails on the ColorMap alone (no strip decode);
     # gray photo TIFF aborts at the first mid-gray strip
-    from documentconvert_spark.kernels.miniocr import (
-        _tiff_colormap_bilevel,
-        ocr_raster_text,
-    )
+    from documentconvert_spark.kernels.miniocr import _header_admits_text
     from documentconvert_spark.kernels.raster import decode_tiff_gray
 
     mosaic = extra_doc("fixture_mosaic.tiff")
-    assert not _tiff_colormap_bilevel(mosaic)
-    assert ocr_raster_text(mosaic) == []
+    assert not _header_admits_text(mosaic, "tiff")
+    assert ocr_image_text(mosaic, "tiff") == []
     # gray gradient in 1-row strips: bilevel decode must abort early
     w, h = 64, 64
     strips = [bytes((x * 4) % 256 for x in range(w)) for _ in range(h)]
     gray_photo = tiff_encode("<", w, h, 1, strips, 1)
     with pytest.raises(ValueError, match="not a bilevel"):
         decode_tiff_gray(gray_photo, bilevel=True)
-    assert ocr_raster_text(gray_photo) == []
+    assert ocr_image_text(gray_photo, "tiff") == []
     # and a clean text render still OCRs through the gated path
-    assert ocr_raster_text(render_text_tiff(["GATE OK 1"], scale=2)) == ["GATE OK 1"]
+    assert ocr_image_text(render_text_tiff(["GATE OK 1"], scale=2), "tiff") == ["GATE OK 1"]
 
 
 def test_tiff_ocr_through_image_dispatch(extra_doc):
     from documentconvert_spark.kernels.detect import extract_image_any
-    from documentconvert_spark.kernels.miniocr import ocr_raster_text
 
     data = render_text_tiff(["DOCK 9 BAY 4"], scale=3)
-    assert ocr_raster_text(data) == ["DOCK 9 BAY 4"]
+    assert ocr_image_text(data, "tiff") == ["DOCK 9 BAY 4"]
     spans = extract_image_any(data)
     assert [s.kind for s in spans] == ["figure", "paragraph"]
     assert spans[1].text == "DOCK 9 BAY 4"

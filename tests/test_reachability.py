@@ -12,7 +12,8 @@ strings). Code that only tests reach gets wired into a job or query, or
 deleted together with its tests; the allowlist below names the few kept
 on purpose. Private module-level names (leading underscore) follow the
 same rule with no allowlist: a helper only a test uses moves into that
-test.
+test. The package's own import graph, counting imports inside functions
+too, has no cycle: each layer imports only the layers under it.
 """
 
 from __future__ import annotations
@@ -120,3 +121,51 @@ def test_every_public_package_symbol_is_reached_from_non_test_code():
 def test_every_private_package_name_is_referenced_from_non_test_code():
     unreferenced = _unreached(private=True)
     assert unreferenced == [], f"unreferenced private names (delete or move into their test): {unreferenced}"
+
+
+def _module_name(path: Path) -> str:
+    parts = list(path.relative_to(REPO).with_suffix("").parts)
+    if parts[-1] == "__init__":
+        parts.pop()
+    return ".".join(parts)
+
+
+def _imported_modules(stmt: ast.stmt, importer: str, modules: set[str]) -> set[str]:
+    """Package modules one import statement names: ``import a.b`` names
+    ``a.b``; ``from a.b import c`` names ``a.b`` and, when ``c`` is a
+    module, ``a.b.c`` too (so ``from pkg import sub`` also runs the
+    package's ``__init__``)."""
+    if isinstance(stmt, ast.Import):
+        names = {a.name for a in stmt.names}
+    elif isinstance(stmt, ast.ImportFrom) and stmt.level == 0 and stmt.module:
+        names = {stmt.module} | {f"{stmt.module}.{a.name}" for a in stmt.names}
+    else:
+        return set()
+    return {m for m in names if m in modules and m != importer}
+
+
+def _import_cycles() -> list[tuple[str, ...]]:
+    """Each set of modules that import one another, directly or through
+    other package modules (a strongly connected component of >1 module)."""
+    files = sorted((REPO / PACKAGE).rglob("*.py"))
+    modules = {_module_name(p) for p in files}
+    graph = {}
+    for path in files:
+        name = _module_name(path)
+        tree = ast.parse(path.read_text(encoding="utf-8"), str(path))
+        graph[name] = set().union(*(_imported_modules(n, name, modules) for n in ast.walk(tree)))
+    reach = {}
+    for v in graph:
+        seen, todo = set(), list(graph[v])
+        while todo:
+            w = todo.pop()
+            if w not in seen:
+                seen.add(w)
+                todo.extend(graph[w])
+        reach[v] = seen
+    return sorted({tuple(sorted(w for w in reach[v] if v in reach[w])) for v in graph if v in reach[v]})
+
+
+def test_package_import_graph_is_acyclic():
+    cycles = _import_cycles()
+    assert not cycles, f"import cycles (move the shared code down a layer): {cycles}"

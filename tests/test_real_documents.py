@@ -29,7 +29,7 @@ RES = os.path.join(
     "documentconvert_spark", "resources",
 )
 
-pytestmark = pytest.mark.skipif(
+_needs_ref = pytest.mark.skipif(
     not os.path.isdir(REF), reason="reference sample corpus not mounted"
 )
 
@@ -51,6 +51,7 @@ def _dense(spans) -> bool:
 
 # ---------------------------------------------------------------- real PDF
 
+@_needs_ref
 def test_realpdf_reference_sample():
     spans = extract_realpdf(_read("服装识别需求描述.pdf"))
     assert len(spans) >= 15 and _dense(spans)
@@ -70,6 +71,7 @@ def test_realpdf_reference_sample():
     assert any("服装识别需求描述" in h for h in headings)
 
 
+@_needs_ref
 def test_realpdf_determinism():
     data = _read("服装识别需求描述.pdf")
     assert extract_realpdf(data) == extract_realpdf(data)
@@ -84,6 +86,7 @@ def test_realpdf_rejects_garbage():
 
 # ---------------------------------------------------------------- OOXML
 
+@_needs_ref
 def test_docx_reference_sample():
     spans = extract_docx(_read("智涌君.docx"))
     assert _dense(spans)
@@ -97,6 +100,7 @@ def test_docx_reference_sample():
     assert figs and all(r.startswith("image") for r in figs)
 
 
+@_needs_ref
 def test_pptx_reference_sample():
     spans = extract_pptx(_read("AI通识课程建设方案.pptx"))
     assert _dense(spans)
@@ -106,6 +110,7 @@ def test_pptx_reference_sample():
     assert figs  # p:pic blips resolved via slide rels
 
 
+@_needs_ref
 def test_xlsx_reference_sample():
     spans = extract_xlsx(_read("人工智能竞赛训练平台 v20250629.xlsx"))
     assert _dense(spans)
@@ -118,6 +123,7 @@ def test_xlsx_reference_sample():
 
 # ---------------------------------------------------------------- OLE .doc
 
+@_needs_ref
 @pytest.mark.parametrize("name,phrase", [
     ("2024年浙江省中考数学试卷.doc", "选择题"),
     ("2025年杭州中考科学试卷及答案.doc", "科学试卷"),
@@ -130,6 +136,7 @@ def test_doc_reference_samples(name, phrase):
     assert phrase in "".join(s.text for s in spans)
 
 
+@_needs_ref
 def test_doc_table_cell_marks():
     spans = extract_doc(_read("2024年浙江省中考数学试卷.doc"))
     tables = [s for s in spans if s.kind == "table"]
@@ -138,6 +145,7 @@ def test_doc_table_cell_marks():
 
 # ------------------------------------------------------------ sniffing dispatch
 
+@_needs_ref
 def test_detect_routes_by_magic_not_suffix():
     # the office path must route zips, OLE and markup correctly
     assert extract_office_any(_read("智涌君.docx"))
@@ -150,6 +158,7 @@ def test_detect_routes_by_magic_not_suffix():
 
 # ------------------------------------------------------------ golden regression
 
+@_needs_ref
 def test_real_goldens_match_committed_parquet():
     """Every kernel output must equal the committed expectation parquet —
     byte-exact (kind, text, media_ref, offset) per doc_id."""
@@ -196,6 +205,7 @@ def test_real_goldens_match_committed_parquet():
 
 # ------------------------------------------------------------ Spark end-to-end
 
+@_needs_ref
 def test_spark_extracts_reference_corpus(spark):
     """binaryFile ingest → sniffing dispatch UDF → spans: all 7 reference
     samples complete with zero error rows and golden-equal span counts."""
@@ -232,10 +242,13 @@ def test_spark_extracts_reference_corpus(spark):
 
 # ------------------------------------------------------------ real media bytes
 
+@_needs_ref
 def test_real_media_extraction_kernel():
-    """Embedded media pulled from the real containers with header-sniffed
-    metadata (kernels/media.py) — actual bytes, no codec libs."""
-    from documentconvert_spark.kernels.media import extract_media_files, sniff_image_meta
+    """Embedded media pulled from the real containers (kernels/media.py)
+    with header-sniffed metadata (kernels/raster.py) — actual bytes, no
+    codec libs."""
+    from documentconvert_spark.kernels.media import extract_media_files
+    from documentconvert_spark.kernels.raster import sniff_image_meta
 
     media = extract_media_files(_read("AI通识课程建设方案.pptx"))
     refs = {r for r, _ in media}
@@ -259,6 +272,7 @@ def test_real_media_extraction_kernel():
                for _r, blob in doc_media)
 
 
+@_needs_ref
 def test_real_media_refs_match_figure_spans():
     """The media table keys line up with the figure spans the extractors
     emit (J3 join integrity on real data)."""
@@ -273,6 +287,7 @@ def test_real_media_refs_match_figure_spans():
         assert span_refs <= media_refs, f"{name}: dangling figure refs {span_refs - media_refs}"
 
 
+@_needs_ref
 def test_spark_real_media_table(spark):
     from documentconvert_spark.ingest import binary_dir_as_raw
     from documentconvert_spark.ops.multimodal import extract_real_media

@@ -339,7 +339,8 @@ def test_lzw_and_runlength_filters():
     """LZWDecode against the ISO 32000 §7.4.4.2 worked example, an
     encoder round-trip long enough to cross the 9→10-bit width switch,
     and RunLengthDecode literal/repeat/EOD handling."""
-    from documentconvert_spark.kernels.realpdf import _lzw_decode, _rle_decode
+    from documentconvert_spark.kernels.limits import _lzw_decode
+    from documentconvert_spark.kernels.realpdf import _rle_decode
 
     spec = bytes([0x80, 0x0B, 0x60, 0x50, 0x22, 0x0C, 0x0C, 0x85, 0x01])
     assert _lzw_decode(spec) == bytes([45] * 5 + [65] + [45] * 3 + [66])
@@ -368,7 +369,7 @@ def test_lzw_and_runlength_filters():
 
 
 def test_lzw_corrupt_stream_raises():
-    from documentconvert_spark.kernels.realpdf import _lzw_decode
+    from documentconvert_spark.kernels.limits import _lzw_decode
 
     with pytest.raises(ValueError):
         # first code after clear references an unassigned table slot

@@ -13,6 +13,7 @@ import struct
 import pytest
 
 from documentconvert_spark.corpus import render_avi
+from documentconvert_spark.kernels import limits
 from documentconvert_spark.kernels.media import (
     _MAX_AVI_FRAMES,
     decode_avi_frames,
@@ -90,12 +91,14 @@ def test_frame_size_disagreement_raises():
         decode_avi_frames(bytes(data))
 
 
-def test_pixel_budget_charged_before_decode():
+def test_pixel_budget_charged_before_decode(monkeypatch):
     # 64x64 = 4096 px/frame; budget of 3 frames fails ON the 4th frame
     data = render_avi(64, 64, _grids(64, 64, 4), codec="DIB ")
+    monkeypatch.setattr(limits, "MAX_PIXELS", 4096 * 3)
     with pytest.raises(ValueError, match="over budget"):
-        decode_avi_frames(data, max_pixels=4096 * 3)
-    w, h, _fps, frames = decode_avi_frames(data, max_pixels=4096 * 4)
+        decode_avi_frames(data)
+    monkeypatch.setattr(limits, "MAX_PIXELS", 4096 * 4)
+    w, h, _fps, frames = decode_avi_frames(data)
     assert len(frames) == 4
 
 
@@ -345,12 +348,12 @@ def test_real_video_keyframes_rule(spark):
 def test_ocr_raster_text_gif_bmp(extra_doc):
     from documentconvert_spark.corpus import render_text_bmp, render_text_gif
     from documentconvert_spark.kernels.detect import extract_image_any
-    from documentconvert_spark.kernels.miniocr import ocr_raster_text
+    from documentconvert_spark.kernels.miniocr import ocr_image_text
 
-    assert ocr_raster_text(render_text_gif(["GO LEFT 12"])) == ["GO LEFT 12"]
-    assert ocr_raster_text(render_text_bmp(["STOP 99"])) == ["STOP 99"]
+    assert ocr_image_text(render_text_gif(["GO LEFT 12"]), "gif") == ["GO LEFT 12"]
+    assert ocr_image_text(render_text_bmp(["STOP 99"]), "bmp") == ["STOP 99"]
     # a multicolor raster bails to figure-only (mid-gray guard)
-    assert ocr_raster_text(extra_doc("fixture_tiles.gif")) == []
+    assert ocr_image_text(extra_doc("fixture_tiles.gif"), "gif") == []
     spans = extract_image_any(render_text_bmp(["STOP 99"]))
     assert [s.kind for s in spans] == ["figure", "paragraph"]
     assert spans[1].text == "STOP 99"
@@ -359,7 +362,7 @@ def test_ocr_raster_text_gif_bmp(extra_doc):
 def test_tiff_dims_sniffed_both_endians():
     import struct as _st
 
-    from documentconvert_spark.kernels.media import sniff_image_meta
+    from documentconvert_spark.kernels.raster import sniff_image_meta
 
     def tiff(le, w, h):
         end = "<" if le else ">"
@@ -378,8 +381,8 @@ def test_review_fixes_tiff_gif_audio_containment(spark):
     import struct as _st
 
     from documentconvert_spark.kernels.detect import extract_image_any
-    from documentconvert_spark.kernels.media import sniff_image_meta
-    from documentconvert_spark.kernels.miniocr import ocr_raster_text
+    from documentconvert_spark.kernels.miniocr import _header_admits_text, ocr_image_text
+    from documentconvert_spark.kernels.raster import sniff_image_meta
     from documentconvert_spark.queries_extraction import _wav_pcm_bytes
 
     # TIFF LONG dims >= 2^31 clamp to None (int32 casts downstream)
@@ -394,7 +397,7 @@ def test_review_fixes_tiff_gif_audio_containment(spark):
     # byte): figure-only, never an IndexError out of the route
     gif = (b"GIF89a" + _st.pack("<HH", 8, 8) + bytes([0x80, 0, 0])
            + bytes(6) + b"\x2C" + _st.pack("<HHHH", 0, 0, 8, 8) + b"\x00")
-    assert ocr_raster_text(gif) == []
+    assert ocr_image_text(gif, "gif") == []
     assert [s.kind for s in extract_image_any(gif)] == ["figure"]
 
     # photo-palette GIF bails before the LZW decode (palette pre-gate).
@@ -402,13 +405,12 @@ def test_review_fixes_tiff_gif_audio_containment(spark):
     # minority of mid tones (edge pixels of a soft render) passes
     # through to the post-threshold matcher, but a majority-mid palette
     # (a photo) still bails on the header alone.
-    from documentconvert_spark.kernels.miniocr import _gif_palette_bilevel
     photo_hdr = b"GIF89a" + _st.pack("<HH", 8, 8) + bytes([0x80 | 1, 0, 0]) \
         + bytes((100, 100, 100, 128, 128, 128, 160, 160, 160, 255, 255, 255))
-    assert not _gif_palette_bilevel(photo_hdr)
+    assert not _header_admits_text(photo_hdr, "gif")
     aa_hdr = b"GIF89a" + _st.pack("<HH", 8, 8) + bytes([0x80 | 1, 0, 0]) \
         + bytes((10, 10, 10, 128, 128, 128, 0, 0, 0, 255, 255, 255))
-    assert _gif_palette_bilevel(aa_hdr)
+    assert _header_admits_text(aa_hdr, "gif")
 
     # one corrupt audio blob must not fail the dedup stage
     from documentconvert_spark.queries_extraction import _audio_corpus
@@ -471,10 +473,11 @@ def test_gif_animation_disposal_previous():
     assert out[2][0][4] == 0          # frame 2's own region
 
 
-def test_gif_animation_containment():
+def test_gif_animation_containment(monkeypatch):
     import pytest
 
     from documentconvert_spark.corpus import encode_gif_anim
+    from documentconvert_spark.kernels import raster
     from documentconvert_spark.kernels.raster import decode_gif_frames
 
     pal = [(0, 0, 0), (255, 255, 255)]
@@ -489,8 +492,9 @@ def test_gif_animation_containment():
         decode_gif_frames(bad)
     # frame-count cap charged before decode work
     many = encode_gif_anim(4, 4, [{"idx": [1] * 16} for _ in range(9)], pal, 2)
+    monkeypatch.setattr(raster, "_MAX_GIF_FRAMES", 8)
     with pytest.raises(ValueError, match="frame count over cap"):
-        decode_gif_frames(many, max_frames=8)
+        decode_gif_frames(many)
 
 
 # ---------------------------------------------------------------- MP4 carving
@@ -551,7 +555,7 @@ def test_mp4_co64_offsets_decoded():
     assert (w, h, len(frames)) == (24, 24, 3)
 
 
-def test_mp4_containment_paths():
+def test_mp4_containment_paths(monkeypatch):
     import pytest
 
     from documentconvert_spark.corpus import render_mp4_mjpeg
@@ -567,9 +571,11 @@ def test_mp4_containment_paths():
     with pytest.raises(ValueError, match="no moov box"):
         decode_mp4_frames(b"\x00\x00\x00\x18ftypisom" + b"\x00" * 16)
     # pixel budget charged BEFORE the frame decode
-    with pytest.raises(ValueError, match="decoded pixels over budget"):
-        decode_mp4_frames(render_mp4_mjpeg(16, 16, _mp4_box_frames(16, 16, 4),
-                                           fps=10), max_pixels=16 * 16 * 2)
+    four = render_mp4_mjpeg(16, 16, _mp4_box_frames(16, 16, 4), fps=10)
+    with monkeypatch.context() as m:
+        m.setattr(limits, "MAX_PIXELS", 16 * 16 * 2)
+        with pytest.raises(ValueError, match="decoded pixels over budget"):
+            decode_mp4_frames(four)
     # a sample range pointing outside the file is rejected, not sliced short
     import struct as _st
 
@@ -657,7 +663,7 @@ def test_bimodal_gate_block_feed_equals_row_feed():
     False, with the same running state afterwards."""
     import numpy as np
 
-    from documentconvert_spark.kernels.miniocr import _BimodalGate
+    from documentconvert_spark.kernels.raster import _BimodalGate
 
     rng = np.random.default_rng(3)
     for trial in range(200):
@@ -680,7 +686,7 @@ def test_bimodal_gate_block_feed_equals_row_feed():
 
 
 def test_bimodal_gate_run_rule_bounds_letterboxed_photos():
-    from documentconvert_spark.kernels.miniocr import _BimodalGate
+    from documentconvert_spark.kernels.raster import _BimodalGate
 
     # blown-out margin then a photo band at 50% mid: the cumulative rule
     # alone never trips (mid stays under half); the run rule must

@@ -23,7 +23,8 @@ from documentconvert_spark.corpus import (
     encode_vp8l,
     render_text_webp,
 )
-from documentconvert_spark.kernels.miniwebp import decode_vp8l, decode_webp_gray
+from documentconvert_spark.kernels.miniwebp import decode_vp8l
+from documentconvert_spark.kernels.raster import decode_webp_gray
 
 
 def _roundtrip(w, h, argb, **kw):
@@ -97,10 +98,10 @@ def test_neighbor_distance_map():
 
 def test_ocr_end_to_end_and_dispatch(extra_doc):
     from documentconvert_spark.kernels.detect import extract_image_any
-    from documentconvert_spark.kernels.miniocr import ocr_raster_text
+    from documentconvert_spark.kernels.miniocr import ocr_image_text
 
     data = render_text_webp(["DOCK GATE 12"], scale=3)
-    assert ocr_raster_text(data) == ["DOCK GATE 12"]
+    assert ocr_image_text(data, "webp") == ["DOCK GATE 12"]
     spans = extract_image_any(data)
     assert [s.kind for s in spans] == ["figure", "paragraph"]
     assert spans[1].text == "DOCK GATE 12"
