@@ -1,13 +1,16 @@
-"""Real embedded-media extraction + audio/video sniffing and decoding.
+"""Real embedded-media extraction, and the audio/video layer.
 
 The reference physically extracts figure crops to `output/images/` and the
 markdown references them (`services/document_service.py:259-304`). The
 engine's analogue at corpus scale: pull the actual embedded media BYTES
 out of each document container into the media side table
 (doc_id, media_ref, content binary). Image headers, media keys and
-pixels belong to the image layer (kernels/raster.py); this module adds
-the container-level audio/video metadata and the AVI/MP4 frame and WAV
-sample decoders, no codec libraries.
+pixels belong to the image layer (kernels/raster.py). This module is the
+audio/video layer on the same pattern, no codec libraries: one recogniser
+(`av_format`), one header reader per container shared by the sniff
+(`sniff_av_meta`) and the decoder, and the format → decoder tables
+`AUDIO_DECODERS` (WAV, FLAC) and `VIDEO_DECODERS` (AVI, MJPEG-in-MP4,
+animated GIF) behind `decode_audio`/`decode_video`.
 
 Containers covered: OOXML (word/media/, ppt/media/, xl/media/), ODF
 (Pictures/), PDF (Image XObject streams, media_ref matching the figure
@@ -27,11 +30,15 @@ import numpy as np
 
 from documentconvert_spark.kernels import limits
 from documentconvert_spark.kernels.limits import zip_read_capped
+from documentconvert_spark.kernels.miniflac import decode_flac_samples, streaminfo
 from documentconvert_spark.kernels.minijpeg import decode_jpeg_gray
 from documentconvert_spark.kernels.raster import (
+    _GIF_MAGICS,
+    decode_gif_frames,
+    dib_gray,
     image_file_ref,
     image_media_ref,
-    luma601,
+    riff_chunks,
     sniff_image_meta,
 )
 
@@ -126,6 +133,28 @@ def extract_media_files(content: bytes) -> list[tuple[str, bytes]]:
 # this is the inventory pass a training pipeline runs over opaque media
 # columns before any decode.
 
+def av_format(data: bytes) -> str:
+    """The one A/V recogniser: the container the magic bytes name, or
+    'unknown'. sniff_av_meta and the decoder tables go by it; an animated
+    GIF is video too, but its header is the image layer's to read."""
+    if data[4:8] == b"ftyp":
+        return "mp4"
+    if data[:6] in _GIF_MAGICS:
+        return "gif"
+    if data[:4] == b"RIFF":
+        return {b"WAVE": "wav", b"AVI ": "avi"}.get(bytes(data[8:12]), "unknown")
+    if data[:4] == b"fLaC":
+        return "flac"
+    if data[:4] == b"OggS":
+        return "ogg"
+    if data[:4] == b"\x1aE\xdf\xa3":  # EBML (webm/mkv)
+        return "webm"
+    if data[:3] == b"ID3" or (len(data) >= 2 and data[0] == 0xFF
+                              and (data[1] & 0xE0) == 0xE0):
+        return "mp3"
+    return "unknown"
+
+
 def _iso_boxes(data: bytes, lo: int, hi: int):
     """Yield (fourcc, body_lo, body_hi) for ISO-BMFF boxes in [lo, hi);
     handles 64-bit largesize (size==1) and to-end (size==0) boxes. Stops
@@ -152,7 +181,10 @@ def _iso_boxes(data: bytes, lo: int, hi: int):
 def _mp4_meta(data: bytes):
     """Walk top-level ISO-BMFF boxes (_iso_boxes, shared with the frame
     carver); moov/mvhd gives duration, moov/trak/tkhd gives presentation
-    width/height (16.16 fixed)."""
+    width/height (16.16 fixed). Shorter than the 12-byte ftyp header:
+    no container."""
+    if len(data) < 12:
+        return "unknown", None, None, None
     dur_ms = None
     width = height = None
 
@@ -164,18 +196,14 @@ def _mp4_meta(data: bytes):
             if btype in (b"moov", b"trak", b"mdia"):
                 walk(body, end, depth + 1)
             elif btype == b"mvhd" and body < end:
-                ver = data[body]
-                try:
-                    if ver == 1:
-                        ts = int.from_bytes(data[body + 20:body + 24], "big")
-                        dur = int.from_bytes(data[body + 24:body + 32], "big")
-                    else:
-                        ts = int.from_bytes(data[body + 12:body + 16], "big")
-                        dur = int.from_bytes(data[body + 16:body + 20], "big")
-                    if ts:
-                        dur_ms = int(dur * 1000 // ts)
-                except IndexError:
-                    pass
+                if data[body] == 1:
+                    ts = int.from_bytes(data[body + 20:body + 24], "big")
+                    dur = int.from_bytes(data[body + 24:body + 32], "big")
+                else:
+                    ts = int.from_bytes(data[body + 12:body + 16], "big")
+                    dur = int.from_bytes(data[body + 16:body + 20], "big")
+                if ts:
+                    dur_ms = int(dur * 1000 // ts)
             elif btype == b"tkhd" and body < end and width is None:
                 ver = data[body]
                 # FullBox(4) + times/ids/reserved (v0: 20, v1: 32) +
@@ -192,61 +220,73 @@ def _mp4_meta(data: bytes):
     return "mp4", width, height, dur_ms
 
 
+def _wav_header(data: bytes):
+    """The one RIFF/WAVE header reader: the chunk list up to the first
+    data chunk → ((body_lo, body_hi) of each fmt chunk before it, that
+    data chunk's (body_lo, body_hi, declared size) or None). Never
+    raises; the sniff and the decoder apply their own checks."""
+    fmts = []
+    for cc, lo, hi in riff_chunks(data, 12, len(data)):
+        if cc == b"fmt ":
+            fmts.append((lo, hi))
+        elif cc == b"data":
+            return fmts, (lo, hi, int.from_bytes(data[lo - 4:lo], "little"))
+    return fmts, None
+
+
 def _wav_meta(data: bytes):
-    byterate = None
-    dur_ms = None
-    i = 12
-    n = len(data)
-    while i + 8 <= n:
-        cid = data[i:i + 4]
-        csz = int.from_bytes(data[i + 4:i + 8], "little")
-        if cid == b"fmt " and i + 20 <= n:
-            byterate = int.from_bytes(data[i + 16:i + 20], "little")
-        elif cid == b"data" and byterate:
-            dur_ms = int(csz * 1000 // byterate)
-            break
-        i += 8 + csz + (csz & 1)
+    """Duration = data chunk size ÷ the last fmt chunk's byte rate (its
+    body offset 8, read wherever the file holds it)."""
+    fmts, chunk = _wav_header(data)
+    rates = [int.from_bytes(data[lo + 8:lo + 12], "little")
+             for lo, _hi in fmts if lo + 12 <= len(data)]
+    dur_ms = chunk[2] * 1000 // rates[-1] if chunk and rates and rates[-1] else None
     return "wav", None, None, dur_ms
 
 
-def _riff_chunks(data: bytes, lo: int, hi: int):
-    """Iterate RIFF sub-chunks in data[lo:hi] → (fourcc, body_lo, body_hi).
-    LIST chunks are yielded as (list_type, ...) over their inner body so
-    callers see `hdrl`/`strl`/`movi` directly. Truncated declarations are
-    clamped to the buffer — containment, not trust in the header."""
-    i = lo
-    while i + 8 <= hi:
-        cc = data[i:i + 4]
-        sz = int.from_bytes(data[i + 4:i + 8], "little")
-        body_lo = i + 8
-        body_hi = min(body_lo + sz, hi)
+def _riff_lists(data: bytes, lo: int, hi: int):
+    """riff_chunks with each LIST named by its list type, so the AVI
+    walks see hdrl/strl/movi/rec directly."""
+    for cc, body_lo, body_hi in riff_chunks(data, lo, hi):
         if cc == b"LIST" and body_lo + 4 <= body_hi:
             yield data[body_lo:body_lo + 4], body_lo + 4, body_hi
         else:
             yield cc, body_lo, body_hi
-        i = body_lo + sz + (sz & 1)
+
+
+def _avi_hdrl(data: bytes, lo: int, hi: int):
+    """The one AVI header reader ('AVI RIFF File Reference'), over an
+    hdrl list → (avih, fps, bitcount, compression): the first avih's
+    (dwMicroSecPerFrame, dwTotalFrames, dwWidth, dwHeight) or None, and
+    the video stream's strh dwRate/dwScale and strf biBitCount/
+    biCompression. Never raises; the sniff and the decoder check it."""
+    avih = None
+    fps = 0.0
+    bitcount = compression = None
+    for c2, l2, h2 in _riff_lists(data, lo, hi):
+        if c2 == b"avih" and h2 - l2 >= 40 and avih is None:
+            avih = struct.unpack_from("<I12xI12x2I", data, l2)
+        elif c2 == b"strl":
+            is_vids = False
+            for c3, l3, h3 in _riff_lists(data, l2, h2):
+                if c3 == b"strh" and h3 - l3 >= 32:
+                    is_vids = data[l3:l3 + 4] == b"vids"
+                    scale, rate = struct.unpack_from("<20x2I", data, l3)
+                    if is_vids and scale:
+                        fps = rate / scale
+                elif c3 == b"strf" and is_vids and h3 - l3 >= 20:
+                    bitcount, compression = struct.unpack_from("<14xHI", data, l3)
+    return avih, fps, bitcount, compression
 
 
 def _avi_meta(data: bytes):
-    """RIFF/AVI main header (avih, 'AVI RIFF File Reference'):
-    dwMicroSecPerFrame × dwTotalFrames → duration, dwWidth/dwHeight."""
-    width = height = dur_ms = None
-    for cc, lo, hi in _riff_chunks(data, 12, len(data)):
-        if cc != b"hdrl":
-            continue
-        for c2, l2, h2 in _riff_chunks(data, lo, hi):
-            if c2 == b"avih" and h2 - l2 >= 40:
-                usec = int.from_bytes(data[l2:l2 + 4], "little")
-                nframes = int.from_bytes(data[l2 + 16:l2 + 20], "little")
-                w = int.from_bytes(data[l2 + 32:l2 + 36], "little")
-                h = int.from_bytes(data[l2 + 36:l2 + 40], "little")
-                if w and h:
-                    width, height = w, h
-                if usec and nframes:
-                    dur_ms = usec * nframes // 1000
-                break
-        break
-    return "avi", width, height, dur_ms
+    """The first hdrl's avih: dwMicroSecPerFrame × dwTotalFrames →
+    duration, dwWidth/dwHeight."""
+    avih = next((_avi_hdrl(data, lo, hi)[0] for cc, lo, hi
+                 in _riff_lists(data, 12, len(data)) if cc == b"hdrl"), None)
+    usec, nframes, w, h = avih or (0, 0, 0, 0)
+    return ("avi", w if w and h else None, h if w and h else None,
+            usec * nframes // 1000 if usec and nframes else None)
 
 
 _MAX_AVI_FRAMES = 4096
@@ -257,11 +297,12 @@ def decode_avi_frames(data: bytes) -> tuple[int, int, float, list[np.ndarray]]:
 
     The real-codec video path (closes the last decoder stub): walks the
     RIFF tree ('AVI RIFF File Reference'), reads the video stream's strh
-    (fps = dwRate/dwScale) and strf BITMAPINFOHEADER, then decodes every
-    ``..dc``/``..db`` movi chunk — MJPG frames through the from-scratch
-    baseline-JPEG decoder (kernels/minijpeg.py), BI_RGB DIB frames as
-    bottom-up 24-bit BGR with 4-byte row padding (ITU-R 601 luma, same
-    math as the BMP decoder). Frame pixels are charged against ONE
+    (fps = dwRate/dwScale) and strf BITMAPINFOHEADER through _avi_hdrl,
+    the reader the sniff shares, then decodes every ``..dc``/``..db``
+    movi chunk — MJPG frames through the from-scratch baseline-JPEG
+    decoder (kernels/minijpeg.py), BI_RGB DIB frames as bottom-up 24-bit
+    BGR with 4-byte row padding through the BMP decoder's own pixel path
+    (kernels/raster.dib_gray). Frame pixels are charged against ONE
     per-document budget BEFORE each decode (a declared-size bomb fails
     at the first over-budget frame, not after allocating it), and the
     frame count is capped at _MAX_AVI_FRAMES. ValueError on anything
@@ -273,33 +314,19 @@ def decode_avi_frames(data: bytes) -> tuple[int, int, float, list[np.ndarray]]:
     bitcount = compression = None
     frames: list[np.ndarray] = []
     pixel_budget = limits.MAX_PIXELS
-    for cc, lo, hi in _riff_chunks(data, 12, len(data)):
+    for cc, lo, hi in _riff_lists(data, 12, len(data)):
         if cc == b"hdrl":
-            for c2, l2, h2 in _riff_chunks(data, lo, hi):
-                if c2 == b"avih" and h2 - l2 >= 40:
-                    width = int.from_bytes(data[l2 + 32:l2 + 36], "little")
-                    height = int.from_bytes(data[l2 + 36:l2 + 40], "little")
-                elif c2 == b"strl":
-                    is_vids = False
-                    for c3, l3, h3 in _riff_chunks(data, l2, h2):
-                        if c3 == b"strh" and h3 - l3 >= 32:
-                            is_vids = data[l3:l3 + 4] == b"vids"
-                            scale = int.from_bytes(data[l3 + 20:l3 + 24], "little")
-                            rate = int.from_bytes(data[l3 + 24:l3 + 28], "little")
-                            if is_vids and scale:
-                                fps = rate / scale
-                        elif c3 == b"strf" and is_vids and h3 - l3 >= 20:
-                            bitcount = int.from_bytes(data[l3 + 14:l3 + 16], "little")
-                            compression = int.from_bytes(data[l3 + 16:l3 + 20], "little")
+            avih, fps, bitcount, compression = _avi_hdrl(data, lo, hi)
+            width, height = avih[2:] if avih else (None, None)
         elif cc == b"movi":
             if not width or not height:
                 raise ValueError("avi: movi before a usable avih header")
             # interleaved AVIs group frame chunks inside 'LIST rec '
             # sub-lists of movi — walk one level into those
             def movi_chunks():
-                for c2, l2, h2 in _riff_chunks(data, lo, hi):
+                for c2, l2, h2 in _riff_lists(data, lo, hi):
                     if c2 == b"rec ":
-                        yield from _riff_chunks(data, l2, h2)
+                        yield from _riff_lists(data, l2, h2)
                     else:
                         yield c2, l2, h2
             for c2, l2, h2 in movi_chunks():
@@ -316,14 +343,10 @@ def decode_avi_frames(data: bytes) -> tuple[int, int, float, list[np.ndarray]]:
                 if payload[:2] == b"\xff\xd8":  # MJPG
                     fw, fh, gray = decode_jpeg_gray(bytes(payload))
                 elif compression == 0 and bitcount == 24:  # BI_RGB DIB
-                    stride = (width * 3 + 3) & ~3
-                    if len(payload) < stride * height:
+                    gray = dib_gray(payload, 0, width, height, 24)
+                    if gray is None:
                         raise ValueError("avi: DIB frame shorter than raster")
                     fw, fh = width, height
-                    bgr = np.frombuffer(payload, dtype=np.uint8, count=stride * height)
-                    bgr = bgr.reshape(height, stride)[::-1, :width * 3]  # bottom-up
-                    bgr = bgr.reshape(height, width, 3)
-                    gray = luma601(bgr[:, :, 2], bgr[:, :, 1], bgr[:, :, 0])
                 else:
                     raise ValueError(
                         f"avi: no decoder for compression={compression!r} "
@@ -430,24 +453,19 @@ def decode_mp4_frames(data: bytes) -> tuple[int, int, float, list[np.ndarray]]:
             else:
                 if len(body) < 12 + 4 * n:
                     raise ValueError("mp4: stsz shorter than its count")
-                sizes = [int.from_bytes(body[12 + 4 * i:16 + 4 * i], "big")
-                         for i in range(n)]
+                sizes = list(struct.unpack_from(f">{n}I", body, 12))
         elif t in (b"stco", b"co64") and len(body) >= 8:
             n = int.from_bytes(body[4:8], "big")
             w8 = 8 if t == b"co64" else 4
             if len(body) < 8 + w8 * n:
                 raise ValueError("mp4: chunk-offset table truncated")
-            chunk_offs = [int.from_bytes(body[8 + w8 * i:8 + w8 * (i + 1)],
-                                         "big") for i in range(n)]
+            chunk_offs = list(struct.unpack_from(f">{n}{'Q' if w8 == 8 else 'I'}", body, 8))
         elif t == b"stsc" and len(body) >= 8:
             n = int.from_bytes(body[4:8], "big")
             if len(body) < 8 + 12 * n:
                 raise ValueError("mp4: stsc table truncated")
-            stsc_runs = [
-                (int.from_bytes(body[8 + 12 * i:12 + 12 * i], "big"),
-                 int.from_bytes(body[12 + 12 * i:16 + 12 * i], "big"))
-                for i in range(n)
-            ]
+            runs = struct.unpack_from(f">{3 * n}I", body, 8)
+            stsc_runs = list(zip(runs[::3], runs[1::3]))  # (first chunk, samples per chunk)
         elif t == b"stts" and len(body) >= 16:
             delta = int.from_bytes(body[12:16], "big")
             if timescale and delta:
@@ -501,63 +519,42 @@ def decode_wav_samples(data: bytes) -> tuple[int, int, "array.array"]:
 
     if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise ValueError("wav: bad magic")
+    fmts, chunk = _wav_header(data)
     fmt = None
-    i = 12
-    n = len(data)
-    while i + 8 <= n:
-        cid = data[i:i + 4]
-        csz = int.from_bytes(data[i + 4:i + 8], "little")
-        body = data[i + 8:i + 8 + csz]
-        if cid == b"fmt " and len(body) >= 16:
-            tag = int.from_bytes(body[0:2], "little")
-            ch = int.from_bytes(body[2:4], "little")
-            sr = int.from_bytes(body[4:8], "little")
-            bits = int.from_bytes(body[14:16], "little")
-            if tag != 1:
-                raise ValueError("wav: non-PCM format unsupported")
-            if bits not in (8, 16) or not 1 <= ch <= 8 or sr <= 0:
-                raise ValueError("wav: unsupported PCM shape")
-            fmt = (ch, sr, bits)
-        elif cid == b"data":
-            if fmt is None:
-                raise ValueError("wav: data before fmt chunk")
-            if len(body) < csz:
-                raise ValueError("wav: truncated data chunk")
-            from documentconvert_spark.kernels.limits import check_decoded_size
-            check_decoded_size(csz, "wav data")
-            ch, sr, bits = fmt
-            out = array.array("h")
-            if bits == 16:
-                frame = 2 * ch
-                usable = csz - csz % frame
-                raw = array.array("h")
-                raw.frombytes(body[:usable])
-                if ch == 1:
-                    out = raw
-                else:
-                    out.extend(sum(raw[j:j + ch]) // ch
-                               for j in range(0, len(raw), ch))
-            else:  # 8-bit PCM is unsigned; recenter to int16 range
-                usable = csz - csz % ch
-                for j in range(0, usable, ch):
-                    s = sum(body[j + k] for k in range(ch)) // ch
-                    out.append((s - 128) << 8)
-            return sr, ch, out
-        i += 8 + csz + (csz & 1)
-    raise ValueError("wav: no data chunk")
+    for lo, hi in fmts:
+        if hi - lo < 16:
+            continue
+        tag, ch, sr, _rate, _align, bits = struct.unpack_from("<HHIIHH", data, lo)
+        if tag != 1:
+            raise ValueError("wav: non-PCM format unsupported")
+        if bits not in (8, 16) or not 1 <= ch <= 8 or sr <= 0:
+            raise ValueError("wav: unsupported PCM shape")
+        fmt = (ch, sr, bits)
+    if chunk is None:
+        raise ValueError("wav: no data chunk")
+    if fmt is None:
+        raise ValueError("wav: data before fmt chunk")
+    lo, hi, csz = chunk
+    if hi - lo < csz:
+        raise ValueError("wav: truncated data chunk")
+    limits.check_decoded_size(csz, "wav data")
+    ch, sr, bits = fmt
+    frames = np.frombuffer(data, dtype="<i2" if bits == 16 else np.uint8,
+                           count=csz // (bits // 8 * ch) * ch, offset=lo)
+    mono = frames.reshape(-1, ch).sum(axis=1, dtype=np.int64) // ch
+    if bits == 8:  # 8-bit PCM is unsigned; recenter to int16 range
+        mono = (mono - 128) << 8
+    return sr, ch, array.array("h", mono.astype(np.int16).tobytes())
 
 
-def _flac_meta(data: bytes):
-    # STREAMINFO is the mandatory first metadata block: sample rate is the
-    # 20 bits starting at byte 10 of the block body, total samples the
-    # trailing 36 bits of bytes 13..17
-    if len(data) < 4 + 4 + 18:
+def _streaminfo_meta(data: bytes):
+    """FLAC duration = total samples ÷ sample rate from STREAMINFO, the
+    mandatory first block, read by the decoder's own reader
+    (miniflac.streaminfo) without its checks: a >16-bit stream sniffs."""
+    if len(data) < 26:  # fLaC + block header + the 18 bytes read
         return "flac", None, None, None
-    body = 8  # skip fLaC + block header
-    sr = (int.from_bytes(data[body + 10:body + 13], "big") >> 4) & 0xFFFFF
-    total = ((data[body + 13] & 0x0F) << 32) | int.from_bytes(data[body + 14:body + 18], "big")
-    dur_ms = int(total * 1000 // sr) if sr and total else None
-    return "flac", None, None, dur_ms
+    sr, _ch, _bps, total = streaminfo(data[8:26])
+    return "flac", None, None, (total * 1000 // sr if sr and total else None)
 
 
 def _ebml_vint(data: bytes, i: int, keep_marker: bool) -> tuple[int, int]:
@@ -708,32 +705,54 @@ def _ogg_meta(data: bytes):
     return "ogg", None, None, dur_ms
 
 
+# recognised format → header reader → (format, width, height, duration_ms)
+_AV_META = {
+    "mp4": _mp4_meta,
+    "wav": _wav_meta,
+    "avi": _avi_meta,
+    "flac": _streaminfo_meta,
+    "ogg": _ogg_meta,
+    "webm": _webm_meta,
+    "mp3": _mp3_meta,
+}
+
+
 def sniff_av_meta(data: bytes) -> tuple[str, int | None, int | None, int | None]:
     """(format, width, height, duration_ms) for audio/video containers;
     ('unknown', None, None, None) if not recognized. Width/height/duration
     are file-controlled integers: values outside int32 (a crafted avih or
     mvhd can declare ~1.8e16 ms) are reported as None so a downstream
     Arrow int32 cast can never blow up an entire batch on one bad row."""
-    if len(data) >= 12 and data[4:8] == b"ftyp":
-        out = _mp4_meta(data)
-    elif data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-        out = _wav_meta(data)
-    elif data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-        out = _avi_meta(data)
-    elif data[:4] == b"fLaC":
-        out = _flac_meta(data)
-    elif data[:4] == b"OggS":
-        out = _ogg_meta(data)
-    elif data[:4] == b"\x1aE\xdf\xa3":  # EBML (webm/mkv)
-        out = _webm_meta(data)
-    elif data[:3] == b"ID3" or (len(data) >= 2 and data[0] == 0xFF
-                                and (data[1] & 0xE0) == 0xE0):
-        out = _mp3_meta(data)
-    else:
+    meta = _AV_META.get(av_format(data))
+    if meta is None:
         return "unknown", None, None, None
-    fmt, w, h, dur = out
+    fmt, w, h, dur = meta(data)
     clamp = (lambda v: v if v is not None and 0 <= v < 2**31 else None)
     return fmt, clamp(w), clamp(h), clamp(dur)
+
+
+# format (as sniff_media_meta names it) → decoder; jobs/run_media.py
+# routes each modality by these keys
+AUDIO_DECODERS = {"wav": decode_wav_samples, "flac": decode_flac_samples}
+VIDEO_DECODERS = {"avi": decode_avi_frames, "mp4": decode_mp4_frames,
+                  "gif": decode_gif_frames}
+
+
+def decode_audio(data: bytes):
+    """Audio bytes → (sample_rate, channels, mono int16 samples) by the
+    recognised format; any other bytes go to the WAV decoder, whose
+    ValueError names them ('wav: bad magic') for per-row containment."""
+    return AUDIO_DECODERS.get(av_format(data), decode_wav_samples)(data)
+
+
+def decode_video(data: bytes):
+    """Video bytes → (width, height, gray frames) by the recognised
+    format; any other bytes go to the AVI decoder, whose ValueError names
+    them. Inter-frame codecs (H.264/VP9) have no from-scratch decoder and
+    raise ValueError too."""
+    # the AVI/MP4 decoders also return fps before the frames; GIF does not
+    w, h, *_fps, frames = VIDEO_DECODERS.get(av_format(data), decode_avi_frames)(data)
+    return w, h, frames
 
 
 def _ole_media(content: bytes) -> list[tuple[str, bytes]]:

@@ -1,10 +1,11 @@
 """From-scratch FLAC decoder (xiph.org FLAC format spec / RFC 9639).
 
 The engine's audio surface decodes RIFF/WAVE PCM; FLAC is the other
-integer-PCM container a corpus actually carries (the sniffer already
-reads its STREAMINFO). This module decodes the streams themselves:
+integer-PCM container a corpus actually carries. This module decodes the
+streams themselves, and kernels/media.py routes the `flac` format here:
 
-* STREAMINFO (rate / channels / bits / total samples)
+* STREAMINFO (rate / channels / bits / total samples) through
+  `streaminfo`, the one reader the header sniff shares
 * frame headers: sync, UTF-8-style coded numbers, all block-size and
   sample-rate codes, CRC-8 verification
 * subframes: CONSTANT, VERBATIM, FIXED orders 0-4, LPC any order,
@@ -21,9 +22,10 @@ every decoded sample is exactly the encoder's input — the oracle for
 samples. ValueError on anything malformed or unsupported (>16-bit
 streams); per-row containment upstream (C7), like every kernel.
 
-Bounds: total decoded samples are charged against MAX_DECODED_BYTES/2
-BEFORE each frame decodes, unary runs are capped, and the bit reader
-raises on exhaustion — crafted length fields fail fast, never allocate.
+Bounds: total decoded samples are charged against
+limits.MAX_DECODED_BYTES/2 (read at call time) BEFORE each frame
+decodes, unary runs are capped, and the bit reader raises on
+exhaustion — crafted length fields fail fast, never allocate.
 
 Reference behavior: the reference ships no audio pipeline at all; this
 is engine surface for the training-data tier (multimodal columns).
@@ -33,10 +35,9 @@ from __future__ import annotations
 
 import array
 
-from documentconvert_spark.kernels.limits import MAX_DECODED_BYTES
+from documentconvert_spark.kernels import limits
 
 _MAX_UNARY = 1 << 20
-_MAX_TOTAL_SAMPLES = MAX_DECODED_BYTES // 2
 
 
 def _crc_table(poly: int, width: int) -> list[int]:
@@ -114,6 +115,14 @@ class _Bits:
             self.pos += 1
 
 
+def streaminfo(body: bytes) -> tuple[int, int, int, int]:
+    """The one STREAMINFO reader, shared with the header sniff → (rate,
+    channels, bps, total samples): 20+3+5+36 bits after the 10 bytes of
+    size ranges. Reads body[10:18] only and never raises; no checks."""
+    v = int.from_bytes(body[10:18], "big")
+    return v >> 44, ((v >> 41) & 7) + 1, ((v >> 36) & 31) + 1, v & ((1 << 36) - 1)
+
+
 def _read_streaminfo(data: bytes) -> tuple[int, int, int, int, int]:
     """→ (sample_rate, channels, bps, total_samples, first_frame_pos)."""
     if data[:4] != b"fLaC":
@@ -130,13 +139,7 @@ def _read_streaminfo(data: bytes) -> tuple[int, int, int, int, int]:
         if btype == 0:
             if len(body) < 34:
                 raise ValueError("flac: short STREAMINFO")
-            b = _Bits(body)
-            b.u(16); b.u(16); b.u(24); b.u(24)  # block/frame size ranges
-            sr = b.u(20)
-            ch = b.u(3) + 1
-            bps = b.u(5) + 1
-            total = b.u(36)
-            info = (sr, ch, bps, total)
+            info = streaminfo(body)
         i += 4 + blen
         if last:
             break
@@ -309,7 +312,7 @@ def decode_flac_samples(data: bytes) -> tuple[int, int, "array.array"]:
         if crc8(data[frame_start:bits.pos]) != bits.u(8):
             raise ValueError("flac: frame header CRC mismatch")
         decoded += blocksize
-        if decoded > _MAX_TOTAL_SAMPLES:
+        if decoded > limits.MAX_DECODED_BYTES // 2:
             raise ValueError("flac: decoded samples over cap")
         chans = []
         for c in range(nch):

@@ -45,7 +45,6 @@ import struct
 import numpy as np
 
 from documentconvert_spark.kernels import limits
-from documentconvert_spark.kernels.limits import MAX_DECODED_BYTES
 
 
 # zigzag scan order (T.81 Figure A.6): index = zigzag position → raster index
@@ -500,7 +499,7 @@ def decode_jpeg_gray(data: bytes) -> tuple[int, int, np.ndarray]:
                 raise ValueError("jpeg: unsupported component count")
             if w <= 0 or h <= 0 or w * h > limits.MAX_PIXELS:
                 raise ValueError("jpeg: dimensions over cap")
-            if w * h > MAX_DECODED_BYTES:
+            if w * h > limits.MAX_DECODED_BYTES:
                 raise ValueError("jpeg: raster over decode cap")
             comps = []
             for ci in range(nc):
@@ -665,7 +664,7 @@ def decode_jpeg_gray(data: bytes) -> tuple[int, int, np.ndarray]:
     pos_xy = np.array(positions, dtype=np.int64).reshape(-1, 2)
     bw = int(pos_xy[:, 0].max()) + 1
     bh = int(pos_xy[:, 1].max()) + 1
-    if bw * bh * 64 > MAX_DECODED_BYTES:
+    if bw * bh * 64 > limits.MAX_DECODED_BYTES:
         raise ValueError("jpeg: raster over decode cap")
     if bh * 8 < h or bw * 8 < w:
         raise ValueError("jpeg: luma scan does not cover the frame")

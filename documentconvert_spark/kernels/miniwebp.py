@@ -42,7 +42,6 @@ from __future__ import annotations
 import numpy as np
 
 from documentconvert_spark.kernels import limits
-from documentconvert_spark.kernels.limits import MAX_DECODED_BYTES
 
 # code-length-code transmission order (spec §6.2.2 / RFC 1951 analogue)
 _CLC_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
@@ -508,7 +507,7 @@ def decode_vp8l(payload: bytes) -> tuple[int, int, np.ndarray]:
     br.get(1)  # alpha hint
     if br.get(3) != 0:
         raise ValueError("webp: unsupported VP8L version")
-    if w * h > limits.MAX_PIXELS or w * h * 4 > MAX_DECODED_BYTES:
+    if w * h > limits.MAX_PIXELS or w * h * 4 > limits.MAX_DECODED_BYTES:
         raise ValueError("webp: dimensions over cap")
     # transforms (each at most once), inverses applied in reverse order
     transforms: list[tuple] = []

@@ -9,8 +9,8 @@ this module). This module recognises every image format from its header
 (`sniff_image_meta`), keys image media by content (`image_file_ref`,
 `image_media_ref`), and decodes pixels through one format → decoder
 table (`DECODERS`). Every decoder is from the public spec, bounded by the
-shared caps in kernels/limits.py (`MAX_PIXELS`, read at call time, and
-`MAX_DECODED_BYTES`), and returns the same shape:
+shared caps in kernels/limits.py (`MAX_PIXELS` and `MAX_DECODED_BYTES`,
+both read at call time), and returns the same shape:
 
     (width, height, gray)  with gray = (height, width) uint8 numpy array
                            of ITU-R 601 luma, row-major
@@ -57,7 +57,7 @@ from typing import NamedTuple
 import numpy as np
 
 from documentconvert_spark.kernels import limits
-from documentconvert_spark.kernels.limits import MAX_DECODED_BYTES, _lzw_decode
+from documentconvert_spark.kernels.limits import _lzw_decode
 from documentconvert_spark.kernels.minijpeg import decode_jpeg_gray
 from documentconvert_spark.kernels.miniwebp import decode_vp8l
 
@@ -176,41 +176,6 @@ def image_file_ref(content: bytes, fmt: str) -> str:
     image_media_ref so every media key in the engine is content-derived."""
     ext = _IMG_EXT.get(fmt, "img")
     return hashlib.sha1(content[:4096]).hexdigest()[:12] + f".{ext}"
-
-
-def _tiff_dims(data: bytes) -> tuple[int | None, int | None]:
-    """TIFF 6.0: walk IFD0 for ImageWidth (256) / ImageLength (257),
-    SHORT or LONG values inline in the entry. Malformed → (None, None)."""
-    try:
-        end = "<" if data[:2] == b"II" else ">"
-        (ifd,) = struct.unpack_from(end + "I", data, 4)
-        (count,) = struct.unpack_from(end + "H", data, ifd)
-        w = h = None
-        for k in range(min(count, 256)):
-            e = ifd + 2 + 12 * k
-            tag, typ, n_vals = struct.unpack_from(end + "HHI", data, e)
-            if tag not in (256, 257):
-                continue
-            # value-or-offset rule: with count != 1 the 4-byte field holds
-            # a file OFFSET, not the dimension — reading it inline would
-            # report a bogus (clamped but wrong) width/height
-            if n_vals != 1:
-                continue
-            if typ == 3:  # SHORT
-                (v,) = struct.unpack_from(end + "H", data, e + 8)
-            elif typ == 4:  # LONG
-                (v,) = struct.unpack_from(end + "I", data, e + 8)
-            else:
-                continue
-            if not 0 < v < 2**31:  # file-controlled: keep int32 casts safe
-                continue
-            if tag == 256:
-                w = v
-            else:
-                h = v
-        return w, h
-    except (struct.error, IndexError):
-        return None, None
 
 
 def sniff_image_meta(data: bytes) -> tuple[str, int | None, int | None]:
@@ -388,7 +353,7 @@ def decode_png_gray(data: bytes, bilevel: bool = False) -> tuple[int, int, np.nd
         pal = _palette_luma(plte)
     bits_pp = depth * channels
     bpp = max(1, bits_pp // 8)  # filter unit (spec §9: 1 byte when <8 bits)
-    if (w * bits_pp // 8 + 2) * h > MAX_DECODED_BYTES:
+    if (w * bits_pp // 8 + 2) * h > limits.MAX_DECODED_BYTES:
         raise ValueError("png: raster over decode cap")
     d = zlib.decompressobj()
     src = memoryview(b"".join(idat))
@@ -687,7 +652,8 @@ def decode_gif_gray(data: bytes) -> tuple[int, int, np.ndarray]:
     for img in _gif_images(data, strict=False):
         pal = _gif_image_palette(data, img, gct)
         w, h = img.w, img.h
-        if w <= 0 or h <= 0 or w * h > limits.MAX_PIXELS or w * h > MAX_DECODED_BYTES:
+        if (w <= 0 or h <= 0 or w * h > limits.MAX_PIXELS
+                or w * h > limits.MAX_DECODED_BYTES):
             raise ValueError("gif: dimensions over cap")
         return w, h, _indexed(_gif_indices(img), pal, "gif")
     raise ValueError("gif: no image data")
@@ -715,7 +681,7 @@ def decode_gif_frames(data: bytes) -> tuple[int, int, list[np.ndarray]]:
         vals = _indexed(sub, pal, "gif")
         if len(frames) >= _MAX_GIF_FRAMES:
             raise ValueError("gif: frame count over cap")
-        if (len(frames) + 1) * w * h > MAX_DECODED_BYTES:
+        if (len(frames) + 1) * w * h > limits.MAX_DECODED_BYTES:
             raise ValueError("gif: animation over decode cap")
         saved = canvas.copy() if img.disposal == 3 else None
         region = canvas[img.top:img.top + img.h, img.left:img.left + img.w]
@@ -765,7 +731,8 @@ def decode_bmp_gray(data: bytes) -> tuple[int, int, np.ndarray]:
             raise ValueError("bmp: nonstandard bitfields")
     elif comp == 3:
         raise ValueError("bmp: bitfields only supported at 32bpp")
-    if w <= 0 or h <= 0 or w * h > limits.MAX_PIXELS or w * h > MAX_DECODED_BYTES:
+    if (w <= 0 or h <= 0 or w * h > limits.MAX_PIXELS
+            or w * h > limits.MAX_DECODED_BYTES):
         raise ValueError("bmp: dimensions over cap")
     pal: np.ndarray | None = None
     if bpp <= 8:
@@ -818,23 +785,34 @@ def decode_bmp_gray(data: bytes) -> tuple[int, int, np.ndarray]:
         if not ended:
             raise ValueError("bmp: truncated pixel data")
         return w, h, _indexed(idx[::-1], pal, "bmp")
-    stride = ((bpp * w + 31) // 32) * 4
-    if pix_off + stride * h > len(data):
+    gray = dib_gray(data, pix_off, w, h, bpp, top_down, pal)
+    if gray is None:
         raise ValueError("bmp: truncated pixel data")
-    lines = np.frombuffer(data, dtype=np.uint8, count=stride * h,
-                          offset=pix_off).reshape(h, stride)
+    return w, h, gray
+
+
+def dib_gray(buf: bytes, offset: int, w: int, h: int, bpp: int,
+             top_down: bool = False, pal: np.ndarray | None = None) -> np.ndarray | None:
+    """BI_RGB DIB pixel rows (a BMP's, an AVI frame's) at buf[offset:]
+    → (h, w) luma: 4-byte-padded rows, bottom-up unless top_down, B,G,R[,X]
+    or `pal` indices. None when buf is short; callers name the error."""
+    stride = ((bpp * w + 31) // 32) * 4
+    if offset + stride * h > len(buf):
+        return None
+    lines = np.frombuffer(buf, dtype=np.uint8, count=stride * h,
+                          offset=offset).reshape(h, stride)
     if not top_down:
         lines = lines[::-1]
     if bpp == 24 or bpp == 32:
         px = lines[:, :w * (bpp // 8)].reshape(h, w, bpp // 8)
-        return w, h, luma601(px[:, :, 2], px[:, :, 1], px[:, :, 0])
+        return luma601(px[:, :, 2], px[:, :, 1], px[:, :, 0])
     if bpp == 8:
         ix = lines[:, :w]
     elif bpp == 4:
         ix = _nibbles(lines)[:, :w]
     else:  # 1-bit, MSB-first
         ix = np.unpackbits(lines, axis=1)[:, :w]
-    return w, h, _indexed(ix, pal, "bmp")
+    return _indexed(ix, pal, "bmp")
 
 
 def _nibbles(a: np.ndarray) -> np.ndarray:
@@ -866,36 +844,66 @@ def _packbits(raw: bytes, cap: int) -> bytes:
     return bytes(out)
 
 
-def _tiff_ifd0(data: bytes) -> dict[int, list[int]]:
-    """First IFD → {tag: values} for the baseline tags this decoder
-    reads, in the byte order the header names. Handles the
-    value-or-offset rule (≤4 payload bytes live in the entry itself) for
-    BYTE/SHORT/LONG."""
+_TIFF_TYPES = {1: ("B", 1), 3: ("H", 2), 4: ("I", 4)}  # BYTE / SHORT / LONG
+
+
+def _tiff_entries(data: bytes, strict: bool, tags: tuple[int, ...] | None = None):
+    """The one IFD0 walker: (tag, type, count, values) per BYTE/SHORT/LONG
+    entry (only those in `tags`, when given), by the value-or-offset rule
+    (≤4 payload bytes sit in the entry). A payload outside the file raises
+    when strict (the decoder), else has values None (the sniff); a
+    truncated IFD raises either way."""
     end = _TIFF_BYTE_ORDER.get(bytes(data[:4]))
     if end is None:
         raise ValueError("tiff: bad magic")
     try:
         (ifd,) = struct.unpack_from(end + "I", data, 4)
         (count,) = struct.unpack_from(end + "H", data, ifd)
-        sizes = {1: 1, 3: 2, 4: 4}
-        fmts = {1: "B", 3: "H", 4: "I"}
-        tags: dict[int, list[int]] = {}
         for k in range(min(count, 256)):
             e = ifd + 2 + 12 * k
             tag, typ, cnt = struct.unpack_from(end + "HHI", data, e)
-            if typ not in sizes or cnt == 0 or cnt > 1 << 20:
+            if tags is not None and tag not in tags:
                 continue
-            nbytes = sizes[typ] * cnt
-            if nbytes <= 4:
+            if typ not in _TIFF_TYPES or cnt == 0 or cnt > 1 << 20:
+                continue
+            code, size = _TIFF_TYPES[typ]
+            nbytes = size * cnt
+            try:
                 off = e + 8
-            else:
-                (off,) = struct.unpack_from(end + "I", data, e + 8)
-            if off + nbytes > len(data):
-                raise ValueError("tiff: entry payload out of file")
-            tags[tag] = list(struct.unpack_from(end + fmts[typ] * cnt, data, off))
+                if nbytes > 4:
+                    (off,) = struct.unpack_from(end + "I", data, e + 8)
+                if off + nbytes > len(data):
+                    raise ValueError("tiff: entry payload out of file")
+            except (ValueError, struct.error):
+                if strict:
+                    raise
+                yield tag, typ, cnt, None
+                continue
+            yield tag, typ, cnt, list(struct.unpack_from(f"{end}{cnt}{code}", data, off))
     except (struct.error, IndexError):
         raise ValueError("tiff: truncated IFD")
-    return tags
+
+
+def _tiff_ifd0(data: bytes) -> dict[int, list[int]]:
+    """First IFD → {tag: values} for the baseline tags the decoder reads."""
+    return {tag: vals for tag, _typ, _cnt, vals in _tiff_entries(data, strict=True)}
+
+
+def _tiff_dims(data: bytes) -> tuple[int | None, int | None]:
+    """The sniff's IFD0 read: ImageWidth (256) / ImageLength (257) from
+    a SHORT or LONG count-1 entry only (with count != 1 the field holds
+    a file OFFSET); a truncated IFD → (None, None)."""
+    dims = {}
+    try:
+        for tag, typ, cnt, vals in _tiff_entries(data, strict=False, tags=(256, 257)):
+            if typ != 1 and cnt == 1:
+                if vals is None:  # the value itself lies past the end
+                    return None, None
+                if 0 < vals[0] < 2**31:  # file-controlled: keep int32 casts safe
+                    dims[tag] = vals[0]
+    except ValueError:
+        return None, None
+    return dims.get(256), dims.get(257)
 
 
 def _tiff_palette(tags: dict[int, list[int]]) -> np.ndarray | None:
@@ -933,7 +941,8 @@ def decode_tiff_gray(data: bytes, bilevel: bool = False) -> tuple[int, int, np.n
         counts = tags[279]
     except KeyError:
         raise ValueError("tiff: missing required tag")
-    if w <= 0 or h <= 0 or w * h > limits.MAX_PIXELS or w * h > MAX_DECODED_BYTES:
+    if (w <= 0 or h <= 0 or w * h > limits.MAX_PIXELS
+            or w * h > limits.MAX_DECODED_BYTES):
         raise ValueError("tiff: dimensions over cap")
     comp = tags.get(259, [1])[0]
     photo = tags.get(262, [1])[0]
@@ -970,7 +979,7 @@ def decode_tiff_gray(data: bytes, bilevel: bool = False) -> tuple[int, int, np.n
     done = 0
     gate = _BimodalGate()
     for si, (so, sc) in enumerate(zip(offs, counts)):
-        if so + sc > len(data) or sc > MAX_DECODED_BYTES:
+        if so + sc > len(data) or sc > limits.MAX_DECODED_BYTES:
             raise ValueError("tiff: strip out of file")
         nrows = min(rps, h - si * rps)
         if nrows <= 0:
@@ -1014,25 +1023,30 @@ def decode_tiff_gray(data: bytes, bilevel: bool = False) -> tuple[int, int, np.n
 
 # ------------------------------------------------------------------ WebP
 
+def riff_chunks(data: bytes, lo: int, hi: int):
+    """The one RIFF chunk walker (WebP; WAVE and AVI in kernels/media.py):
+    (fourcc, body_lo, body_hi) per chunk in data[lo:hi], even-padded. A
+    size past hi is clamped to it — containment, not trust in the header."""
+    i = lo
+    while i + 8 <= hi:
+        sz = int.from_bytes(data[i + 4:i + 8], "little")
+        yield data[i:i + 4], i + 8, min(i + 8 + sz, hi)
+        i += 8 + sz + (sz & 1)
+
+
 def decode_webp_gray(data: bytes) -> tuple[int, int, np.ndarray]:
     """WebP container bytes → (h, w) uint8 luma raster (lossless VP8L
     only; lossy VP8 has no from-scratch decoder and raises for
     figure-only fallback)."""
     if data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         raise ValueError("webp: bad container")
-    pos = 12
-    payload = None
-    while pos + 8 <= len(data):
-        tag = data[pos:pos + 4]
-        (ln,) = struct.unpack_from("<I", data, pos + 4)
-        body = data[pos + 8:pos + 8 + ln]
+    for tag, lo, hi in riff_chunks(data, 12, len(data)):
         if tag == b"VP8L":
-            payload = body
+            payload = data[lo:hi]
             break
         if tag == b"VP8 ":
             raise ValueError("webp: lossy VP8 unsupported")
-        pos += 8 + ln + (ln & 1)  # chunks are even-padded
-    if payload is None:
+    else:
         raise ValueError("webp: no VP8L chunk")
     w, h, pix = decode_vp8l(payload)
     px = pix.reshape(h, w)

@@ -15,14 +15,15 @@ error row, or drops out when the op has none — never a failed task
 * MINIMEDIA — a deterministic mini-format whose header fields are
   closed-form functions of md5(media_ref), making every operator here
   exactly oracle-checkable in SQL;
-* the REAL codec path (`decode_raster_gray` / `_decode_audio` /
-  `_decode_video`) — the sandbox ships no PIL/librosa/ffmpeg, so images
+* the REAL codec path (`decode_raster_gray` / `decode_audio` /
+  `decode_video`) — the sandbox ships no PIL/librosa/ffmpeg, so images
   decode through the from-scratch raster layer (kernels/raster.py:
   baseline JPEG per ITU-T T.81 incl. progressive, PNG, GIF-LZW, BMP,
-  baseline TIFF, VP8L lossless WebP), audio through the from-scratch
-  RIFF/WAVE PCM and FLAC decoders, and video through the RIFF/AVI frame
-  decoder (kernels/media.decode_avi_frames: MJPG + uncompressed DIB
-  frames), the MJPEG-in-MP4 carver and the animated-GIF compositor.
+  baseline TIFF, VP8L lossless WebP), audio and video through the
+  audio/video layer (kernels/media.py), whose format → decoder tables
+  route audio to the RIFF/WAVE PCM and FLAC decoders and video to the
+  RIFF/AVI frame decoder (MJPG + uncompressed DIB frames), the
+  MJPEG-in-MP4 carver and the animated-GIF compositor.
 
 The Spark-side plumbing — schemas, batch shapes, partition invariance,
 explode semantics — is identical for both tiers and tested.
@@ -50,15 +51,12 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from documentconvert_spark.kernels.media import (
-    decode_avi_frames,
-    decode_mp4_frames,
-    decode_wav_samples,
+    decode_audio,
+    decode_video,
     extract_media_files,
     sniff_av_meta,
 )
-from documentconvert_spark.kernels.miniflac import decode_flac_samples
 from documentconvert_spark.kernels.raster import (
-    decode_gif_frames,
     decode_raster_gray,
     dhash64,
     sniff_image_meta,
@@ -160,31 +158,6 @@ def make_media_bytes(media_ref: str) -> tuple[str, bytes]:
     ref_bytes = media_ref.encode("utf-8")
     payload = (ref_bytes * (f["payload_len"] // len(ref_bytes) + 1))[: f["payload_len"]]
     return f["media_type"], "\n".join(header).encode("utf-8") + b"\n" + payload
-
-
-def _decode_audio(data: bytes):
-    """Audio bytes → (sample_rate, channels, mono int16 samples): real
-    FLAC streams (kernels/miniflac.decode_flac_samples) by their magic,
-    anything else as RIFF/WAVE integer PCM (kernels/media.
-    decode_wav_samples). Both lossless and from scratch; ValueError on
-    bytes neither decodes — per-row containment upstream."""
-    if data[:4] == b"fLaC":
-        return decode_flac_samples(data)
-    return decode_wav_samples(data)
-
-
-def _decode_video(data: bytes):
-    """Video bytes → (width, height, gray frames), routed by magic:
-    animated GIF (kernels/raster.decode_gif_frames), MJPEG-in-MP4 via the
-    ISO-BMFF sample-table carver (kernels/media.decode_mp4_frames), else
-    RIFF/AVI with MJPG or uncompressed DIB frames (decode_avi_frames).
-    Inter-frame codecs (H.264/VP9) have no from-scratch decoder and raise
-    ValueError — per-row containment upstream."""
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        return decode_gif_frames(data)
-    decode = decode_mp4_frames if data[4:8] == b"ftyp" else decode_avi_frames
-    w, h, _fps, frames = decode(data)
-    return w, h, frames
 
 
 def build_media_table(docs_with_spans: DataFrame) -> DataFrame:
@@ -352,10 +325,11 @@ VIDEO_FRAMES_SCHEMA = T.StructType(
 
 
 def real_video_frame_stats(videos: DataFrame) -> DataFrame:
-    """Decode REAL video bytes to FRAMES (`_decode_video`: from-scratch
+    """Decode REAL video bytes to FRAMES (`decode_video`: from-scratch
     RIFF/AVI walker + MJPG/DIB frame decoders, the ISO-BMFF MJPEG-in-MP4
-    sample-table carver, or the animated-GIF compositor, routed by
-    magic) and emit one row per frame with its dark-pixel count.
+    sample-table carver, or the animated-GIF compositor, routed by the
+    recognised format) and emit one row per frame with its dark-pixel
+    count.
     `n_dark` at threshold 128 is exactly oracle-checkable on bilevel
     sources even through the lossy MJPG path (the all-ones-quant encoder
     bounds reconstruction error at ±2 gray levels, which never crosses
@@ -367,7 +341,7 @@ def real_video_frame_stats(videos: DataFrame) -> DataFrame:
     per-document budget inside the kernel."""
 
     def row(did, blob):
-        w, h, frames = _decode_video(blob)
+        w, h, frames = decode_video(blob)
         return [(did, i, w, h, int(np.count_nonzero(fr < 128)), None)
                 for i, fr in enumerate(frames)]
 
@@ -389,7 +363,7 @@ def audio_fingerprint_table(audios: DataFrame, chunk: int = 250) -> DataFrame:
     ])
 
     def row(did, blob):
-        _sr, _ch, mono = _decode_audio(blob)
+        _sr, _ch, mono = decode_audio(blob)
         out = []
         for i, lo in enumerate(range(0, len(mono) - chunk + 1, chunk)):
             h = 0xCBF29CE484222325
@@ -504,7 +478,7 @@ AUDIO_STATS_SCHEMA = T.StructType(
 
 
 def real_audio_stats(audios: DataFrame) -> DataFrame:
-    """Decode REAL audio bytes to SAMPLES (`_decode_audio`: RIFF/WAVE
+    """Decode REAL audio bytes to SAMPLES (`decode_audio`: RIFF/WAVE
     integer PCM or FLAC streams, both from scratch, channels
     floor-averaged to mono int16) and emit per-document sample
     statistics. Both codecs are lossless, so `sum_abs` and `peak` are
@@ -515,7 +489,7 @@ def real_audio_stats(audios: DataFrame) -> DataFrame:
     size capped inside the kernels."""
 
     def row(did, blob):
-        sr, ch, mono = _decode_audio(blob)
+        sr, ch, mono = decode_audio(blob)
         # data chunks run up to 256 MiB: vectorize, and take |x| in
         # int64 (|int16 -32768| overflows int16)
         a = np.abs(np.frombuffer(mono, dtype=np.int16).astype(np.int64))

@@ -4,10 +4,11 @@ The media pass a training pipeline runs over opaque image/audio/video
 columns:
 
     sniff (container metadata inventory, no decode)
-      → decode stats (AVI and animated GIF → per-frame stats; WAV/FLAC
-        → sample stats; images → 64-bit difference hash through the
-        raster decoders; GIFs take BOTH routes — first-frame dhash and
-        per-frame animation signatures)
+      → decode stats, each modality routed by its decoders' own format
+        table (AVI, MJPEG-in-MP4 and animated GIF → per-frame stats;
+        WAV/FLAC → sample stats; images → 64-bit difference hash
+        through the raster decoders; GIFs take BOTH routes — first-frame
+        dhash and per-frame animation signatures)
       → near-dup pairs per modality (multiset-Jaccard over
         audio/video fingerprints; banded Hamming join over image
         difference hashes)
@@ -49,6 +50,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from documentconvert_spark.kernels import media as av, raster
     from documentconvert_spark.ops.multimodal import (
         audio_fingerprint_table,
         dhash_hamming_pairs,
@@ -71,10 +73,10 @@ def main() -> None:
     by_fmt = {r["format"]: r["n"] for r in
               inv.groupBy("format").agg(F.count("*").alias("n")).collect()}
 
-    # 2) decode stats per modality — route on the sniffed format so the
-    # decoders see only bytes they own; errors stay per-row
-    video_ids = inv.filter(F.col("format").isin("avi", "gif")).select("doc_id")
-    audio_ids = inv.filter(F.col("format").isin("wav", "flac")).select("doc_id")
+    # 2) decode stats per modality — route on the sniffed format by the
+    # decoder tables, so the decoders see only bytes they own; errors stay per-row
+    video_ids = inv.filter(F.col("format").isin(*av.VIDEO_DECODERS)).select("doc_id")
+    audio_ids = inv.filter(F.col("format").isin(*av.AUDIO_DECODERS)).select("doc_id")
     videos = media.join(F.broadcast(video_ids), "doc_id")
     audios = media.join(F.broadcast(audio_ids), "doc_id")
 
@@ -101,9 +103,7 @@ def main() -> None:
     n_apairs = spark.read.parquet(args.output + "/audio_pairs").count()
 
     # 4) image modality: decode + difference hash, banded Hamming pairs
-    image_ids = inv.filter(
-        F.col("format").isin("png", "jpeg", "gif", "bmp", "tiff", "webp")
-    ).select("doc_id")
+    image_ids = inv.filter(F.col("format").isin(*raster.DECODERS)).select("doc_id")
     images = media.join(F.broadcast(image_ids), "doc_id")
     ihash = image_dhash_table(images).cache()
     ihash.coalesce(args.files).write.mode("overwrite").parquet(args.output + "/image_dhash")

@@ -143,10 +143,11 @@ def _format_seeds() -> list[tuple[str, str, bytes]]:
         ("fmt_png_pal", "image", _png_pal_seed()),
         ("raw_png_pal", "raster", _png_pal_seed()),
         ("raw_bmp_rle", "raster", _bmp_rle_seed()),
-        # animated GIF (kernels/raster.decode_gif_frames): mutants hit the
-        # GCE parsing, sub-region bounds, transparency/disposal logic and
-        # the per-animation budget caps
-        ("gifanim", "gifanim", _gif_anim_seed()),
+        # animated GIF (kernels/raster.decode_gif_frames, through the
+        # A/V layer's decode_video): mutants hit the GCE parsing,
+        # sub-region bounds, transparency/disposal logic and the
+        # per-animation budget caps
+        ("gifanim", "decode_video", _gif_anim_seed()),
         ("fmt_xls", "office", make_xls()),
         ("fmt_ppt", "office", make_ppt()),
         # the round-3 attack surface: RC4 (R2/R3), AESV2, AES-256/R6
@@ -191,28 +192,38 @@ def _format_seeds() -> list[tuple[str, str, bytes]]:
         ("fmt_webp_ocr", "image", webp_text),
         ("raw_webp_ocr", "raster", webp_text),
         ("raw_webp_pal", "raster", _fixture("fixture_swatch.webp")),
-        # AVI video (kernels/media.decode_avi_frames): mutants hit the
-        # RIFF chunk walker, avih/strh/strf parsing, the DIB stride math
-        # and the per-frame budget/caps; the MJPG variant additionally
-        # feeds mutated frames into the baseline-JPEG decoder
-        ("fmt_avi_mjpg", "video", _avi_seed("MJPG")),
-        ("fmt_avi_dib", "video", _avi_seed("DIB ")),
-        ("fmt_mp4_mjpeg", "mp4", _mp4_seed()),
+        # video through the A/V layer's own entry point
+        # (kernels/media.decode_video): AVI mutants hit the RIFF chunk
+        # walker, the shared hdrl reader, the DIB stride math and the
+        # per-frame budget/caps; the MJPG variant additionally feeds
+        # mutated frames into the baseline-JPEG decoder, the MP4 one the
+        # ISO-BMFF sample-table carver
+        ("fmt_avi_mjpg", "decode_video", _avi_seed("MJPG")),
+        ("fmt_avi_dib", "decode_video", _avi_seed("DIB ")),
+        ("fmt_mp4_mjpeg", "decode_video", _mp4_seed()),
         ("sniff_mp4", "sniff", _mp4_seed()),
         # A/V metadata sniffing (kernels/media.sniff_av_meta) is a
         # NO-RAISE contract — callers use it without per-row containment;
         # mutants hit the EBML vint recursion, the MP3 frame walk, the
-        # MP4 box walk and the int32 overflow clamp
-        ("sniff_webm", "sniff", _webm_seed()),
-        ("sniff_mp3", "sniff", _mp3_seed()),
+        # MP4 box walk, the shared WAV/AVI/FLAC header readers and the
+        # int32 overflow clamp
+        ("sniff_webm", "sniff", _av_fixture("webm")),
+        ("sniff_mp3", "sniff", _av_fixture("mp3")),
         ("sniff_avi", "sniff", _avi_seed("DIB ")),
-        ("sniff_ogg", "sniff", _ogg_seed()),
-        # FLAC decode (kernels/miniflac.py): mutants hit STREAMINFO and
-        # frame-header parsing, CRC-8/16 checks, coded numbers, rice
-        # partitions (unary runs, escape codes), fixed/LPC predictors,
-        # wasted bits, stereo decorrelation — the whole bit-level surface
-        ("fmt_flac_fixed", "flac", _flac_seed("fixed2")),
-        ("fmt_flac_midside", "flac", _flac_seed("midside")),
+        ("sniff_ogg", "sniff", _av_fixture("ogg")),
+        ("sniff_wav", "sniff", _audio_fixture("aud-000")),
+        ("sniff_flac", "sniff", _flac_seed("fixed2")),
+        # audio through kernels/media.decode_audio: FLAC mutants hit
+        # STREAMINFO and frame-header parsing, CRC-8/16 checks, coded
+        # numbers, rice partitions (unary runs, escape codes), fixed/LPC
+        # predictors, wasted bits, stereo decorrelation — the whole
+        # bit-level surface; WAV mutants the chunk walk, the fmt checks
+        # and the 16-bit mono and 8-bit 3-channel folds (the contract's
+        # aud-000 and aud-003 inputs)
+        ("fmt_flac_fixed", "decode_audio", _flac_seed("fixed2")),
+        ("fmt_flac_midside", "decode_audio", _flac_seed("midside")),
+        ("fmt_wav16", "decode_audio", _audio_fixture("aud-000")),
+        ("fmt_wav8_multi", "decode_audio", _audio_fixture("aud-003")),
     ]
 
 
@@ -312,29 +323,21 @@ def _mp4_seed() -> bytes:
     return render_mp4_mjpeg(24, 16, grids, fps=10)
 
 
-def _webm_seed() -> bytes:
+def _av_fixture(fmt: str) -> bytes:
+    """The longest `real_av_meta` contract fixture of a format (the
+    bare-magic ogg row has no duration path)."""
     from documentconvert_spark.queries_extraction import _real_av_fixtures
 
-    return next(c for d, c, fmt, *_ in _real_av_fixtures() if fmt == "webm")
+    return max((c for _d, c, f, *_ in _real_av_fixtures() if f == fmt), key=len)
 
 
-def _mp3_seed() -> bytes:
-    from documentconvert_spark.queries_extraction import _real_av_fixtures
+def _audio_fixture(doc_id: str) -> bytes:
+    from documentconvert_spark.queries_extraction import _real_audio_fixtures
 
-    return next(c for d, c, fmt, *_ in _real_av_fixtures() if fmt == "mp3")
-
-
-def _ogg_seed() -> bytes:
-    from documentconvert_spark.queries_extraction import _real_av_fixtures
-
-    # the Vorbis fixture (the bare-magic ogg row has no duration path)
-    return next(c for d, c, fmt, *_ in _real_av_fixtures()
-                if fmt == "ogg" and len(c) > 60)
+    return dict(_real_audio_fixtures()[0])[doc_id]
 
 
 def _flac_seed(mode: str) -> bytes:
-    import random
-
     from documentconvert_spark.corpus import encode_flac
 
     rng = random.Random(f"fuzz-flac:{mode}")
@@ -486,23 +489,17 @@ def _run_chunk(name: str, route: str, lo: int, hi: int) -> None:
         # uint8 scalars can wrap
         return [Span("figure", f"{w}x{h}:{int(gray[0].sum())}", "", 0)]
 
-    def video_route(data: bytes) -> list:
-        from documentconvert_spark.kernels.media import decode_avi_frames
+    def decode_video_route(data: bytes) -> list:
+        from documentconvert_spark.kernels.media import decode_video
 
-        w, h, fps, frames = decode_avi_frames(data)
-        return [Span("figure", f"{w}x{h}@{fps}:{len(frames)}", "", 0)]
-
-    def mp4_route(data: bytes) -> list:
-        from documentconvert_spark.kernels.media import decode_mp4_frames
-
-        w, h, fps, frames = decode_mp4_frames(data)
-        return [Span("figure", f"{w}x{h}@{fps}:{len(frames)}", "", 0)]
-
-    def gifanim_route(data: bytes) -> list:
-        from documentconvert_spark.kernels.raster import decode_gif_frames
-
-        w, h, frames = decode_gif_frames(data)
+        w, h, frames = decode_video(data)
         return [Span("figure", f"{w}x{h}:{len(frames)}", "", 0)]
+
+    def decode_audio_route(data: bytes) -> list:
+        from documentconvert_spark.kernels.media import decode_audio
+
+        sr, ch, mono = decode_audio(data)
+        return [Span("figure", f"{sr}:{ch}:{len(mono)}", "", 0)]
 
     def sniff_route(data: bytes) -> list:
         # NO-RAISE contract: any exception here is a finding, and the
@@ -515,16 +512,10 @@ def _run_chunk(name: str, route: str, lo: int, hi: int) -> None:
                 raise AssertionError(f"sniff leaked non-int32 value {v}")
         return [Span("figure", f"{fmt}:{w}x{h}:{dur}", "", 0)]
 
-    def flac_route(data: bytes) -> list:
-        from documentconvert_spark.kernels.miniflac import decode_flac_samples
-
-        sr, ch, mono = decode_flac_samples(data)
-        return [Span("figure", f"{sr}:{ch}:{len(mono)}", "", 0)]
-
     routes = {"pdf": extract_pdf_any, "office": extract_office_any,
               "image": extract_image_any, "raster": raster_route,
-              "video": video_route, "mp4": mp4_route, "sniff": sniff_route,
-              "flac": flac_route, "gifanim": gifanim_route}
+              "decode_video": decode_video_route, "decode_audio": decode_audio_route,
+              "sniff": sniff_route}
     with open(os.path.join(SEED_DIR, f"{name}.bin"), "rb") as fh:
         data = fh.read()
     fn = routes[route]

@@ -81,6 +81,24 @@ def test_zip_member_bomb_raises(monkeypatch):
         zip_read_capped(z, "bomb.xml")
 
 
+def test_image_and_audio_decoders_read_the_cap_at_call_time(monkeypatch):
+    """The raster and FLAC decoders read limits.MAX_DECODED_BYTES when
+    they run, so lowering it reaches them as it reaches realpdf."""
+    from documentconvert_spark.corpus import encode_bmp24, encode_flac
+    from documentconvert_spark.kernels.miniflac import decode_flac_samples
+    from documentconvert_spark.kernels.raster import decode_bmp_gray
+
+    bmp = encode_bmp24(64, 64, [[(200, 100, 50)] * 64] * 64)
+    flac = encode_flac(8000, [[(i * 37) % 2000 - 1000 for i in range(512)]])
+    assert decode_bmp_gray(bmp)[:2] == (64, 64)
+    assert len(decode_flac_samples(flac)[2]) == 512
+    monkeypatch.setattr(limits, "MAX_DECODED_BYTES", 100)
+    with pytest.raises(ValueError, match="bmp: dimensions over cap"):
+        decode_bmp_gray(bmp)
+    with pytest.raises(ValueError, match="flac: decoded samples over cap"):
+        decode_flac_samples(flac)
+
+
 def test_rle_bomb_raises(monkeypatch):
     monkeypatch.setattr(limits, "MAX_DECODED_BYTES", 4096)
     # each \x81<byte> pair expands to 128 bytes; 64 pairs = 8 KiB > cap

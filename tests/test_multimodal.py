@@ -8,11 +8,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from documentconvert_spark.corpus import corpus_rows, fixture_corpus
+from documentconvert_spark.kernels.media import decode_audio, decode_video
 from documentconvert_spark.kernels.raster import decode_raster_gray
 from documentconvert_spark.ops.multimodal import (
     FRAME_STRIDE,
-    _decode_audio,
-    _decode_video,
     _fields,
     build_media_table,
     decode_media_meta,
@@ -41,9 +40,9 @@ def test_codec_decode_contract():
     with pytest.raises(ValueError):
         decode_raster_gray(b"\xff\xd8")
     with pytest.raises(ValueError):
-        _decode_audio(b"RIFF")
+        decode_audio(b"RIFF")
     with pytest.raises(ValueError):  # MP4 without a moov box: nothing to decode
-        _decode_video(b"\x00\x00\x00\x18ftypisom")
+        decode_video(b"\x00\x00\x00\x18ftypisom")
 
 
 @pytest.fixture(scope="module")

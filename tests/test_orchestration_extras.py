@@ -299,7 +299,7 @@ def test_run_media_cli_end_to_end(tmp_path):
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
-    from documentconvert_spark.corpus import encode_flac, render_avi
+    from documentconvert_spark.corpus import encode_flac, render_avi, render_mp4_mjpeg
     from documentconvert_spark.queries_extraction import _wav_pcm_bytes
 
     grids = [[bytearray([255] * 20) for _ in range(10)] for _ in range(4)]
@@ -314,9 +314,13 @@ def test_run_media_cli_end_to_end(tmp_path):
     anim = encode_gif_anim(16, 10, [
         {"idx": [(x + y + f) % 2 for y in range(10) for x in range(16)]}
         for f in range(3)], [(0, 0, 0), (255, 255, 255)], 2)
+    # MJPEG-in-MP4 at another size: its frames match no AVI frame
+    mp4_grids = [[bytearray([0] * 16) if y < 2 + f else bytearray([255] * 16)
+                  for y in range(8)] for f in range(3)]
     rows = [
         ("m-avi-a", render_avi(20, 10, grids, fps=5, codec="MJPG")),
         ("m-avi-b", render_avi(20, 10, grids, fps=5, codec="DIB ")),  # dup
+        ("m-mp4", render_mp4_mjpeg(16, 8, mp4_grids, fps=4)),
         ("m-wav", _wav_pcm_bytes(8000, [mono], 16)),
         ("m-flac", encode_flac(8000, [mono], mode="fixed1")),  # cross-codec dup
         ("m-png", encode_gray_png(48, 24, img)),
@@ -337,10 +341,10 @@ def test_run_media_cli_end_to_end(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     summary = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert summary["docs_in"] == 8
-    assert summary["by_format"] == {"avi": 2, "wav": 1, "flac": 1, "gif": 1,
-                                    "png": 1, "webp": 1, "unknown": 1}
-    assert summary["video_frames_decoded"] == 11  # 2 AVIs x 4 + gif x 3
+    assert summary["docs_in"] == 9
+    assert summary["by_format"] == {"avi": 2, "mp4": 1, "wav": 1, "flac": 1,
+                                    "gif": 1, "png": 1, "webp": 1, "unknown": 1}
+    assert summary["video_frames_decoded"] == 14  # 2 AVIs x 4 + mp4 x 3 + gif x 3
     assert summary["audio_decoded"] == 2
     assert summary["images_hashed"] == 3  # png, webp + the gif first frame
     assert summary["video_dup_pairs"] == 1 and summary["audio_dup_pairs"] == 1

@@ -451,7 +451,7 @@ def test_router_covers_four_formats_and_rejects_rest():
 
 
 def test_codec_decode_image_and_audio_paths():
-    from documentconvert_spark.ops.multimodal import _decode_audio, _decode_video
+    from documentconvert_spark.kernels.media import decode_audio, decode_video
 
     _fmt, w, h, rows = decode_raster_gray(render_text_jpeg(["HI"]))
     assert w > 0 and len(rows) == h
@@ -460,15 +460,15 @@ def test_codec_decode_image_and_audio_paths():
     wav = (b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
            + b"data" + struct.pack("<I", len(body)) + body)
-    sr, ch, mono = _decode_audio(wav)
+    sr, ch, mono = decode_audio(wav)
     assert sr == 8000 and list(mono) == [1, 2, 3, 4]
     from documentconvert_spark.corpus import render_avi
 
     grids = [[bytearray([255] * 16) for _ in range(8)] for _ in range(2)]
-    w, h, frames = _decode_video(render_avi(16, 8, grids, fps=4))
+    w, h, frames = decode_video(render_avi(16, 8, grids, fps=4))
     assert (w, h, len(frames)) == (16, 8, 2)
     with pytest.raises(ValueError):
-        _decode_video(b"anything")
+        decode_video(b"anything")
 
 
 def test_real_raster_stats_spark(spark):
