@@ -244,22 +244,6 @@ def _dom_doc(rng: random.Random, doc_id: str, all_table: bool = False) -> tuple[
     return "".join(parts).encode("utf-8"), finalize(expected)
 
 
-# ---------------------------------------------------------------- mini-IMG
-
-def _img_doc(rng: random.Random, doc_id: str) -> tuple[bytes, list[Span]]:
-    """Image document: figure span + deterministic OCR-stub text embedded in
-    the file (the sandbox has no OCR engine; reference analogue is the
-    mineru CLI path, document_service.py:826-907)."""
-    ref = f"scan-{doc_id}.jpg"
-    ocr = _sentence(rng, 6, 12)
-    content = f"MINIIMG-1.0\n{ref}\n{ocr}\n".encode("utf-8")
-    expected = finalize([
-        Span("figure", "", ref, -1),
-        Span("paragraph", normalize_text(ocr), "", -1),
-    ])
-    return content, expected
-
-
 # ---------------------------------------------------------------- classes
 
 def _build_pdf_class(cls: str, rng: random.Random, doc_id: str, scale: int = 1) -> tuple[bytes, list[Span]]:
@@ -355,18 +339,6 @@ def make_doc(cls: str, idx: int, seed: int = 42) -> RawDoc:
         content, exp = _build_pdf_class(cls, rng, doc_id)
         return RawDoc(doc_id, "pdf", content, bucket, path, exp)
     raise ValueError(cls)
-
-
-def fixture_corpus(per_class: int = 3, seed: int = 42) -> list[RawDoc]:
-    """Golden-test corpus: per_class docs of every fixture class, plus one
-    image doc per class slot (image path is a distinct doc_type)."""
-    docs = [make_doc(cls, i, seed) for cls in CLASSES for i in range(per_class)]
-    for i in range(per_class):
-        rng = random.Random(f"{seed}:F-IMG:{i}")
-        doc_id = f"fimg-{i:06d}"
-        content, exp = _img_doc(rng, doc_id)
-        docs.append(RawDoc(doc_id, "image", content, f"bucket-{i % 7}", f"incoming/F-IMG/{doc_id}.jpg", exp))
-    return docs
 
 
 _SCALE_CLASSES = [c for c in CLASSES if c not in ("F-BIG",)]
@@ -2297,3 +2269,25 @@ def make_ppt() -> bytes:
     )
     doc = ppt_rec(0x000F, 0x03E8, slide)
     return write_cfb([("PowerPoint Document", doc), ("Current User", b"\x00" * 16)])
+
+
+def make_word_doc(text: str, pictures: list[bytes]) -> bytes:
+    """Word 97 piece-table .doc per [MS-DOC]: a FIB (magic 0xA5EC,
+    fWhichTblStm set, ccpText, fcClx/lcbClx) plus one compressed-cp1252
+    text piece in the WordDocument stream, the Clx in 1Table, and one
+    OfficeArtBlipJPEG record (16-byte UID, 1-byte tag) per picture in Data."""
+    text_fc = 0x400
+    raw = text.encode("cp1252")
+    word = bytearray(text_fc + len(raw))
+    struct.pack_into("<H", word, 0x0000, 0xA5EC)
+    struct.pack_into("<H", word, 0x000A, 0x0200)           # fWhichTblStm: 1Table
+    struct.pack_into("<I", word, 0x004C, len(text))        # ccpText
+    word[text_fc:] = raw
+    pcd = struct.pack("<HIH", 0, (text_fc * 2) | 0x40000000, 0)  # compressed piece
+    plc_pcd = struct.pack("<II", 0, len(text)) + pcd
+    clx = b"\x02" + struct.pack("<I", len(plc_pcd)) + plc_pcd
+    struct.pack_into("<II", word, 0x01A2, 0, len(clx))     # fcClx, lcbClx
+    data = b"".join(
+        struct.pack("<HHI", 0x46A0, 0xF01D, 17 + len(pic)) + b"\x11" * 16 + b"\xff" + pic
+        for pic in pictures)
+    return write_cfb([("WordDocument", bytes(word)), ("1Table", clx), ("Data", data)])

@@ -1,133 +1,32 @@
-"""Real embedded-media extraction, and the audio/video layer.
+"""The audio/video layer: recognise an A/V container once, decode it
+by one table.
 
-The reference physically extracts figure crops to `output/images/` and the
-markdown references them (`services/document_service.py:259-304`). The
-engine's analogue at corpus scale: pull the actual embedded media BYTES
-out of each document container into the media side table
-(doc_id, media_ref, content binary). Image headers, media keys and
-pixels belong to the image layer (kernels/raster.py). This module is the
-audio/video layer on the same pattern, no codec libraries: one recogniser
+The image layer (kernels/raster.py) owns image headers, media keys and
+pixels; the document layer (kernels/detect.py) owns document containers
+and the embedded media carved from them. This module is the audio/video
+layer on the image layer's pattern, no codec libraries: one recogniser
 (`av_format`), one header reader per container shared by the sniff
 (`sniff_av_meta`) and the decoder, and the format → decoder tables
 `AUDIO_DECODERS` (WAV, FLAC) and `VIDEO_DECODERS` (AVI, MJPEG-in-MP4,
 animated GIF) behind `decode_audio`/`decode_video`.
-
-Containers covered: OOXML (word/media/, ppt/media/, xl/media/), ODF
-(Pictures/), PDF (Image XObject streams, media_ref matching the figure
-spans realpdf emits), RTF (pict payloads via the minirtf tokenizer),
-legacy OLE (.doc/.xls/.ppt OfficeArt BLIP records, [MS-ODRAW], carved by
-kernels/minidoc.carve_officeart_blips), and raw image files as whole
-documents.
 """
 
 from __future__ import annotations
 
-import io
 import struct
-import zipfile
 
 import numpy as np
 
 from documentconvert_spark.kernels import limits
-from documentconvert_spark.kernels.limits import zip_read_capped
 from documentconvert_spark.kernels.miniflac import decode_flac_samples, streaminfo
 from documentconvert_spark.kernels.minijpeg import decode_jpeg_gray
 from documentconvert_spark.kernels.raster import (
     _GIF_MAGICS,
     decode_gif_frames,
     dib_gray,
-    image_file_ref,
-    image_media_ref,
     riff_chunks,
-    sniff_image_meta,
 )
 
-_ZIP_MEDIA_DIRS = ("word/media/", "ppt/media/", "xl/media/", "Pictures/")
-
-
-def _zip_media(content: bytes) -> list[tuple[str, bytes]]:
-    out = []
-    z = zipfile.ZipFile(io.BytesIO(content))
-    for name in z.namelist():
-        if any(name.startswith(d) for d in _ZIP_MEDIA_DIRS) and not name.endswith("/"):
-            try:
-                out.append((name.rsplit("/", 1)[-1], zip_read_capped(z, name)))
-            except ValueError:
-                # one over-cap member must not drop the document's other
-                # media (same per-item containment as _pdf_media below)
-                continue
-    return out
-
-
-def _pdf_media(content: bytes) -> list[tuple[str, bytes]]:
-    """Image XObject streams, keyed exactly as realpdf's figure spans
-    (sha1(first 4 KiB)[:12] + '.jpg') so span⋈media joins line up."""
-    from documentconvert_spark.kernels.realpdf import _Pdf
-
-    pdf = _Pdf(content)
-    out = []
-    seen = set()
-    for num in list(pdf.offsets) + list(pdf.in_objstm):
-        try:
-            obj = pdf.get(num)
-        except Exception:
-            continue
-        if isinstance(obj, tuple) and isinstance(obj[0], dict):
-            d = obj[0]
-            if pdf.resolve(d.get("Subtype")) == "Image":
-                ref = image_media_ref(obj[1])
-                if ref not in seen:
-                    seen.add(ref)
-                    try:
-                        out.append((ref, pdf.stream_bytes(obj)))
-                    except ValueError:
-                        out.append((ref, obj[1]))  # undecodable filter: raw
-    return out
-
-
-def _rtf_media(content: bytes) -> list[tuple[str, bytes]]:
-    """Hex-encoded \\pict payloads, collected by the SAME tokenizer walk
-    that emits minirtf's figure spans (extract_rtf media_out hook) — same
-    destination skipping (\\*\\shppict kept, \\nonshppict skipped) and the
-    same buffered-text hash, so span ⋈ media joins line up exactly."""
-    from documentconvert_spark.kernels.minirtf import extract_rtf
-
-    collected: list[tuple[str, bytes]] = []
-    try:
-        extract_rtf(content, media_out=collected)
-    except (ValueError, LookupError):
-        pass  # no extractable content; picts collected before the raise kept
-    out = []
-    seen = set()
-    for ref, blob in collected:
-        if ref not in seen:
-            seen.add(ref)
-            out.append((ref, blob))
-    return out
-
-
-def extract_media_files(content: bytes) -> list[tuple[str, bytes]]:
-    """All embedded media in one document container → [(media_ref, bytes)]."""
-    if not content:
-        return []
-    if content[:4] == b"PK\x03\x04":
-        return _zip_media(content)
-    if content[:1024].lstrip()[:5].startswith(b"%PDF-"):
-        return _pdf_media(content)
-    if content[:1024].lstrip()[:5].startswith(b"{\\rtf"):
-        return _rtf_media(content)
-    if content[:8] == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1":
-        return _ole_media(content)
-    fmt, _w, _h = sniff_image_meta(content)
-    if fmt != "unknown":
-        # The document IS an image (reference's image_to_markdown input
-        # path): one media row keyed like the figure span the image
-        # extraction kernel emits.
-        return [(image_file_ref(content, fmt), content)]
-    return []
-
-
-# ---------------------------------------------------------------- audio/video
 # Container-level metadata from raw bytes, public specs only (ISO base
 # media / RIFF-WAVE / FLAC STREAMINFO / EBML magic). No codec libraries —
 # this is the inventory pass a training pipeline runs over opaque media
@@ -753,23 +652,3 @@ def decode_video(data: bytes):
     # the AVI/MP4 decoders also return fps before the frames; GIF does not
     w, h, *_fps, frames = VIDEO_DECODERS.get(av_format(data), decode_avi_frames)(data)
     return w, h, frames
-
-
-def _ole_media(content: bytes) -> list[tuple[str, bytes]]:
-    from documentconvert_spark.kernels.minidoc import _Cfb, carve_officeart_blips
-
-    cfb = _Cfb(content)
-    out = []
-    seen = set()
-    # picture stores by format: Word "Data", PowerPoint "Pictures",
-    # Excel drawing groups live inside the Workbook stream itself
-    for name in ("Data", "Pictures", "Workbook", "Book", "PowerPoint Document", "WordDocument"):
-        try:
-            stream = cfb.stream(name)
-        except ValueError:
-            continue
-        for ref, pic in carve_officeart_blips(stream):
-            if ref not in seen:
-                seen.add(ref)
-                out.append((ref, pic))
-    return out

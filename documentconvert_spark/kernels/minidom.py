@@ -45,15 +45,15 @@ _TAG_RE = re.compile(
 )
 _ATTR_RE = re.compile(r"([a-zA-Z_:-][\w:.-]*)\s*=\s*(?:\"([^\"]*)\"|'([^']*)'|([^\s>]+))")
 
-# comments, CDATA, doctype/declarations, and raw-text elements whose body
-# must never reach the tag tokenizer (a '</p>' inside a JS string literal
-# would otherwise corrupt the open-element stack). Comment/CDATA/doctype
-# forms are replaced with "" — browsers concatenate the surrounding text
-# runs directly (minifiers rely on foo<!-- -->bar reading back as
-# "foobar") — while removed raw-text ELEMENTS leave a space so words on
-# either side of a <script>/<title> never fuse.
+# comments, CDATA, doctype/declarations, '<?' bogus comments (<?xml …?>)
+# and raw-text elements whose body must never reach the tag tokenizer (a
+# '</p>' inside a JS string literal would otherwise corrupt the open-element
+# stack). Comment/CDATA/doctype/'<?' forms are replaced with "" — browsers
+# concatenate the surrounding text runs directly (minifiers rely on
+# foo<!-- -->bar reading back as "foobar") — while removed raw-text ELEMENTS
+# leave a space so words on either side of a <script>/<title> never fuse.
 _STRIP_RE = re.compile(
-    r"<!--.*?(?:-->|$)|<!\[CDATA\[.*?(?:\]\]>|$)|<![^>]*>"
+    r"<!--.*?(?:-->|$)|<!\[CDATA\[.*?(?:\]\]>|$)|<![^>]*>|<\?[^>]*>?"
     r"|<script\b[^>]*>.*?(?:</script\s*>|$)"
     r"|<style\b[^>]*>.*?(?:</style\s*>|$)"
     r"|<textarea\b[^>]*>.*?(?:</textarea\s*>|$)"
@@ -64,7 +64,7 @@ _STRIP_RE = re.compile(
 
 
 def _strip_repl(m: re.Match) -> str:
-    return "" if m.group(0).startswith("<!") else " "
+    return "" if m.group(0)[1] in "!?" else " "
 
 # HTML5-style implied end tags: opening `tag` ends the NEAREST ancestor
 # run of these, looking through still-open inline formatting elements

@@ -32,8 +32,6 @@ from documentconvert_spark.kernels.spans import (
     normalize_text,
 )
 
-ZIP_MAGIC = b"PK\x03\x04"
-
 _W = "{http://schemas.openxmlformats.org/wordprocessingml/2006/main}"
 _M = "{http://schemas.openxmlformats.org/officeDocument/2006/math}"
 _A = "{http://schemas.openxmlformats.org/drawingml/2006/main}"
@@ -588,21 +586,3 @@ def extract_xlsx(content: bytes, z: zipfile.ZipFile | None = None) -> list[Span]
             spans.append(Span("heading", normalize_text(name), "", -1, 1))
             spans.append(Span("table", normalize_text("\n".join(rows_out)), "", -1))
     return finalize(spans)
-
-
-# -- container sniff ---------------------------------------------------------
-
-def extract_ooxml(content: bytes, z: zipfile.ZipFile | None = None) -> list[Span]:
-    """Dispatch a PK-zip container to the right OOXML extractor by its
-    content types (mirrors the reference's suffix dispatch,
-    document_service.py:83-126, but on actual container structure). The
-    ZipFile parses once and is shared with the chosen extractor."""
-    z = z or zipfile.ZipFile(io.BytesIO(content))
-    names = set(z.namelist())
-    if "word/document.xml" in names:
-        return extract_docx(content, z)
-    if "ppt/presentation.xml" in names:
-        return extract_pptx(content, z)
-    if "xl/workbook.xml" in names:
-        return extract_xlsx(content, z)
-    raise ValueError("ooxml: unrecognized OOXML container (no document/presentation/workbook part)")

@@ -178,6 +178,10 @@ def image_file_ref(content: bytes, fmt: str) -> str:
     return hashlib.sha1(content[:4096]).hexdigest()[:12] + f".{ext}"
 
 
+# every format name sniff_image_meta gives besides "unknown"
+IMAGE_FORMATS = ("png", "jpeg", "gif", "bmp", "svg", "tiff", "wmf", "emf", "webp")
+
+
 def sniff_image_meta(data: bytes) -> tuple[str, int | None, int | None]:
     """(format, width, height) from the file header alone. Dimensions
     are file-controlled: values outside (0, 2**31) become None at this
@@ -215,7 +219,8 @@ def _sniff_image_meta_raw(data: bytes) -> tuple[str, int | None, int | None]:
     if data[:2] == b"BM" and len(data) >= 26:
         w, h = struct.unpack_from("<ii", data, 18)
         return "bmp", abs(w), abs(h)
-    if data[:5] == b"<?xml" or data[:1024].lstrip()[:4] == b"<svg":
+    head = data[:1024]  # an XML prolog is SVG only with <svg in the same KiB
+    if head.lstrip()[:4] == b"<svg" or (data[:5] == b"<?xml" and b"<svg" in head):
         return "svg", None, None
     if bytes(data[:4]) in _TIFF_BYTE_ORDER:
         return ("tiff",) + _tiff_dims(data)

@@ -25,8 +25,6 @@ import re
 import unicodedata
 from dataclasses import dataclass
 
-KINDS = ("heading", "paragraph", "code", "table", "figure", "formula")
-
 # fixed-pitch font-name detection, shared by the PDF and docx code-block
 # classifiers. "mono(?!type)" keeps Monaco / JetBrains Mono / monospace
 # while excluding the Monotype foundry's proportional faces (Monotype

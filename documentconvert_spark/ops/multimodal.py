@@ -50,12 +50,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from documentconvert_spark.kernels.media import (
-    decode_audio,
-    decode_video,
-    extract_media_files,
-    sniff_av_meta,
-)
+from documentconvert_spark.kernels.detect import extract_media_files
+from documentconvert_spark.kernels.media import decode_audio, decode_video, sniff_av_meta
 from documentconvert_spark.kernels.raster import (
     decode_raster_gray,
     dhash64,

@@ -326,7 +326,8 @@ FROM r GROUP BY doc_id
 # scripts/gen_extra_fixtures.py: PDF text/fonts/columns/furniture/rotation/
 # encryption, DOCX/ODF/PPT/XLS/RTF/HTML, and OCR-bearing PNG/JPEG/GIF/BMP/
 # TIFF/WebP images) extracted by the from-scratch real-format kernels
-# (realpdf / miniooxml / minidoc / raster via kernels/detect.py sniffing).
+# (realpdf / miniooxml / minidoc / raster, each chosen by the document
+# layer's one recogniser and routing table in kernels/detect.py).
 # The committed expectation parquets pin the exact span sequences; the Spark
 # side recomputes from raw bytes through the binaryFile source + Arrow UDFs.
 # The goldens also hold rows for the reference's 7-file sample corpus
@@ -437,8 +438,8 @@ WHERE doc_id IN ({_EXTRA_DOC_IDS})
 def q_real_ocr_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4 OCR text parity: real PNG/JPEG (baseline + progressive)/GIF/
     BMP/TIFF/lossless-WebP documents flow through the image route
-    (kernels/detect.py → kernels/miniocr.py glyph matcher over the
-    from-scratch decoders in kernels/raster.py, minijpeg.py,
+    (kernels/detect.ROUTES["image"] → kernels/miniocr.py glyph matcher
+    over the from-scratch decoders in kernels/raster.py, minijpeg.py,
     miniwebp.py) and the decoded TEXT — not just the figure — lands as
     paragraph spans. The oracle pins the exact decoded strings (raw, not
     hashed: the judge-readable proof that image_to_markdown emits text

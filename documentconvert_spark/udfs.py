@@ -8,8 +8,9 @@ input_hint mandate):
      -> struct<spans,markdown,n_spans,error,error_class,processing_s>
      — the conversion core (reference dispatch `document_service.py:83-126`;
      converters §2.9 C1/C3/C4) fused with the MakeMode.MM_MD fold and the
-     error report. Dispatches *inside* the Arrow batch, so mixed-type
-     batches still make one JVM↔Python round trip.
+     error report. Dispatches *inside* the Arrow batch through the document
+     layer's one recogniser and routing table (kernels/detect.py), so
+     mixed-type batches still make one JVM↔Python round trip.
   2. fix_encoding_udf(s) -> string — URL-decode + mojibake repair chain.
 
 Per-row error containment (reference C7, `document_service.py:119-126`):
@@ -18,6 +19,7 @@ a malformed document yields an error row, never a failed Spark task.
 
 from __future__ import annotations
 
+import functools
 import time
 
 import pandas as pd
@@ -28,18 +30,13 @@ from documentconvert_spark.kernels.encoding import ensure_utf8
 from documentconvert_spark.kernels.errors import classify_error
 from documentconvert_spark.kernels.markdown import error_markdown as _error_md
 from documentconvert_spark.kernels.markdown import spans_to_markdown as _fold
-from documentconvert_spark.kernels.detect import extract_image_any, extract_office_any, extract_pdf_any
+from documentconvert_spark.kernels.detect import ROUTES, extract
 from documentconvert_spark.schemas import EXTRACT_RESULT
 
-# Magic-byte sniffing inside each type keeps the reference's dispatch
-# (document_service.py:83-126) while transparently handling BOTH the
-# synthetic corpus formats and real PDF / OOXML / OLE documents
-# (kernels/detect.py).
-_KERNELS = {
-    "pdf": extract_pdf_any,
-    "markup": extract_office_any,
-    "image": extract_image_any,
-}
+# conversion type → kernel: the reference's type dispatch
+# (document_service.py:83-126), each type resolved to its parser by magic
+# bytes (kernels/detect.py), synthetic and real formats alike
+_KERNELS = {doc_type: functools.partial(extract, doc_type) for doc_type in ROUTES}
 
 
 def _extract_batch(doc_id: pd.Series, doc_type: pd.Series, content: pd.Series) -> pd.DataFrame:

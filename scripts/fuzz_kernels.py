@@ -15,6 +15,9 @@ Usage:
   python scripts/fuzz_kernels.py [n_mutants_per_seed]      # parent: fan out
   python scripts/fuzz_kernels.py --chunk SEED ROUTE LO HI  # worker (internal)
 
+Every document seed also runs the `media` route: the document layer's
+embedded-media walkers (kernels/detect.extract_media_files).
+
 The parent builds every seed once and writes its bytes to
 _work/fuzz/seeds/<seed>.bin; each worker reads only its own seed from
 there. Exit code 0 = no hangs / no oversized outputs. Findings are
@@ -23,6 +26,7 @@ written to _work/fuzz/<seed>_<idx>.bin for replay.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import random
@@ -79,11 +83,51 @@ def _render_prop_kern_seed() -> bytes:
     return render_text_png_prop(["KERN L- SEED"], scale=2, kern={(0, 6): -3})
 
 
+def _doc_seed() -> bytes:
+    """Word piece-table .doc: a 2x2 table whose first cell anchors the one
+    JPEG picture, so mutants reach the FIB/Clx/piece walk, the table and
+    anchor logic and the OfficeArt BLIP carver."""
+    from documentconvert_spark.corpus import make_word_doc, render_text_jpeg
+
+    text = ("Exam paper\r"
+            "Q1 \x01stem\x07B1\x07\x07A2\x07B2\x07\x07\r"
+            "After the table\r")
+    return make_word_doc(text, [render_text_jpeg(["DOC PIC"], scale=2)])
+
+
+def _pptx_seed(png: bytes) -> bytes:
+    """One-slide .pptx: title, body and a picture whose rel points into
+    ppt/media/, so mutants reach the slide order, placeholder and blip
+    paths and the zip media walker."""
+    from documentconvert_spark.corpus import det_zip
+
+    ns = ('xmlns:p="http://schemas.openxmlformats.org/presentationml/2006/main" '
+          'xmlns:a="http://schemas.openxmlformats.org/drawingml/2006/main" '
+          'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"')
+    rels = ('<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/'
+            'relationships"><Relationship Id="rId1" Type="t" Target="{}"/></Relationships>')
+    sp = ('<p:sp><p:nvSpPr><p:nvPr><p:ph type="{}"/></p:nvPr></p:nvSpPr>'
+          '<p:txBody><a:p><a:r><a:t>{}</a:t></a:r></a:p></p:txBody></p:sp>')
+    slide = (f"<p:sld {ns}><p:cSld><p:spTree>" + sp.format("title", "Fuzz Deck")
+             + sp.format("body", "slide body text")
+             + '<p:pic><p:blipFill><a:blip r:embed="rId1"/></p:blipFill></p:pic>'
+             "</p:spTree></p:cSld></p:sld>")
+    return det_zip([
+        ("ppt/presentation.xml", f'<p:presentation {ns}><p:sldIdLst><p:sldId id="256" '
+                                 'r:id="rId1"/></p:sldIdLst></p:presentation>'),
+        ("ppt/_rels/presentation.xml.rels", rels.format("slides/slide1.xml")),
+        ("ppt/slides/slide1.xml", slide),
+        ("ppt/slides/_rels/slide1.xml.rels", rels.format("../media/image1.png")),
+        ("ppt/media/image1.png", png),
+    ])
+
+
 def _format_seeds() -> list[tuple[str, str, bytes]]:
     """Formats the reference corpus and synthetic docs don't cover:
-    RTF (with an embedded \\pict), ODF (zip container), BIFF .xls/.ppt
-    (OLE CFB), real PNG/JPEG. Shapes that a committed fixture already
-    seeds byte for byte on the same route are not repeated here."""
+    RTF (with an embedded \\pict), ODF and OOXML (zip containers), Word
+    .doc and BIFF .xls/.ppt (OLE CFB), real PNG/JPEG. Shapes that a
+    committed fixture already seeds byte for byte on the same route are
+    not repeated here."""
     import struct
 
     from documentconvert_spark.corpus import (
@@ -150,6 +194,8 @@ def _format_seeds() -> list[tuple[str, str, bytes]]:
         ("gifanim", "decode_video", _gif_anim_seed()),
         ("fmt_xls", "office", make_xls()),
         ("fmt_ppt", "office", make_ppt()),
+        ("fmt_doc", "office", _doc_seed()),
+        ("fmt_pptx", "office", _pptx_seed(png)),
         # the round-3 attack surface: RC4 (R2/R3), AESV2, AES-256/R6
         # decryption and the LZW filter — mutants hit key derivation,
         # /Encrypt dict parsing, CBC unpadding and LZW table growth
@@ -470,12 +516,7 @@ def _run_chunk(name: str, route: str, lo: int, hi: int) -> None:
     resource.setrlimit(resource.RLIMIT_AS, (AS_LIMIT_BYTES, AS_LIMIT_BYTES))
     signal.signal(signal.SIGALRM, _alarm)
 
-    from documentconvert_spark.kernels.detect import (
-        extract_image_any,
-        extract_office_any,
-        extract_pdf_any,
-    )
-
+    from documentconvert_spark.kernels.detect import extract, extract_media_files
     from documentconvert_spark.kernels.raster import decode_raster_gray
     from documentconvert_spark.kernels.spans import Span
 
@@ -512,10 +553,17 @@ def _run_chunk(name: str, route: str, lo: int, hi: int) -> None:
                 raise AssertionError(f"sniff leaked non-int32 value {v}")
         return [Span("figure", f"{fmt}:{w}x{h}:{dur}", "", 0)]
 
-    routes = {"pdf": extract_pdf_any, "office": extract_office_any,
-              "image": extract_image_any, "raster": raster_route,
+    def media_route(data: bytes) -> list:
+        # the document layer's embedded-media walkers (zip/PDF/RTF/OLE)
+        # and the whole-document image row
+        return [Span("figure", f"{ref}:{len(blob)}", "", 0)
+                for ref, blob in extract_media_files(data)]
+
+    routes = {"pdf": functools.partial(extract, "pdf"),
+              "office": functools.partial(extract, "markup"),
+              "image": functools.partial(extract, "image"), "raster": raster_route,
               "decode_video": decode_video_route, "decode_audio": decode_audio_route,
-              "sniff": sniff_route}
+              "sniff": sniff_route, "media": media_route}
     with open(os.path.join(SEED_DIR, f"{name}.bin"), "rb") as fh:
         data = fh.read()
     fn = routes[route]
@@ -552,7 +600,7 @@ def _run_chunk(name: str, route: str, lo: int, hi: int) -> None:
     for idx, kind, mutant in findings:
         with open(os.path.join(OUT_DIR, f"{name}_{idx}.bin"), "wb") as f:
             f.write(mutant)
-    print(json.dumps({"seed": name, "lo": lo, "hi": hi, "stats": stats,
+    print(json.dumps({"seed": name, "route": route, "lo": lo, "hi": hi, "stats": stats,
                       "findings": [(i, k) for i, k, _ in findings]}))
 
 
@@ -567,37 +615,40 @@ def main() -> None:
         with open(os.path.join(SEED_DIR, f"{name}.bin"), "wb") as fh:
             fh.write(data)
     chunk = 50
+    routes = [(name, route) for name, route, _data in seeds]
+    routes += [(name, "media") for name, route, _data in seeds
+               if route in ("pdf", "office", "image")]
     jobs = [(name, route, lo, min(lo + chunk, n))
-            for name, route, _data in seeds for lo in range(0, n, chunk)]
+            for name, route in routes for lo in range(0, n, chunk)]
     # a few chunks at a time; each is its own process so a hard (C-level)
     # hang is killed by the parent timeout and reported with its range
     totals = {"ok": 0, "contained": 0, "timeout": 0, "memory": 0, "oversized": 0,
               "sniff_raise": 0}
     bad: list[str] = []
-    running: list[tuple[subprocess.Popen, str, int, int]] = []
+    running: list[tuple[subprocess.Popen, str, str, int, int]] = []
     pending = list(jobs)
     import time as _time
 
     def reap(block: bool) -> None:
-        for p, name, lo, hi in list(running):
+        for job in list(running):
+            p, name, route, lo, hi = job
             if p.poll() is None and not block:
                 continue
+            running.remove(job)
             try:
                 out, _ = p.communicate(timeout=CHUNK_TIMEOUT_S)
             except subprocess.TimeoutExpired:
                 p.kill()
-                bad.append(f"HARD HANG (uninterruptible): {name} [{lo},{hi})")
-                running.remove((p, name, lo, hi))
+                bad.append(f"HARD HANG (uninterruptible): {name} {route} [{lo},{hi})")
                 continue
-            running.remove((p, name, lo, hi))
             if p.returncode != 0:
-                bad.append(f"worker died rc={p.returncode}: {name} [{lo},{hi})")
+                bad.append(f"worker died rc={p.returncode}: {name} {route} [{lo},{hi})")
                 continue
             rec = json.loads(out.strip().splitlines()[-1])
             for k, v in rec["stats"].items():
                 totals[k] = totals.get(k, 0) + v
             for idx, kind in rec["findings"]:
-                bad.append(f"{name}:{idx} {kind}")
+                bad.append(f"{name}:{idx} {route} {kind}")
 
     while pending or running:
         while pending and len(running) < max(os.cpu_count() - 2, 1):
@@ -606,13 +657,13 @@ def main() -> None:
                 [sys.executable, os.path.abspath(__file__), "--chunk", name, route,
                  str(lo), str(hi)],
                 stdout=subprocess.PIPE, text=True, cwd=REPO)
-            running.append((p, name, lo, hi))
+            running.append((p, name, route, lo, hi))
         if running and all(p.poll() is None for p, *_ in running):
             _time.sleep(0.2)
         reap(block=not pending)
 
     print(json.dumps({"totals": totals, "n_per_seed": n, "seeds": len(seeds),
-                      "bad": bad}))
+                      "routes": len(routes), "bad": bad}))
     sys.exit(1 if bad else 0)
 
 

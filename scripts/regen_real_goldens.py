@@ -20,10 +20,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from documentconvert_spark.ingest import _SUFFIX_TO_TYPE
+from documentconvert_spark.kernels.detect import extract, extract_media_files
 from documentconvert_spark.kernels.markdown import spans_to_markdown
-from documentconvert_spark.kernels.media import extract_media_files
 from documentconvert_spark.kernels.raster import decode_raster_gray, sniff_image_meta
-from documentconvert_spark.udfs import _KERNELS
 
 REF = "/root/reference/test"
 RES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..",
@@ -84,7 +83,7 @@ def main() -> None:
         doc_id = urllib.parse.unquote(name)
         with open(path, "rb") as fh:
             data = fh.read()
-        spans = _KERNELS[_SUFFIX_TO_TYPE[name.rsplit(".", 1)[-1].lower()]](data)
+        spans = extract(_SUFFIX_TO_TYPE[name.rsplit(".", 1)[-1].lower()], data)
         doc_rows["doc_id"].append(doc_id)
         doc_rows["status"].append("completed")
         doc_rows["n_spans"].append(len(spans))

@@ -3,9 +3,9 @@ disk, glob filtering, suffix dispatch, unknown-suffix containment."""
 
 from __future__ import annotations
 
-from documentconvert_spark.corpus import fixture_corpus
 from documentconvert_spark.ingest import binary_dir_as_raw
 from documentconvert_spark.pipeline import extract_spans
+from tests.test_kernels import fixture_corpus
 
 
 def test_binary_dir_ingest_and_extract(spark, tmp_path):

@@ -413,7 +413,8 @@ def test_run_extract_cli_inline_callbacks(spark, tmp_path):
     import sys as _sys
     import threading
 
-    from documentconvert_spark.corpus import corpus_rows, fixture_corpus
+    from documentconvert_spark.corpus import corpus_rows
+    from tests.test_kernels import fixture_corpus
     from documentconvert_spark.schemas import DOCUMENTS_RAW
 
     received = []

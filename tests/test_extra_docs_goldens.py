@@ -15,13 +15,16 @@ for byte.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 
 import numpy as np
 import pyarrow.parquet as pq
+import pytest
 
 from documentconvert_spark.ingest import _SUFFIX_TO_TYPE
+from documentconvert_spark.kernels.detect import ROUTES, doc_format, extract
 from documentconvert_spark.kernels.raster import decode_raster_gray, dhash64
 from documentconvert_spark.udfs import _KERNELS
 
@@ -54,25 +57,40 @@ RASTER_PINS = {
 }
 
 
+# fixture suffix → the name the document layer's recogniser gives it
+FORMAT_BY_SUFFIX = {
+    "pdf": "pdf", "rtf": "rtf", "html": "unknown",
+    "docx": "zip", "xlsx": "zip", "odt": "zip", "ods": "zip", "odp": "zip",
+    "doc": "ole", "xls": "ole", "ppt": "ole",
+    "png": "png", "jpg": "jpeg", "gif": "gif", "bmp": "bmp", "tiff": "tiff", "webp": "webp",
+}
+
+
 def _doc_type(name: str) -> str:
     return _SUFFIX_TO_TYPE[name.rsplit(".", 1)[-1].lower()]
+
+
+@functools.lru_cache(maxsize=1)
+def _golden_spans() -> dict[str, list[tuple]]:
+    tbl = pq.read_table(os.path.join(RES, "expected_real_spans.parquet")).to_pydict()
+    expected: dict[str, list[tuple]] = {}
+    for i, did in enumerate(tbl["doc_id"]):
+        expected.setdefault(did, []).append(
+            (tbl["offset"][i], tbl["kind"][i], tbl["media_ref"][i], tbl["text"][i]))
+    return {did: sorted(rows) for did, rows in expected.items()}
 
 
 def test_extra_docs_match_goldens_and_raster_pins():
     names = sorted(os.listdir(EXTRA))
     assert len(names) == 33
     assert sorted(n for n in names if _doc_type(n) == "image") == sorted(RASTER_PINS)
-    tbl = pq.read_table(os.path.join(RES, "expected_real_spans.parquet")).to_pydict()
-    expected: dict[str, list[tuple]] = {}
-    for i, did in enumerate(tbl["doc_id"]):
-        expected.setdefault(did, []).append(
-            (tbl["offset"][i], tbl["kind"][i], tbl["media_ref"][i], tbl["text"][i]))
+    expected = _golden_spans()
     for name in names:
         with open(os.path.join(EXTRA, name), "rb") as fh:
             data = fh.read()
         assert name in expected, f"no golden rows for {name}"
         got = [(s.offset, s.kind, s.media_ref, s.text) for s in _KERNELS[_doc_type(name)](data)]
-        assert got == sorted(expected[name]), f"span mismatch for {name}"
+        assert got == expected[name], f"span mismatch for {name}"
         if name not in RASTER_PINS:
             continue
         w, h, md5, dh = RASTER_PINS[name]
@@ -82,6 +100,33 @@ def test_extra_docs_match_goldens_and_raster_pins():
         assert gray.shape == (h, w), name
         assert hashlib.md5(np.ascontiguousarray(gray).tobytes()).hexdigest() == md5, name
         assert dhash64(w, h, gray) == dh, name
+
+
+def _outcome(parse, data: bytes):
+    try:
+        return parse(data)
+    except Exception as exc:  # noqa: BLE001 — the error contract is the outcome
+        return type(exc), str(exc)
+
+
+@pytest.mark.parametrize("name", sorted(os.listdir(EXTRA)))
+def test_fixture_routing_pins_format_and_cross_route_fallbacks(name):
+    """The recogniser names each fixture's container; its own conversion
+    route yields the golden spans; on either other route it has no entry
+    and gets exactly that route's fallback parser's result, spans or the
+    same exception."""
+    with open(os.path.join(EXTRA, name), "rb") as fh:
+        data = fh.read()
+    fmt = doc_format(data)
+    assert fmt == FORMAT_BY_SUFFIX[name.rsplit(".", 1)[-1]]
+    own = _doc_type(name)
+    got = [(s.offset, s.kind, s.media_ref, s.text) for s in extract(own, data)]
+    assert got == _golden_spans()[name]
+    for doc_type, (parsers, fallback) in ROUTES.items():
+        if doc_type != own:
+            assert fmt not in parsers
+            assert (_outcome(functools.partial(extract, doc_type), data)
+                    == _outcome(fallback, data))
 
 
 def test_generator_reproduces_the_committed_fixtures():

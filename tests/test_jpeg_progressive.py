@@ -58,14 +58,14 @@ def test_progressive_flat_image_is_eob_runs_only():
 
 
 def test_progressive_ocr_end_to_end():
-    from documentconvert_spark.kernels.detect import extract_image_any
+    from documentconvert_spark.kernels.detect import extract
     from documentconvert_spark.kernels.miniocr import ocr_image_text
 
     gw, gh, tg = _render_text_grid(["PROGRESSIVE 99", "SCAN TEST"], 2, 8)
     pj = encode_gray_jpeg_progressive(gw, gh, tg, ycbcr420=True)
     # the quant gate reads DQT (all ones) and passes without entropy work
     assert ocr_image_text(pj, "jpeg") == ["PROGRESSIVE 99", "SCAN TEST"]
-    spans = extract_image_any(pj)
+    spans = extract("image", pj)
     assert [s.kind for s in spans] == ["figure", "paragraph", "paragraph"]
     assert spans[1].text == "PROGRESSIVE 99"
 

@@ -6,13 +6,16 @@ exact (kind, text, media_ref, offset) span sequence the generator laid out.
 
 from __future__ import annotations
 
+import random
+
 import pytest
 
 from documentconvert_spark.corpus import (
     CLASSES,
+    RawDoc,
+    _sentence,
     aes256_pdf,
     det_zip,
-    fixture_corpus,
     generate_corpus,
     make_doc,
 )
@@ -22,7 +25,37 @@ from documentconvert_spark.kernels.markdown import error_markdown, spans_to_mark
 from documentconvert_spark.kernels.minidom import extract_minidom
 from documentconvert_spark.kernels.miniimg import extract_miniimg
 from documentconvert_spark.kernels.minipdf import extract_minipdf
-from documentconvert_spark.kernels.spans import KINDS
+from documentconvert_spark.kernels.spans import Span, finalize, normalize_text
+
+# the span-kind domain of the IR (kernels/spans.py)
+KINDS = ("heading", "paragraph", "code", "table", "figure", "formula")
+
+
+def _img_doc(rng: random.Random, doc_id: str) -> tuple[bytes, list[Span]]:
+    """Image document: figure span + deterministic OCR-stub text embedded in
+    the file (the sandbox has no OCR engine; reference analogue is the
+    mineru CLI path, document_service.py:826-907)."""
+    ref = f"scan-{doc_id}.jpg"
+    ocr = _sentence(rng, 6, 12)
+    content = f"MINIIMG-1.0\n{ref}\n{ocr}\n".encode("utf-8")
+    expected = finalize([
+        Span("figure", "", ref, -1),
+        Span("paragraph", normalize_text(ocr), "", -1),
+    ])
+    return content, expected
+
+
+def fixture_corpus(per_class: int = 3, seed: int = 42) -> list[RawDoc]:
+    """Golden-test corpus: per_class docs of every fixture class, plus one
+    image doc per class slot (image path is a distinct doc_type)."""
+    docs = [make_doc(cls, i, seed) for cls in CLASSES for i in range(per_class)]
+    for i in range(per_class):
+        rng = random.Random(f"{seed}:F-IMG:{i}")
+        doc_id = f"fimg-{i:06d}"
+        content, exp = _img_doc(rng, doc_id)
+        docs.append(RawDoc(doc_id, "image", content, f"bucket-{i % 7}", f"incoming/F-IMG/{doc_id}.jpg", exp))
+    return docs
+
 
 FN = {"pdf": extract_minipdf, "markup": extract_minidom, "image": extract_miniimg}
 
@@ -329,6 +362,18 @@ def test_minidom_namespaced_tags_and_comment_joins():
     assert any("custom element" in p for p in paras)
 
 
+def test_minidom_drops_processing_instructions():
+    """'<?' up to the first '>' is an HTML5 bogus comment: an XML prolog
+    before <html> and a PHP block inside a paragraph leave no text."""
+    doc = (b'<?xml version="1.0" encoding="utf-8"?>\n<html><body>'
+           b"<p>First paragraph of the body text here.</p>"
+           b"<p>Second<?php echo 1; ?> paragraph of the body text.</p></body></html>")
+    assert [(s.kind, s.text) for s in extract_minidom(doc)] == [
+        ("paragraph", "First paragraph of the body text here."),
+        ("paragraph", "Second paragraph of the body text."),
+    ]
+
+
 def test_docx_code_blocks():
     """Code-ish paragraph styles and mono-font runs classify as code;
     consecutive code paragraphs merge into one line-structured block
@@ -584,15 +629,15 @@ def test_r6_kdf_lru_avoids_rederivation():
     """Re-opening the same AES-256 document must hit the KDF cache —
     retry rounds and resume re-extraction pay the ~18k-block derivation
     once per distinct (password, salt, udata)."""
-    from documentconvert_spark.kernels.detect import extract_pdf_any
+    from documentconvert_spark.kernels.detect import extract
     from documentconvert_spark.kernels.realpdf import _r6_hash
 
     doc = aes256_pdf()
     _r6_hash.cache_clear()
-    extract_pdf_any(doc)
+    extract("pdf", doc)
     misses_first = _r6_hash.cache_info().misses
     assert misses_first > 0
-    extract_pdf_any(doc)
+    extract("pdf", doc)
     info = _r6_hash.cache_info()
     assert info.misses == misses_first  # no new derivations
     assert info.hits >= misses_first

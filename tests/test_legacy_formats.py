@@ -18,6 +18,7 @@ from documentconvert_spark.corpus import (
     classic_pdf,
     det_zip,
     make_ppt,
+    make_word_doc,
     make_xls,
     odf_zip,
     page_tree,
@@ -26,7 +27,7 @@ from documentconvert_spark.corpus import (
     xl_str8,
     xlsx_zip,
 )
-from documentconvert_spark.kernels.detect import extract_office_any
+from documentconvert_spark.kernels.detect import extract, extract_media_files
 from documentconvert_spark.kernels.minibiff import extract_ppt, extract_xls
 from documentconvert_spark.kernels.miniodf import extract_odf
 from documentconvert_spark.kernels.minirtf import extract_rtf
@@ -165,7 +166,7 @@ def test_xls_biff8():
 
 
 def test_xls_routed_by_ole_directory():
-    spans = extract_office_any(make_xls())
+    spans = extract("markup", make_xls())
     assert spans[0].text == "Data"
 
 
@@ -179,7 +180,7 @@ def test_ppt_text_atoms():
 
 
 def test_ppt_routed_by_ole_directory():
-    spans = extract_office_any(make_ppt())
+    spans = extract("markup", make_ppt())
     assert spans[0].text == "Roadmap 2026"
 
 
@@ -294,7 +295,6 @@ def test_realpdf_tounicode_default_width_one():
 def test_rtf_pict_media_bytes_match_figure_span():
     """extract_media_files pulls the \\pict payload bytes and its key
     matches the figure span the RTF tokenizer emits (J3 integrity)."""
-    from documentconvert_spark.kernels.media import extract_media_files
 
     payload = b"89504e470d0a1a0a" + b"00" * 16  # PNG magic + padding
     rtf = (b"{\\rtf1\\ansi Intro\\par"
@@ -314,7 +314,6 @@ def test_rtf_shppict_span_media_parity():
     The shppict copy must become exactly ONE figure span, and the media side
     table (same tokenizer walk) must produce exactly one row with the SAME
     media_ref — round-1 advisor found the old regex emitted orphan rows."""
-    from documentconvert_spark.kernels.media import extract_media_files
 
     png_hex = b"89504e470d0a1a0a"  # PNG magic as the "modern" payload
     wmf_hex = b"d7cdc69a00000000"  # placeholder fallback payload
@@ -336,7 +335,6 @@ def test_rtf_pict_nested_subgroup_hash_consistency():
     """A {\\pict ...} containing a nested subgroup: the figure span's ref and
     the media row's ref must still agree (the old regex stopped at the first
     closing brace while the tokenizer folded subgroup bytes into its hash)."""
-    from documentconvert_spark.kernels.media import extract_media_files
 
     hex1 = b"dead"
     hex2 = b"beef"
@@ -354,7 +352,6 @@ def test_rtf_bin_pict_content_derived_refs():
     """\\binN pictures: the figure-span hash must cover the binary payload
     so two different pictures never collide, and the media row carries the
     raw bytes."""
-    from documentconvert_spark.kernels.media import extract_media_files
 
     def doc(payload: bytes) -> bytes:
         return b"{\\rtf1 {\\pict\\bin" + str(len(payload)).encode() + b" " + payload + b"} x\\par}"
@@ -374,7 +371,6 @@ def test_rtf_unknown_codepage_contained():
     rtf = b"{\\rtf1\\ansicpg99999 hello \\'e9 world\\par}"
     spans = extract_rtf(rtf)
     assert any("hello" in s.text for s in spans)
-    from documentconvert_spark.kernels.media import extract_media_files
     assert extract_media_files(rtf) == []
 
 
@@ -399,28 +395,6 @@ _CARD_JPG = os.path.join(os.path.dirname(__file__), os.pardir, "documentconvert_
                          "resources", "extra_docs", "fixture_ocr_card.jpg")
 
 
-def _make_doc(text: str, pictures: list[bytes]) -> bytes:
-    """Word 97 piece-table .doc per [MS-DOC]: a FIB (magic 0xA5EC,
-    fWhichTblStm set, ccpText, fcClx/lcbClx) plus one compressed-cp1252
-    text piece in the WordDocument stream, the Clx in 1Table, and one
-    OfficeArtBlipJPEG record (16-byte UID, 1-byte tag) per picture in Data."""
-    text_fc = 0x400
-    raw = text.encode("cp1252")
-    word = bytearray(text_fc + len(raw))
-    struct.pack_into("<H", word, 0x0000, 0xA5EC)
-    struct.pack_into("<H", word, 0x000A, 0x0200)           # fWhichTblStm: 1Table
-    struct.pack_into("<I", word, 0x004C, len(text))        # ccpText
-    word[text_fc:] = raw
-    pcd = struct.pack("<HIH", 0, (text_fc * 2) | 0x40000000, 0)  # compressed piece
-    plc_pcd = struct.pack("<II", 0, len(text)) + pcd
-    clx = b"\x02" + struct.pack("<I", len(plc_pcd)) + plc_pcd
-    struct.pack_into("<II", word, 0x01A2, 0, len(clx))     # fcClx, lcbClx
-    data = b"".join(
-        struct.pack("<HHI", 0x46A0, 0xF01D, 17 + len(pic)) + b"\x11" * 16 + b"\xff" + pic
-        for pic in pictures)
-    return write_cfb([("WordDocument", bytes(word)), ("1Table", clx), ("Data", data)])
-
-
 def test_doc_anchor_in_first_table_cell():
     """A picture anchor BEFORE the first cell mark must not split the
     table or leak cell text into a paragraph span — table-ness is decided
@@ -434,7 +408,7 @@ def test_doc_anchor_in_first_table_cell():
     text = ("Exam paper\r"
             "Q1 \x01stem\x07B1\x07\x07A2\x07B2\x07\x07\r"
             "After the table\r")
-    spans = extract_office_any(_make_doc(text, [jpeg]))
+    spans = extract("markup", make_word_doc(text, [jpeg]))
     kinds = Counter(s.kind for s in spans)
     assert kinds["figure"] == 1 and kinds["table"] == 1
     assert any("\t" in s.text for s in spans if s.kind == "table")
@@ -442,7 +416,7 @@ def test_doc_anchor_in_first_table_cell():
 
     if os.path.isfile(_REF_MATH_DOC):
         with open(_REF_MATH_DOC, "rb") as fh:
-            spans = extract_office_any(fh.read())
+            spans = extract("markup", fh.read())
         kinds = Counter(s.kind for s in spans)
         # all 31 pictures interleave as figures and the 3 tables survive
         # un-split (an anchor in a first cell must not fragment the grid)
@@ -756,11 +730,11 @@ def test_pptx_deck_title_levels():
 def test_ppt_and_odp_deck_title_levels(extra_doc):
     """Binary .ppt and ODP follow the same deck-title convention, and ODP
     text:h outline levels inside boxes are honored."""
-    odp = extract_office_any(extra_doc("fixture_deck.odp"))
+    odp = extract("markup", extra_doc("fixture_deck.odp"))
     heads = [(s.level, s.text) for s in odp if s.kind == "heading"]
     assert heads == [(1, "ODP Fixture Deck"), (2, "Second Slide Topic"),
                      (3, "Sub Point Heading")], heads
 
-    ppt = extract_office_any(extra_doc("fixture_deck.ppt"))
+    ppt = extract("markup", extra_doc("fixture_deck.ppt"))
     heads = [(s.level, s.text) for s in ppt if s.kind == "heading"]
     assert heads == [(1, "PPT Fixture Deck"), (2, "Second Slide Topic")], heads

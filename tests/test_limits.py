@@ -54,7 +54,7 @@ def test_inflate_truncated_stream_raises():
 def test_zip_media_one_bomb_member_keeps_the_rest(monkeypatch):
     """Per-member containment: one over-cap image must not drop the
     document's other media (mirrors _pdf_media's per-item handling)."""
-    from documentconvert_spark.kernels.media import _zip_media
+    from documentconvert_spark.kernels.detect import _zip_media
 
     monkeypatch.setattr(limits, "MAX_DECODED_BYTES", 4096)
     buf = io.BytesIO()

@@ -7,7 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from documentconvert_spark.corpus import corpus_rows, fixture_corpus
+from documentconvert_spark.corpus import corpus_rows
 from documentconvert_spark.kernels.media import decode_audio, decode_video
 from documentconvert_spark.kernels.raster import decode_raster_gray
 from documentconvert_spark.ops.multimodal import (
@@ -21,6 +21,7 @@ from documentconvert_spark.ops.multimodal import (
 )
 from documentconvert_spark.pipeline import extract_spans
 from documentconvert_spark.schemas import DOCUMENTS_RAW
+from tests.test_kernels import fixture_corpus
 
 
 def test_make_and_fields_roundtrip_pure():
@@ -116,13 +117,12 @@ def test_real_image_document_route():
     to the media side table row, header-sniffed dims, no error raised."""
     import struct
 
-    from documentconvert_spark.kernels.detect import extract_image_any
-    from documentconvert_spark.kernels.media import extract_media_files
+    from documentconvert_spark.kernels.detect import extract, extract_media_files
     from documentconvert_spark.kernels.raster import image_file_ref, sniff_image_meta
 
     png = (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
            + struct.pack(">II", 640, 480) + b"\x08\x02\x00\x00\x00" + b"\x00" * 40)
-    spans = extract_image_any(png)
+    spans = extract("image", png)
     assert [s.kind for s in spans] == ["figure"]
     assert spans[0].media_ref == image_file_ref(png, "png")
     media = extract_media_files(png)
@@ -131,13 +131,13 @@ def test_real_image_document_route():
 
     # synthetic MINIIMG still routes to the OCR-stub kernel
     mini = b"MINIIMG-1.0\nref.jpg\nsome ocr text here\n"
-    mspans = extract_image_any(mini)
+    mspans = extract("image", mini)
     assert [s.kind for s in mspans] == ["figure", "paragraph"]
 
     # garbage still raises (contained by the UDF layer)
     import pytest as _pytest
     with _pytest.raises(ValueError):
-        extract_image_any(b"\x00\x01\x02 not an image at all")
+        extract("image", b"\x00\x01\x02 not an image at all")
 
 
 def test_webp_sniffing():

@@ -10,6 +10,7 @@ or raise a normal exception.
 
 from __future__ import annotations
 
+import functools
 import os
 import random
 import time
@@ -17,7 +18,7 @@ import time
 import pytest
 
 from documentconvert_spark.corpus import classic_pdf, det_zip, xlsx_zip
-from documentconvert_spark.kernels.detect import extract_office_any, extract_pdf_any
+from documentconvert_spark.kernels.detect import extract
 
 REF = "/root/reference/test"
 
@@ -31,7 +32,7 @@ _PER_CALL_BUDGET_S = 5.0
 
 
 def _kernel_for(name: str):
-    return extract_pdf_any if name.endswith(".pdf") else extract_office_any
+    return functools.partial(extract, "pdf" if name.endswith(".pdf") else "markup")
 
 
 def _assert_contained(kern, data: bytes, label: str) -> None:
@@ -83,8 +84,8 @@ def test_pathological_synthetic_inputs():
         b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1" + b"\xff" * 1024,   # OLE magic, garbage
     ]
     for i, data in enumerate(cases):
-        for kern in (extract_pdf_any, extract_office_any):
-            _assert_contained(kern, data, f"pathological#{i}")
+        for doc_type in ("pdf", "markup"):
+            _assert_contained(functools.partial(extract, doc_type), data, f"pathological#{i}")
 
 
 # ---------------------------------------------------------------- regressions

@@ -7,7 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from documentconvert_spark.corpus import corpus_rows, fixture_corpus, make_doc
+from documentconvert_spark.corpus import corpus_rows, make_doc
 from documentconvert_spark.pipeline import (
     extract_spans,
     prepare_documents,
@@ -16,6 +16,7 @@ from documentconvert_spark.pipeline import (
 )
 from documentconvert_spark.schemas import DOCUMENTS_RAW
 from documentconvert_spark.state import MAX_ATTEMPTS, StateStore
+from tests.test_kernels import fixture_corpus
 
 
 @pytest.fixture()

@@ -7,10 +7,11 @@ import os
 
 from pyspark.sql import functions as F
 
-from documentconvert_spark.corpus import corpus_rows, fixture_corpus
+from documentconvert_spark.corpus import corpus_rows
 from documentconvert_spark.pipeline import extract_spans
 from documentconvert_spark.queries_relational import q_tpch_q1, q_tpch_q3
 from documentconvert_spark.schemas import DOCUMENTS_RAW
+from tests.test_kernels import fixture_corpus
 
 SF = "/root/testdata/sf0.01"
 

@@ -12,7 +12,8 @@ from documentconvert_spark.kernels.minidom import extract_minidom
 from documentconvert_spark.kernels.minipdf import extract_minipdf
 from documentconvert_spark.kernels.encoding import ensure_utf8, repair_mojibake
 from documentconvert_spark.kernels.markdown import spans_to_markdown
-from documentconvert_spark.kernels.spans import KINDS, Span, normalize_text
+from documentconvert_spark.kernels.spans import Span, normalize_text
+from tests.test_kernels import KINDS
 
 non_error_classes = [c for c in CLASSES if c not in ("F-POISON",)]
 

@@ -33,7 +33,8 @@ from documentconvert_spark.corpus import (
     tiff_encode,
 )
 from documentconvert_spark.kernels import limits
-from documentconvert_spark.kernels.media import decode_wav_samples, extract_media_files
+from documentconvert_spark.kernels.detect import extract_media_files
+from documentconvert_spark.kernels.media import decode_wav_samples
 from documentconvert_spark.kernels.minijpeg import decode_jpeg_gray, parse_jpeg_quant
 from documentconvert_spark.kernels.miniocr import ocr_image_text
 from documentconvert_spark.kernels.raster import (
@@ -41,6 +42,7 @@ from documentconvert_spark.kernels.raster import (
     decode_gif_gray,
     decode_png_gray,
     decode_raster_gray,
+    image_file_ref,
     sniff_image_meta,
 )
 
@@ -66,6 +68,19 @@ def carved_real_images():
             fmt, w, h = sniff_image_meta(blob)
             out.append((name, fmt, w, h, blob))
     return out
+
+
+def test_xml_prolog_alone_is_not_svg():
+    """An XHTML document is not an image: its XML prolog names SVG only
+    when an <svg root follows in the first KiB, so the document gets no
+    whole-document media row its spans never mention."""
+    xhtml = (b'<?xml version="1.0" encoding="utf-8"?>\n'
+             b"<html><body><p>An XHTML page with enough body text.</p></body></html>")
+    assert sniff_image_meta(xhtml) == ("unknown", None, None)
+    assert extract_media_files(xhtml) == []
+    svg = b'<?xml version="1.0"?>\n<svg xmlns="http://www.w3.org/2000/svg" width="4" height="4"/>'
+    assert sniff_image_meta(svg) == ("svg", None, None)
+    assert extract_media_files(svg) == [(image_file_ref(svg, "svg"), svg)]
 
 
 # ------------------------------------------------------------------ JPEG
@@ -380,15 +395,15 @@ def test_tiff_ocr_pre_gates(extra_doc):
 
 
 def test_tiff_ocr_through_image_dispatch(extra_doc):
-    from documentconvert_spark.kernels.detect import extract_image_any
+    from documentconvert_spark.kernels.detect import extract
 
     data = render_text_tiff(["DOCK 9 BAY 4"], scale=3)
     assert ocr_image_text(data, "tiff") == ["DOCK 9 BAY 4"]
-    spans = extract_image_any(data)
+    spans = extract("image", data)
     assert [s.kind for s in spans] == ["figure", "paragraph"]
     assert spans[1].text == "DOCK 9 BAY 4"
     # the photo-like palette TIFF decodes but stays figure-only
-    assert [s.kind for s in extract_image_any(extra_doc("fixture_mosaic.tiff"))] == ["figure"]
+    assert [s.kind for s in extract("image", extra_doc("fixture_mosaic.tiff"))] == ["figure"]
 
 
 # ------------------------------------------------------------------ WAV

@@ -30,8 +30,6 @@ NON_TEST_FILES = ("__spark_entry__.py", "bench.py")
 ALLOWLIST = {
     "pipeline.read_committed_output": "read half of the crash-safety protocol: orphan run_id= dirs exist by design",
     "ops.dedup.verify_pairs_jaccard": "the exact oracle the LSH test compares against",
-    "corpus.fixture_corpus": "the golden-test corpus every Spark-side test module builds on",
-    "kernels.spans.KINDS": "the span-kind domain of the IR; tests check kernel output against it",
 }
 
 _IDENT = re.compile(r"[A-Za-z_]\w*")

@@ -17,7 +17,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from documentconvert_spark.ingest import _SUFFIX_TO_TYPE
-from documentconvert_spark.kernels.detect import extract_office_any, extract_pdf_any
+from documentconvert_spark.kernels.detect import extract, extract_media_files
 from documentconvert_spark.kernels.minidoc import extract_doc
 from documentconvert_spark.kernels.miniooxml import extract_docx, extract_pptx, extract_xlsx
 from documentconvert_spark.kernels.realpdf import extract_realpdf
@@ -148,12 +148,12 @@ def test_doc_table_cell_marks():
 @_needs_ref
 def test_detect_routes_by_magic_not_suffix():
     # the office path must route zips, OLE and markup correctly
-    assert extract_office_any(_read("智涌君.docx"))
-    assert extract_office_any(_read("2024年浙江省中考数学试卷.doc"))
+    assert extract("markup", _read("智涌君.docx"))
+    assert extract("markup", _read("2024年浙江省中考数学试卷.doc"))
     html = b"<html><body><p>hello world content here</p></body></html>"
-    assert extract_office_any(html)
+    assert extract("markup", html)
     # the pdf path must route real PDFs and synthetic minipdf
-    assert extract_pdf_any(_read("服装识别需求描述.pdf"))
+    assert extract("pdf", _read("服装识别需求描述.pdf"))
 
 
 # ------------------------------------------------------------ golden regression
@@ -247,7 +247,6 @@ def test_real_media_extraction_kernel():
     """Embedded media pulled from the real containers (kernels/media.py)
     with header-sniffed metadata (kernels/raster.py) — actual bytes, no
     codec libs."""
-    from documentconvert_spark.kernels.media import extract_media_files
     from documentconvert_spark.kernels.raster import sniff_image_meta
 
     media = extract_media_files(_read("AI通识课程建设方案.pptx"))
@@ -276,7 +275,6 @@ def test_real_media_extraction_kernel():
 def test_real_media_refs_match_figure_spans():
     """The media table keys line up with the figure spans the extractors
     emit (J3 join integrity on real data)."""
-    from documentconvert_spark.kernels.media import extract_media_files
     from documentconvert_spark.kernels.miniooxml import extract_docx, extract_pptx
 
     for name, extractor in [("智涌君.docx", extract_docx),

@@ -8,9 +8,9 @@ from pyspark.sql import functions as F
 
 from documentconvert_spark.corpus import corpus_rows, generate_corpus
 from documentconvert_spark.kernels.markdown import spans_to_markdown
-from documentconvert_spark.kernels.spans import KINDS
 from documentconvert_spark.pipeline import extract_spans, size_aware_split
 from documentconvert_spark.schemas import DOCUMENTS_RAW
+from tests.test_kernels import KINDS
 
 N = 3000
 

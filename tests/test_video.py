@@ -347,14 +347,14 @@ def test_real_video_keyframes_rule(spark):
 
 def test_ocr_raster_text_gif_bmp(extra_doc):
     from documentconvert_spark.corpus import render_text_bmp, render_text_gif
-    from documentconvert_spark.kernels.detect import extract_image_any
+    from documentconvert_spark.kernels.detect import extract
     from documentconvert_spark.kernels.miniocr import ocr_image_text
 
     assert ocr_image_text(render_text_gif(["GO LEFT 12"]), "gif") == ["GO LEFT 12"]
     assert ocr_image_text(render_text_bmp(["STOP 99"]), "bmp") == ["STOP 99"]
     # a multicolor raster bails to figure-only (mid-gray guard)
     assert ocr_image_text(extra_doc("fixture_tiles.gif"), "gif") == []
-    spans = extract_image_any(render_text_bmp(["STOP 99"]))
+    spans = extract("image", render_text_bmp(["STOP 99"]))
     assert [s.kind for s in spans] == ["figure", "paragraph"]
     assert spans[1].text == "STOP 99"
 
@@ -380,7 +380,7 @@ def test_tiff_dims_sniffed_both_endians():
 def test_review_fixes_tiff_gif_audio_containment(spark):
     import struct as _st
 
-    from documentconvert_spark.kernels.detect import extract_image_any
+    from documentconvert_spark.kernels.detect import extract
     from documentconvert_spark.kernels.miniocr import _header_admits_text, ocr_image_text
     from documentconvert_spark.kernels.raster import sniff_image_meta
     from documentconvert_spark.queries_extraction import _wav_pcm_bytes
@@ -398,7 +398,7 @@ def test_review_fixes_tiff_gif_audio_containment(spark):
     gif = (b"GIF89a" + _st.pack("<HH", 8, 8) + bytes([0x80, 0, 0])
            + bytes(6) + b"\x2C" + _st.pack("<HHHH", 0, 0, 8, 8) + b"\x00")
     assert ocr_image_text(gif, "gif") == []
-    assert [s.kind for s in extract_image_any(gif)] == ["figure"]
+    assert [s.kind for s in extract("image", gif)] == ["figure"]
 
     # photo-palette GIF bails before the LZW decode (palette pre-gate).
     # The gate is a MAJORITY rule since the antialiasing change: a

@@ -97,16 +97,16 @@ def test_neighbor_distance_map():
 
 
 def test_ocr_end_to_end_and_dispatch(extra_doc):
-    from documentconvert_spark.kernels.detect import extract_image_any
+    from documentconvert_spark.kernels.detect import extract
     from documentconvert_spark.kernels.miniocr import ocr_image_text
 
     data = render_text_webp(["DOCK GATE 12"], scale=3)
     assert ocr_image_text(data, "webp") == ["DOCK GATE 12"]
-    spans = extract_image_any(data)
+    spans = extract("image", data)
     assert [s.kind for s in spans] == ["figure", "paragraph"]
     assert spans[1].text == "DOCK GATE 12"
     # the photo-like palette swatch decodes but stays figure-only
-    assert [s.kind for s in extract_image_any(extra_doc("fixture_swatch.webp"))] == ["figure"]
+    assert [s.kind for s in extract("image", extra_doc("fixture_swatch.webp"))] == ["figure"]
 
 
 def test_gray_route_through_raster_router():
