@@ -1043,6 +1043,30 @@ def encode_gif_anim(w: int, h: int, frames: list, pal_rgb: list,
     return bytes(out)
 
 
+# -- bilevel (0/255) frame grids for the AVI and MP4 writers below -----------
+
+def box_frames(w: int, h: int, n: int) -> list:
+    """Growing filled box, one bilevel grid per frame."""
+    out = []
+    for f in range(n):
+        g = [bytearray([255] * w) for _ in range(h)]
+        side = 4 + 2 * f
+        for y in range(2, min(2 + side, h - 2)):
+            for x in range(2 + f, min(2 + f + side, w - 2)):
+                g[y][x] = 0
+        out.append(g)
+    return out
+
+
+def band_frames(w: int, h: int, n: int) -> list:
+    """Top band of f+2 black rows per frame."""
+    return [
+        [bytearray([0] * w) if y < f + 2 else bytearray([255] * w)
+         for y in range(h)]
+        for f in range(n)
+    ]
+
+
 # -- AVI video fixtures (generator side of the video-decode split) -----------
 # The reference's media surface stops at container metadata for video (no
 # decoder ships in its pipeline either — MinerU handles documents only);

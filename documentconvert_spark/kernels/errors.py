@@ -1,11 +1,40 @@
-"""Error classification.
+"""Per-row error containment (``contained``, reference C7) and classification.
 
-Substring-match cascade over the error message, mirroring the reference's
-classifier (`services/document_service.py:394-424`, 12 classes). The class
-feeds the state table's error metric; order matters (first match wins).
+``classify_error`` is a substring-match cascade over the error message,
+mirroring the reference's classifier (`services/document_service.py:394-424`,
+12 classes). The class feeds the state table's error metric; order matters
+(first match wins).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Iterable, Iterator
+
+
+def contained(rows: Iterable[tuple], fn: Callable) -> Iterator[tuple]:
+    """The engine's one containment loop (reference C7,
+    `services/document_service.py:119-126`), iterated by the extraction
+    UDF, the media ops and the fuzz campaign. Yield ``(row, fn(*row),
+    None)`` per row in order, or ``(row, None, exc)`` when ``fn`` raises
+    an Exception; BaseException propagates. One generator per batch, so
+    batch-wide setup can wrap the whole loop."""
+    for row in rows:
+        try:
+            result = fn(*row)
+        except Exception as exc:  # noqa: BLE001 — containment is the contract
+            # no caller reads the traceback; its frames would keep the
+            # failed row's intermediates alive while the next row runs
+            yield row, None, exc.with_traceback(None)
+        else:
+            yield row, result, None
+
+
+def require_content(raw: bytes | None) -> bytes:
+    """The row functions' shared null-content guard."""
+    if raw is None:
+        raise ValueError("malformed: null content")
+    return raw
+
 
 _CLASSES: list[tuple[str, str]] = [
     ("password", "password_protected"),

@@ -151,7 +151,7 @@ class _Cfb:
                 if size < self.mini_cutoff:
                     return self._read_mini_chain(start, size)
                 return self._read_chain(start)[:size]
-        raise ValueError(f"doc: stream {name!r} not found")
+        raise ValueError(f"doc: malformed compound document (no stream {name!r})")
 
 
 def _pieces(word: bytes, table: bytes) -> list[tuple[int, int, int, bool]]:

@@ -8,9 +8,9 @@ instead keeps media as a side table of binary columns
 
 and runs decode / feature-extract / resize / frame-sample as Arrow-batched
 ``mapInArrow`` operators. Every op that runs Python per row goes through
-one containment loop, ``_per_doc``: a row that raises becomes the op's
-error row, or drops out when the op has none — never a failed task
-(reference C7). Two decode tiers:
+``_per_doc``, i.e. the extraction UDF's loop (kernels/errors.contained): a
+row that raises becomes the op's error row, or drops out when the op has
+none — never a failed task (reference C7). Two decode tiers:
 
 * MINIMEDIA — a deterministic mini-format whose header fields are
   closed-form functions of md5(media_ref), making every operator here
@@ -51,6 +51,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from documentconvert_spark.kernels.detect import extract_media_files
+from documentconvert_spark.kernels.errors import contained, require_content
 from documentconvert_spark.kernels.media import decode_audio, decode_video, sniff_av_meta
 from documentconvert_spark.kernels.raster import (
     decode_raster_gray,
@@ -97,25 +98,24 @@ FRAME_SCHEMA = T.StructType(
 def _per_doc(df: DataFrame, cols: tuple[str, ...], schema: T.StructType,
              row_fn: Callable[..., list[tuple]],
              error_row: Callable[..., tuple] | None = None) -> DataFrame:
-    """The containment loop every per-row op here shares: narrow
-    ``mapInArrow`` over ``df.select(*cols)``. Each input row's values go
-    to ``row_fn``, which returns a list of output tuples in ``schema``
-    order (zero or more: filters and row-expanding ops use the same
-    loop). If it raises, the row becomes ``error_row(*values, exc)``, or
-    drops out when there is no ``error_row`` — a poison row never fails
-    the task (reference C7)."""
+    """Narrow ``mapInArrow`` over ``df.select(*cols)``, each batch run
+    through ``contained``. Each input row's values go to ``row_fn``,
+    which returns a list of output tuples in ``schema`` order (zero or
+    more: filters and row-expanding ops use the same loop). If it
+    raises, the row becomes ``error_row(*values, exc)``, or drops out
+    when there is no ``error_row`` — a poison row never fails the task
+    (reference C7)."""
     arrow_schema = to_arrow_schema(schema)
     names = arrow_schema.names
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
             out = []
-            for values in zip(*(c.to_pylist() for c in b.columns)):
-                try:
-                    out.extend(row_fn(*values))
-                except Exception as exc:  # noqa: BLE001 — containment (C7)
-                    if error_row is not None:
-                        out.append(error_row(*values, exc))
+            for values, rows, exc in contained(zip(*(c.to_pylist() for c in b.columns)), row_fn):
+                if exc is None:
+                    out.extend(rows)
+                elif error_row is not None:
+                    out.append(error_row(*values, exc))
             yield pa.RecordBatch.from_pylist([dict(zip(names, r)) for r in out],
                                              schema=arrow_schema)
 
@@ -177,7 +177,7 @@ def decode_media_meta(media: DataFrame) -> DataFrame:
     (C7)."""
 
     def row(did, ref, raw):
-        if not raw.startswith(MAGIC):
+        if not require_content(raw).startswith(MAGIC):
             raise ValueError("malformed media: bad magic")
         lines = raw.split(b"\n", 4)  # 4 header lines, then payload
         w, hgt, dur, fps, plen = [int(x) if x else None
@@ -296,7 +296,7 @@ def real_raster_stats(real_media: DataFrame) -> DataFrame:
     across the scan; nothing here shuffles."""
 
     def row(did, ref, blob):
-        fmt, w, h, gray = decode_raster_gray(blob)
+        fmt, w, h, gray = decode_raster_gray(require_content(blob))
         # float64 sums of ≤4 Mi bytes are exact integers, so the mean
         # does not depend on summation order
         return [(did, ref, fmt, w, h, round(float(gray.mean()), 3),
@@ -337,7 +337,7 @@ def real_video_frame_stats(videos: DataFrame) -> DataFrame:
     per-document budget inside the kernel."""
 
     def row(did, blob):
-        w, h, frames = decode_video(blob)
+        w, h, frames = decode_video(require_content(blob))
         return [(did, i, w, h, int(np.count_nonzero(fr < 128)), None)
                 for i, fr in enumerate(frames)]
 
@@ -485,7 +485,7 @@ def real_audio_stats(audios: DataFrame) -> DataFrame:
     size capped inside the kernels."""
 
     def row(did, blob):
-        sr, ch, mono = decode_audio(blob)
+        sr, ch, mono = decode_audio(require_content(blob))
         # data chunks run up to 256 MiB: vectorize, and take |x| in
         # int64 (|int16 -32768| overflows int16)
         a = np.abs(np.frombuffer(mono, dtype=np.int16).astype(np.int64))

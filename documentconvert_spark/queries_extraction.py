@@ -885,7 +885,7 @@ _FRAME_FIELDS = [
 def _real_video_fixtures() -> tuple[list[tuple[str, bytes]], list[tuple]]:
     """→ (raw (doc_id, content) rows, expected (doc_id, frame_idx, width,
     height, n_dark, error) rows derived from the source grids)."""
-    from documentconvert_spark.corpus import render_avi
+    from documentconvert_spark.corpus import band_frames, box_frames, render_avi
 
     raw: list[tuple[str, bytes]] = []
     exp: list[tuple] = []
@@ -895,26 +895,6 @@ def _real_video_fixtures() -> tuple[list[tuple[str, bytes]], list[tuple]]:
         for i, g in enumerate(grids):
             n_dark = sum(1 for row in g for v in row if v < 128)
             exp.append((doc_id, i, w, h, n_dark, None))
-
-    def box_frames(w: int, h: int, n: int) -> list:
-        """Growing filled box, one bilevel grid per frame."""
-        out = []
-        for f in range(n):
-            g = [bytearray([255] * w) for _ in range(h)]
-            side = 4 + 2 * f
-            for y in range(2, min(2 + side, h - 2)):
-                for x in range(2 + f, min(2 + f + side, w - 2)):
-                    g[y][x] = 0
-            out.append(g)
-        return out
-
-    def band_frames(w: int, h: int, n: int) -> list:
-        """Top band of f+2 black rows per frame."""
-        return [
-            [bytearray([0] * w) if y < f + 2 else bytearray([255] * w)
-             for y in range(h)]
-            for f in range(n)
-        ]
 
     add("vid-000", 48, 32, box_frames(48, 32, 6), 12, "MJPG")
     add("vid-001", 37, 21, band_frames(37, 21, 4), 5, "DIB ")  # odd width: stride pad
@@ -1582,7 +1562,7 @@ EXPECTED_MP4_FRAMES_PARQUET = os.path.join(_RES_DIR, "expected_mp4_frames.parque
 def _real_mp4_fixtures() -> tuple[list[tuple[str, bytes]], list[tuple]]:
     """→ (raw (doc_id, content) rows, expected (doc_id, frame_idx, width,
     height, n_dark, error) rows derived from the source grids)."""
-    from documentconvert_spark.corpus import render_mp4_mjpeg
+    from documentconvert_spark.corpus import band_frames, box_frames, render_mp4_mjpeg
 
     raw: list[tuple[str, bytes]] = []
     exp: list[tuple] = []
@@ -1592,24 +1572,6 @@ def _real_mp4_fixtures() -> tuple[list[tuple[str, bytes]], list[tuple]]:
         for i, g in enumerate(grids):
             n_dark = sum(1 for row in g for v in row if v < 128)
             exp.append((doc_id, i, w, h, n_dark, None))
-
-    def box_frames(w: int, h: int, n: int) -> list:
-        out = []
-        for f in range(n):
-            g = [bytearray([255] * w) for _ in range(h)]
-            side = 4 + 2 * f
-            for y in range(2, min(2 + side, h - 2)):
-                for x in range(2 + f, min(2 + f + side, w - 2)):
-                    g[y][x] = 0
-            out.append(g)
-        return out
-
-    def band_frames(w: int, h: int, n: int) -> list:
-        return [
-            [bytearray([0] * w) if y < f + 2 else bytearray([255] * w)
-             for y in range(h)]
-            for f in range(n)
-        ]
 
     add("mp4-000", 48, 32, box_frames(48, 32, 6), 12)   # even: 2/chunk runs
     add("mp4-001", 37, 21, band_frames(37, 21, 5), 5)   # odd: trailing 1-run

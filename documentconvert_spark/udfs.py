@@ -15,6 +15,7 @@ input_hint mandate):
 
 Per-row error containment (reference C7, `document_service.py:119-126`):
 a malformed document yields an error row, never a failed Spark task.
+``_extract_batch`` runs ``_extract_row`` through kernels/errors.contained.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from documentconvert_spark.kernels.encoding import ensure_utf8
-from documentconvert_spark.kernels.errors import classify_error
+from documentconvert_spark.kernels.errors import classify_error, contained, require_content
 from documentconvert_spark.kernels.markdown import error_markdown as _error_md
 from documentconvert_spark.kernels.markdown import spans_to_markdown as _fold
 from documentconvert_spark.kernels.detect import ROUTES, extract
@@ -39,40 +40,35 @@ from documentconvert_spark.schemas import EXTRACT_RESULT
 _KERNELS = {doc_type: functools.partial(extract, doc_type) for doc_type in ROUTES}
 
 
+def _extract_row(_doc_id, doc_type, raw) -> tuple:
+    """One document → (span dicts, Markdown, span count, error, error class)."""
+    kernel = _KERNELS.get(doc_type)
+    if kernel is None:
+        raise ValueError(f"unsupported conversion type: {doc_type!r}")
+    spans = kernel(bytes(require_content(raw)))
+    return [s.as_dict() for s in spans], _fold(spans), len(spans), None, None
+
+
 def _extract_batch(doc_id: pd.Series, doc_type: pd.Series, content: pd.Series) -> pd.DataFrame:
     t0 = time.monotonic()
-    spans_out, md_out, n_out, err_out, cls_out = [], [], [], [], []
-    for did, dt, raw in zip(doc_id, doc_type, content):
-        kernel = _KERNELS.get(dt)
-        try:
-            if kernel is None:
-                raise ValueError(f"unsupported conversion type: {dt!r}")
-            if raw is None:
-                raise ValueError("malformed: null content")
-            spans = kernel(bytes(raw))
-            spans_out.append([s.as_dict() for s in spans])
-            md_out.append(_fold(spans))
-            n_out.append(len(spans))
-            err_out.append(None)
-            cls_out.append(None)
-        except Exception as exc:  # noqa: BLE001 — containment is the contract
+    rows = []
+    for (did, _dt, _raw), row, exc in contained(zip(doc_id, doc_type, content), _extract_row):
+        if exc is not None:
             err = f"{type(exc).__name__}: {exc}"
             cls = classify_error(str(exc))
-            spans_out.append(None)
             # failures still yield a structured report artifact
             # (reference document_service.py:347-375)
-            md_out.append(_error_md(did, cls, err))
-            n_out.append(None)
-            err_out.append(err)
-            cls_out.append(cls)
+            row = (None, _error_md(did, cls, err), None, err, cls)
+        rows.append(row)
     per_row = (time.monotonic() - t0) / max(len(doc_type), 1)
+    spans, md, n, err, cls = (list(col) for col in zip(*rows)) if rows else ([],) * 5
     return pd.DataFrame(
         {
-            "spans": spans_out,
-            "markdown": md_out,
-            "n_spans": pd.array(n_out, dtype="Int32"),
-            "error": err_out,
-            "error_class": cls_out,
+            "spans": spans,
+            "markdown": md,
+            "n_spans": pd.array(n, dtype="Int32"),
+            "error": err,
+            "error_class": cls,
             "processing_s": [per_row] * len(doc_type),
         }
     )

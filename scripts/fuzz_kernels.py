@@ -46,6 +46,7 @@ CHUNK_TIMEOUT_S = 600  # parent-side backstop for uninterruptible C loops
 AS_LIMIT_BYTES = 4 << 30
 MAX_OUTPUT_CHARS = 50_000_000  # >50 MB of span text from a <35 MB doc = amplification
 N_DEFAULT = 300
+_OUTCOMES = ("ok", "contained", "timeout", "memory", "oversized", "sniff_raise")
 
 _BIG_INTS = (0x7FFFFFFF, 0xFFFFFFFF, 0x7FFFFFFFFFFFFFFF, 2_000_000_000)
 
@@ -69,18 +70,17 @@ def _seed_docs() -> list[tuple[str, str, bytes]]:
             seeds.append((f"ref_{ext}_{len(seeds)}", route, data))
     from documentconvert_spark.corpus import make_doc_by_index
 
-    for i in range(12):  # synthetic variety: minipdf / markup / image docs
+    # synthetic minipdf and markup docs minus F-POISON, whose mutants die at
+    # minipdf's header check; the generator makes no image docs, so add one
+    for i in range(12):
         d = make_doc_by_index(i, 42, 5)
-        route = {"pdf": "pdf", "markup": "office", "image": "image"}[d.doc_type]
-        seeds.append((f"synth_{d.doc_type}_{i}", route, d.content))
+        if not d.expect_error:
+            route = {"pdf": "pdf", "markup": "office"}[d.doc_type]
+            seeds.append((f"synth_{d.doc_type}_{i}", route, d.content))
+    seeds.append(("synth_miniimg", "image",
+                  b"MINIIMG-1.0\nimg-fuzz-0001\nFUZZ OCR LINE 1\n\n  second  line 2.5\n"))
     seeds.extend(_format_seeds())
     return seeds
-
-
-def _render_prop_kern_seed() -> bytes:
-    from documentconvert_spark.corpus import render_text_png_prop
-
-    return render_text_png_prop(["KERN L- SEED"], scale=2, kern={(0, 6): -3})
 
 
 def _doc_seed() -> bytes:
@@ -141,6 +141,7 @@ def _format_seeds() -> list[tuple[str, str, bytes]]:
         odf_zip,
         render_text_jpeg,
         render_text_png,
+        render_text_png_prop,
         render_text_tiff,
         render_text_webp,
     )
@@ -182,7 +183,7 @@ def _format_seeds() -> list[tuple[str, str, bytes]]:
         # per-glyph pixel-mask crop — the CC fallback path column
         # projection never reaches
         ("fmt_png_ocr_kern", "image",
-         _render_prop_kern_seed()),
+         render_text_png_prop(["KERN L- SEED"], scale=2, kern={(0, 6): -3})),
         # full PNG pixel matrix: interlaced 4-bit palette through both routes
         ("fmt_png_pal", "image", _png_pal_seed()),
         ("raw_png_pal", "raster", _png_pal_seed()),
@@ -348,25 +349,15 @@ def _png_pal_seed() -> bytes:
 
 
 def _avi_seed(codec: str) -> bytes:
-    from documentconvert_spark.corpus import render_avi
+    from documentconvert_spark.corpus import band_frames, render_avi
 
-    grids = [
-        [bytearray([0] * 24) if y < 2 + f else bytearray([255] * 24)
-         for y in range(16)]
-        for f in range(3)
-    ]
-    return render_avi(24, 16, grids, fps=10, codec=codec)
+    return render_avi(24, 16, band_frames(24, 16, 3), fps=10, codec=codec)
 
 
 def _mp4_seed() -> bytes:
-    from documentconvert_spark.corpus import render_mp4_mjpeg
+    from documentconvert_spark.corpus import band_frames, render_mp4_mjpeg
 
-    grids = [
-        [bytearray([0] * 24) if y < 2 + f else bytearray([255] * 24)
-         for y in range(16)]
-        for f in range(3)
-    ]
-    return render_mp4_mjpeg(24, 16, grids, fps=10)
+    return render_mp4_mjpeg(24, 16, band_frames(24, 16, 3), fps=10)
 
 
 def _av_fixture(fmt: str) -> bytes:
@@ -517,6 +508,8 @@ def _run_chunk(name: str, route: str, lo: int, hi: int) -> None:
     signal.signal(signal.SIGALRM, _alarm)
 
     from documentconvert_spark.kernels.detect import extract, extract_media_files
+    from documentconvert_spark.kernels.errors import contained
+    from documentconvert_spark.kernels.media import decode_audio, decode_video, sniff_av_meta
     from documentconvert_spark.kernels.raster import decode_raster_gray
     from documentconvert_spark.kernels.spans import Span
 
@@ -531,22 +524,16 @@ def _run_chunk(name: str, route: str, lo: int, hi: int) -> None:
         return [Span("figure", f"{w}x{h}:{int(gray[0].sum())}", "", 0)]
 
     def decode_video_route(data: bytes) -> list:
-        from documentconvert_spark.kernels.media import decode_video
-
         w, h, frames = decode_video(data)
         return [Span("figure", f"{w}x{h}:{len(frames)}", "", 0)]
 
     def decode_audio_route(data: bytes) -> list:
-        from documentconvert_spark.kernels.media import decode_audio
-
         sr, ch, mono = decode_audio(data)
         return [Span("figure", f"{sr}:{ch}:{len(mono)}", "", 0)]
 
     def sniff_route(data: bytes) -> list:
         # NO-RAISE contract: any exception here is a finding, and the
         # result quadruple must stay int32-safe (callers cast downstream)
-        from documentconvert_spark.kernels.media import sniff_av_meta
-
         fmt, w, h, dur = sniff_av_meta(data)
         for v in (w, h, dur):
             if v is not None and not 0 <= v < 2**31:
@@ -567,35 +554,35 @@ def _run_chunk(name: str, route: str, lo: int, hi: int) -> None:
     with open(os.path.join(SEED_DIR, f"{name}.bin"), "rb") as fh:
         data = fh.read()
     fn = routes[route]
-    stats = {"ok": 0, "contained": 0, "timeout": 0, "memory": 0, "oversized": 0,
-             "sniff_raise": 0}
-    findings = []
-    for idx in range(lo, hi):
-        rng = random.Random(f"{name}:{idx}")
-        mutant = _mutate(data, rng)
+    mutants = ((idx, _mutate(data, random.Random(f"{name}:{idx}"))) for idx in range(lo, hi))
+
+    def output_chars(_idx: int, mutant: bytes) -> int:
         signal.setitimer(signal.ITIMER_REAL, PER_MUTANT_TIMEOUT_S)
         try:
-            spans = fn(mutant)
-            out_chars = sum(len(s.text) for s in spans)
-            if out_chars > MAX_OUTPUT_CHARS:
-                stats["oversized"] += 1
-                findings.append((idx, f"oversized: {out_chars} chars", mutant))
-            else:
-                stats["ok"] += 1
-        except _Timeout:
-            stats["timeout"] += 1
-            findings.append((idx, "timeout", mutant))
-        except MemoryError:
-            stats["memory"] += 1
-            findings.append((idx, "MemoryError under 4 GiB rlimit", mutant))
-        except Exception as exc:  # noqa: BLE001 — containment is the contract
-            if route == "sniff":  # …except for sniffing, which must not raise
-                stats["sniff_raise"] += 1
-                findings.append((idx, f"sniff raised: {exc!r:.120}", mutant))
-            else:
-                stats["contained"] += 1
+            return sum(len(s.text) for s in fn(mutant))
         finally:
             signal.setitimer(signal.ITIMER_REAL, 0)
+
+    stats = dict.fromkeys(_OUTCOMES, 0)
+    findings = []
+    # production's loop; hangs, blow-ups and sniff raises are findings
+    for (idx, mutant), out_chars, exc in contained(mutants, output_chars):
+        if isinstance(exc, _Timeout):
+            stats["timeout"] += 1
+            findings.append((idx, "timeout", mutant))
+        elif isinstance(exc, MemoryError):
+            stats["memory"] += 1
+            findings.append((idx, "MemoryError under 4 GiB rlimit", mutant))
+        elif exc is not None and route == "sniff":
+            stats["sniff_raise"] += 1
+            findings.append((idx, f"sniff raised: {exc!r:.120}", mutant))
+        elif exc is not None:
+            stats["contained"] += 1
+        elif out_chars > MAX_OUTPUT_CHARS:
+            stats["oversized"] += 1
+            findings.append((idx, f"oversized: {out_chars} chars", mutant))
+        else:
+            stats["ok"] += 1
     os.makedirs(OUT_DIR, exist_ok=True)
     for idx, kind, mutant in findings:
         with open(os.path.join(OUT_DIR, f"{name}_{idx}.bin"), "wb") as f:
@@ -622,8 +609,7 @@ def main() -> None:
             for name, route in routes for lo in range(0, n, chunk)]
     # a few chunks at a time; each is its own process so a hard (C-level)
     # hang is killed by the parent timeout and reported with its range
-    totals = {"ok": 0, "contained": 0, "timeout": 0, "memory": 0, "oversized": 0,
-              "sniff_raise": 0}
+    totals = dict.fromkeys(_OUTCOMES, 0)
     bad: list[str] = []
     running: list[tuple[subprocess.Popen, str, str, int, int]] = []
     pending = list(jobs)

@@ -20,7 +20,7 @@ from documentconvert_spark.corpus import (
     make_doc,
 )
 from documentconvert_spark.kernels.encoding import ensure_utf8, repair_mojibake
-from documentconvert_spark.kernels.errors import classify_error
+from documentconvert_spark.kernels.errors import classify_error, contained
 from documentconvert_spark.kernels.markdown import error_markdown, spans_to_markdown
 from documentconvert_spark.kernels.minidom import extract_minidom
 from documentconvert_spark.kernels.miniimg import extract_miniimg
@@ -150,6 +150,33 @@ def test_error_classifier():
     assert classify_error("weird") == "unknown_error"
     md = error_markdown("d1", "malformed_input", "boom")
     assert "Conversion failed: d1" in md and "malformed_input" in md
+
+
+def test_contained_yields_in_row_order_and_runs_past_a_raise():
+    def half(x, y):
+        if y == 0:
+            raise ZeroDivisionError("y is zero")
+        return x / y
+
+    out = list(contained([(1, 2), (3, 0), (5, 5)], half))
+    assert [row for row, _res, _exc in out] == [(1, 2), (3, 0), (5, 5)]
+    assert [res for _row, res, _exc in out] == [0.5, None, 1.0]
+    assert out[0][2] is None and out[2][2] is None
+    assert isinstance(out[1][2], ZeroDivisionError) and str(out[1][2]) == "y is zero"
+
+
+def test_contained_propagates_base_exceptions():
+    """Only Exception is contained: an interrupt still stops the batch."""
+    def interrupt(x):
+        if x == 2:
+            raise KeyboardInterrupt
+        return x
+
+    seen = []
+    with pytest.raises(KeyboardInterrupt):
+        for row, _res, _exc in contained([(1,), (2,), (3,)], interrupt):
+            seen.append(row)
+    assert seen == [(1,)]
 
 
 def test_all_classes_present():

@@ -424,6 +424,22 @@ def test_doc_anchor_in_first_table_cell():
         assert any("\t" in s.text for s in spans if s.kind == "table")
 
 
+def test_doc_without_its_table_stream_is_malformed_input():
+    """A .doc whose FIB names a table stream the file lacks is a corrupt
+    document, not a missing input path: the error row classifies as
+    malformed_input, whose remediation fits."""
+    import pandas as pd
+
+    from documentconvert_spark.udfs import _extract_batch
+
+    doc = bytearray(make_word_doc("Hello world\r", []))
+    fib = doc.index(b"\xec\xa5")  # wIdent: the WordDocument stream starts here
+    doc[fib + 11] ^= 0x02  # fWhichTblStm now names the other table stream
+    out = _extract_batch(pd.Series(["d"]), pd.Series(["markup"]), pd.Series([bytes(doc)]))
+    assert out.error[0].startswith("ValueError: doc: malformed compound document")
+    assert out.error_class[0] == "malformed_input"
+
+
 def test_xlsx_date_cells_render_as_dates():
     """Numeric cells styled with a date numFmt render ISO dates/times
     instead of raw day serials; unstyled numbers stay numbers."""

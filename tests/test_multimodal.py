@@ -326,7 +326,8 @@ _CONTAINMENT = {
 @pytest.mark.parametrize("op_name", sorted(_CONTAINMENT))
 def test_every_media_op_contains_null_and_garbage_rows(spark, op_name):
     """A null-content row and a garbage row never fail the task: each
-    becomes exactly one error row or drops out, as the op documents."""
+    becomes exactly one error row or drops out, as the op documents. A
+    null blob's error row says what the extraction UDF says."""
     from documentconvert_spark.ops import multimodal
 
     ddl, rows, key, policy = _CONTAINMENT[op_name]
@@ -339,6 +340,8 @@ def test_every_media_op_contains_null_and_garbage_rows(spark, op_name):
             assert bad not in got
         else:
             assert len(got[bad]) == 1 and got[bad][0].error is not None
+    if policy == "error":
+        assert got["d-null"][0].error == "malformed: null content"
 
 
 # ------------------------------------------------------------ goldens

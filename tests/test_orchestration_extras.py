@@ -299,7 +299,7 @@ def test_run_media_cli_end_to_end(tmp_path):
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
-    from documentconvert_spark.corpus import encode_flac, render_avi, render_mp4_mjpeg
+    from documentconvert_spark.corpus import band_frames, encode_flac, render_avi, render_mp4_mjpeg
     from documentconvert_spark.queries_extraction import _wav_pcm_bytes
 
     grids = [[bytearray([255] * 20) for _ in range(10)] for _ in range(4)]
@@ -315,8 +315,7 @@ def test_run_media_cli_end_to_end(tmp_path):
         {"idx": [(x + y + f) % 2 for y in range(10) for x in range(16)]}
         for f in range(3)], [(0, 0, 0), (255, 255, 255)], 2)
     # MJPEG-in-MP4 at another size: its frames match no AVI frame
-    mp4_grids = [[bytearray([0] * 16) if y < 2 + f else bytearray([255] * 16)
-                  for y in range(8)] for f in range(3)]
+    mp4_grids = band_frames(16, 8, 3)
     rows = [
         ("m-avi-a", render_avi(20, 10, grids, fps=5, codec="MJPG")),
         ("m-avi-b", render_avi(20, 10, grids, fps=5, codec="DIB ")),  # dup

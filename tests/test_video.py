@@ -12,7 +12,7 @@ import struct
 
 import pytest
 
-from documentconvert_spark.corpus import render_avi
+from documentconvert_spark.corpus import box_frames, render_avi
 from documentconvert_spark.kernels import limits
 from documentconvert_spark.kernels.media import (
     _MAX_AVI_FRAMES,
@@ -499,24 +499,12 @@ def test_gif_animation_containment(monkeypatch):
 
 # ---------------------------------------------------------------- MP4 carving
 
-def _mp4_box_frames(w, h, n):
-    out = []
-    for f in range(n):
-        g = [bytearray([255] * w) for _ in range(h)]
-        side = 4 + 2 * f
-        for y in range(2, min(2 + side, h - 2)):
-            for x in range(2 + f, min(2 + f + side, w - 2)):
-                g[y][x] = 0
-        out.append(g)
-    return out
-
-
 def test_mp4_mjpeg_roundtrip_near_lossless():
     from documentconvert_spark.corpus import render_mp4_mjpeg
     from documentconvert_spark.kernels.media import _mp4_meta, decode_mp4_frames
 
     for n in (1, 2, 5, 6):  # 1 exercises the single-run stsc; 5 the odd tail
-        grids = _mp4_box_frames(48, 32, n)
+        grids = box_frames(48, 32, n)
         blob = render_mp4_mjpeg(48, 32, grids, fps=12)
         w, h, fps, frames = decode_mp4_frames(blob)
         assert (w, h, len(frames)) == (48, 32, n)
@@ -534,7 +522,7 @@ def test_mp4_co64_offsets_decoded():
     from documentconvert_spark.corpus import render_mp4_mjpeg
     from documentconvert_spark.kernels.media import decode_mp4_frames
 
-    grids = _mp4_box_frames(24, 24, 3)
+    grids = box_frames(24, 24, 3)
     blob = render_mp4_mjpeg(24, 24, grids, fps=10)
     # rewrite the stco box into an equivalent co64 (8-byte offsets)
     i = blob.index(b"stco")
@@ -561,7 +549,7 @@ def test_mp4_containment_paths(monkeypatch):
     from documentconvert_spark.corpus import render_mp4_mjpeg
     from documentconvert_spark.kernels.media import decode_mp4_frames
 
-    one = render_mp4_mjpeg(16, 16, _mp4_box_frames(16, 16, 1), fps=10)
+    one = render_mp4_mjpeg(16, 16, box_frames(16, 16, 1), fps=10)
     # unsupported codec is named, not misdecoded
     avc = one.replace(b"\x00\x00\x00\x56jpeg", b"\x00\x00\x00\x56avc1", 1)
     with pytest.raises(ValueError, match="no decoder for codec avc1"):
@@ -571,7 +559,7 @@ def test_mp4_containment_paths(monkeypatch):
     with pytest.raises(ValueError, match="no moov box"):
         decode_mp4_frames(b"\x00\x00\x00\x18ftypisom" + b"\x00" * 16)
     # pixel budget charged BEFORE the frame decode
-    four = render_mp4_mjpeg(16, 16, _mp4_box_frames(16, 16, 4), fps=10)
+    four = render_mp4_mjpeg(16, 16, box_frames(16, 16, 4), fps=10)
     with monkeypatch.context() as m:
         m.setattr(limits, "MAX_PIXELS", 16 * 16 * 2)
         with pytest.raises(ValueError, match="decoded pixels over budget"):
@@ -579,7 +567,7 @@ def test_mp4_containment_paths(monkeypatch):
     # a sample range pointing outside the file is rejected, not sliced short
     import struct as _st
 
-    bad = bytearray(render_mp4_mjpeg(16, 16, _mp4_box_frames(16, 16, 2), fps=10))
+    bad = bytearray(render_mp4_mjpeg(16, 16, box_frames(16, 16, 2), fps=10))
     i = bad.index(b"stco")
     _st.pack_into(">I", bad, i + 12, len(bad) + 100)  # first chunk offset
     with pytest.raises(ValueError, match="sample range outside the file"):
@@ -590,7 +578,7 @@ def test_mp4_routed_through_video_stats_surface(spark):
     from documentconvert_spark.corpus import render_mp4_mjpeg
     from documentconvert_spark.ops.multimodal import real_video_frame_stats
 
-    grids = _mp4_box_frames(32, 24, 2)
+    grids = box_frames(32, 24, 2)
     rows = [("m-0", render_mp4_mjpeg(32, 24, grids, fps=10)),
             ("m-1", b"\x00\x00\x00\x18ftypisom" + b"\x00" * 16)]
     df = spark.createDataFrame(rows, "doc_id string, content binary")
@@ -612,7 +600,7 @@ def test_mp4_stsz_declared_count_bomb_capped():
 
     # a 20-byte stsz can DECLARE 2^32-1 fixed-size samples; the cap must
     # bind before the [fixed]*n allocation, not after
-    bad = bytearray(render_mp4_mjpeg(16, 16, _mp4_box_frames(16, 16, 2), fps=10))
+    bad = bytearray(render_mp4_mjpeg(16, 16, box_frames(16, 16, 2), fps=10))
     i = bad.index(b"stsz")
     _st.pack_into(">II", bad, i + 8, 1, 0xFFFFFFFF)  # fixed=1, count=2^32-1
     with pytest.raises(ValueError, match="frame count over cap"):
@@ -643,7 +631,7 @@ def test_mp4_mdhd_version1_timescale_offset():
 
     from documentconvert_spark.corpus import render_mp4_mjpeg
 
-    base = render_mp4_mjpeg(16, 16, _mp4_box_frames(16, 16, 2), fps=10)
+    base = render_mp4_mjpeg(16, 16, box_frames(16, 16, 2), fps=10)
     # full v1 mdhd (36-byte body): timescale at +20, fps must still parse
     v1 = (_st.pack(">I", 0x01000000) + _st.pack(">QQ", 0, 0)
           + _st.pack(">I", 1000) + _st.pack(">Q", 200)
